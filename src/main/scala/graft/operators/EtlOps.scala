@@ -322,10 +322,9 @@ object EtlOps extends QueryModule {
     "etl_compact_small_files",
     (spark, dir) => {
       import spark.implicits._
-      val pid = ProcessHandle.current().pid()
       val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val small = s"/tmp/graft_scratch/p$pid/compact_src_$runId"
-      val compacted = s"/tmp/graft_scratch/p$pid/compact_out_$runId"
+      val small = s"${Artifacts.scratchRoot}/compact_src_$runId"
+      val compacted = s"${Artifacts.scratchRoot}/compact_out_$runId"
       // one ship-half-year slice: the compaction file math (32 fragments
       // → ceil(n/5000) files) is volume-independent — compacting more
       // history just multiplies the bench write cost (paid TWICE here:
@@ -465,9 +464,8 @@ object EtlOps extends QueryModule {
     "etl_backfill_dynamic_overwrite",
     (spark, dir) => {
       import spark.implicits._
-      val pid = ProcessHandle.current().pid()
       val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = s"/tmp/graft_scratch/p$pid/backfill_$runId"
+      val path = s"${Artifacts.scratchRoot}/backfill_$runId"
       // a 3-year slice: the isolation proof needs the backfilled year
       // plus untouched neighbors on both sides — laying out all 7 years
       // proves nothing more while paying 2.3× the bench write cost

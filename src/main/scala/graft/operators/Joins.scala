@@ -377,9 +377,7 @@ object Joins extends QueryModule {
       // safe against a concurrent invocation whose CTAS has written its
       // directory but not yet registered the table (catalog registration
       // happens after the data write, so a live-set check alone races).
-      val wh = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      ).getCanonicalFile
+      val wh = Artifacts.warehouseDir(spark).getCanonicalFile
       val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
       Option(wh.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { d =>
         val nm = d.getName.toLowerCase
@@ -391,10 +389,7 @@ object Joins extends QueryModule {
           // for this session's tables); the physical delete then only
           // handles previous-JVM orphans the catalog does not know
           try spark.sql(s"DROP TABLE IF EXISTS $nm") catch { case _: Throwable => () }
-          if (d.exists()) {
-            import scala.reflect.io.Directory
-            new Directory(d).deleteRecursively()
-          }
+          if (d.exists()) Artifacts.rmTree(d)
         }
       }
       // repartition to the bucket layout before writing: HashPartitioning
@@ -487,10 +482,7 @@ object Joins extends QueryModule {
       val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
       Option(tmpRoot.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(f => f.isDirectory && f.lastModified() < cutoff)
-        .foreach { d =>
-          import scala.reflect.io.Directory
-          new Directory(d).deleteRecursively()
-        }
+        .foreach(Artifacts.rmTree)
       val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
       val base = new java.io.File(tmpRoot, runId).getAbsolutePath
       // one shuffle by the partition column so each year directory gets

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.operators.Artifacts._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Persisted SCD2 dimension + purchase fact, both BUCKETED by the user
   * key — the storage-layout half of the SCD2 trio (`etl_scd2_intervals`
@@ -19,10 +19,9 @@ import java.nio.file.Files
   *  - `graft_purchase_fact_<corpus>`: (event_id, user_id, ts) —
   *    the purchase slice, bucketed+sorted by user_id.
   *
-  * Freshness follows the IvfIndex/ShingleRegistry rule: the
-  * (path, size, mtime) identity of the events corpus is stored beside
-  * the tables; a new JVM over current artifacts re-registers catalog
-  * metadata only — no window re-derivation, no data rewrite.
+  * Freshness follows the one [[Artifacts]] store contract, keyed on the
+  * events file's identity: a new JVM over current artifacts re-registers
+  * catalog metadata only — no window re-derivation, no data rewrite.
   *
   * Scale notes (100 TB): the build is ONE user-keyed window pass per
   * table side (the same shuffle the bucketed write needs anyway); after
@@ -32,36 +31,14 @@ import java.nio.file.Files
   */
 object Scd2Dim {
 
-  val NBuckets = 16
-
-  // The readable slug alone is lossy ([^A-Za-z0-9]+ → _ collides e.g.
-  // data/sf0.01 with data/sf0_01, thrashing rebuilds when two corpora
-  // share a warehouse) — suffix a stable hash of the RAW dir string so
-  // table names are unique per corpus path.
-  private def tag(dir: String): String = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_|_$", "")
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
-    s"${slug}_$h"
-  }
-
   def dimTable(dir: String): String = s"graft_scd2_dim_${tag(dir)}"
   def factTable(dir: String): String = s"graft_purchase_fact_${tag(dir)}"
 
-  private def fingerprint(dir: String): String = {
-    val f = new java.io.File(s"$dir/events.parquet")
-    s"${f.getAbsolutePath}|${f.length}|${f.lastModified}"
-  }
-
-  private def warehouseDir(spark: SparkSession): java.io.File = {
-    val w = spark.conf.get("spark.sql.warehouse.dir")
-    if (w.startsWith("file:")) new java.io.File(new java.net.URI(w).getPath)
-    else new java.io.File(w)
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-    f.delete(): Unit
-  }
+  private val dimDdl = bucketedDdl(
+    "v_user BIGINT, version BIGINT, regime STRING, valid_from TIMESTAMP_NTZ, valid_to TIMESTAMP_NTZ",
+    "v_user", "v_user", "version")
+  private val factDdl = bucketedDdl(
+    "event_id BIGINT, user_id BIGINT, ts TIMESTAMP_NTZ", "user_id", "user_id", "event_id")
 
   /** Find-or-build: returns (dim, fact) frames reading the PERSISTED
     * bucketed tables. Build runs only when the artifacts are absent or
@@ -70,29 +47,8 @@ object Scd2Dim {
   def ensure(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val dimT = dimTable(dir)
     val factT = factTable(dir)
-    val fp = fingerprint(dir)
-    val wh = warehouseDir(spark)
-    val dimLoc = new java.io.File(wh, dimT)
-    val factLoc = new java.io.File(wh, factT)
-    val metaFile = new java.io.File(wh, s"$dimT.fingerprint")
-    val onDisk = metaFile.isFile && dimLoc.isDirectory && factLoc.isDirectory &&
-      Files.readString(metaFile.toPath).trim == fp
-    val inCatalog = spark.catalog.tableExists(dimT) && spark.catalog.tableExists(factT)
-    if (onDisk && !inCatalog) {
-      spark.sql(s"DROP TABLE IF EXISTS $dimT")
-      spark.sql(s"DROP TABLE IF EXISTS $factT")
-      spark.sql(
-        s"""CREATE TABLE $dimT (v_user BIGINT, version BIGINT, regime STRING,
-           |  valid_from TIMESTAMP_NTZ, valid_to TIMESTAMP_NTZ)
-           |USING PARQUET
-           |CLUSTERED BY (v_user) SORTED BY (v_user, version) INTO $NBuckets BUCKETS
-           |LOCATION '${dimLoc.toURI}'""".stripMargin)
-      spark.sql(
-        s"""CREATE TABLE $factT (event_id BIGINT, user_id BIGINT, ts TIMESTAMP_NTZ)
-           |USING PARQUET
-           |CLUSTERED BY (user_id) SORTED BY (user_id, event_id) INTO $NBuckets BUCKETS
-           |LOCATION '${factLoc.toURI}'""".stripMargin)
-    } else if (!onDisk) {
+    findOrBuild(spark, fileIdentity(new java.io.File(s"$dir/events.parquet")),
+      Seq(dimT -> dimDdl, factT -> factDdl)) {
       val ev = graft.Tables.events(spark, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -109,26 +65,8 @@ object Scd2Dim {
       val purchases = ev
         .where(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"))
-      spark.sql(s"DROP TABLE IF EXISTS $dimT")
-      spark.sql(s"DROP TABLE IF EXISTS $factT")
-      Files.deleteIfExists(metaFile.toPath)
-      rmTree(dimLoc)
-      rmTree(factLoc)
-      versions
-        .repartition(NBuckets, col("v_user"))
-        .write
-        .bucketBy(NBuckets, "v_user")
-        .sortBy("v_user", "version")
-        .option("path", dimLoc.getAbsolutePath)
-        .saveAsTable(dimT)
-      purchases
-        .repartition(NBuckets, col("user_id"))
-        .write
-        .bucketBy(NBuckets, "user_id")
-        .sortBy("user_id", "event_id")
-        .option("path", factLoc.getAbsolutePath)
-        .saveAsTable(factT)
-      Files.writeString(metaFile.toPath, fp): Unit
+      writeBucketed(versions, dimT, tableLoc(spark, dimT), "v_user", "v_user", "version")
+      writeBucketed(purchases, factT, tableLoc(spark, factT), "user_id", "user_id", "event_id")
     }
     (spark.table(dimT), spark.table(factT))
   }

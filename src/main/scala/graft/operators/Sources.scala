@@ -23,11 +23,7 @@ import org.apache.spark.sql.SaveMode
   */
 object Sources extends QueryModule {
 
-  // process-unique scratch root: concurrent Verify/Bench invocations
-  // (driver + local dev runs) must never clobber each other's sinks
-  private val scratchRoot =
-    s"/tmp/graft_scratch/p${ProcessHandle.current().pid()}"
-  private def scratch(name: String) = s"$scratchRoot/$name"
+  private def scratch(name: String) = s"${Artifacts.scratchRoot}/$name"
 
   val scanParquetPushdown = Q(
     "scan_parquet_pushdown",
@@ -134,7 +130,7 @@ object Sources extends QueryModule {
     "sink_jdbc_roundtrip",
     (spark, dir) => {
       import spark.implicits._
-      val url = s"jdbc:derby:$scratchRoot/derby_db;create=true"
+      val url = s"jdbc:derby:${Artifacts.scratchRoot}/derby_db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       Tables

@@ -4390,7 +4390,6 @@ object VectorOps extends QueryModule {
           keep = 3, rounded = true)
         .select($"cell", $"vec_id".as("q_id"), $"label".as("q_label"),
           $"emb".as("q_emb"), $"nrm".as("q_nrm"))
-      val wRank = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
       indexed.join(probes, "cell")
         .where($"label" =!= $"q_label")
         .withColumn("cos",

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom keyed state for SURVEY.md §2.1.H `stream_stateful_custom`:
@@ -41,8 +41,7 @@ object StatefulOps {
   /** Apply the stateful transform to a (possibly streaming) typed event
     * dataset.
     */
-  def eventsSinceSignup(spark: SparkSession, events: Dataset[Event]): Dataset[SinceSignup] = {
-    implicit val eventEnc = Encoders.product[Event]
+  def eventsSinceSignup(events: Dataset[Event]): Dataset[SinceSignup] = {
     implicit val outEnc = Encoders.product[SinceSignup]
     implicit val longEnc = Encoders.scalaLong
     events
@@ -84,7 +83,7 @@ object StatefulOps {
   /** transformWithState variant (requires the RocksDB state store
     * provider on streaming input).
     */
-  def eventsSinceSignupTws(spark: SparkSession, events: Dataset[Event]): Dataset[SinceSignup] = {
+  def eventsSinceSignupTws(events: Dataset[Event]): Dataset[SinceSignup] = {
     import org.apache.spark.sql.streaming.TimeMode
     implicit val outEnc = Encoders.product[SinceSignup]
     implicit val longEnc = Encoders.scalaLong
@@ -103,7 +102,7 @@ object StatefulOps {
     * StreamingRobustnessSpec proves both directions deterministically
     * (expired ⇒ restart; long TTL ⇒ identical to TTL-less run).
     */
-  def eventsSinceSignupTwsTtl(spark: SparkSession, events: Dataset[Event],
+  def eventsSinceSignupTwsTtl(events: Dataset[Event],
       ttlMs: Long): Dataset[SinceSignup] = {
     import org.apache.spark.sql.streaming.{TimeMode, TTLConfig}
     implicit val outEnc = Encoders.product[SinceSignup]
@@ -251,7 +250,7 @@ object StatefulOps {
   }
 
   /** Apply the trailing-3 processor to a (streaming) typed event dataset. */
-  def last3TrailTws(spark: SparkSession, events: Dataset[Event]): Dataset[Trail] = {
+  def last3TrailTws(events: Dataset[Event]): Dataset[Trail] = {
     import org.apache.spark.sql.streaming.TimeMode
     implicit val outEnc = Encoders.product[Trail]
     implicit val longEnc = Encoders.scalaLong
@@ -265,7 +264,7 @@ object StatefulOps {
     * latency; state is (one open session + one ordinal) per user,
     * partitioned by user_id across executors.
     */
-  def sessionSummariesTws(spark: SparkSession, events: Dataset[Event]): Dataset[SessionSum] = {
+  def sessionSummariesTws(events: Dataset[Event]): Dataset[SessionSum] = {
     import org.apache.spark.sql.streaming.TimeMode
     implicit val outEnc = Encoders.product[SessionSum]
     implicit val longEnc = Encoders.scalaLong

@@ -53,7 +53,6 @@ class CmsSpec extends SparkSpecBase {
 
   test("graft_cms_estimate is SQL-registered") {
     functions.GraftFunctions.register(spark)
-    import spark.implicits._
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("cms_li")
     val r = spark.sql("""
       SELECT graft_cms_estimate(

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.DecimalStatsAggregator
-import org.apache.spark.sql.functions._
 
 /** The typed Aggregator must agree with the declared column-algebra
   * formulation (agg_stats_decimal) and be partition-order independent.

@@ -73,7 +73,6 @@ class DriftGraphSpec extends SparkSpecBase {
   }
 
   test("cramers v: inside [0,1], cell counts reconcile with the event total") {
-    import spark.implicits._
     val r = SparkEntry.queries("agg_cramers_v")(spark, sfDir).collect().head
     val v = r.getAs[Double]("cramers_v")
     assert(v >= 0.0 && v <= 1.0, s"Cramér's V $v outside [0,1]")
@@ -82,7 +81,6 @@ class DriftGraphSpec extends SparkSpecBase {
   }
 
   test("zipf: slope negative (frequency falls with rank), r2 within [0,1]") {
-    import spark.implicits._
     val r = SparkEntry.queries("text_zipf_slope")(spark, sfDir).collect().head
     // the synthetic sf0.001 vocab is smaller than the top-100 cut
     val nt = r.getAs[Long]("n_terms")
@@ -164,7 +162,6 @@ class DriftGraphSpec extends SparkSpecBase {
 
   test("ivf codebook: nlist is data-driven (⌈√n⌉ cells) and recall holds at two nlist values") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val e = operators.VectorOps.withNorm(spark, sfDir)
     val n = e.count()
     val expectedNlist = math.ceil(math.sqrt(n.toDouble)).toLong

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * iteration internals in-repo.
   */
 class GraphDriverLoopSpec extends SparkSpecBase {
-  import org.apache.spark.sql.DataFrame
 
   /** The top-3-per-node symmetrized backbone exactly as the LPA /
     * closeness / bottleneck queries declare it (weights kept).

@@ -20,34 +20,78 @@ class IvfIndexSpec extends SparkSpecBase {
       .map(f => f.getName -> f.lastModified).toMap
   }
 
+  /** One row per persisted artifact family served by the artifact store:
+    * (family, ensure, its tables — the marker sits beside the first —,
+    * the bucketed ones among them).
+    */
+  private def families(dir: String): Seq[(String, () => Any, Seq[String], Seq[String])] = {
+    import operators.{IvfIndex => Ivf, ShingleRegistry => Reg, Scd2Dim}
+    Seq(
+      ("ivf", () => Ivf.ensure(spark, dir),
+        Seq(Ivf.indexTable(dir), Ivf.codebookTable(dir)), Seq(Ivf.indexTable(dir))),
+      ("shingle registry", () => Reg.ensure(spark, dir),
+        Seq(Reg.registryTable(dir)), Seq(Reg.registryTable(dir))),
+      ("shingle bitmask", () => Reg.ensureBitmask(spark, dir),
+        Seq(Reg.bitmaskTable(dir)), Seq(Reg.bitmaskTable(dir))),
+      ("shingle retraction", () => Reg.ensureRetraction(spark, dir),
+        Seq(Reg.retractTombstoneTable(dir), Reg.retractRemapTable(dir)), Nil),
+      ("shingle retract compaction", () => Reg.ensureRetractCompacted(spark, dir),
+        Seq(Reg.retractCompactTable(dir)), Seq(Reg.retractCompactTable(dir))),
+      ("shingle upsert", () => Reg.ensureUpserted(spark, dir),
+        Seq(Reg.upsertedTable(dir)), Seq(Reg.upsertedTable(dir))),
+      ("scd2", () => Scd2Dim.ensure(spark, dir),
+        Seq(Scd2Dim.dimTable(dir), Scd2Dim.factTable(dir)),
+        Seq(Scd2Dim.dimTable(dir), Scd2Dim.factTable(dir))))
+  }
+
   test("build once; repeat ensure and catalog-dropped ensure never rewrite data") {
-    val idxName = operators.IvfIndex.indexTable(sfDir)
-    val cbName = operators.IvfIndex.codebookTable(sfDir)
-    val (idx, cb) = operators.IvfIndex.ensure(spark, sfDir)
+    // a private corpus copy: the lost-marker rebuilds below must not
+    // disturb the shared fixture's artifacts other specs serve from
+    val dir = Files.createTempDirectory("graft_artifacts").toString
+    Seq("embeddings", "documents", "events").foreach(t =>
+      Files.copy(Paths.get(s"$sfDir/$t.parquet"), Paths.get(s"$dir/$t.parquet")))
+    val (idx, cb) = operators.IvfIndex.ensure(spark, dir)
     val n = idx.count()
-    val cells = cb.count()
-    assert(n == Tables.embeddings(spark, sfDir).count(),
+    assert(n == Tables.embeddings(spark, dir).count(),
       "index must hold every corpus vector exactly once")
-    assert(cells == math.ceil(math.sqrt(n.toDouble)).toLong,
-      s"codebook must have ceil(sqrt(n)) cells, got $cells for n=$n")
-    val built = mtimes(idxName)
-    assert(built.nonEmpty, "bucketed index wrote no data files")
+    assert(cb.count() == math.ceil(math.sqrt(n.toDouble)).toLong,
+      s"codebook must have ceil(sqrt(n)) cells, got ${cb.count()} for n=$n")
 
-    // same session, second ensure: pure lookup
-    operators.IvfIndex.ensure(spark, sfDir)
-    assert(mtimes(idxName) == built, "repeat ensure must not rewrite the index")
+    for ((family, ensure, tables, bucketed) <- families(dir)) withClue(s"[$family] ") {
+      ensure()
+      val built = tables.map(mtimes)
+      assert(built.forall(_.nonEmpty), "build wrote no data files")
+      val rows = tables.map(spark.table(_).count())
 
-    // "new session": catalog entries gone, data still on disk → DDL-only
-    spark.sql(s"DROP TABLE $idxName")
-    spark.sql(s"DROP TABLE $cbName")
-    val (idx2, _) = operators.IvfIndex.ensure(spark, sfDir)
-    assert(mtimes(idxName) == built,
-      "catalog re-registration must be metadata-only (data files rewritten)")
-    assert(idx2.count() == n)
-    // and the re-registered table is still bucketed metadata-wise
-    val ddl = spark.sql(s"SHOW CREATE TABLE $idxName").head().getString(0)
-    assert(ddl.contains("CLUSTERED BY") && ddl.contains(s"${operators.IvfIndex.NBuckets} BUCKETS"),
-      s"re-registered table lost its bucketing spec:\n$ddl")
+      // same session, second ensure: pure lookup
+      ensure()
+      assert(tables.map(mtimes) == built, "repeat ensure must not rewrite data")
+
+      // "new session": catalog entries gone, data still on disk → DDL-only
+      tables.foreach(t => spark.sql(s"DROP TABLE $t"))
+      ensure()
+      assert(tables.map(mtimes) == built,
+        "catalog re-registration must be metadata-only (data files rewritten)")
+      assert(tables.map(spark.table(_).count()) == rows)
+      // and the re-registered tables are still bucketed metadata-wise
+      bucketed.foreach { t =>
+        val ddl = spark.sql(s"SHOW CREATE TABLE $t").head().getString(0)
+        assert(ddl.contains("CLUSTERED BY") &&
+          ddl.contains(s"${operators.Artifacts.NBuckets} BUCKETS"),
+          s"re-registered table lost its bucketing spec:\n$ddl")
+      }
+
+      // a lost marker means an unfinished build: the next ensure rebuilds
+      val marker = Paths.get(warehouse.getPath, s"${tables.head}.fingerprint")
+      val fp = Files.readString(marker)
+      Files.delete(marker)
+      ensure()
+      val rebuilt = tables.map(mtimes)
+      assert(rebuilt.zip(built).forall { case (r, b) => r.nonEmpty && r.keySet != b.keySet },
+        "a deleted marker must trigger a rebuild")
+      assert(Files.readString(marker) == fp, "the rebuild must commit the same marker")
+      assert(tables.map(spark.table(_).count()) == rows)
+    }
   }
 
   test("residual-PQ artifacts: codes equal the in-plan re-derivation, codebook is full") {
@@ -111,7 +155,7 @@ class IvfIndexSpec extends SparkSpecBase {
       .select($"vec_id", $"cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expect, "appended rows landed in the wrong cells")
     // 4. the append added files next to the clone's (never rewrote them)
-    assert(appFiles.size > operators.IvfIndex.NBuckets.min(baseFiles.size),
+    assert(appFiles.size > operators.Artifacts.NBuckets.min(baseFiles.size),
       s"append should add files beyond the clone's (got ${appFiles.size})")
     // 5. replay: same session ensure is a pure lookup; catalog-dropped
     //    re-ensure is metadata-only — no data file moves either way
@@ -247,7 +291,6 @@ class IvfIndexSpec extends SparkSpecBase {
       "gen-2 codes must hold every corpus vector exactly once")
 
     // split-geometry cells, the same way the build derives them
-    val cb1Cells = cb1.select("cell").collect().map(_.getLong(0)).toSet
     val changed = cb2.select($"cell", $"cvec")
       .join(cb1.select($"cell", $"cvec".as("cvec1")), Seq("cell"), "left")
       .filter($"cvec1".isNull || $"cvec1" =!= $"cvec")
@@ -295,7 +338,6 @@ class IvfIndexSpec extends SparkSpecBase {
   }
 
   test("no-op rebalance publishes generation 2 as metadata over generation-1 files") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ivf_noop").toString
     // 16 vectors in 4 tight orthogonal clusters at vec_ids {4j..4j+3}:
@@ -339,7 +381,6 @@ class IvfIndexSpec extends SparkSpecBase {
   }
 
   test("tombstone delete: index untouched, serve excludes, compaction drops exactly the dead") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val idxName = operators.IvfIndex.indexTable(sfDir)
     val (idx, _) = operators.IvfIndex.ensure(spark, sfDir)
@@ -388,7 +429,6 @@ class IvfIndexSpec extends SparkSpecBase {
   }
 
   test("generation chain: apply-2 splits a cell CREATED by apply-1, serveLatest picks gen-3") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ivf_chain").toString
     // 16 vectors, nlist = 4, stride seeds at ids {0, 4, 8, 12}. Cluster

@@ -71,7 +71,6 @@ class MediaPipelineSpec extends SparkSpecBase {
   }
   test("chunk manifest: chunks tile each payload exactly, digests match direct hashes") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("multimodal_chunk_manifest")(spark, sfDir)
       .select($"doc_id", $"n_bytes", $"n_chunks", $"chunk_idx", $"byte_offset",
         $"chunk_len", $"is_last", $"chunk_sha")
@@ -106,7 +105,6 @@ class MediaPipelineSpec extends SparkSpecBase {
 
   test("aspect buckets: partition the corpus, snap to the nearest rung, batch math checks") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("multimodal_aspect_bucket_stats")(spark, sfDir)
       .select($"bucket".cast("double"), $"n_images", $"mean_mpix".cast("double"),
         $"n_batches", $"last_batch_fill")

@@ -62,7 +62,6 @@ class StreamingRobustnessSpec extends SparkSpecBase {
     val schema = org.apache.spark.sql.Encoders.product[StatefulOps.Event].schema
 
     def fileStream() = StatefulOps.eventsSinceSignup(
-      spark,
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(srcDir).as[StatefulOps.Event])
@@ -128,7 +127,6 @@ class StreamingRobustnessSpec extends SparkSpecBase {
     val (first, second) = data.splitAt(1000)
 
     def sessionStream() = StatefulOps.sessionSummariesTws(
-      spark,
       spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(srcDir).as[StatefulOps.Event])
@@ -224,7 +222,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
       val ckpt = s"/tmp/graft_scratch/ckpt_${name}_${System.nanoTime()}"
       def once(batch: Seq[StatefulOps.Event], expect: Int): Unit = {
         ms.addData(batch)
-        val q = StatefulOps.eventsSinceSignupTwsTtl(spark, ms.toDS(), ttlMs)
+        val q = StatefulOps.eventsSinceSignupTwsTtl(ms.toDS(), ttlMs)
           .writeStream
           .foreachBatch { (ds: Dataset[StatefulOps.SinceSignup], _: Long) =>
             ds.collect().foreach(r => buf.put(r.event_id, r.events_since_signup))
@@ -269,7 +267,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val ms = MemoryStream[StatefulOps.Event]
-      val q = StatefulOps.eventsSinceSignupTws(spark, ms.toDS())
+      val q = StatefulOps.eventsSinceSignupTws(ms.toDS())
         .writeStream.format("memory").queryName("tws").outputMode("append")
         .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_tws_${System.nanoTime()}")
         .start()
@@ -285,7 +283,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
     val tws = spark.table("tws").collect().map(_.toString).toSet
 
     val ms2 = MemoryStream[StatefulOps.Event]
-    val q2 = StatefulOps.eventsSinceSignup(spark, ms2.toDS())
+    val q2 = StatefulOps.eventsSinceSignup(ms2.toDS())
       .writeStream.format("memory").queryName("fmgws").outputMode("append")
       .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_fmgws_${System.nanoTime()}")
       .start()

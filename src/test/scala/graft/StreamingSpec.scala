@@ -100,7 +100,7 @@ class StreamingSpec extends SparkSpecBase {
     val evs = loadEvs()
     val ms = MemoryStream[StatefulOps.Event]
     val q = StatefulOps
-      .eventsSinceSignup(spark, ms.toDS())
+      .eventsSinceSignup(ms.toDS())
       .writeStream.format("memory").queryName("stateful").outputMode("append")
       .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_stateful_${System.nanoTime()}")
       .start()
@@ -129,7 +129,7 @@ class StreamingSpec extends SparkSpecBase {
     try {
       val ms = MemoryStream[StatefulOps.Event]
       val q = StatefulOps
-        .eventsSinceSignupTws(spark, ms.toDS())
+        .eventsSinceSignupTws(ms.toDS())
         .writeStream.format("memory").queryName("stateful_tws").outputMode("append")
         .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_stateful_tws_${System.nanoTime()}")
         .start()
@@ -167,7 +167,7 @@ class StreamingSpec extends SparkSpecBase {
     try {
       val ms = MemoryStream[StatefulOps.Event]
       val q = StatefulOps
-        .sessionSummariesTws(spark, ms.toDS())
+        .sessionSummariesTws(ms.toDS())
         .writeStream.format("memory").queryName("session_timer").outputMode("append")
         .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_session_timer_${System.nanoTime()}")
         .start()
@@ -202,7 +202,7 @@ class StreamingSpec extends SparkSpecBase {
     try {
       val ms = MemoryStream[StatefulOps.Event]
       val q = StatefulOps
-        .last3TrailTws(spark, ms.toDS())
+        .last3TrailTws(ms.toDS())
         .writeStream.format("memory").queryName("tws_trail").outputMode("append")
         .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_tws_trail_${System.nanoTime()}")
         .start()

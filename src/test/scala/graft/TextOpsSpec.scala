@@ -346,7 +346,6 @@ class TextOpsSpec extends SparkSpecBase {
 
   test("group kfold: folds partition users AND events, no user straddles folds") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("sample_group_kfold")(spark, sfDir)
       .select($"fold", $"n_users", $"n_events").as[(Long, Long, Long)].collect()
     assert(rows.map(_._1).sorted.toSeq == (0L to 4L), "folds not 0..4")
@@ -358,7 +357,6 @@ class TextOpsSpec extends SparkSpecBase {
 
   test("dau new/returning: identity holds and first day is all-new") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("agg_dau_new_returning")(spark, sfDir)
       .select($"day", $"dau", $"new_users", $"returning_users")
       .as[(java.sql.Timestamp, Long, Long, Long)].collect().sortBy(_._1.getTime)
@@ -375,7 +373,6 @@ class TextOpsSpec extends SparkSpecBase {
 
   test("ccnet buckets: per-lang terciles partition the corpus with ordered score ranges") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("text_ccnet_quality_buckets")(spark, sfDir)
       .select($"lang", $"bucket".cast("long"), $"n_docs",
         $"min_xent".cast("double"), $"max_xent".cast("double"))
