@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, max}
 import java.nio.file.{Files, Paths}
 
 /** Bench entry point (SURVEY.md §3.1 EP3): times every declared query at
@@ -53,36 +51,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val steal0 = stealS
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR-only logging: the driver parses the result JSON from stdout,
-    // so the run must not drown it in WARN noise
-    spark.sparkContext.setLogLevel("ERROR")
-    // pay one-time JVM/codegen/reader warmup outside any query's clock
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // warm EVERY table (footer parse, reader codegen, OS page cache) so
-    // first-touch cost never lands on an arbitrary query's clock — the
-    // r5 driver sample showed a TakeOrderedAndProject top-20 absorbing
-    // 5 s of exactly this (VERDICT r5 #2). A full-width max() scan, not
-    // a metadata-only count, so the column pages really get read.
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "events", "documents", "embeddings")) {
-      val df = Tables.table(spark, sfDir, t)
-      df.select(df.columns.map(c => max(col(c).cast("string"))): _*).collect()
-    }
-    // the graph family's shared pair/label pipeline is an explicit,
-    // separately-clocked line item (VERDICT r5 #1) — per-query figures
-    // below then measure each query's OWN plan, not whichever family
-    // member happened to run first
-    val sharedTextS = operators.TextOps.prepareSharedStages(spark, sfDir)
-    val sharedVecS = operators.VectorOps.prepareSharedStages(spark, sfDir)
-    val sharedGraphS = operators.Flagships.prepareSharedStages(spark, sfDir)
-    val sharedWinS = operators.Windows.prepareSharedStages(spark, sfDir)
+    val spark = Harness.session()
+    val (sharedTextS, sharedVecS, sharedGraphS, sharedWinS) = Harness.warm(spark, sfDir)
     val sharedStageS = sharedTextS + sharedVecS + sharedGraphS + sharedWinS
     // (name, seconds, succeeded) — a failed query records its
     // elapsed-until-throw time AND lands in the errors list, so a crash

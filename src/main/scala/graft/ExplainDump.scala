@@ -1,36 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for declared queries to
   * plans/<roundTag>/<query>_<tag>.txt (`sbt "runMain graft.ExplainDump
   * <tag> <query>[,<query>...] [sfDir]"`) — the optimization rounds'
   * before/after plan evidence. Uses the bench's session settings so the
-  * captured plan is the one the bench actually runs.
+  * captured plan is the one the bench actually runs. Each line names the
+  * Spark jobs the query ran while its DataFrame was built
+  * (`construct_jobs`): eager construction makes plan-only callers pay
+  * full iteration.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val tag = args(0)
     val names = args(1).split(',')
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val round = sys.env.getOrElse("SPARK_GRAFT_PLANS_ROUND", "r14")
     val outDir = Paths.get("plans", round)
     Files.createDirectories(outDir)
-    for (nm <- names) {
-      val df = SparkEntry.queries(nm)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(outDir.resolve(s"${nm}_$tag.txt"), plan)
-      println(s"EXPLAIN $nm -> plans/$round/${nm}_$tag.txt (${plan.length} chars)")
+    Harness.withJobCounter(spark) { drained =>
+      for (nm <- names) {
+        val j0 = drained()
+        val df = SparkEntry.queries(nm)(spark, sfDir)
+        val constructJobs = drained() - j0
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(outDir.resolve(s"${nm}_$tag.txt"), plan)
+        println(s"EXPLAIN $nm -> plans/$round/${nm}_$tag.txt (${plan.length} chars)" +
+          s" construct_jobs=$constructJobs")
+      }
     }
     spark.stop()
   }

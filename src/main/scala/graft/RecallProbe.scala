@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.GraftFunctions
 import graft.operators.{IvfIndex, VectorOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -38,15 +38,8 @@ object RecallProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("graft-recall-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Harness.session()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val (idx, ivfCb) = IvfIndex.ensure(spark, dir)
     val e = VectorOps.withNorm(spark, dir)

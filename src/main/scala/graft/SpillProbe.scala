@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.operators.Artifacts
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Memory-headroom probe: runs the three heaviest shuffling queries
@@ -30,19 +31,12 @@ object SpillProbe {
     // aggregation state far past the memory cap
     val docsDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val dup = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-spill-probe")
+    val spark = Harness.session(Harness.builder(4)
       .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // 64 MiB of execution+storage for a workload whose per-task
       // sort/aggregation state alone is several times that
       .config("spark.testing.memory", (64L * 1024 * 1024).toString)
-      .config("spark.testing.reservedMemory", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      .config("spark.testing.reservedMemory", "0"))
 
     val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -62,18 +56,20 @@ object SpillProbe {
         .reduce(_ unionByName _)
         .write.mode(SaveMode.Overwrite).parquet(s"$base/$table.parquet")
     }
-    dupKeyed("lineitem", Seq("l_orderkey"))
-    dupKeyed("orders", Seq("o_orderkey"))
-    dupKeyed("documents", Seq("doc_id"), docsDir)
-    spark.read.parquet(s"$sfDir/customer.parquet")
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/customer.parquet")
+    try {
+      dupKeyed("lineitem", Seq("l_orderkey"))
+      dupKeyed("orders", Seq("o_orderkey"))
+      dupKeyed("documents", Seq("doc_id"), docsDir)
+      spark.read.parquet(s"$sfDir/customer.parquet")
+        .write.mode(SaveMode.Overwrite).parquet(s"$base/customer.parquet")
 
-    for (q <- Seq("tpch_q18_bigorders", "join_sortmerge_facts", "dedup_connected_components")) {
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(q)(spark, base).count()
-      println(f"SPILL_PROBE ran $q rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-      require(n > 0, s"$q returned no rows on the duplicated corpus")
-    }
+      for (q <- Seq("tpch_q18_bigorders", "join_sortmerge_facts", "dedup_connected_components")) {
+        val t0 = System.nanoTime()
+        val n = SparkEntry.queries(q)(spark, base).count()
+        println(f"SPILL_PROBE ran $q rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
+        require(n > 0, s"$q returned no rows on the duplicated corpus")
+      }
+    } finally Artifacts.rmTree(new java.io.File(base))
     println(s"SPILL_PROBE_OK spilled_bytes=${spilled.get()}")
     spark.stop()
     if (spilled.get() <= 0) sys.exit(3)

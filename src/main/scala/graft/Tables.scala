@@ -24,6 +24,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Tables {
 
+  /** Every table a corpus dir holds. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
   /** Generic accessor: `table(spark, dir, "lineitem")`. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {

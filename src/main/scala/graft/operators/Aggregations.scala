@@ -1602,7 +1602,7 @@ object Aggregations extends QueryModule {
       // NOTE (r14, VERDICT r13 #5 — measured and REJECTED): dictionary-
       // encoding brands to order-preserving int codes (dict = distinct
       // part brands ranked by binary order, derived in this job) was
-      // 2.22 s vs 1.83 s at sf0.1 (RunOne min-of-5 vs bench min-of-3):
+      // 2.22 s vs 1.83 s at sf0.1 (single-query min-of-5 vs bench min-of-3):
       // the dict derivation (dim distinct + bounded global window) and
       // the extra broadcast builds + decode joins serialize ~5 small
       // jobs ahead of the fact scan, costing more than the narrower

@@ -205,14 +205,39 @@ class ScaleTechniquesSpec extends SparkSpecBase {
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(javaBin) ++ addOpens ++
       Seq("-Xmx2g", "-cp", cp, "graft.SpillProbe")
+    def scratchCopies(): Set[String] =
+      Option(new java.io.File("/tmp/graft_scratch").list()).toSet.flatten
+        .filter(_.startsWith("spill_probe_"))
+    val copiesBefore = scratchCopies()
     val out = new StringBuilder
     val code = Process(cmd).!(
       ProcessLogger(l => out.synchronized(out.append(l).append('\n')), _ => ()))
+    assert(scratchCopies() -- copiesBefore == Set.empty,
+      "spill probe left its duplicated corpus behind")
     val log = out.toString
     assert(code == 0, s"spill probe failed (exit $code):\n${log.takeRight(3000)}")
     val spilled = "spilled_bytes=(\\d+)".r.findFirstMatchIn(log).map(_.group(1).toLong)
     assert(spilled.exists(_ > 0L),
       s"probe completed but recorded no spill — constraint too loose:\n$log")
     info(s"spilled ${spilled.get / (1 << 20)} MiB under a 64 MiB memory manager")
+  }
+
+  test("Probe reports rows, jobs and construction jobs per query, and names an unknown query") {
+    val names = Seq("agg_pricing_summary", "graph_pagerank_trade")
+    val results = Probe.run(spark, sfDir, names)
+    assert(results.map(_.name) == names)
+    for (r <- results) {
+      val rows = SparkEntry.queries(r.name)(spark, sfDir).count()
+      assert(r.cold.rows == rows && r.warm.rows == rows, r.line)
+      assert(r.cold.jobs >= 1 && r.warm.jobs >= 1, r.line)
+      // tools/scale_table.py reads the name and the cold seconds
+      assert("SCALE (\\S+) (-?\\d+\\.\\d+)".r.findFirstMatchIn(r.line)
+        .map(_.group(1)).contains(r.name), r.line)
+    }
+    // the driver loop collects its edges and nodes while it is built
+    assert(results(1).cold.constructJobs >= 2, results(1).line)
+    val e = intercept[IllegalArgumentException](
+      Probe.run(spark, sfDir, Seq("agg_pricing_summary", "no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
   }
 }

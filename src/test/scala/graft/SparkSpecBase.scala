@@ -17,17 +17,6 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val shared: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_scratch/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val shared: SparkSession = Harness.session(Harness.builder(4)
+    .config("spark.sql.warehouse.dir", "/tmp/graft_scratch/warehouse"))
 }

@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
-"""Generate the SCALE.md round table from two ScaleProbe logs.
+"""Generate the SCALE.md round table from two graft.Probe logs.
 
 Usage: scale_table.py <sf0.1 log> <sf1 log>
 
-Reads `SCALE <name> <seconds>` lines from both logs (the ScaleProbe
-output format), emits a markdown table of sf0.1 vs sf1 (10x fixture)
+Reads the cold seconds of each `SCALE <name> <cold_s> warm=... ` line in
+both logs (the graft.Probe output format; the trailing warm, rows and
+jobs fields are ignored), emits a markdown table of sf0.1 vs sf1 (10x fixture)
 seconds and the ratio, and FLAGS any ratio above 10 (super-linear —
 the per-round gate VERDICT r12 #6 / r13 #7 asks for). Exit code 1 when
 any query is flagged so the round checklist can gate on it.
