@@ -26,13 +26,15 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    cached frames via `unpersist`, localCheckpoint frames by
   *    unpersisting the underlying `LogicalRDD`'s RDD (a plain
   *    `DataFrame.unpersist` is a no-op for those — they live in the
-  *    block manager, not the CacheManager). `evictAll` is the hook a
+  *    block manager, not the CacheManager). Every instance registers
+  *    with the companion, so `PlanCache.evictAll()` is the one hook a
   *    long-lived session calls between corpora; Bench/Verify sessions are
   *    one-shot so session end releases everything regardless.
   */
 private[graft] final class PlanCache(capacity: Int) {
+  import PlanCache.{Entry, release}
 
-  private final case class Entry(plan: LogicalPlan, files: Seq[(String, Long, Long)], df: DataFrame)
+  PlanCache.register(this)
 
   private val entries = new scala.collection.mutable.ArrayBuffer[Entry]()
 
@@ -87,8 +89,25 @@ private[graft] final class PlanCache(capacity: Int) {
     }
     entries.clear()
   }
+}
 
-  private def release(df: DataFrame): Unit = {
+private[graft] object PlanCache {
+
+  private final case class Entry(plan: LogicalPlan, files: Seq[(String, Long, Long)], df: DataFrame)
+
+  private val instances = new scala.collection.mutable.ArrayBuffer[PlanCache]()
+
+  private def register(c: PlanCache): Unit = synchronized { instances += c }
+
+  /** Free the storage behind every memoized shared stage, in every
+    * module, and clear all caches. The registry lock is not held while
+    * a cache evicts: a compute running under a cache's lock may
+    * construct (and so register) another cache.
+    */
+  def evictAll(): Unit = synchronized(instances.toList).foreach(_.evictAll())
+
+  /** Free a memoized frame's storage. */
+  def release(df: DataFrame): Unit = {
     // a localCheckpoint-derived frame is (a projection over) a LogicalRDD
     // backed by block-manager storage; unpersist the leaf RDDs themselves
     // to actually free the blocks — DataFrame.unpersist only talks to the

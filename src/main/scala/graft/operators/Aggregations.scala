@@ -1977,26 +1977,20 @@ object Aggregations extends QueryModule {
       // HALF_UP summed as exact scale-12 decimals, π' = round(Σ, 9),
       // absorbing states coalesce to 0.0 — and the iterate returns as a
       // local relation; the empirical-share join below is unchanged.
-      def round9(x: Double): Double =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-      def bd12(x: Double): java.math.BigDecimal =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(12, java.math.RoundingMode.HALF_UP)
       val cellRows: Seq[(String, String, Long)] = cells.collect().toSeq
         .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getString(1), r.getLong(2)))
       val rowSums = cellRows.filter(_._2 != null).groupBy(_._1)
         .map { case (cur, rs) => (cur, rs.map(_._3).sum) }
       val pmP = cellRows.collect { case (cur, nxt, c) if nxt != null =>
-        (cur, nxt, round9(c.toDouble / rowSums(cur).toDouble)) }
+        (cur, nxt, graft.DriverRound(c.toDouble / rowSums(cur).toDouble, 9)) }
       val statesP: Seq[String] = (pmP.map(_._1) ++ pmP.map(_._2)).distinct
       val kkD = statesP.size.toDouble
       var piP: Map[String, Double] = statesP.map(t => (t, 1.0 / kkD)).toMap
       for (_ <- 1 to 8) {
         val sums = pmP.groupBy(_._2).map { case (t, rs) =>
-          (t, rs.map { case (cur, _, p) => bd12(p * piP(cur)) }.reduce(_.add(_))) }
+          (t, rs.map { case (cur, _, p) => graft.DriverRound.decimal(p * piP(cur), 12) }.reduce(_.add(_))) }
         piP = statesP.map(t =>
-          (t, sums.get(t).map(s => round9(s.doubleValue)).getOrElse(0.0))).toMap
+          (t, sums.get(t).map(s => graft.DriverRound(s.doubleValue, 9)).getOrElse(0.0))).toMap
       }
       import scala.jdk.CollectionConverters._
       val pi = spark.createDataFrame(

@@ -899,12 +899,6 @@ object Flagships extends QueryModule {
       // pr' = round(0.15/n + 0.85·(s + dm/n), 9) in the identical
       // expression order. The iterate returns as a LocalTableScan and
       // the name join / 6 dp output below is unchanged Spark.
-      def round9(x: Double): Double =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-      def bd9(x: Double): java.math.BigDecimal =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(9, java.math.RoundingMode.HALF_UP)
       val edgeP: Seq[(Any, Any, Double)] =
         edges.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDouble(2)))
       val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
@@ -914,15 +908,15 @@ object Flagships extends QueryModule {
       for (_ <- 1 to 8) {
         // dangling-node mass (no out-edges) redistributes uniformly —
         // the standard fix that conserves probability mass exactly
-        val dm = nodeIds.collect { case n if !srcSet(n) => bd9(prP(n)) }
+        val dm = nodeIds.collect { case n if !srcSet(n) => graft.DriverRound.decimal(prP(n), 9) }
           .reduceOption(_.add(_)).map(_.doubleValue).getOrElse(0.0)
         val zero = java.math.BigDecimal.ZERO.setScale(9)
         val s = scala.collection.mutable.Map[Any, java.math.BigDecimal](
           nodeIds.map(n => (n, zero)): _*)
         for ((src, dst, ratio) <- edgeP)
-          s(dst) = s(dst).add(bd9(round9(prP(src) * ratio)))
+          s(dst) = s(dst).add(graft.DriverRound.decimal(graft.DriverRound(prP(src) * ratio, 9), 9))
         prP = nodeIds.map(n =>
-          (n, round9(0.15 / nnD + 0.85 * (s(n).doubleValue + dm / nnD)))).toMap
+          (n, graft.DriverRound(0.15 / nnD + 0.85 * (s(n).doubleValue + dm / nnD), 9))).toMap
       }
       import scala.jdk.CollectionConverters._
       val pr = spark.createDataFrame(

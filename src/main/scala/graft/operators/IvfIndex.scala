@@ -748,17 +748,11 @@ object IvfIndex {
       Seq(idxT -> spilledIndexDdl, cbT -> cellCodebookDdl)) {
       val e = VectorOps.withNorm(spark, dir)
       val cents = VectorOps.ivfCodebook(e, nlistFactor = SpillFactor)
-      val cbArr = VectorOps.oneRowArray(cents, "cbarr",
-        col("cell"), col("cvec"), col("cnrm"))
-      // row-local top-SpillK assignment: posexplode keeps the probe
-      // rank (crank 1 = the cell [[ensure]] would have assigned)
-      val assigned = e.crossJoin(broadcast(cbArr))
+      // row-local top-SpillK assignment with its probe rank (crank 1 =
+      // the cell [[ensure]] would have assigned)
+      val assigned = VectorOps.withRankedCells(e, cents, SpillK, "crank")
         .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"),
-          posexplode(graft.functions.NearestCentroidFunctions.nearestCells(
-            col("emb"), col("nrm"), col("cbarr"), SpillK, rounded = true))
-            .as(Seq("pos", "tc")))
-        .select(col("vec_id"), col("emb"), col("nrm"),
-          col("tc")("cell").as("cell"), (col("pos") + 1).cast("long").as("crank"))
+          col("cell"), col("crank"))
       writeCells(assigned, idxT)
       writeSmall(cents.select(col("cell"), col("cvec"), col("cnrm")), cbT)
     }

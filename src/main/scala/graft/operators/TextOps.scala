@@ -4,6 +4,7 @@ import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.storage.StorageLevel
 
 /** SURVEY.md §2.1.I (text half) — training-data text pipeline operators:
   * normalization stats, tokenization, n-grams, exact/near dedup
@@ -24,8 +25,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 object TextOps extends QueryModule {
 
   /** Shared-stage memos (atomic, liveness-checked, explicitly released —
-    * see [[graft.PlanCache]]). `evictSharedStages()` below is the
-    * long-lived-session lifecycle hook.
+    * see [[graft.PlanCache]], whose `evictAll()` is the long-lived-session
+    * lifecycle hook).
     */
   private val decontamCache = new graft.PlanCache(1)
 
@@ -57,12 +58,15 @@ object TextOps extends QueryModule {
     * tf-idf, perplexity, …) each re-ran the tokenize explode over the
     * corpus — the same relation every time. Same shared-stage tier as
     * [[cachedShingles]]: corpus-scale, built once per corpus on the
-    * Bench shared-text clock, released by [[evictSharedStages]].
+    * Bench shared-text clock, released by [[graft.PlanCache.evictAll]].
+    * The three corpus-scale memos (tokens, token sets, shingles) persist
+    * at an explicit MEMORY_AND_DISK — `.cache()`'s default — because the
+    * positional-token explode is larger than the corpus (SCALE.md).
     */
   private val tokensCache = new graft.PlanCache(1)
 
   def cachedTokens(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    tokensCache.getOrCompute(tokens(docs)) { f => f.cache(); f }
+    tokensCache.getOrCompute(tokens(docs)) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
 
   /** Memoized per-doc DISTINCT token arrays — the row-local set relation
     * the PMI row's vocab/df/pair passes all consume (no (doc, tok)
@@ -75,7 +79,7 @@ object TextOps extends QueryModule {
     tokenSetsCache.getOrCompute(
       docs.select(
         expr("array_distinct(filter(split(lower(text), ' '), t -> t != ''))")
-          .as("toks"))) { f => f.cache(); f }
+          .as("toks"))) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
 
   /** Distinct 3-gram word shingles per doc — ROW-LOCAL formulation
     * (VERDICT r6 #6): empty tokens filtered with order kept, a 3-window
@@ -240,7 +244,7 @@ object TextOps extends QueryModule {
     * en-filtered (pipeline_near_dedup) variants.
     */
   def cachedShingles(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    shinglesCache.getOrCompute(shingles(docs)) { f => f.cache(); f }
+    shinglesCache.getOrCompute(shingles(docs)) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
 
   /** Memoized (d1, d2, i) shingle-intersection counts over ALL document
     * pairs sharing ≥1 shingle — the quadratic stage itself, shared by
@@ -1170,17 +1174,6 @@ object TextOps extends QueryModule {
     */
   private val labelsCache = new graft.PlanCache(4)
 
-  /** Free the block-manager storage behind every LogicalRDD leaf of a
-    * checkpoint-derived frame: lets each CC round release its superseded
-    * predecessor immediately instead of waiting for the ContextCleaner
-    * to notice the unreachable RDD (VERDICT r5 #5 — no session-lifetime
-    * localCheckpoint pinning).
-    */
-  private def freeCheckpointBlocks(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.logical
-      .collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
-      .foreach(_.unpersist(false))
-
   /** Min-label pointer-jumping connected components over an undirected
     * pair table with columns (d1, d2) — returns (id, comp). Shared by
     * the declared component row and the composed dedup pipeline.
@@ -1204,7 +1197,7 @@ object TextOps extends QueryModule {
           .repartition(nPart, col("id")))
       // pairs fed verts (now inside the labels checkpoint) and edges;
       // its blocks are dead weight from here on
-      freeCheckpointBlocks(pairs)
+      graft.PlanCache.release(pairs)
       var changed = 1L
       while (changed > 0) {
         val nbrMin = edges
@@ -1225,10 +1218,10 @@ object TextOps extends QueryModule {
         changed = next.where(col("comp") < col("old")).count()
         // next is eagerly materialized — the superseded round's blocks
         // can be released right away
-        freeCheckpointBlocks(labels)
+        graft.PlanCache.release(labels)
         labels = next.select(col("id"), col("comp"))
       }
-      freeCheckpointBlocks(edges)
+      graft.PlanCache.release(edges)
       labels
     }
 
@@ -1277,22 +1270,6 @@ object TextOps extends QueryModule {
     timed("retraction")(ShingleRegistry.ensureRetraction(spark, dir))
     timed("retractCompacted")(ShingleRegistry.ensureRetractCompacted(spark, dir))
     (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Long-lived-session lifecycle hook: release the storage behind every
-    * memoized shared frame (decontamination shingles, Jaccard shingles,
-    * pair table, component labels). One-shot Bench/Verify sessions don't
-    * need it — session end frees everything — but a shared cluster
-    * session should call this between corpora.
-    */
-  def evictSharedStages(): Unit = {
-    decontamCache.evictAll()
-    shinglesCache.evictAll()
-    interCache.evictAll()
-    pairsCache.evictAll()
-    labelsCache.evictAll()
-    tokensCache.evictAll()
-    tokenSetsCache.evictAll()
   }
 
   val dedupConnectedComponents = Q(

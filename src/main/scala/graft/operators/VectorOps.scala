@@ -60,11 +60,6 @@ object VectorOps extends QueryModule {
   private val codebookCache = new graft.PlanCache(4)
   private val pqCodebookCache = new graft.PlanCache(4)
 
-  /** Test/maintenance hook: drop memoized codebooks and free their blocks. */
-  def evictCodebooks(): Unit = {
-    codebookCache.evictAll(); pqCodebookCache.evictAll(); knnCache.evictAll()
-  }
-
   /** Force the shared ⌈√n⌉-cell IVF codebook for this corpus and report
     * the elapsed seconds. Bench clocks it OUTSIDE the per-query timers
     * (the VERDICT r5 #1 shared-stage discipline): the ANN/semantic rows
@@ -550,8 +545,8 @@ object VectorOps extends QueryModule {
     */
   /** RESIDUAL-PQ geometry — the r10 stack's budget, separate from the
     * r9 raw stack's [[PqK]]=16 over 4×16-dim subspaces (whose declared
-    * rows pin that shape). The RecallProbe sweep (RECALL.md) is
-    * monotone in BOTH knobs on this corpus: at nprobe=8 disjoint-query
+    * rows pin that shape). RecallProbe's `k:m` geometry sweep (RECALL.md,
+    * sf0.1) is monotone in BOTH knobs on this corpus: at nprobe=8 disjoint-query
     * recall@3 goes 0.067 (k=16, m=4) → 0.193 (k=256, m=4) → 0.327
     * (k=64, m=16) → 0.420 (k=128, m=16), vs the 0.640 cell-stage
     * ceiling — in near-isotropic synthetic embeddings the per-subspace
@@ -566,7 +561,7 @@ object VectorOps extends QueryModule {
   private[graft] val PqrW = 4
 
   /** Per-(query, probed cell) residual ADC lookup table as ONE flat
-    * array row — slot = sub·PqrK + cid — computed by the compiled
+    * array row — slot = sub·k + cid — computed by the compiled
     * [[graft.functions.PqLutAll]] expression so the ADC scan can look
     * distances up ROW-LOCALLY. Replaces (r13) the row-form LUT the serve
     * rows materialized (×PqrM explode, broadcast codebook join, qd2
@@ -578,8 +573,8 @@ object VectorOps extends QueryModule {
     * row form computed per row), same 6 dp round.
     */
   private def residualLut(probes: org.apache.spark.sql.DataFrame,
-      cb: org.apache.spark.sql.DataFrame,
-      rcb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      cb: org.apache.spark.sql.DataFrame, rcb: org.apache.spark.sql.DataFrame,
+      m: Int, w: Int, k: Int): org.apache.spark.sql.DataFrame = {
     val rcbArr = oneRowArray(
       rcb.withColumn("cnn2", GraftFunctions.dot(col("cv"), col("cv"))),
       "pqarr", col("sub"), col("cid"), col("cv"), col("cnn2"))
@@ -589,22 +584,262 @@ object VectorOps extends QueryModule {
       .crossJoin(broadcast(rcbArr))
       .select(col("q_id"), col("cell"),
         graft.functions.NearestCentroidFunctions
-          .pqLutAll(col("qr"), col("pqarr"), PqrM, PqrW, PqrK).as("lutarr"))
+          .pqLutAll(col("qr"), col("pqarr"), m, w, k).as("lutarr"))
   }
 
   /** Row-local ADC distance over `codes` against the (q, cell) row's
-    * `lutarr`: Σ_sub lutarr[sub·PqrK + codes[sub]] with the EXACT decimal
+    * `lutarr`: Σ_sub lutarr[sub·k + codes[sub]] with the EXACT decimal
     * accumulation discipline of the sum it replaces — each qd2 enters as
     * DECIMAL(18,6) and accumulates at (28,6) (the precision-only cast of
     * the (29,6) add result is exact; 16 six-dp terms cannot overflow it),
     * so the value equals `sum(CAST(qd2 AS DECIMAL(18,6)))` bit-for-bit.
     */
-  private def adcRowLocal: Column = expr(
+  private def adcRowLocal(m: Int, k: Int): Column = expr(
     s"""aggregate(
-       |  zip_with(sequence(0L, ${PqrM - 1}L), codes, (s, c) -> s * $PqrK + c),
+       |  zip_with(sequence(0L, ${m - 1}L), codes, (s, c) -> s * $k + c),
        |  CAST(0 AS DECIMAL(28,6)),
        |  (acc, slot) -> CAST(acc + CAST(element_at(lutarr, CAST(slot + 1 AS INT))
        |                 AS DECIMAL(18,6)) AS DECIMAL(28,6)))""".stripMargin)
+
+  // ---- The ANN pipeline: probe → ADC → refine → recall. Every IVF/PQ
+  // row, the spilled-index build, the streaming serve gate and
+  // RecallProbe compose these stages; none re-derives one. ----
+
+  /** The disjoint query sample: vec_id ≡ 7 (mod 10), < 500 — outside
+    * both codebooks' stride-seed sets, the append batch (≡ 3) and the
+    * delete batch (≡ 9). Seed-query leakage is what made the r8 recall
+    * numbers a lie (RECALL.md).
+    */
+  private[graft] def disjointQueries(
+      e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    e.filter(col("vec_id") % 10 === 7 && col("vec_id") < 500)
+
+  /** Squared L2 by the ‖a‖² − 2a·b + ‖b‖² identity, rounded to 6 dp —
+    * the one expression tree every exact rank, PQ lookup and k-center
+    * distance uses, so the doubles stay bit-identical to the DuckDB
+    * mirrors' `ROUND(… − 2.0 * … + …, 6)`.
+    */
+  private[graft] def roundedL2(a: Column, b: Column): Column =
+    round(GraftFunctions.dot(a, a) - lit(2.0) * GraftFunctions.dot(a, b)
+      + GraftFunctions.dot(b, b), 6)
+
+  /** Every `side` row stored in a cell its query probes, the query itself
+    * excluded — the probe join every ANN scan runs: the probes broadcast,
+    * the bucketed side never shuffles.
+    */
+  private[graft] def probed(side: org.apache.spark.sql.DataFrame,
+      probes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    side.join(broadcast(probes), Seq("cell")).filter(col("vec_id") =!= col("q_id"))
+
+  /** The `nprobe` nearest cells of each query by rounded cosine (cell
+    * tiebreak): (q_id, q_emb, q_nrm, cell). Input must carry `nrm`.
+    */
+  private[graft] def cosineProbes(q: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame, nprobe: Int): org.apache.spark.sql.DataFrame =
+    withNearestCells(q, cb, nprobe, rounded = true)
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
+        col("nrm").as("q_nrm"), col("cell"))
+
+  /** Rounded cosine of a probed candidate (emb, nrm) to its query. */
+  private[graft] def probeCosine: Column = round(cosine("emb", "q_emb", "nrm", "q_nrm"), 6)
+
+  /** Exact cosine top-k within the probed cells: (q_id, vec_id, cos,
+    * rn), cosine descending with vec_id tiebreak. `distinct` scores a
+    * vector reachable through several probed cells (the spilled index)
+    * once.
+    */
+  private[graft] def cosineTopK(idx: org.apache.spark.sql.DataFrame,
+      probes: org.apache.spark.sql.DataFrame, k: Int,
+      distinct: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val cand = probed(idx, probes).withColumn("cos", probeCosine)
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
+    (if (distinct) cand.select(col("q_id"), col("vec_id"), col("cos")).distinct() else cand)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("q_id"), col("vec_id"), col("cos"), col("rn"))
+  }
+
+  /** Row-local top-`keep` cells of every row with their rank (1 = the
+    * nearest, the cell a single assignment picks) in column `rank`: the
+    * compiled top-k's array order IS csim DESC with cell tiebreak, so
+    * pos + 1 is the row_number the DuckDB mirrors rank by. Input must
+    * carry `emb` and `nrm`.
+    */
+  private[graft] def withRankedCells(df: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame, keep: Int,
+      rank: String): org.apache.spark.sql.DataFrame = {
+    val cb = oneRowArray(cents, "cbarr", col("cell"), col("cvec"), col("cnrm"))
+    df.crossJoin(broadcast(cb))
+      .select(col("*"), posexplode(graft.functions.NearestCentroidFunctions.nearestCells(
+        col("emb"), col("nrm"), col("cbarr"), keep, rounded = true)).as(Seq("pos", "tc")))
+      .withColumn("cell", col("tc")("cell"))
+      .withColumn(rank, (col("pos") + 1).cast("long"))
+      .drop("cbarr", "pos", "tc")
+  }
+
+  /** The `keep` nearest cells of each query with probe rank `cr`:
+    * (q_id, q_emb, cr, cell). One ADC pass at the widest nprobe then
+    * serves every narrower curve point as a `cr ≤ nprobe` cut.
+    */
+  private[graft] def rankedProbes(q: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame, keep: Int): org.apache.spark.sql.DataFrame =
+    withRankedCells(q, cb, keep, "cr")
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("cr"), col("cell"))
+
+  /** The CELL-stage candidates: every full vector in the probed cells,
+    * scored by exact rounded L2 — (q_id, vec_id, cr, adist), the recall
+    * ceiling any code-based ranking can reach at that nprobe. `probes`
+    * are [[rankedProbes]].
+    */
+  private[graft] def exactInProbed(idx: org.apache.spark.sql.DataFrame,
+      probes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    probed(idx, probes).select(col("q_id"), col("vec_id"), col("cr"),
+      roundedL2(col("emb"), col("q_emb")).as("adist"))
+
+  /** Residual-ADC candidates: the probed cells' codes scored row-locally
+    * against the compiled per-(query, probed cell) residual LUT (see
+    * [[residualLut]]) — (q_id, vec_id, cr, adist), one row per stored
+    * code row (a spilled vector appears once per probed copy). `probes`
+    * are [[rankedProbes]]; (m, w, k) is the residual-PQ geometry.
+    */
+  private[graft] def residualAdc(codes: org.apache.spark.sql.DataFrame,
+      probes: org.apache.spark.sql.DataFrame, cb: org.apache.spark.sql.DataFrame,
+      rcb: org.apache.spark.sql.DataFrame, m: Int = PqrM, w: Int = PqrW,
+      k: Int = PqrK): org.apache.spark.sql.DataFrame =
+    probed(codes, probes.select(col("q_id"), col("cell"), col("cr")))
+      .join(broadcast(residualLut(probes, cb, rcb, m, w, k)), Seq("q_id", "cell"))
+      .select(col("q_id"), col("vec_id"), col("cr"),
+        adcRowLocal(m, k).cast(DoubleType).as("adist"))
+
+  /** Per-query raw-PQ lookup table over (vec_id, emb) queries: the
+    * rounded squared distance of each query slice to every centroid of
+    * its subspace — (q_id, sub, cid, qd2), queries × m·k rows.
+    */
+  private[graft] def rawPqLut(q: org.apache.spark.sql.DataFrame,
+      pqCb: org.apache.spark.sql.DataFrame, m: Int = 4,
+      w: Int = 16): org.apache.spark.sql.DataFrame =
+    q.select(col("vec_id"), explode(array((0 until m).map(lit): _*)).as("sub"), col("emb"))
+      .select(col("vec_id"), col("sub").cast("long").as("sub"),
+        expr(s"slice(emb, sub*$w+1, $w)").as("v"))
+      .join(broadcast(pqCb), Seq("sub"))
+      .select(col("vec_id").as("q_id"), col("sub"), col("cid"),
+        roundedL2(col("v"), col("cv")).as("qd2"))
+
+  /** Raw-PQ ADC: (q_id, sub, cid) code rows looked up in the broadcast
+    * [[rawPqLut]] and summed as DECIMAL(18,6) per `by` group — (by…,
+    * adist). The decimal sum makes the distance engine-exact.
+    */
+  private[graft] def rawAdc(codeRows: org.apache.spark.sql.DataFrame,
+      lut: org.apache.spark.sql.DataFrame, by: String*): org.apache.spark.sql.DataFrame =
+    codeRows.join(broadcast(lut), Seq("q_id", "sub", "cid"))
+      .groupBy(by.map(col): _*)
+      .agg(sum(col("qd2").cast(DecimalType(18, 6))).as("ad"))
+      .select(by.map(col) :+ col("ad").cast(DoubleType).as("adist"): _*)
+
+  /** Raw-PQ ADC over the probed cells' packed `codes` for (vec_id, emb)
+    * queries `q`: (keys…, vec_id, adist), the keys being the `probes`
+    * columns other than `cell`.
+    */
+  private[graft] def rawPqAdc(codes: org.apache.spark.sql.DataFrame,
+      probes: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame,
+      pqCb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val keys = probes.columns.toSeq.filter(_ != "cell") :+ "vec_id"
+    // the packed codes array exploded to one (sub, cid) row per subspace
+    val codeRows = probed(codes, probes)
+      .select(keys.map(col) :+ posexplode(col("codes")).as(Seq("sub", "cid")): _*)
+      .select(keys.map(col) ++ Seq(col("sub").cast("long").as("sub"), col("cid")): _*)
+    rawAdc(codeRows, rawPqLut(q, pqCb), keys: _*)
+  }
+
+  /** The first `n` rows of each `keys` group by ascending `dist` (vec_id
+    * tiebreak), ranked 1..n in column `rank`.
+    */
+  private[graft] def nearestFirst(df: org.apache.spark.sql.DataFrame, dist: String,
+      n: Int, rank: String, keys: String*): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(dist), col("vec_id"))
+    df.withColumn(rank, row_number().over(w)).filter(col(rank) <= n)
+  }
+
+  /** Exact re-rank of a (keys…, q_id, vec_id) shortlist: ONLY the
+    * shortlisted rows' full vectors leave `corpus` (a broadcast lookup
+    * join — the corpus side never shuffles), scored by rounded L2
+    * against their (vec_id, emb) query and ranked `rn` ≤ k within
+    * `keys`; adds (emb, q_emb, d2, rn).
+    */
+  private[graft] def exactRefine(corpus: org.apache.spark.sql.DataFrame,
+      shortlist: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame,
+      k: Int, keys: String*): org.apache.spark.sql.DataFrame =
+    nearestFirst(corpus
+      .join(broadcast(shortlist), Seq("vec_id"))
+      .join(broadcast(q.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))), Seq("q_id"))
+      .withColumn("d2", roundedL2(col("emb"), col("q_emb"))), "d2", k, "rn", keys: _*)
+
+  /** Exact rounded-L2 top-k ground truth of each (vec_id, emb) query over
+    * the whole corpus, self excluded: (q_id, vec_id, e_rn). One broadcast
+    * pass of the query SAMPLE over the corpus — queries × corpus, never
+    * corpus².
+    */
+  private[graft] def exactTopK(e: org.apache.spark.sql.DataFrame,
+      q: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame =
+    nearestFirst(e
+      .join(broadcast(q.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))),
+        col("vec_id") =!= col("q_id"))
+      .withColumn("d2", roundedL2(col("emb"), col("q_emb"))), "d2", k, "e_rn", "q_id")
+      .select(col("q_id"), col("vec_id"), col("e_rn"))
+
+  /** @3/@5 hits of an approximate top-5 (`a_rn`) against the exact top-5
+    * (`e_rn`), counted per `by`: (by, h3, h5).
+    */
+  private[graft] def recallHits(approx: org.apache.spark.sql.DataFrame,
+      exact: org.apache.spark.sql.DataFrame, by: String): org.apache.spark.sql.DataFrame =
+    approx.join(exact, Seq("q_id", "vec_id"))
+      .groupBy(col(by))
+      .agg(
+        sum(when(col("a_rn") <= 3 && col("e_rn") <= 3, 1L).otherwise(0L)).as("h3"),
+        count(lit(1)).as("h5"))
+
+  /** The recall curve's nprobe points and the refine rows' ADC
+    * shortlist length.
+    */
+  private[graft] val CurveNprobes = Seq(1L, 3L, 8L)
+  private[graft] val RefineR = 20
+
+  /** RECALL CURVE of an ANN candidate set (q_id, vec_id, cr, adist):
+    * for each nprobe in `nps`, the candidates with probe rank cr ≤ nprobe
+    * give an approximate top-5 — with `refineR > 0` the exact re-rank of
+    * their top-R ADC shortlist from `e` (the refine-serve recipe) — and
+    * its micro-averaged recall@3/@5 against the exact top-5 over `e`:
+    * (nprobe, n_queries, recall_at_3, recall_at_5), one row per nprobe
+    * even with zero hits. Recalls are raw double divisions of exact hit
+    * counts, IEEE-identical across engines.
+    */
+  private[graft] def recallCurve(cand: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame,
+      nps: Seq[Long], refineR: Int = 0): org.apache.spark.sql.DataFrame = {
+    val k = 5
+    val points = cand
+      .withColumn("nprobe", explode(array(nps.map(lit): _*)))
+      .filter(col("cr") <= col("nprobe"))
+    val approx =
+      if (refineR == 0) nearestFirst(points, "adist", k, "a_rn", "nprobe", "q_id")
+      else exactRefine(e.select(col("vec_id"), col("emb")),
+        nearestFirst(points, "adist", refineR, "srn", "nprobe", "q_id")
+          .select(col("nprobe"), col("q_id"), col("vec_id")),
+        q, k, "nprobe", "q_id").withColumnRenamed("rn", "a_rn")
+    val hits = recallHits(
+      approx.select(col("nprobe"), col("q_id"), col("vec_id"), col("a_rn")),
+      exactTopK(e, q, k), "nprobe")
+    // nprobe spine so a curve point with zero hits still surfaces
+    val spine = q.sparkSession.range(1)
+      .select(explode(array(nps.map(lit): _*)).as("nprobe"))
+      .crossJoin(broadcast(q.agg(count(lit(1)).as("n_queries"))))
+    spine.join(hits, Seq("nprobe"), "left")
+      .select(col("nprobe"), col("n_queries"),
+        (coalesce(col("h3"), lit(0L)).cast(DoubleType) / (col("n_queries") * 3))
+          .as("recall_at_3"),
+        (coalesce(col("h5"), lit(0L)).cast(DoubleType) / (col("n_queries") * 5))
+          .as("recall_at_5"))
+  }
 
   private[graft] val pqResidualCodebookSql: String =
     pqCodebookSqlGen("rese", "r", PqrK, PqrM, PqrW)
@@ -1060,21 +1295,10 @@ object VectorOps extends QueryModule {
     */
   def annIvfTopK(emb: org.apache.spark.sql.DataFrame, nQueries: Int, k: Int, nprobe: Int): org.apache.spark.sql.DataFrame = {
     val cellCentroids = ivfCodebook(emb)
-    def nearestCells(df: org.apache.spark.sql.DataFrame, keep: Int) =
-      withNearestCells(df, cellCentroids, keep, rounded = true)
-        .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
-    val assigned = nearestCells(emb, 1)
-    val probes = nearestCells(emb.filter(col("vec_id") < nQueries), nprobe)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    assigned
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine("emb", "q_emb", "nrm", "q_nrm"), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vec_id"), col("cos"), col("rn"))
+    val assigned = withNearestCells(emb, cellCentroids, 1, rounded = true)
+      .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
+    cosineTopK(assigned,
+      cosineProbes(emb.filter(col("vec_id") < nQueries), cellCentroids, nprobe), k)
   }
 
   val vecAnnIvf = Q(
@@ -1675,32 +1899,20 @@ object VectorOps extends QueryModule {
       import spark.implicits._
       val e = Tables.embeddings(spark, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-      val subs = e
-        .select($"vec_id", explode(array((0 to 3).map(lit): _*)).as("sub"), $"emb")
-        .select($"vec_id", $"sub", expr("slice(emb, sub*16+1, 16)").as("v"))
       // shared-frame training for the cache hit (see vec_pq_encode)
       val cents = trainPqCodebook(withNorm(spark, dir))
-      val d2 = round(
-        GraftFunctions.dot($"v", $"v")
-          - lit(2.0) * GraftFunctions.dot($"v", $"cv")
-          + GraftFunctions.dot($"cv", $"cv"), 6)
       // corpus → 4 codes per vector (the PQ index; stored, not
       // recomputed), encoded row-locally — no per-(vector, subspace)
       // window Exchange between the scan and the codes
       val codes = withPqCodes(e, cents).select($"vec_id", $"sub", $"cid")
       // query-side LUT: squared distance of each query slice to every centroid
-      val lut = subs.filter($"vec_id" < 8)
-        .join(broadcast(cents), Seq("sub"))
-        .withColumn("qd2", d2)
-        .select($"vec_id".as("q_id"), $"sub", $"cid", $"qd2")
-      val wTop = Window.partitionBy($"q_id").orderBy($"adist", $"vec_id")
-      codes.join(broadcast(lut), Seq("sub", "cid"))
+      val lut = rawPqLut(e.filter($"vec_id" < 8), cents)
+      val adists = codes.join(broadcast(lut), Seq("sub", "cid"))
         .filter($"vec_id" =!= $"q_id")
         .groupBy($"q_id", $"vec_id")
         .agg(sum($"qd2".cast(DecimalType(18, 6))).as("ad"))
         .withColumn("adist", $"ad".cast(DoubleType))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 5)
+      nearestFirst(adists, "adist", 5, "rn", "q_id")
         .select($"q_id", $"vec_id", $"adist", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -1840,39 +2052,21 @@ object VectorOps extends QueryModule {
                    nprobe: Int): org.apache.spark.sql.DataFrame = {
     // IVF half: √n-cell Lloyd codebook, nearest-cell assignment, query probes
     val cents = ivfCodebook(e)
-    def nearestCells(df: org.apache.spark.sql.DataFrame, keep: Int) =
-      withNearestCells(df, cents, keep, rounded = true)
-        .select(col("vec_id"), col("cell"), col("emb"))
-    val probes = nearestCells(e.filter(col("vec_id") < nQueries), nprobe)
+    val q = e.filter(col("vec_id") < nQueries)
+    val probes = withNearestCells(q, cents, nprobe, rounded = true)
       .select(col("vec_id").as("q_id"), col("cell"))
     // PQ half: TRAINED subspace codebook (stride seeds + Lloyd rounds,
     // VERDICT r8 #2), row-local per-vector codes, query LUT
-    val subs = e
-      .select(col("vec_id"), explode(array((0 to 3).map(lit): _*)).as("sub"), col("emb"))
-      .select(col("vec_id"), col("sub"), expr("slice(emb, sub*16+1, 16)").as("v"))
     val cb = trainPqCodebook(e)
-    val d2 = round(
-      GraftFunctions.dot(col("v"), col("v"))
-        - lit(2.0) * GraftFunctions.dot(col("v"), col("cv"))
-        + GraftFunctions.dot(col("cv"), col("cv")), 6)
     // one map pass: each corpus vector gets its IVF cell AND its 4 PQ
     // codes row-locally — no encode window, no assignment Exchange
-    val codes = withPqCodes(nearestCells(e, 1), cb)
+    val codes = withPqCodes(
+        withNearestCells(e, cents, 1, rounded = true)
+          .select(col("vec_id"), col("cell"), col("emb")), cb)
       .select(col("vec_id"), col("cell"), col("sub"), col("cid"))
-    val lut = subs.filter(col("vec_id") < nQueries)
-      .join(broadcast(cb), Seq("sub"))
-      .withColumn("qd2", d2)
-      .select(col("vec_id").as("q_id"), col("sub"), col("cid"), col("qd2"))
     // probed-cell filter BELOW the LUT join, then ADC rank
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    codes.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut), Seq("q_id", "sub", "cid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("qd2").cast(DecimalType(18, 6))).as("ad"))
-      .withColumn("adist", col("ad").cast(DoubleType))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
+    nearestFirst(rawAdc(probed(codes, probes), rawPqLut(q, cb), "q_id", "vec_id"),
+        "adist", k, "rn", "q_id")
       .select(col("q_id"), col("vec_id"), col("adist"), col("rn").cast("long").as("rn"))
   }
 
@@ -1970,29 +2164,14 @@ object VectorOps extends QueryModule {
       val approx = annIvfpqTopK(e, nQ, k, nprobe = 3)
         .select($"q_id", $"vec_id", $"rn".as("a_rn"))
       val q = e.filter($"vec_id" < nQ)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"label".as("q_label"))
       // exact squared-L2 ground truth via the same ‖a‖²−2a·q+‖q‖²
-      // identity the PQ encoder uses, rounded 6 dp, vec_id tiebreak
-      val d2 = round(
-        GraftFunctions.dot($"emb", $"emb")
-          - lit(2.0) * GraftFunctions.dot($"emb", $"q_emb")
-          + GraftFunctions.dot($"q_emb", $"q_emb"), 6)
-      val wq = Window.partitionBy($"q_id").orderBy($"d2", $"vec_id")
-      val exact = e.join(broadcast(q.select($"q_id", $"q_emb")), $"vec_id" =!= $"q_id")
-        .withColumn("d2", d2)
-        .withColumn("e_rn", row_number().over(wq))
-        .filter($"e_rn" <= k)
-        .select($"q_id", $"vec_id", $"e_rn")
-      // intersection of approximate and exact top-k id sets per query
-      val hits = approx.join(exact, Seq("q_id", "vec_id"))
-        .groupBy($"q_id")
-        .agg(
-          sum(when($"a_rn" <= 3 && $"e_rn" <= 3, 1L).otherwise(0L)).as("h3"),
-          count(lit(1)).as("h5"))
+      // identity the PQ encoder uses, rounded 6 dp, vec_id tiebreak;
+      // hits = intersection of approximate and exact top-k id sets
+      val hits = recallHits(approx, exactTopK(e, q, k), "q_id")
       // raw double division (exact hit counts over small fixed
       // denominators) — IEEE-identical across engines, so the oracle
       // needs no rounding discipline on the recalls at all
-      q.select($"q_id", $"q_label")
+      q.select($"vec_id".as("q_id"), $"label".as("q_label"))
         .join(hits, Seq("q_id"), "left")
         .groupBy($"q_label".as("label"))
         .agg(
@@ -2193,10 +2372,7 @@ object VectorOps extends QueryModule {
         (1, f0.getLong(0), f0.getInt(1), f0.getSeq[Double](2), 0.0))
       for (i <- 2 to 8) {
         val cearr = typedLit(picks.map(_._4.toSeq))
-        val mind = array_min(transform(cearr, ce => round(
-          GraftFunctions.dot($"emb", $"emb")
-            - lit(2.0) * GraftFunctions.dot($"emb", ce)
-            + GraftFunctions.dot(ce, ce), 6)))
+        val mind = array_min(transform(cearr, ce => roundedL2($"emb", ce)))
         val far = e.withColumn("mind", mind)
           .orderBy($"mind".desc, $"vec_id")
           .limit(1)
@@ -2258,18 +2434,7 @@ object VectorOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val (idx, cb) = IvfIndex.ensure(spark, dir)
-      val probes = withNearestCells(
-          withNorm(spark, dir).filter($"vec_id" < 50), cb, keep = 3, rounded = true)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"), $"cell")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      idx
-        .join(broadcast(probes), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .withColumn("cos",
-          round(GraftFunctions.dot($"emb", $"q_emb") / ($"nrm" * $"q_nrm"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"q_id", $"vec_id", $"cos", $"rn")
+      cosineTopK(idx, cosineProbes(withNorm(spark, dir).filter($"vec_id" < 50), cb, 3), 3)
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
@@ -2338,30 +2503,9 @@ object VectorOps extends QueryModule {
       // nprobe=3 nearest cells per query via the persisted IVF codebook
       val probes = withNearestCells(q, ivfCb, keep = 3, rounded = true)
         .select($"vec_id".as("q_id"), $"cell")
-      // per-query LUT: squared distance of each query slice to every
-      // persisted PQ centroid (queries × 64 rows, broadcast)
-      val lut = q
-        .select($"vec_id", explode(array((0 to 3).map(lit): _*)).as("sub"), $"emb")
-        .select($"vec_id", $"sub".cast("long").as("sub"),
-          expr("slice(emb, sub*16+1, 16)").as("v"))
-        .join(broadcast(pqCb), Seq("sub"))
-        .withColumn("qd2", round(
-          GraftFunctions.dot($"v", $"v")
-            - lit(2.0) * GraftFunctions.dot($"v", $"cv")
-            + GraftFunctions.dot($"cv", $"cv"), 6))
-        .select($"vec_id".as("q_id"), $"sub", $"cid", $"qd2")
-      val wTop = Window.partitionBy($"q_id").orderBy($"adist", $"vec_id")
-      codes
-        .join(broadcast(probes), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"vec_id", posexplode($"codes").as(Seq("sub", "cid")))
-        .select($"q_id", $"vec_id", $"sub".cast("long").as("sub"), $"cid")
-        .join(broadcast(lut), Seq("q_id", "sub", "cid"))
-        .groupBy($"q_id", $"vec_id")
-        .agg(sum($"qd2".cast(DecimalType(18, 6))).as("ad"))
-        .withColumn("adist", $"ad".cast(DoubleType))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
+      // per-query LUT (queries × 64 rows, broadcast) against the
+      // persisted PQ codebook; ADC over the probed cells' code rows
+      nearestFirst(rawPqAdc(codes, probes, q, pqCb), "adist", 3, "rn", "q_id")
         .select($"q_id", $"vec_id", $"adist", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -2711,18 +2855,7 @@ object VectorOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val (idx2, cb2) = IvfIndex.ensureRebalanced(spark, dir)
-      val q = withNorm(spark, dir).filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      val probes = withNearestCells(q, cb2, keep = 3, rounded = true)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"), $"cell")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      idx2
-        .join(broadcast(probes), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .withColumn("cos",
-          round(GraftFunctions.dot($"emb", $"q_emb") / ($"nrm" * $"q_nrm"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"q_id", $"vec_id", $"cos", $"rn")
+      cosineTopK(idx2, cosineProbes(disjointQueries(withNorm(spark, dir)), cb2, 3), 3)
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
@@ -2902,71 +3035,15 @@ object VectorOps extends QueryModule {
     "vec_ann_recall_curve",
     (spark, dir) => {
       import spark.implicits._
-      val k = 5
       val (_, ivfCb) = IvfIndex.ensure(spark, dir)
       val (rcodes, rcb) = IvfIndex.ensurePqResidual(spark, dir)
       val e = withNorm(spark, dir)
-      val q = e.filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      // ranked probes: the 8 nearest cells per query with probe rank cr
-      // (posexplode of the compiled top-k — array order IS csim DESC
-      // with cell tiebreak, so pos+1 is the row_number the mirror ranks)
-      val cbArr = oneRowArray(ivfCb, "cbarr", col("cell"), col("cvec"), col("cnrm"))
-      val probes = q.crossJoin(broadcast(cbArr))
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-          posexplode(graft.functions.NearestCentroidFunctions.nearestCells(
-            $"emb", $"nrm", $"cbarr", 8, rounded = true)).as(Seq("pos", "tc")))
-        .select($"q_id", $"q_emb", ($"pos" + 1).cast("long").as("cr"),
-          $"tc"("cell").as("cell"))
-      // per-(query, probed cell) residual LUT: the query's residual vs
-      // THAT cell, sliced and scored against the residual PQ codebook
-      // compiled one-row LUT (r13): see [[residualLut]]
-      val lut = residualLut(probes, ivfCb, rcb)
-      // ONE ADC pass at nprobe=8; each candidate carries its cell's
-      // probe rank, so narrower nprobe cuts never rescan the codes
-      // row-local array ADC (r13): single-assignment codes mean each
-      // (q, vec) candidate appears exactly once, so the per-row lookup
-      // sum IS the old grouped decimal sum - no explode, no 1.6M-entry
-      // broadcast hash join, no re-aggregation exchange
-      val cand = rcodes
-        .join(broadcast(probes.select($"q_id", $"cell", $"cr")), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(broadcast(lut), Seq("q_id", "cell"))
-        .withColumn("ad", adcRowLocal)
-        .select($"q_id", $"vec_id", $"cr", $"ad".cast(DoubleType).as("adist"))
-      val wNp = Window.partitionBy($"nprobe", $"q_id").orderBy($"adist", $"vec_id")
-      val approx = cand
-        .withColumn("nprobe", explode(array(lit(1L), lit(3L), lit(8L))))
-        .filter($"cr" <= $"nprobe")
-        .withColumn("a_rn", row_number().over(wNp))
-        .filter($"a_rn" <= k)
-        .select($"nprobe", $"q_id", $"vec_id", $"a_rn")
-      // exact rounded-L2 ground truth for the same queries
-      val qq = q.select($"vec_id".as("q_id"), $"emb".as("q_emb"))
-      val d2x = round(
-        GraftFunctions.dot($"emb", $"emb")
-          - lit(2.0) * GraftFunctions.dot($"emb", $"q_emb")
-          + GraftFunctions.dot($"q_emb", $"q_emb"), 6)
-      val wq = Window.partitionBy($"q_id").orderBy($"d2", $"vec_id")
-      val exact = e.join(broadcast(qq), $"vec_id" =!= $"q_id")
-        .withColumn("d2", d2x)
-        .withColumn("e_rn", row_number().over(wq))
-        .filter($"e_rn" <= k)
-        .select($"q_id", $"vec_id", $"e_rn")
-      val hits = approx.join(exact, Seq("q_id", "vec_id"))
-        .groupBy($"nprobe")
-        .agg(
-          sum(when($"a_rn" <= 3 && $"e_rn" <= 3, 1L).otherwise(0L)).as("h3"),
-          count(lit(1)).as("h5"))
-      // nprobe spine so a curve point with zero hits still surfaces
-      val spine = spark.range(1)
-        .select(explode(array(lit(1L), lit(3L), lit(8L))).as("nprobe"))
-        .crossJoin(broadcast(q.agg(count(lit(1)).as("n_queries"))))
-      spine.join(hits, Seq("nprobe"), "left")
-        .select($"nprobe", $"n_queries",
-          (coalesce($"h3", lit(0L)).cast(DoubleType) / ($"n_queries" * 3))
-            .as("recall_at_3"),
-          (coalesce($"h5", lit(0L)).cast(DoubleType) / ($"n_queries" * 5))
-            .as("recall_at_5"))
+      val q = disjointQueries(e)
+      // ONE residual-ADC pass at nprobe=8; each candidate carries its
+      // cell's probe rank, so narrower nprobe cuts never rescan the
+      // codes (single-assignment codes: one row per (q, vec) candidate)
+      recallCurve(residualAdc(rcodes, rankedProbes(q, ivfCb, 8), ivfCb, rcb),
+          e, q, CurveNprobes)
         .orderBy($"nprobe")
     },
     // fully oracled: DuckDB re-derives the IVF codebook, assignment,
@@ -3103,50 +3180,18 @@ object VectorOps extends QueryModule {
     "vec_ann_refine_serve",
     (spark, dir) => {
       import spark.implicits._
-      val R = 20
       val (idx, ivfCb) = IvfIndex.ensure(spark, dir)
       val (rcodes, rcb) = IvfIndex.ensurePqResidual(spark, dir)
-      val e = withNorm(spark, dir)
-      val q = e.filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      // stage 1a: 8 ranked probe cells per query (compiled top-k over
-      // the broadcast codebook — the curve row's probe stage)
-      val cbArr = oneRowArray(ivfCb, "cbarr", col("cell"), col("cvec"), col("cnrm"))
-      val probes = q.crossJoin(broadcast(cbArr))
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-          explode(graft.functions.NearestCentroidFunctions.nearestCells(
-            $"emb", $"nrm", $"cbarr", 8, rounded = true)).as("tc"))
-        .select($"q_id", $"q_emb", $"tc"("cell").as("cell"))
-      // stage 1b: per-(query, probed cell) residual LUT — the query's
-      // residual vs THAT cell, scored against the residual PQ codebook
-      // compiled one-row LUT (r13): see [[residualLut]]
-      val lut = residualLut(probes, ivfCb, rcb)
-      // stage 1c: ADC over the probed cells' persisted codes → top-R
-      // shortlist per query
-      val wAdc = Window.partitionBy($"q_id").orderBy($"adist", $"vec_id")
-      // row-local array ADC (r13, see vec_ann_recall_curve): the
-      // per-row lookup sum equals the old grouped decimal sum because
-      // single-assignment codes give one row per (q, vec)
-      val shortlist = rcodes
-        .join(broadcast(probes.select($"q_id", $"cell")), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(broadcast(lut), Seq("q_id", "cell"))
-        .withColumn("ad", adcRowLocal)
-        .withColumn("adist", $"ad".cast(DoubleType))
-        .withColumn("srn", row_number().over(wAdc))
-        .filter($"srn" <= R)
+      val q = disjointQueries(withNorm(spark, dir))
+      // stage 1: residual ADC over the 8 ranked probe cells' persisted
+      // codes → top-R shortlist per query (single-assignment codes: one
+      // row per (q, vec))
+      val shortlist = nearestFirst(
+          residualAdc(rcodes, rankedProbes(q, ivfCb, 8), ivfCb, rcb), "adist", RefineR, "srn", "q_id")
         .select($"q_id", $"vec_id")
       // stage 2: exact re-rank — ONLY the shortlisted rows' full
       // vectors leave the index (broadcast lookup join, no shuffle)
-      val wTop = Window.partitionBy($"q_id").orderBy($"d2", $"vec_id")
-      idx
-        .join(broadcast(shortlist), Seq("vec_id"))
-        .join(broadcast(q.select($"vec_id".as("q_id"), $"emb".as("q_emb"))), Seq("q_id"))
-        .withColumn("d2", round(
-          GraftFunctions.dot($"emb", $"emb")
-            - lit(2.0) * GraftFunctions.dot($"emb", $"q_emb")
-            + GraftFunctions.dot($"q_emb", $"q_emb"), 6))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
+      exactRefine(idx, shortlist, q, 3, "q_id")
         .select($"q_id", $"vec_id", $"d2", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -3375,18 +3420,7 @@ object VectorOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val (appIdx, baseCb) = IvfIndex.ensureAppended(spark, dir)
-      val q = withNorm(spark, dir).filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      val probes = withNearestCells(q, baseCb, keep = 3, rounded = true)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"), $"cell")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      appIdx
-        .join(broadcast(probes), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .withColumn("cos",
-          round(GraftFunctions.dot($"emb", $"q_emb") / ($"nrm" * $"q_nrm"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"q_id", $"vec_id", $"cos", $"rn")
+      cosineTopK(appIdx, cosineProbes(disjointQueries(withNorm(spark, dir)), baseCb, 3), 3)
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
@@ -3596,19 +3630,8 @@ object VectorOps extends QueryModule {
       import spark.implicits._
       val (idx, cb) = IvfIndex.ensure(spark, dir)
       val ts = IvfIndex.ensureTombstones(spark, dir)
-      val q = withNorm(spark, dir).filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      val probes = withNearestCells(q, cb, keep = 3, rounded = true)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"), $"cell")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      idx
-        .join(broadcast(ts.select($"vec_id")), Seq("vec_id"), "left_anti")
-        .join(broadcast(probes), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .withColumn("cos",
-          round(GraftFunctions.dot($"emb", $"q_emb") / ($"nrm" * $"q_nrm"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"q_id", $"vec_id", $"cos", $"rn")
+      cosineTopK(idx.join(broadcast(ts.select($"vec_id")), Seq("vec_id"), "left_anti"),
+          cosineProbes(disjointQueries(withNorm(spark, dir)), cb, 3), 3)
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
@@ -3776,20 +3799,8 @@ object VectorOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val (sidx, scb) = IvfIndex.ensureSpilled(spark, dir)
-      val q = withNorm(spark, dir).filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      val probes = withNearestCells(q, scb, keep = 16, rounded = true)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"nrm".as("q_nrm"), $"cell")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      sidx
-        .join(broadcast(probes), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .withColumn("cos",
-          round(GraftFunctions.dot($"emb", $"q_emb") / ($"nrm" * $"q_nrm"), 6))
-        .select($"q_id", $"vec_id", $"cos")
-        .distinct()
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"q_id", $"vec_id", $"cos", $"rn")
+      cosineTopK(sidx, cosineProbes(disjointQueries(withNorm(spark, dir)), scb, 16), 3,
+          distinct = true)
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
@@ -3845,9 +3856,9 @@ object VectorOps extends QueryModule {
     *
     * Queries are the 50 disjoint-sample vectors (≡ 7 mod 10, < 500 —
     * outside the append batch, the delete batch and both codebooks'
-    * stride-seed sets). RecallProbe's composed gen-2+refine measurement
-    * (RECALL.md) already showed composition preserves quality; this row
-    * makes the composed PLAN a declared, fully-oracled contract.
+    * stride-seed sets). RecallProbe's composed-production curves run
+    * this row's stages at every nprobe (RECALL.md); this row makes the
+    * composed PLAN a declared, fully-oracled contract.
     *
     * Scale notes (100 TB): the serve cost is the refine row's — codes
     * ADC ∝ nprobe/nlist of the corpus (bucketed, zero cell Exchange),
@@ -3859,7 +3870,6 @@ object VectorOps extends QueryModule {
     "vec_ann_serve_production",
     (spark, dir) => {
       import spark.implicits._
-      val R = 20
       // maintenance half (outside a production serve clock): make the
       // freshest generation + codes + tombstones exist, deterministically
       IvfIndex.ensureAppended(spark, dir)
@@ -3868,44 +3878,17 @@ object VectorOps extends QueryModule {
       // serve half: freshest-generation resolution (appended is current
       // here by construction; IvfIndexSpec proves the base fallback)
       val (idx, baseCb) = IvfIndex.serveFreshestApp(spark, dir)
-      val e = withNorm(spark, dir)
-      val q = e.filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      // 8 ranked probe cells per query vs the unchanged base codebook
-      val cbArr = oneRowArray(baseCb, "cbarr", col("cell"), col("cvec"), col("cnrm"))
-      val probes = q.crossJoin(broadcast(cbArr))
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-          explode(graft.functions.NearestCentroidFunctions.nearestCells(
-            $"emb", $"nrm", $"cbarr", 8, rounded = true)).as("tc"))
-        .select($"q_id", $"q_emb", $"tc"("cell").as("cell"))
-      // per-(query, probed cell) residual LUT against the base-trained
-      // residual codebook
-      // compiled one-row LUT (r13): see [[residualLut]]
-      val lut = residualLut(probes, baseCb, rcb)
-      // ADC over the appended codes with tombstones excluded UP FRONT
-      val wAdc = Window.partitionBy($"q_id").orderBy($"adist", $"vec_id")
-      // row-local array ADC (r13, see vec_ann_recall_curve)
-      val shortlist = rcodes
-        .join(broadcast(ts.select($"vec_id")), Seq("vec_id"), "left_anti")
-        .join(broadcast(probes.select($"q_id", $"cell")), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(broadcast(lut), Seq("q_id", "cell"))
-        .withColumn("ad", adcRowLocal)
-        .withColumn("adist", $"ad".cast(DoubleType))
-        .withColumn("srn", row_number().over(wAdc))
-        .filter($"srn" <= R)
+      val q = disjointQueries(withNorm(spark, dir))
+      // residual ADC over the appended codes with tombstones excluded UP
+      // FRONT, 8 ranked probe cells per query vs the unchanged base
+      // codebook and its base-trained residual codebook
+      val shortlist = nearestFirst(
+          residualAdc(rcodes.join(broadcast(ts.select($"vec_id")), Seq("vec_id"), "left_anti"),
+            rankedProbes(q, baseCb, 8), baseCb, rcb), "adist", RefineR, "srn", "q_id")
         .select($"q_id", $"vec_id")
       // exact refine: only the R shortlisted rows leave the appended
       // index (broadcast lookup join — the index side never shuffles)
-      val wTop = Window.partitionBy($"q_id").orderBy($"d2", $"vec_id")
-      idx
-        .join(broadcast(shortlist), Seq("vec_id"))
-        .join(broadcast(q.select($"vec_id".as("q_id"), $"emb".as("q_emb"))), Seq("q_id"))
-        .withColumn("d2", round(
-          GraftFunctions.dot($"emb", $"emb")
-            - lit(2.0) * GraftFunctions.dot($"emb", $"q_emb")
-            + GraftFunctions.dot($"q_emb", $"q_emb"), 6))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
+      exactRefine(idx, shortlist, q, 3, "q_id")
         .select($"q_id", $"vec_id", $"d2", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -4000,47 +3983,19 @@ object VectorOps extends QueryModule {
     "vec_ann_refine_serve_spill",
     (spark, dir) => {
       import spark.implicits._
-      val R = 20
       val (sidx, scb) = IvfIndex.ensureSpilled(spark, dir)
       val (scodes, srcb) = IvfIndex.ensurePqrSpilled(spark, dir)
-      val e = withNorm(spark, dir)
-      val q = e.filter($"vec_id" % 10 === 7 && $"vec_id" < 500)
-      // 16 ranked probe cells per query vs the factor-4 codebook
-      val cbArr = oneRowArray(scb, "cbarr", col("cell"), col("cvec"), col("cnrm"))
-      val probes = q.crossJoin(broadcast(cbArr))
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-          explode(graft.functions.NearestCentroidFunctions.nearestCells(
-            $"emb", $"nrm", $"cbarr", 16, rounded = true)).as("tc"))
-        .select($"q_id", $"q_emb", $"tc"("cell").as("cell"))
-      // per-(query, probed cell) residual LUT
-      // compiled one-row LUT (r13): see [[residualLut]]
-      val lut = residualLut(probes, scb, srcb)
-      // ADC per copy, then each vector keeps its BEST reachable copy
-      val wAdc = Window.partitionBy($"q_id").orderBy($"adist", $"vec_id")
-      // row-local array ADC (r13): each spilled COPY is one codes row,
-      // so the per-row lookup sum is the old per-(q, vec, cell) grouped
-      // decimal sum; only the min-across-copies aggregation remains
-      val shortlist = scodes
-        .join(broadcast(probes.select($"q_id", $"cell")), Seq("cell"))
-        .filter($"vec_id" =!= $"q_id")
-        .join(broadcast(lut), Seq("q_id", "cell"))
-        .withColumn("ad", adcRowLocal)
-        .groupBy($"q_id", $"vec_id")
-        .agg(min($"ad".cast(DoubleType)).as("adist"))
-        .withColumn("srn", row_number().over(wAdc))
-        .filter($"srn" <= R)
+      val q = disjointQueries(withNorm(spark, dir))
+      // residual ADC per spilled COPY (one codes row each) over 16 ranked
+      // probe cells vs the factor-4 codebook; each vector keeps its BEST
+      // reachable copy
+      val shortlist = nearestFirst(
+          residualAdc(scodes, rankedProbes(q, scb, 16), scb, srcb)
+            .groupBy($"q_id", $"vec_id").agg(min($"adist").as("adist")),
+          "adist", RefineR, "srn", "q_id")
         .select($"q_id", $"vec_id")
       // exact refine from the crank-1 rows (each vector once)
-      val wTop = Window.partitionBy($"q_id").orderBy($"d2", $"vec_id")
-      sidx.filter($"crank" === 1)
-        .join(broadcast(shortlist), Seq("vec_id"))
-        .join(broadcast(q.select($"vec_id".as("q_id"), $"emb".as("q_emb"))), Seq("q_id"))
-        .withColumn("d2", round(
-          GraftFunctions.dot($"emb", $"emb")
-            - lit(2.0) * GraftFunctions.dot($"emb", $"q_emb")
-            + GraftFunctions.dot($"q_emb", $"q_emb"), 6))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
+      exactRefine(sidx.filter($"crank" === 1), shortlist, q, 3, "q_id")
         .select($"q_id", $"vec_id", $"d2", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -4622,12 +4577,10 @@ object VectorOps extends QueryModule {
       // (identical declared numerics: 12 dp HALF_UP term rounding, exact
       // decimal sums, 9 dp normalization) at microsecond cost, and its
       // driver footprint is d²-bounded — INDEPENDENT of corpus size.
-      import java.math.{BigDecimal => JBD, RoundingMode}
-      // JBD.valueOf(double) is Double.toString-based — the same entry
-      // point Spark's Round expression uses on DoubleType, so the local
-      // 12 dp HALF_UP terms equal what round(col, 12) produced in-plan
-      def rnd(x: Double, s: Int): JBD =
-        JBD.valueOf(x).setScale(s, RoundingMode.HALF_UP)
+      // the local 12 dp HALF_UP terms equal what round(col, 12)
+      // produced in-plan (see [[graft.DriverRound]])
+      import java.math.{BigDecimal => JBD}
+      import graft.DriverRound.{decimal => rnd}
       val cells = partials
         .groupBy($"i", $"j")
         .agg(sum(round($"p", 12).cast(DecimalType(38, 12))).as("gs"))
@@ -4837,10 +4790,7 @@ object VectorOps extends QueryModule {
       // on the row — the (vec_id, label)-keyed regroup of the corpus is
       // gone; only the bounded label-keyed report agg shuffles
       val cbA = oneRowArray(cents, "cbarr", $"clabel", $"cvec")
-      def dd(cv: Column) = round(sqrt(greatest(round(
-        GraftFunctions.dot($"emb", $"emb")
-          - lit(2.0) * GraftFunctions.dot($"emb", cv)
-          + GraftFunctions.dot(cv, cv), 6), lit(0.0d))), 6)
+      def dd(cv: Column) = round(sqrt(greatest(roundedL2($"emb", cv), lit(0.0d))), 6)
       val ab = e.crossJoin(broadcast(cbA))
         .withColumn("a", array_min(transform(
           filter($"cbarr", c => c("clabel") === $"label"), c => dd(c("cvec")))))

@@ -217,17 +217,13 @@ object StreamTransforms {
   def annServeGate(queries: DataFrame, idx: DataFrame,
       ivfCb: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions
+    import graft.operators.VectorOps
     val q = queries
       .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
-    val probes = graft.operators.VectorOps
-      .withNearestCells(q, ivfCb, keep = 2, rounded = true)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    probes
+    VectorOps.cosineProbes(q, ivfCb, 2)
       .join(idx.withColumnRenamed("vec_id", "c_id"), Seq("cell"))
       .filter(col("c_id") =!= col("q_id"))
-      .withColumn("cos", round(
-        GraftFunctions.dot(col("emb"), col("q_emb")) / (col("nrm") * col("q_nrm")), 6))
+      .withColumn("cos", VectorOps.probeCosine)
       .groupBy(col("q_id"))
       .agg(
         count(lit(1)).as("n_candidates"),

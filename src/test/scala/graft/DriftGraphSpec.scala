@@ -217,15 +217,16 @@ class DriftGraphSpec extends SparkSpecBase {
     val prLocal = SparkEntry.queries("graph_pagerank_trade")(spark, sfDir).collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    // drop the memoized labels so the reliable-mode run really re-executes
-    // the fixpoint instead of reading the local-mode cache
-    operators.TextOps.evictSharedStages()
+    // drop every memo (the component labels, pagerank's edge table) so
+    // the reliable-mode run really re-executes instead of reading the
+    // local-mode cache
+    PlanCache.evictAll()
     try {
       val ccRel = SparkEntry.queries("dedup_connected_components")(spark, sfDir).collect().toSeq
       val prRel = SparkEntry.queries("graph_pagerank_trade")(spark, sfDir).collect().toSeq
       assert(ccRel == ccLocal, "connected components diverged between checkpoint modes")
       assert(prRel == prLocal, "pagerank diverged between checkpoint modes")
-    } finally operators.TextOps.evictSharedStages()
+    } finally PlanCache.evictAll()
   }
 
   test("cusum changepoint: per-type rows, hand-recomputed argmax for one type") {

@@ -131,4 +131,19 @@ class GraphDriverLoopSpec extends SparkSpecBase {
       .select($"n_nationkey".cast("long"), $"core_degree").as[(Long, Long)].collect()
     assert(rows.toMap == handDeg, s"declared ${rows.toMap} vs peel-to-fixpoint $handDeg")
   }
+
+  test("DriverRound equals Spark round() on ordinary, tie and non-finite doubles") {
+    import spark.implicits._
+    val xs = Seq(0.0, -0.0, 1.0 / 3, -2.5e-10, 0.1234567895, -0.1234567895, 2.675,
+      1e17, 123456.7890123456789, Double.MinPositiveValue, Double.MaxValue,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    for (scale <- Seq(0, 6, 9, 12)) {
+      val viaSpark = xs.toDF("x").select(round($"x", scale)).as[Double].collect().toSeq
+      val viaDriver = xs.map(DriverRound(_, scale))
+      // compare bit patterns: NaN == NaN and -0.0 != 0.0 both count
+      assert(viaDriver.map(java.lang.Double.doubleToLongBits) ==
+        viaSpark.map(java.lang.Double.doubleToLongBits),
+        s"scale $scale: driver $viaDriver vs Spark $viaSpark")
+    }
+  }
 }

@@ -42,4 +42,30 @@ class PlanCacheSpec extends SparkSpecBase {
     assert(computes == 2, s"rewrite must recompute, ran $computes")
     cache.evictAll()
   }
+
+  test("PlanCache.evictAll frees the entries of every instance") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc_all").toString
+    Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(dir)
+    val caches = Seq(new PlanCache(2), new PlanCache(2))
+    var computes = 0
+    // an executor-local checkpoint whatever the session's checkpoint
+    // dir: its blocks are what evictAll must free
+    def lookup(c: PlanCache) = c.getOrCompute(spark.read.parquet(dir).agg(sum($"x").as("s"))) { df =>
+      computes += 1; df.localCheckpoint()
+    }
+    def blocks(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    val built = caches.map(lookup)
+    val ids = built.flatMap(blocks)
+    assert(ids.size == 2 && ids.forall(spark.sparkContext.getPersistentRDDs.contains),
+      s"each instance must hold its own checkpoint blocks: $ids")
+    PlanCache.evictAll()
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains),
+      s"evictAll left checkpoint blocks behind: $ids")
+    assert(caches.map(lookup(_).as[Long].head()) == Seq(6L, 6L))
+    assert(computes == 4, s"both instances must recompute after evictAll, ran $computes")
+    caches.foreach(_.evictAll())
+  }
 }

@@ -448,4 +448,18 @@ class VectorOpsSpec extends SparkSpecBase {
       assert(math.abs(l2 - l2Ref) < 1e-3, s"label $label l2 $l2 vs $l2Ref")
     }
   }
+
+  test("RecallProbe's persisted residual-ADC curve equals vec_ann_recall_curve") {
+    // the drift guard RECALL.md relies on: the probe's table is the
+    // declared row's numbers, not a re-derivation that can fall behind
+    val probe = RecallProbe.curves(spark, sfDir)
+      .find(_.label.startsWith("end-to-end ADC, residual PQ (persisted"))
+      .getOrElse(fail("RecallProbe has no persisted residual-ADC curve"))
+    def points(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("nprobe"), col("recall_at_3"), col("recall_at_5"))
+        .orderBy(col("nprobe")).collect().toSeq.map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val declared = points(operators.VectorOps.vecAnnRecallCurve.fn(spark, sfDir))
+    assert(declared.map(_._1) == Seq(1L, 3L, 8L))
+    assert(points(probe.rows) == declared)
+  }
 }
