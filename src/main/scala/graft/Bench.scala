@@ -17,20 +17,19 @@ import java.nio.file.{Files, Paths}
 object Bench {
   private val MaxLine = 1500 // leaves ≥400 chars of tail for sbt's epilogue
 
-  /** Steal-defended measurement (r13, VERDICT r12 "Next round" #1): every
-    * driver BENCH sample since r8 has been poisoned by co-tenant
-    * hypervisor steal (r12: 1596.6 of 1897.7 s) and adjudicated by
-    * judge-side forensics. The bench now defends itself: the per-query
+  /** Steal-defended measurement: on a shared host, co-tenant hypervisor
+    * steal can dominate a bench sample (1596.6 of 1897.7 s in one
+    * measured run). The bench defends itself: the per-query
     * loop runs up to [[DefaultPasses]] passes and keeps the per-query MIN
     * across passes — the contention signature is a flat band plus random
     * per-query bursts, so the min across independent passes converges on
     * the engine's own time. Provenance is emitted per pass (wall, steal,
     * per-pass totals) so a reader can see exactly what was kept. Pass 1
     * alone is kept when its steal fraction is below [[QuietStealFrac]]
-    * (the committed-quiet protocol — identical to the pre-r13
-    * methodology on a quiet host), and a new pass never starts once it
-    * would push the bench past [[DefaultBudgetS]] wall seconds (the
-    * driver's patience is finite). Both knobs are env-overridable.
+    * (the committed-quiet protocol — a single pass on a quiet host), and a
+    * new pass never starts once it would push the bench past
+    * [[DefaultBudgetS]] wall seconds (the driver's patience is finite). Both
+    * knobs are env-overridable.
     */
   private val DefaultPasses = 3
   private val DefaultBudgetS = 4200.0
@@ -56,7 +55,7 @@ object Bench {
     val sharedStageS = sharedTextS + sharedVecS + sharedGraphS + sharedWinS
     // (name, seconds, succeeded) — a failed query records its
     // elapsed-until-throw time AND lands in the errors list, so a crash
-    // can never masquerade as a fast clean run (ADVICE round 3)
+    // can never masquerade as a fast clean run
     def runPass(): Seq[(String, Double, Boolean)] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()

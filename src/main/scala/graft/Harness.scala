@@ -40,12 +40,12 @@ object Harness {
     *
     * JVM/codegen/reader warmup first, then EVERY table is touched (footer
     * parse, reader codegen, OS page cache) so first-touch cost never lands
-    * on an arbitrary query's clock — the r5 driver sample showed a
-    * TakeOrderedAndProject top-20 absorbing 5 s of exactly this (VERDICT r5
-    * #2). A full-width max() scan, not a metadata-only count, so the column
-    * pages really get read. The shared stages are separately-clocked line
-    * items (VERDICT r5 #1): per-query figures then measure each query's OWN
-    * plan, not whichever family member happened to run first.
+    * on an arbitrary query's clock (a TakeOrderedAndProject top-20 was
+    * seen absorbing 5 s of exactly this). A full-width max() scan, not a
+    * metadata-only count, so the column pages really get read. The shared
+    * stages are separately-clocked line items: per-query figures then measure
+    * each query's OWN plan, not whichever family member happened to run
+    * first.
     */
   def warm(spark: SparkSession, sfDir: String): (Double, Double, Double, Double) = {
     spark.range(1000).selectExpr("sum(id)").collect()

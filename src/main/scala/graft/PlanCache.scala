@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Plan-keyed memo for expensive shared stages (the near-dup pair table,
   * the connected-component labels, the decontamination shingle frame).
   *
-  * Lifecycle contract (VERDICT r5 #1/#5, ADVICE r5 #1):
+  * Lifecycle contract:
   *
   *  - **Atomic find-or-compute.** The monitor is held across the compute,
   *    so two concurrent callers can never both miss and duplicate the
@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    distinct entry), folds the INPUT-FILE IDENTITY (path, size, mtime
   *    of every file behind the plan's file-source relations) into the
   *    key — so regenerating a fixture at the SAME path invalidates the
-  *    memo instead of serving stale blocks (VERDICT r6 #5) — and skips
+  *    memo instead of serving stale blocks — and skips
   *    entries whose owning SparkContext has stopped, so a session
   *    restart can never resurface dead checkpoint RDDs.
   *  - **Bounded + explicitly released.** At most `capacity` live entries;

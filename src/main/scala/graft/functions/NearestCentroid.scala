@@ -56,7 +56,7 @@ object NearestCentroid {
     * NaN as the LARGEST double, so `ORDER BY csim DESC` ranks a NaN
     * cosine (zero-norm centroid or query) FIRST, and the negated-
     * ascending comparator must agree (plain `Double.compare` on negsim
-    * would rank it last — the r9 ADVICE divergence).
+    * would rank it last, diverging from both engines).
     */
   private[functions] def compareNegsim(a: Double, b: Double): Int = {
     val an = java.lang.Double.isNaN(a)
@@ -86,23 +86,21 @@ private[functions] trait CodebookCache { self: Expression =>
 
   /** Decode (id, vec, aux) structs once per physical buffer. The cache
     * key is the buffer identity PLUS content guards (total byte size and
-    * a rotate-XOR fold of EVERY struct's aux-field bits — r9 ADVICE,
-    * widened to first/last by the r10 review, widened to all m entries
-    * by the r10 advisor): a reused buffer with different contents (a
-    * hypothetical non-broadcast, per-row codebook) re-decodes instead of
-    * silently serving a stale codebook, including one differing only in
-    * interior entries. The fold is O(m) aux reads per row — against the
-    * m × dim multiply-adds the candidate loop then performs, ~1/dim
-    * relative overhead; id/vec fields remain unguarded (aux is derived
-    * from vec at every call site, so a vec change moves aux too). Every
-    * call site passes a BROADCAST one-row-array codebook, whose buffer
-    * is immutable for the lifetime of the partition — the guard exists
-    * to turn a violated assumption into a re-decode, not to be a
-    * cryptographic checksum. On allocation (r11 review): `getStruct`
-    * returns a short-lived row wrapper per entry, but it never escapes
-    * the loop (one `getDouble` and discard), so C2's scalar replacement
-    * elides it in the steady state; even allocated, the fold is O(m)
-    * reads against the candidate loop's O(m·dim) multiply-adds.
+    * a rotate-XOR fold of EVERY struct's aux-field bits): a reused buffer
+    * with different contents (a hypothetical non-broadcast, per-row codebook)
+    * re-decodes instead of silently serving a stale codebook, including one
+    * differing only in interior entries. The fold is O(m) aux reads per row —
+    * against the m × dim multiply-adds the candidate loop then performs,
+    * ~1/dim relative overhead; id/vec fields remain unguarded (aux is derived
+    * from vec at every call site, so a vec change moves aux too). Every call
+    * site passes a BROADCAST one-row-array codebook, whose buffer is
+    * immutable for the lifetime of the partition — the guard exists to turn a
+    * violated assumption into a re-decode, not to be a cryptographic
+    * checksum. On allocation: `getStruct` returns a short-lived
+    * row wrapper per entry, but it never escapes the loop (one `getDouble`
+    * and discard), so C2's scalar replacement elides it in the steady state;
+    * even allocated, the fold is O(m) reads against the candidate loop's
+    * O(m·dim) multiply-adds.
     */
   protected final def load(arr: ArrayData): Unit = {
     val (obj, off, size) = arr match {

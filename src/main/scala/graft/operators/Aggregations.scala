@@ -37,19 +37,18 @@ object Aggregations extends QueryModule {
           count(lit(1)).as("count_order"))
         .orderBy($"l_returnflag", $"l_linestatus")
     },
-    Some("""
+    Some(s"""
       SELECT
         l_returnflag,
         l_linestatus,
         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
+        CAST(${OracleSql.revenue} AS DOUBLE) AS sum_disc_price,
         COUNT(*) AS count_order
       FROM lineitem
       GROUP BY l_returnflag, l_linestatus
       ORDER BY l_returnflag, l_linestatus
-    """.stripMargin.trim))
+    """.trim))
 
   val aggMultiDistinct = Q(
     "agg_multi_distinct",
@@ -68,7 +67,7 @@ object Aggregations extends QueryModule {
         COUNT(DISTINCT o_custkey) AS n_custs,
         COUNT(*) AS n_orders
       FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """.stripMargin.trim))
+    """.trim))
 
   /** min/max/avg/stddev per group, all derived from exact decimal sums
     * (§2.0 rule 1): avg = sum/count as decimal; stddev from sum, sum of
@@ -118,7 +117,7 @@ object Aggregations extends QueryModule {
           COUNT(*) AS n
         FROM lineitem GROUP BY l_returnflag)
       ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   val aggRollup = Q(
     "agg_rollup",
@@ -142,7 +141,7 @@ object Aggregations extends QueryModule {
       FROM customer JOIN nation ON c_nationkey = n_nationkey
       GROUP BY ROLLUP (n_name, c_mktsegment)
       ORDER BY n_name ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST
-    """.stripMargin.trim))
+    """.trim))
 
   val aggCube = Q(
     "agg_cube",
@@ -156,15 +155,14 @@ object Aggregations extends QueryModule {
           count(lit(1)).as("n_lines"))
         .orderBy($"l_returnflag".asc_nulls_first, $"l_linestatus".asc_nulls_first)
     },
-    Some("""
+    Some(s"""
       SELECT l_returnflag, l_linestatus,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        CAST(${OracleSql.revenue} AS DOUBLE) AS revenue,
         COUNT(*) AS n_lines
       FROM lineitem
       GROUP BY CUBE (l_returnflag, l_linestatus)
       ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-    """.stripMargin.trim))
+    """.trim))
 
   val aggGroupingSets = Q(
     "agg_grouping_sets",
@@ -185,7 +183,7 @@ object Aggregations extends QueryModule {
       FROM documents
       GROUP BY GROUPING SETS ((lang), (source), ())
       ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST
-    """.stripMargin.trim))
+    """.trim))
 
   val aggFiltered = Q(
     "agg_filtered",
@@ -208,7 +206,7 @@ object Aggregations extends QueryModule {
         CAST(SUM(CAST(value AS DECIMAL(18,6))) FILTER (WHERE event_type = 'purchase') AS DOUBLE) AS purchase_value,
         COUNT(*) AS n_events
       FROM events GROUP BY user_id ORDER BY user_id
-    """.stripMargin.trim))
+    """.trim))
 
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
 
@@ -233,7 +231,7 @@ object Aggregations extends QueryModule {
         COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
         COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view
       FROM events GROUP BY user_id ORDER BY user_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** HLL++ sketch counts are engine-specific — no DuckDB oracle; the
     * AggSpec property test asserts each estimate is within the configured
@@ -280,7 +278,7 @@ object Aggregations extends QueryModule {
         CAST(CAST(quantile_cont(l_quantity, 0.50) AS DECIMAL(18,6)) AS DOUBLE) AS p50,
         CAST(CAST(quantile_cont(l_quantity, 0.75) AS DECIMAL(18,6)) AS DOUBLE) AS p75
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   /** Sketch-based percentiles (Greenwald–Khanna summaries) — the 100 TB
     * path for `agg_percentiles_exact`: a constant-size summary per group
@@ -328,7 +326,7 @@ object Aggregations extends QueryModule {
         STRING_AGG(n_name, ',' ORDER BY n_name) AS nations,
         COUNT(*) AS n
       FROM nation GROUP BY n_regionkey ORDER BY n_regionkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Correlation/covariance per group WITHOUT the engines' native
     * corr/covar aggregates: those accumulate co-moments in double with
@@ -389,7 +387,7 @@ object Aggregations extends QueryModule {
                   * (CAST(syy AS DOUBLE)/n - (CAST(sy AS DOUBLE)/n) * (CAST(sy AS DOUBLE)/n)))
              AS DECIMAL(18,6)) AS DOUBLE) AS corr
       FROM m ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   /** Fixed-width histogram (data profiling): bucket index is pure
     * integer arithmetic on the value, so it is reproducible on any
@@ -416,7 +414,7 @@ object Aggregations extends QueryModule {
       FROM lineitem
       GROUP BY 1, 2
       ORDER BY l_returnflag, bucket
-    """.stripMargin.trim))
+    """.trim))
 
   /** Boolean aggregates (universal/existential quantifiers per group) +
     * count_if — the assertion-style data-quality checks a pipeline
@@ -440,7 +438,7 @@ object Aggregations extends QueryModule {
         BOOL_OR(l_quantity >= 49) AS any_qty_ge_49,
         COUNT(*) FILTER (WHERE l_tax > 0.05) AS n_high_tax
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   /** Deterministic per-group mode (most frequent value, lowest-value
     * tiebreak): count per (group, value), then argmax via a windowed
@@ -476,7 +474,7 @@ object Aggregations extends QueryModule {
         FROM events GROUP BY user_id, event_type
       ) WHERE rn = 1
       ORDER BY user_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Weekly retention cohorts: users grouped by their first-activity
     * week, activity counted at each week offset — the standard
@@ -515,7 +513,7 @@ object Aggregations extends QueryModule {
       FROM weekly w JOIN cohorts c USING (user_id)
       GROUP BY 1, 2
       ORDER BY 1, 2
-    """.stripMargin.trim))
+    """.trim))
 
   /** Ordered conversion funnel (signup → click → purchase): each step
     * counts users whose step event occurs AT OR AFTER their previous
@@ -565,7 +563,7 @@ object Aggregations extends QueryModule {
       UNION ALL
       SELECT '3_purchase_after_click', (SELECT COUNT(*) FROM s3)
       ORDER BY step
-    """.stripMargin.trim))
+    """.trim))
 
   /** Deterministic argmax/argmin (`max_by`/`min_by` semantics): the
     * event id carrying each type's extreme value. Native `max_by`
@@ -603,7 +601,7 @@ object Aggregations extends QueryModule {
         MAX(CASE WHEN rmin = 1 THEN value END) AS min_value,
         MAX(CASE WHEN rmin = 1 THEN event_id END) AS min_event_id
       FROM r GROUP BY event_type ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** Heavy hitters via count-min sketch: the 100 TB approximate-counting
     * path. One mergeable constant-size sketch is built over the whole
@@ -705,7 +703,7 @@ object Aggregations extends QueryModule {
         CAST(CAST(m3 / POW(m2, 1.5) AS DECIMAL(18,6)) AS DOUBLE) AS skewness,
         CAST(CAST(m4 / (m2 * m2) - 3.0 AS DECIMAL(18,6)) AS DOUBLE) AS excess_kurtosis
       FROM mom ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** Exact weighted means per return flag: extended-price-weighted
     * discount and quantity-weighted price — the rate metric a plain
@@ -748,7 +746,7 @@ object Aggregations extends QueryModule {
         CAST(CAST(CAST(swd AS DOUBLE) / CAST(sw AS DOUBLE) AS DECIMAL(18,6)) AS DOUBLE) AS wavg_discount,
         CAST(CAST(CAST(swp AS DOUBLE) / CAST(sq AS DOUBLE) AS DECIMAL(18,6)) AS DOUBLE) AS wavg_price_by_qty
       FROM s ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   /** Time-weighted average of the metric per user: each observation
     * weighted by the µs-exact duration until the NEXT event (zero-order
@@ -797,7 +795,7 @@ object Aggregations extends QueryModule {
         CAST(CAST(CAST(svdt AS DOUBLE) / CAST(span_us AS DOUBLE)
           AS DECIMAL(18,6)) AS DOUBLE) AS time_weighted_avg
       FROM s ORDER BY user_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** MERGEABLE distinct-count sketches (Apache DataSketches HLL):
     * per-event-type sketches of the user population, then the GLOBAL
@@ -876,15 +874,14 @@ object Aggregations extends QueryModule {
           (covn * covn / (varxn * varyn)).cast(DecimalType(18, 6)).as("r2"))
         .orderBy($"l_returnflag")
     },
-    Some("""
+    Some(s"""
       WITH src AS (
         -- operands widened to 19 digits: DuckDB multiplies DECIMAL(18)s
         -- in int64 and overflows at runtime; 19 forces int128 internals
         -- (the VALUES are identical to Spark's 18-digit operands)
         SELECT l_returnflag,
           CAST(l_quantity AS DECIMAL(19,2)) AS x,
-          CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-               * CAST(1 - l_discount AS DECIMAL(18,2)) AS DECIMAL(19,4)) AS y
+          CAST(${OracleSql.netPrice} AS DECIMAL(19,4)) AS y
         FROM lineitem
       ), m AS (
         SELECT l_returnflag, COUNT(*) AS n,
@@ -912,7 +909,7 @@ object Aggregations extends QueryModule {
         CAST(CAST((sxy - sx * sy / n) * (sxy - sx * sy / n)
           / ((sxx - sx * sx / n) * (syy - sy * sy / n)) AS DECIMAL(18,6)) AS DOUBLE) AS r2
       FROM fit ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   /** Event-type TRANSITION MATRIX — the user-journey Markov view the
     * funnel/retention/streak rows don't cover: per-user consecutive
@@ -963,7 +960,7 @@ object Aggregations extends QueryModule {
           AS DECIMAL(18,6)) AS DOUBLE) AS p_transition
       FROM cells
       ORDER BY from_type, to_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** EXACT distinct counting via Spark 4 bitmap aggregates — the
     * middle ground `agg_multi_distinct` (expand-based exact) and
@@ -1001,7 +998,7 @@ object Aggregations extends QueryModule {
     Some("""
       SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS n_cust
       FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """.stripMargin.trim))
+    """.trim))
 
   /** OHLC time-series DOWNSAMPLING — the bar-chart/telemetry rollup:
     * per (event_type, day) the Open (first value by time), High, Low,
@@ -1053,7 +1050,7 @@ object Aggregations extends QueryModule {
       FROM t
       GROUP BY event_type, day
       ORDER BY event_type, day
-    """.stripMargin.trim))
+    """.trim))
 
   /** RFM customer segmentation — the recency/frequency/monetary
     * scoring every CRM rollup starts from: per-customer aggregates
@@ -1109,7 +1106,7 @@ object Aggregations extends QueryModule {
       FROM rfm
       GROUP BY 1, 2, 3
       ORDER BY 1, 2, 3
-    """.stripMargin.trim))
+    """.trim))
 
   /** Event-SEQUENCE pattern matching (the MATCH_RECOGNIZE shape,
     * composed from primitives): each user's time-ordered journey is
@@ -1158,7 +1155,7 @@ object Aggregations extends QueryModule {
         CAST(SUM(CASE WHEN regexp_matches(journey, 'vp') THEN 1 ELSE 0 END) AS BIGINT) AS view_then_buy_adjacent
       FROM j
       ORDER BY n_users
-    """.stripMargin.trim))
+    """.trim))
 
   /** EQUI-DEPTH histogram (quantile-bucketed — `agg_histogram_fixed`
     * is equi-WIDTH): quartile boundaries computed by exact percentile
@@ -1215,7 +1212,7 @@ object Aggregations extends QueryModule {
       FROM (SELECT CAST(o_totalprice AS DECIMAL(18,2)) AS v FROM orders)
       CROSS JOIN bounds
       GROUP BY 1 ORDER BY 1
-    """.stripMargin.trim))
+    """.trim))
 
   /** GINI COEFFICIENT of per-source volume concentration within each
     * language — the corpus-balance audit a training-data pipeline runs
@@ -1272,7 +1269,7 @@ object Aggregations extends QueryModule {
           / CAST(n_sources * total_chars AS DOUBLE)
         - CAST(n_sources + 1 AS DOUBLE) / CAST(n_sources AS DOUBLE) AS gini
       FROM g ORDER BY lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** Two-sample KOLMOGOROV–SMIRNOV distance (binned) between the
     * `value` distributions of click vs view events — the standard
@@ -1339,7 +1336,7 @@ object Aggregations extends QueryModule {
         CAST(SUM(c1) AS BIGINT) AS n_click,
         CAST(SUM(c2) AS BIGINT) AS n_view
       FROM d
-    """.stripMargin.trim))
+    """.trim))
 
   /** CRAMÉR'S V association audit between two categorical columns
     * (event type × day-of-week) — the "are these independent?" check a
@@ -1414,7 +1411,7 @@ object Aggregations extends QueryModule {
       SELECT n_events, n_types, n_dows, chi2,
         ROUND(SQRT(chi2 / NULLIF(n_events * (LEAST(n_types, n_dows) - 1), 0)), 6) AS cramers_v
       FROM s
-    """.stripMargin.trim))
+    """.trim))
 
   /** Mutual information between event type and day-of-week (SURVEY §2
     * I-sext) — the information-theoretic companion to `agg_cramers_v`:
@@ -1508,7 +1505,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST(mi AS DOUBLE)
               / NULLIF(LEAST(CAST(hx AS DOUBLE), CAST(hy AS DOUBLE)), 0), 6) AS nmi
       FROM tot, hx, hy, mi
-    """.stripMargin.trim))
+    """.trim))
 
   /** Welch's unequal-variance t-test between two customer segments on
     * account balance (SURVEY §2 I-sext) — the A/B-experimentation
@@ -1575,7 +1572,7 @@ object Aggregations extends QueryModule {
               POWER(((CAST(sxx_a AS DOUBLE) - CAST(sx_a AS DOUBLE) * CAST(sx_a AS DOUBLE) / n_a) / (n_a - 1)) / n_a, 2) / (n_a - 1)
             + POWER(((CAST(sxx_b AS DOUBLE) - CAST(sx_b AS DOUBLE) * CAST(sx_b AS DOUBLE) / n_b) / (n_b - 1)) / n_b, 2) / (n_b - 1), 0), 4) AS df_welch
       FROM a, b
-    """.stripMargin.trim))
+    """.trim))
 
   /** Market-basket association rules over within-order brand pairs
     * (SURVEY §2 I-sext): support / confidence / lift — the co-occurrence
@@ -1599,15 +1596,15 @@ object Aggregations extends QueryModule {
       // pair counts in ≤ 1+brands+brands² cells. That bounded cell table
       // is lineage-cut; total/singles/pairs below are filters over it —
       // the fact table is scanned and shuffled exactly once.
-      // NOTE (r14, VERDICT r13 #5 — measured and REJECTED): dictionary-
-      // encoding brands to order-preserving int codes (dict = distinct
-      // part brands ranked by binary order, derived in this job) was
-      // 2.22 s vs 1.83 s at sf0.1 (single-query min-of-5 vs bench min-of-3):
+      // NOTE (measured and REJECTED): dictionary-encoding brands to
+      // order-preserving int codes (dict = distinct part brands ranked by
+      // binary order, derived in this job) was 2.22 s vs 1.83 s at sf0.1
+      // (single-query min-of-5 vs bench min-of-3):
       // the dict derivation (dim distinct + bounded global window) and
       // the extra broadcast builds + decode joins serialize ~5 small
       // jobs ahead of the fact scan, costing more than the narrower
-      // collect_set/explode shuffle saves. Oracle-verified identical
-      // before reverting; the string-keyed one-pass shape below stands.
+      // collect_set/explode shuffle saves, so the string-keyed one-pass
+      // shape below stands.
       val cells = Tables.lineitem(spark, dir)
         .join(broadcast(Tables.part(spark, dir).select($"p_partkey", $"p_brand")),
           $"l_partkey" === $"p_partkey")
@@ -1661,7 +1658,7 @@ object Aggregations extends QueryModule {
       JOIN cb ca ON ca.p_brand = brand_a
       JOIN cb cbb ON cbb.p_brand = brand_b, tot
       ORDER BY lift DESC, brand_a, brand_b LIMIT 15
-    """.stripMargin.trim))
+    """.trim))
 
   /** Funnel time-to-convert: signup → first purchase latency percentiles
     * (SURVEY §2 I-sext) — the latency half next to `agg_funnel_steps`'
@@ -1750,7 +1747,7 @@ object Aggregations extends QueryModule {
       SELECT (SELECT COUNT(*) FROM firsts) AS n_signups,
         n_converters, p25_s, p50_s, p75_s
       FROM q
-    """.stripMargin.trim))
+    """.trim))
 
   /** Last-touch attribution (SURVEY §2 I-sext): each purchase credited
     * to the same user's most recent preceding non-purchase event within
@@ -1815,7 +1812,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST(conversions AS DOUBLE) / total, 6) AS share
       FROM attributed, tot
       ORDER BY channel
-    """.stripMargin.trim))
+    """.trim))
 
   /** Cohort LTV curve (SURVEY §2 I-sext): cumulative revenue per
     * signup-cohort by account age in months — the growth-analytics
@@ -1885,7 +1882,7 @@ object Aggregations extends QueryModule {
           AS ltv_per_customer
       FROM cum JOIN sizes USING (cohort)
       ORDER BY cohort, age
-    """.stripMargin.trim))
+    """.trim))
 
   /** DAU split NEW vs RETURNING (SURVEY §2 I-sext) — the growth-
     * accounting identity every product dashboard leads with: daily
@@ -1930,7 +1927,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST(SUM(CASE WHEN first_day = day THEN 1 ELSE 0 END) AS DOUBLE)
               / COUNT(*), 6) AS new_share
       FROM d GROUP BY day ORDER BY day
-    """.stripMargin.trim))
+    """.trim))
 
   /** Markov stationary distribution of the event-type chain (SURVEY §2
     * I-sext): where the process SETTLES in the long run, next to each
@@ -1966,17 +1963,16 @@ object Aggregations extends QueryModule {
         .agg(count(lit(1)).as("c"))
         .repartition(1)
         .transform(graft.Checkpoints.cut)
-      // DRIVER-SIDE power rounds (r14, VERDICT r13 #2 / guide §5): the
-      // checkpointed cell table is k×(k+1) rows (k = event-type
-      // vocabulary — the same bounded-table assumption the existing
-      // repartition(1) + unrolled 8-round plan already makes), yet the
-      // unrolled join chain cost 12 Spark jobs and a 73 kB plan for a
-      // 5-row answer. The cells are collected once; each round
-      // replicates the Spark expressions operation-for-operation —
-      // row-normalized p = round(c/Σc, 9), contribution round(p·pr, 12)
-      // HALF_UP summed as exact scale-12 decimals, π' = round(Σ, 9),
-      // absorbing states coalesce to 0.0 — and the iterate returns as a
-      // local relation; the empirical-share join below is unchanged.
+      // DRIVER-SIDE power rounds: the checkpointed cell table is k×(k+1)
+      // rows (k = event-type vocabulary — the bounded-table assumption
+      // the repartition(1) above already makes), while an unrolled join
+      // chain costs 12 Spark jobs and a 73 kB plan for a 5-row answer. The
+      // cells are collected once; each round replicates the Spark expressions
+      // operation-for-operation — row-normalized p = round(c/Σc, 9),
+      // contribution round(p·pr, 12) HALF_UP summed as exact scale-12
+      // decimals, π' = round(Σ, 9), absorbing states coalesce to 0.0 — and
+      // the iterate returns as a local relation; the empirical-share join
+      // below is unchanged.
       val cellRows: Seq[(String, String, Long)] = cells.collect().toSeq
         .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getString(1), r.getLong(2)))
       val rowSums = cellRows.filter(_._2 != null).groupBy(_._1)
@@ -2051,7 +2047,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST(n AS DOUBLE) / total, 6) AS empirical_share
       FROM pi8 JOIN emp ON pi8.t = emp.t, tot
       ORDER BY event_type
-      """.stripMargin.trim
+      """.trim
     })
 
   /** Entropy rate of the event-type chain (SURVEY §2 I-sept): the
@@ -2139,7 +2135,7 @@ object Aggregations extends QueryModule {
         ROUND(h_next - h_cond, 6) AS context_gain_bits,
         ROUND(1.0 - h_cond / h_next, 6) AS predictability
       FROM tot, hc, hn
-    """.stripMargin.trim))
+    """.trim))
 
   /** Inter-purchase interval distribution per market segment (SURVEY §2
     * I-sept) — the purchase-cadence number retention/LTV curves imply
@@ -2215,7 +2211,7 @@ object Aggregations extends QueryModule {
         p50_gap_days
       FROM seg JOIN med ON seg.c_mktsegment = med.c_mktsegment
       ORDER BY seg.c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** One-way ANOVA across the five market segments (SURVEY §2 I-sept) —
     * the k-group generalization of `agg_welch_ttest`'s two-group
@@ -2283,7 +2279,7 @@ object Aggregations extends QueryModule {
           / NULLIF((proj - CAST(gsx AS DOUBLE) * CAST(gsx AS DOUBLE) / nn)
             + (gsxx - proj), 0), 6) AS eta_sq
       FROM tot
-    """.stripMargin.trim))
+    """.trim))
 
   /** Poisson bootstrap of the mean order value (SURVEY §2 I-sept) —
     * THE distributed confidence-interval recipe: instead of resampling
@@ -2400,7 +2396,7 @@ object Aggregations extends QueryModule {
         point_mean, boot_se, ci_lo, ci_hi
       FROM reps, point, mstats, ci
       ORDER BY b
-    """.stripMargin.trim))
+    """.trim))
 
   /** Neyman optimal stratified allocation (SURVEY §2 I-sept) — the
     * sampling-budget allocator: given a 1000-row budget across the five
@@ -2492,7 +2488,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST(r.n_sampled AS DOUBLE) / a.n_h, 6) AS realized_rate
       FROM alloc a JOIN realized r USING (c_mktsegment)
       ORDER BY a.c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** Kaplan–Meier survival of the re-order interval (SURVEY §2 I-sept)
     * — "what share of customers have NOT yet re-ordered by day t?", the
@@ -2576,7 +2572,7 @@ object Aggregations extends QueryModule {
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 6) AS ln_surv
       FROM curve
       ORDER BY t_days
-    """.stripMargin.trim))
+    """.trim))
 
   /** Cumulative-gains deciles of customer revenue (SURVEY §2 I-sept) —
     * the 80/20 TABLE behind `agg_gini_concentration`'s single number:
@@ -2651,7 +2647,7 @@ object Aggregations extends QueryModule {
           / CAST(tot AS DOUBLE), 6) AS cum_share
       FROM dec, n
       ORDER BY decile
-    """.stripMargin.trim))
+    """.trim))
 
   /** A/B-test power sizing (SURVEY §2 I-sept) — the minimum detectable
     * effect (MDE) for the AUTOMOBILE-vs-BUILDING account-balance
@@ -2717,7 +2713,7 @@ object Aggregations extends QueryModule {
         n_a * 4 AS n_a_for_half_mde,
         n_b * 4 AS n_b_for_half_mde
       FROM a, b
-    """.stripMargin.trim))
+    """.trim))
 
   /** DAU/MAU stickiness per month (SURVEY §2 I-sept) — the engagement
     * ratio product teams steer by: mean daily-active users over
@@ -2768,7 +2764,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST(sum_dau AS DOUBLE) / n_days / mau, 6) AS stickiness
       FROM dau JOIN mau USING (month)
       ORDER BY month
-    """.stripMargin.trim))
+    """.trim))
 
   /** A/B SAMPLE-RATIO-MISMATCH check (SURVEY §2 I-oct) — the first
     * trust gate every experimentation platform runs BEFORE reading any
@@ -2818,7 +2814,7 @@ object Aggregations extends QueryModule {
         ROUND(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b), 6) > 3.841
           AS srm_flag
       FROM c
-    """.stripMargin.trim))
+    """.trim))
 
   /** REVENUE BRIDGE (price/volume decomposition) per market segment,
     * 1997 vs 1996 (SURVEY §2 I-oct) — the FP&A waterfall that explains
@@ -2883,7 +2879,7 @@ object Aggregations extends QueryModule {
           AS price_mix_effect
       FROM base
       ORDER BY c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** Trimmed and winsorized means per market segment (SURVEY §2 I-non)
     * — the ROBUST location estimators an analytics layer reports beside
@@ -2963,7 +2959,7 @@ object Aggregations extends QueryModule {
         CAST(high_cut AS DOUBLE) AS high_cut
       FROM aggd
       ORDER BY c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** Holm step-down multiple-testing gate over all pairwise segment
     * contrasts (SURVEY §2 I-non) — what an experimentation platform
@@ -3017,7 +3013,7 @@ object Aggregations extends QueryModule {
         .where($"seg_a" < $"seg_b")
         .withColumn("z", z)
         .withColumn("rn", row_number().over(wRank))
-        // fixture-drift guard (ADVICE r8): the ladder is a LITERAL
+        // fixture-drift guard: the ladder is a LITERAL
         // 10-quantile schedule for exactly C(5,2) pairs — a segment
         // fixture change must fail loudly, not NULL-gate significance
         // (non-ANSI element_at past the end returns NULL silently)
@@ -3068,7 +3064,7 @@ object Aggregations extends QueryModule {
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1 AS sig_holm
       FROM gated
       ORDER BY rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** CUPED variance reduction (SURVEY §2 I-non) — the pre-experiment
     * covariate adjustment every mature experimentation platform applies
@@ -3185,7 +3181,7 @@ object Aggregations extends QueryModule {
           AS var_reduction_pct
       FROM m, pooled
       ORDER BY arm
-    """.stripMargin.trim))
+    """.trim))
 
   /** Laspeyres / Paasche / Fisher price indices, 1997 vs 1996 (SURVEY
     * §2 I-non) — the economics-standard decomposition of revenue change
@@ -3288,7 +3284,7 @@ object Aggregations extends QueryModule {
         ROUND(SQRT((CAST(l_num AS DOUBLE) / CAST(l_den AS DOUBLE))
           * (CAST(p_num AS DOUBLE) / CAST(p_den AS DOUBLE))), 6) AS fisher
       FROM sums
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     aggPriceIndexFisher,

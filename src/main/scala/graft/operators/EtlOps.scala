@@ -103,7 +103,7 @@ object EtlOps extends QueryModule {
         COALESCE(n_upd, 0) AS n_updates
       FROM target FULL OUTER JOIN updates ON c_custkey = key
       ORDER BY key
-    """.stripMargin.trim))
+    """.trim))
 
   /** SCD-2 history build: per user, collapse the event stream into
     * validity intervals of the observed event_type — a new version
@@ -134,7 +134,7 @@ object EtlOps extends QueryModule {
       FROM changes
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       ORDER BY user_id, version
-    """.stripMargin.trim))
+    """.trim))
 
   /** Data-quality audit gate: the metric set a daily load asserts
     * before publishing — row counts, key cardinalities, null counts,
@@ -181,7 +181,7 @@ object EtlOps extends QueryModule {
       SELECT 'orders_totalprice_sum',
         CAST((SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) FROM orders) AS DOUBLE)
       ORDER BY metric
-    """.stripMargin.trim))
+    """.trim))
 
   /** Metric anomaly detection for pipeline monitoring: per-event-type
     * z-scores over the `value` metric, emitting only the outliers a
@@ -241,7 +241,7 @@ object EtlOps extends QueryModule {
       )
       SELECT event_id, event_type, value, CAST(z AS DOUBLE) AS z
       FROM z WHERE ABS(z) >= 2.5 ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Time-series gap filling with last-observation-carried-forward:
     * each purchase user's daily revenue on a complete calendar spine
@@ -299,7 +299,7 @@ object EtlOps extends QueryModule {
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS locf_value,
         CAST(CASE WHEN day_value IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS observed
       FROM j ORDER BY user_id, day
-    """.stripMargin.trim))
+    """.trim))
 
   /** Small-file compaction — the table-maintenance job every streaming/
     * incremental sink needs: a fragmented layout (32 writer-partition
@@ -360,7 +360,7 @@ object EtlOps extends QueryModule {
         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
       FROM lineitem
       WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1997-07-01'
-    """.stripMargin.trim))
+    """.trim))
 
   /** CDC changelog between two snapshots of the orders table: the old
     * snapshot is the pre-cutoff view; the new snapshot extends the date
@@ -442,7 +442,7 @@ object EtlOps extends QueryModule {
                - COALESCE(old_price, CAST(0 AS DECIMAL(18,4)))) AS DOUBLE) AS price_delta
       FROM old_snap FULL OUTER JOIN new_snap USING (key)
       GROUP BY 1 ORDER BY action
-    """.stripMargin.trim))
+    """.trim))
 
   /** Idempotent partition backfill: the orders table laid out
     * `partitionBy(o_year)`, then ONE year recomputed (the backfill drops
@@ -474,7 +474,7 @@ object EtlOps extends QueryModule {
         .select($"o_orderkey", $"o_orderstatus", dec($"o_totalprice").as("price"),
           year($"o_orderdate").cast("long").as("o_year"))
       withYear.write.mode("overwrite").partitionBy("o_year").parquet(path)
-      // per-WRITE option, not the session conf (VERDICT r9 #4): a
+      // per-WRITE option, not the session conf: a
       // session-global toggle races any concurrent writer in the same
       // session; the writer-scoped option changes only this write
       withYear
@@ -495,7 +495,7 @@ object EtlOps extends QueryModule {
       WHERE o_orderdate >= '1995-01-01' AND o_orderdate < '1998-01-01'
         AND (year(o_orderdate) <> 1996 OR o_orderstatus <> 'F')
       GROUP BY 1 ORDER BY o_year
-    """.stripMargin.trim))
+    """.trim))
 
   /** Recursive CTE (Spark 4's `WITH RECURSIVE` surface): a month spine
     * generated by SQL recursion from the orders span, left-joined back
@@ -588,7 +588,7 @@ object EtlOps extends QueryModule {
         CAST(COALESCE(revenue, CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS revenue
       FROM months LEFT JOIN monthly ON months.m = monthly.m
       ORDER BY month
-    """.stripMargin.trim))
+    """.trim))
 
   /** Catalog statistics collection (`ANALYZE TABLE … COMPUTE STATISTICS
     * FOR COLUMNS`) — the nightly stats job that feeds the cost-based
@@ -645,7 +645,7 @@ object EtlOps extends QueryModule {
         CAST(MIN(o_totalprice) AS DOUBLE), CAST(MAX(o_totalprice) AS DOUBLE)
       FROM orders
       ORDER BY col_name
-    """.stripMargin.trim))
+    """.trim))
 
   /** Order-independent TABLE CHECKSUM — cross-system migration
     * validation without moving data: each row hashes to a 60-bit value
@@ -709,7 +709,7 @@ object EtlOps extends QueryModule {
           AS BIGINT) AS DECIMAL(38,0))) % CAST('9223372036854775808' AS DECIMAL(38,0)) AS BIGINT)
       FROM supplier
       ORDER BY table_name
-    """.stripMargin.trim))
+    """.trim))
 
   /** Correlated SCALAR subquery (the third correlated-subquery form
     * beside `join_existence_mark`'s EXISTS and
@@ -758,7 +758,7 @@ object EtlOps extends QueryModule {
          FROM orders i WHERE i.o_custkey = o.o_custkey)
       GROUP BY o_orderpriority
       ORDER BY o_orderpriority
-    """.stripMargin.trim))
+    """.trim))
 
   /** Referential-integrity audit over the schema's FK graph, BOTH
     * directions per relation: orphaned children (FK with no parent —
@@ -836,7 +836,7 @@ object EtlOps extends QueryModule {
         CAST(COUNT(CASE WHEN isp THEN 1 END) AS BIGINT) AS n_parent,
         CAST(COUNT(CASE WHEN isp AND nc IS NULL THEN 1 END) AS BIGINT) AS n_unref_parent
       FROM rel GROUP BY relation ORDER BY relation
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-key SKEW planning report — the "should I salt this join?"
     * decision table a shuffle planner consults before co-partitioning
@@ -908,7 +908,7 @@ object EtlOps extends QueryModule {
         UNION ALL SELECT 'skew_max_over_mean',
           CAST(max_n AS DOUBLE) * n_keys / n_rows FROM stats)
       ORDER BY metric
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-feed FRESHNESS watermark report — the staleness dashboard a
     * scheduled pipeline publishes after every load: per event_type, row
@@ -956,7 +956,7 @@ object EtlOps extends QueryModule {
       FROM events, g
       GROUP BY event_type, gmax
       ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** BENFORD first-digit audit over order totals — the fraud /
     * synthetic-data screen: naturally occurring monetary amounts
@@ -1008,7 +1008,7 @@ object EtlOps extends QueryModule {
                   - ROUND(LOG10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 6)), 6) AS abs_dev
       FROM g CROSS JOIN t
       ORDER BY digit
-    """.stripMargin.trim))
+    """.trim))
 
   /** GAPS-AND-ISLANDS over a dense key space — "which ID ranges are
     * missing?": per order status, the maximal runs of consecutive
@@ -1066,7 +1066,7 @@ object EtlOps extends QueryModule {
         CAST(SUM(len) AS BIGINT) AS n_rows,
         MAX(len) AS max_len, MIN(len) AS min_len
       FROM isl GROUP BY st ORDER BY st
-    """.stripMargin.trim))
+    """.trim))
 
   /** POPULATION STABILITY INDEX drift audit — the standard scorecard
     * drift metric (PSI = Σ (p−q)·ln(p/q)) between the first and second
@@ -1157,7 +1157,7 @@ object EtlOps extends QueryModule {
         MAX(nbins) AS n_bins,
         ROUND(CAST(SUM(CAST(term AS DECIMAL(28,12))) AS DOUBLE), 6) AS psi
       FROM terms GROUP BY event_type ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** Seasonality-adjusted anomaly detection (SURVEY §2 I-sext): per
     * (event type, date, hour) counts z-scored against that
@@ -1247,7 +1247,7 @@ object EtlOps extends QueryModule {
           4) IS NOT NULL
       ORDER BY ABS(z) DESC, f.event_type, f.d, f.hr
       LIMIT 15
-    """.stripMargin.trim))
+    """.trim))
 
   /** Ledger reconciliation of the order-header total against its lines
     * (SURVEY §2 I-sept): TPC-H's own invariant o_totalprice =
@@ -1308,7 +1308,7 @@ object EtlOps extends QueryModule {
           - CAST(recomputed AS DECIMAL(38,6)))) AS DECIMAL(18,6)) AS max_abs_diff
       FROM orders LEFT JOIN linesum ON o_orderkey = l_orderkey
       GROUP BY 1 ORDER BY 1
-    """.stripMargin.trim))
+    """.trim))
 
   /** Late-arriving-dimension handling (SURVEY §2 I-oct) — the Kimball
     * inferred-member pattern the SCD rows don't cover: facts land before
@@ -1362,7 +1362,7 @@ object EtlOps extends QueryModule {
           / COUNT(*), 6) AS late_share
       FROM orders JOIN customer ON o_custkey = c_custkey
       GROUP BY c_mktsegment ORDER BY c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** SCD2 APPLY-MERGE (SURVEY §2 I-non) — the WRITE half of the SCD2
     * lifecycle (`etl_scd2_intervals` builds history, `join_pit_scd2`
@@ -1452,7 +1452,7 @@ object EtlOps extends QueryModule {
       FROM changes
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       ORDER BY user_id, version
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(etlScd2ApplyMerge,
     etlReconciliationTotals, etlLateArrivingDimension,

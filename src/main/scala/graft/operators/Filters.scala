@@ -35,7 +35,7 @@ object Filters extends QueryModule {
          OR (o_totalprice BETWEEN 1000 AND 5000 AND o_orderpriority LIKE '1-%'))
         AND o_custkey IS NOT NULL
       ORDER BY o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   val projectCaseCoalesce = Q(
     "project_case_coalesce",
@@ -66,7 +66,7 @@ object Filters extends QueryModule {
         CAST(GREATEST(CAST(o_totalprice AS DECIMAL(18,2)), CAST(100 AS DECIMAL(18,2))) AS DOUBLE) AS floored
       FROM orders
       ORDER BY o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(filterPredicates, projectCaseCoalesce)
 }

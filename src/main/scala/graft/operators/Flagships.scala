@@ -47,10 +47,9 @@ object Flagships extends QueryModule {
         .orderBy($"revenue".desc, $"l_orderkey")
         .limit(10)
     },
-    Some("""
+    Some(s"""
       SELECT l_orderkey, o_orderdate, o_orderpriority,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        CAST(${OracleSql.revenue} AS DOUBLE) AS revenue
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
@@ -60,7 +59,7 @@ object Flagships extends QueryModule {
       GROUP BY l_orderkey, o_orderdate, o_orderpriority
       ORDER BY revenue DESC, l_orderkey
       LIMIT 10
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q5 shape: revenue per nation for one region and year, with
     * the co-location predicate (supplier and customer in the same
@@ -90,10 +89,9 @@ object Flagships extends QueryModule {
           .as("revenue"))
         .orderBy($"revenue".desc, $"n_name")
     },
-    Some("""
+    Some(s"""
       SELECT n_name,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        CAST(${OracleSql.revenue} AS DOUBLE) AS revenue
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
       JOIN supplier ON l_suppkey = s_suppkey
@@ -104,7 +102,7 @@ object Flagships extends QueryModule {
         AND o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
       GROUP BY n_name
       ORDER BY revenue DESC, n_name
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q18 shape: large-volume orders — a HAVING-filtered fact
     * self-aggregation driving the join (the group-then-semi-join
@@ -151,7 +149,7 @@ object Flagships extends QueryModule {
       JOIN customer ON o_custkey = c_custkey
       ORDER BY o_totalprice DESC, o_orderkey
       LIMIT 100
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q10 shape: returned-item reporting — which customers drove
     * the most returned revenue in a quarter. The R-flag and date
@@ -181,10 +179,9 @@ object Flagships extends QueryModule {
         .orderBy($"revenue".desc, $"c_custkey")
         .limit(20)
     },
-    Some("""
+    Some(s"""
       SELECT c_custkey, c_name, c_acctbal, n_name,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        CAST(${OracleSql.revenue} AS DOUBLE) AS revenue
       FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
@@ -194,7 +191,7 @@ object Flagships extends QueryModule {
       GROUP BY c_custkey, c_name, c_acctbal, n_name
       ORDER BY revenue DESC, c_custkey
       LIMIT 20
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q7 shape: bilateral trade volume between two nations by
     * year — supplier nation on the lineitem side, customer nation on
@@ -229,14 +226,13 @@ object Flagships extends QueryModule {
           .as("revenue"))
         .orderBy($"supp_nation", $"cust_nation", $"l_year")
     },
-    Some("""
+    Some(s"""
       SELECT supp_nation, cust_nation, l_year,
         CAST(SUM(volume) AS DOUBLE) AS revenue
       FROM (
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
           CAST(year(l_shipdate) AS BIGINT) AS l_year,
-          CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2)) AS volume
+          ${OracleSql.netPrice} AS volume
         FROM lineitem
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN orders ON l_orderkey = o_orderkey
@@ -248,7 +244,7 @@ object Flagships extends QueryModule {
       )
       GROUP BY supp_nation, cust_nation, l_year
       ORDER BY supp_nation, cust_nation, l_year
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q21 shape: suppliers who were the SOLE late shipper in a
     * finished multi-supplier order — the two correlated existence
@@ -272,12 +268,11 @@ object Flagships extends QueryModule {
       val o = Tables.orders(spark, dir)
         .where($"o_orderstatus" === "F")
         .select($"o_orderkey", $"o_orderdate")
-      // NO broadcast hint on the F-status orders side (r14, VERDICT r13
-      // #1): F-status is ~49% of orders — fact-proportional, so a hard
-      // hint OOMs at cluster scale. AQE's runtime SMJ→BHJ conversion
-      // broadcasts it exactly when the runtime size fits (the q18
-      // calibration), which keeps the sf0.1 win without baking the
-      // local-SF size assumption into the plan.
+      // NO broadcast hint on the F-status orders side: F-status is ~49% of
+      // orders — fact-proportional, so a hard hint OOMs at cluster scale.
+      // AQE's runtime SMJ→BHJ conversion broadcasts it exactly when the
+      // runtime size fits (the q18 calibration), which keeps the sf0.1 win
+      // without baking the local-SF size assumption into the plan.
       val lateLines = Tables.lineitem(spark, dir)
         .select($"l_orderkey", $"l_suppkey", $"l_shipdate")
         .join(o, $"l_orderkey" === $"o_orderkey")
@@ -326,7 +321,7 @@ object Flagships extends QueryModule {
       GROUP BY s_name
       ORDER BY numwait DESC, s_name
       LIMIT 20
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q14 shape: promotion-revenue share for one ship month — the
     * conditional-aggregation ratio (SUM(CASE)/SUM) every marketing
@@ -361,7 +356,7 @@ object Flagships extends QueryModule {
           $"den".cast(DoubleType).as("total_revenue"))
         .orderBy($"promo_pct")
     },
-    Some("""
+    Some(s"""
       SELECT
         CAST(100.0 * CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS DOUBLE) AS promo_pct,
         CAST(num AS DOUBLE) AS promo_revenue,
@@ -369,16 +364,14 @@ object Flagships extends QueryModule {
       FROM (
         SELECT
           SUM(CASE WHEN p_type = 'PROMO'
-              THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                 * CAST(1 - l_discount AS DECIMAL(18,2)) END) AS num,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS den
+              THEN ${OracleSql.netPrice} END) AS num,
+          ${OracleSql.revenue} AS den
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= '1995-09-01' AND l_shipdate < '1995-10-01'
       )
       ORDER BY promo_pct
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q4 shape: order counts per priority for one quarter, where
     * the order has at least one late line (EXISTS with a correlated
@@ -419,7 +412,7 @@ object Flagships extends QueryModule {
             AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
       GROUP BY o_orderpriority
       ORDER BY o_orderpriority
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q12 shape: late-shipment lines for one year classified into
     * high/low order priority per return flag (l_returnflag stands in
@@ -462,7 +455,7 @@ object Flagships extends QueryModule {
         AND l_shipdate > o_orderdate + INTERVAL 60 DAY
       GROUP BY l_returnflag
       ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q13 shape: customer distribution by order count — LEFT
     * OUTER join (customers with zero qualifying orders must survive
@@ -500,7 +493,7 @@ object Flagships extends QueryModule {
         GROUP BY c.c_custkey) t
       GROUP BY c_count
       ORDER BY custdist DESC, c_count DESC
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q17 shape: revenue from small-quantity lines of one brand —
     * each line compared against 0.2× ITS OWN part's average quantity
@@ -546,7 +539,7 @@ object Flagships extends QueryModule {
         AND l_quantity < (
           SELECT 0.2 * (CAST(SUM(l_quantity) AS DOUBLE) / COUNT(*))
           FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q19 shape: revenue under a DISJUNCTIVE multi-attribute
     * predicate (three brand/size/quantity clauses OR'd across the
@@ -582,10 +575,9 @@ object Flagships extends QueryModule {
           count(lit(1)).as("n_lines"),
           sum(rev).cast(DoubleType).as("revenue"))
     },
-    Some("""
+    Some(s"""
       SELECT COUNT(*) AS n_lines,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        CAST(${OracleSql.revenue} AS DOUBLE) AS revenue
       FROM lineitem
       JOIN part ON p_partkey = l_partkey
       WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
@@ -594,7 +586,7 @@ object Flagships extends QueryModule {
              AND l_quantity BETWEEN 10 AND 20)
          OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
              AND l_quantity BETWEEN 20 AND 30)
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q22 shape: high-balance customers gone idle — balance above
     * the global positive-balance average (uncorrelated scalar
@@ -643,7 +635,7 @@ object Flagships extends QueryModule {
           WHERE o.o_custkey = c.c_custkey AND o.o_orderdate >= '2000-01-01')
       GROUP BY c_mktsegment
       ORDER BY c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q6 shape: forecast-revenue-change — the pure scan-aggregate
     * flagship: one year of shipments, a discount band, a quantity cap,
@@ -677,7 +669,7 @@ object Flagships extends QueryModule {
         AND l_discount BETWEEN 0.05 AND 0.07
         AND l_quantity < 24.0
       ORDER BY revenue
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q8 shape: national market share — the widest flagship
     * composition (7 tables): for one part type sold into one region
@@ -722,12 +714,11 @@ object Flagships extends QueryModule {
           $"l_extendedprice", $"l_discount")
         .join(broadcast(p), $"l_partkey" === $"p_partkey")
         .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
-        // NO broadcast hint on the orders-derived side (r14, VERDICT r13
-        // #1): the two-year EUROPE keys are ~6% of orders — still
-        // fact-proportional, so a hard hint is a 100 TB OOM. AQE converts
-        // SMJ→BHJ at runtime when the filtered side measures small (it
-        // does at sf0.1), without committing the plan to a size the
-        // cluster can't hold.
+        // NO broadcast hint on the orders-derived side: the two-year EUROPE
+        // keys are ~6% of orders — still fact-proportional, so a hard hint is
+        // a 100 TB OOM. AQE converts SMJ→BHJ at runtime when the filtered
+        // side measures small (it does at sf0.1), without committing the plan
+        // to a size the cluster can't hold.
         .join(o, $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_year")
         .agg(
@@ -742,7 +733,7 @@ object Flagships extends QueryModule {
           $"total_vol".cast(DoubleType).as("total_revenue"))
         .orderBy($"o_year")
     },
-    Some("""
+    Some(s"""
       SELECT o_year,
         CAST(CAST(nation_vol AS DOUBLE) / CAST(total_vol AS DOUBLE) AS DOUBLE)
           AS mkt_share,
@@ -751,11 +742,9 @@ object Flagships extends QueryModule {
       FROM (
         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
           SUM(CASE WHEN n1.n_name = 'NATION_8'
-              THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                 * CAST(1 - l_discount AS DECIMAL(18,2))
+              THEN ${OracleSql.netPrice}
               ELSE CAST(0 AS DECIMAL(18,2)) END) AS nation_vol,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS total_vol
+          ${OracleSql.revenue} AS total_vol
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -769,7 +758,7 @@ object Flagships extends QueryModule {
         GROUP BY o_year
       )
       ORDER BY o_year
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q15 shape: top supplier — per-supplier quarterly revenue,
     * then the supplier(s) achieving the global maximum (the
@@ -801,11 +790,10 @@ object Flagships extends QueryModule {
           $"total_rev".cast(DoubleType).as("total_revenue"))
         .orderBy($"s_suppkey")
     },
-    Some("""
+    Some(s"""
       WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS total_rev
+          ${OracleSql.revenue} AS total_rev
         FROM lineitem
         WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1996-04-01'
         GROUP BY l_suppkey
@@ -815,7 +803,7 @@ object Flagships extends QueryModule {
       JOIN revenue ON s_suppkey = supplier_no
       WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
       ORDER BY s_suppkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Directed nation-level trade edges (src nation → dst nation, exact
     * decimal revenue weight) — the ONE fact-scale stage every graph-family
@@ -841,6 +829,42 @@ object Flagships extends QueryModule {
       .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("wgt"))
     edgeCache.getOrCompute(fresh)(_.coalesce(1).localCheckpoint(true))
   }
+
+  /** The DuckDB twin of [[nationTradeEdges]], as the CTE `name(src, dst,
+    * wgt)`.
+    */
+  private def tradeEdgesSql(name: String): String = s"""$name AS (
+        SELECT s_nationkey AS src, c_nationkey AS dst,
+          ${OracleSql.revenue} AS wgt
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN customer ON o_custkey = c_custkey
+        GROUP BY 1, 2
+      )"""
+
+  /** The top-50 revenue backbone of the undirected trade graph: `und(a,
+    * b)`, the 50 heaviest nation pairs (a < b, exact decimal weight,
+    * pair-key tiebreak), and `nb(u, w)`, each edge in both directions.
+    */
+  private def tradeBackboneSql: String = s"""und AS (
+        SELECT a, b FROM (
+          SELECT a, b, ROW_NUMBER() OVER (ORDER BY wgt DESC, a, b) AS rk
+          FROM (
+            SELECT LEAST(s_nationkey, c_nationkey) AS a,
+              GREATEST(s_nationkey, c_nationkey) AS b,
+              ${OracleSql.revenue} AS wgt
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN supplier ON l_suppkey = s_suppkey
+            JOIN customer ON o_custkey = c_custkey
+            WHERE s_nationkey <> c_nationkey
+            GROUP BY 1, 2))
+        WHERE rk <= 50
+      ), nb AS (
+        SELECT a AS u, b AS w FROM und
+        UNION ALL SELECT b AS u, a AS w FROM und
+      )"""
 
   /** Bench hook: build (and clock) the shared edge table outside any
     * individual graph query's timer. */
@@ -886,12 +910,12 @@ object Flagships extends QueryModule {
         .select($"src", $"dst",
           ($"wgt".cast(DoubleType) / sum($"wgt").over(w).cast(DoubleType)).as("ratio"))
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
-      // DRIVER-SIDE power iteration (r14, VERDICT r13 #8 / guide §5):
-      // the ratio table is ≤ nation² rows and the iterate ≤ nations rows
-      // BY CONSTRUCTION, yet the unrolled window-over-join lineage cost
-      // 29 Spark jobs (checkpoints, broadcast builds, the mid-point cut)
-      // for a 25-row answer. The out-weight ratios (exact-decimal
-      // division, computed in Spark as before) and node list are
+      // DRIVER-SIDE power iteration: the ratio table is ≤ nation² rows
+      // and the iterate ≤ nations rows BY CONSTRUCTION, while an unrolled
+      // window-over-join lineage costs 29 Spark jobs (checkpoints,
+      // broadcast builds, the mid-point cut) for a 25-row answer. The
+      // out-weight ratios (exact-decimal division, computed in Spark)
+      // and node list are
       // collected ONCE; each round replicates the Spark arithmetic
       // bit-for-bit — contribution = round(pr·ratio, 9) HALF_UP (the
       // round6 recipe at 9 dp), summed as exact scale-9 BigDecimals
@@ -913,7 +937,10 @@ object Flagships extends QueryModule {
         val zero = java.math.BigDecimal.ZERO.setScale(9)
         val s = scala.collection.mutable.Map[Any, java.math.BigDecimal](
           nodeIds.map(n => (n, zero)): _*)
-        for ((src, dst, ratio) <- edgeP)
+        // an edge with an endpoint missing from `nation` carries no rank,
+        // as the oracle's inner join to pr and left join onto the nation
+        // nodes drop it
+        for ((src, dst, ratio) <- edgeP if prP.contains(src) && s.contains(dst))
           s(dst) = s(dst).add(graft.DriverRound.decimal(graft.DriverRound(prP(src) * ratio, 9), 9))
         prP = nodeIds.map(n =>
           (n, graft.DriverRound(0.15 / nnD + 0.85 * (s(n).doubleValue + dm / nnD), 9))).toMap
@@ -951,16 +978,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH edges AS (
-        SELECT s_nationkey AS src, c_nationkey AS dst,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2
-      ), ratio AS (
+      WITH ${tradeEdgesSql("edges")}, ratio AS (
         SELECT src, dst,
           CAST(wgt AS DOUBLE) / CAST(SUM(wgt) OVER (PARTITION BY src) AS DOUBLE) AS ratio
         FROM edges
@@ -972,7 +990,7 @@ object Flagships extends QueryModule {
       SELECT n_nationkey, n_name, ROUND(pr, 6) AS pagerank
       FROM pr8 JOIN nation ON node = n_nationkey
       ORDER BY pagerank DESC, n_nationkey
-      """.stripMargin.trim
+      """.trim
     })
 
   /** Weighted label propagation communities over the nation trade graph
@@ -1017,10 +1035,9 @@ object Flagships extends QueryModule {
         .filter($"rn" <= 3)
         .select($"a", $"b", $"w")
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
-      // DRIVER-SIDE synchronous LPA rounds (r14, VERDICT r13 #8 / guide
-      // §5): the backbone is ≤ 3·nations edges and the label table
-      // ≤ nations rows BY CONSTRUCTION, yet the per-round checkpoint
-      // loop paid 35 Spark jobs for a 25-row answer. The backbone
+      // DRIVER-SIDE synchronous LPA rounds: the backbone is ≤ 3·nations
+      // edges and the label table ≤ nations rows BY CONSTRUCTION, while a
+      // per-round checkpoint loop costs 35 Spark jobs for a 25-row answer. The backbone
       // (aggregated/thinned in Spark, decimal arithmetic unchanged) and
       // the node list are collected ONCE; vote sums add the exact
       // scale-2 decimals (BigDecimal.add — order-independent), the
@@ -1081,16 +1098,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH e0 AS (
-        SELECT s_nationkey AS src, c_nationkey AS dst,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2
-      ), symall AS (
+      WITH ${tradeEdgesSql("e0")}, symall AS (
         SELECT a, b, CAST(SUM(wgt) AS DECIMAL(28,2)) AS w
         FROM (SELECT src AS a, dst AS b, wgt FROM e0
               UNION ALL
@@ -1113,7 +1121,7 @@ object Flagships extends QueryModule {
       JOIN nation ON node = n_nationkey
       JOIN sizes USING (lab)
       ORDER BY n_nationkey
-      """.stripMargin.trim
+      """.trim
     })
 
   /** K-CORE of the nation trade graph (SURVEY §2 I-sext) — the third
@@ -1152,16 +1160,15 @@ object Flagships extends QueryModule {
       val live0 = und.crossJoin(broadcast(thr))
         .where($"w".cast(DoubleType) >= $"t")
         .select($"u", $"v")
-      // DRIVER-SIDE peeling (r14, VERDICT r13 #8 / guide §5): live0 is
-      // ≤ nation² rows BY CONSTRUCTION (nation is the bounded 25-row
-      // dimension), yet the per-round checkpoint loop paid 5 eager jobs +
-      // 4 broadcast builds for pure integer degree-counting — 25 Spark
-      // jobs total for a 15-row answer. The strong-edge table (built and
-      // thresholded in Spark, all decimal arithmetic unchanged) is
-      // collected ONCE; peeling is exact integer set logic replicating
-      // the unionAll/groupBy/count ≥ k/semi-join rounds verbatim; the
-      // survivor pairs return as a LocalTableScan with the identical
-      // schema and the output aggregation below is unchanged Spark.
+      // DRIVER-SIDE peeling: live0 is ≤ nation² rows BY CONSTRUCTION
+      // (nation is the bounded 25-row dimension), while a per-round
+      // checkpoint loop costs 5 eager jobs + 4 broadcast builds for pure
+      // integer degree-counting — 25 Spark jobs for a 15-row answer. The
+      // strong-edge table (built and thresholded in Spark, all decimal
+      // arithmetic unchanged) is collected ONCE; peeling is exact integer set
+      // logic replicating the unionAll/groupBy/count ≥ k/semi-join rounds
+      // verbatim; the survivor pairs return as a LocalTableScan with the
+      // identical schema and the output aggregation below is unchanged Spark.
       val liveSchema = live0.schema
       var liveP: Seq[(Any, Any)] =
         live0.collect().toSeq.map(r => (r.get(0), r.get(1)))
@@ -1197,16 +1204,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH e0 AS (
-        SELECT s_nationkey AS src, c_nationkey AS dst,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2
-      ), und AS (
+      WITH ${tradeEdgesSql("e0")}, und AS (
         SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
           CAST(SUM(wgt) AS DECIMAL(28,2)) AS w
         FROM e0 WHERE src <> dst
@@ -1224,7 +1222,7 @@ object Flagships extends QueryModule {
       )
       JOIN nation ON node = n_nationkey
       ORDER BY n_nationkey
-      """.stripMargin.trim
+      """.trim
     })
 
   /** Adamic–Adar link prediction over the nation trade graph (SURVEY §2
@@ -1286,26 +1284,8 @@ object Flagships extends QueryModule {
         .limit(10)
         .select($"a_name", $"b_name", $"common_neighbors", $"aa_score")
     },
-    Some("""
-      WITH und AS (
-        SELECT a, b FROM (
-          SELECT a, b, ROW_NUMBER() OVER (ORDER BY wgt DESC, a, b) AS rk
-          FROM (
-            SELECT LEAST(s_nationkey, c_nationkey) AS a,
-              GREATEST(s_nationkey, c_nationkey) AS b,
-              SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE s_nationkey <> c_nationkey
-            GROUP BY 1, 2))
-        WHERE rk <= 50
-      ), nb AS (
-        SELECT a AS u, b AS w FROM und
-        UNION ALL SELECT b AS u, a AS w FROM und
-      ), degc AS (
+    Some(s"""
+      WITH $tradeBackboneSql, degc AS (
         SELECT w AS wd, COUNT(*) AS deg FROM nb GROUP BY 1
       ), cand AS (
         SELECT x.u AS pa, y.u AS pb, x.w
@@ -1325,7 +1305,7 @@ object Flagships extends QueryModule {
       JOIN nation nbn ON pb = nbn.n_nationkey
       ORDER BY aa_score DESC, a_name, b_name
       LIMIT 10
-    """.stripMargin.trim))
+    """.trim))
 
   /** Jaccard neighbor-overlap link prediction (SURVEY §2 I-oct) — the
     * degree-normalized companion to [[graphAdamicAdar]]: for every
@@ -1380,26 +1360,8 @@ object Flagships extends QueryModule {
         .select($"a_name", $"b_name", $"common_neighbors",
           $"union_neighbors", $"jaccard")
     },
-    Some("""
-      WITH und AS (
-        SELECT a, b FROM (
-          SELECT a, b, ROW_NUMBER() OVER (ORDER BY wgt DESC, a, b) AS rk
-          FROM (
-            SELECT LEAST(s_nationkey, c_nationkey) AS a,
-              GREATEST(s_nationkey, c_nationkey) AS b,
-              SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE s_nationkey <> c_nationkey
-            GROUP BY 1, 2))
-        WHERE rk <= 50
-      ), nb AS (
-        SELECT a AS u, b AS w FROM und
-        UNION ALL SELECT b AS u, a AS w FROM und
-      ), degc AS (
+    Some(s"""
+      WITH $tradeBackboneSql, degc AS (
         SELECT u AS ud, COUNT(*) AS deg FROM nb GROUP BY 1
       ), common AS (
         SELECT x.u AS pa, y.u AS pb, COUNT(*) AS common_neighbors
@@ -1419,7 +1381,7 @@ object Flagships extends QueryModule {
       JOIN nation nbn ON pb = nbn.n_nationkey
       ORDER BY jaccard DESC, a_name, b_name
       LIMIT 10
-    """.stripMargin.trim))
+    """.trim))
 
   /** Degree assortativity of the nation trade graph (SURVEY §2 I-sept)
     * — Newman's r: the Pearson correlation of the degrees at the two
@@ -1472,26 +1434,8 @@ object Flagships extends QueryModule {
             sqrt(($"n_ends" * $"syy" - $"sy" * $"sy").cast(DoubleType)), lit(0.0d)),
           6).as("assortativity"))
     },
-    Some("""
-      WITH und AS (
-        SELECT a, b FROM (
-          SELECT a, b, ROW_NUMBER() OVER (ORDER BY wgt DESC, a, b) AS rk
-          FROM (
-            SELECT LEAST(s_nationkey, c_nationkey) AS a,
-              GREATEST(s_nationkey, c_nationkey) AS b,
-              SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE s_nationkey <> c_nationkey
-            GROUP BY 1, 2))
-        WHERE rk <= 50
-      ), nb AS (
-        SELECT a AS u, b AS w FROM und
-        UNION ALL SELECT b AS u, a AS w FROM und
-      ), degc AS (
+    Some(s"""
+      WITH $tradeBackboneSql, degc AS (
         SELECT u, COUNT(*) AS deg FROM nb GROUP BY 1
       ), ends AS (
         SELECT dx.deg AS dx, dy.deg AS dy
@@ -1509,7 +1453,7 @@ object Flagships extends QueryModule {
           / NULLIF(SQRT(CAST(n_ends * sxx - sx * sx AS DOUBLE))
             * SQRT(CAST(n_ends * syy - sy * sy AS DOUBLE)), 0.0), 6) AS assortativity
       FROM m
-    """.stripMargin.trim))
+    """.trim))
 
   /** HARMONIC CLOSENESS centrality on the trade backbone (SURVEY §2
     * I-oct) — the reachability-efficiency member of the centrality
@@ -1545,14 +1489,13 @@ object Flagships extends QueryModule {
         .withColumn("rn", row_number().over(wTop))
         .filter($"rn" <= 3)
         .select($"a", $"b")
-      // DRIVER-SIDE min-plus rounds (r14, VERDICT r13 #8 / guide §5):
-      // the backbone is ≤ 3·nations directed edges BY CONSTRUCTION, yet
-      // the per-round checkpoint loop paid 32 Spark jobs for a 25-row
-      // answer. The backbone (aggregated and thinned in Spark, decimal
-      // arithmetic unchanged) is collected ONCE; each round replicates
-      // the carry ∪ (extend, nxt ≠ u) → min-per-(u,v) relaxation with
-      // exact integer hop counts; the distance table returns as a
-      // LocalTableScan and the harmonic aggregation below is unchanged.
+      // DRIVER-SIDE min-plus rounds: the backbone is ≤ 3·nations
+      // directed edges BY CONSTRUCTION, while a per-round checkpoint loop
+      // costs 32 Spark jobs for a 25-row answer. The backbone (aggregated and
+      // thinned in Spark, decimal arithmetic unchanged) is collected ONCE;
+      // each round replicates the carry ∪ (extend, nxt ≠ u) → min-per-(u,v)
+      // relaxation with exact integer hop counts; the distance table returns
+      // as a LocalTableScan and the harmonic aggregation below is unchanged.
       val symP: Seq[(Any, Any)] = sym.collect().toSeq.map(r => (r.get(0), r.get(1)))
       val adj = symP.groupBy(_._1)
       var distP: Map[(Any, Any), Long] =
@@ -1599,16 +1542,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH e0 AS (
-        SELECT s_nationkey AS src, c_nationkey AS dst,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2
-      ), symall AS (
+      WITH ${tradeEdgesSql("e0")}, symall AS (
         SELECT a, b, CAST(SUM(wgt) AS DECIMAL(28,2)) AS w
         FROM (SELECT src AS a, dst AS b, wgt FROM e0
               UNION ALL
@@ -1632,7 +1566,7 @@ object Flagships extends QueryModule {
       FROM d4 JOIN nation ON u = n_nationkey
       GROUP BY u, n_name
       ORDER BY n_nationkey
-      """.stripMargin.trim
+      """.trim
     })
 
   /** Bottleneck (maximin) path strength on the trade backbone (SURVEY
@@ -1670,11 +1604,10 @@ object Flagships extends QueryModule {
         .withColumn("rn", row_number().over(wTop))
         .filter($"rn" <= 3)
         .select($"a", $"b", $"w")
-      // DRIVER-SIDE (max, min) relaxation (r14, VERDICT r13 #8 / guide
-      // §5): the backbone is ≤ 3·nations edges BY CONSTRUCTION and the
-      // semiring only COMPARES the exact decimal weights (never adds),
-      // so the per-round checkpoint loop's 32 Spark jobs were pure
-      // scheduling. The backbone (aggregated/thinned in Spark, decimal
+      // DRIVER-SIDE (max, min) relaxation: the backbone is ≤ 3·nations
+      // edges BY CONSTRUCTION and the semiring only COMPARES the exact
+      // decimal weights (never adds), so a per-round checkpoint loop's 32
+      // Spark jobs would be pure scheduling. The backbone (aggregated/thinned in Spark, decimal
       // arithmetic unchanged) is collected ONCE; each round replicates
       // carry ∪ (extend with least) → max-per-(u,v) using
       // BigDecimal.compareTo (Spark decimal ordering); the relax table
@@ -1735,16 +1668,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH e0 AS (
-        SELECT s_nationkey AS src, c_nationkey AS dst,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS wgt
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2
-      ), symall AS (
+      WITH ${tradeEdgesSql("e0")}, symall AS (
         SELECT a, b, CAST(SUM(wgt) AS DECIMAL(18,4)) AS w
         FROM (SELECT src AS a, dst AS b, wgt FROM e0
               UNION ALL
@@ -1779,7 +1703,7 @@ object Flagships extends QueryModule {
       JOIN nation na ON u = na.n_nationkey
       JOIN nation nb ON best_peer = nb.n_nationkey
       ORDER BY n_nationkey
-      """.stripMargin.trim
+      """.trim
     })
 
   /** TPC-H Q2 shape adapted to this corpus (SURVEY §2 I-tredec; there
@@ -1851,7 +1775,7 @@ object Flagships extends QueryModule {
       WHERE unit_cost = (SELECT MIN(unit_cost) FROM scoped i
                          WHERE i.p_partkey = scoped.p_partkey)
       ORDER BY p_partkey, s_name
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q9 shape adapted (SURVEY §2 I-tredec; supply cost :=
     * p_retailprice / 2, a deterministic function of the part): profit
@@ -1906,7 +1830,7 @@ object Flagships extends QueryModule {
         WHERE p.p_name LIKE '%red%'
         GROUP BY 1, 2)
       ORDER BY n_name, o_year DESC
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q11 shape adapted (SURVEY §2 I-tredec): per-part traded
     * value (exact decimal revenue sum) restricted to ASIA suppliers,
@@ -1939,11 +1863,10 @@ object Flagships extends QueryModule {
         .select($"l_partkey".as("p_partkey"), $"v".cast(DoubleType).as("value"))
         .orderBy($"value".desc, $"p_partkey")
     },
-    Some("""
+    Some(s"""
       WITH vals AS (
         SELECT l_partkey,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS v
+          ${OracleSql.revenue} AS v
         FROM lineitem l
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         JOIN nation n ON s.s_nationkey = n.n_nationkey
@@ -1955,7 +1878,7 @@ object Flagships extends QueryModule {
       FROM vals
       WHERE CAST(v AS DOUBLE) > (SELECT CAST(SUM(v) AS DOUBLE) FROM vals) * 0.001
       ORDER BY value DESC, p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q16 shape adapted (SURVEY §2 I-tredec): distinct supplier
     * count per (brand, type, size ≤ 15) from the observed DISTINCT
@@ -1996,7 +1919,7 @@ object Flagships extends QueryModule {
         AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
       GROUP BY 1, 2, 3
       ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-    """.stripMargin.trim))
+    """.trim))
 
   /** TPC-H Q20 shape adapted (SURVEY §2 I-tredec): suppliers whose
     * 1997 shipped quantity of any 'small%' part exceeded 60 units —
@@ -2037,7 +1960,7 @@ object Flagships extends QueryModule {
         GROUP BY l_suppkey, l_partkey
         HAVING SUM(l_quantity) > 60)
       ORDER BY s_suppkey
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(graphHarmonicCloseness, graphBottleneckPaths,
     tpchQ2MinCostSupplier, tpchQ9ProductProfit, tpchQ11ImportantStock,

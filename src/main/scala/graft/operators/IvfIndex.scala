@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index — the cross-JOB production serve path the
-  * in-session PlanCache cannot cover (VERDICT r7 #6). The build step
+  * in-session PlanCache cannot cover. The build step
   * trains the shared ⌈√n⌉-cell Lloyd codebook ([[VectorOps.ivfCodebook]]),
   * assigns every corpus vector to its nearest cell (6 dp rounded cosine,
   * cell-id tiebreak — the `pipeline_semantic_dedup` recipe), and writes
@@ -86,7 +86,7 @@ object IvfIndex {
       Seq(idx -> bucketedIndexDdl, cb -> cellCodebookDdl)) {
       val e = VectorOps.withNorm(spark, dir)
       val cents = VectorOps.ivfCodebook(e)
-      // row-local nearest-cell assignment (VERDICT r8 #1): zero Exchange
+      // row-local nearest-cell assignment: zero Exchange
       // between the corpus scan and the cell column; the only shuffle in
       // the build is the cell-hash repartition the bucketed write needs
       writeCells(VectorOps.withNearestCells(e, cents, keep = 1, rounded = true)
@@ -115,7 +115,7 @@ object IvfIndex {
     * noop marker must also verify the aliased data still exists — if
     * gen-1 was removed externally while the marker persisted, the check
     * must fail back to a rebuild instead of registering catalog entries
-    * over missing files (r10 ADVICE).
+    * over missing files.
     */
   private def gen1IndexOnDisk(spark: SparkSession, dir: String): Boolean =
     artifactsFresh(spark, fingerprint(dir, IvfAlgo),
@@ -130,9 +130,9 @@ object IvfIndex {
 
   /** Generation-g freshness key: the PARENT generation's fingerprint
     * plus this link's split-recipe segment — recursive, so invalidation
-    * propagates down the chain STRUCTURALLY (r11 ADVICE: with only the
-    * gen-1 fingerprint embedded, a recipe change at link g−1 would have
-    * left a stale generation g reading as fresh if the split ever took
+    * propagates down the chain STRUCTURALLY (with only the gen-1
+    * fingerprint embedded, a recipe change at link g−1 would leave a
+    * stale generation g reading as fresh if the split ever took
     * input-dependent parameters). g = 2 reproduces the round-10 key
     * exactly (`<gen1 fp>|gen2-split2means`); g ≥ 3 embeds every link
     * below it.
@@ -144,7 +144,7 @@ object IvfIndex {
   /** Is generation g current on disk? Generation 1 = the base
     * artifacts; a gen-g noop marker counts only while the generation it
     * aliases is itself current (resolved recursively — a noop chain
-    * bottoms out at generation 1, r10 ADVICE).
+    * bottoms out at generation 1).
     */
   private def genOnDisk(spark: SparkSession, dir: String, g: Int): Boolean =
     if (g <= 1) gen1IndexOnDisk(spark, dir)
@@ -172,7 +172,7 @@ object IvfIndex {
   private def pqrG2Fingerprint(dir: String): String =
     s"${fingerprint(dir, PqrAlgo)}|gen2-split2means"
 
-  /** APPLY half of the IVF rebalance lifecycle (VERDICT r9 #2): consume
+  /** APPLY half of the IVF rebalance lifecycle: consume
     * the [[VectorOps.splitPlan]] 2-means split of every overloaded cell
     * and write INDEX GENERATION 2 — the same two artifacts as [[ensure]],
     * next generation:
@@ -207,8 +207,8 @@ object IvfIndex {
   def ensureRebalanced(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     ensureGen(spark, dir, 2)
 
-  /** Generation-g find-or-build (r10 VERDICT #3 — the ordinal is now a
-    * parameter, so the nightly chain stats → plan → apply → refresh →
+  /** Generation-g find-or-build (the ordinal is a parameter, so the
+    * nightly chain stats → plan → apply → refresh →
     * serve keeps running): generation g derives from generation g−1 by
     * one [[VectorOps.splitPlan]] apply, recursively ensuring the chain
     * below it. All the [[ensureRebalanced]] contracts hold per link —
@@ -226,14 +226,14 @@ object IvfIndex {
     // as metadata only, over the previous generation's serving files —
     // at 100 TB a verbatim index copy for a no-op nightly apply would be
     // the bug. A noop marker is only as fresh as the chain it aliases
-    // (r10 ADVICE): aliased data gone → rebuild, don't register nothing.
+    // — aliased data gone → rebuild, don't register nothing.
     val noop = readMarker(spark, idxT) == s"$fp|noop" && genOnDisk(spark, dir, gen - 1)
     lazy val prev = ensureGen(spark, dir, gen - 1)
     lazy val plan = VectorOps.splitPlan(spark, prev._1, prev._2)
     // the split-cell list is bounded by the overload predicate (a
     // handful of rows, kilobytes) — collect it once and derive the
     // deterministic id map driver-side instead of ranking through an
-    // unpartitioned window (r10 ADVICE: Window.orderBy with no
+    // unpartitioned window (Window.orderBy with no
     // partition spec funnels through a single partition and warns on
     // every apply)
     lazy val splitCells = plan._1.select(col("cell")).collect().map(_.getLong(0)).sorted
@@ -326,7 +326,7 @@ object IvfIndex {
     val specs = Seq(codesT -> bucketedCodesDdl)
     // same no-op contract as [[ensureRebalanced]]: an empty refresh set
     // publishes the gen-2 codes as metadata over the gen-1 codes files —
-    // which must therefore still exist for the marker to count (r10 ADVICE)
+    // which must therefore still exist for the marker to count
     val noop = readMarker(spark, codesT) == s"$fp|noop" && gen1PqrOnDisk(spark, dir)
     lazy val cb1 = ensure(spark, dir)._2
     lazy val gen2 = ensureRebalanced(spark, dir)
@@ -388,7 +388,7 @@ object IvfIndex {
   }
 
   // ------------------------------------------------------------------
-  // Incremental ADD (VERDICT r10 #2) — the most common production index
+  // Incremental ADD — the most common production index
   // operation: a NEW batch of vectors joins the persisted index without
   // a rebuild. The ShingleRegistry discipline applied to vectors: a
   // BASE index generation is built over yesterday's corpus (here the
@@ -536,7 +536,7 @@ object IvfIndex {
   def appTombstoneTable(dir: String): String = s"graft_ivf_tombstones_app_${tag(dir)}"
 
   /** Append-family tombstone fingerprint — derives from the APPENDED
-    * generation's fingerprint (the r11-ADVICE chaining discipline): a
+    * generation's fingerprint (the chaining discipline): a
     * change to the append recipe invalidates the tombstones built over
     * its assignment automatically.
     */
@@ -653,7 +653,7 @@ object IvfIndex {
   def compactedIndexTable(dir: String): String = s"graft_ivf_index_c1_${tag(dir)}"
 
   /** Tombstone-family freshness key — the compacted generation derives
-    * its own key FROM this one (r11 ADVICE): the compacted data is a
+    * its own key FROM this one: the compacted data is a
     * function of the tombstone table, so a delete-rule or tombstone-fp
     * bump must invalidate the compacted generation automatically, not
     * by remembering to bump a parallel suffix.
@@ -688,7 +688,7 @@ object IvfIndex {
   def ensureCompacted(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val name = compactedIndexTable(dir)
     val (idx, cb) = ensure(spark, dir)
-    // keyed off the TOMBSTONE fingerprint (r11 ADVICE): the compacted
+    // keyed off the TOMBSTONE fingerprint: the compacted
     // rows derive from the tombstone table, so any tombstone-recipe
     // bump invalidates the compacted generation structurally
     findOrBuild(spark, s"${tombstoneFingerprint(dir)}|compact1",
@@ -701,8 +701,8 @@ object IvfIndex {
   }
 
   // ------------------------------------------------------------------
-  // BUILD-TIME MULTI-ASSIGNMENT family (r12, VERDICT r11 #2): the IVF
-  // geometry itself was the binding recall bound — cell-stage recall@3
+  // BUILD-TIME MULTI-ASSIGNMENT family: the IVF geometry itself is the
+  // binding recall bound — cell-stage recall@3
   // = 0.640 at 17.8% of the corpus scanned (RECALL.md). The FAISS
   // multi-assignment discipline raises the ceiling WITHOUT touching
   // ADC: train a FINER codebook ([[SpillFactor]]·⌈√n⌉ cells) and store
@@ -820,10 +820,10 @@ object IvfIndex {
     findOrBuild(spark, fingerprint(dir, PqAlgo),
       Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
       val (idx, _) = ensure(spark, dir)
-      // trained per-subspace codebook (VERDICT r8 #2): stride-sampled
-      // seeds + fixed Lloyd rounds instead of first-4-vector slices
+      // trained per-subspace codebook: stride-sampled seeds + fixed Lloyd
+      // rounds
       val cents = VectorOps.trainPqCodebook(idx)
-      // row-local encode (VERDICT r8 #1): all 4 codes per vector come
+      // row-local encode: all 4 codes per vector come
       // out of one map pass over the bucketed index — no per-(vector,
       // subspace) window Exchange, no re-pack aggregation
       writeCells(VectorOps.withPqStructs(idx, cents)
@@ -837,7 +837,7 @@ object IvfIndex {
   def pqrCodesTable(dir: String): String = s"graft_pqr_codes_${tag(dir)}"
   def pqrCodebookTable(dir: String): String = s"graft_pqr_codebook_${tag(dir)}"
 
-  /** Find-or-build the persisted RESIDUAL-PQ artifacts (VERDICT r9 #1)
+  /** Find-or-build the persisted RESIDUAL-PQ artifacts
     * — the FAISS-standard IVF-PQ layout: codes quantize
     * emb − centroid(cell) ([[VectorOps.withResiduals]]), not the raw
     * vector, so the per-subspace budget encodes within-cell offsets.

@@ -50,7 +50,7 @@ object Joins extends QueryModule {
       JOIN region ON n_regionkey = r_regionkey
       GROUP BY r_name, n_name
       ORDER BY r_name, n_name
-    """.stripMargin.trim))
+    """.trim))
 
   val joinSortmergeFacts = Q(
     "join_sortmerge_facts",
@@ -65,15 +65,14 @@ object Joins extends QueryModule {
           count(lit(1)).as("n_lines"))
         .orderBy($"o_orderpriority")
     },
-    Some("""
+    Some(s"""
       SELECT o_orderpriority,
-        CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        CAST(${OracleSql.revenue} AS DOUBLE) AS revenue,
         COUNT(*) AS n_lines
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY o_orderpriority
       ORDER BY o_orderpriority
-    """.stripMargin.trim))
+    """.trim))
 
   val joinLeftOuter = Q(
     "join_left_outer",
@@ -95,7 +94,7 @@ object Joins extends QueryModule {
       LEFT JOIN (SELECT o_custkey, COUNT(*) AS cnt FROM orders GROUP BY o_custkey) o
         ON c_custkey = o_custkey
       ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   val joinFullOuter = Q(
     "join_full_outer",
@@ -120,7 +119,7 @@ object Joins extends QueryModule {
       FULL OUTER JOIN (SELECT c_nationkey, COUNT(*) AS n_customers FROM customer GROUP BY c_nationkey) c
         ON s_nationkey = c_nationkey
       ORDER BY nationkey
-    """.stripMargin.trim))
+    """.trim))
 
   val joinLeftSemi = Q(
     "join_left_semi",
@@ -137,7 +136,7 @@ object Joins extends QueryModule {
       FROM customer
       WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
       ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   val joinLeftAnti = Q(
     "join_left_anti",
@@ -154,7 +153,7 @@ object Joins extends QueryModule {
       FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
       ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   val joinThetaBand = Q(
     "join_theta_band",
@@ -176,7 +175,7 @@ object Joins extends QueryModule {
         CAST(CAST(s_acctbal - c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal_diff
       FROM supplier JOIN customer ON ABS(s_acctbal - c_acctbal) < 10
       ORDER BY s_suppkey, c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** The 100 TB band-join formulation (the scale path this module's
     * header promises beside `join_theta_band`'s broadcast loop):
@@ -214,7 +213,7 @@ object Joins extends QueryModule {
         CAST(CAST(s_acctbal - c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal_diff
       FROM supplier JOIN customer ON ABS(s_acctbal - c_acctbal) < 10
       ORDER BY s_suppkey, c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   val joinRangeInterval = Q(
     "join_range_interval",
@@ -247,7 +246,7 @@ object Joins extends QueryModule {
         ON e1.user_id = e2.user_id
        AND e2.ts > e1.ts AND e2.ts <= e1.ts + INTERVAL 5 MINUTE
       ORDER BY user_id, id1, id2
-    """.stripMargin.trim))
+    """.trim))
 
   /** As-of join via tagged-union window: one shuffle by user_id, no join.
     * Clicks sort before purchases at equal ts ('click' < 'purchase'
@@ -278,7 +277,7 @@ object Joins extends QueryModule {
       ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         ON p.user_id = c.user_id AND p.ts >= c.ts
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** As-of with tolerance (pandas merge_asof's `tolerance`): the nearest
     * preceding click only counts if it is within 30 minutes of the
@@ -313,7 +312,7 @@ object Joins extends QueryModule {
       ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         ON p.user_id = c.user_id AND p.ts >= c.ts
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Skew-salted equi-join as a declared, oracle-verified row: the big
     * side (events) gets a uniform salt, the small side (customer) is
@@ -346,7 +345,7 @@ object Joins extends QueryModule {
       FROM events JOIN customer ON user_id = c_custkey
       GROUP BY c_mktsegment
       ORDER BY c_mktsegment
-    """.stripMargin.trim))
+    """.trim))
 
   /** Bucketed co-located join declared as a row: both sides are written
     * `bucketBy(8, key).sortBy(key)` — the write-once / join-many-times
@@ -363,7 +362,7 @@ object Joins extends QueryModule {
       import spark.implicits._
       // Per-invocation unique table names: a fixed name raced when two
       // invocations ran concurrently in one session — each would drop and
-      // recreate the other's table mid-join (ADVICE round 3).
+      // recreate the other's table mid-join.
       val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
       val liTable = s"graft_li_bucketed_$runId"
       val ordTable = s"graft_orders_bucketed_$runId"
@@ -427,7 +426,7 @@ object Joins extends QueryModule {
       WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
       GROUP BY o_orderpriority
       ORDER BY o_orderpriority
-    """.stripMargin.trim))
+    """.trim))
 
   /** Correlated LATERAL top-k through the SQL surface: per customer, the
     * two highest-value orders via a correlated subquery with ORDER BY +
@@ -457,7 +456,7 @@ object Joins extends QueryModule {
         WHERE o_custkey = c.c_custkey
         ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
       ORDER BY c_custkey, o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Dynamic partition pruning declared as a row: the fact side is laid
     * out partitioned by ship year (the lakehouse layout for a date-keyed
@@ -518,7 +517,7 @@ object Joins extends QueryModule {
         SELECT YEAR(o_orderdate) FROM orders
         WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1998-01-01')
       GROUP BY 1 ORDER BY 1
-    """.stripMargin.trim))
+    """.trim))
 
   /** Null-safe equi-join (`<=>` / IS NOT DISTINCT FROM): NULL keys
     * MATCH each other instead of silently dropping — the semantics a
@@ -553,7 +552,7 @@ object Joins extends QueryModule {
       JOIN (SELECT NULLIF(n_nationkey, 3) AS nk, n_name FROM nation) n
         ON ck IS NOT DISTINCT FROM nk
       GROUP BY n_name ORDER BY n_name
-    """.stripMargin.trim))
+    """.trim))
 
   /** Null-aware anti join — `NOT IN (subquery)` three-valued-logic
     * semantics, which `join_left_anti` (NOT EXISTS) deliberately does
@@ -601,7 +600,7 @@ object Joins extends QueryModule {
       WHERE c_nationkey NOT IN
         (SELECT NULLIF(n_nationkey, 3) FROM nation WHERE n_nationkey < 10)
       ORDER BY variant
-    """.stripMargin.trim))
+    """.trim))
 
   /** NEAREST-direction as-of join, completing the as-of family
     * (backward `join_asof`, forward `join_asof_forward`, toleranced
@@ -662,7 +661,7 @@ object Joins extends QueryModule {
           FROM events WHERE event_type IN ('click', 'purchase')))
       WHERE event_type = 'purchase'
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** RIGHT outer join — the build-side-preserving mirror completing the
     * join-type matrix (left/full/semi/anti are declared above): the
@@ -699,7 +698,7 @@ object Joins extends QueryModule {
         FROM events WHERE event_type = 'purchase' GROUP BY user_id
       ) p RIGHT JOIN customer ON user_id = c_custkey
       ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** FORWARD as-of join: each purchase attributed to the NEXT click at
     * or after it (in sort order) — the mirror of `join_asof`'s backward
@@ -736,7 +735,7 @@ object Joins extends QueryModule {
         FROM events WHERE event_type IN ('click', 'purchase'))
       WHERE event_type = 'purchase'
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Controlled cartesian: the complete (region × event_type) matrix
     * enumerated with an explicit `crossJoin` of two tiny DISTINCT sets,
@@ -789,7 +788,7 @@ object Joins extends QueryModule {
       CROSS JOIN (SELECT DISTINCT event_type FROM events) t
       LEFT JOIN observed o ON r.r_regionkey = o.r_key AND t.event_type = o.e_type
       ORDER BY r.r_name, t.event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** ExistenceJoin — the join type the semi/anti rows DON'T cover:
     * EXISTS / NOT EXISTS used in the PROJECTION (as boolean marks)
@@ -852,7 +851,7 @@ object Joins extends QueryModule {
       )
       GROUP BY 1, 2, 3
       ORDER BY 1, 2, 3
-    """.stripMargin.trim))
+    """.trim))
 
   /** INTERVAL-OVERLAP join (ranges × ranges — `join_range_interval`
     * covers only point-in-range): urgent-order fulfillment windows
@@ -920,7 +919,7 @@ object Joins extends QueryModule {
         COUNT(DISTINCT b_id) AS n_returns
       FROM a JOIN b ON a_start <= b_end AND b_start <= a_end
       GROUP BY 1 ORDER BY 1
-    """.stripMargin.trim))
+    """.trim))
 
   /** POINT-IN-TIME join against the SCD2 dimension (SURVEY §2 I-oct) —
     * the query the `etl_scd2_intervals` history exists FOR: each fact
@@ -997,7 +996,7 @@ object Joins extends QueryModule {
         AND (v.valid_to IS NULL OR e.ts < v.valid_to)
       WHERE e.event_type = 'purchase'
       ORDER BY e.event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Point-in-time SCD2 join from the PERSISTED BUCKETED layout (SURVEY
     * §2 I-non) — the storage half of the SCD2 trio ([[Scd2Dim]]): same
@@ -1054,7 +1053,7 @@ object Joins extends QueryModule {
         AND (v.valid_to IS NULL OR e.ts < v.valid_to)
       WHERE e.event_type = 'purchase'
       ORDER BY e.event_id
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(joinPitScd2, joinPitScd2Bucketed,
     joinBroadcastDims, joinSortmergeFacts, joinLeftOuter, joinFullOuter,
@@ -1116,14 +1115,13 @@ object Joins extends QueryModule {
         spark.catalog.dropTempView(lv)
       }
     },
-    Some("""
+    Some(s"""
       SELECT s_nationkey, COUNT(*) AS n_lines,
-        CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-             * CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(28,4)) AS DOUBLE) AS revenue
+        CAST(CAST(${OracleSql.revenue} AS DECIMAL(28,4)) AS DOUBLE) AS revenue
       FROM lineitem
       JOIN (SELECT s_suppkey, s_nationkey FROM supplier WHERE s_acctbal > 5000) s
         ON l_suppkey = s_suppkey
       GROUP BY s_nationkey
       ORDER BY s_nationkey
-    """.stripMargin.trim))
+    """.trim))
 }

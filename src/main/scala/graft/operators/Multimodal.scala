@@ -39,7 +39,7 @@ object Multimodal extends QueryModule {
           sha256(text) AS sha
         FROM documents)
       ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Frame sampling declared relationally: frame count is derived from
     * the sha fingerprint (so the DuckDB oracle can reproduce it — the
@@ -70,7 +70,7 @@ object Multimodal extends QueryModule {
                + ascii(substr(sha256(text), 6, 1))) % 120 AS frames
         FROM documents)
       ORDER BY doc_id, frame_idx
-    """.stripMargin.trim))
+    """.trim))
 
   /** Chunk manifest for parallel decode (SURVEY §2 I-sept): shard each
     * opaque payload into fixed 1 KiB byte ranges with per-chunk SHA-256
@@ -124,7 +124,7 @@ object Multimodal extends QueryModule {
         FROM (SELECT doc_id, text, octet_length(encode(text)) AS n_bytes
               FROM documents))
       ORDER BY doc_id, chunk_idx
-    """.stripMargin.trim))
+    """.trim))
 
   /** Aspect-ratio bucket statistics (SURVEY §2 I-sept) — the
     * variable-resolution BATCH-SHAPING step of an image training
@@ -196,7 +196,7 @@ object Multimodal extends QueryModule {
               64 + (ascii(substr(sha, 3, 1)) * 256 + ascii(substr(sha, 4, 1))) % 416 AS height
             FROM (SELECT doc_id, sha256(text) AS sha FROM documents))))
       GROUP BY bucket ORDER BY bucket
-    """.stripMargin.trim))
+    """.trim))
 
   /** TRAINING-SHARD PACKING (SURVEY §2 I-tredec) — the WebDataset/
     * tar-shard step an image/video pipeline runs after curation: media
@@ -256,7 +256,7 @@ object Multimodal extends QueryModule {
       FROM packed
       GROUP BY lang, shard_idx
       ORDER BY lang, shard_idx
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(multimodalBinaryMeta, multimodalFrameSample,
     multimodalChunkManifest, multimodalAspectBucketStats,

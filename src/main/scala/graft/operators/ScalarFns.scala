@@ -60,7 +60,7 @@ object ScalarFns extends QueryModule {
         STARTS_WITH(p_name, 'w') AS starts_w,
         LPAD(p_brand, 10, '*') AS brand_pad
       FROM part ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   val fnDatetimeSuite = Q(
     "fn_datetime_suite",
@@ -91,7 +91,7 @@ object ScalarFns extends QueryModule {
         CAST(ts AS DATE) + 7 AS plus7,
         DATEDIFF('day', DATE '2024-01-01', CAST(ts AS DATE)) AS days_since
       FROM events ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   val fnMathSuite = Q(
     "fn_math_suite",
@@ -126,7 +126,7 @@ object ScalarFns extends QueryModule {
         CAST(p_size % 7 AS BIGINT) AS size_mod,
         CAST(SIGN(p_retailprice - 1000.0) AS BIGINT) AS price_sign
       FROM part ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Array outputs are serialized to comma-joined fixed-scale decimal
     * strings: the driver's pandas comparator cannot sort list cells
@@ -166,7 +166,7 @@ object ScalarFns extends QueryModule {
         array_to_string(list_transform(embedding,
           x -> CAST(CAST(CAST(x AS DOUBLE) AS DECIMAL(18,3)) AS VARCHAR)), ',') AS rounded3
       FROM embeddings ORDER BY vec_id
-    """.stripMargin.trim))
+    """.trim))
 
   val fnExplodePosexplode = Q(
     "fn_explode_posexplode",
@@ -192,7 +192,7 @@ object ScalarFns extends QueryModule {
             FROM embeddings)
       GROUP BY pos
       ORDER BY pos
-    """.stripMargin.trim))
+    """.trim))
 
   val fnMapOps = Q(
     "fn_map_ops",
@@ -218,7 +218,7 @@ object ScalarFns extends QueryModule {
         CAST(CAST(json_extract_string(props, '$.k') AS BIGINT) AS VARCHAR) AS vs,
         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
       FROM events ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   val fnJsonExtract = Q(
     "fn_json_extract",
@@ -237,7 +237,7 @@ object ScalarFns extends QueryModule {
         COUNT(json_extract_string(props, '$.k')) AS n_k,
         MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
       FROM events GROUP BY event_type ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** Regex surface: extract / replace-all / match-test / count. Patterns
     * stay within the POSIX-class subset where Java regex (Spark) and RE2
@@ -270,7 +270,7 @@ object ScalarFns extends QueryModule {
         REGEXP_MATCHES(p_type, '^PROMO') AS is_promo,
         CAST(LEN(REGEXP_EXTRACT_ALL(p_name, '[a-z]+')) AS BIGINT) AS n_words
       FROM part ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Bitwise + conditional surface over integer keys: AND/OR/XOR, shifts,
     * popcount, least/greatest (decimal-guarded), nullif. All outputs cast
@@ -308,7 +308,7 @@ object ScalarFns extends QueryModule {
         GREATEST(CAST(l_linenumber AS BIGINT), 3) AS ln_floor3,
         NULLIF(CAST(l_linenumber AS BIGINT) % 2, 0) AS odd_or_null
       FROM lineitem ORDER BY l_orderkey, l_linenumber
-    """.stripMargin.trim))
+    """.trim))
 
   /** Cryptographic/content hashes for fingerprinting and dedup keys:
     * md5 and sha256 are the cross-engine pair (DuckDB lacks sha1/crc32;
@@ -335,7 +335,7 @@ object ScalarFns extends QueryModule {
         LOWER(SHA256(c_name)) AS sha256_hex,
         SUBSTRING(LOWER(MD5(CONCAT_WS('|', c_name, c_mktsegment))), 1, 8) AS key8
       FROM customer ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** URL decomposition (`parse_url`) — the web-corpus provenance step a
     * crawl pipeline runs on every document. URLs are synthesized from
@@ -377,7 +377,7 @@ object ScalarFns extends QueryModule {
         MIN('/docs/' || CAST(doc_id AS VARCHAR)) AS first_path
       FROM documents
       GROUP BY 1, 2, 3 ORDER BY host, q_lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** Error-safe arithmetic: `try_divide`/`try_mod` null out division by
     * zero and `try_add` nulls out BIGINT overflow instead of throwing —
@@ -412,7 +412,7 @@ object ScalarFns extends QueryModule {
           ELSE 9223372036854775800 + CAST(l_quantity AS BIGINT) END AS safe_add
       FROM lineitem
       ORDER BY l_orderkey, l_linenumber
-    """.stripMargin.trim))
+    """.trim))
 
   /** Null-preserving explode (`posexplode_outer`): a doc whose filtered
     * token array is EMPTY keeps its row with NULL pos/token, where plain
@@ -449,7 +449,7 @@ object ScalarFns extends QueryModule {
         COALESCE(e.tok, '(no-long-token)') AS tok
       FROM documents d LEFT JOIN exploded e USING (doc_id)
       ORDER BY doc_id, pos
-    """.stripMargin.trim))
+    """.trim))
 
   /** Spark 4 VARIANT — the binary semi-structured type (open-variant
     * encoding, the shredded-storage path): JSON text parsed ONCE into a
@@ -488,7 +488,7 @@ object ScalarFns extends QueryModule {
         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
         TRUE AS malformed_quarantined
       FROM events ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Higher-order LAMBDA functions over arrays — the codegen-friendly
     * per-row compute path that replaces scalar UDFs (`fn_array_ops`
@@ -540,7 +540,7 @@ object ScalarFns extends QueryModule {
           i -> CAST(CAST(emb[CAST(i AS INT)] AS DECIMAL(18,3)) AS VARCHAR) || ':' ||
             CAST(CAST(emb[CAST(5 - i AS INT)] AS DECIMAL(18,3)) AS VARCHAR)), ',') AS zip_head
       FROM e ORDER BY vec_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Map HIGHER-ORDER functions — the lambda family over MapType that
     * `fn_map_ops` (keys/values/element_at) and `fn_hof_lambda_suite`
@@ -591,7 +591,7 @@ object ScalarFns extends QueryModule {
           ',fee=5.00,tip=2.50' AS merged,
         'BASE=' || CAST(base AS VARCHAR) || ',FEE=5.00' AS upper_keys
       FROM b ORDER BY o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     fnStringSuite, fnDatetimeSuite, fnMathSuite, fnArrayOps,

@@ -31,14 +31,13 @@ object SetOps extends QueryModule {
         .orderBy($"revenue".desc, $"l_orderkey", $"l_linenumber")
         .limit(20)
     },
-    Some("""
+    Some(s"""
       SELECT l_orderkey, l_linenumber,
-        CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-          * CAST(1 - l_discount AS DECIMAL(18,2)) AS DOUBLE) AS revenue
+        CAST(${OracleSql.netPrice} AS DOUBLE) AS revenue
       FROM lineitem
       ORDER BY revenue DESC, l_orderkey, l_linenumber
       LIMIT 20
-    """.stripMargin.trim))
+    """.trim))
 
   val setUnionAll = Q(
     "set_union_all",
@@ -56,7 +55,7 @@ object SetOps extends QueryModule {
       UNION ALL
       SELECT event_id, user_id, event_type FROM events WHERE event_type = 'view'
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   val setUnionDistinct = Q(
     "set_union_distinct",
@@ -72,7 +71,7 @@ object SetOps extends QueryModule {
       UNION
       SELECT s_nationkey AS nationkey FROM supplier
       ORDER BY nationkey
-    """.stripMargin.trim))
+    """.trim))
 
   val setIntersect = Q(
     "set_intersect",
@@ -87,7 +86,7 @@ object SetOps extends QueryModule {
       INTERSECT
       SELECT s_nationkey AS nationkey FROM supplier
       ORDER BY nationkey
-    """.stripMargin.trim))
+    """.trim))
 
   val setExcept = Q(
     "set_except",
@@ -102,7 +101,7 @@ object SetOps extends QueryModule {
       EXCEPT
       SELECT s_nationkey AS nationkey FROM supplier
       ORDER BY nationkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Deterministic keyed dedup: keep the minimum event_id per
     * (user_id, event_type), carrying that row's timestamp via min_by
@@ -127,7 +126,7 @@ object SetOps extends QueryModule {
       FROM events
       GROUP BY user_id, event_type
       ORDER BY user_id, event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** Multiset (bag) semantics of intersect/except: duplicates count —
     * m∩n occurrences survive intersectAll, m−n survive exceptAll. The
@@ -170,7 +169,7 @@ object SetOps extends QueryModule {
         COALESCE(n_except_all, 0) AS n_except_all
       FROM ia FULL OUTER JOIN ea ON ia.nationkey = ea.nationkey
       ORDER BY nationkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Wide→long reshape via the native unpivot operator (the inverse of
     * `agg_pivot`): ids stay, three measure columns melt into
@@ -209,7 +208,7 @@ object SetOps extends QueryModule {
         SELECT l_orderkey, l_linenumber, 'discount',
           CAST(l_discount AS DECIMAL(18,2)) FROM lineitem)
       ORDER BY l_orderkey, l_linenumber, metric
-    """.stripMargin.trim))
+    """.trim))
 
   /** Name-based union with missing-column padding (`unionByName`,
     * `allowMissingColumns=true`): the schema-drift-tolerant append —
@@ -247,7 +246,7 @@ object SetOps extends QueryModule {
         FROM lineitem
       )
       GROUP BY 1 ORDER BY 1
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     sortMultikeyLimit, setUnionAll, setUnionDistinct, setIntersect,

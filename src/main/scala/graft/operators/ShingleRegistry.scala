@@ -97,7 +97,7 @@ object ShingleRegistry {
   }
 
   // ------------------------------------------------------------------
-  // RETRACTION lifecycle (r12, VERDICT r11 #4 — right-to-be-forgotten):
+  // RETRACTION lifecycle (right-to-be-forgotten):
   // a source withdrawn for licensing must leave the registry AS IF IT
   // WAS NEVER INGESTED, without rewriting history. The min-batch
   // registry alone cannot answer "who else ships this shingle?", so the

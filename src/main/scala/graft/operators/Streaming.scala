@@ -32,7 +32,7 @@ object Streaming extends QueryModule {
       FROM events
       GROUP BY 1, 2, 3
       ORDER BY w_start, event_type
-    """.stripMargin.trim))
+    """.trim))
 
   val streamSlidingAgg = Q(
     "stream_sliding_agg",
@@ -53,7 +53,7 @@ object Streaming extends QueryModule {
         FROM events)
       GROUP BY w_start
       ORDER BY w_start
-    """.stripMargin.trim))
+    """.trim))
 
   val streamSessionWindow = Q(
     "stream_session_window",
@@ -86,7 +86,7 @@ object Streaming extends QueryModule {
       FROM sessions
       GROUP BY user_id, session_id
       ORDER BY user_id, s_start
-    """.stripMargin.trim))
+    """.trim))
 
   val streamDedupWatermark = Q(
     "stream_dedup_watermark",
@@ -100,7 +100,7 @@ object Streaming extends QueryModule {
     Some("""
       SELECT event_id, user_id, event_type
       FROM events ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Batch-window formulation of the per-user "events since last signup"
     * counter; the flatMapGroupsWithState streaming implementation
@@ -138,7 +138,7 @@ object Streaming extends QueryModule {
       SELECT event_id, user_id,
         CASE WHEN grp = 0 THEN rn ELSE rn - 1 END AS events_since_signup
       FROM r ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   val streamStaticJoin = Q(
     "stream_static_join",
@@ -152,7 +152,7 @@ object Streaming extends QueryModule {
       SELECT event_id, user_id, event_type, c_name, c_mktsegment
       FROM events JOIN customer ON user_id = c_custkey
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Stream-stream interval join declared through its batch equivalent:
     * run-to-completion with no late data makes the watermarked interval
@@ -179,7 +179,7 @@ object Streaming extends QueryModule {
         AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
       WHERE p.event_type = 'purchase' AND c.event_type = 'click'
       ORDER BY purchase_id, click_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Last-write-wins keyed upsert state: each user's latest event —
     * streamed, a plain keyed agg in update mode whose per-microbatch
@@ -205,7 +205,7 @@ object Streaming extends QueryModule {
       SELECT user_id, ts AS last_ts, event_id AS last_event_id,
         event_type AS last_type, value AS last_value
       FROM r WHERE rn = 1 ORDER BY user_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Stream-stream LEFT OUTER interval join — attribution that keeps
     * the unconverted clicks (SURVEY §2.1.I-quater). Declared through
@@ -233,7 +233,7 @@ object Streaming extends QueryModule {
         ON c.user_id = p.user_id
         AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
       ORDER BY click_id, purchase_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Windowed DISTINCT-USER counting (DAU/HAU) — the chained-stateful
     * shape (event-time dedup → windowed agg) real metrics pipelines
@@ -261,7 +261,7 @@ object Streaming extends QueryModule {
       FROM events
       GROUP BY 1, 2
       ORDER BY w_start
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-user session summaries via transformWithState + EVENT-TIME
     * TIMERS (SURVEY §2.1.H) — the Spark-4 arbitrary-state-v2 row the
@@ -332,7 +332,7 @@ object Streaming extends QueryModule {
       FROM sessions
       GROUP BY user_id, session_seq
       ORDER BY user_id, session_seq
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-event trailing-3 behavior trail via transformWithState
     * LIST state (SURVEY §2 I-oct) — the "last N actions" feature a
@@ -366,7 +366,7 @@ object Streaming extends QueryModule {
           ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS trail
       FROM events
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Idempotent foreachBatch FILE SINK (SURVEY §2 I-non) — the
     * streaming family's missing durability row: every other stream row
@@ -432,9 +432,9 @@ object Streaming extends QueryModule {
         CAST(SUM(n_events) AS BIGINT) AS n_events,
         CAST(CAST(SUM(sum_value) AS DECIMAL(18,6)) AS DOUBLE) AS sum_value
       FROM hourly GROUP BY 1 ORDER BY w_date
-    """.stripMargin.trim))
+    """.trim))
 
-  /** STREAMING INCREMENTAL DEDUP (VERDICT r8 #4) — the composition the
+  /** STREAMING INCREMENTAL DEDUP — the composition the
     * registry rows exist for, as one declared pipeline: the NEW-DOC
     * STREAM (ingest batch 7 arriving in micro-batches) is gated against
     * the PERSISTED shingle registry of batches 0..6
@@ -468,26 +468,8 @@ object Streaming extends QueryModule {
           .filter(ShingleRegistry.batchOf($"doc_id") === 7), reg)
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), b AS (
-        SELECT doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
-        FROM documents
-      ), reg AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, ${OracleSql.docBatches}, reg AS (
         SELECT DISTINCT s.shingle
         FROM sh s JOIN b USING (doc_id) WHERE b.batch < 7
       ), cur AS (
@@ -505,7 +487,7 @@ object Streaming extends QueryModule {
       FROM cur c LEFT JOIN reg r USING (shingle)
       GROUP BY c.doc_id
       ORDER BY c.doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** STREAMING ANN SERVE GATE (round-9 second wave) — online vector
     * retrieval as a stream row: arriving query embeddings are answered
@@ -537,25 +519,10 @@ object Streaming extends QueryModule {
       StreamTransforms.annServeGate(q, idx, ivfCb).orderBy($"q_id")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), ${VectorOps.ivfCodebookSql}, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${VectorOps.ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id < 50)
         WHERE cr <= 2
       ), cand AS (
@@ -580,9 +547,9 @@ object Streaming extends QueryModule {
         COALESCE(b.cos, -1.0) AS best_cos
       FROM gated g LEFT JOIN best b USING (q_id)
       ORDER BY g.q_id
-    """.stripMargin.trim))
+    """.trim))
 
-  /** STREAMING VECTOR INGEST (SURVEY §2 I-tredec, VERDICT r11 #3) —
+  /** STREAMING VECTOR INGEST (SURVEY §2 I-tredec) —
     * the vector analogue of `stream_incremental_dedup`, closing the
     * text/vector symmetry: arriving embedding micro-batches (the
     * deterministic ≡ 3 mod 10 batch, [[graft.operators.IvfIndex.isAppendBatch]])
@@ -624,12 +591,7 @@ object Streaming extends QueryModule {
         .orderBy($"vec_id")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), ${graft.operators.VectorOps.baseAppendLifecycleSql}, cand AS (
+      WITH ${OracleSql.embeddings()}, ${graft.operators.VectorOps.baseAppendLifecycleSql}, cand AS (
         SELECT b.vec_id, b.cell, m.vec_id AS c_id,
           ROUND(list_inner_product(m.emb, b.emb) / (m.nrm * b.nrm), 6) AS cos
         FROM (SELECT * FROM ball WHERE vec_id % 10 = 3) b
@@ -649,7 +611,7 @@ object Streaming extends QueryModule {
         b.c_id AS best_vec_id, b.cos AS best_cos
       FROM gated g JOIN best b USING (vec_id)
       ORDER BY g.vec_id
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     streamTumblingAgg, streamSlidingAgg, streamSessionWindow,

@@ -32,7 +32,7 @@ object TextOps extends QueryModule {
 
   /** Source-tagged distinct shingles, cached across invocations AND
     * across the exact/bloom decontamination twins. Built FROM the
-    * unified [[cachedShingles]] relation (VERDICT r6 #6) — the
+    * unified [[cachedShingles]] relation — the
     * decontamination twins, the Jaccard pair table and the minhash
     * banding all share ONE tokenization of the corpus; this layer only
     * adds the broadcast source tag.
@@ -53,10 +53,9 @@ object TextOps extends QueryModule {
         posexplode(split(lower(col("text")), " ")).as(Seq("pos", "tok")))
       .filter(col("tok") =!= "")
 
-  /** The ONE memoized positional-token relation (r14, VERDICT r13 #4):
-    * ~14 declared text rows (wordcount, vocab, zipf, heaps, rake, langid,
-    * tf-idf, perplexity, …) each re-ran the tokenize explode over the
-    * corpus — the same relation every time. Same shared-stage tier as
+  /** The ONE memoized positional-token relation: ~14 declared text rows
+    * (wordcount, vocab, zipf, heaps, rake, langid, tf-idf, perplexity, …)
+    * read the same tokenize explode of the corpus. Same shared-stage tier as
     * [[cachedShingles]]: corpus-scale, built once per corpus on the
     * Bench shared-text clock, released by [[graft.PlanCache.evictAll]].
     * The three corpus-scale memos (tokens, token sets, shingles) persist
@@ -81,12 +80,12 @@ object TextOps extends QueryModule {
         expr("array_distinct(filter(split(lower(text), ' '), t -> t != ''))")
           .as("toks"))) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
 
-  /** Distinct 3-gram word shingles per doc — ROW-LOCAL formulation
-    * (VERDICT r6 #6): empty tokens filtered with order kept, a 3-window
-    * slid over the token array, duplicates dropped within the row. Zero
-    * shuffles — the earlier posexplode + doc-keyed lead-window + global
-    * distinct spent three exchanges deriving what is a pure per-row
-    * function of `text`. Identical output: `lead` over position-ordered
+  /** Distinct 3-gram word shingles per doc — ROW-LOCAL formulation:
+    * empty tokens filtered with order kept, a 3-window slid over the
+    * token array, duplicates dropped within the row. Zero shuffles — a
+    * posexplode + doc-keyed lead-window + global distinct would spend
+    * three exchanges deriving what is a pure per-row function of
+    * `text`. Identical output: `lead` over position-ordered
     * non-empty tokens IS consecutive-triple formation, and per-doc
     * `array_distinct` IS the (doc_id, shingle) distinct.
     */
@@ -128,7 +127,7 @@ object TextOps extends QueryModule {
         CAST(CAST(SUM(n_chars) * 1.0 / COUNT(*) AS DECIMAL(18,4)) AS DOUBLE) AS avg_chars,
         CAST(SUM(LENGTH(TRIM(text))) AS BIGINT) AS sum_trim_len
       FROM documents GROUP BY lang ORDER BY lang
-    """.stripMargin.trim))
+    """.trim))
 
   val textTokenizeWordcount = Q(
     "text_tokenize_wordcount",
@@ -145,7 +144,7 @@ object TextOps extends QueryModule {
       FROM (SELECT UNNEST(string_split(lower(text), ' ')) AS tok FROM documents)
       WHERE tok <> ''
       GROUP BY tok ORDER BY cnt DESC, tok LIMIT 50
-    """.stripMargin.trim))
+    """.trim))
 
   val textNgramBigrams = Q(
     "text_ngram_bigrams",
@@ -156,9 +155,9 @@ object TextOps extends QueryModule {
       // the position-ordered non-empty token array are a pure per-row
       // function of `text` (the shingles() lesson, n=2) — identical
       // output, one fact exchange (the lang/bigram agg) instead of two
-      // no repartition before the row-local transform (r14, VERDICT r13
-      // #2): the doc-keyed shuffle moved the whole text column for a
-      // computation that needs no co-location — parquet splits already
+      // no repartition before the row-local transform: a doc-keyed
+      // shuffle would move the whole text column for a computation that
+      // needs no co-location — parquet splits already
       // provide scan parallelism, and the lang/bigram agg below is the
       // only exchange the plan needs
       val bigrams = Tables.documents(spark, dir)
@@ -195,7 +194,7 @@ object TextOps extends QueryModule {
           GROUP BY lang, bigram))
       WHERE rn <= 10
       ORDER BY lang, rn
-    """.stripMargin.trim))
+    """.trim))
 
   val textExactDedup = Q(
     "text_exact_dedup",
@@ -213,7 +212,7 @@ object TextOps extends QueryModule {
         COUNT(*) AS group_size
       FROM documents
       GROUP BY 1 ORDER BY text_hash
-    """.stripMargin.trim))
+    """.trim))
 
   /** Exact 3-gram-shingle Jaccard near-dup pairs (threshold 0.5). The
     * shingle equi-join makes candidate generation linear in total
@@ -240,7 +239,7 @@ object TextOps extends QueryModule {
 
   /** The ONE memoized shingle relation every consumer shares — the
     * Jaccard pair table, the minhash banding, the decontamination tag
-    * join (VERDICT r6 #6). Capacity 2 covers the full-corpus and
+    * join. Capacity 2 covers the full-corpus and
     * en-filtered (pipeline_near_dedup) variants.
     */
   def cachedShingles(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -284,6 +283,26 @@ object TextOps extends QueryModule {
       .filter(col("jaccard") >= 0.5)
   }
 
+  /** The DuckDB twins of [[interPairs]] and [[jaccardPairs]] over an `sh`
+    * CTE ([[OracleSql.shingles]]): `sizes(doc_id, n)` and `inter(d1, d2,
+    * i)`, then `pairs(d1, d2)`, the pairs at Jaccard ≥ 0.5.
+    */
+  private def shingleInterSql: String =
+    """sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+      inter AS (
+        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
+        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
+        GROUP BY 1, 2
+      )"""
+
+  private def jaccardPairsSql: String = s"""$shingleInterSql, pairs AS (
+        SELECT d1, d2
+        FROM inter
+        JOIN sizes za ON d1 = za.doc_id
+        JOIN sizes zb ON d2 = zb.doc_id
+        WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
+      )"""
+
   /** Last computed full-corpus near-dup pair frame — the shared input
     * of the graph family (simpairs / connected components / triangles).
     */
@@ -309,25 +328,8 @@ object TextOps extends QueryModule {
       import spark.implicits._
       corpusJaccardPairs(spark, dir).orderBy($"d1", $"d2")
     },
-    Some("""
-      WITH tok AS (
-        -- positions are renumbered AFTER dropping empty tokens so the
-        -- pos+1 adjacency joins below match Spark's lead-over-filtered
-        -- semantics even on texts with consecutive spaces
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+    Some(s"""
+      WITH ${OracleSql.shingles()}, sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
       inter AS (
         SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
         FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
@@ -339,13 +341,13 @@ object TextOps extends QueryModule {
       JOIN sizes zb ON d2 = zb.doc_id
       WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
       ORDER BY d1, d2
-    """.stripMargin.trim))
+    """.trim))
 
   /** MinHash + LSH banding candidate pairs — the scalable near-dup path.
     * 48 hash fns from ONE md5 per shingle (the universal-hash family
     * h_i = (a + i·b) mod p over the digest's two leading 32-bit words —
-    * md5-derived since r11 per VERDICT r10 #4 so the whole chain
-    * mirrors in DuckDB; one crypto hash per shingle, not 48), 16 bands
+    * md5-derived so the whole chain mirrors in DuckDB; one crypto hash
+    * per shingle, not 48), 16 bands
     * × 3 rows, band bucket = md5 of the joined member signatures. Fully
     * oracled; TextOpsSpec additionally asserts recall ≥ 0.9 against
     * text_jaccard_simpairs ground truth at j ≥ 0.6.
@@ -354,9 +356,8 @@ object TextOps extends QueryModule {
     val numHashes = 48
     val rowsPerBand = 3
     val sh = cachedShingles(docs)
-    // 48 hash functions from ONE md5 per shingle (VERDICT r10 #4 made
-    // the hashing md5-derived so DuckDB mirrors it; the r11 review's
-    // bench showed 48 md5 calls per shingle cost ~2× the row, so the
+    // 48 hash functions from ONE md5 per shingle (md5-derived so DuckDB
+    // mirrors it; 48 md5 calls per shingle measured ~2× the row, so the
     // family is the textbook universal-hash construction instead:
     // h_i = (a + i·b) mod p with a/b the digest's two leading 32-bit
     // words and p = 4294967291 the largest 32-bit prime — exact integer
@@ -364,7 +365,7 @@ object TextOps extends QueryModule {
     // shingle)
     // the digest is projected ONCE and ha/hb slice it, so the
     // one-md5-per-shingle cost is structural — not dependent on the
-    // optimizer recognizing two md5(shingle) subexpressions (r11 ADVICE)
+    // optimizer recognizing two md5(shingle) subexpressions
     val shh = sh
       .select(col("doc_id"), md5(col("shingle")).as("dig"))
       .select(col("doc_id"),
@@ -399,25 +400,11 @@ object TextOps extends QueryModule {
       import spark.implicits._
       minhashCandidates(Tables.documents(spark, dir)).orderBy($"d1", $"d2")
     },
-    // fully oracled (VERDICT r10 #4): DuckDB re-derives the shingles,
+    // fully oracled: DuckDB re-derives the shingles,
     // all 48 md5-derived min-hashes, the 16 band buckets and the
     // bucket-collision pairs from scratch
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), shh AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, shh AS (
         SELECT doc_id,
           CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT) AS ha,
           CAST('0x' || substr(md5(shingle), 9, 8) AS BIGINT) AS hb
@@ -436,15 +423,15 @@ object TextOps extends QueryModule {
       JOIN bands y ON x.band = y.band AND x.bucket = y.bucket
                   AND x.doc_id < y.doc_id
       ORDER BY d1, d2
-    """.stripMargin.trim))
+    """.trim))
 
   /** SimHash near-dup fingerprint: 32-bit signature from token hashes —
-    * per-bit majority vote of md5-derived token hashes (VERDICT r10 #4:
-    * the r1 murmur3 form was engine-specific and therefore unoracled;
-    * the leading 8 hex chars of md5 read as an integer (the digest's
-    * HIGH 32 bits), the `sample_hash_split` arithmetic, is
-    * bit-identical in both engines at the SAME plan shape — one
-    * projection per token either way). Fully oracled since r11;
+    * per-bit majority vote of md5-derived token hashes (a murmur3 hash
+    * is engine-specific and could not be oracled; the leading 8 hex
+    * chars of md5 read as an integer (the digest's HIGH 32 bits), the
+    * `sample_hash_split` arithmetic, is bit-identical in both engines at
+    * the SAME plan shape — one projection per token either way). Fully
+    * oracled;
     * TextOpsSpec additionally asserts planted near-dup pairs land
     * within small Hamming distance.
     */
@@ -468,7 +455,7 @@ object TextOps extends QueryModule {
       import spark.implicits._
       simhashSignatures(Tables.documents(spark, dir)).orderBy($"doc_id")
     },
-    // fully oracled (VERDICT r10 #4): DuckDB re-derives every token's
+    // fully oracled: DuckDB re-derives every token's
     // leading-8-hex-chars md5 word, the per-bit ±1 majority votes and the packed
     // signature from scratch
     Some("""
@@ -486,7 +473,28 @@ object TextOps extends QueryModule {
       SELECT doc_id,
         CAST(SUM(CASE WHEN v > 0 THEN CAST(1 AS BIGINT) << b ELSE 0 END) AS BIGINT) AS simhash
       FROM votes GROUP BY doc_id ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
+
+  /** The DuckDB twin of the stopword-marker scores: `score_<lang>`, the
+    * `tok` rows among each language's markers.
+    */
+  private def langScoresSql: String =
+    """COUNT(CASE WHEN tok IN ('der','die','und','das','ein') THEN 1 END) AS score_de,
+          COUNT(CASE WHEN tok IN ('the','a','and','of','fast','slow') THEN 1 END) AS score_en,
+          COUNT(CASE WHEN tok IN ('el','la','los','y','un') THEN 1 END) AS score_es,
+          COUNT(CASE WHEN tok IN ('le','la','les','et','un') THEN 1 END) AS score_fr,
+          COUNT(CASE WHEN tok IN ('de','shi','le','zai','he') THEN 1 END) AS score_zh"""
+
+  /** The predicted language: the first, alphabetically, whose score is
+    * the best.
+    */
+  private def langPredSql: String =
+    """CASE GREATEST(score_de, score_en, score_es, score_fr, score_zh)
+          WHEN score_de THEN 'de'
+          WHEN score_en THEN 'en'
+          WHEN score_es THEN 'es'
+          WHEN score_fr THEN 'fr'
+          ELSE 'zh' END"""
 
   /** Stopword-marker language-ID heuristic: score each language by
     * marker-token hits, predict the argmax (ties broken by language
@@ -519,28 +527,19 @@ object TextOps extends QueryModule {
         .select($"doc_id", $"best_score", predExpr.as("pred_lang"))
         .orderBy($"doc_id")
     },
-    Some("""
+    Some(s"""
       WITH scored AS (
         SELECT doc_id,
-          COUNT(CASE WHEN tok IN ('der','die','und','das','ein') THEN 1 END) AS score_de,
-          COUNT(CASE WHEN tok IN ('the','a','and','of','fast','slow') THEN 1 END) AS score_en,
-          COUNT(CASE WHEN tok IN ('el','la','los','y','un') THEN 1 END) AS score_es,
-          COUNT(CASE WHEN tok IN ('le','la','les','et','un') THEN 1 END) AS score_fr,
-          COUNT(CASE WHEN tok IN ('de','shi','le','zai','he') THEN 1 END) AS score_zh
+          $langScoresSql
         FROM (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS tok
               FROM documents)
         WHERE tok <> ''
         GROUP BY doc_id)
       SELECT doc_id,
         GREATEST(score_de, score_en, score_es, score_fr, score_zh) AS best_score,
-        CASE GREATEST(score_de, score_en, score_es, score_fr, score_zh)
-          WHEN score_de THEN 'de'
-          WHEN score_en THEN 'en'
-          WHEN score_es THEN 'es'
-          WHEN score_fr THEN 'fr'
-          ELSE 'zh' END AS pred_lang
+        $langPredSql AS pred_lang
       FROM scored ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Document quality score: length band, punctuation ratio, stopword
     * ratio, mean token length — combined into a DECIMAL score.
@@ -587,7 +586,7 @@ object TextOps extends QueryModule {
         CAST(CASE WHEN n_chars BETWEEN 100 AND 2000 THEN 1 ELSE 0 END AS BIGINT) AS len_ok
       FROM documents d JOIN tokstats USING (doc_id)
       ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Token counting: whitespace tokens plus a BPE-ish approximation
     * (ceil of chars/4 per token, the common LLM rule of thumb) — exact
@@ -612,7 +611,7 @@ object TextOps extends QueryModule {
       FROM (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS tok FROM documents)
       WHERE tok <> ''
       GROUP BY doc_id ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Polynomial rolling-hash fingerprint: fold (acc*31 + ascii) mod 1e9+7
     * over the document's characters. Integer-exact sequential fold →
@@ -641,7 +640,7 @@ object TextOps extends QueryModule {
                            i -> CAST(ascii(substring(text, i, 1)) AS BIGINT))),
           (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
       FROM documents ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Deterministic hash-based train/test split — THE way to split at
     * 100 TB: membership is a pure function of the row key (md5-derived
@@ -681,7 +680,7 @@ object TextOps extends QueryModule {
                THEN 'train' ELSE 'test' END AS split
         FROM documents)
       GROUP BY split ORDER BY split
-    """.stripMargin.trim))
+    """.trim))
 
   /** Sequence PACKING — the step that turns a filtered corpus into
     * fixed-token-budget training rows (docs greedily concatenated to a
@@ -733,11 +732,11 @@ object TextOps extends QueryModule {
             .cast(DecimalType(18, 6)).as("fill_ratio"))
         .orderBy($"lang", $"bucket", $"pack_id")
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT doc_id, lang,
           CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS BIGINT) AS n_tok,
-          CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS BIGINT) AS bucket
+          CAST(${OracleSql.batchKey("doc_id")} AS BIGINT) AS bucket
         FROM documents
       ), packed AS (
         SELECT lang, bucket, n_tok,
@@ -752,7 +751,7 @@ object TextOps extends QueryModule {
       FROM packed
       GROUP BY lang, bucket, pack_id
       ORDER BY lang, bucket, pack_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** TF-IDF: smooth-idf weights (ln((N+1)/(df+1))+1, scikit-style) with
     * top-3 terms per queried doc. Document frequency aggregates over the
@@ -804,7 +803,7 @@ object TextOps extends QueryModule {
             FROM scored)
       WHERE rn <= 3
       ORDER BY doc_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** Fuzzy near-dup by edit distance — completes the dedup family
     * (exact, Jaccard, MinHash-LSH, SimHash, embedding-cosine, fuzzy):
@@ -851,7 +850,7 @@ object TextOps extends QueryModule {
         AND a.doc_id < b.doc_id
       WHERE levenshtein(a.head, b.head) <= 25
       ORDER BY lang, d1, d2
-    """.stripMargin.trim))
+    """.trim))
 
   /** Sliding-window document chunking — the unit operation of training /
     * RAG corpus preparation: each document becomes overlapping 64-token
@@ -904,7 +903,7 @@ object TextOps extends QueryModule {
         array_to_string(list_slice(toks, start + 1, least(start + 64, n)), ' ') AS chunk_text
       FROM s
       ORDER BY doc_id, chunk_idx
-    """.stripMargin.trim))
+    """.trim))
 
   /** Train/test decontamination by n-gram overlap — the guard every
     * training corpus needs against benchmark leakage: treat one source
@@ -946,25 +945,8 @@ object TextOps extends QueryModule {
         .where($"n_hits" >= 3)
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH tok AS (
-        -- positions are renumbered AFTER dropping empty tokens so the
-        -- pos+1 adjacency joins below match Spark's lead-over-filtered
-        -- semantics even on texts with consecutive spaces
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), bench AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, bench AS (
         SELECT DISTINCT s.shingle
         FROM sh s JOIN documents d ON s.doc_id = d.doc_id
         WHERE d.source = 'src0'
@@ -983,7 +965,7 @@ object TextOps extends QueryModule {
       FROM hits h JOIN sizes z USING (doc_id)
       WHERE h.n_hits >= 3
       ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Cross-document BOILERPLATE detection — the C4-style signal the
     * within-doc `text_repetition_stats` and cross-corpus
@@ -1026,22 +1008,8 @@ object TextOps extends QueryModule {
         .orderBy($"boilerplate_share".desc, $"doc_id")
         .limit(40)
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), common AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, common AS (
         SELECT shingle FROM (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1)
         WHERE df >= 5
       ), sizes AS (
@@ -1057,7 +1025,7 @@ object TextOps extends QueryModule {
       FROM sizes z LEFT JOIN hits h USING (doc_id)
       ORDER BY boilerplate_share DESC, doc_id
       LIMIT 40
-    """.stripMargin.trim))
+    """.trim))
 
   /** Bloom-pre-filtered decontamination — the SAME declared output (and
     * oracle) as `text_decontaminate_ngram`, with the benchmark set
@@ -1230,7 +1198,7 @@ object TextOps extends QueryModule {
     * seconds. Bench calls this OUTSIDE the per-query clocks and logs the
     * figure as `shared_stage_s`, so the shared cost is an explicit line
     * item instead of being silently absorbed by whichever family query
-    * happens to run first (VERDICT r5 #1: honest per-query attribution).
+    * happens to run first (honest per-query attribution).
     */
   /** Per-step wall clock to stderr (r13) — same attribution discipline
     * as the vec shared stage; stdout stays clean for the bench JSON.
@@ -1280,33 +1248,8 @@ object TextOps extends QueryModule {
         .select($"id".as("doc_id"), $"comp")
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH RECURSIVE tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-      inter AS (
-        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
-        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-        GROUP BY 1, 2
-      ), pairs AS (
-        SELECT d1, d2
-        FROM inter
-        JOIN sizes za ON d1 = za.doc_id
-        JOIN sizes zb ON d2 = zb.doc_id
-        WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
-      ), verts AS (
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, verts AS (
         SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
       ), edges AS (
         SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
@@ -1317,7 +1260,7 @@ object TextOps extends QueryModule {
       )
       SELECT a AS doc_id, MIN(b) AS comp
       FROM reach GROUP BY a ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-document TRIANGLE counts over the Jaccard≥0.5 near-dup graph —
     * the cluster-density signal connected components can't see: a
@@ -1354,33 +1297,8 @@ object TextOps extends QueryModule {
         .agg(count(lit(1)).as("n_triangles"))
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-      inter AS (
-        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
-        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-        GROUP BY 1, 2
-      ), pairs AS (
-        SELECT d1, d2
-        FROM inter
-        JOIN sizes za ON d1 = za.doc_id
-        JOIN sizes zb ON d2 = zb.doc_id
-        WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
-      ), tri AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, $jaccardPairsSql, tri AS (
         SELECT e1.d1 AS a, e1.d2 AS b, e2.d2 AS c
         FROM pairs e1
         JOIN pairs e2 ON e1.d2 = e2.d1
@@ -1393,7 +1311,7 @@ object TextOps extends QueryModule {
       )
       SELECT doc_id, COUNT(*) AS n_triangles
       FROM verts GROUP BY doc_id ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-component QUALITY report over the near-dup graph — the
     * collapse-vs-review decision table that closes the graph family:
@@ -1433,33 +1351,8 @@ object TextOps extends QueryModule {
           ($"n_edges" * 2 === $"n_docs" * ($"n_docs" - 1)).as("is_clique"))
         .orderBy($"comp")
     },
-    Some("""
-      WITH RECURSIVE tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-      inter AS (
-        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
-        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-        GROUP BY 1, 2
-      ), pairs AS (
-        SELECT d1, d2
-        FROM inter
-        JOIN sizes za ON d1 = za.doc_id
-        JOIN sizes zb ON d2 = zb.doc_id
-        WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
-      ), verts AS (
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, verts AS (
         SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
       ), gedges AS (
         SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
@@ -1481,7 +1374,7 @@ object TextOps extends QueryModule {
         (n_edges * 2 = n_docs * (n_docs - 1)) AS is_clique
       FROM csizes JOIN cedges USING (comp)
       ORDER BY comp
-    """.stripMargin.trim))
+    """.trim))
 
   /** Quality-priority KEEPER selection per near-dup component — the
     * final act of the dedup story: components say what merges, this row
@@ -1518,33 +1411,8 @@ object TextOps extends QueryModule {
           ($"doc_id" === $"keeper_id").as("is_keeper"))
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH RECURSIVE tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-      inter AS (
-        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
-        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-        GROUP BY 1, 2
-      ), pairs AS (
-        SELECT d1, d2
-        FROM inter
-        JOIN sizes za ON d1 = za.doc_id
-        JOIN sizes zb ON d2 = zb.doc_id
-        WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
-      ), verts AS (
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, verts AS (
         SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
       ), gedges AS (
         SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
@@ -1568,7 +1436,7 @@ object TextOps extends QueryModule {
         (r.doc_id = k.keeper_id) AS is_keeper
       FROM ranked r JOIN keepers k USING (comp)
       ORDER BY r.doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Stratified deterministic sampling: per-language sampling rates
     * (50% for `en`, 20% for the rest) decided by an md5 bucket of
@@ -1616,7 +1484,7 @@ object TextOps extends QueryModule {
           CASE WHEN lang = 'en' THEN 500 ELSE 200 END AS target
         FROM documents)
       GROUP BY lang ORDER BY lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** PII redaction: the scrub pass every training-data pipeline runs
     * before text leaves the trust boundary. The corpus is synthetic
@@ -1689,7 +1557,7 @@ object TextOps extends QueryModule {
               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
             '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g')) AS redacted_md5
       FROM p ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Repetition-signal quality filter (the Gopher/C4 family): per-doc
     * token and 3-gram duplication fractions plus the filter decision.
@@ -1737,27 +1605,15 @@ object TextOps extends QueryModule {
             .as("is_repetitive"))
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), tc AS (
+    Some(s"""
+      WITH ${OracleSql.tokens()}, tc AS (
         SELECT doc_id, tok, COUNT(*) AS c FROM tok GROUP BY 1, 2
       ), ts AS (
         SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tok,
           COUNT(*) AS n_distinct_tok, MAX(c) AS top_cnt
         FROM tc GROUP BY 1
       ), sh AS (
-        SELECT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
+        ${OracleSql.trigrams("a.doc_id")}
       ), sc AS (
         SELECT doc_id, shingle, COUNT(*) AS c FROM sh GROUP BY 1, 2
       ), ss AS (
@@ -1777,7 +1633,7 @@ object TextOps extends QueryModule {
         CAST(CASE WHEN top_tok_frac > 0.12 OR dup_3gram_frac > 0.05
           THEN 1 ELSE 0 END AS BIGINT) AS is_repetitive
       FROM j ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** The LLM-corpus curation pipeline END-TO-END in one declared plan:
     * language-ID gate (the `text_langid_ngram` marker vote) → quality
@@ -1834,26 +1690,17 @@ object TextOps extends QueryModule {
             .cast(DecimalType(18, 6)).as("mean_chars"))
         .orderBy($"pred_lang", $"source")
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS tok FROM documents
       ), per_doc AS (
         SELECT doc_id,
-          COUNT(CASE WHEN tok IN ('der','die','und','das','ein') THEN 1 END) AS score_de,
-          COUNT(CASE WHEN tok IN ('the','a','and','of','fast','slow') THEN 1 END) AS score_en,
-          COUNT(CASE WHEN tok IN ('el','la','los','y','un') THEN 1 END) AS score_es,
-          COUNT(CASE WHEN tok IN ('le','la','les','et','un') THEN 1 END) AS score_fr,
-          COUNT(CASE WHEN tok IN ('de','shi','le','zai','he') THEN 1 END) AS score_zh,
+          $langScoresSql,
           COUNT(*) AS n_tokens
         FROM tok WHERE tok <> '' GROUP BY doc_id
       ), gated AS (
         SELECT d.doc_id,
-          CASE GREATEST(score_de, score_en, score_es, score_fr, score_zh)
-            WHEN score_de THEN 'de'
-            WHEN score_en THEN 'en'
-            WHEN score_es THEN 'es'
-            WHEN score_fr THEN 'fr'
-            ELSE 'zh' END AS pred_lang,
+          $langPredSql AS pred_lang,
           source, n_tokens, n_chars, md5(lower(trim(text))) AS text_hash
         FROM documents d JOIN per_doc USING (doc_id)
         WHERE n_chars >= 100 AND n_tokens >= 5
@@ -1869,7 +1716,7 @@ object TextOps extends QueryModule {
         CAST(CAST(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS DECIMAL(18,6)) AS DOUBLE) AS mean_chars
       FROM gated g JOIN keepers k ON g.doc_id = k.keeper_id
       GROUP BY pred_lang, source ORDER BY pred_lang, source
-    """.stripMargin.trim))
+    """.trim))
 
   /** Fixed-SIZE deterministic sample (k=100): the k documents with the
     * smallest md5(doc_id) — the reproducible equivalent of reservoir
@@ -1903,7 +1750,7 @@ object TextOps extends QueryModule {
       FROM documents
       ORDER BY md5(CAST(doc_id AS VARCHAR))
       LIMIT 100
-    """.stripMargin.trim))
+    """.trim))
 
   /** URL canonicalization + dedup — the web-corpus ingest step (the
     * same page arrives as `HTTPS://Host/path?utm_source=…#frag` and
@@ -1956,7 +1803,7 @@ object TextOps extends QueryModule {
         COUNT(DISTINCT doc_id) AS n_docs
       FROM documents
       GROUP BY source ORDER BY source
-    """.stripMargin.trim))
+    """.trim))
 
   /** Temperature-based mixture reweighting across corpus SOURCES — the
     * standard LLM data-mixing step: a source's natural share p_s =
@@ -2026,7 +1873,7 @@ object TextOps extends QueryModule {
         (CAST(s AS DOUBLE) / CAST(tot_s AS DOUBLE)) /
           (CAST(tokens AS DOUBLE) / CAST(tot_tokens AS DOUBLE)) AS boost
       FROM normed ORDER BY source
-    """.stripMargin.trim))
+    """.trim))
 
   /** ZIPF-LAW slope fit over the term-frequency distribution — the
     * corpus-health fingerprint (natural language sits near slope −1 in
@@ -2097,7 +1944,7 @@ object TextOps extends QueryModule {
         ROUND(((n * sxy - sx * sy) * (n * sxy - sx * sy))
             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
       FROM s
-    """.stripMargin.trim))
+    """.trim))
 
   /** Incremental-ingest dedup against the PERSISTED shingle registry
     * (SURVEY §2 I-oct) — the production counterpart of
@@ -2139,26 +1986,8 @@ object TextOps extends QueryModule {
           ($"n_seen" * 2 >= $"n_shingles").as("is_flagged"))
         .orderBy($"doc_id")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), b AS (
-        SELECT doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
-        FROM documents
-      ), reg AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, ${OracleSql.docBatches}, reg AS (
         SELECT DISTINCT s.shingle
         FROM sh s JOIN b USING (doc_id) WHERE b.batch < 7
       ), cur AS (
@@ -2176,7 +2005,7 @@ object TextOps extends QueryModule {
       FROM cur c LEFT JOIN reg r USING (shingle)
       GROUP BY c.doc_id
       ORDER BY c.doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Registry UPSERT — the daily-ingest cycle's write half (SURVEY §2
     * I-oct): after `dedup_incremental_registry` scores batch 7 against
@@ -2204,26 +2033,8 @@ object TextOps extends QueryModule {
           round($"n_shingles".cast(DoubleType) / $"total", 6).as("share"))
         .orderBy($"first_batch")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), b AS (
-        SELECT doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
-        FROM documents
-      ), reg2 AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, ${OracleSql.docBatches}, reg2 AS (
         SELECT s.shingle, CAST(MIN(b.batch) AS BIGINT) AS first_batch
         FROM sh s JOIN b USING (doc_id)
         GROUP BY 1
@@ -2234,7 +2045,7 @@ object TextOps extends QueryModule {
         ROUND(CAST(n_shingles AS DOUBLE) / SUM(n_shingles) OVER (), 6) AS share
       FROM counts
       ORDER BY first_batch
-    """.stripMargin.trim))
+    """.trim))
 
   /** PMI / NPMI word co-occurrence (SURVEY §2 I-non) — the association
     * measure behind collocation mining and embedding objectives
@@ -2267,18 +2078,18 @@ object TextOps extends QueryModule {
     "text_pmi_cooccurrence",
     (spark, dir) => {
       import spark.implicits._
-      // ONE parquet scan of documents (r13, VERDICT r12 #4): the per-doc
-      // distinct token sets are materialized once (lineage cut) and feed
-      // BOTH token-keyed fact aggregations; the old shape re-scanned and
-      // re-tokenized the corpus for the vocab df pass, the cell pass AND
-      // the N count. The per-token doc-frequency table further serves
+      // ONE parquet scan of documents: the per-doc distinct token sets
+      // are materialized once (lineage cut) and feed BOTH token-keyed
+      // fact aggregations, rather than re-scanning and re-tokenizing the
+      // corpus for the vocab df pass, the cell pass AND the N count. The
+      // per-token doc-frequency table further serves
       // double duty: its top-100 IS the vocab, and df(tok) IS the
       // single-token document count c_a (both count docs whose distinct
       // token set contains tok), so the cell explode no longer emits
       // single-token rows at all.
       // the per-doc distinct token sets are the shared memoized relation
-      // (r14, VERDICT r13 #4) — same frame, built once on the shared-text
-      // clock instead of a per-construction localCheckpoint job
+      // — same frame, built once on the shared-text clock instead of a
+      // per-construction localCheckpoint job
       val sets = cachedTokenSets(Tables.documents(spark, dir))
       val vocab = graft.Checkpoints.cut(sets
         .select(explode($"toks").as("tok"))
@@ -2345,10 +2156,10 @@ object TextOps extends QueryModule {
       JOIN singles sa ON sa.tok = tok_a
       JOIN singles sb ON sb.tok = tok_b, tot
       ORDER BY npmi DESC, tok_a, tok_b LIMIT 20
-    """.stripMargin.trim))
+    """.trim))
 
-  /** REGISTRY RETRACTION (SURVEY §2 I-tredec, VERDICT r11 #4 — the
-    * right-to-be-forgotten op): a source withdrawn for licensing (the
+  /** REGISTRY RETRACTION (SURVEY §2 I-tredec, the right-to-be-forgotten
+    * op): a source withdrawn for licensing (the
     * deterministic md5-batch [[ShingleRegistry.RetractedBatch]] = 5)
     * must leave the registry AS IF NEVER INGESTED, without rewriting
     * history. The retraction-capable generation is the contributor-
@@ -2387,26 +2198,8 @@ object TextOps extends QueryModule {
           round($"n_shingles".cast(DoubleType) / $"total", 6).as("share"))
         .orderBy($"first_batch")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), b AS (
-        SELECT doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
-        FROM documents
-      ), live AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, ${OracleSql.docBatches}, live AS (
         SELECT s.shingle, CAST(MIN(b.batch) AS BIGINT) AS first_batch
         FROM sh s JOIN b USING (doc_id)
         WHERE b.batch <> 5
@@ -2418,7 +2211,7 @@ object TextOps extends QueryModule {
         ROUND(CAST(n_shingles AS DOUBLE) / SUM(n_shingles) OVER (), 6) AS share
       FROM counts
       ORDER BY first_batch
-    """.stripMargin.trim))
+    """.trim))
 
   /** REGISTRY RETRACTION COMPACTION (SURVEY §2 I-tredec) — the
     * write-forward apply once tombstones accumulate, the
@@ -2445,26 +2238,8 @@ object TextOps extends QueryModule {
             .as("shingle_hashsum"))
         .orderBy($"first_batch")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), b AS (
-        SELECT doc_id,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
-        FROM documents
-      ), live AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, ${OracleSql.docBatches}, live AS (
         SELECT s.shingle, CAST(MIN(b.batch) AS BIGINT) AS first_batch
         FROM sh s JOIN b USING (doc_id)
         WHERE b.batch <> 5
@@ -2474,7 +2249,7 @@ object TextOps extends QueryModule {
         CAST(SUM(CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT)) AS BIGINT)
           AS shingle_hashsum
       FROM live GROUP BY 1 ORDER BY first_batch
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     textPmiCooccurrence,
@@ -2588,7 +2363,7 @@ object TextOps extends QueryModule {
       FROM grid
       GROUP BY lang_a, lang_b
       ORDER BY lang_a, lang_b
-    """.stripMargin.trim))
+    """.trim))
 
   /** ASYMMETRIC shingle CONTAINMENT pairs — the sub-document duplicate
     * detector symmetric Jaccard misses: C(A→B) = |shA∩shB| / |shA| is
@@ -2630,27 +2405,8 @@ object TextOps extends QueryModule {
           $"containment".cast(DoubleType).as("containment"))
         .orderBy($"src", $"dst")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-      inter AS (
-        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
-        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-        GROUP BY 1, 2
-      ), ws AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, $shingleInterSql, ws AS (
         SELECT d1, d2, i, za.n AS n1, zb.n AS n2
         FROM inter
         JOIN sizes za ON d1 = za.doc_id
@@ -2667,7 +2423,7 @@ object TextOps extends QueryModule {
       SELECT src, dst, i, n_src, CAST(containment AS DOUBLE) AS containment
       FROM dirp WHERE containment >= 0.5
       ORDER BY src, dst
-    """.stripMargin.trim))
+    """.trim))
 
   /** MEDIAN-ABSOLUTE-DEVIATION length outlier gate per language — the
     * ROBUST version of `etl_anomaly_zscore` for corpus curation:
@@ -2725,7 +2481,7 @@ object TextOps extends QueryModule {
       JOIN m ON d.lang = m.lang
       JOIN md ON d.lang = md.lang
       GROUP BY d.lang ORDER BY d.lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-document character-level Shannon entropy — the gibberish
     * detector token-level stats miss: low entropy flags repetition /
@@ -2782,7 +2538,7 @@ object TextOps extends QueryModule {
           - CAST(slg AS DOUBLE) / CAST(n_chars_seen AS DOUBLE)
           AS DECIMAL(18,6)) AS DOUBLE) AS entropy_bits
       FROM agg ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Unigram cross-entropy quality proxy — the perplexity-filter stage
     * of a pretraining pipeline (docs whose tokens are improbable under
@@ -2857,7 +2613,7 @@ object TextOps extends QueryModule {
           - CAST(slg AS DOUBLE) / CAST(n_tokens AS DOUBLE)
           AS DECIMAL(18,6)) AS DOUBLE) AS xent_bits
       FROM agg CROSS JOIN total ORDER BY doc_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** CCNet-STYLE QUALITY BUCKETS (SURVEY §2 I-sext): per language,
     * split the corpus into head/middle/tail TERCILES of the unigram
@@ -2938,7 +2694,7 @@ object TextOps extends QueryModule {
         CAST(MIN(xent_bits) AS DOUBLE) AS min_xent,
         CAST(MAX(xent_bits) AS DOUBLE) AS max_xent
       FROM bucketed GROUP BY lang, bucket ORDER BY lang, bucket
-    """.stripMargin.trim))
+    """.trim))
 
   /** Importance-weighted deterministic sampling — quality-weighted
     * corpus downsampling (keep high-quality docs at higher rate), the
@@ -3010,7 +2766,7 @@ object TextOps extends QueryModule {
         CAST(CAST(SUM(keep) * 1.0 / COUNT(*) AS DECIMAL(18,6)) AS DOUBLE) AS realized_rate
       FROM flagged
       GROUP BY lang ORDER BY lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** Near-dup dedup END-TO-END — candidates → components → the dedup
     * DECISION: over the `en` slice, exact Jaccard≥0.5 pairs feed the
@@ -3060,35 +2816,10 @@ object TextOps extends QueryModule {
         .orderBy($"n_docs")
       summary
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE endocs AS (
         SELECT doc_id, text FROM documents WHERE lang = 'en'
-      ), tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM endocs) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-      inter AS (
-        SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
-        FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
-        GROUP BY 1, 2
-      ), pairs AS (
-        SELECT d1, d2
-        FROM inter
-        JOIN sizes za ON d1 = za.doc_id
-        JOIN sizes zb ON d2 = zb.doc_id
-        WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
-      ), verts AS (
+      ), ${OracleSql.shingles("endocs")}, $jaccardPairsSql, verts AS (
         SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
       ), edges AS (
         SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
@@ -3105,7 +2836,7 @@ object TextOps extends QueryModule {
         COUNT(*) - COUNT(comp) + COUNT(DISTINCT comp) AS n_keepers,
         COUNT(comp) - COUNT(DISTINCT comp) AS n_dropped
       FROM endocs LEFT JOIN comp USING (doc_id)
-    """.stripMargin.trim))
+    """.trim))
 
   /** Vocabulary coverage curve (SURVEY §2 I-sext): share of the corpus's
     * token mass covered by the top-k vocabulary at k ∈ {10, 100, 1000} —
@@ -3167,7 +2898,7 @@ object TextOps extends QueryModule {
       FROM ks JOIN ranked ON rank <= k, tot
       GROUP BY k, total, vocab_size
       ORDER BY k
-    """.stripMargin.trim))
+    """.trim))
 
   /** Class-balanced downsampling to the minority class (SURVEY §2
     * I-sext): equalize per-language document counts at min(class size) —
@@ -3225,7 +2956,7 @@ object TextOps extends QueryModule {
       FROM ranked, cap
       GROUP BY lang
       ORDER BY lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** Chronological train/val/test holdout (70/15/15) per user over the
     * event stream (SURVEY §2 I-sext) — the TIME-based split discipline
@@ -3281,7 +3012,7 @@ object TextOps extends QueryModule {
           CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4) AS INTEGER) % 5 AS fold
         FROM events)
       GROUP BY fold ORDER BY fold
-    """.stripMargin.trim))
+    """.trim))
 
   val sampleTimeHoldout = Q(
     "sample_time_holdout",
@@ -3326,7 +3057,7 @@ object TextOps extends QueryModule {
       FROM s
       GROUP BY split
       ORDER BY split
-    """.stripMargin.trim))
+    """.trim))
 
   /** LSH band-tuning audit (SURVEY §2 I-sext): the banded-MinHash
     * capture probability 1−(1−s^r)^b evaluated against the corpus's OWN
@@ -3375,22 +3106,8 @@ object TextOps extends QueryModule {
           $"n_pairs", $"mean_capture")
         .orderBy($"bands", $"rws", $"band_lo")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+    Some(s"""
+      WITH ${OracleSql.shingles()}, sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
       inter AS (
         SELECT s1.doc_id AS d1, s2.doc_id AS d2, COUNT(*) AS i
         FROM sh s1 JOIN sh s2 ON s1.shingle = s2.shingle AND s1.doc_id < s2.doc_id
@@ -3432,7 +3149,7 @@ object TextOps extends QueryModule {
       FROM stacked
       GROUP BY bands, rws, band10
       ORDER BY bands, rws, band_lo
-    """.stripMargin.trim))
+    """.trim))
 
   /** Corpus novelty curve (SURVEY §2 I-sext): per md5-ordered ingest
     * batch, the share of its distinct shingles never seen in any earlier
@@ -3473,24 +3190,10 @@ object TextOps extends QueryModule {
           round($"n_novel".cast(DoubleType) / $"n_shingles", 6).as("novelty_rate"))
         .orderBy($"batch")
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), sh AS (
-        SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-      ), pres AS (
+    Some(s"""
+      WITH ${OracleSql.shingles()}, pres AS (
         SELECT DISTINCT shingle,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
+          ${OracleSql.batchKey("doc_id")} AS batch
         FROM sh
       ), firstb AS (
         SELECT shingle, MIN(batch) AS fb FROM pres GROUP BY 1
@@ -3503,7 +3206,7 @@ object TextOps extends QueryModule {
       FROM pres JOIN firstb USING (shingle)
       GROUP BY batch
       ORDER BY batch
-    """.stripMargin.trim))
+    """.trim))
 
   /** RAKE keyword extraction (SURVEY §2 I-sext): corpus top-10
     * keyphrases by the classic degree/frequency score (Rose et al.) —
@@ -3554,17 +3257,8 @@ object TextOps extends QueryModule {
         .orderBy($"score".desc, $"phrase")
         .limit(10)
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), ns AS (
+    Some(s"""
+      WITH ${OracleSql.tokens()}, ns AS (
         SELECT doc_id, pos, tok,
           ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
         FROM tok
@@ -3589,7 +3283,7 @@ object TextOps extends QueryModule {
       GROUP BY phrase
       ORDER BY score DESC, phrase
       LIMIT 10
-    """.stripMargin.trim))
+    """.trim))
 
   /** Heaps'-law vocabulary growth (SURVEY §2 I-sept): cumulative
     * distinct-term count V vs cumulative token mass n over the
@@ -3652,10 +3346,10 @@ object TextOps extends QueryModule {
         .select($"batch", $"cum_tokens", $"cum_vocab", $"beta", $"ln_k", $"r2")
         .orderBy($"batch")
     },
-    Some("""
+    Some(s"""
       WITH tok AS (
         SELECT t AS tok,
-          CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INTEGER) % 8 AS batch
+          ${OracleSql.batchKey("doc_id")} AS batch
         FROM (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS t
               FROM documents)
         WHERE t <> ''
@@ -3695,7 +3389,7 @@ object TextOps extends QueryModule {
           / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
       FROM curve, fit
       ORDER BY batch
-    """.stripMargin.trim))
+    """.trim))
 
   /** Language-ID confusion matrix (SURVEY §2 I-sept) — the EVALUATION of
     * `text_langid_ngram` against the corpus's labeled `lang` column:
@@ -3742,14 +3436,10 @@ object TextOps extends QueryModule {
           .cast(DoubleType) / sum($"n"), 6).as("accuracy"))
       cells.crossJoin(broadcast(acc)).orderBy($"lang", $"pred_lang")
     },
-    Some("""
+    Some(s"""
       WITH scored AS (
         SELECT doc_id,
-          COUNT(CASE WHEN tok IN ('der','die','und','das','ein') THEN 1 END) AS score_de,
-          COUNT(CASE WHEN tok IN ('the','a','and','of','fast','slow') THEN 1 END) AS score_en,
-          COUNT(CASE WHEN tok IN ('el','la','los','y','un') THEN 1 END) AS score_es,
-          COUNT(CASE WHEN tok IN ('le','la','les','et','un') THEN 1 END) AS score_fr,
-          COUNT(CASE WHEN tok IN ('de','shi','le','zai','he') THEN 1 END) AS score_zh
+          $langScoresSql
         FROM (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS tok
               FROM documents)
         WHERE tok <> ''
@@ -3776,7 +3466,7 @@ object TextOps extends QueryModule {
       SELECT lang, pred_lang, n, accuracy
       FROM cells, acc
       ORDER BY lang, pred_lang
-    """.stripMargin.trim))
+    """.trim))
 
   /** Cross-source shingle overlap (SURVEY §2 I-sept) — the PROVENANCE
     * duplication matrix: for the top source pairs, what share of source
@@ -3832,21 +3522,9 @@ object TextOps extends QueryModule {
         .orderBy($"overlap_frac".desc, $"a_source", $"b_source")
         .limit(20)
     },
-    Some("""
-      WITH tok AS (
-        SELECT doc_id,
-          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS pos,
-          tok
-        FROM (
-          SELECT doc_id,
-            UNNEST(string_split(lower(text), ' ')) AS tok,
-            UNNEST(range(len(string_split(lower(text), ' ')))) AS pos
-          FROM documents) WHERE tok <> ''
-      ), ss AS (
-        SELECT DISTINCT d.source, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-        FROM tok a
-        JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
+    Some(s"""
+      WITH ${OracleSql.tokens()}, ss AS (
+        ${OracleSql.trigrams("DISTINCT d.source")}
         JOIN documents d ON a.doc_id = d.doc_id
       ), sizes AS (
         SELECT source, COUNT(*) AS n_shingles FROM ss GROUP BY 1
@@ -3860,5 +3538,5 @@ object TextOps extends QueryModule {
       FROM inter JOIN sizes ON a_source = sizes.source
       ORDER BY overlap_frac DESC, a_source, b_source
       LIMIT 20
-    """.stripMargin.trim))
+    """.trim))
 }

@@ -63,7 +63,7 @@ object TypedOps extends QueryModule {
       )
       SELECT user_id, rn, event_id, event_type, value
       FROM r WHERE rn <= 2 ORDER BY user_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** The typed `Aggregator` UDAF (functions/DecimalStatsAggregator.scala)
     * as a declared query: exact BigDecimal moments per event type —
@@ -100,7 +100,7 @@ object TypedOps extends QueryModule {
         CAST(CAST(SUM(CAST(value AS DECIMAL(28,12))) AS DECIMAL(18,6)) AS DOUBLE) AS sum_value,
         CAST(CAST(SUM(CAST(value AS DECIMAL(28,12))) / COUNT(*) AS DECIMAL(18,6)) AS DOUBLE) AS mean_value
       FROM events GROUP BY event_type ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   case class SnapRow(key: Long, acctbal: Option[Double])
   case class DeltaRow(key: Long, value: Double)
@@ -173,7 +173,7 @@ object TypedOps extends QueryModule {
         COALESCE(d.n_purchases, 0) AS n_purchases
       FROM customer c FULL OUTER JOIN delta d ON c.c_custkey = d.key
       ORDER BY key
-    """.stripMargin.trim))
+    """.trim))
 
   case class OrderRow(o_orderkey: Long, o_custkey: Long, o_totalprice: Double)
   case class CustRow(c_custkey: Long, c_mktsegment: String)
@@ -214,7 +214,7 @@ object TypedOps extends QueryModule {
         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
       FROM orders JOIN customer ON o_custkey = c_custkey
       GROUP BY 1 ORDER BY 1
-    """.stripMargin.trim))
+    """.trim))
 
   /** Typed `reduceGroups` — per-group pairwise reduction (the typed
     * fold: max-by with an explicit deterministic tiebreak), the API
@@ -256,7 +256,7 @@ object TypedOps extends QueryModule {
       SELECT o_custkey AS custkey, o_orderkey AS top_orderkey,
         o_totalprice AS top_price
       FROM r WHERE rn = 1 ORDER BY custkey
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(typedTopnPerUser, typedAggDecimalStats,
     typedCogroupReconcile, typedJoinwithSegments, typedReduceKeeper)

@@ -38,7 +38,7 @@ object VectorOps extends QueryModule {
   private val cosine = (a: String, b: String, na: String, nb: String) =>
     GraftFunctions.dot(col(a), col(b)) / (col(na) * col(nb))
 
-  /** DATA-DRIVEN IVF codebook (VERDICT r6 #1): `nlist = ⌈√n⌉` cells —
+  /** DATA-DRIVEN IVF codebook: `nlist = ⌈√n⌉` cells —
     * the SemDeDup √n rule as code, not a constant — trained with ONE
     * deterministic Lloyd step (`vec_kmeans_lloyd`'s exact recipe: seeds
     * = the nlist lowest vec_ids, nearest-seed assignment via the
@@ -62,7 +62,7 @@ object VectorOps extends QueryModule {
 
   /** Force the shared ⌈√n⌉-cell IVF codebook for this corpus and report
     * the elapsed seconds. Bench clocks it OUTSIDE the per-query timers
-    * (the VERDICT r5 #1 shared-stage discipline): the ANN/semantic rows
+    * (the shared-stage discipline): the ANN/semantic rows
     * then measure their own plans, not whichever family member happened
     * to build the codebook first.
     */
@@ -86,16 +86,16 @@ object VectorOps extends QueryModule {
     // shares the same once-per-corpus discipline
     timed("trainPqCodebook")(trainPqCodebook(withNorm(spark, dir)).count())
     // the memoized exact-kNN graph is shared by vec_knn_graph_stats and
-    // vec_twonn_intrinsic_dim — clock its build here (VERDICT r5 #1:
-    // shared stages get their own line, not whichever query runs first)
+    // vec_twonn_intrinsic_dim — clock its build here (shared stages get
+    // their own line, not whichever query runs first)
     timed("cachedKnn5")(cachedKnn5(spark, dir).count())
     // persisted IVF index + PQ codes/codebook: first bench run on a
     // corpus pays the builds here (their own shared-stage line item, not
     // the serve rows' clocks); subsequent sessions re-register metadata
-    // cold-build JIT warmup (r14, VERDICT r13 #6): the FIRST PqEncodeAll
-    // consumer (ensurePqResidual, k=128 m=16) paid ~4 s of interpreter
-    // time before HotSpot compiled the encode loop — later structurally
-    // identical builds ran ~3 s vs 7.3. A few thousand tiny synthetic
+    // cold-build JIT warmup: the FIRST PqEncodeAll consumer
+    // (ensurePqResidual, k=128 m=16) pays ~4 s of interpreter time before
+    // HotSpot compiles the encode loop — later structurally identical
+    // builds run ~3 s vs 7.3. A few thousand tiny synthetic
     // encodes push eval past the C2 threshold BEFORE the real build;
     // gated on the artifact being absent so a warm warehouse never pays
     // the (~0.3 s) warmup.
@@ -175,7 +175,7 @@ object VectorOps extends QueryModule {
       .select(col("cid"), coalesce(col("m"), col("cemb")).as("cemb"))
   }
 
-  /** Trained ⌈√n⌉-cell IVF codebook (VERDICT r8 #2): seeds are an
+  /** Trained ⌈√n⌉-cell IVF codebook: seeds are an
     * id-ordered STRIDE sample of the corpus (one seed every ⌊n/nlist⌋
     * ids — k-means++-style spatial spread without k sequential corpus
     * passes, which would not scale with nlist = √n), refined by
@@ -215,6 +215,37 @@ object VectorOps extends QueryModule {
         codebookCache.getOrCompute(plan)(p => graft.Checkpoints.cut(p.repartition(1))))
   }
 
+  /** The SQL twin of [[roundedL2]]: `‖a‖² − 2a·b + ‖b‖²` rounded to 6 dp,
+    * over the list columns `a` and `b`.
+    */
+  private def roundedL2Sql(a: String, b: String): String =
+    s"ROUND(list_inner_product($a, $a) - 2.0 * list_inner_product($a, $b)" +
+      s" + list_inner_product($b, $b), 6)"
+
+  /** The SQL twin of [[cosineTopK]]'s rank at k = 3: each query's three
+    * best `cand(q_id, vec_id, cos)` rows, vec_id breaking ties, as the
+    * final SELECT of an ANN row.
+    */
+  private def cosineTop3Sql: String = """SELECT q_id, vec_id, cos, rn FROM (
+        SELECT q_id, vec_id, cos,
+          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
+        FROM cand)
+      WHERE rn <= 3
+      ORDER BY q_id, rn"""
+
+  /** The SQL twin of [[probed]] then [[cosineTopK]] at k = 3: `cand`,
+    * every `side` row stored in a cell its query probes (`probes(q_id,
+    * q_emb, q_nrm, cell)`), the query itself excluded, then
+    * [[cosineTop3Sql]].
+    */
+  private def probedTop3Sql(side: String): String = s"""cand AS (
+        SELECT p.q_id, a.vec_id,
+          ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
+        FROM $side a JOIN probes p USING (cell)
+        WHERE a.vec_id <> p.q_id
+      )
+      $cosineTop3Sql"""
+
   /** The DuckDB mirror of [[ivfCodebook]]: CTEs ending in `centn(cell,
     * cvec, cnrm)`. Callers append their own query-specific CTEs/SELECT.
     * Expects an `e(vec_id, label, emb, nrm)` CTE to be in scope. The
@@ -244,9 +275,7 @@ object VectorOps extends QueryModule {
         SELECT vec_id, cid, emb FROM (
           SELECT e.vec_id, c.cid, e.emb,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ROUND(list_inner_product(e.emb, e.emb)
-                    - 2.0 * list_inner_product(e.emb, c.cemb)
-                    + list_inner_product(c.cemb, c.cemb), 6), c.cid) AS rn
+              ${roundedL2Sql("e.emb", "c.cemb")}, c.cid) AS rn
           FROM $srcE CROSS JOIN ${p}cent${i - 1} c)
         WHERE rn = 1
       ), ${p}cd$i AS (
@@ -271,6 +300,14 @@ object VectorOps extends QueryModule {
   }
 
   val ivfCodebookSql: String = ivfCodebookSqlGen()
+
+  /** The SQL twin of `withNearestCells(withNorm, ivfCodebook, 1, …)`: the
+    * `e` and `centn` CTEs, `sims`, and `assigned(cols)`, each vector's
+    * nearest cell.
+    */
+  private[graft] def ivfAssignedSql(cols: String): String =
+    s"${OracleSql.embeddings()}, $ivfCodebookSql, " +
+      s"${OracleSql.cellSims()}, ${OracleSql.assignedCells(cols)}"
 
   /** The DuckDB mirror of the ENTIRE rebalance lifecycle — one shared
     * fragment (the [[ivfCodebookSql]] discipline applied to the gen-2
@@ -297,8 +334,8 @@ object VectorOps extends QueryModule {
     * Columns are the UNION of what the five consumers project; carrying
     * the superset changes no row contents.
     */
-  /** ONE rebalance step of the generation chain (r10 VERDICT #3 made
-    * the chain a parameter): consumes generation g−1 as `$inIdx(vec_id,
+  /** ONE rebalance step of the generation chain (the chain is a
+    * parameter): consumes generation g−1 as `$inIdx(vec_id,
     * emb, nrm, cell)` + `$inCb(cell, cvec, cnrm)` and emits generation
     * g as `${p}cb2` / `${p}idx2` (plus every intermediate, all
     * p-prefixed so two steps instantiate in one query). The overload
@@ -327,9 +364,7 @@ object VectorOps extends QueryModule {
         SELECT cell, n_cell, vec_id, emb, nrm, side FROM (
           SELECT m.cell, m.n_cell, m.vec_id, m.emb, m.nrm, s.side,
             ROW_NUMBER() OVER (PARTITION BY m.cell, m.vec_id ORDER BY
-              ROUND(list_inner_product(m.emb, m.emb)
-                    - 2.0 * list_inner_product(m.emb, s.semb)
-                    + list_inner_product(s.semb, s.semb), 6), s.side) AS rn
+              ${roundedL2Sql("m.emb", "s.semb")}, s.side) AS rn
           FROM ${p}members m JOIN ${p}seeds s USING (cell))
         WHERE rn = 1
       ), ${p}ranked AS (
@@ -366,15 +401,15 @@ object VectorOps extends QueryModule {
         FROM ${p}asg g JOIN ${p}idmap i USING (cell, side)
       )"""
 
-  private[graft] val gen2LifecycleSql: String = """
+  private[graft] val gen2LifecycleSql: String = s"""
       sims AS MATERIALIZED (
         SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
+          ${OracleSql.cellCosine()}
         FROM e CROSS JOIN centn c
       ), assigned AS MATERIALIZED (
         SELECT vec_id, emb, nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims)
         WHERE cr = 1
       ), """ + rebalanceStepSqlGen("", "assigned", "centn")
@@ -418,7 +453,7 @@ object VectorOps extends QueryModule {
   }
 
   /** Fixed Lloyd passes for the [[PqK]]-centroid-per-subspace PQ
-    * codebook (VERDICT r8 #2) — shared constant with [[pqCodebookSql]].
+    * codebook — shared constant with [[pqCodebookSql]].
     */
   private[graft] val PqLloydIters = 2
 
@@ -507,9 +542,7 @@ object VectorOps extends QueryModule {
         SELECT sub, cid, v FROM (
           SELECT s.sub, c.cid, s.v,
             ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub ORDER BY
-              ROUND(list_inner_product(s.v, s.v)
-                    - 2.0 * list_inner_product(s.v, c.cv)
-                    + list_inner_product(c.cv, c.cv), 6), c.cid) AS rn
+              ${roundedL2Sql("s.v", "c.cv")}, c.cid) AS rn
           FROM ${p}s s JOIN ${p}pc${i - 1} c ON s.sub = c.sub)
         WHERE rn = 1
       ), ${p}pcd$i AS (
@@ -860,8 +893,8 @@ object VectorOps extends QueryModule {
       .withColumn("remb", zip_with(col("emb"), col("cvec"), (a, b) => a - b))
       .drop("cvec")
 
-  /** Trained per-subspace PQ codebook over the cell RESIDUALS (VERDICT
-    * r9 #1) — [[trainPqCodebook]]'s exact recipe (stride seeds +
+  /** Trained per-subspace PQ codebook over the cell RESIDUALS —
+    * [[trainPqCodebook]]'s exact recipe (stride seeds +
     * [[PqLloydIters]] Lloyd rounds, [[PqK]] centroids per subspace)
     * pointed at emb − centroid(cell). Memoized separately from the
     * raw-vector codebook (distinct constructed plan).
@@ -885,7 +918,7 @@ object VectorOps extends QueryModule {
     df.agg(array_sort(collect_list(struct(fields: _*))).as(out))
 
   /** Row-local nearest-cell assignment over a broadcast (cell, cvec,
-    * cnrm) codebook (VERDICT r8 #1): appends `cell` and `csim` (the
+    * cnrm) codebook: appends `cell` and `csim` (the
     * cosine to that cell) by scoring every centroid inside ONE
     * higher-order transform and taking the lexicographic min of
     * (−csim, cell) structs — IDENTICAL ordering to the
@@ -1015,7 +1048,7 @@ object VectorOps extends QueryModule {
       SELECT label, COUNT(*) AS n,
         CAST(CAST(CAST(SUM(norm) AS DOUBLE) / COUNT(*) AS DECIMAL(18,6)) AS DOUBLE) AS mean_norm
       FROM norms GROUP BY label ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   val vecCentroidPerLabel = Q(
     "vec_centroid_per_label",
@@ -1042,7 +1075,7 @@ object VectorOps extends QueryModule {
               UNNEST(range(len(embedding))) AS pos
             FROM embeddings)
       GROUP BY label, pos ORDER BY label, pos
-    """.stripMargin.trim))
+    """.trim))
 
   val vecCosineTopk = Q(
     "vec_cosine_topk",
@@ -1074,7 +1107,7 @@ object VectorOps extends QueryModule {
           ON e.vec_id <> q.vec_id)
       WHERE rn <= 5
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   val multimodalJoinFilter = Q(
     "multimodal_join_filter",
@@ -1104,7 +1137,7 @@ object VectorOps extends QueryModule {
       WHERE lang = 'en'
       ORDER BY cos DESC, doc_id
       LIMIT 10
-    """.stripMargin.trim))
+    """.trim))
 
   /** Exact embedding near-dup: same-label pairs with cosine ≥ 0.4 (the
     * corpus has no planted embedding near-dups; 0.4 sits just below the
@@ -1166,18 +1199,17 @@ object VectorOps extends QueryModule {
       WHERE ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                          CAST(b.embedding AS DOUBLE[])), 6) >= 0.4
       ORDER BY label, d1, d2
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN via random-hyperplane LSH: 6-bit sign-pattern bucket per hash
     * table (3 tables) from fixed pseudo-random hyperplanes, candidates
     * share a bucket, exact cosine re-rank within bucket (top-3 per
     * query, queries vec_id<50). The hyperplanes are a pure-integer LCG
     * of (table, plane, dim) — expressible in SQL — and the sign test
-    * reads the 6 dp-rounded projection, so since r11 (VERDICT r10 #4)
-    * the WHOLE chain is oracled: DuckDB regenerates the planes from the
-    * same LCG, re-buckets every vector and re-ranks from scratch.
-    * VectorOpsSpec additionally asserts recall against brute-force
-    * ground truth.
+    * reads the 6 dp-rounded projection, so the WHOLE chain is oracled: DuckDB
+    * regenerates the planes from the same LCG, re-buckets every vector and
+    * re-ranks from scratch. VectorOpsSpec additionally asserts recall against
+    * brute-force ground truth.
     */
   /** Bucketed corpus + per-query top-k within shared buckets. `emb` must
     * be (vec_id, emb: array<double>, nrm); queries are `vec_id < nQueries`.
@@ -1238,16 +1270,11 @@ object VectorOps extends QueryModule {
       import spark.implicits._
       annLshTopK(withNorm(spark, dir), nQueries = 50, k = 3).orderBy($"q_id", $"rn")
     },
-    // fully oracled (VERDICT r10 #4): DuckDB regenerates the LCG
+    // fully oracled: DuckDB regenerates the LCG
     // hyperplanes, re-buckets every vector per table, and re-ranks the
     // bucket collisions from scratch
-    Some("""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), planes AS (
+    Some(s"""
+      WITH ${OracleSql.embeddings()}, planes AS (
         SELECT t, i,
           LIST(CAST(((t*7919 + i)*2654435761 + j*40503 + 12345) % 2000 AS DOUBLE)
                / 1000.0 - 1.0 ORDER BY j) AS pv
@@ -1274,13 +1301,8 @@ object VectorOps extends QueryModule {
         WHERE t.vec_id <> q.q_id
         GROUP BY q.q_id, t.vec_id
       )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      $cosineTop3Sql
+    """.trim))
 
   /** ANN via IVF-style coarse quantization — the other standard ANN
     * family next to LSH. The codebook is the data-driven ⌈√n⌉-cell
@@ -1307,44 +1329,18 @@ object VectorOps extends QueryModule {
       import spark.implicits._
       annIvfTopK(withNorm(spark, dir), nQueries = 50, k = 3, nprobe = 3).orderBy($"q_id", $"rn")
     },
-    // oracled since r9 (VERDICT r8 #3): the whole chain — trained
+    // oracled: the whole chain — trained
     // codebook, assignment, probes, exact-cosine re-rank — is
     // deterministic double algebra DuckDB re-derives from scratch
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id < 50)
         WHERE cr <= 3
-      ), cand AS (
-        SELECT p.q_id, a.vec_id,
-          ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
-        FROM assigned a JOIN probes p USING (cell)
-        WHERE a.vec_id <> p.q_id
-      )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      ), ${probedTop3Sql("assigned")}
+    """.trim))
 
   /** Int8 scalar quantization of the embedding column — the standard
     * 4× memory cut for vector search at scale: per-dimension [min, max]
@@ -1416,7 +1412,7 @@ object VectorOps extends QueryModule {
         MIN(code) AS min_code, MAX(code) AS max_code,
         CAST(CAST(CAST(SUM(CAST(abs_err AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS DECIMAL(18,9)) AS DOUBLE) AS mean_abs_err
       FROM errs GROUP BY label ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   /** Per-dimension feature standardization (z-scoring) of the embedding
     * column — the classic ML preprocessing step. Dimension moments are
@@ -1485,7 +1481,7 @@ object VectorOps extends QueryModule {
         CAST(CAST(SQRT(CAST(SUM(CAST(zc * zc AS DECIMAL(38,12))) AS DOUBLE)) AS DECIMAL(18,6)) AS DOUBLE) AS znorm,
         CAST(MAX(CAST(ABS(zc) AS DECIMAL(18,8))) AS DOUBLE) AS max_abs_z
       FROM z GROUP BY vec_id ORDER BY vec_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Maximum-inner-product search (MIPS) top-k — the UNNORMALIZED
     * retrieval scoring recommendation / two-tower models serve (cosine
@@ -1531,7 +1527,7 @@ object VectorOps extends QueryModule {
           ON e.vec_id <> q.vec_id)
       WHERE rn <= 5
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** Matryoshka-truncation quality report — how much similarity signal
     * survives truncating embeddings to their first k dimensions
@@ -1598,7 +1594,7 @@ object VectorOps extends QueryModule {
         SQRT(CAST(ss16 AS DOUBLE) / CAST(ss_full AS DOUBLE)) AS rms_cos16,
         SQRT(CAST(ss32 AS DOUBLE) / CAST(ss_full AS DOUBLE)) AS rms_cos32
       FROM sq ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   /** Exact k-NN GRAPH audit (k = 5, cosine, global — across labels):
     * per-label hubness/consistency report — member count, mean 5th-
@@ -1712,7 +1708,7 @@ object VectorOps extends QueryModule {
         CAST(CAST(SUM(CASE WHEN recip THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
              AS DECIMAL(18,6)) AS recip_frac
       FROM marked GROUP BY label ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   /** One full LLOYD ITERATION of k-means over the embedding corpus —
     * the clustering primitive behind IVF codebook training, topic
@@ -1767,16 +1763,14 @@ object VectorOps extends QueryModule {
           round(sqrt($"dr".cast(DoubleType)), 6).as("drift"))
         .orderBy($"cid")
     },
-    Some("""
+    Some(s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
       ), c AS (
         SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id < 8
       ), d AS (
         SELECT e.vec_id, c.cid,
-          ROUND(list_inner_product(e.emb, e.emb)
-                - 2.0 * list_inner_product(e.emb, c.cemb)
-                + list_inner_product(c.cemb, c.cemb), 6) AS d2
+          ${roundedL2Sql("e.emb", "c.cemb")} AS d2
         FROM e CROSS JOIN c
       ), a AS (
         SELECT vec_id, cid, d2,
@@ -1810,7 +1804,7 @@ object VectorOps extends QueryModule {
       FROM asg JOIN drift ON asg.cid = drift.cid
       GROUP BY asg.cid
       ORDER BY asg.cid
-    """.stripMargin.trim))
+    """.trim))
 
   /** PRODUCT QUANTIZATION encode — the memory-bound ANN compression
     * standard (IVF-PQ indexes): split 64 dims into 4 subspaces of 16,
@@ -1857,9 +1851,7 @@ object VectorOps extends QueryModule {
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
       ), $pqCodebookSql, d AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM s JOIN pqcb c ON s.sub = c.sub
       ), a AS (
         SELECT vec_id, sub, cid, d2,
@@ -1871,7 +1863,7 @@ object VectorOps extends QueryModule {
       FROM a WHERE rn = 1
       GROUP BY sub, cid
       ORDER BY sub, cid
-    """.stripMargin.trim))
+    """.trim))
 
   /** PQ ASYMMETRIC DISTANCE top-k (ADC) — the query-time half of the
     * IVF-PQ architecture that `vec_pq_encode` trains: the corpus lives
@@ -1921,9 +1913,7 @@ object VectorOps extends QueryModule {
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
       ), $pqCodebookSql, d AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM s JOIN pqcb c ON s.sub = c.sub
       ), codes AS (
         SELECT vec_id, sub, cid FROM (
@@ -1946,7 +1936,7 @@ object VectorOps extends QueryModule {
         FROM adists)
       WHERE rn <= 5
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** SEMANTIC DEDUPLICATION (SemDeDup-shaped) — the embedding-space
     * curation pass LLM pipelines run after exact/near-text dedup:
@@ -1994,22 +1984,7 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, nrm, cell, csim FROM (
-          SELECT vec_id, emb, nrm, cell, csim,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), flagged AS (
+      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell, csim")}, flagged AS (
         SELECT a.cell, a.vec_id,
           CASE WHEN EXISTS (
             SELECT 1 FROM assigned b
@@ -2023,7 +1998,7 @@ object VectorOps extends QueryModule {
         CAST(SUM(is_dup) AS BIGINT) AS n_dups,
         CAST(COUNT(*) - SUM(is_dup) AS BIGINT) AS n_kept
       FROM flagged GROUP BY cell ORDER BY cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** IVF-PQ — the composition the two halves exist for, and the
     * architecture real 100 TB vector search deploys (FAISS-style): the
@@ -2033,7 +2008,7 @@ object VectorOps extends QueryModule {
     * is PQ asymmetric lookup (4 code lookups per candidate from the
     * query's broadcast LUT, exactly `vec_pq_adc_topk`'s trade) — so
     * the scan touches neither most of the corpus NOR any full vector.
-    * Oracled since r9 (VERDICT r8 #3): DuckDB re-derives codebooks,
+    * Oracled: DuckDB re-derives codebooks,
     * codes, LUT and ADC top-k from scratch. VectorOpsSpec additionally
     * asserts the internal-consistency property that cell restriction
     * can only LOSE candidates — rank-wise approximate distance of the
@@ -2055,8 +2030,8 @@ object VectorOps extends QueryModule {
     val q = e.filter(col("vec_id") < nQueries)
     val probes = withNearestCells(q, cents, nprobe, rounded = true)
       .select(col("vec_id").as("q_id"), col("cell"))
-    // PQ half: TRAINED subspace codebook (stride seeds + Lloyd rounds,
-    // VERDICT r8 #2), row-local per-vector codes, query LUT
+    // PQ half: TRAINED subspace codebook (stride seeds + Lloyd rounds),
+    // row-local per-vector codes, query LUT
     val cb = trainPqCodebook(e)
     // one map pass: each corpus vector gets its IVF cell AND its 4 PQ
     // codes row-locally — no encode window, no assignment Exchange
@@ -2077,37 +2052,20 @@ object VectorOps extends QueryModule {
       annIvfpqTopK(withNorm(spark, dir), nQueries = 8, k = 5, nprobe = 3)
         .orderBy($"q_id", $"rn")
     },
-    // oracled since r9 (VERDICT r8 #3): trained IVF + PQ codebooks,
+    // oracled: trained IVF + PQ codebooks,
     // codes, LUT and the 4-term decimal ADC sum are all re-derived by
     // DuckDB from scratch — same chain as vec_ann_ivfpq_serve at the
     // in-plan row's (8 queries, k=5) configuration
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, cell FROM (
-          SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${ivfAssignedSql("vec_id, cell")}, probes AS (
         SELECT vec_id AS q_id, cell FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id < 8)
         WHERE cr <= 3
       ), $pqCodebookSql, d AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM s JOIN pqcb c ON s.sub = c.sub
       ), codes AS (
         SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
@@ -2133,17 +2091,17 @@ object VectorOps extends QueryModule {
         FROM adists)
       WHERE rn <= 5
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN RECALL@k AUDIT — the driver-visible quality number for the ANN
-    * stack (VERDICT r5 #3): IVF-PQ's top-5 candidates (nprobe=3, the
+    * stack: IVF-PQ's top-5 candidates (nprobe=3, the
     * production configuration of `vec_ann_ivfpq`, widened to 50 queries)
     * scored against the EXACT squared-L2 top-5 for the same queries —
     * the metric ADC approximates, so recall isolates quantization +
     * cell-pruning loss rather than metric mismatch. Declared output is
     * per-label mean recall@3 / recall@5 over the label's queries: the
     * report a platform runs before trusting an ANN index in production.
-    * Oracled since r9 (VERDICT r8 #3) — the full approximate + exact
+    * Oracled — the full approximate + exact
     * chain is deterministic; DriftGraphSpec additionally asserts range,
     * query coverage, and that the index beats the random-candidates
     * baseline.
@@ -2182,36 +2140,19 @@ object VectorOps extends QueryModule {
             .as("recall_at_5"))
         .orderBy($"label")
     },
-    // oracled since r9 (VERDICT r8 #3): the IVF-PQ approximate side is
+    // oracled: the IVF-PQ approximate side is
     // the vec_ann_ivfpq chain at 50 queries, the exact side is the same
     // rounded L2 identity — both re-derived in full by DuckDB
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, cell FROM (
-          SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${ivfAssignedSql("vec_id, cell")}, probes AS (
         SELECT vec_id AS q_id, cell FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id < 50)
         WHERE cr <= 3
       ), $pqCodebookSql, d AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM s JOIN pqcb c ON s.sub = c.sub
       ), codes AS (
         SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
@@ -2243,9 +2184,7 @@ object VectorOps extends QueryModule {
         SELECT q_id, vec_id, rn AS e_rn FROM (
           SELECT q.q_id, e.vec_id,
             ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-              ROUND(list_inner_product(e.emb, e.emb)
-                    - 2.0 * list_inner_product(e.emb, q.q_emb)
-                    + list_inner_product(q.q_emb, q.q_emb), 6), e.vec_id) AS rn
+              ${roundedL2Sql("e.emb", "q.q_emb")}, e.vec_id) AS rn
           FROM e JOIN qe q ON e.vec_id <> q.q_id)
         WHERE rn <= 5
       ), hits AS (
@@ -2261,14 +2200,14 @@ object VectorOps extends QueryModule {
       FROM qe q LEFT JOIN hits h ON q.q_id = h.q_id
       GROUP BY q.q_label
       ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   /** SCALABLE EMBEDDING NEAR-DUP — the declared twin of
-    * `dedup_embedding_cosine` (VERDICT r5 #7), mirroring the
+    * `dedup_embedding_cosine`, mirroring the
     * jaccard-exact / minhash-scalable pairing: IVF-cell CANDIDATE
     * GENERATION (each vector multi-probes its 3 nearest centroid cells —
-    * the recall knob; Lloyd-trained cells are tighter than the r8 seed
-    * cells, so loose-τ pairs need one more probe to keep colliding —
+    * the recall knob; Lloyd-trained cells are tight, so loose-τ pairs
+    * need a third probe to keep colliding —
     * so boundary-straddling pairs still collide) + exact cosine CONFIRM
     * at the same τ=0.4. The exact row stays the all-pairs baseline;
     * this is the plan that survives 100×.
@@ -2284,7 +2223,7 @@ object VectorOps extends QueryModule {
     */
   /** Candidate generation + exact-cosine confirm for a GIVEN codebook —
     * factored so the recall-parity spec can pin two different nlist
-    * values against the same confirm logic (VERDICT r6 #1).
+    * values against the same confirm logic.
     */
   def annNearDupPairs(e: org.apache.spark.sql.DataFrame,
                       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -2312,19 +2251,11 @@ object VectorOps extends QueryModule {
       annNearDupPairs(e, ivfCodebook(e)).orderBy($"d1", $"d2")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
+      WITH ${OracleSql.embeddings("vec_id")}, $ivfCodebookSql,
+      ${OracleSql.cellSims()}, assigned AS (
         SELECT vec_id, emb, nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims)
         WHERE cr <= 3
       )
@@ -2333,7 +2264,7 @@ object VectorOps extends QueryModule {
       FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
       WHERE ROUND(list_inner_product(a.emb, b.emb) / (a.nrm * b.nrm), 6) >= 0.4
       ORDER BY d1, d2
-    """.stripMargin.trim))
+    """.trim))
 
   /** GREEDY k-CENTER CORESET (SURVEY §2 I-sext) — the diversity-first
     * selection rule training-data curation uses to cover an embedding
@@ -2390,9 +2321,7 @@ object VectorOps extends QueryModule {
         s"""c$i AS MATERIALIZED (
         SELECT $i AS rnd, vec_id, label, emb, mind AS radius_sq FROM (
           SELECT e.vec_id, e.label, e.emb,
-            MIN(ROUND(list_inner_product(e.emb, e.emb)
-                      - 2.0 * list_inner_product(e.emb, c.emb)
-                      + list_inner_product(c.emb, c.emb), 6)) AS mind
+            MIN(${roundedL2Sql("e.emb", "c.emb")}) AS mind
           FROM e CROSS JOIN ch${i - 1} c
           GROUP BY e.vec_id, e.label, e.emb)
         ORDER BY mind DESC, vec_id LIMIT 1
@@ -2408,7 +2337,7 @@ object VectorOps extends QueryModule {
         FROM e ORDER BY vec_id LIMIT 1
       ), $rounds
       SELECT rnd, vec_id, label, radius_sq FROM ch8 ORDER BY rnd
-      """.stripMargin.trim
+      """.trim
     })
 
   /** ANN serve from the PERSISTED IVF index (SURVEY §2 I-sept) — the
@@ -2438,40 +2367,14 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id < 50)
         WHERE cr <= 3
-      ), cand AS (
-        SELECT p.q_id, a.vec_id,
-          ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
-        FROM assigned a JOIN probes p USING (cell)
-        WHERE a.vec_id <> p.q_id
-      )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      ), ${probedTop3Sql("assigned")}
+    """.trim))
 
   /** ANN serve from the PERSISTED IVF-PQ index (SURVEY §2 I-oct) — the
     * full FAISS-style production path on disk: [[IvfIndex.ensurePq]]
@@ -2510,32 +2413,15 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, cell FROM (
-          SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${ivfAssignedSql("vec_id, cell")}, probes AS (
         SELECT vec_id AS q_id, cell FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id < 50)
         WHERE cr <= 3
       ), $pqCodebookSql, d AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM s JOIN pqcb c ON s.sub = c.sub
       ), codes AS (
         SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
@@ -2561,7 +2447,7 @@ object VectorOps extends QueryModule {
         FROM adists)
       WHERE rn <= 3
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** Maximal-marginal-relevance diversified top-k (SURVEY §2 I-non) —
     * the retrieval-side diversity pass a RAG / training-data curation
@@ -2664,7 +2550,7 @@ object VectorOps extends QueryModule {
         FROM cands ORDER BY rel DESC, vec_id LIMIT 1
       ), $rounds
       SELECT rnd, vec_id, label, rel, max_sim, mmr_score FROM ch5 ORDER BY rnd
-      """.stripMargin.trim
+      """.trim
     })
 
   /** IVF INDEX MAINTENANCE — cell rebalance audit (round-9 second
@@ -2761,12 +2647,7 @@ object VectorOps extends QueryModule {
         .orderBy($"cell", $"side")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql,$gen2LifecycleSql, sides AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,$gen2LifecycleSql, sides AS (
         SELECT cell, n_cell, side, COUNT(*) AS n_side
         FROM asg GROUP BY cell, n_cell, side
       ), newc AS (
@@ -2777,9 +2658,9 @@ object VectorOps extends QueryModule {
       SELECT s.cell, s.n_cell, s.side, s.n_side, n.cnrm_new
       FROM sides s JOIN newc n USING (cell, side)
       ORDER BY s.cell, s.side
-    """.stripMargin.trim))
+    """.trim))
 
-  /** IVF INDEX MAINTENANCE — rebalance APPLY (VERDICT r9 #2), the write
+  /** IVF INDEX MAINTENANCE — rebalance APPLY, the write
     * half completing [[vecIvfCellRebalance]]'s read half: consume the
     * SAME [[splitPlan]] and persist INDEX GENERATION 2
     * ([[IvfIndex.ensureRebalanced]]) — split cells replaced by their two
@@ -2812,18 +2693,13 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql,$gen2LifecycleSql, pops2 AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,$gen2LifecycleSql, pops2 AS (
         SELECT cell, COUNT(*) AS n_cell FROM idx2 GROUP BY cell
       )
       SELECT p.cell, p.n_cell, ROUND(b.cnrm, 6) AS cnrm
       FROM pops2 p JOIN cb2 b USING (cell)
       ORDER BY p.cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN SERVE FROM GENERATION 2 — the read end of the rebalance
     * lifecycle (build gen-1 → audit plan → apply gen-2 → THIS):
@@ -2859,35 +2735,19 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql,$gen2LifecycleSql, qsims AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,$gen2LifecycleSql, qsims AS (
         SELECT e.vec_id, e.emb, e.nrm, b.cell,
-          ROUND(list_inner_product(e.emb, b.cvec) / (e.nrm * b.cnrm), 6) AS csim
+          ${OracleSql.cellCosine("b")}
         FROM e CROSS JOIN cb2 b
         WHERE e.vec_id % 10 = 7 AND e.vec_id < 500
       ), probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM qsims)
         WHERE cr <= 3
-      ), cand AS (
-        SELECT p.q_id, a.vec_id,
-          ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
-        FROM idx2 a JOIN probes p USING (cell)
-        WHERE a.vec_id <> p.q_id
-      )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      ), ${probedTop3Sql("idx2")}
+    """.trim))
 
   /** GENERATION BALANCE AUDIT — the observability row closing the
     * maintenance loop (stats → plan → apply → refresh → serve): both
@@ -2919,12 +2779,7 @@ object VectorOps extends QueryModule {
         .orderBy($"generation")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql,$gen2LifecycleSql, nc2 AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,$gen2LifecycleSql, nc2 AS (
         SELECT (SELECT COUNT(*) FROM centn)
              - (SELECT COUNT(*) FROM over_cells)
              + (SELECT COUNT(*) FROM splitc) AS n_cells
@@ -2945,7 +2800,7 @@ object VectorOps extends QueryModule {
         ROUND(max_cell * n_cells / CAST(n_vecs AS DOUBLE), 6) AS skew
       FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
       ORDER BY generation
-    """.stripMargin.trim))
+    """.trim))
 
   /** INCREMENTAL RESIDUAL-CODE REFRESH after the applied rebalance —
     * the third maintenance row of the gen-2 lifecycle
@@ -2978,12 +2833,7 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql,$gen2LifecycleSql, rese AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,$gen2LifecycleSql, rese AS (
         SELECT a.vec_id,
           list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] - c.cvec[i]) AS emb
         FROM assigned a JOIN centn c USING (cell)
@@ -2997,9 +2847,7 @@ object VectorOps extends QueryModule {
         FROM res2, (SELECT UNNEST(range($PqrM)) AS sub)
       ), r2d AS (
         SELECT s.vec_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM r2s s JOIN rpqcb c ON s.sub = c.sub
       ), codes2 AS (
         SELECT vec_id, cell, sub, cid FROM (
@@ -3012,17 +2860,17 @@ object VectorOps extends QueryModule {
       )
       SELECT cell, COUNT(*) AS n_vec, CAST(SUM(cs) AS BIGINT) AS codes_sum
       FROM vsum GROUP BY cell ORDER BY cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** RECALL-vs-NPROBE CURVE from the persisted RESIDUAL-PQ index
-    * (VERDICT r9 #1) — the tuning table an operator reads to pick
+    * — the tuning table an operator reads to pick
     * nprobe: for nprobe ∈ {1, 3, 8}, micro-averaged recall@3/@5 of the
     * residual-ADC top-5 against the exact rounded-L2 top-5, over 50
     * queries DISJOINT from both codebooks' stride-seed sets (vec_id ≡ 7
-    * mod 10 — seed-query leakage is what made the r8 recall numbers a
-    * lie, RECALL.md). One ADC pass at the widest nprobe computes every
-    * candidate with its probe rank `cr`; the three curve points are
-    * windows over `cr ≤ nprobe` cuts of that ONE candidate set.
+    * mod 10 — seed-query leakage inflates recall, RECALL.md). One ADC pass at
+    * the widest nprobe computes every candidate with its probe rank `cr`; the
+    * three curve points are windows over `cr ≤ nprobe` cuts of that ONE
+    * candidate set.
     *
     * Scale notes (100 TB): reads ONLY persisted artifacts — probes and
     * the per-(query, probed-cell) residual LUT broadcast (queries ×
@@ -3050,28 +2898,13 @@ object VectorOps extends QueryModule {
     // residuals, residual-PQ codebook, codes, per-(q, cell) LUT, the
     // single widest-nprobe ADC pass and all three curve points
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, cell FROM (
-          SELECT vec_id, emb, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), qe AS (
+      WITH ${ivfAssignedSql("vec_id, emb, cell")}, qe AS (
         SELECT vec_id AS q_id, emb AS q_emb FROM e
         WHERE vec_id % 10 = 7 AND vec_id < 500
       ), probes AS (
         SELECT vec_id AS q_id, cell, cr FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 8
       ), rese AS (
@@ -3080,9 +2913,7 @@ object VectorOps extends QueryModule {
         FROM assigned a JOIN centn c USING (cell)
       ), $pqResidualCodebookSql, rd AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM rs s JOIN rpqcb c ON s.sub = c.sub
       ), rcodes AS (
         SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
@@ -3100,9 +2931,7 @@ object VectorOps extends QueryModule {
         FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
       ), qlut AS (
         SELECT s.q_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS qd2
+          ${roundedL2Sql("s.v", "c.cv")} AS qd2
         FROM qsl s JOIN rpqcb c ON s.sub = c.sub
       ), adists AS (
         SELECT p.q_id, k.vec_id, p.cr,
@@ -3126,9 +2955,7 @@ object VectorOps extends QueryModule {
         SELECT q_id, vec_id, rn AS e_rn FROM (
           SELECT q.q_id, e.vec_id,
             ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-              ROUND(list_inner_product(e.emb, e.emb)
-                    - 2.0 * list_inner_product(e.emb, q.q_emb)
-                    + list_inner_product(q.q_emb, q.q_emb), 6), e.vec_id) AS rn
+              ${roundedL2Sql("e.emb", "q.q_emb")}, e.vec_id) AS rn
           FROM e JOIN qe q ON e.vec_id <> q.q_id)
         WHERE rn <= 5
       ), hits AS (
@@ -3145,23 +2972,21 @@ object VectorOps extends QueryModule {
         CAST(COALESCE(h.h5, 0) AS DOUBLE) / (nq.n_queries * 5) AS recall_at_5
       FROM np n CROSS JOIN nq LEFT JOIN hits h ON n.nprobe = h.nprobe
       ORDER BY n.nprobe
-    """.stripMargin.trim))
+    """.trim))
 
   /** EXACT REFINE stage on the persisted residual-IVF-PQ serve path
-    * (SURVEY §2 I-duodec, VERDICT r10 #1 — the FAISS IndexRefineFlat
-    * pattern): ADC ranking inside the probed cells is lossy (RECALL.md:
-    * end-to-end recall@3 = 0.420 at nprobe=8 vs its own 0.640
-    * cell-stage ceiling — the residual-PQ distance misorders ~1/3 of
-    * the reachable hits), and the standard deterministic fix is a
-    * two-stage serve: (1) ADC SHORTLIST — the `vec_ann_recall_curve`
-    * candidate chain at nprobe=8 ranks the probed cells' codes and
-    * keeps the top R=20 per query (adist asc, vec_id tiebreak);
-    * (2) EXACT RE-RANK — those R rows' FULL vectors (and only those)
-    * are read back from the bucketed index and scored by exact
-    * rounded-L2 against the query, top-3 with id tiebreaks. The
-    * queries are the 50 disjoint-sample vectors (vec_id ≡ 7 mod 10,
-    * < 500 — outside both codebooks' stride-seed sets, the honest
-    * population per RECALL.md).
+    * (SURVEY §2 I-duodec, the FAISS IndexRefineFlat pattern): ADC ranking
+    * inside the probed cells is lossy (RECALL.md: end-to-end recall@3 = 0.420
+    * at nprobe=8 vs its own 0.640 cell-stage ceiling — the residual-PQ
+    * distance misorders ~1/3 of the reachable hits), and the standard
+    * deterministic fix is a two-stage serve: (1) ADC SHORTLIST — the
+    * `vec_ann_recall_curve` candidate chain at nprobe=8 ranks the probed
+    * cells' codes and keeps the top R=20 per query (adist asc, vec_id
+    * tiebreak); (2) EXACT RE-RANK — those R rows' FULL vectors (and only
+    * those) are read back from the bucketed index and scored by exact
+    * rounded-L2 against the query, top-3 with id tiebreaks. The queries are
+    * the 50 disjoint-sample vectors (vec_id ≡ 7 mod 10, < 500 — outside both
+    * codebooks' stride-seed sets, the honest population per RECALL.md).
     *
     * Scale notes (100 TB): the shortlist pass is the codes-only ADC
     * scan the curve row already prices (probes + per-(query, cell)
@@ -3200,28 +3025,13 @@ object VectorOps extends QueryModule {
     // → per-(q, cell) LUT → ADC) extended by the top-R shortlist cut
     // and the exact re-rank against the corpus vectors
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, cell FROM (
-          SELECT vec_id, emb, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), qe AS (
+      WITH ${ivfAssignedSql("vec_id, emb, cell")}, qe AS (
         SELECT vec_id AS q_id, emb AS q_emb FROM e
         WHERE vec_id % 10 = 7 AND vec_id < 500
       ), probes AS (
         SELECT vec_id AS q_id, cell, cr FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 8
       ), rese AS (
@@ -3230,9 +3040,7 @@ object VectorOps extends QueryModule {
         FROM assigned a JOIN centn c USING (cell)
       ), $pqResidualCodebookSql, rd AS (
         SELECT s.vec_id, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM rs s JOIN rpqcb c ON s.sub = c.sub
       ), rcodes AS (
         SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
@@ -3250,9 +3058,7 @@ object VectorOps extends QueryModule {
         FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
       ), qlut AS (
         SELECT s.q_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS qd2
+          ${roundedL2Sql("s.v", "c.cv")} AS qd2
         FROM qsl s JOIN rpqcb c ON s.sub = c.sub
       ), adists AS (
         SELECT p.q_id, k.vec_id,
@@ -3271,9 +3077,7 @@ object VectorOps extends QueryModule {
         WHERE srn <= 20
       ), refined AS (
         SELECT s.q_id, s.vec_id,
-          ROUND(list_inner_product(e.emb, e.emb)
-                - 2.0 * list_inner_product(e.emb, q.q_emb)
-                + list_inner_product(q.q_emb, q.q_emb), 6) AS d2
+          ${roundedL2Sql("e.emb", "q.q_emb")} AS d2
         FROM shortlist s
         JOIN e ON e.vec_id = s.vec_id
         JOIN qe q ON q.q_id = s.q_id
@@ -3284,7 +3088,7 @@ object VectorOps extends QueryModule {
         FROM refined)
       WHERE rn <= 3
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** Shared DuckDB mirror of the incremental-ADD lifecycle
     * ([[IvfIndex.ensureBase]] / [[IvfIndex.ensureAppended]]) — the
@@ -3307,12 +3111,12 @@ object VectorOps extends QueryModule {
         SELECT vec_id, label, emb, nrm FROM e WHERE vec_id % 10 <> 3
       ), ${ivfCodebookSqlGen("be", "b", "be")}, bsims AS (
         SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
+          ${OracleSql.cellCosine()}
         FROM e CROSS JOIN bcentn c
       ), ball AS (
         SELECT vec_id, emb, nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM bsims)
         WHERE cr = 1
       )"""
@@ -3344,9 +3148,7 @@ object VectorOps extends QueryModule {
         FROM resall, (SELECT UNNEST(range($PqrM)) AS sub)
       ), rad AS (
         SELECT s.vec_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM ras s JOIN rpqcb c ON s.sub = c.sub
       ), racodes AS (
         SELECT vec_id, cell, sub, cid FROM (
@@ -3356,8 +3158,8 @@ object VectorOps extends QueryModule {
         WHERE rn = 1
       )"""
 
-  /** INCREMENTAL ADD to the persisted IVF index (SURVEY §2 I-duodec,
-    * VERDICT r10 #2) — the most common production index operation: a
+  /** INCREMENTAL ADD to the persisted IVF index (SURVEY §2 I-duodec)
+    * — the most common production index operation: a
     * NEW vector batch joins the index without a rebuild.
     * [[IvfIndex.ensureAppended]] assigns the batch (vec_id ≡ 3 mod 10)
     * ROW-LOCALLY to the BASE generation's cells (broadcast codebook,
@@ -3389,16 +3191,11 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $baseAppendLifecycleSql
+      WITH ${OracleSql.embeddings()}, $baseAppendLifecycleSql
       SELECT cell, COUNT(*) AS n_total,
         COUNT(CASE WHEN vec_id % 10 = 3 THEN 1 END) AS n_appended
       FROM ball GROUP BY cell ORDER BY cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN SERVE from the POST-APPEND index (SURVEY §2 I-duodec) — the
     * proof the appended rows are LIVE for retrieval the moment the
@@ -3424,30 +3221,14 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $baseAppendLifecycleSql, probes AS (
+      WITH ${OracleSql.embeddings()}, $baseAppendLifecycleSql, probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM bsims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 3
-      ), cand AS (
-        SELECT p.q_id, a.vec_id,
-          ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
-        FROM ball a JOIN probes p USING (cell)
-        WHERE a.vec_id <> p.q_id
-      )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      ), ${probedTop3Sql("ball")}
+    """.trim))
 
   /** INCREMENTAL residual-CODE append beside the index append (SURVEY
     * §2 I-duodec) — the codes-table half of the ADD lifecycle
@@ -3477,19 +3258,14 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $baseAppendLifecycleSql, $basePqrCodesSql, vsum AS (
+      WITH ${OracleSql.embeddings()}, $baseAppendLifecycleSql, $basePqrCodesSql, vsum AS (
         SELECT vec_id, cell, SUM(cid) AS cs FROM racodes GROUP BY vec_id, cell
       )
       SELECT cell, COUNT(*) AS n_vec, CAST(SUM(cs) AS BIGINT) AS codes_sum
       FROM vsum GROUP BY cell ORDER BY cell
-    """.stripMargin.trim))
+    """.trim))
 
-  /** GENERATION CHAIN audit (SURVEY §2 I-duodec, VERDICT r10 #3) — the
+  /** GENERATION CHAIN audit (SURVEY §2 I-duodec) — the
     * rebalance lifecycle as a NIGHTLY chain instead of a single step:
     * [[IvfIndex.ensureGen]] parameterizes the generation ordinal
     * (generation g derives from g−1 by one [[splitPlan]] apply,
@@ -3524,12 +3300,8 @@ object VectorOps extends QueryModule {
       }.reduce(_ unionByName _).orderBy($"generation")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql,$gen2LifecycleSql, ${rebalanceStepSqlGen("c3", "idx2", "cb2")}, g1 AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,$gen2LifecycleSql,
+      ${rebalanceStepSqlGen("c3", "idx2", "cb2")}, g1 AS (
         SELECT CAST(1 AS BIGINT) AS generation,
           (SELECT COUNT(*) FROM centn) AS n_cells,
           CAST(SUM(n_cell) AS BIGINT) AS n_vecs, MAX(n_cell) AS max_cell
@@ -3551,7 +3323,7 @@ object VectorOps extends QueryModule {
         ROUND(max_cell * n_cells / CAST(n_vecs AS DOUBLE), 6) AS skew
       FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2 UNION ALL SELECT * FROM g3)
       ORDER BY generation
-    """.stripMargin.trim))
+    """.trim))
 
   /** TOMBSTONE DELETE audit (SURVEY §2 I-duodec) — the write half of
     * the delete lifecycle: [[IvfIndex.ensureTombstones]] lands the
@@ -3583,22 +3355,8 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, cell FROM (
-          SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), pops AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,
+      ${OracleSql.cellSims("e.vec_id")}, ${OracleSql.assignedCells("vec_id, cell")}, pops AS (
         SELECT cell, COUNT(*) AS n_total FROM assigned GROUP BY cell
       ), dels AS (
         SELECT cell, COUNT(*) AS n_del FROM assigned
@@ -3608,7 +3366,7 @@ object VectorOps extends QueryModule {
         COALESCE(d.n_del, 0) * 10 >= p.n_total AS compact_due
       FROM pops p LEFT JOIN dels d USING (cell)
       ORDER BY p.cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN SERVE WITH DELETES LIVE (SURVEY §2 I-duodec) — the read path
     * between a delete and its compaction: tombstoned rows are excluded
@@ -3635,25 +3393,10 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, emb, nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      ), probes AS (
+      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM sims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 3
       ), cand AS (
@@ -3662,13 +3405,8 @@ object VectorOps extends QueryModule {
         FROM assigned a JOIN probes p USING (cell)
         WHERE a.vec_id <> p.q_id AND a.vec_id % 10 <> 9
       )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      $cosineTop3Sql
+    """.trim))
 
   /** TOMBSTONE COMPACTION (SURVEY §2 I-duodec) — the write-forward
     * apply dropping deleted rows physically once tombstones accumulate
@@ -3692,26 +3430,12 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
-        SELECT e.vec_id, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
-        FROM e CROSS JOIN centn c
-      ), assigned AS (
-        SELECT vec_id, cell FROM (
-          SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
-          FROM sims)
-        WHERE cr = 1
-      )
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql,
+      ${OracleSql.cellSims("e.vec_id")}, ${OracleSql.assignedCells("vec_id, cell")}
       SELECT cell, COUNT(*) AS n_vec, CAST(SUM(vec_id) AS BIGINT) AS id_sum
       FROM assigned WHERE vec_id % 10 <> 9
       GROUP BY cell ORDER BY cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** Shared DuckDB mirror of the multi-assignment family
     * ([[IvfIndex.ensureSpilled]]) — the [[baseAppendLifecycleSql]]
@@ -3728,19 +3452,19 @@ object VectorOps extends QueryModule {
   private[graft] val spillLifecycleSql: String = s"""
       ${ivfCodebookSqlGen("e", "sp", "embeddings", IvfIndex.SpillFactor)}, ssims AS (
         SELECT e.vec_id, e.emb, e.nrm, c.cell,
-          ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) AS csim
+          ${OracleSql.cellCosine()}
         FROM e CROSS JOIN spcentn c
       ), sassign AS (
         SELECT vec_id, emb, nrm, cell, cr AS crank FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM ssims)
         WHERE cr <= ${IvfIndex.SpillK}
       )"""
 
   /** BUILD-TIME MULTI-ASSIGNMENT index audit (SURVEY §2 I-tredec,
-    * VERDICT r11 #2 — the IVF geometry ceiling was the binding recall
-    * bound): [[IvfIndex.ensureSpilled]] persists the FAISS
+    * the IVF geometry ceiling is the binding recall bound):
+    * [[IvfIndex.ensureSpilled]] persists the FAISS
     * multi-assignment layout — nlist = [[IvfIndex.SpillFactor]]·⌈√n⌉
     * trained cells, every vector stored in its [[IvfIndex.SpillK]]
     * nearest cells with its probe rank. RECALL.md r12 sweep: at the
@@ -3767,17 +3491,12 @@ object VectorOps extends QueryModule {
         .orderBy($"cell")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $spillLifecycleSql
+      WITH ${OracleSql.embeddings()}, $spillLifecycleSql
       SELECT cell, COUNT(*) AS n_members,
         COUNT(CASE WHEN crank = 1 THEN 1 END) AS n_primary,
         CAST(SUM(vec_id) AS BIGINT) AS id_sum
       FROM sassign GROUP BY cell ORDER BY cell
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN SERVE FROM THE SPILLED INDEX (SURVEY §2 I-tredec) at the
     * measured operating point — nprobe=16 of nlist = 4·⌈√n⌉ ≈ 17.7% of
@@ -3804,15 +3523,10 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $spillLifecycleSql, probes AS (
+      WITH ${OracleSql.embeddings()}, $spillLifecycleSql, probes AS (
         SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
           SELECT vec_id, emb, nrm, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM ssims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 16
       ), cand AS (
@@ -3821,21 +3535,15 @@ object VectorOps extends QueryModule {
         FROM sassign a JOIN probes p USING (cell)
         WHERE a.vec_id <> p.q_id
       )
-      SELECT q_id, vec_id, cos, rn FROM (
-        SELECT q_id, vec_id, cos,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        FROM cand)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
-    """.stripMargin.trim))
+      $cosineTop3Sql
+    """.trim))
 
-  /** THE COMPOSED PRODUCTION SERVE PATH (SURVEY §2 I-tredec, VERDICT
-    * r11 #1): every index-lifecycle dimension proven separately in
-    * round 11 — freshest-generation resolution, append visibility,
-    * tombstone exclusion, ADC shortlist, exact refine — composed into
-    * ONE declared plan, because composition is where freshness and
-    * exclusion bugs live. The query path a production retrieval service
-    * actually runs:
+  /** THE COMPOSED PRODUCTION SERVE PATH (SURVEY §2 I-tredec): every
+    * index-lifecycle dimension proven separately — freshest-generation
+    * resolution, append visibility, tombstone exclusion, ADC shortlist, exact
+    * refine — composed into ONE declared plan, because composition is where
+    * freshness and exclusion bugs live. The query path a production retrieval
+    * service actually runs:
     *
     *  1. [[IvfIndex.serveFreshestApp]] resolves the freshest current
     *     generation of the append family (appended when its fingerprint
@@ -3897,18 +3605,13 @@ object VectorOps extends QueryModule {
     // + probes + per-(q,cell) LUT + tombstone-filtered ADC + shortlist
     // + exact refine
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $baseAppendLifecycleSql, $basePqrCodesSql, qe AS (
+      WITH ${OracleSql.embeddings()}, $baseAppendLifecycleSql, $basePqrCodesSql, qe AS (
         SELECT vec_id AS q_id, emb AS q_emb FROM e
         WHERE vec_id % 10 = 7 AND vec_id < 500
       ), probes AS (
         SELECT vec_id AS q_id, cell FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM bsims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 8
       ), qres AS (
@@ -3920,9 +3623,7 @@ object VectorOps extends QueryModule {
         FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
       ), qlut AS (
         SELECT s.q_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS qd2
+          ${roundedL2Sql("s.v", "c.cv")} AS qd2
         FROM qsl s JOIN rpqcb c ON s.sub = c.sub
       ), adists AS (
         SELECT p.q_id, k.vec_id,
@@ -3941,9 +3642,7 @@ object VectorOps extends QueryModule {
         WHERE srn <= 20
       ), refined AS (
         SELECT s.q_id, s.vec_id,
-          ROUND(list_inner_product(a.emb, a.emb)
-                - 2.0 * list_inner_product(a.emb, q.q_emb)
-                + list_inner_product(q.q_emb, q.q_emb), 6) AS d2
+          ${roundedL2Sql("a.emb", "q.q_emb")} AS d2
         FROM shortlist s
         JOIN ball a ON a.vec_id = s.vec_id
         JOIN qe q ON q.q_id = s.q_id
@@ -3954,7 +3653,7 @@ object VectorOps extends QueryModule {
         FROM refined)
       WHERE rn <= 3
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** END-TO-END SERVE ON THE SPILLED GEOMETRY (SURVEY §2 I-tredec) —
     * the follow-through on the raised ceiling: `vec_ann_ivf_serve_spill`
@@ -4000,12 +3699,7 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $spillLifecycleSql, sprese AS (
+      WITH ${OracleSql.embeddings()}, $spillLifecycleSql, sprese AS (
         SELECT a.vec_id,
           list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] - c.cvec[i]) AS emb
         FROM sassign a JOIN spcentn c USING (cell)
@@ -4020,9 +3714,7 @@ object VectorOps extends QueryModule {
         FROM spresall, (SELECT UNNEST(range($PqrM)) AS sub)
       ), sprad AS (
         SELECT s.vec_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS d2
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
         FROM spras s JOIN rpqcb c ON s.sub = c.sub
       ), spracodes AS (
         SELECT vec_id, cell, sub, cid FROM (
@@ -4036,7 +3728,7 @@ object VectorOps extends QueryModule {
       ), probes AS (
         SELECT vec_id AS q_id, cell FROM (
           SELECT vec_id, cell,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS cr
+            ${OracleSql.cellRank}
           FROM ssims WHERE vec_id % 10 = 7 AND vec_id < 500)
         WHERE cr <= 16
       ), qres AS (
@@ -4048,9 +3740,7 @@ object VectorOps extends QueryModule {
         FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
       ), qlut AS (
         SELECT s.q_id, s.cell, s.sub, c.cid,
-          ROUND(list_inner_product(s.v, s.v)
-                - 2.0 * list_inner_product(s.v, c.cv)
-                + list_inner_product(c.cv, c.cv), 6) AS qd2
+          ${roundedL2Sql("s.v", "c.cv")} AS qd2
         FROM qsl s JOIN rpqcb c ON s.sub = c.sub
       ), cop AS (
         SELECT p.q_id, k.vec_id, k.cell,
@@ -4071,9 +3761,7 @@ object VectorOps extends QueryModule {
         WHERE srn <= 20
       ), refined AS (
         SELECT s.q_id, s.vec_id,
-          ROUND(list_inner_product(a.emb, a.emb)
-                - 2.0 * list_inner_product(a.emb, q.q_emb)
-                + list_inner_product(q.q_emb, q.q_emb), 6) AS d2
+          ${roundedL2Sql("a.emb", "q.q_emb")} AS d2
         FROM shortlist s
         JOIN (SELECT vec_id, emb FROM sassign WHERE crank = 1) a
           ON a.vec_id = s.vec_id
@@ -4085,7 +3773,7 @@ object VectorOps extends QueryModule {
         FROM refined)
       WHERE rn <= 3
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     vecAnnServeProduction,
@@ -4203,7 +3891,7 @@ object VectorOps extends QueryModule {
       JOIN (SELECT label, n FROM counts WHERE half = 0) n0 USING (label)
       JOIN (SELECT label, n FROM counts WHERE half = 1) n1 USING (label)
       ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   /** Johnson–Lindenstrauss random-projection audit (SURVEY §2 I-sept):
     * project the corpus to k=16 dims with a deterministic ±1/√k sign
@@ -4221,7 +3909,7 @@ object VectorOps extends QueryModule {
     * n·d·k scalar rows map-side-combined to n·k — embarrassingly
     * parallel, no quadratic stage; only the bounded probe set (50 ids
     * → 1225 pairs) does pairwise work, and d is derived from the data
-    * (distinct positions), not hard-coded (ADVICE r6 #3 discipline).
+    * (distinct positions), not hard-coded.
     * Determinism: per-term 12 dp rounding into DECIMAL sums; the sign
     * magnitude 0.25 and the 2⁻³² uniform are exact powers of two.
     */
@@ -4312,7 +4000,7 @@ object VectorOps extends QueryModule {
         ROUND(CAST(SUM(CASE WHEN ABS(ratio - 1.0) <= 0.3 THEN 1 ELSE 0 END) AS DOUBLE)
           / COUNT(ratio), 6) AS share_within_03
       FROM ratios
-    """.stripMargin.trim))
+    """.trim))
 
   /** ANN-mined hard negatives (SURVEY §2 I-sext) — the production
     * counterpart to `sample_negative_pairs`' random baseline:
@@ -4362,12 +4050,7 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-          SQRT(list_inner_product(CAST(embedding AS DOUBLE[]),
-                                  CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings
-      ), $ivfCodebookSql, sims AS (
+      WITH ${OracleSql.embeddings()}, $ivfCodebookSql, sims AS (
         SELECT e.vec_id, e.label, e.emb, e.nrm, c.cell,
           ROW_NUMBER() OVER (PARTITION BY e.vec_id
             ORDER BY ROUND(list_inner_product(e.emb, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
@@ -4390,7 +4073,7 @@ object VectorOps extends QueryModule {
         FROM cand)
       WHERE rank <= 3
       ORDER BY q_id, rank
-    """.stripMargin.trim))
+    """.trim))
 
   /** Embedding class-separability confusion (SURVEY §2 I-sext): per
     * label, how many members sit closer (squared L2) to a FOREIGN
@@ -4436,7 +4119,7 @@ object VectorOps extends QueryModule {
           round($"n".cast(DoubleType) / $"label_total", 6).as("share"))
         .orderBy($"label", $"nearest_label")
     },
-    Some("""
+    Some(s"""
       WITH e AS (
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
       ), cdims AS (
@@ -4453,9 +4136,7 @@ object VectorOps extends QueryModule {
         SELECT label, clabel AS nearest_label FROM (
           SELECT e.label, c.clabel,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ROUND(list_inner_product(e.emb, e.emb)
-                    - 2.0 * list_inner_product(e.emb, c.cvec)
-                    + list_inner_product(c.cvec, c.cvec), 6), c.clabel) AS rn
+              ${roundedL2Sql("e.emb", "c.cvec")}, c.clabel) AS rn
           FROM e CROSS JOIN cents c
         ) WHERE rn = 1
       ), totals AS (
@@ -4466,7 +4147,7 @@ object VectorOps extends QueryModule {
       FROM nearest n JOIN totals t ON n.label = t.label
       GROUP BY n.label, n.nearest_label
       ORDER BY n.label, n.nearest_label
-    """.stripMargin.trim))
+    """.trim))
 
   /** Contrastive negative sampling (SURVEY §2 I-sext): 3 deterministic
     * cross-label negatives per query vector — the random-negative
@@ -4512,7 +4193,7 @@ object VectorOps extends QueryModule {
           ON e.label <> q.label)
       WHERE neg_rank <= 3
       ORDER BY q_id, neg_rank
-    """.stripMargin.trim))
+    """.trim))
 
   /** Top principal component via Gram-matrix power iteration (SURVEY §2
     * I-sext) — the distributed-PCA shape used for embedding-drift and
@@ -4704,7 +4385,7 @@ object VectorOps extends QueryModule {
                         / (n - 1)), 0), 4) AS z
       FROM dist JOIN mom ON dist.label = mom.label
       ORDER BY z DESC, vec_id LIMIT 20
-    """.stripMargin.trim))
+    """.trim))
 
   /** Binary-sign Hamming top-k (SURVEY §2 I-sext): 64-dim sign
     * binarization + Hamming-distance ranking — the 64×-compression
@@ -4752,7 +4433,7 @@ object VectorOps extends QueryModule {
           ON e.vec_id <> q.vec_id)
       WHERE rn <= 3
       ORDER BY q_id, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** Centroid silhouette per label (SURVEY §2 I-sept) — the
     * clustering-quality score that completes the embedding-QA trio:
@@ -4812,7 +4493,7 @@ object VectorOps extends QueryModule {
             count(lit(1)), 6).as("neg_share"))
         .orderBy($"label")
     },
-    Some("""
+    Some(s"""
       WITH e AS (
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
       ), cdims AS (
@@ -4831,9 +4512,7 @@ object VectorOps extends QueryModule {
           MIN(CASE WHEN clabel <> label THEN dd END) AS b
         FROM (
           SELECT e.vec_id, e.label, c.clabel,
-            ROUND(SQRT(GREATEST(ROUND(list_inner_product(e.emb, e.emb)
-                  - 2.0 * list_inner_product(e.emb, c.cvec)
-                  + list_inner_product(c.cvec, c.cvec), 6), 0.0)), 6) AS dd
+            ROUND(SQRT(GREATEST(${roundedL2Sql("e.emb", "c.cvec")}, 0.0)), 6) AS dd
           FROM e CROSS JOIN cents c
         )
         GROUP BY vec_id, label
@@ -4847,7 +4526,7 @@ object VectorOps extends QueryModule {
           ROUND((b - a) / NULLIF(GREATEST(a, b), 0.0), 6) AS s
         FROM ab)
       GROUP BY label ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 
   /** TwoNN intrinsic dimension per label (SURVEY §2 I-sept; Facco et
     * al. 2017): d̂ = N / Σ ln(r₂/r₁) from each point's two nearest
@@ -4919,5 +4598,5 @@ object VectorOps extends QueryModule {
               (LN(1.0 - cos2) - LN(1.0 - cos1)) * 0.5, 12) AS DECIMAL(28,12)) END)
             AS DOUBLE), 0.0), 4) AS id_hat
       FROM two GROUP BY label ORDER BY label
-    """.stripMargin.trim))
+    """.trim))
 }

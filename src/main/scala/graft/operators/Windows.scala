@@ -78,7 +78,7 @@ object Windows extends QueryModule {
         FROM orders)
       WHERE rn <= 3
       ORDER BY o_custkey, rn
-    """.stripMargin.trim))
+    """.trim))
 
   /** The rank family over a GLOBAL window — rank/dense_rank/
     * percent_rank/ntile in their canonical unpartitioned form.
@@ -117,7 +117,7 @@ object Windows extends QueryModule {
       FROM part
       WINDOW w AS (ORDER BY p_retailprice, p_partkey)
       ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   val winLagLead = Q(
     "win_lag_lead",
@@ -141,7 +141,7 @@ object Windows extends QueryModule {
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   val winMovingRowsFrame = Q(
     "win_moving_rows_frame",
@@ -165,7 +165,7 @@ object Windows extends QueryModule {
                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS DOUBLE) AS moving_total
       FROM orders
       ORDER BY o_custkey, o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Value-RANGE frame over a global order (±5 on p_size).
     *
@@ -194,7 +194,7 @@ object Windows extends QueryModule {
                 RANGE BETWEEN 5 PRECEDING AND 5 FOLLOWING) AS DOUBLE) AS band_revenue
       FROM part
       ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   val winCumulative = Q(
     "win_cumulative",
@@ -218,7 +218,7 @@ object Windows extends QueryModule {
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
       FROM orders
       ORDER BY o_custkey, o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** `last_value` needs an explicit full frame — its default frame ends at
     * CURRENT ROW in both engines, which is almost never what "last value
@@ -248,7 +248,7 @@ object Windows extends QueryModule {
       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
       ORDER BY o_custkey, o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** The 100 TB formulation of a GLOBAL rank family: `win_rank_family`
     * single-partition-sorts the whole table; here ranks are computed on
@@ -288,7 +288,7 @@ object Windows extends QueryModule {
           $"rnk",
           $"drnk",
           // n=1 guard: native PERCENT_RANK defines the one-row case as 0,
-          // while (rnk-1)/(n-1) would be 0/0 → null (ADVICE round 3)
+          // while (rnk-1)/(n-1) would be 0/0 → null
           when($"n" === 1, lit(0.0))
             .otherwise(($"rnk" - 1).cast("double") / ($"n" - 1))
             .cast(DecimalType(18, 6)).as("prnk"),
@@ -305,7 +305,7 @@ object Windows extends QueryModule {
       FROM part
       WINDOW w AS (ORDER BY p_retailprice)
       ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** The 100 TB formulation of the GLOBAL range frame: `win_range_frame`
     * single-partition-sorts all rows; a value-range frame only depends on
@@ -338,7 +338,7 @@ object Windows extends QueryModule {
                 RANGE BETWEEN 5 PRECEDING AND 5 FOLLOWING) AS DOUBLE) AS band_revenue
       FROM part
       ORDER BY p_partkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** IGNORE NULLS navigation: previous / next / first non-null purchase
     * value per user — the sparse-event carry-forward pattern (sessionized
@@ -374,7 +374,7 @@ object Windows extends QueryModule {
             FROM events)
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Batch sessionization via gaps-and-islands: per-user events split
     * into sessions at 15-minute inactivity gaps, one output row per
@@ -435,7 +435,7 @@ object Windows extends QueryModule {
       FROM sess
       GROUP BY user_id, sess_id
       ORDER BY user_id, sess_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Exact moving median over a ±3-row frame per user (ordered by ts,
     * event_id) — the robust time-series smoother a mean-based moving
@@ -479,7 +479,7 @@ object Windows extends QueryModule {
           ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS moving_median
       FROM events
       ORDER BY user_id, ts, event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Contribution share: each line item's revenue as a fraction of its
     * ORDER's total — the share-of-total every report needs, computed
@@ -502,13 +502,11 @@ object Windows extends QueryModule {
             .cast(DecimalType(18, 6)).as("pct_of_order"))
         .orderBy($"l_orderkey", $"l_linenumber")
     },
-    Some("""
+    Some(s"""
       WITH r AS (
         SELECT l_orderkey, l_linenumber,
-          CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2)) AS revenue,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2)))
+          ${OracleSql.netPrice} AS revenue,
+          ${OracleSql.revenue}
             OVER (PARTITION BY l_orderkey) AS order_total
         FROM lineitem
       )
@@ -516,7 +514,7 @@ object Windows extends QueryModule {
         CAST(CAST(CAST(revenue AS DOUBLE) / CAST(order_total AS DOUBLE)
           AS DECIMAL(18,6)) AS DOUBLE) AS pct_of_order
       FROM r ORDER BY l_orderkey, l_linenumber
-    """.stripMargin.trim))
+    """.trim))
 
   /** Longest consecutive-DAY activity streak per user — the retention
     * metric (distinct from `win_sessionize_batch`, which islands on a
@@ -569,7 +567,7 @@ object Windows extends QueryModule {
       )
       SELECT user_id, MAX(streak_len) AS longest_streak, COUNT(*) AS n_streaks
       FROM streaks GROUP BY user_id ORDER BY user_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** Running COUNT(DISTINCT event_type) per user over time — no engine
     * supports DISTINCT inside a window frame, so the standard rewrite:
@@ -606,7 +604,7 @@ object Windows extends QueryModule {
             ORDER BY ts, event_id) = 1 THEN 1 ELSE 0 END AS first_seen
         FROM events)
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** `cume_dist` over a PARTITIONED window (the rank-family member
     * `win_rank_family` doesn't cover, and per-segment rather than its
@@ -641,7 +639,7 @@ object Windows extends QueryModule {
       FROM customer
       WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal)
       ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** The 100 TB formulation of `win_cume_dist`: its 5-value
     * c_mktsegment partitioning puts 20% of the table in one window
@@ -688,7 +686,7 @@ object Windows extends QueryModule {
       FROM customer
       WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal)
       ORDER BY c_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** `nth_value` — the navigation-family member first/last/lag/lead
     * leave out: each customer's 3rd-cheapest order value, NULL where
@@ -718,7 +716,7 @@ object Windows extends QueryModule {
       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey
                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
       ORDER BY o_custkey, o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** `ntile(4)` — the rank-family member that ASSIGNS rows to
     * equal-count buckets (quartiling for tiering/binning) rather than
@@ -766,9 +764,9 @@ object Windows extends QueryModule {
       )
       GROUP BY c_mktsegment, tile
       ORDER BY c_mktsegment, tile
-    """.stripMargin.trim))
+    """.trim))
 
-  /** The 100 TB formulation of `win_ntile_buckets` (VERDICT r9 #3):
+  /** The 100 TB formulation of `win_ntile_buckets`:
     * its 5-value c_mktsegment window puts 20% of the table in one
     * window partition at any scale. The two-level derivation
     * WindowScalableSpec proves row-identical to native ntile, per
@@ -831,7 +829,7 @@ object Windows extends QueryModule {
       )
       GROUP BY c_mktsegment, tile
       ORDER BY c_mktsegment, tile
-    """.stripMargin.trim))
+    """.trim))
 
   /** Exponentially weighted moving average with DYADIC decay (alpha =
     * 1/2, one-event half-life) over each user's trailing 8 events —
@@ -902,7 +900,7 @@ object Windows extends QueryModule {
           AS DOUBLE) AS ewma
       FROM l
       ORDER BY event_id
-    """.stripMargin.trim))
+    """.trim))
 
   /** 2-D PARETO FRONT (skyline) over orders: the orders no other order
     * strictly beats on BOTH price (higher) and date (earlier) — the
@@ -963,7 +961,7 @@ object Windows extends QueryModule {
                 > CAST(x.o_totalprice AS DECIMAL(18,2))
           AND y.o_orderdate < x.o_orderdate)
       ORDER BY o_orderkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** INTERVAL-UNION coverage (sweep line) — per supplier, the total
     * number of days covered by the UNION of its shipment-activity
@@ -1041,7 +1039,7 @@ object Windows extends QueryModule {
         COUNT(*) AS n_islands,
         CAST(SUM(date_diff('day', is_s, is_e)) AS BIGINT) AS covered_days
       FROM spans GROUP BY l_suppkey ORDER BY s_suppkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Maximum drawdown per customer over the chronological order-value
     * series (SURVEY §2 I-sext) — the running-peak-to-trough risk measure
@@ -1090,7 +1088,7 @@ object Windows extends QueryModule {
       GROUP BY o_custkey
       HAVING COUNT(*) >= 5
       ORDER BY o_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Rolling correlation between quantity and extended price over a
     * 10-row chronological frame per supplier (SURVEY §2 I-sext) — the
@@ -1160,7 +1158,7 @@ object Windows extends QueryModule {
       FROM t
       WHERE n = 10
       ORDER BY l_suppkey, l_orderkey, l_linenumber
-    """.stripMargin.trim))
+    """.trim))
 
   /** CUSUM changepoint detection per event type (SURVEY §2 I-sext) —
     * completes the drift-monitoring suite: the z-score row flags
@@ -1230,7 +1228,7 @@ object Windows extends QueryModule {
         ROUND(mean_daily, 6) AS mean_daily
       FROM picked WHERE rn = 1
       ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 
   /** RSI momentum oscillator (SURVEY §2 I-oct) — the classic
     * overbought/oversold indicator (Cutler's SMA formulation: exact
@@ -1279,12 +1277,11 @@ object Windows extends QueryModule {
             .as("rsi"))
         .orderBy($"n_name", $"mi")
     },
-    Some("""
+    Some(s"""
       WITH monthly AS (
         SELECT s_nationkey,
           year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS rev
+          ${OracleSql.revenue} AS rev
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         GROUP BY 1, 2
       ), d AS (
@@ -1311,7 +1308,7 @@ object Windows extends QueryModule {
       FROM f JOIN nation ON s_nationkey = n_nationkey
       WHERE n_deltas = 6
       ORDER BY n_name, mi
-    """.stripMargin.trim))
+    """.trim))
 
   /** Additive SEASONAL DECOMPOSITION of the monthly revenue series
     * (SURVEY §2 I-oct) — the classical-decomposition shape (trend +
@@ -1362,11 +1359,10 @@ object Windows extends QueryModule {
           round($"det" - $"seasonal", 6).as("residual"))
         .orderBy($"mi")
     },
-    Some("""
+    Some(s"""
       WITH monthly AS (
         SELECT year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4)) AS rev
+          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
         FROM lineitem GROUP BY 1
       ), t AS (
         SELECT mi, rev,
@@ -1389,7 +1385,7 @@ object Windows extends QueryModule {
         ROUND(det - seasonal, 6) AS residual
       FROM det JOIN seasonal USING (moy)
       ORDER BY mi
-    """.stripMargin.trim))
+    """.trim))
 
   /** BOLLINGER BANDS on per-nation monthly revenue (SURVEY §2 I-oct) —
     * the volatility envelope (6-month moving mean ± 2 population σ)
@@ -1432,12 +1428,11 @@ object Windows extends QueryModule {
             $"rev".cast(DoubleType) < round($"m" - lit(2.0) * $"sd", 6)).as("breakout"))
         .orderBy($"n_name", $"mi")
     },
-    Some("""
+    Some(s"""
       WITH monthly AS (
         SELECT s_nationkey,
           year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4)) AS rev
+          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         GROUP BY 1, 2
       ), a AS (
@@ -1464,7 +1459,7 @@ object Windows extends QueryModule {
       FROM b JOIN nation ON s_nationkey = n_nationkey
       WHERE nf = 6
       ORDER BY n_name, mi
-    """.stripMargin.trim))
+    """.trim))
 
   /** MACD momentum crossover (SURVEY §2 I-non) — the moving-average
     * convergence/divergence indicator in its SMA (Cutler-style)
@@ -1518,12 +1513,11 @@ object Windows extends QueryModule {
           coalesce($"cross_up", lit(false)).as("cross_up"))
         .orderBy($"n_name", $"mi")
     },
-    Some("""
+    Some(s"""
       WITH monthly AS (
         SELECT s_nationkey,
           year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4)) AS rev
+          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         GROUP BY 1, 2
       ), a AS (
@@ -1557,7 +1551,7 @@ object Windows extends QueryModule {
       SELECT n_name, mi, fast, slow, macd, signal, hist, cross_up
       FROM d JOIN nation ON s_nationkey = n_nationkey
       ORDER BY n_name, mi
-    """.stripMargin.trim))
+    """.trim))
 
   /** Stochastic oscillator %K/%D (SURVEY §2 I-non) — where the series
     * sits INSIDE its own recent range: %K = 100·(rev − min₆)/(max₆ −
@@ -1607,12 +1601,11 @@ object Windows extends QueryModule {
           ($"pct_k" < 20.0).as("oversold"))
         .orderBy($"n_name", $"mi")
     },
-    Some("""
+    Some(s"""
       WITH monthly AS (
         SELECT s_nationkey,
           year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS DECIMAL(18,4)) AS rev
+          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         GROUP BY 1, 2
       ), a AS (
@@ -1647,7 +1640,7 @@ object Windows extends QueryModule {
       FROM d JOIN nation ON s_nationkey = n_nationkey
       WHERE n_d = 3
       ORDER BY n_name, mi
-    """.stripMargin.trim))
+    """.trim))
 
   def qs: Seq[Q] = Seq(
     winRsiMomentum, winSeasonalDecompose, winBollingerBands,
@@ -1738,13 +1731,12 @@ object Windows extends QueryModule {
           round($"y", 6).as("mean_ln_rs"), $"hurst")
         .orderBy($"block_size")
     },
-    Some("""
+    Some(s"""
       WITH daily AS (
         SELECT ROW_NUMBER() OVER (ORDER BY l_shipdate) AS rn, rev
         FROM (
           SELECT l_shipdate,
-            SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-              * CAST(1 - l_discount AS DECIMAL(18,2))) AS rev
+            ${OracleSql.revenue} AS rev
           FROM lineitem GROUP BY 1)
       ), sized AS (
         SELECT rn, rev, bs.v AS bs, (rn - 1) // bs.v AS g
@@ -1792,7 +1784,7 @@ object Windows extends QueryModule {
         ROUND(y, 6) AS mean_ln_rs, hurst
       FROM pts, fit
       ORDER BY block_size
-    """.stripMargin.trim))
+    """.trim))
 
   /** Seasonality strength of the daily revenue series (SURVEY §2
     * I-sept) — the STL-style decomposition number that tells the
@@ -1855,11 +1847,10 @@ object Windows extends QueryModule {
             .as("strength"))
       seas.crossJoin(broadcast(vars)).orderBy($"wd")
     },
-    Some("""
+    Some(s"""
       WITH daily AS (
         SELECT l_shipdate,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS rev
+          ${OracleSql.revenue} AS rev
         FROM lineitem GROUP BY 1
       ), m AS (
         SELECT CAST(SUM(CAST(rev AS DECIMAL(38,4))) AS DOUBLE) / COUNT(*) AS m
@@ -1901,7 +1892,7 @@ object Windows extends QueryModule {
       SELECT wd, n_days, seasonal, var_detrended, var_residual, strength
       FROM seas, vars
       ORDER BY wd
-    """.stripMargin.trim))
+    """.trim))
 
   /** Autocorrelation function of the daily revenue series at lags 1–7
     * (SURVEY §2 I-sept) — the periodicity diagnostic the trend/anomaly
@@ -1951,11 +1942,10 @@ object Windows extends QueryModule {
           round($"num" / $"den", 6).as("acf"))
         .orderBy($"lag")
     },
-    Some("""
+    Some(s"""
       WITH daily AS (
         SELECT l_shipdate,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS rev
+          ${OracleSql.revenue} AS rev
         FROM lineitem GROUP BY 1
       ), m AS (
         SELECT COUNT(*) AS n,
@@ -1979,7 +1969,7 @@ object Windows extends QueryModule {
       JOIN (SELECT rn AS rn2, dv AS dv2 FROM dev) b USING (rn2), denom
       GROUP BY p.k
       ORDER BY lag
-    """.stripMargin.trim))
+    """.trim))
 
   /** Theil–Sen robust trend per supplier nation (SURVEY §2 I-sept) —
     * the median of all pairwise month-over-month slopes of the monthly
@@ -2044,12 +2034,11 @@ object Windows extends QueryModule {
         .select($"n_name", $"n_months", $"n_pairs", $"sen_slope", $"ols_slope")
         .orderBy($"n_name")
     },
-    Some("""
+    Some(s"""
       WITH monthly AS (
         SELECT s_nationkey,
           year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-            * CAST(1 - l_discount AS DECIMAL(18,2))) AS rev
+          ${OracleSql.revenue} AS rev
         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         GROUP BY 1, 2
       ), pairs AS (
@@ -2081,7 +2070,7 @@ object Windows extends QueryModule {
       FROM ols JOIN sen USING (s_nationkey)
       JOIN nation ON s_nationkey = n_nationkey
       ORDER BY n_name
-    """.stripMargin.trim))
+    """.trim))
 
   /** Drawdown duration per customer (SURVEY §2 I-sext) — the
     * TIME-underwater companion to `win_max_drawdown`'s depth: risk
@@ -2169,7 +2158,7 @@ object Windows extends QueryModule {
         CAST(COALESCE(run_days, 0) AS BIGINT) AS max_underwater_days
       FROM sizes s LEFT JOIN longest l ON s.o_custkey = l.o_custkey
       ORDER BY s.o_custkey
-    """.stripMargin.trim))
+    """.trim))
 
   /** Local-peak detection on the daily event series per type (SURVEY §2
     * I-sext) — the signal-processing primitive under alerting UIs:
@@ -2210,7 +2199,7 @@ object Windows extends QueryModule {
       FROM nb
       WHERE prev IS NOT NULL AND nxt IS NOT NULL AND c > prev AND c > nxt
       ORDER BY event_type, peak_day
-    """.stripMargin.trim))
+    """.trim))
 
   /** Maximum-sum burst window per event type (SURVEY §2 I-sept) —
     * Kadane's max-subarray expressed as windows: the contiguous span
@@ -2292,5 +2281,5 @@ object Windows extends QueryModule {
         ROUND(mean_daily, 6) AS mean_daily
       FROM picked WHERE rn = 1
       ORDER BY event_type
-    """.stripMargin.trim))
+    """.trim))
 }

@@ -132,6 +132,32 @@ class GraphDriverLoopSpec extends SparkSpecBase {
     assert(rows.toMap == handDeg, s"declared ${rows.toMap} vs peel-to-fixpoint $handDeg")
   }
 
+  test("pagerank drops trade edges whose nation is missing, as the oracle does") {
+    import spark.implicits._
+    // a copy of the fixture whose nation table lacks the first supplier's
+    // nation, so that nation is both an edge source and an edge target
+    val dirty = java.nio.file.Files.createTempDirectory("graft_orphan_nation")
+    try {
+      for (t <- Tables.names if t != "nation")
+        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+          dirty.resolve(s"$t.parquet"))
+      val gone = Tables.supplier(spark, sfDir).orderBy($"s_suppkey")
+        .select($"s_nationkey".cast("long")).as[Long].head()
+      Tables.nation(spark, sfDir).where($"n_nationkey" =!= gone)
+        .write.parquet(dirty.resolve("nation.parquet").toString)
+      val rows = SparkEntry.queries("graph_pagerank_trade")(spark, dirty.toString)
+        .select($"n_nationkey".cast("long"), $"pagerank").as[(Long, Double)].collect()
+      assert(rows.length == 24, s"expected the 24 remaining nations, got ${rows.length}")
+      assert(!rows.exists(_._1 == gone), s"removed nation $gone still ranked")
+      assert(rows.forall(r => java.lang.Double.isFinite(r._2)), s"non-finite rank in ${rows.toSeq}")
+    } finally {
+      val walk = java.nio.file.Files.walk(dirty)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+  }
+
   test("DriverRound equals Spark round() on ordinary, tie and non-finite doubles") {
     import spark.implicits._
     val xs = Seq(0.0, -0.0, 1.0 / 3, -2.5e-10, 0.1234567895, -0.1234567895, 2.675,

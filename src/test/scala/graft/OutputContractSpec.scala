@@ -38,6 +38,39 @@ class OutputContractSpec extends SparkSpecBase {
     assert(missing.isEmpty, s"oracle SQL without a query: $missing")
   }
 
+  test("oracle strings carry no uninterpolated fragment, null or unbalanced paren") {
+    // the SQL outside '…' literals and `--` comments
+    def code(sql: String): String = {
+      val out = new StringBuilder
+      var i = 0
+      while (i < sql.length) {
+        if (sql.charAt(i) == '\'') {
+          val end = sql.indexOf('\'', i + 1)
+          i = if (end < 0) sql.length else end + 1
+        } else if (sql.startsWith("--", i)) {
+          val end = sql.indexOf('\n', i)
+          i = if (end < 0) sql.length else end
+        } else {
+          out += sql.charAt(i)
+          i += 1
+        }
+      }
+      out.toString
+    }
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      val c = code(sql)
+      val depths = c.scanLeft(0)((d, ch) => d + (if (ch == '(') 1 else if (ch == ')') -1 else 0))
+      Seq(
+        // a fragment interpolated into a string without the `s` prefix
+        "\\$\\{|\\$[A-Za-z]".r.findFirstIn(sql).map(m => s"$name: uninterpolated `$m`"),
+        // a fragment `val` read before its initialiser ran
+        "\\bnull\\b".r.findFirstIn(c).map(_ => s"$name: bare `null`"),
+        Option.when(depths.last != 0 || depths.min < 0)(s"$name: unbalanced parentheses")
+      ).flatten
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("SURVEY.md §2 inventory matches the declared query set exactly") {
     // the judge reads SURVEY §2 line by line as the normative contract —
     // keep it mechanically in sync with the code
