@@ -153,6 +153,104 @@ class NearestCentroidSpec extends SparkSpecBase {
     assert(first == Set(99L), "zero-norm centroid must rank first under csim DESC")
   }
 
+  // ---- PQ kernels over the flat (sub, cid, cv, cnn2) codebook layout ----
+  // dim 8, m = 4 subspaces of width 3: subspace 2 is truncated to two
+  // elements, subspace 3 starts past the end (empty slice), subspace 1
+  // has no codebook entries, and subspace 0 holds two identical centroids
+  private val pqM = 4
+  private val pqW = 3
+  private val pqK = 4
+
+  private def pqVectors: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(42)
+    def v(n: Int) = Seq.fill(n)(math.rint(rnd.nextGaussian() * 1000) / 1000)
+    (0 until 40).map(i => (i.toLong, v(8))).toDF("vec_id", "emb")
+  }
+
+  private def pqCodebook(cidType: String): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def v(n: Int) = Seq.fill(n)(math.rint(rnd.nextGaussian() * 1000) / 1000)
+    val twin = v(3)
+    val entries = Seq((0L, 0, v(3)), (0L, 1, twin), (0L, 2, v(3)), (0L, 3, twin),
+      (2L, 0, v(3)), (2L, 2, v(3)), (2L, 3, v(3)), (3L, 1, v(3)), (3L, 3, v(3)))
+    entries.toDF("sub", "cid", "cv").withColumn("cid", col("cid").cast(cidType))
+      .withColumn("cnn2", GraftFunctions.dot(col("cv"), col("cv")))
+  }
+
+  private def withPqArr(df: DataFrame, cidType: String): DataFrame =
+    df.crossJoin(broadcast(operators.VectorOps.oneRowArray(pqCodebook(cidType),
+      "pqarr", col("sub"), col("cid"), col("cv"), col("cnn2"))))
+
+  /** Interpreted PQ encode: per subspace, slice + `array_min` argmin of
+    * (round₆(v·v − 2·v·cv + cnn2), cid) over that subspace's entries.
+    */
+  private def hofPqEncode(emb: String): org.apache.spark.sql.Column =
+    array((0 until pqM).map { s =>
+      val v = slice(col(emb), s * pqW + 1, pqW)
+      val best = array_min(transform(filter(col("pqarr"), c => c("sub") === s), c =>
+        struct(round(GraftFunctions.dot(v, v) - lit(2.0) * GraftFunctions.dot(v, c("cv")) +
+          c("cnn2"), 6).as("d2"), c("cid").as("cid"))))
+      struct(best("cid").as("cid"), best("d2").as("d2"))
+    }: _*)
+
+  /** Interpreted ADC table: slot sub·k + cid holds round₆(v·v − 2·v·cv +
+    * cnn2) for that entry, NaN where no entry maps.
+    */
+  private def hofPqLut(qr: String): org.apache.spark.sql.Column =
+    transform(sequence(lit(0L), lit(pqM * pqK - 1L)), slot => {
+      val hit = filter(col("pqarr"), c => c("sub") * pqK + c("cid") === slot)
+      val d2s = transform(hit, c => {
+        val v = slice(col(qr), c("sub").cast("int") * pqW + 1, lit(pqW))
+        round(GraftFunctions.dot(v, v) - lit(2.0) * GraftFunctions.dot(v, c("cv")) +
+          c("cnn2"), 6)
+      })
+      coalesce(try_element_at(d2s, lit(1)), lit(Double.NaN))
+    })
+
+  for (cidType <- Seq("int", "long")) {
+    test(s"pqEncodeAll equals the per-subspace slice + array_min argmin ($cidType cids)") {
+      import graft.functions.NearestCentroidFunctions.pqEncodeAll
+      val out = withPqArr(pqVectors, cidType)
+        .select(col("vec_id"), pqEncodeAll(col("emb"), col("pqarr"), pqM, pqW).as("fast"),
+          hofPqEncode("emb").as("slow"))
+      val cidField = out.schema("fast").dataType
+        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+        .asInstanceOf[org.apache.spark.sql.types.StructType]("cid").dataType
+      assert(cidField == pqCodebook(cidType).schema("cid").dataType,
+        "cid type must pass through")
+      val rows = out.collect()
+      assert(rows.length == 40)
+      for (r <- rows) {
+        assert(r.get(1).toString == r.get(2).toString, s"vec ${r.getLong(0)} diverged")
+        val empty = r.getSeq[org.apache.spark.sql.Row](1)(1)
+        assert(empty != null && empty.isNullAt(0) && empty.isNullAt(1),
+          "a subspace without entries encodes to a null-fielded struct")
+        // the twin centroids (cids 1 and 3) tie exactly: the lower cid wins
+        assert(r.getSeq[org.apache.spark.sql.Row](1).head.get(0).toString != "3")
+      }
+    }
+
+    test(s"pqLutAll equals the round(v·v − 2·v·cv + cnn2, 6) slot table ($cidType cids)") {
+      import graft.functions.NearestCentroidFunctions.pqLutAll
+      val rows = withPqArr(pqVectors, cidType)
+        .select(col("vec_id"), pqLutAll(col("emb"), col("pqarr"), pqM, pqW, pqK).as("fast"),
+          hofPqLut("emb").as("slow"))
+        .collect()
+      assert(rows.length == 40)
+      for (r <- rows) {
+        val fast = r.getSeq[Double](1)
+        val slow = r.getSeq[Double](2)
+        assert(fast.length == pqM * pqK)
+        assert(fast.map(java.lang.Double.doubleToRawLongBits) ==
+          slow.map(java.lang.Double.doubleToRawLongBits), s"vec ${r.getLong(0)} diverged")
+        assert((pqK until 2 * pqK).forall(s => fast(s).isNaN),
+          "a subspace without entries leaves its slots NaN")
+      }
+    }
+  }
+
   test("exact-tie semantics: duplicated centroids resolve to the lowest id in both paths") {
     import spark.implicits._
     // two centroids with IDENTICAL vectors: every query ties exactly and
