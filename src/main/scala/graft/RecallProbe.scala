@@ -114,14 +114,10 @@ object RecallProbe {
       LazyList.from(geometries).map { a =>
         val Array(k, m) = (a.split(":") :+ "4").take(2).map(_.toInt)
         val w = 64 / m
-        val resid = withResiduals(gen1._1, gen1._2)
-          .select(col("vec_id"), col("cell"), col("remb").as("emb"))
+        val resid = residualEmb(gen1._1, gen1._2)
         val cb = trainPqCodebook(resid, k, m, w)
-        val codes = withPqStructs(resid, cb, m, w)
-          .select(col("vec_id"), col("cell"),
-            expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes"))
         curve(s"end-to-end ADC, residual PQ (in-plan, k=$k, m=$m)",
-          residualAdc(codes, probes, gen1._2, cb, m, w, k))
+          residualAdc(pqCodes(resid, cb, m, w), probes, gen1._2, cb, m, w, k))
       }
   }
 }

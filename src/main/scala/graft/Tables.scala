@@ -16,9 +16,12 @@ import org.apache.spark.sql.types.DecimalType
   * bit-identical to DuckDB's own native ns→µs truncation of the same file,
   * keeping the DuckDB oracle comparable.
   *
-  * Scale notes (100 TB): the loader adds no shuffle and no driver-side
-  * work; every helper below is a pure projection on the scan, so filter
-  * pushdown and column pruning flow through to the parquet reader
+  * Scale notes (100 TB): the loader adds no shuffle, but it does add
+  * driver-side work: each `spark.read.parquet` here passes no schema, so
+  * every call runs a footer/schema-inference job while the query is
+  * being built (`Tables.load_jobs` under `perfbench --trace 1`; ROADMAP
+  * open item 1). Every helper below is a pure projection on the scan, so
+  * filter pushdown and column pruning flow through to the parquet reader
   * untouched. At cluster scale the same code reads a directory of many
   * files — nothing here assumes a single file.
   */

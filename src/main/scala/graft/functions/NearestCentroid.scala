@@ -66,74 +66,85 @@ object NearestCentroid {
   }
 }
 
-/** Shared codebook-decode cache for the two expressions below. */
+/** The one codebook decode every expression below shares. Two struct
+  * layouts: the cell layout (id, vec, aux) and the flat PQ layout (sub,
+  * id, vec, aux), whose leading subspace column decodes into `subs`.
+  */
 private[functions] trait CodebookCache { self: Expression =>
   protected def cb: Expression
 
-  protected final def cbElem: StructType =
+  private def cbElem: StructType =
     cb.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  protected final def idType: DataType = cbElem.fields(0).dataType
+  protected final def idType: DataType = cbElem.fields(cbElem.length - 3).dataType
 
   @transient private var keyObj: AnyRef = _
   @transient private var keyOff: Long = -1L
   @transient private var keyLen: Int = -1
   @transient private var keySize: Long = -1L
   @transient private var keyBits: Long = 0L
+  @transient protected final var subs: Array[Int] = _ // flat PQ layout only
   @transient protected final var ids: Array[Any] = _
   @transient protected final var idKeys: Array[Long] = _
   @transient protected final var vecs: Array[Array[Double]] = _
   @transient protected final var aux: Array[Double] = _ // cnrm / ‖c‖²
 
-  /** Decode (id, vec, aux) structs once per physical buffer. The cache
-    * key is the buffer identity PLUS content guards (total byte size and
-    * a rotate-XOR fold of EVERY struct's aux-field bits): a reused buffer
-    * with different contents (a hypothetical non-broadcast, per-row codebook)
-    * re-decodes instead of silently serving a stale codebook, including one
-    * differing only in interior entries. The fold is O(m) aux reads per row —
-    * against the m × dim multiply-adds the candidate loop then performs,
-    * ~1/dim relative overhead; id/vec fields remain unguarded (aux is derived
-    * from vec at every call site, so a vec change moves aux too). Every call
-    * site passes a BROADCAST one-row-array codebook, whose buffer is
-    * immutable for the lifetime of the partition — the guard exists to turn a
-    * violated assumption into a re-decode, not to be a cryptographic
-    * checksum. On allocation: `getStruct` returns a short-lived
-    * row wrapper per entry, but it never escapes the loop (one `getDouble`
-    * and discard), so C2's scalar replacement elides it in the steady state;
-    * even allocated, the fold is O(m) reads against the candidate loop's
-    * O(m·dim) multiply-adds.
+  /** Decode the codebook structs once per physical buffer; true when
+    * this call decoded. The cache key is the buffer identity PLUS content
+    * guards (total byte size and a rotate-XOR fold of EVERY struct's
+    * aux-field bits): a reused buffer with different contents (a
+    * hypothetical non-broadcast, per-row codebook) re-decodes instead of
+    * silently serving a stale codebook, including one differing only in
+    * interior entries. The fold is O(m) aux reads per row — against the
+    * m × dim multiply-adds the candidate loop then performs, ~1/dim
+    * relative overhead; id/vec fields remain unguarded (aux is derived
+    * from vec at every call site, so a vec change moves aux too). Every
+    * call site passes a BROADCAST one-row-array codebook, whose buffer is
+    * immutable for the lifetime of the partition — the guard exists to
+    * turn a violated assumption into a re-decode, not to be a
+    * cryptographic checksum. On allocation: `getStruct` returns a
+    * short-lived row wrapper per entry, but it never escapes the loop
+    * (one `getDouble` and discard), so C2's scalar replacement elides it
+    * in the steady state; even allocated, the fold is O(m) reads against
+    * the candidate loop's O(m·dim) multiply-adds.
     */
-  protected final def load(arr: ArrayData): Unit = {
+  protected final def load(arr: ArrayData): Boolean = {
     val (obj, off, size) = arr match {
       case u: UnsafeArrayData => (u.getBaseObject, u.getBaseOffset, u.getSizeInBytes.toLong)
       case other => (other.asInstanceOf[AnyRef], 0L, -1L)
     }
+    val width = cbElem.length
     val m = arr.numElements()
     var bits = 0L
     var j = 0
     while (j < m) {
       bits = java.lang.Long.rotateLeft(bits, 17) ^
-        java.lang.Double.doubleToRawLongBits(arr.getStruct(j, 3).getDouble(2))
+        java.lang.Double.doubleToRawLongBits(arr.getStruct(j, width).getDouble(width - 1))
       j += 1
     }
     if ((obj eq keyObj) && off == keyOff && m == keyLen &&
-      size == keySize && bits == keyBits) return
+      size == keySize && bits == keyBits) return false
+    val flat = width == 4
+    val newSubs = if (flat) new Array[Int](m) else null
     val newIds = new Array[Any](m)
     val newKeys = new Array[Long](m)
     val newVecs = new Array[Array[Double]](m)
     val newAux = new Array[Double](m)
-    val intId = idType == IntegerType
+    val idT = idType
+    val intId = idT == IntegerType
     var i = 0
     while (i < m) {
-      val row = arr.getStruct(i, 3)
-      val idv = row.get(0, idType)
+      val row = arr.getStruct(i, width)
+      if (flat) newSubs(i) = row.getLong(0).toInt
+      val idv = row.get(width - 3, idT)
       newIds(i) = idv
       newKeys(i) = if (intId) idv.asInstanceOf[Int].toLong else idv.asInstanceOf[Long]
-      newVecs(i) = row.getArray(1).toDoubleArray()
-      newAux(i) = row.getDouble(2)
+      newVecs(i) = row.getArray(width - 2).toDoubleArray()
+      newAux(i) = row.getDouble(width - 1)
       i += 1
     }
-    ids = newIds; idKeys = newKeys; vecs = newVecs; aux = newAux
+    subs = newSubs; ids = newIds; idKeys = newKeys; vecs = newVecs; aux = newAux
     keyObj = obj; keyOff = off; keyLen = m; keySize = size; keyBits = bits
+    true
   }
 }
 
@@ -271,79 +282,37 @@ case class NearestCentroidL2(emb: Expression, cb: Expression)
   * s); a subspace with no codebook entries yields a null-fielded struct,
   * exactly like `array_min` over an empty filter result.
   *
-  * The decode cache follows [[CodebookCache]]'s guard discipline: buffer
-  * identity + byte size + a rotate-XOR fold of every entry's cnn2 bits.
+  * The codebook decodes through [[CodebookCache]]; the per-subspace
+  * offsets derive from its decoded `subs` column.
   */
 case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
-    extends Expression with CodegenFallback {
+    extends Expression with CodegenFallback with CodebookCache {
 
   override def children: Seq[Expression] = Seq(emb, cb)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_encode_all"
 
-  private def cbElem: StructType =
-    cb.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  private def cidType: DataType = cbElem.fields(1).dataType
-
   override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cid", cidType, nullable = true),
+    StructField("cid", idType, nullable = true),
     StructField("d2", DoubleType, nullable = true))), containsNull = false)
 
-  @transient private var keyObj: AnyRef = _
-  @transient private var keyOff: Long = -1L
-  @transient private var keyLen: Int = -1
-  @transient private var keySize: Long = -1L
-  @transient private var keyBits: Long = 0L
   @transient private var subStart: Array[Int] = _ // m+1 offsets into the flat arrays
-  @transient private var cids: Array[Any] = _
-  @transient private var cidKeys: Array[Long] = _
-  @transient private var vecs: Array[Array[Double]] = _
-  @transient private var aux: Array[Double] = _
-
-  private def load(arr: ArrayData): Unit = {
-    val (obj, off, size) = arr match {
-      case u: UnsafeArrayData => (u.getBaseObject, u.getBaseOffset, u.getSizeInBytes.toLong)
-      case other => (other.asInstanceOf[AnyRef], 0L, -1L)
-    }
-    val n = arr.numElements()
-    var bits = 0L
-    var j = 0
-    while (j < n) {
-      bits = java.lang.Long.rotateLeft(bits, 17) ^
-        java.lang.Double.doubleToRawLongBits(arr.getStruct(j, 4).getDouble(3))
-      j += 1
-    }
-    if ((obj eq keyObj) && off == keyOff && n == keyLen &&
-      size == keySize && bits == keyBits) return
-    val newCids = new Array[Any](n)
-    val newKeys = new Array[Long](n)
-    val newVecs = new Array[Array[Double]](n)
-    val newAux = new Array[Double](n)
-    val starts = new Array[Int](m + 1)
-    val intId = cidType == IntegerType
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 4)
-      val sub = row.getLong(0).toInt
-      // entries arrive sorted by (sub, cid); record where each sub begins
-      var s = sub + 1
-      while (s <= m) { starts(s) = i + 1; s += 1 }
-      val idv = row.get(1, cidType)
-      newCids(i) = idv
-      newKeys(i) = if (intId) idv.asInstanceOf[Int].toLong else idv.asInstanceOf[Long]
-      newVecs(i) = row.getArray(2).toDoubleArray()
-      newAux(i) = row.getDouble(3)
-      i += 1
-    }
-    cids = newCids; cidKeys = newKeys; vecs = newVecs; aux = newAux; subStart = starts
-    keyObj = obj; keyOff = off; keyLen = n; keySize = size; keyBits = bits
-  }
 
   override def eval(input: InternalRow): Any = {
     val e = emb.eval(input)
     val c = cb.eval(input)
     if (e == null || c == null) return null
-    load(c.asInstanceOf[ArrayData])
+    if (load(c.asInstanceOf[ArrayData])) {
+      // entries arrive sorted by (sub, cid); record where each sub begins
+      val starts = new Array[Int](m + 1)
+      var i = 0
+      while (i < subs.length) {
+        var s = subs(i) + 1
+        while (s <= m) { starts(s) = i + 1; s += 1 }
+        i += 1
+      }
+      subStart = starts
+    }
     val x = e.asInstanceOf[ArrayData].toDoubleArray()
     val out = new Array[Any](m)
     var sub = 0
@@ -367,13 +336,13 @@ case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
         val d2 = NearestCentroid.round6(dss - 2.0 * s + aux(i))
         if (bestI < 0 || {
           val cmp = java.lang.Double.compare(d2, bestD2)
-          cmp < 0 || (cmp == 0 && cidKeys(i) < cidKeys(bestI))
+          cmp < 0 || (cmp == 0 && idKeys(i) < idKeys(bestI))
         }) { bestD2 = d2; bestI = i }
         i += 1
       }
       out(sub) =
         if (bestI < 0) new GenericInternalRow(Array[Any](null, null))
-        else new GenericInternalRow(Array[Any](cids(bestI), bestD2))
+        else new GenericInternalRow(Array[Any](ids(bestI), bestD2))
       sub += 1
     }
     new GenericArrayData(out)
@@ -397,59 +366,13 @@ case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
   * unreachable, since encode cids come from the same codebook.
   */
 case class PqLutAll(qr: Expression, cb: Expression, m: Int, w: Int, k: Int)
-    extends Expression with CodegenFallback {
+    extends Expression with CodegenFallback with CodebookCache {
 
   override def children: Seq[Expression] = Seq(qr, cb)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_lut_all"
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  @transient private var keyObj: AnyRef = _
-  @transient private var keyOff: Long = -1L
-  @transient private var keyLen: Int = -1
-  @transient private var keySize: Long = -1L
-  @transient private var keyBits: Long = 0L
-  @transient private var subs: Array[Int] = _
-  @transient private var cidKeys: Array[Int] = _
-  @transient private var vecs: Array[Array[Double]] = _
-  @transient private var aux: Array[Double] = _
-
-  private def load(arr: ArrayData): Unit = {
-    val (obj, off, size) = arr match {
-      case u: UnsafeArrayData => (u.getBaseObject, u.getBaseOffset, u.getSizeInBytes.toLong)
-      case other => (other.asInstanceOf[AnyRef], 0L, -1L)
-    }
-    val n = arr.numElements()
-    var bits = 0L
-    var j = 0
-    while (j < n) {
-      bits = java.lang.Long.rotateLeft(bits, 17) ^
-        java.lang.Double.doubleToRawLongBits(arr.getStruct(j, 4).getDouble(3))
-      j += 1
-    }
-    if ((obj eq keyObj) && off == keyOff && n == keyLen &&
-      size == keySize && bits == keyBits) return
-    val cidType = cb.dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType].fields(1).dataType
-    val intId = cidType == IntegerType
-    val newSubs = new Array[Int](n)
-    val newKeys = new Array[Int](n)
-    val newVecs = new Array[Array[Double]](n)
-    val newAux = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val row = arr.getStruct(i, 4)
-      newSubs(i) = row.getLong(0).toInt
-      newKeys(i) =
-        if (intId) row.getInt(1) else row.getLong(1).toInt
-      newVecs(i) = row.getArray(2).toDoubleArray()
-      newAux(i) = row.getDouble(3)
-      i += 1
-    }
-    subs = newSubs; cidKeys = newKeys; vecs = newVecs; aux = newAux
-    keyObj = obj; keyOff = off; keyLen = n; keySize = size; keyBits = bits
-  }
 
   override def eval(input: InternalRow): Any = {
     val e = qr.eval(input)
@@ -483,7 +406,7 @@ case class PqLutAll(qr: Expression, cb: Expression, m: Int, w: Int, k: Int)
         var s = 0.0
         var j = 0
         while (j < nn) { s += x(off + j) * cv(j); j += 1 }
-        val slot = sb * k + cidKeys(i)
+        val slot = sb * k + idKeys(i).toInt
         if (slot >= 0 && slot < out.length)
           out(slot) = NearestCentroid.round6(dss(sb) - 2.0 * s + aux(i))
       }

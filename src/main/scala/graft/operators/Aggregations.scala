@@ -1507,6 +1507,30 @@ object Aggregations extends QueryModule {
       FROM tot, hx, hy, mi
     """.trim))
 
+  /** Per-segment account-balance moments `(c_mktsegment; n, sx, sxx)`:
+    * the count and the exact decimal Σx and Σx² the segment tests build
+    * their means and variances from.
+    */
+  private def segmentMoments(customers: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val spark = customers.sparkSession
+    import spark.implicits._
+    customers
+      .groupBy($"c_mktsegment")
+      .agg(
+        count(lit(1)).as("n"),
+        sum($"c_acctbal".cast(DecimalType(28, 10))).as("sx"),
+        sum(($"c_acctbal" * $"c_acctbal").cast(DecimalType(38, 10))).as("sxx"))
+  }
+
+  /** The mean Σx / n of [[segmentMoments]] columns. */
+  private def momentMean(sx: Column, n: Column): Column = sx.cast(DoubleType) / n
+
+  /** The sample variance (Σx² − (Σx)² / n) / (n − 1) of [[segmentMoments]]
+    * columns.
+    */
+  private def momentVar(sxx: Column, sx: Column, n: Column): Column =
+    (sxx.cast(DoubleType) - sx.cast(DoubleType) * sx.cast(DoubleType) / n) / (n - 1)
+
   /** Welch's unequal-variance t-test between two customer segments on
     * account balance (SURVEY §2 I-sext) — the A/B-experimentation
     * significance primitive. Exact decimal moment sums per group (one
@@ -1518,30 +1542,20 @@ object Aggregations extends QueryModule {
     "agg_welch_ttest",
     (spark, dir) => {
       import spark.implicits._
-      val m = Tables.customer(spark, dir)
-        .where($"c_mktsegment".isin("AUTOMOBILE", "BUILDING"))
-        .groupBy($"c_mktsegment")
-        .agg(
-          count(lit(1)).as("n"),
-          sum($"c_acctbal".cast(DecimalType(28, 10))).as("sx"),
-          sum(($"c_acctbal" * $"c_acctbal").cast(DecimalType(38, 10))).as("sxx"))
+      val m = segmentMoments(Tables.customer(spark, dir)
+        .where($"c_mktsegment".isin("AUTOMOBILE", "BUILDING")))
       val a = m.where($"c_mktsegment" === "AUTOMOBILE")
         .select($"n".as("n_a"), $"sx".as("sx_a"), $"sxx".as("sxx_a"))
       val b = m.where($"c_mktsegment" === "BUILDING")
         .select($"n".as("n_b"), $"sx".as("sx_b"), $"sxx".as("sxx_b"))
-      def mean(sx: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-        sx.cast(DoubleType) / n
-      def varSamp(sxx: org.apache.spark.sql.Column, sx: org.apache.spark.sql.Column,
-                  n: org.apache.spark.sql.Column) =
-        (sxx.cast(DoubleType) - sx.cast(DoubleType) * sx.cast(DoubleType) / n) / (n - 1)
-      val va = varSamp($"sxx_a", $"sx_a", $"n_a") / $"n_a"
-      val vb = varSamp($"sxx_b", $"sx_b", $"n_b") / $"n_b"
+      val va = momentVar($"sxx_a", $"sx_a", $"n_a") / $"n_a"
+      val vb = momentVar($"sxx_b", $"sx_b", $"n_b") / $"n_b"
       a.crossJoin(broadcast(b))
         .select(
           $"n_a", $"n_b",
-          mean($"sx_a", $"n_a").cast(DecimalType(18, 6)).as("mean_a"),
-          mean($"sx_b", $"n_b").cast(DecimalType(18, 6)).as("mean_b"),
-          round((mean($"sx_a", $"n_a") - mean($"sx_b", $"n_b")) /
+          momentMean($"sx_a", $"n_a").cast(DecimalType(18, 6)).as("mean_a"),
+          momentMean($"sx_b", $"n_b").cast(DecimalType(18, 6)).as("mean_b"),
+          round((momentMean($"sx_a", $"n_a") - momentMean($"sx_b", $"n_b")) /
             nullif(sqrt(va + vb), lit(0.0d)), 6).as("t_stat"),
           round((va + vb) * (va + vb) /
             nullif(va * va / ($"n_a" - 1) + vb * vb / ($"n_b" - 1), lit(0.0d)), 4)
@@ -2232,12 +2246,7 @@ object Aggregations extends QueryModule {
     "agg_anova_oneway",
     (spark, dir) => {
       import spark.implicits._
-      val g = Tables.customer(spark, dir)
-        .groupBy($"c_mktsegment")
-        .agg(
-          count(lit(1)).as("n"),
-          sum($"c_acctbal".cast(DecimalType(28, 10))).as("sx"),
-          sum(($"c_acctbal" * $"c_acctbal").cast(DecimalType(38, 10))).as("sxx"))
+      val g = segmentMoments(Tables.customer(spark, dir))
       val tot = g.agg(
         count(lit(1)).as("k"),
         sum($"n").as("nn"),
@@ -2670,17 +2679,10 @@ object Aggregations extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val zsum = 1.959963984540054 + 0.8416212335729143
-      val m = Tables.customer(spark, dir)
-        .where($"c_mktsegment".isin("AUTOMOBILE", "BUILDING"))
-        .groupBy($"c_mktsegment")
-        .agg(count(lit(1)).as("n"),
-          sum($"c_acctbal".cast(DecimalType(28, 10))).as("sx"),
-          sum(($"c_acctbal" * $"c_acctbal").cast(DecimalType(38, 10))).as("sxx"))
+      val m = segmentMoments(Tables.customer(spark, dir)
+          .where($"c_mktsegment".isin("AUTOMOBILE", "BUILDING")))
         .select($"c_mktsegment", $"n",
-          ($"sx".cast(DoubleType) / $"n").as("mean"),
-          (($"sxx".cast(DoubleType) -
-            $"sx".cast(DoubleType) * $"sx".cast(DoubleType) / $"n") /
-            ($"n" - 1)).as("v"))
+          momentMean($"sx", $"n").as("mean"), momentVar($"sxx", $"sx", $"n").as("v"))
       val a = m.where($"c_mktsegment" === "AUTOMOBILE")
         .select($"n".as("n_a"), $"mean".as("mean_a"), $"v".as("v_a"))
       val b = m.where($"c_mktsegment" === "BUILDING")
@@ -2984,24 +2986,14 @@ object Aggregations extends QueryModule {
     "agg_holm_stepdown",
     (spark, dir) => {
       import spark.implicits._
-      val m = Tables.customer(spark, dir)
-        .groupBy($"c_mktsegment")
-        .agg(
-          count(lit(1)).as("n"),
-          sum($"c_acctbal".cast(DecimalType(28, 10))).as("sx"),
-          sum(($"c_acctbal" * $"c_acctbal").cast(DecimalType(38, 10))).as("sxx"))
+      val m = segmentMoments(Tables.customer(spark, dir))
         .transform(graft.Checkpoints.cut)
-      def mean(sx: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-        sx.cast(DoubleType) / n
-      def se2(sxx: org.apache.spark.sql.Column, sx: org.apache.spark.sql.Column,
-              n: org.apache.spark.sql.Column) =
-        (sxx.cast(DoubleType) - sx.cast(DoubleType) * sx.cast(DoubleType) / n) /
-          (n - 1) / n
+      def se2(sxx: Column, sx: Column, n: Column) = momentVar(sxx, sx, n) / n
       val a = m.select($"c_mktsegment".as("seg_a"), $"n".as("n_a"),
         $"sx".as("sx_a"), $"sxx".as("sxx_a"))
       val b = m.select($"c_mktsegment".as("seg_b"), $"n".as("n_b"),
         $"sx".as("sx_b"), $"sxx".as("sxx_b"))
-      val z = round((mean($"sx_a", $"n_a") - mean($"sx_b", $"n_b")) /
+      val z = round((momentMean($"sx_a", $"n_a") - momentMean($"sx_b", $"n_b")) /
         nullif(sqrt(se2($"sxx_a", $"sx_a", $"n_a") + se2($"sxx_b", $"sx_b", $"n_b")),
           lit(0.0d)), 6)
       val thr = array(Seq(2.807034, 2.772921, 2.734369, 2.69011, 2.638257,

@@ -846,7 +846,64 @@ object Flagships extends QueryModule {
   /** The top-50 revenue backbone of the undirected trade graph: `und(a,
     * b)`, the 50 heaviest nation pairs (a < b, exact decimal weight,
     * pair-key tiebreak), and `nb(u, w)`, each edge in both directions.
+    * Undirected weights fold the shared directed edges: decimal addition
+    * is exact, so the two-step sum equals the one-shot fact-level
+    * aggregation of [[tradeBackboneSql]].
     */
+  private def tradeBackbone(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val und = nationTradeEdges(spark, dir)
+      .where($"src" =!= $"dst")
+      .groupBy(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
+      .agg(sum($"wgt").as("wgt"))
+      // bounded (≤ nation²/2 rows): one global rank is a single tiny task
+      .withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .orderBy($"wgt".desc, $"a", $"b")))
+      .where($"rk" <= 50)
+      .select($"a", $"b")
+    val nb = und.select($"a".as("u"), $"b".as("w"))
+      .unionAll(und.select($"b".as("u"), $"a".as("w")))
+    (und, nb)
+  }
+
+  /** The symmetrized trade graph SPARSIFIED to each node's top-3
+    * heaviest partners, `sym(a, b, w)` with the pair weight cast to `wType`
+    * (kNN-graph backbone of the LPA, closeness and bottleneck rows). The
+    * rank window is per-node over the bounded nation-pair table; the
+    * (w desc, b) tiebreak keeps it deterministic.
+    */
+  private def topPartners(spark: org.apache.spark.sql.SparkSession, dir: String,
+      wType: org.apache.spark.sql.types.DecimalType): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val e0 = nationTradeEdges(spark, dir)
+    val wTop = org.apache.spark.sql.expressions.Window
+      .partitionBy($"a").orderBy($"w".desc, $"b")
+    e0.select($"src".as("a"), $"dst".as("b"), $"wgt")
+      .unionAll(e0.select($"dst".as("a"), $"src".as("b"), $"wgt"))
+      .where($"a" =!= $"b")
+      .groupBy($"a", $"b")
+      .agg(sum($"wgt").cast(wType).as("w"))
+      .withColumn("rn", row_number().over(wTop))
+      .filter($"rn" <= 3)
+      .select($"a", $"b", $"w")
+  }
+
+  /** Link-prediction pairs `(pa, pb, …)` with both nations' names as
+    * `a_name` and `b_name`.
+    */
+  private def withPairNames(spark: org.apache.spark.sql.SparkSession, dir: String,
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    pairs
+      .join(broadcast(Tables.nation(spark, dir)
+        .select($"n_nationkey".as("pa"), $"n_name".as("a_name"))), "pa")
+      .join(broadcast(Tables.nation(spark, dir)
+        .select($"n_nationkey".as("pb"), $"n_name".as("b_name"))), "pb")
+  }
+
+  /** The twin of [[tradeBackbone]], as the CTEs `und(a, b)` and `nb(u, w)`. */
   private def tradeBackboneSql: String = s"""und AS (
         SELECT a, b FROM (
           SELECT a, b, ROW_NUMBER() OVER (ORDER BY wgt DESC, a, b) AS rk
@@ -906,10 +963,15 @@ object Flagships extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val w = org.apache.spark.sql.expressions.Window.partitionBy($"src")
+      val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
+      val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
+      // an edge with an endpoint missing from `nation` is dropped BEFORE
+      // the out-weight shares and the dangling test, so no round sends
+      // rank mass to a node that cannot hold it
       val edges = nationTradeEdges(spark, dir)
+        .where($"src".isin(nodeIds: _*) && $"dst".isin(nodeIds: _*))
         .select($"src", $"dst",
           ($"wgt".cast(DoubleType) / sum($"wgt").over(w).cast(DoubleType)).as("ratio"))
-      val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
       // DRIVER-SIDE power iteration: the ratio table is ≤ nation² rows
       // and the iterate ≤ nations rows BY CONSTRUCTION, while an unrolled
       // window-over-join lineage costs 29 Spark jobs (checkpoints,
@@ -925,7 +987,6 @@ object Flagships extends QueryModule {
       // the name join / 6 dp output below is unchanged Spark.
       val edgeP: Seq[(Any, Any, Double)] =
         edges.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDouble(2)))
-      val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
       val nnD = nodeIds.size.toDouble
       val srcSet: Set[Any] = edgeP.map(_._1).toSet
       var prP: Map[Any, Double] = nodeIds.map(n => (n, 1.0 / nnD)).toMap
@@ -937,10 +998,7 @@ object Flagships extends QueryModule {
         val zero = java.math.BigDecimal.ZERO.setScale(9)
         val s = scala.collection.mutable.Map[Any, java.math.BigDecimal](
           nodeIds.map(n => (n, zero)): _*)
-        // an edge with an endpoint missing from `nation` carries no rank,
-        // as the oracle's inner join to pr and left join onto the nation
-        // nodes drop it
-        for ((src, dst, ratio) <- edgeP if prP.contains(src) && s.contains(dst))
+        for ((src, dst, ratio) <- edgeP)
           s(dst) = s(dst).add(graft.DriverRound.decimal(graft.DriverRound(prP(src) * ratio, 9), 9))
         prP = nodeIds.map(n =>
           (n, graft.DriverRound(0.15 / nnD + 0.85 * (s(n).doubleValue + dm / nnD), 9))).toMap
@@ -982,6 +1040,8 @@ object Flagships extends QueryModule {
         SELECT src, dst,
           CAST(wgt AS DOUBLE) / CAST(SUM(wgt) OVER (PARTITION BY src) AS DOUBLE) AS ratio
         FROM edges
+        WHERE src IN (SELECT n_nationkey FROM nation)
+          AND dst IN (SELECT n_nationkey FROM nation)
       ), nn AS (SELECT COUNT(*) AS nn FROM nation),
       pr0 AS (
         SELECT n_nationkey AS node, CAST(1 AS DOUBLE) / nn.nn AS pr
@@ -1016,24 +1076,11 @@ object Flagships extends QueryModule {
     "graph_label_propagation",
     (spark, dir) => {
       import spark.implicits._
-      val e0 = nationTradeEdges(spark, dir)
-      // Symmetrize, then SPARSIFY to each node's top-3 heaviest partners
-      // (kNN-graph community detection): on this corpus every nation
-      // trades with every other, and majority LPA on a near-complete
-      // weighted graph collapses to one bloc — the top-k backbone keeps
-      // only the dominant trade relationships, which is where bloc
-      // structure lives. Rank window is per-node over the bounded
-      // nation-pair table; (w desc, b) tiebreak keeps it deterministic.
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy($"a").orderBy($"w".desc, $"b")
-      val sym = e0.select($"src".as("a"), $"dst".as("b"), $"wgt")
-        .unionAll(e0.select($"dst".as("a"), $"src".as("b"), $"wgt"))
-        .where($"a" =!= $"b")
-        .groupBy($"a", $"b")
-        .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("w"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
-        .select($"a", $"b", $"w")
+      // on this corpus every nation trades with every other, and majority
+      // LPA on a near-complete weighted graph collapses to one bloc — the
+      // top-3 backbone keeps only the dominant trade relationships, which
+      // is where bloc structure lives
+      val sym = topPartners(spark, dir, org.apache.spark.sql.types.DecimalType(28, 2))
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
       // DRIVER-SIDE synchronous LPA rounds: the backbone is ≤ 3·nations
       // edges and the label table ≤ nations rows BY CONSTRUCTION, while a
@@ -1248,21 +1295,7 @@ object Flagships extends QueryModule {
     "graph_adamic_adar",
     (spark, dir) => {
       import spark.implicits._
-      // undirected weights fold the shared directed edges: decimal
-      // addition is exact, so the two-step sum equals the one-shot
-      // fact-level aggregation the oracle mirrors
-      val und = nationTradeEdges(spark, dir)
-        .where($"src" =!= $"dst")
-        .groupBy(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-        .agg(sum($"wgt").as("wgt"))
-        // bounded (≤ nation²/2 rows): one global rank is a single tiny task
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy($"wgt".desc, $"a", $"b")))
-        .where($"rk" <= 50)
-        .select($"a", $"b")
-      val nb = und.select($"a".as("u"), $"b".as("w"))
-        .unionAll(und.select($"b".as("u"), $"a".as("w")))
+      val (und, nb) = tradeBackbone(spark, dir)
       val degc = nb.groupBy($"w".as("wd")).agg(count(lit(1)).as("deg"))
       val cand = nb.select($"u".as("pa"), $"w")
         .join(nb.select($"u".as("pb"), $"w"), "w")
@@ -1275,11 +1308,7 @@ object Flagships extends QueryModule {
             .cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("aas"))
         .select($"pa", $"pb", $"common_neighbors",
           round($"aas".cast(DoubleType), 6).as("aa_score"))
-      scored
-        .join(broadcast(Tables.nation(spark, dir)
-          .select($"n_nationkey".as("pa"), $"n_name".as("a_name"))), "pa")
-        .join(broadcast(Tables.nation(spark, dir)
-          .select($"n_nationkey".as("pb"), $"n_name".as("b_name"))), "pb")
+      withPairNames(spark, dir, scored)
         .orderBy($"aa_score".desc, $"a_name", $"b_name")
         .limit(10)
         .select($"a_name", $"b_name", $"common_neighbors", $"aa_score")
@@ -1326,17 +1355,7 @@ object Flagships extends QueryModule {
     "graph_jaccard_neighbors",
     (spark, dir) => {
       import spark.implicits._
-      val und = nationTradeEdges(spark, dir)
-        .where($"src" =!= $"dst")
-        .groupBy(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-        .agg(sum($"wgt").as("wgt"))
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy($"wgt".desc, $"a", $"b")))
-        .where($"rk" <= 50)
-        .select($"a", $"b")
-      val nb = und.select($"a".as("u"), $"b".as("w"))
-        .unionAll(und.select($"b".as("u"), $"a".as("w")))
+      val (und, nb) = tradeBackbone(spark, dir)
       val degc = nb.groupBy($"u".as("ud")).agg(count(lit(1)).as("deg"))
       val common = nb.select($"u".as("pa"), $"w")
         .join(nb.select($"u".as("pb"), $"w"), "w")
@@ -1344,17 +1363,14 @@ object Flagships extends QueryModule {
         .join(und, $"pa" === $"a" && $"pb" === $"b", "left_anti")
         .groupBy($"pa", $"pb")
         .agg(count(lit(1)).as("common_neighbors"))
-      common
+      val scored = common
         .join(broadcast(degc.select($"ud".as("pa"), $"deg".as("deg_a"))), "pa")
         .join(broadcast(degc.select($"ud".as("pb"), $"deg".as("deg_b"))), "pb")
         .select($"pa", $"pb", $"common_neighbors",
           ($"deg_a" + $"deg_b" - $"common_neighbors").as("union_neighbors"),
           round($"common_neighbors".cast(DoubleType) /
             ($"deg_a" + $"deg_b" - $"common_neighbors"), 6).as("jaccard"))
-        .join(broadcast(Tables.nation(spark, dir)
-          .select($"n_nationkey".as("pa"), $"n_name".as("a_name"))), "pa")
-        .join(broadcast(Tables.nation(spark, dir)
-          .select($"n_nationkey".as("pb"), $"n_name".as("b_name"))), "pb")
+      withPairNames(spark, dir, scored)
         .orderBy($"jaccard".desc, $"a_name", $"b_name")
         .limit(10)
         .select($"a_name", $"b_name", $"common_neighbors",
@@ -1406,17 +1422,7 @@ object Flagships extends QueryModule {
       // the raw nation graph is near-complete (degree variance 0 →
       // undefined r), so the statistic runs on the same top-50 revenue
       // backbone the Adamic–Adar row predicts against
-      val und = nationTradeEdges(spark, dir)
-        .where($"src" =!= $"dst")
-        .groupBy(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-        .agg(sum($"wgt").as("wgt"))
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy($"wgt".desc, $"a", $"b")))
-        .where($"rk" <= 50)
-        .select($"a", $"b")
-      val nb = und.select($"a".as("u"), $"b".as("w"))
-        .unionAll(und.select($"b".as("u"), $"a".as("w")))
+      val (und, nb) = tradeBackbone(spark, dir)
       val degc = nb.groupBy($"u").agg(count(lit(1)).as("deg"))
       val ends = nb
         .join(broadcast(degc.select($"u", $"deg".as("dx"))), "u")
@@ -1478,16 +1484,7 @@ object Flagships extends QueryModule {
     "graph_harmonic_closeness",
     (spark, dir) => {
       import spark.implicits._
-      val e0 = nationTradeEdges(spark, dir)
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy($"a").orderBy($"w".desc, $"b")
-      val sym = e0.select($"src".as("a"), $"dst".as("b"), $"wgt")
-        .unionAll(e0.select($"dst".as("a"), $"src".as("b"), $"wgt"))
-        .where($"a" =!= $"b")
-        .groupBy($"a", $"b")
-        .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("w"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
+      val sym = topPartners(spark, dir, org.apache.spark.sql.types.DecimalType(28, 2))
         .select($"a", $"b")
       // DRIVER-SIDE min-plus rounds: the backbone is ≤ 3·nations
       // directed edges BY CONSTRUCTION, while a per-round checkpoint loop
@@ -1593,17 +1590,7 @@ object Flagships extends QueryModule {
     "graph_bottleneck_paths",
     (spark, dir) => {
       import spark.implicits._
-      val e0 = nationTradeEdges(spark, dir)
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy($"a").orderBy($"w".desc, $"b")
-      val sym = e0.select($"src".as("a"), $"dst".as("b"), $"wgt")
-        .unionAll(e0.select($"dst".as("a"), $"src".as("b"), $"wgt"))
-        .where($"a" =!= $"b")
-        .groupBy($"a", $"b")
-        .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(18, 4)).as("w"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter($"rn" <= 3)
-        .select($"a", $"b", $"w")
+      val sym = topPartners(spark, dir, org.apache.spark.sql.types.DecimalType(18, 4))
       // DRIVER-SIDE (max, min) relaxation: the backbone is ≤ 3·nations
       // edges BY CONSTRUCTION and the semiring only COMPARES the exact
       // decimal weights (never adds), so a per-round checkpoint loop's 32

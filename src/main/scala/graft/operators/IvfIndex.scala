@@ -352,13 +352,9 @@ object IvfIndex {
       val (idx2, cb2) = gen2
       val (codes1, rcb) = ensurePqResidual(spark, dir)
       val changedOld = changed.join(cb1.select(col("cell")), Seq("cell"), "left_semi")
-      val refreshed = VectorOps.withPqStructs(
-          VectorOps.withResiduals(
-              idx2.join(broadcast(changed), Seq("cell"), "left_semi"), cb2)
-            .select(col("vec_id"), col("cell"), col("remb").as("emb")),
-          rcb, VectorOps.PqrM, VectorOps.PqrW)
-        .select(col("vec_id"), col("cell"),
-          expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes"))
+      val refreshed = VectorOps.pqCodes(
+        VectorOps.residualEmb(idx2.join(broadcast(changed), Seq("cell"), "left_semi"), cb2),
+        rcb, VectorOps.PqrM, VectorOps.PqrW)
       val copied = codes1.join(broadcast(changedOld), Seq("cell"), "left_anti")
         .select(col("vec_id"), col("cell"), col("codes"))
       writeCells(copied.unionByName(refreshed), codesT)
@@ -589,20 +585,8 @@ object IvfIndex {
     * slice's residuals, codes for base rows only.
     */
   def ensurePqrBase(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val codesT = pqrBaseCodesTable(dir)
-    val cbT = pqrBaseCodebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, PqrBaseAlgo),
-      Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
-      val (idx, ivfCb) = ensureBase(spark, dir)
-      val cents = VectorOps.trainPqResidualCodebook(idx, ivfCb)
-      val resid = VectorOps.withResiduals(idx, ivfCb)
-        .select(col("vec_id"), col("cell"), col("remb").as("emb"))
-      writeCells(VectorOps.withPqStructs(resid, cents, VectorOps.PqrM, VectorOps.PqrW)
-        .select(col("vec_id"), col("cell"),
-          expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes")), codesT)
-      writeSmall(cents.select(col("sub").cast("long").as("sub"), col("cid"), col("cv")), cbT)
-    }
-    (spark.table(codesT), spark.table(cbT))
+    ensureResidualPq(spark, fingerprint(dir, PqrBaseAlgo),
+      pqrBaseCodesTable(dir), pqrBaseCodebookTable(dir))(ensureBase(spark, dir))
   }
 
   /** Find-or-build the POST-APPEND residual codes: clone the base codes
@@ -620,12 +604,9 @@ object IvfIndex {
       val (_, baseCb) = ensureBase(spark, dir)
       writeCells(baseCodes, name)
       // batch codes: residual vs the assigned base cell, base codebook
-      val batchResid = VectorOps.withResiduals(
-          appendAssigned(spark, dir, baseCb), baseCb)
-        .select(col("vec_id"), col("cell"), col("remb").as("emb"))
-      appendCells(VectorOps.withPqStructs(batchResid, rcb, VectorOps.PqrM, VectorOps.PqrW)
-        .select(col("vec_id"), col("cell"),
-          expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes")), name)
+      appendCells(VectorOps.pqCodes(
+        VectorOps.residualEmb(appendAssigned(spark, dir, baseCb), baseCb),
+        rcb, VectorOps.PqrM, VectorOps.PqrW), name)
     }
     (spark.table(name), rcb)
   }
@@ -776,21 +757,9 @@ object IvfIndex {
     * re-registration contract as every artifact family.
     */
   def ensurePqrSpilled(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val codesT = pqrSpillCodesTable(dir)
-    val cbT = pqrSpillCodebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, PqrSpillAlgo),
-      Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
-      val (sidx, scb) = ensureSpilled(spark, dir)
-      val cents = VectorOps.trainPqResidualCodebook(
-        sidx.filter(col("crank") === 1), scb)
-      val resid = VectorOps.withResiduals(sidx, scb)
-        .select(col("vec_id"), col("cell"), col("remb").as("emb"))
-      writeCells(VectorOps.withPqStructs(resid, cents, VectorOps.PqrM, VectorOps.PqrW)
-        .select(col("vec_id"), col("cell"),
-          expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes")), codesT)
-      writeSmall(cents.select(col("sub").cast("long").as("sub"), col("cid"), col("cv")), cbT)
-    }
-    (spark.table(codesT), spark.table(cbT))
+    ensureResidualPq(spark, fingerprint(dir, PqrSpillAlgo),
+      pqrSpillCodesTable(dir), pqrSpillCodebookTable(dir),
+      _.filter(col("crank") === 1))(ensureSpilled(spark, dir))
   }
 
   def pqCodesTable(dir: String): String = s"graft_pq_codes_${tag(dir)}"
@@ -815,23 +784,12 @@ object IvfIndex {
     * parquet is never re-touched.
     */
   def ensurePq(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val codesT = pqCodesTable(dir)
-    val cbT = pqCodebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, PqAlgo),
-      Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
+    ensurePqArtifacts(spark, fingerprint(dir, PqAlgo), pqCodesTable(dir), pqCodebookTable(dir)) {
       val (idx, _) = ensure(spark, dir)
       // trained per-subspace codebook: stride-sampled seeds + fixed Lloyd
       // rounds
-      val cents = VectorOps.trainPqCodebook(idx)
-      // row-local encode: all 4 codes per vector come
-      // out of one map pass over the bucketed index — no per-(vector,
-      // subspace) window Exchange, no re-pack aggregation
-      writeCells(VectorOps.withPqStructs(idx, cents)
-        .select(col("vec_id"), col("cell"),
-          expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes")), codesT)
-      writeSmall(cents.select(col("sub").cast("long").as("sub"), col("cid"), col("cv")), cbT)
+      (VectorOps.trainPqCodebook(idx), idx)
     }
-    (spark.table(codesT), spark.table(cbT))
   }
 
   def pqrCodesTable(dir: String): String = s"graft_pqr_codes_${tag(dir)}"
@@ -854,21 +812,36 @@ object IvfIndex {
     * rows, kilobytes, broadcast.
     */
   def ensurePqResidual(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val codesT = pqrCodesTable(dir)
-    val cbT = pqrCodebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, PqrAlgo),
-      Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
-      val (idx, ivfCb) = ensure(spark, dir)
-      val cents = VectorOps.trainPqResidualCodebook(idx, ivfCb)
-      // row-local encode of the residuals — same one-map-pass plan as
-      // the raw-PQ codes build, reading the persisted bucketed index
-      val resid = VectorOps.withResiduals(idx, ivfCb)
-        .select(col("vec_id"), col("cell"), col("remb").as("emb"))
-      writeCells(VectorOps.withPqStructs(resid, cents, VectorOps.PqrM, VectorOps.PqrW)
-        .select(col("vec_id"), col("cell"),
-          expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes")), codesT)
+    ensureResidualPq(spark, fingerprint(dir, PqrAlgo),
+      pqrCodesTable(dir), pqrCodebookTable(dir))(ensure(spark, dir))
+  }
+
+  /** Find-or-build one PQ artifact pair — the codes table (`codesT`,
+    * cell-bucketed (vec_id, cell, codes)) and its (sub, cid, cv) codebook
+    * (`cbT`) — from `train`'s (codebook, encode input). The encode is
+    * row-local: all m codes per vector come out of one map pass over the
+    * bucketed index — no per-(vector, subspace) window Exchange, no
+    * re-pack aggregation.
+    */
+  private def ensurePqArtifacts(spark: SparkSession, fp: String, codesT: String, cbT: String,
+      m: Int = 4, w: Int = 16)(train: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
+    findOrBuild(spark, fp, Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
+      val (cents, input) = train
+      writeCells(VectorOps.pqCodes(input, cents, m, w), codesT)
       writeSmall(cents.select(col("sub").cast("long").as("sub"), col("cid"), col("cv")), cbT)
     }
     (spark.table(codesT), spark.table(cbT))
   }
+
+  /** [[ensurePqArtifacts]] for residual PQ over `geometry`'s (index, cell
+    * codebook): the residual codebook trains on the `trainRows` of the
+    * index, and every index row encodes its residual.
+    */
+  private def ensureResidualPq(spark: SparkSession, fp: String, codesT: String, cbT: String,
+      trainRows: DataFrame => DataFrame = identity)(
+      geometry: => (DataFrame, DataFrame)): (DataFrame, DataFrame) =
+    ensurePqArtifacts(spark, fp, codesT, cbT, VectorOps.PqrM, VectorOps.PqrW) {
+      val (idx, cb) = geometry
+      (VectorOps.trainPqResidualCodebook(trainRows(idx), cb), VectorOps.residualEmb(idx, cb))
+    }
 }

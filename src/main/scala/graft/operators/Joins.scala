@@ -248,6 +248,22 @@ object Joins extends QueryModule {
       ORDER BY user_id, id1, id2
     """.trim))
 
+  /** The as-of family's input: the click and purchase events. */
+  private def asofEvents(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, dir).filter($"event_type".isin("click", "purchase"))
+  }
+
+  /** The as-of family's per-user order (ts, event_type, event_id); each
+    * query picks its frame.
+    */
+  private def asofOrder: org.apache.spark.sql.expressions.WindowSpec =
+    Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_type"), col("event_id"))
+
+  /** A click's ts, null on every other event. */
+  private def clickTs: org.apache.spark.sql.Column = when(col("event_type") === "click", col("ts"))
+
   /** As-of join via tagged-union window: one shuffle by user_id, no join.
     * Clicks sort before purchases at equal ts ('click' < 'purchase'
     * lexicographically), making the match inclusive like DuckDB's
@@ -257,15 +273,9 @@ object Joins extends QueryModule {
     "join_asof",
     (spark, dir) => {
       import spark.implicits._
-      val ev = Tables.events(spark, dir)
-        .filter($"event_type".isin("click", "purchase"))
-      val w = Window
-        .partitionBy($"user_id")
-        .orderBy($"ts", $"event_type", $"event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn(
-          "last_click_ts",
-          last(when($"event_type" === "click", $"ts"), ignoreNulls = true).over(w))
+      val w = asofOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      asofEvents(spark, dir)
+        .withColumn("last_click_ts", last(clickTs, ignoreNulls = true).over(w))
         .filter($"event_type" === "purchase")
         .select($"event_id", $"user_id", $"ts", $"last_click_ts")
         .orderBy($"event_id")
@@ -289,15 +299,9 @@ object Joins extends QueryModule {
     "join_asof_tolerance",
     (spark, dir) => {
       import spark.implicits._
-      val ev = Tables.events(spark, dir)
-        .filter($"event_type".isin("click", "purchase"))
-      val w = Window
-        .partitionBy($"user_id")
-        .orderBy($"ts", $"event_type", $"event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn(
-          "last_click_ts",
-          last(when($"event_type" === "click", $"ts"), ignoreNulls = true).over(w))
+      val w = asofOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      asofEvents(spark, dir)
+        .withColumn("last_click_ts", last(clickTs, ignoreNulls = true).over(w))
         .filter($"event_type" === "purchase")
         .withColumn(
           "last_click_ts",
@@ -615,15 +619,10 @@ object Joins extends QueryModule {
     "join_asof_nearest",
     (spark, dir) => {
       import spark.implicits._
-      val ev = Tables.events(spark, dir)
-        .filter($"event_type".isin("click", "purchase"))
-      val order = Seq($"ts", $"event_type", $"event_id")
-      val wB = Window.partitionBy($"user_id").orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wF = Window.partitionBy($"user_id").orderBy(order: _*)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val clickTs = when($"event_type" === "click", $"ts")
-      ev.withColumn("prev_ts", last(clickTs, ignoreNulls = true).over(wB))
+      val wB = asofOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wF = asofOrder.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      asofEvents(spark, dir)
+        .withColumn("prev_ts", last(clickTs, ignoreNulls = true).over(wB))
         .withColumn("next_ts", first(clickTs, ignoreNulls = true).over(wF))
         .filter($"event_type" === "purchase")
         .withColumn("gap_b", expr("timestampdiff(MICROSECOND, prev_ts, ts)"))
@@ -712,15 +711,9 @@ object Joins extends QueryModule {
     "join_asof_forward",
     (spark, dir) => {
       import spark.implicits._
-      val ev = Tables.events(spark, dir)
-        .filter($"event_type".isin("click", "purchase"))
-      val w = Window
-        .partitionBy($"user_id")
-        .orderBy($"ts", $"event_type", $"event_id")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      ev.withColumn(
-          "next_click_ts",
-          first(when($"event_type" === "click", $"ts"), ignoreNulls = true).over(w))
+      val w = asofOrder.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      asofEvents(spark, dir)
+        .withColumn("next_click_ts", first(clickTs, ignoreNulls = true).over(w))
         .filter($"event_type" === "purchase")
         .select($"event_id", $"user_id", $"ts", $"next_click_ts")
         .orderBy($"event_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, QueryModule, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -475,6 +476,36 @@ object TextOps extends QueryModule {
       FROM votes GROUP BY doc_id ORDER BY doc_id
     """.trim))
 
+  /** Each language's stopword markers, in language-code order. */
+  private val langMarkers: Seq[(String, Seq[String])] = Seq(
+    "de" -> Seq("der", "die", "und", "das", "ein"),
+    "en" -> Seq("the", "a", "and", "of", "fast", "slow"),
+    "es" -> Seq("el", "la", "los", "y", "un"),
+    "fr" -> Seq("le", "la", "les", "et", "un"),
+    "zh" -> Seq("de", "shi", "le", "zai", "he"))
+
+  /** Per-document stopword-marker scores over `tok(doc_id, tok)`:
+    * `score_<lang>` counts the document's tokens among that language's
+    * markers; `extra` aggregates ride the same pass.
+    */
+  private def langScores(tok: org.apache.spark.sql.DataFrame,
+      extra: Column*): org.apache.spark.sql.DataFrame = {
+    val scores = langMarkers.map { case (l, ws) =>
+      count(when(col("tok").isin(ws: _*), 1)).as(s"score_$l")
+    } ++ extra
+    tok.groupBy(col("doc_id")).agg(scores.head, scores.tail: _*)
+  }
+
+  /** The best marker score of a [[langScores]] row. */
+  private def langBestScore: Column = greatest(langMarkers.map(m => col(s"score_${m._1}")): _*)
+
+  /** The predicted language given `best_score`: the first language, in
+    * code order, reaching it — the oracle's CASE ... WHEN order.
+    */
+  private def langPred: Column = langMarkers.map(_._1).foldRight(lit("??")) { (l, acc) =>
+    when(col(s"score_$l") === col("best_score"), lit(l)).otherwise(acc)
+  }
+
   /** The DuckDB twin of the stopword-marker scores: `score_<lang>`, the
     * `tok` rows among each language's markers.
     */
@@ -504,27 +535,9 @@ object TextOps extends QueryModule {
     "text_langid_ngram",
     (spark, dir) => {
       import spark.implicits._
-      val markers = Map(
-        "en" -> Seq("the", "a", "and", "of", "fast", "slow"),
-        "de" -> Seq("der", "die", "und", "das", "ein"),
-        "es" -> Seq("el", "la", "los", "y", "un"),
-        "fr" -> Seq("le", "la", "les", "et", "un"),
-        "zh" -> Seq("de", "shi", "le", "zai", "he"))
-      val tok = cachedTokens(Tables.documents(spark, dir))
-      val scores = markers.toSeq.sortBy(_._1).map { case (l, ws) =>
-        count(when($"tok".isin(ws: _*), 1)).as(s"score_$l")
-      }
-      val scored = tok.groupBy($"doc_id").agg(scores.head, scores.tail: _*)
-      val langs = markers.keys.toSeq.sorted
-      val bestScore = greatest(langs.map(l => col(s"score_$l")): _*)
-      // first alphabetical lang reaching best_score wins ties — matches
-      // the oracle's CASE ... WHEN ordering
-      val predExpr = langs.foldRight(lit("??")) { (l, acc) =>
-        when(col(s"score_$l") === $"best_score", lit(l)).otherwise(acc)
-      }
-      scored
-        .withColumn("best_score", bestScore)
-        .select($"doc_id", $"best_score", predExpr.as("pred_lang"))
+      langScores(cachedTokens(Tables.documents(spark, dir)))
+        .withColumn("best_score", langBestScore)
+        .select($"doc_id", $"best_score", langPred.as("pred_lang"))
         .orderBy($"doc_id")
     },
     Some(s"""
@@ -905,6 +918,38 @@ object TextOps extends QueryModule {
       ORDER BY doc_id, chunk_idx
     """.trim))
 
+  /** Train/test decontamination over [[taggedShingles]], with `src0` as
+    * the held-out benchmark: `candidates(benchSh, trainSh)` picks the
+    * training (doc_id, shingle) rows worth confirming; an exact join to
+    * the broadcast benchmark set confirms them, and every training doc
+    * with ≥ 3 hits is reported with its shingle count and contamination
+    * ratio. The source tags are cached once, so the three branches
+    * (benchmark set, training set, sizes) do not each re-tokenize the
+    * corpus.
+    */
+  private def decontaminate(spark: org.apache.spark.sql.SparkSession, dir: String)(
+      candidates: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val sh = taggedShingles(spark, dir)
+    val benchSh = sh.where($"source" === "src0")
+      .select($"shingle").distinct()
+    val trainSh = sh.where($"source" =!= "src0")
+      .select($"doc_id", $"shingle")
+    val sizes = trainSh.groupBy($"doc_id").agg(count(lit(1)).as("n_shingles"))
+    candidates(benchSh, trainSh)
+      .join(broadcast(benchSh), "shingle")
+      .groupBy($"doc_id")
+      .agg(count(lit(1)).as("n_hits"))
+      .join(sizes, "doc_id")
+      .select(
+        $"doc_id", $"n_hits", $"n_shingles",
+        ($"n_hits".cast(DoubleType) / $"n_shingles")
+          .cast(DecimalType(18, 6)).as("contamination"))
+      .where($"n_hits" >= 3)
+      .orderBy($"doc_id")
+  }
+
   /** Train/test decontamination by n-gram overlap — the guard every
     * training corpus needs against benchmark leakage: treat one source
     * (`src0`) as the held-out benchmark, flag every training document
@@ -922,28 +967,7 @@ object TextOps extends QueryModule {
   val textDecontaminateNgram = Q(
     "text_decontaminate_ngram",
     (spark, dir) => {
-      import spark.implicits._
-      // tag each shingle with its doc's source ONCE and cache: three
-      // downstream branches (benchmark set, training set, sizes) would
-      // otherwise each re-tokenize the corpus; see taggedShingles for
-      // the cross-invocation cache discipline
-      val sh = taggedShingles(spark, dir)
-      val benchSh = sh.where($"source" === "src0")
-        .select($"shingle").distinct()
-      val trainSh = sh.where($"source" =!= "src0")
-        .select($"doc_id", $"shingle")
-      val sizes = trainSh.groupBy($"doc_id").agg(count(lit(1)).as("n_shingles"))
-      trainSh
-        .join(broadcast(benchSh), "shingle")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_hits"))
-        .join(sizes, "doc_id")
-        .select(
-          $"doc_id", $"n_hits", $"n_shingles",
-          ($"n_hits".cast(DoubleType) / $"n_shingles")
-            .cast(DecimalType(18, 6)).as("contamination"))
-        .where($"n_hits" >= 3)
-        .orderBy($"doc_id")
+      decontaminate(spark, dir)((_, trainSh) => trainSh)
     },
     Some(s"""
       WITH ${OracleSql.shingles()}, bench AS (
@@ -1051,42 +1075,25 @@ object TextOps extends QueryModule {
   val textDecontaminateBloom = Q(
     "text_decontaminate_bloom",
     (spark, dir) => {
-      import spark.implicits._
       graft.functions.GraftFunctions.register(spark)
-      val sh = taggedShingles(spark, dir)
-      val benchSh = sh.where($"source" === "src0")
-        .select($"shingle").distinct()
-      val trainSh = sh.where($"source" =!= "src0")
-        .select($"doc_id", $"shingle")
-      val sizes = trainSh.groupBy($"doc_id").agg(count(lit(1)).as("n_shingles"))
-      val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-      val bv = s"bench_sh_$runId"
-      val tv = s"train_sh_$runId"
-      benchSh.createOrReplaceTempView(bv)
-      trainSh.createOrReplaceTempView(tv)
-      try {
+      decontaminate(spark, dir) { (benchSh, trainSh) =>
+        val runId = java.util.UUID.randomUUID().toString.replace("-", "")
+        val bv = s"bench_sh_$runId"
+        val tv = s"train_sh_$runId"
+        benchSh.createOrReplaceTempView(bv)
+        trainSh.createOrReplaceTempView(tv)
         // analysis resolves the views eagerly, so dropping them in the
-        // finally is safe for the lazy frame returned below
-        val cand = spark.sql(
+        // finally is safe for the lazy frame returned
+        try spark.sql(
           s"""SELECT doc_id, shingle FROM $tv
              |WHERE graft_might_contain(
              |  (SELECT graft_bloom_agg(xxhash64(shingle), 100000L, 800000L)
              |   FROM $bv),
              |  xxhash64(shingle))""".stripMargin)
-        cand
-          .join(broadcast(benchSh), "shingle")
-          .groupBy($"doc_id")
-          .agg(count(lit(1)).as("n_hits"))
-          .join(sizes, "doc_id")
-          .select(
-            $"doc_id", $"n_hits", $"n_shingles",
-            ($"n_hits".cast(DoubleType) / $"n_shingles")
-              .cast(DecimalType(18, 6)).as("contamination"))
-          .where($"n_hits" >= 3)
-          .orderBy($"doc_id")
-      } finally {
-        spark.catalog.dropTempView(bv)
-        spark.catalog.dropTempView(tv)
+        finally {
+          spark.catalog.dropTempView(bv)
+          spark.catalog.dropTempView(tv)
+        }
       }
     },
     textDecontaminateNgram.oracle)
@@ -1655,26 +1662,12 @@ object TextOps extends QueryModule {
     "pipeline_corpus_curation",
     (spark, dir) => {
       import spark.implicits._
-      val markers = Map(
-        "en" -> Seq("the", "a", "and", "of", "fast", "slow"),
-        "de" -> Seq("der", "die", "und", "das", "ein"),
-        "es" -> Seq("el", "la", "los", "y", "un"),
-        "fr" -> Seq("le", "la", "les", "et", "un"),
-        "zh" -> Seq("de", "shi", "le", "zai", "he"))
-      val langs = markers.keys.toSeq.sorted
-      val tok = cachedTokens(Tables.documents(spark, dir))
-      val scoreCols = langs.map(l =>
-        count(when($"tok".isin(markers(l): _*), 1)).as(s"score_$l"))
-      val perDoc = tok.groupBy($"doc_id")
-        .agg(scoreCols.head, (scoreCols.tail :+ count(lit(1)).as("n_tokens")): _*)
-      val bestScore = greatest(langs.map(l => col(s"score_$l")): _*)
-      val predExpr = langs.foldRight(lit("??")) { (l, acc) =>
-        when(col(s"score_$l") === $"best_score", lit(l)).otherwise(acc)
-      }
+      val perDoc = langScores(cachedTokens(Tables.documents(spark, dir)),
+        count(lit(1)).as("n_tokens"))
       val gated = Tables.documents(spark, dir)
         .join(perDoc, "doc_id")
-        .withColumn("best_score", bestScore)
-        .select($"doc_id", predExpr.as("pred_lang"), $"source", $"n_tokens",
+        .withColumn("best_score", langBestScore)
+        .select($"doc_id", langPred.as("pred_lang"), $"source", $"n_tokens",
           $"n_chars", md5(lower(trim($"text"))).as("text_hash"))
         .where($"n_chars" >= 100 && $"n_tokens" >= 5 && $"best_score" >= 1)
       val keepers = gated.groupBy($"text_hash")
@@ -3409,24 +3402,9 @@ object TextOps extends QueryModule {
     "text_langid_confusion",
     (spark, dir) => {
       import spark.implicits._
-      val markers = Map(
-        "en" -> Seq("the", "a", "and", "of", "fast", "slow"),
-        "de" -> Seq("der", "die", "und", "das", "ein"),
-        "es" -> Seq("el", "la", "los", "y", "un"),
-        "fr" -> Seq("le", "la", "les", "et", "un"),
-        "zh" -> Seq("de", "shi", "le", "zai", "he"))
-      val tok = cachedTokens(Tables.documents(spark, dir))
-      val scores = markers.toSeq.sortBy(_._1).map { case (l, ws) =>
-        count(when($"tok".isin(ws: _*), 1)).as(s"score_$l")
-      }
-      val scored = tok.groupBy($"doc_id").agg(scores.head, scores.tail: _*)
-      val langs = markers.keys.toSeq.sorted
-      val bestScore = greatest(langs.map(l => col(s"score_$l")): _*)
-      val predExpr = langs.foldRight(lit("??")) { (l, acc) =>
-        when(col(s"score_$l") === $"best_score", lit(l)).otherwise(acc)
-      }
-      val pred = scored.withColumn("best_score", bestScore)
-        .select($"doc_id", predExpr.as("pred_lang"))
+      val pred = langScores(cachedTokens(Tables.documents(spark, dir)))
+        .withColumn("best_score", langBestScore)
+        .select($"doc_id", langPred.as("pred_lang"))
       val cells = Tables.documents(spark, dir).select($"doc_id", $"lang")
         .join(pred, "doc_id")
         .groupBy($"lang", $"pred_lang")

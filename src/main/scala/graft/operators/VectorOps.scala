@@ -893,6 +893,13 @@ object VectorOps extends QueryModule {
       .withColumn("remb", zip_with(col("emb"), col("cvec"), (a, b) => a - b))
       .drop("cvec")
 
+  /** The residual as an encode input: (vec_id, cell, emb = [[withResiduals]]'
+    * `remb`).
+    */
+  private[graft] def residualEmb(idx: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    withResiduals(idx, cb).select(col("vec_id"), col("cell"), col("remb").as("emb"))
+
   /** Trained per-subspace PQ codebook over the cell RESIDUALS —
     * [[trainPqCodebook]]'s exact recipe (stride seeds +
     * [[PqLloydIters]] Lloyd rounds, [[PqK]] centroids per subspace)
@@ -1012,6 +1019,15 @@ object VectorOps extends QueryModule {
       .withColumn("pq", pq)
       .drop("pqarr", "enc")
   }
+
+  /** The persisted PQ code layout: (vec_id, cell, codes ARRAY<BIGINT>),
+    * one [[withPqStructs]] cid per subspace. Input must carry (vec_id,
+    * cell, emb).
+    */
+  private[graft] def pqCodes(df: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame, m: Int, w: Int): org.apache.spark.sql.DataFrame =
+    withPqStructs(df, cents, m, w).select(col("vec_id"), col("cell"),
+      expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes"))
 
   val vecNormsStats = Q(
     "vec_norms_stats",
@@ -4075,6 +4091,20 @@ object VectorOps extends QueryModule {
       ORDER BY q_id, rank
     """.trim))
 
+  /** Per-label centroids `(clabel, cvec)` of `e(label, emb)`: each dim's
+    * exact DECIMAL(28,12) sum, one double divide, 8 dp — the `cdims` /
+    * `cents` CTEs of the label-confusion and silhouette oracles.
+    */
+  private def labelCentroids(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    e.select(col("label"), posexplode(col("emb")).as(Seq("pos", "v")))
+      .groupBy(col("label"), col("pos"))
+      .agg(sum(col("v").cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("cn"))
+      .withColumn("c",
+        (col("s").cast(DoubleType) / col("cn")).cast(DecimalType(18, 8)).cast(DoubleType))
+      .groupBy(col("label"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
+      .select(col("label").as("clabel"), expr("transform(pc, x -> x.c)").as("cvec"))
+
   /** Embedding class-separability confusion (SURVEY §2 I-sext): per
     * label, how many members sit closer (squared L2) to a FOREIGN
     * label's centroid than to their own — the embedding-QA matrix read
@@ -4098,15 +4128,7 @@ object VectorOps extends QueryModule {
       // with clabel tiebreak keeps the argmin engine-identical
       val e = Tables.embeddings(spark, dir)
         .select($"vec_id", $"label", $"embedding".cast("array<double>").as("emb"))
-      val cents = e
-        .select($"label", posexplode($"emb").as(Seq("pos", "v")))
-        .groupBy($"label", $"pos")
-        .agg(sum($"v".cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("cn"))
-        .withColumn("c",
-          ($"s".cast(DoubleType) / $"cn").cast(DecimalType(18, 8)).cast(DoubleType))
-        .groupBy($"label")
-        .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-        .select($"label".as("clabel"), expr("transform(pc, x -> x.c)").as("cvec"))
+      val cents = labelCentroids(e)
       val nearest =
         withNearestCentroidD2(e, cents, "clabel", "cvec", "nearest_label", "d2n")
           .select($"label", $"nearest_label")
@@ -4458,15 +4480,7 @@ object VectorOps extends QueryModule {
       import spark.implicits._
       val e = Tables.embeddings(spark, dir)
         .select($"vec_id", $"label", $"embedding".cast("array<double>").as("emb"))
-      val cents = e
-        .select($"label", posexplode($"emb").as(Seq("pos", "v")))
-        .groupBy($"label", $"pos")
-        .agg(sum($"v".cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("cn"))
-        .withColumn("c",
-          ($"s".cast(DoubleType) / $"cn").cast(DecimalType(18, 8)).cast(DoubleType))
-        .groupBy($"label")
-        .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-        .select($"label".as("clabel"), expr("transform(pc, x -> x.c)").as("cvec"))
+      val cents = labelCentroids(e)
       // row-local a/b: both mins fold over the broadcast centroid array
       // on the row — the (vec_id, label)-keyed regroup of the corpus is
       // gone; only the bounded label-keyed report agg shuffles

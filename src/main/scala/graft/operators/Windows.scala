@@ -1160,6 +1160,47 @@ object Windows extends QueryModule {
       ORDER BY l_suppkey, l_orderkey, l_linenumber
     """.trim))
 
+  /** Daily event counts `(event_type, d, c)` — the series the
+    * change-point, peak and burst rows scan.
+    */
+  private def dailyEventCounts(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, dir)
+      .select($"event_type", $"ts".cast("date").as("d"))
+      .groupBy($"event_type", $"d")
+      .agg(count(lit(1)).as("c"))
+  }
+
+  /** [[dailyEventCounts]] with each type's `mean_daily` and `n_days`,
+    * and as `out` the running exact-decimal sum of the 6 dp daily
+    * deviations from that mean — the change-point and burst rows' CUSUM.
+    */
+  private def dailyCusum(spark: org.apache.spark.sql.SparkSession, dir: String,
+      out: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val wAll = Window.partitionBy($"event_type")
+    val wCum = Window.partitionBy($"event_type").orderBy($"d")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    dailyEventCounts(spark, dir)
+      .withColumn("mean_daily",
+        sum($"c").over(wAll).cast(DoubleType) / count(lit(1)).over(wAll))
+      .withColumn("n_days", count(lit(1)).over(wAll))
+      .withColumn(out,
+        sum(round($"c" - $"mean_daily", 6).cast(DecimalType(28, 6))).over(wCum))
+  }
+
+  /** Daily net revenue `(l_shipdate, rev)`, an exact decimal sum — the
+    * series the Hurst, seasonality and autocorrelation rows scan.
+    */
+  private def dailyRevenue(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Tables.lineitem(spark, dir)
+      .groupBy($"l_shipdate")
+      .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("rev"))
+  }
+
   /** CUSUM changepoint detection per event type (SURVEY §2 I-sext) —
     * completes the drift-monitoring suite: the z-score row flags
     * anomalous POINTS, PSI/KS compare WINDOWS, CUSUM locates WHEN the
@@ -1177,19 +1218,7 @@ object Windows extends QueryModule {
     "win_cusum_changepoint",
     (spark, dir) => {
       import spark.implicits._
-      val daily = Tables.events(spark, dir)
-        .select($"event_type", $"ts".cast("date").as("d"))
-        .groupBy($"event_type", $"d")
-        .agg(count(lit(1)).as("c"))
-      val wAll = Window.partitionBy($"event_type")
-      val wCum = Window.partitionBy($"event_type").orderBy($"d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val withCusum = daily
-        .withColumn("mean_daily",
-          (sum($"c").over(wAll).cast(DoubleType) / count(lit(1)).over(wAll)))
-        .withColumn("n_days", count(lit(1)).over(wAll))
-        .withColumn("cusum",
-          sum(round($"c" - $"mean_daily", 6).cast(DecimalType(28, 6))).over(wCum))
+      val withCusum = dailyCusum(spark, dir, "cusum")
       val wPick = Window.partitionBy($"event_type")
         .orderBy(abs($"cusum").desc, $"d")
       withCusum
@@ -1680,9 +1709,7 @@ object Windows extends QueryModule {
     "win_hurst_exponent",
     (spark, dir) => {
       import spark.implicits._
-      val daily = Tables.lineitem(spark, dir)
-        .groupBy($"l_shipdate")
-        .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("rev"))
+      val daily = dailyRevenue(spark, dir)
         .withColumn("rn", row_number().over(Window.orderBy($"l_shipdate")))
         .select($"rn", $"rev")
       val sized = daily
@@ -1809,9 +1836,7 @@ object Windows extends QueryModule {
     "win_seasonality_strength",
     (spark, dir) => {
       import spark.implicits._
-      val daily = Tables.lineitem(spark, dir)
-        .groupBy($"l_shipdate")
-        .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("rev"))
+      val daily = dailyRevenue(spark, dir)
       val m = daily.agg(count(lit(1)).as("n"),
         sum($"rev".cast(DecimalType(38, 4))).as("s"))
         .select(($"s".cast(DoubleType) / $"n").as("m"))
@@ -1916,9 +1941,7 @@ object Windows extends QueryModule {
     "win_autocorr_daily",
     (spark, dir) => {
       import spark.implicits._
-      val daily = Tables.lineitem(spark, dir)
-        .groupBy($"l_shipdate")
-        .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("rev"))
+      val daily = dailyRevenue(spark, dir)
       val m = daily.agg(
         count(lit(1)).as("n"),
         sum($"rev".cast(DecimalType(38, 4))).as("s"))
@@ -2170,10 +2193,7 @@ object Windows extends QueryModule {
     "win_peak_detection",
     (spark, dir) => {
       import spark.implicits._
-      val daily = Tables.events(spark, dir)
-        .select($"event_type", $"ts".cast("date").as("d"))
-        .groupBy($"event_type", $"d")
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEventCounts(spark, dir)
       val w = Window.partitionBy($"event_type").orderBy($"d")
       daily
         .withColumn("prev", lag($"c", 1).over(w))
@@ -2220,22 +2240,10 @@ object Windows extends QueryModule {
     "win_kadane_burst",
     (spark, dir) => {
       import spark.implicits._
-      val daily = Tables.events(spark, dir)
-        .select($"event_type", $"ts".cast("date").as("d"))
-        .groupBy($"event_type", $"d")
-        .agg(count(lit(1)).as("c"))
-      val wAll = Window.partitionBy($"event_type")
-      val wCum = Window.partitionBy($"event_type").orderBy($"d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wPrev = Window.partitionBy($"event_type").orderBy($"d")
         .rowsBetween(Window.unboundedPreceding, -1)
       val zero = lit(0).cast(DecimalType(38, 6))
-      val withBurst = daily
-        .withColumn("mean_daily",
-          sum($"c").over(wAll).cast(DoubleType) / count(lit(1)).over(wAll))
-        .withColumn("n_days", count(lit(1)).over(wAll))
-        .withColumn("s",
-          sum(round($"c" - $"mean_daily", 6).cast(DecimalType(28, 6))).over(wCum))
+      val withBurst = dailyCusum(spark, dir, "s")
         .withColumn("floor_prev", least(coalesce(min($"s").over(wPrev), zero), zero))
         .withColumn("burst", $"s" - $"floor_prev")
       val wPick = Window.partitionBy($"event_type").orderBy($"burst".desc, $"d")

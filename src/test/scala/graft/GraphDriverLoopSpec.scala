@@ -150,6 +150,10 @@ class GraphDriverLoopSpec extends SparkSpecBase {
       assert(rows.length == 24, s"expected the 24 remaining nations, got ${rows.length}")
       assert(!rows.exists(_._1 == gone), s"removed nation $gone still ranked")
       assert(rows.forall(r => java.lang.Double.isFinite(r._2)), s"non-finite rank in ${rows.toSeq}")
+      // the dropped edges send no mass away: the 24 ranks (6 dp each)
+      // still sum to 1
+      val mass = rows.map(_._2).sum
+      assert(math.abs(mass - 1.0) < 1e-4, s"rank mass $mass leaked")
     } finally {
       val walk = java.nio.file.Files.walk(dirty)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

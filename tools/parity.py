@@ -3,7 +3,8 @@
 
 Usage: python3 tools/parity.py [sfDir] [outDir] [--no-verify] [only_query ...]
 
-1. Runs `sbt "runMain graft.Verify <sfDir> <outDir>"` (unless --no-verify).
+1. Runs `sbt "runMain graft.Verify <sfDir> <outDir>"` (unless --no-verify);
+   named queries are passed as SPARK_GRAFT_ONLY, so only they run.
 2. Loads <outDir>/oracle_sql.json.
 3. For each query with an oracle, compares THE WAY THE DRIVER DOES
    (round-2 lesson): Spark result parquet read via pandas (so decimals
@@ -24,6 +25,7 @@ This is a pre-flight check only — the driver's own compare is
 authoritative.
 """
 import json
+import os
 import subprocess
 import sys
 from decimal import Decimal
@@ -146,9 +148,16 @@ def main():
     only = set(args[2:])
 
     if "--no-verify" not in flags:
+        # named queries make Verify a subset run (it writes PARTIAL_RUN_ONLY);
+        # no names means a full run
+        env = dict(os.environ)
+        env.pop("SPARK_GRAFT_ONLY", None)
+        if only:
+            env["SPARK_GRAFT_ONLY"] = ",".join(sorted(only))
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, env=env,
+            cwd=Path(__file__).resolve().parent.parent)
         if r.returncode != 0:
             print(r.stdout[-3000:])
             print(r.stderr[-3000:])
