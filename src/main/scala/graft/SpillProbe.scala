@@ -45,7 +45,9 @@ object SpillProbe {
           spilled.addAndGet(t.taskMetrics.memoryBytesSpilled + t.taskMetrics.diskBytesSpilled)
     })
 
-    val base = s"/tmp/graft_scratch/spill_probe_${java.util.UUID.randomUUID.toString.take(8)}"
+    // the duplicated corpus lives under the session's scratch root, which
+    // spark.stop() (or Spark's shutdown hook, on a failed run) deletes
+    val base = s"${Artifacts.scratchRoot}/spill_probe"
     val shift = 1000000000L
     // key columns shift per copy so the duplicated corpus has dup× the
     // groups/vertices (not dup× the rows of the same groups)
@@ -56,20 +58,18 @@ object SpillProbe {
         .reduce(_ unionByName _)
         .write.mode(SaveMode.Overwrite).parquet(s"$base/$table.parquet")
     }
-    try {
-      dupKeyed("lineitem", Seq("l_orderkey"))
-      dupKeyed("orders", Seq("o_orderkey"))
-      dupKeyed("documents", Seq("doc_id"), docsDir)
-      spark.read.parquet(s"$sfDir/customer.parquet")
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/customer.parquet")
+    dupKeyed("lineitem", Seq("l_orderkey"))
+    dupKeyed("orders", Seq("o_orderkey"))
+    dupKeyed("documents", Seq("doc_id"), docsDir)
+    spark.read.parquet(s"$sfDir/customer.parquet")
+      .write.mode(SaveMode.Overwrite).parquet(s"$base/customer.parquet")
 
-      for (q <- Seq("tpch_q18_bigorders", "join_sortmerge_facts", "dedup_connected_components")) {
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(q)(spark, base).count()
-        println(f"SPILL_PROBE ran $q rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-        require(n > 0, s"$q returned no rows on the duplicated corpus")
-      }
-    } finally Artifacts.rmTree(new java.io.File(base))
+    for (q <- Seq("tpch_q18_bigorders", "join_sortmerge_facts", "dedup_connected_components")) {
+      val t0 = System.nanoTime()
+      val n = SparkEntry.queries(q)(spark, base).count()
+      println(f"SPILL_PROBE ran $q rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
+      require(n > 0, s"$q returned no rows on the duplicated corpus")
+    }
     println(s"SPILL_PROBE_OK spilled_bytes=${spilled.get()}")
     spark.stop()
     if (spilled.get() <= 0) sys.exit(3)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Central table loader for the engine.
   *
-  * All inputs are single parquet files under `sfDir` (TESTDATA.md /
+  * Each table is read from `$sfDir/<table>.parquet`, whether that is a
+  * single parquet file or a directory of them (TESTDATA.md /
   * FIXTURES.md). Schemas come from parquet footers — with one exception:
   * `events.ts` is physically TIMESTAMP(NANOS, isAdjustedToUTC=false),
   * which Spark 4 refuses to read by default (`PARQUET_TYPE_ILLEGAL`,

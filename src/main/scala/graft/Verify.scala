@@ -8,7 +8,7 @@ object Verify {
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (unset on the driver → full run): comma list
-    // of query names, so tools/parity.py iterations don't pay all ~265.
+    // of query names, so tools/parity.py iterations don't pay all 342.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // A subset run leaves every non-selected query's parquet from an older

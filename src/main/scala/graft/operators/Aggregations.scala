@@ -1522,6 +1522,17 @@ object Aggregations extends QueryModule {
         sum(($"c_acctbal" * $"c_acctbal").cast(DecimalType(38, 10))).as("sxx"))
   }
 
+  /** The DuckDB twin of [[segmentMoments]]: the CTE `name(c_mktsegment;
+    * n, sx, sxx)` over the customers `where` keeps.
+    */
+  private def segmentMomentsSql(name: String, where: String = ""): String =
+    s"""$name AS (
+        SELECT c_mktsegment, COUNT(*) AS n,
+          SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS sx,
+          SUM(CAST(c_acctbal * c_acctbal AS DECIMAL(38,10))) AS sxx
+        FROM customer$where GROUP BY 1
+      )"""
+
   /** The mean Σx / n of [[segmentMoments]] columns. */
   private def momentMean(sx: Column, n: Column): Column = sx.cast(DoubleType) / n
 
@@ -1561,14 +1572,9 @@ object Aggregations extends QueryModule {
             nullif(va * va / ($"n_a" - 1) + vb * vb / ($"n_b" - 1), lit(0.0d)), 4)
             .as("df_welch"))
     },
-    Some("""
-      WITH m AS (
-        SELECT c_mktsegment, COUNT(*) AS n,
-          SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS sx,
-          SUM(CAST(c_acctbal * c_acctbal AS DECIMAL(38,10))) AS sxx
-        FROM customer WHERE c_mktsegment IN ('AUTOMOBILE','BUILDING')
-        GROUP BY 1
-      ), a AS (SELECT n AS n_a, sx AS sx_a, sxx AS sxx_a FROM m WHERE c_mktsegment = 'AUTOMOBILE'),
+    Some(s"""
+      WITH ${segmentMomentsSql("m", " WHERE c_mktsegment IN ('AUTOMOBILE','BUILDING')")},
+         a AS (SELECT n AS n_a, sx AS sx_a, sxx AS sxx_a FROM m WHERE c_mktsegment = 'AUTOMOBILE'),
          b AS (SELECT n AS n_b, sx AS sx_b, sxx AS sxx_b FROM m WHERE c_mktsegment = 'BUILDING')
       SELECT n_a, n_b,
         CAST(CAST(CAST(sx_a AS DOUBLE) / n_a AS DECIMAL(18,6)) AS DOUBLE) AS mean_a,
@@ -2266,13 +2272,8 @@ object Aggregations extends QueryModule {
           round($"msb" / nullif($"msw", lit(0.0d)), 6).as("f_stat"),
           round($"ssb" / nullif($"ssb" + $"ssw", lit(0.0d)), 6).as("eta_sq"))
     },
-    Some("""
-      WITH g AS (
-        SELECT c_mktsegment, COUNT(*) AS n,
-          SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS sx,
-          SUM(CAST(c_acctbal * c_acctbal AS DECIMAL(38,10))) AS sxx
-        FROM customer GROUP BY 1
-      ), tot AS (
+    Some(s"""
+      WITH ${segmentMomentsSql("g")}, tot AS (
         SELECT COUNT(*) AS k, SUM(n) AS nn,
           SUM(sx) AS gsx,
           CAST(SUM(CAST(sxx AS DECIMAL(38,10))) AS DOUBLE) AS gsxx,
@@ -3021,13 +3022,8 @@ object Aggregations extends QueryModule {
           ($"passes" === 1).as("passes_own_bar"), $"sig_holm")
         .orderBy($"rn")
     },
-    Some("""
-      WITH m AS (
-        SELECT c_mktsegment, COUNT(*) AS n,
-          SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS sx,
-          SUM(CAST(c_acctbal * c_acctbal AS DECIMAL(38,10))) AS sxx
-        FROM customer GROUP BY 1
-      ), pairs AS (
+    Some(s"""
+      WITH ${segmentMomentsSql("m")}, pairs AS (
         SELECT a.c_mktsegment AS seg_a, b.c_mktsegment AS seg_b,
           a.n AS n_a, b.n AS n_b,
           ROUND((CAST(a.sx AS DOUBLE) / a.n - CAST(b.sx AS DOUBLE) / b.n)

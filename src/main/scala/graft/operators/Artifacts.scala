@@ -26,10 +26,21 @@ private[graft] object Artifacts {
     */
   val NBuckets = 16
 
-  /** Process-unique scratch root for per-invocation sinks: concurrent
-    * Verify/Bench invocations must never clobber each other's files.
+  /** Session-scoped scratch root for per-invocation sinks: Spark's driver
+    * temp dir ([[org.apache.spark.SparkFiles.getRootDirectory]]). Spark
+    * creates it with a random name under the local dir (`spark.local.dir`,
+    * `SPARK_LOCAL_DIRS` or `java.io.tmpdir`) when the session starts, and
+    * deletes it when the session stops and again at JVM exit. So two
+    * concurrent sessions never share it, and nothing written under it
+    * outlives its session. It is a driver-local path: on a cluster the
+    * writers below it would need a shared filesystem instead.
     */
-  val scratchRoot: String = s"/tmp/graft_scratch/p${ProcessHandle.current().pid()}"
+  def scratchRoot: String = org.apache.spark.SparkFiles.getRootDirectory()
+
+  /** A fresh 12-hex-digit name suffix for scratch paths, temp views and
+    * tables, so concurrent invocations in one session never collide.
+    */
+  def uniqueId(): String = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
 
   /** Slug + stable hash of the RAW corpus dir: the readable slug alone is
     * lossy ([^A-Za-z0-9]+ → _ collides e.g. data/sf0.01 with data/sf0_01,

@@ -315,14 +315,14 @@ object EtlOps extends QueryModule {
     * rewrite). `coalesce(1)` here makes the compacted file count an
     * exactly provable function (ceil(rows/5000)) for the oracle; the
     * writer still splits output at the record cap. Scratch paths are
-    * per-process + per-invocation (same no-shared-state discipline as
-    * the other sink rows).
+    * per-invocation under the session's scratch root (same
+    * no-shared-state discipline as the other sink rows).
     */
   val etlCompactSmallFiles = Q(
     "etl_compact_small_files",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+      val runId = Artifacts.uniqueId()
       val small = s"${Artifacts.scratchRoot}/compact_src_$runId"
       val compacted = s"${Artifacts.scratchRoot}/compact_out_$runId"
       // one ship-half-year slice: the compaction file math (32 fragments
@@ -464,8 +464,7 @@ object EtlOps extends QueryModule {
     "etl_backfill_dynamic_overwrite",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = s"${Artifacts.scratchRoot}/backfill_$runId"
+      val path = s"${Artifacts.scratchRoot}/backfill_${Artifacts.uniqueId()}"
       // a 3-year slice: the isolation proof needs the backfilled year
       // plus untouched neighbors on both sides — laying out all 7 years
       // proves nothing more while paying 2.3× the bench write cost
@@ -515,8 +514,7 @@ object EtlOps extends QueryModule {
   val sqlRecursiveSpine = Q(
     "sql_recursive_spine",
     (spark, dir) => {
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val ov = s"orders_$runId"
+      val ov = s"orders_${Artifacts.uniqueId()}"
       Tables.orders(spark, dir).createOrReplaceTempView(ov)
       // resolve the spine bounds ONCE (r13): the recursion's stop
       // condition carried a scalar subquery over orders, and every
@@ -609,8 +607,7 @@ object EtlOps extends QueryModule {
     "etl_catalog_stats",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val t = s"stats_orders_$runId"
+      val t = s"stats_orders_${Artifacts.uniqueId()}"
       Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
         .write.mode("overwrite").saveAsTable(t)
@@ -732,8 +729,7 @@ object EtlOps extends QueryModule {
   val sqlCorrelatedScalar = Q(
     "sql_correlated_scalar",
     (spark, dir) => {
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val ov = s"orders_$runId"
+      val ov = s"orders_${Artifacts.uniqueId()}"
       Tables.orders(spark, dir).createOrReplaceTempView(ov)
       try spark.sql(s"""
         SELECT o_orderpriority,

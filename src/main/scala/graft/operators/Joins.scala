@@ -366,35 +366,13 @@ object Joins extends QueryModule {
       import spark.implicits._
       // Per-invocation unique table names: a fixed name raced when two
       // invocations ran concurrently in one session — each would drop and
-      // recreate the other's table mid-join.
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+      // recreate the other's table mid-join. The files live under the
+      // session's scratch root, which Spark deletes when the session stops;
+      // the catalog keeps the bucketing, so the join stays shuffle-free.
+      val runId = Artifacts.uniqueId()
       val liTable = s"graft_li_bucketed_$runId"
       val ordTable = s"graft_orders_bucketed_$runId"
-      // GC bucketed-table leftovers — both previous JVMs' orphan dirs
-      // (absent from this catalog) and this session's own stale tables
-      // (unique names never collide, but each invocation would otherwise
-      // leak a full table pair for the session's lifetime). Deletion is
-      // quadruple-guarded: graft-bucketed name pattern, canonical path
-      // inside the warehouse dir, NOT one of this invocation's tables,
-      // and older than 30 minutes — the age cutoff is what makes the GC
-      // safe against a concurrent invocation whose CTAS has written its
-      // directory but not yet registered the table (catalog registration
-      // happens after the data write, so a live-set check alone races).
-      val wh = Artifacts.warehouseDir(spark).getCanonicalFile
-      val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-      Option(wh.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { d =>
-        val nm = d.getName.toLowerCase
-        if (nm.startsWith("graft_") && nm.contains("_bucketed") &&
-            nm != liTable && nm != ordTable &&
-            d.lastModified() < cutoff &&
-            d.getCanonicalPath.startsWith(wh.getPath + java.io.File.separator)) {
-          // DROP first (a managed-table drop removes its own directory
-          // for this session's tables); the physical delete then only
-          // handles previous-JVM orphans the catalog does not know
-          try spark.sql(s"DROP TABLE IF EXISTS $nm") catch { case _: Throwable => () }
-          if (d.exists()) Artifacts.rmTree(d)
-        }
-      }
+      def at(table: String) = s"${Artifacts.scratchRoot}/$table"
       // repartition to the bucket layout before writing: HashPartitioning
       // and bucketBy use the same murmur3-pmod hash, so each task holds
       // exactly one bucket and writes exactly one file — 8 files per
@@ -408,12 +386,12 @@ object Joins extends QueryModule {
         .select($"l_orderkey", $"l_quantity")
         .repartition(8, $"l_orderkey")
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").saveAsTable(liTable)
+        .mode("overwrite").option("path", at(liTable)).saveAsTable(liTable)
       Tables.orders(spark, dir)
         .select($"o_orderkey", $"o_orderpriority")
         .repartition(8, $"o_orderkey")
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").saveAsTable(ordTable)
+        .mode("overwrite").option("path", at(ordTable)).saveAsTable(ordTable)
       spark.table(liTable)
         .join(spark.table(ordTable), $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_orderpriority")
@@ -470,24 +448,14 @@ object Joins extends QueryModule {
     * matching year directories are read at all. PlanSpec asserts the
     * pruning subquery is present in the scan's partition filters; the
     * oracle (a plain semi-filtered aggregate) proves pruning is
-    * result-invariant. Per-invocation unique directory + stale-sibling
-    * GC, same discipline as `join_bucketed_colocated`.
+    * result-invariant. Per-invocation unique directory under the
+    * session's scratch root, same discipline as `join_bucketed_colocated`.
     */
   val joinDppPartitionPruned = Q(
     "join_dpp_partition_pruned",
     (spark, dir) => {
       import spark.implicits._
-      val tmpRoot = new java.io.File(
-        System.getProperty("java.io.tmpdir"), "graft_dpp")
-      tmpRoot.mkdirs()
-      // GC partitioned layouts from previous invocations once they are
-      // safely old (>30 min) — never a sibling a concurrent run may read
-      val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-      Option(tmpRoot.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.lastModified() < cutoff)
-        .foreach(Artifacts.rmTree)
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val base = new java.io.File(tmpRoot, runId).getAbsolutePath
+      val base = s"${Artifacts.scratchRoot}/dpp_${Artifacts.uniqueId()}"
       // one shuffle by the partition column so each year directory gets
       // one file (not one per task) — same small-files discipline as the
       // bucketed layout; 7 year-partitions write in parallel. Only the
@@ -575,7 +543,7 @@ object Joins extends QueryModule {
   val joinNotInNullAware = Q(
     "join_not_in_null_aware",
     (spark, dir) => {
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+      val runId = Artifacts.uniqueId()
       val cv = s"cust_$runId"
       val nv = s"nation_$runId"
       Tables.customer(spark, dir).createOrReplaceTempView(cv)
@@ -801,7 +769,7 @@ object Joins extends QueryModule {
   val joinExistenceMark = Q(
     "join_existence_mark",
     (spark, dir) => {
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+      val runId = Artifacts.uniqueId()
       val cv = s"customer_$runId"
       val ov = s"orders_$runId"
       Tables.customer(spark, dir).createOrReplaceTempView(cv)
@@ -1081,7 +1049,7 @@ object Joins extends QueryModule {
         .select($"s_suppkey", $"s_nationkey")
       val li = Tables.lineitem(spark, dir)
         .select($"l_suppkey", $"l_extendedprice", $"l_discount")
-      val runId = java.util.UUID.randomUUID().toString.replace("-", "")
+      val runId = Artifacts.uniqueId()
       val sv = s"bloom_dim_$runId"
       val lv = s"bloom_fact_$runId"
       sup.createOrReplaceTempView(sv)

@@ -7,8 +7,10 @@ import org.apache.spark.sql.SaveMode
 
 /** SURVEY.md §2.1.A — scans, sources, sinks.
   *
-  * Roundtrip queries write to a scratch dir (overwrite mode, fixed path
-  * per query name) and read back — exercising the writer+reader paths of
+  * Roundtrip queries write under the session's scratch root
+  * ([[Artifacts.scratchRoot]], deleted when the session stops) — in
+  * overwrite mode at a fixed path per query name, or at a per-invocation
+  * unique path — and read back, exercising the writer+reader paths of
   * each format; the DuckDB oracle reads the ORIGINAL parquet table, so a
   * pass proves the roundtrip lossless.
   *
@@ -239,8 +241,7 @@ object Sources extends QueryModule {
     "sort_clustered_write_stats",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = scratch(s"clustered_orders_$runId")
+      val path = scratch(s"clustered_orders_${Artifacts.uniqueId()}")
       val bucket = (conv(substring(md5($"o_orderkey".cast("string")), 1, 4), 16, 10)
         .cast("long") % 8).as("bucket")
       Tables.orders(spark, dir)
@@ -306,8 +307,7 @@ object Sources extends QueryModule {
     "scan_text_roundtrip",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = scratch(s"text_docs_$runId")
+      val path = scratch(s"text_docs_${Artifacts.uniqueId()}")
       Tables.documents(spark, dir)
         .select($"text")
         .write.mode(SaveMode.Overwrite).text(path)
@@ -351,8 +351,7 @@ object Sources extends QueryModule {
     "scan_binaryfile_ingest",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = scratch(s"binfiles_$runId")
+      val path = scratch(s"binfiles_${Artifacts.uniqueId()}")
       // Sidecar corpus written through the Hadoop FileSystem API so on
       // a real cluster the .bin shards land on the shared/dfs filesystem
       // the subsequent binaryFile scan lists — a java.nio write would
@@ -440,8 +439,7 @@ object Sources extends QueryModule {
     "sort_zorder_2d_stats",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = scratch(s"zorder_orders_$runId")
+      val path = scratch(s"zorder_orders_${Artifacts.uniqueId()}")
       val a = (year($"o_orderdate") - 1995).cast("long") // 0..7 in this corpus
       val b = conv(substring(md5($"o_custkey".cast("string")), 1, 4), 16, 10)
         .cast("long") % 8
@@ -530,8 +528,7 @@ object Sources extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       import org.apache.spark.sql.types.{DoubleType => DT, StringType, StructField, StructType}
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = scratch(s"csv_quarantine_$runId")
+      val path = scratch(s"csv_quarantine_${Artifacts.uniqueId()}")
       Tables.orders(spark, dir)
         .select(concat_ws(",",
           $"o_orderkey",

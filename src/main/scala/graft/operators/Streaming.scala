@@ -399,8 +399,7 @@ object Streaming extends QueryModule {
     "stream_foreachbatch_sink",
     (spark, dir) => {
       import spark.implicits._
-      val runId = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val path = s"${Artifacts.scratchRoot}/fsink_$runId"
+      val path = s"${Artifacts.scratchRoot}/fsink_${Artifacts.uniqueId()}"
       val agg = StreamTransforms.tumblingAgg(Tables.events(spark, dir))
       // deliveries here are whole days (run-to-completion write, then a
       // full-day replay), so day partitioning is the exact idempotence

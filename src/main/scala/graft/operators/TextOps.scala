@@ -1077,7 +1077,7 @@ object TextOps extends QueryModule {
     (spark, dir) => {
       graft.functions.GraftFunctions.register(spark)
       decontaminate(spark, dir) { (benchSh, trainSh) =>
-        val runId = java.util.UUID.randomUUID().toString.replace("-", "")
+        val runId = Artifacts.uniqueId()
         val bv = s"bench_sh_$runId"
         val tv = s"train_sh_$runId"
         benchSh.createOrReplaceTempView(bv)

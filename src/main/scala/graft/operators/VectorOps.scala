@@ -4092,8 +4092,8 @@ object VectorOps extends QueryModule {
     """.trim))
 
   /** Per-label centroids `(clabel, cvec)` of `e(label, emb)`: each dim's
-    * exact DECIMAL(28,12) sum, one double divide, 8 dp — the `cdims` /
-    * `cents` CTEs of the label-confusion and silhouette oracles.
+    * exact DECIMAL(28,12) sum, one double divide, 8 dp. Its DuckDB twin
+    * is [[labelCentroidsSql]].
     */
   private def labelCentroids(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     e.select(col("label"), posexplode(col("emb")).as(Seq("pos", "v")))
@@ -4104,6 +4104,22 @@ object VectorOps extends QueryModule {
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
       .select(col("label").as("clabel"), expr("transform(pc, x -> x.c)").as("cvec"))
+
+  /** The `cdims`/`cents` CTEs over `e(label, emb)`: the DuckDB twin of
+    * [[labelCentroids]], shared by the label-confusion and silhouette
+    * oracles.
+    */
+  private def labelCentroidsSql: String = """cdims AS (
+        SELECT label, pos,
+          CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE)
+               / COUNT(*) AS DECIMAL(18,8)) AS DOUBLE) AS c
+        FROM (SELECT label, UNNEST(emb) AS v, UNNEST(range(len(emb))) AS pos
+              FROM e)
+        GROUP BY label, pos
+      ), cents AS (
+        SELECT label AS clabel, LIST(c ORDER BY pos) AS cvec
+        FROM cdims GROUP BY label
+      )"""
 
   /** Embedding class-separability confusion (SURVEY §2 I-sext): per
     * label, how many members sit closer (squared L2) to a FOREIGN
@@ -4144,17 +4160,7 @@ object VectorOps extends QueryModule {
     Some(s"""
       WITH e AS (
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-      ), cdims AS (
-        SELECT label, pos,
-          CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE)
-               / COUNT(*) AS DECIMAL(18,8)) AS DOUBLE) AS c
-        FROM (SELECT label, UNNEST(emb) AS v, UNNEST(range(len(emb))) AS pos
-              FROM e)
-        GROUP BY label, pos
-      ), cents AS (
-        SELECT label AS clabel, LIST(c ORDER BY pos) AS cvec
-        FROM cdims GROUP BY label
-      ), nearest AS (
+      ), ${labelCentroidsSql}, nearest AS (
         SELECT label, clabel AS nearest_label FROM (
           SELECT e.label, c.clabel,
             ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -4510,17 +4516,7 @@ object VectorOps extends QueryModule {
     Some(s"""
       WITH e AS (
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-      ), cdims AS (
-        SELECT label, pos,
-          CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE)
-               / COUNT(*) AS DECIMAL(18,8)) AS DOUBLE) AS c
-        FROM (SELECT label, UNNEST(emb) AS v, UNNEST(range(len(emb))) AS pos
-              FROM e)
-        GROUP BY label, pos
-      ), cents AS (
-        SELECT label AS clabel, LIST(c ORDER BY pos) AS cvec
-        FROM cdims GROUP BY label
-      ), ab AS (
+      ), ${labelCentroidsSql}, ab AS (
         SELECT vec_id, label,
           MIN(CASE WHEN clabel = label THEN dd END) AS a,
           MIN(CASE WHEN clabel <> label THEN dd END) AS b

@@ -1172,6 +1172,14 @@ object Windows extends QueryModule {
       .agg(count(lit(1)).as("c"))
   }
 
+  /** The `daily(event_type, d, c)` CTE: the DuckDB twin of
+    * [[dailyEventCounts]].
+    */
+  private def dailyEventCountsSql: String = """daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
+        FROM events GROUP BY 1, 2
+      )"""
+
   /** [[dailyEventCounts]] with each type's `mean_daily` and `n_days`,
     * and as `out` the running exact-decimal sum of the 6 dp daily
     * deviations from that mean — the change-point and burst rows' CUSUM.
@@ -1230,11 +1238,8 @@ object Windows extends QueryModule {
           round($"mean_daily", 6).as("mean_daily"))
         .orderBy($"event_type")
     },
-    Some("""
-      WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
-        FROM events GROUP BY 1, 2
-      ), cu0 AS (
+    Some(s"""
+      WITH $dailyEventCountsSql, cu0 AS (
         SELECT event_type, d, c,
           CAST(SUM(c) OVER (PARTITION BY event_type) AS DOUBLE)
             / COUNT(*) OVER (PARTITION BY event_type) AS mean_daily,
@@ -2204,11 +2209,8 @@ object Windows extends QueryModule {
           ($"c" - greatest($"prev", $"nxt")).as("prominence"))
         .orderBy($"event_type", $"peak_day")
     },
-    Some("""
-      WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
-        FROM events GROUP BY 1, 2
-      ), nb AS (
+    Some(s"""
+      WITH $dailyEventCountsSql, nb AS (
         SELECT event_type, d, c,
           LAG(c, 1) OVER (PARTITION BY event_type ORDER BY d) AS prev,
           LEAD(c, 1) OVER (PARTITION BY event_type ORDER BY d) AS nxt
@@ -2256,11 +2258,8 @@ object Windows extends QueryModule {
           round($"mean_daily", 6).as("mean_daily"))
         .orderBy($"event_type")
     },
-    Some("""
-      WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS c
-        FROM events GROUP BY 1, 2
-      ), base AS (
+    Some(s"""
+      WITH $dailyEventCountsSql, base AS (
         SELECT event_type, d, c,
           CAST(SUM(c) OVER (PARTITION BY event_type) AS DOUBLE)
             / COUNT(*) OVER (PARTITION BY event_type) AS mean_daily,

@@ -215,7 +215,7 @@ class DriftGraphSpec extends SparkSpecBase {
   test("iterative ops: local and reliable checkpoint modes agree exactly") {
     val ccLocal = SparkEntry.queries("dedup_connected_components")(spark, sfDir).collect().toSeq
     val prLocal = SparkEntry.queries("graph_pagerank_trade")(spark, sfDir).collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = scratchPath("ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     // drop every memo (the component labels, pagerank's edge table) so
     // the reliable-mode run really re-executes instead of reading the

@@ -136,30 +136,24 @@ class GraphDriverLoopSpec extends SparkSpecBase {
     import spark.implicits._
     // a copy of the fixture whose nation table lacks the first supplier's
     // nation, so that nation is both an edge source and an edge target
-    val dirty = java.nio.file.Files.createTempDirectory("graft_orphan_nation")
-    try {
-      for (t <- Tables.names if t != "nation")
-        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
-          dirty.resolve(s"$t.parquet"))
-      val gone = Tables.supplier(spark, sfDir).orderBy($"s_suppkey")
-        .select($"s_nationkey".cast("long")).as[Long].head()
-      Tables.nation(spark, sfDir).where($"n_nationkey" =!= gone)
-        .write.parquet(dirty.resolve("nation.parquet").toString)
-      val rows = SparkEntry.queries("graph_pagerank_trade")(spark, dirty.toString)
-        .select($"n_nationkey".cast("long"), $"pagerank").as[(Long, Double)].collect()
-      assert(rows.length == 24, s"expected the 24 remaining nations, got ${rows.length}")
-      assert(!rows.exists(_._1 == gone), s"removed nation $gone still ranked")
-      assert(rows.forall(r => java.lang.Double.isFinite(r._2)), s"non-finite rank in ${rows.toSeq}")
-      // the dropped edges send no mass away: the 24 ranks (6 dp each)
-      // still sum to 1
-      val mass = rows.map(_._2).sum
-      assert(math.abs(mass - 1.0) < 1e-4, s"rank mass $mass leaked")
-    } finally {
-      val walk = java.nio.file.Files.walk(dirty)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
-    }
+    val dirty = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(scratchPath("orphan_nation")))
+    for (t <- Tables.names if t != "nation")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+        dirty.resolve(s"$t.parquet"))
+    val gone = Tables.supplier(spark, sfDir).orderBy($"s_suppkey")
+      .select($"s_nationkey".cast("long")).as[Long].head()
+    Tables.nation(spark, sfDir).where($"n_nationkey" =!= gone)
+      .write.parquet(dirty.resolve("nation.parquet").toString)
+    val rows = SparkEntry.queries("graph_pagerank_trade")(spark, dirty.toString)
+      .select($"n_nationkey".cast("long"), $"pagerank").as[(Long, Double)].collect()
+    assert(rows.length == 24, s"expected the 24 remaining nations, got ${rows.length}")
+    assert(!rows.exists(_._1 == gone), s"removed nation $gone still ranked")
+    assert(rows.forall(r => java.lang.Double.isFinite(r._2)), s"non-finite rank in ${rows.toSeq}")
+    // the dropped edges send no mass away: the 24 ranks (6 dp each)
+    // still sum to 1
+    val mass = rows.map(_._2).sum
+    assert(math.abs(mass - 1.0) < 1e-4, s"rank mass $mass leaked")
   }
 
   test("DriverRound equals Spark round() on ordinary, tie and non-finite doubles") {

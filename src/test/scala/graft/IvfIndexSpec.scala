@@ -10,7 +10,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   */
 class IvfIndexSpec extends SparkSpecBase {
 
-  private def warehouse = new java.io.File("/tmp/graft_scratch/warehouse")
+  private def warehouse = operators.Artifacts.warehouseDir(spark)
+
+  /** A fresh, empty corpus directory under the session's scratch root. */
+  private def corpusDir(prefix: String): Path =
+    Files.createDirectories(Paths.get(scratchPath(prefix)))
 
   /** (fileName → mtime) of the table directory's data files. */
   private def mtimes(table: String): Map[String, Long] = {
@@ -47,7 +51,7 @@ class IvfIndexSpec extends SparkSpecBase {
   test("build once; repeat ensure and catalog-dropped ensure never rewrite data") {
     // a private corpus copy: the lost-marker rebuilds below must not
     // disturb the shared fixture's artifacts other specs serve from
-    val dir = Files.createTempDirectory("graft_artifacts").toString
+    val dir = corpusDir("artifacts").toString
     Seq("embeddings", "documents", "events").foreach(t =>
       Files.copy(Paths.get(s"$sfDir/$t.parquet"), Paths.get(s"$dir/$t.parquet")))
     val (idx, cb) = operators.IvfIndex.ensure(spark, dir)
@@ -322,7 +326,7 @@ class IvfIndexSpec extends SparkSpecBase {
   }
 
   test("serveLatest serves generation 1 until a rebalance is applied") {
-    val dir = Files.createTempDirectory("graft_ivf_g2").toString
+    val dir = corpusDir("ivf_g2").toString
     Files.copy(
       Paths.get(s"$sfDir/embeddings.parquet"),
       Paths.get(s"$dir/embeddings.parquet"),
@@ -339,7 +343,7 @@ class IvfIndexSpec extends SparkSpecBase {
 
   test("no-op rebalance publishes generation 2 as metadata over generation-1 files") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ivf_noop").toString
+    val dir = corpusDir("ivf_noop").toString
     // 16 vectors in 4 tight orthogonal clusters at vec_ids {4j..4j+3}:
     // the stride seeds (0, 4, 8, 12) hit one cluster each, Lloyd keeps
     // the 4/4/4/4 balance, and no cell passes the 4·n_cell·nlist > 5·N
@@ -430,7 +434,7 @@ class IvfIndexSpec extends SparkSpecBase {
 
   test("generation chain: apply-2 splits a cell CREATED by apply-1, serveLatest picks gen-3") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ivf_chain").toString
+    val dir = corpusDir("ivf_chain").toString
     // 16 vectors, nlist = 4, stride seeds at ids {0, 4, 8, 12}. Cluster
     // A (10 members around e0, ids 0,1,2,3,5,6,7,9,10,11) holds three
     // tight sub-clusters at angles 0 / 0.2 / 0.4 rad; B/C/D are
@@ -504,7 +508,7 @@ class IvfIndexSpec extends SparkSpecBase {
     import spark.implicits._
     // same balanced fixture as the noop test: 4 tight orthogonal
     // clusters, empty split plan → gen-2 publishes as a noop marker
-    val dir = Files.createTempDirectory("graft_ivf_noopgone").toString
+    val dir = corpusDir("ivf_noopgone").toString
     val rows = for (j <- 0 until 4; i <- 0 until 4) yield {
       val emb = Array.fill(64)(0.0f)
       emb(16 * j) = 1.0f
@@ -549,7 +553,7 @@ class IvfIndexSpec extends SparkSpecBase {
   }
 
   test("rewritten corpus at the same path invalidates and rebuilds") {
-    val dir = Files.createTempDirectory("graft_ivf_stale").toString
+    val dir = corpusDir("ivf_stale").toString
     def copyCorpus(): Path = Files.copy(
       Paths.get(s"$sfDir/embeddings.parquet"),
       Paths.get(s"$dir/embeddings.parquet"),

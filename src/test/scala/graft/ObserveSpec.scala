@@ -41,7 +41,7 @@ class ObserveSpec extends SparkSpecBase {
 
   test("observe emits exact row count and decimal total with a write action") {
     import spark.implicits._
-    val path = s"/tmp/graft_scratch/p${ProcessHandle.current().pid()}/observe_${System.nanoTime()}"
+    val path = scratchPath("observe")
     val (_, rows) = withListener {
       Tables.orders(spark, sfDir)
         .observe(

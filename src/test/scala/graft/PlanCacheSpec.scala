@@ -11,7 +11,7 @@ class PlanCacheSpec extends SparkSpecBase {
 
   test("same path + same files: second lookup is a cache hit") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_hit").toString
+    val dir = scratchPath("pc_hit")
     Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(dir)
     val cache = new PlanCache(2)
     var computes = 0
@@ -26,7 +26,7 @@ class PlanCacheSpec extends SparkSpecBase {
 
   test("rewritten fixture at the same path: entry invalidates and recomputes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_fresh").toString
+    val dir = scratchPath("pc_fresh")
     Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(dir)
     val cache = new PlanCache(2)
     var computes = 0
@@ -45,7 +45,7 @@ class PlanCacheSpec extends SparkSpecBase {
 
   test("PlanCache.evictAll frees the entries of every instance") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pc_all").toString
+    val dir = scratchPath("pc_all")
     Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(dir)
     val caches = Seq(new PlanCache(2), new PlanCache(2))
     var computes = 0

@@ -35,7 +35,7 @@ class RoundtripLawsSpec extends SparkSpecBase {
   test("csv write/read roundtrip is lossless for hostile strings") {
     for (rows <- samples(rowsGen, 8)) {
       val df = spark.createDataFrame(rows)
-      val path = s"/tmp/graft_scratch/law_csv_${System.nanoTime()}"
+      val path = scratchPath("law_csv")
       // whitespace trimming is ON by default in both the CSV writer and
       // reader — a lossless roundtrip must disable it on both sides
       df.write.option("header", "true")
@@ -52,7 +52,7 @@ class RoundtripLawsSpec extends SparkSpecBase {
   test("json write/read roundtrip is lossless") {
     for (rows <- samples(rowsGen, 8)) {
       val df = spark.createDataFrame(rows)
-      val path = s"/tmp/graft_scratch/law_json_${System.nanoTime()}"
+      val path = scratchPath("law_json")
       df.write.json(path)
       val back = spark.read.schema(df.schema).json(path)
       assert(back.collect().map(_.toString).sorted.toSeq ==
@@ -63,7 +63,7 @@ class RoundtripLawsSpec extends SparkSpecBase {
   test("malformed CSV rows land in _corrupt_record under PERMISSIVE, drop under DROPMALFORMED") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = s"/tmp/graft_scratch/csv_malformed_${System.nanoTime()}"
+    val dir = scratchPath("csv_malformed")
     // 2 good rows, 1 type-corrupt, 1 arity-corrupt
     Seq("1,alpha,2.5", "2,beta,7.0", "3,gamma,not_a_number", "4,delta")
       .toDF("line").coalesce(1).write.text(dir)

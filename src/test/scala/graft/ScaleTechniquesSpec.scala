@@ -44,15 +44,6 @@ class ScaleTechniquesSpec extends SparkSpecBase {
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS orders_bucketed")
-    // a fresh in-memory catalog cannot DROP a previous JVM's tables, but
-    // their directories persist in the warehouse — remove them physically
-    for (t <- Seq("li_bucketed", "orders_bucketed")) {
-      val dir = new java.io.File(s"/tmp/graft_scratch/warehouse/$t")
-      if (dir.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(dir).deleteRecursively()
-      }
-    }
     Tables.lineitem(spark, sfDir)
       .select($"l_orderkey", $"l_quantity")
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -76,7 +67,7 @@ class ScaleTechniquesSpec extends SparkSpecBase {
 
   test("dynamic partition overwrite rewrites ONLY the touched partition's files") {
     import spark.implicits._
-    val path = s"/tmp/graft_scratch/p${ProcessHandle.current().pid()}/backfill_iso_${System.nanoTime()}"
+    val path = scratchPath("backfill_iso")
     val withYear = Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderstatus",
         year($"o_orderdate").cast("long").as("o_year"))
@@ -205,15 +196,17 @@ class ScaleTechniquesSpec extends SparkSpecBase {
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(javaBin) ++ addOpens ++
       Seq("-Xmx2g", "-cp", cp, "graft.SpillProbe")
-    def scratchCopies(): Set[String] =
-      Option(new java.io.File("/tmp/graft_scratch").list()).toSet.flatten
-        .filter(_.startsWith("spill_probe_"))
-    val copiesBefore = scratchCopies()
+    // the probe's own local dir: Spark puts the probe's scratch root (its
+    // duplicated corpus), block manager and shuffle files under it, and
+    // must leave it empty once the probe exits
+    val localDir = new java.io.File(scratchPath("spill_local"))
+    localDir.mkdirs()
     val out = new StringBuilder
-    val code = Process(cmd).!(
+    val code = Process(cmd, None, "SPARK_LOCAL_DIRS" -> localDir.getAbsolutePath).!(
       ProcessLogger(l => out.synchronized(out.append(l).append('\n')), _ => ()))
-    assert(scratchCopies() -- copiesBefore == Set.empty,
-      "spill probe left its duplicated corpus behind")
+    val left = Option(localDir.list()).toSeq.flatten
+    operators.Artifacts.rmTree(localDir)
+    assert(left.isEmpty, s"spill probe left ${left.mkString(", ")} in its local dir")
     val log = out.toString
     assert(code == 0, s"spill probe failed (exit $code):\n${log.takeRight(3000)}")
     val spilled = "spilled_bytes=(\\d+)".r.findFirstMatchIn(log).map(_.group(1).toLong)

@@ -31,7 +31,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
         val ms = MemoryStream[Ev]
         val q = StreamTransforms.tumblingAgg(ms.toDF())
           .writeStream.format("memory").queryName(name).outputMode("complete")
-          .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_${name}_${System.nanoTime()}")
+          .option("checkpointLocation", scratchPath(s"ckpt_$name"))
           .start()
         try {
           data.grouped(300).foreach { b => ms.addData(b); q.processAllAvailable() }
@@ -54,7 +54,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
   test("stateful query resumes from checkpoint with state intact") {
     import spark.implicits._
     val data = evs(2000).map(e => StatefulOps.Event(e.event_id, e.ts, e.user_id, e.event_type))
-    val root = s"/tmp/graft_scratch/resume_${System.nanoTime()}"
+    val root = scratchPath("resume")
     val srcDir = s"$root/src"
     val ckpt = s"$root/ckpt"
     val (first, second) = data.splitAt(1000)
@@ -118,7 +118,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
     val maxTs = data.map(_.ts.getTime).max
     def sentinel(id: Long, plusMs: Long) = StatefulOps.Event(
       id, new Timestamp(maxTs + plusMs), sentinelUid, "view")
-    val root = s"/tmp/graft_scratch/resume_tws_${System.nanoTime()}"
+    val root = scratchPath("resume_tws")
     val srcDir = s"$root/src"
     val ckpt = s"$root/ckpt"
     val outDir = s"$root/out"
@@ -219,7 +219,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
     def run(name: String, ttlMs: Long, sleepMs: Long): Seq[(Long, Long)] = {
       val buf = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
       val ms = MemoryStream[StatefulOps.Event]
-      val ckpt = s"/tmp/graft_scratch/ckpt_${name}_${System.nanoTime()}"
+      val ckpt = scratchPath(s"ckpt_$name")
       def once(batch: Seq[StatefulOps.Event], expect: Int): Unit = {
         ms.addData(batch)
         val q = StatefulOps.eventsSinceSignupTwsTtl(ms.toDS(), ttlMs)
@@ -269,7 +269,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
       val ms = MemoryStream[StatefulOps.Event]
       val q = StatefulOps.eventsSinceSignupTws(ms.toDS())
         .writeStream.format("memory").queryName("tws").outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_tws_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_tws"))
         .start()
       try {
         data.grouped(500).foreach { b => ms.addData(b); q.processAllAvailable() }
@@ -285,7 +285,7 @@ class StreamingRobustnessSpec extends SparkSpecBase {
     val ms2 = MemoryStream[StatefulOps.Event]
     val q2 = StatefulOps.eventsSinceSignup(ms2.toDS())
       .writeStream.format("memory").queryName("fmgws").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_fmgws_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_fmgws"))
       .start()
     try {
       data.grouped(500).foreach { b => ms2.addData(b); q2.processAllAvailable() }

@@ -37,7 +37,7 @@ class StreamingSpec extends SparkSpecBase {
     val ms = MemoryStream[Ev]
     val q = mk(ms.toDF())
       .writeStream.format("memory").queryName(name).outputMode(outputMode)
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_${name}_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath(s"ckpt_$name"))
       .start()
     try {
       batches.foreach { b => ms.addData(b); q.processAllAvailable() }
@@ -102,7 +102,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StatefulOps
       .eventsSinceSignup(ms.toDS())
       .writeStream.format("memory").queryName("stateful").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_stateful_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_stateful"))
       .start()
     try {
       // feed in event-time order split across micro-batches: state carries over
@@ -131,7 +131,7 @@ class StreamingSpec extends SparkSpecBase {
       val q = StatefulOps
         .eventsSinceSignupTws(ms.toDS())
         .writeStream.format("memory").queryName("stateful_tws").outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_stateful_tws_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_stateful_tws"))
         .start()
       try {
         evs.map(e => StatefulOps.Event(e.event_id, e.ts, e.user_id, e.event_type))
@@ -169,7 +169,7 @@ class StreamingSpec extends SparkSpecBase {
       val q = StatefulOps
         .sessionSummariesTws(ms.toDS())
         .writeStream.format("memory").queryName("session_timer").outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_session_timer_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_session_timer"))
         .start()
       try {
         val batches = evs.map(e => StatefulOps.Event(e.event_id, e.ts, e.user_id, e.event_type))
@@ -204,7 +204,7 @@ class StreamingSpec extends SparkSpecBase {
       val q = StatefulOps
         .last3TrailTws(ms.toDS())
         .writeStream.format("memory").queryName("tws_trail").outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_tws_trail_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_tws_trail"))
         .start()
       try {
         evs.map(e => StatefulOps.Event(e.event_id, e.ts, e.user_id, e.event_type))
@@ -232,7 +232,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StreamTransforms
       .clickPurchaseJoin(msClicks.toDF(), msPurch.toDF())
       .writeStream.format("memory").queryName("ssjoin").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_ssjoin_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_ssjoin"))
       .start()
     try {
       // interleave micro-batches across both sides, in event-time order so
@@ -266,7 +266,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StreamTransforms
       .clickPurchaseLeftOuter(msClicks.toDF(), msPurch.toDF())
       .writeStream.format("memory").queryName("ssloj").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_ssloj_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_ssloj"))
       .start()
     try {
       val cb = clicks.grouped(clicks.size / 3 + 1).toSeq
@@ -297,7 +297,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StreamTransforms
       .clickPurchaseJoin(msClicks.toDF(), msPurch.toDF())
       .writeStream.format("memory").queryName("ssjoin_late").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_ssjoin_late_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_ssjoin_late"))
       .start()
     try {
       // click at 10:00; watermark advances far past its eviction horizon
@@ -327,7 +327,7 @@ class StreamingSpec extends SparkSpecBase {
     val ms = MemoryStream[Ev]
     val q = StreamTransforms.tumblingAgg(ms.toDF())
       .writeStream.format("memory").queryName("upd").outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_upd_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_upd"))
       .start()
     def emitted(): Seq[(String, Long)] = {
       spark.table("upd").select($"w_start".cast("string"), $"n_events")
@@ -351,11 +351,11 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val evs = loadEvs()
-    val path = s"/tmp/graft_scratch/fsink_spec_${System.nanoTime()}"
+    val path = scratchPath("fsink_spec")
     val ms = MemoryStream[Ev]
     val q = StreamTransforms.tumblingAgg(ms.toDF())
       .writeStream.outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_fsink_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_fsink"))
       .foreachBatch { (df: DataFrame, id: Long) =>
         StreamTransforms.idempotentWindowWrite(df, path)
         // the at-least-once case: batch 1 is delivered AGAIN (sink
@@ -382,7 +382,7 @@ class StreamingSpec extends SparkSpecBase {
     val ms = MemoryStream[Ev]
     val q = StreamTransforms.tumblingAgg(ms.toDF())
       .writeStream.format("memory").queryName("late").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_late_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_late"))
       .start()
     try {
       ms.addData(Seq(
@@ -418,7 +418,7 @@ class StreamingSpec extends SparkSpecBase {
     val msGate = MemoryStream[Doc]
     val qGate = StreamTransforms.incrementalDedupGate(msGate.toDF(), reg)
       .writeStream.format("memory").queryName("incgate").outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_incgate_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_incgate"))
       .start()
     try {
       deliveries.foreach { b => msGate.addData(b); qGate.processAllAvailable() }
@@ -430,12 +430,12 @@ class StreamingSpec extends SparkSpecBase {
     // 2) the UPSERT through foreachBatch into a spec-scoped registry
     //    generation, with a forced DOUBLE DELIVERY of micro-batch 1
     val gen = s"graft_shingle_specgen_${System.nanoTime()}"
-    val genLoc = new java.io.File(s"/tmp/graft_scratch/$gen")
+    val genLoc = new java.io.File(scratchPath(gen))
     operators.ShingleRegistry.seedGeneration(spark, reg, gen, genLoc)
     try {
       val msUp = MemoryStream[Doc]
       val qUp = msUp.toDF().writeStream
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_incup_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_incup"))
         .foreachBatch { (df: DataFrame, id: Long) =>
           operators.ShingleRegistry.upsertBatch(df, gen, ingestBatch = 7L)
           // at-least-once: delivery 1 replays (sink failure between
@@ -458,7 +458,7 @@ class StreamingSpec extends SparkSpecBase {
       //    delivery in full — state must not change
       val msRe = MemoryStream[Doc]
       val qRe = msRe.toDF().writeStream
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_incre_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_incre"))
         .foreachBatch { (df: DataFrame, _: Long) =>
           operators.ShingleRegistry.upsertBatch(df, gen, ingestBatch = 7L)
         }
@@ -490,7 +490,7 @@ class StreamingSpec extends SparkSpecBase {
     val qGate = StreamTransforms.vecIngestGate(
         msGate.toDF().toDF("vec_id", "emb"), baseIdx, baseCb)
       .writeStream.format("memory").queryName("vecgate").outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_vecgate_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_vecgate"))
       .start()
     try {
       deliveries.foreach { b => msGate.addData(b); qGate.processAllAvailable() }
@@ -502,7 +502,7 @@ class StreamingSpec extends SparkSpecBase {
     // 2) the APPEND through foreachBatch into a spec-scoped index
     //    generation, with a forced DOUBLE DELIVERY of micro-batch 1
     val gen = s"graft_ivf_specgen_${System.nanoTime()}"
-    val genLoc = new java.io.File(s"/tmp/graft_scratch/$gen")
+    val genLoc = new java.io.File(scratchPath(gen))
     operators.IvfIndex.seedIndexGeneration(spark, baseIdx, gen, genLoc)
     def files(): Map[String, Long] =
       Option(genLoc.listFiles()).toSeq.flatten
@@ -512,7 +512,7 @@ class StreamingSpec extends SparkSpecBase {
     try {
       val msUp = MemoryStream[(Long, Array[Double])]
       val qUp = msUp.toDF().toDF("vec_id", "emb").writeStream
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_vecup_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_vecup"))
         .foreachBatch { (df: DataFrame, id: Long) =>
           operators.IvfIndex.appendVecBatch(df, gen, baseCb)
           // at-least-once: delivery 1 replays — the (cell, vec_id)
@@ -540,7 +540,7 @@ class StreamingSpec extends SparkSpecBase {
       //    delivery in full — state must not change
       val msRe = MemoryStream[(Long, Array[Double])]
       val qRe = msRe.toDF().toDF("vec_id", "emb").writeStream
-        .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_vecre_${System.nanoTime()}")
+        .option("checkpointLocation", scratchPath("ckpt_vecre"))
         .foreachBatch { (df: DataFrame, _: Long) =>
           operators.IvfIndex.appendVecBatch(df, gen, baseCb)
         }
@@ -566,7 +566,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StreamTransforms.annServeGate(
         ms.toDF().toDF("vec_id", "emb"), idx, ivfCb)
       .writeStream.format("memory").queryName("anngate").outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_anngate_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_anngate"))
       .start()
     try {
       queries.grouped(queries.size / 3 + 1).foreach { b =>
@@ -586,7 +586,7 @@ class StreamingSpec extends SparkSpecBase {
     val ms = MemoryStream[Ev]
     val q = StreamTransforms.latestPerUser(ms.toDF())
       .writeStream.format("memory").queryName("upsert").outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft_scratch/ckpt_upsert_${System.nanoTime()}")
+      .option("checkpointLocation", scratchPath("ckpt_upsert"))
       .start()
     val b1 = Seq(
       ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
