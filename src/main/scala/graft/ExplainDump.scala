@@ -2,9 +2,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for declared queries to
-  * plans/<roundTag>/<query>_<tag>.txt (`sbt "runMain graft.ExplainDump
-  * <tag> <query>[,<query>...] [sfDir]"`) — the optimization rounds'
-  * before/after plan evidence. Uses the bench's session settings so the
+  * plans/<tag>/<query>.txt (`sbt "runMain graft.ExplainDump
+  * <tag> <query>[,<query>...] [sfDir]"`) — before/after plan evidence,
+  * one directory per tag. Uses the bench's session settings so the
   * captured plan is the one the bench actually runs. Each line names the
   * Spark jobs the query ran while its DataFrame was built
   * (`construct_jobs`): eager construction makes plan-only callers pay
@@ -16,8 +16,7 @@ object ExplainDump {
     val names = args(1).split(',')
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val spark = Harness.session()
-    val round = sys.env.getOrElse("SPARK_GRAFT_PLANS_ROUND", "r14")
-    val outDir = Paths.get("plans", round)
+    val outDir = Paths.get("plans", tag)
     Files.createDirectories(outDir)
     Harness.withJobCounter(spark) { drained =>
       for (nm <- names) {
@@ -26,8 +25,8 @@ object ExplainDump {
         val constructJobs = drained() - j0
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(outDir.resolve(s"${nm}_$tag.txt"), plan)
-        println(s"EXPLAIN $nm -> plans/$round/${nm}_$tag.txt (${plan.length} chars)" +
+        Files.writeString(outDir.resolve(s"$nm.txt"), plan)
+        println(s"EXPLAIN $nm -> plans/$tag/$nm.txt (${plan.length} chars)" +
           s" construct_jobs=$constructJobs")
       }
     }

@@ -26,26 +26,64 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object EtlOps extends QueryModule {
 
-  /** Gaps-and-islands SCD2 derivation over an event frame: one version
-    * row per run of equal event_type per user, (ts, event_id)-ordered,
-    * with valid_from/valid_to chained and the open interval flagged.
-    * Shared by `etl_scd2_intervals` (whole-history build) and
+  /** The one SCD2 versioning recipe (gaps-and-islands), written once
+    * per engine: [[scd2RunStarts]] keeps the rows of an event frame that
+    * start a run of equal event_type per user, (ts, event_id)-ordered;
+    * [[scd2]] numbers those runs into versions with valid_from/valid_to
+    * chained and the open interval flagged. `etl_scd2_intervals`,
     * `etl_scd2_apply_merge` (whose correctness statement is that the
-    * incremental apply EQUALS this from-scratch derivation).
+    * incremental apply EQUALS this from-scratch derivation; its batch
+    * dedup is [[scd2RunStarts]]), `join_pit_scd2` and the persisted
+    * [[Scd2Dim]] all derive their versions here. The oracle side is
+    * [[scd2ChangesSql]] plus [[scd2VersionsSql]].
     */
-  private[graft] def scd2(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+  private val scd2Order = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+
+  private[graft] def scd2RunStarts(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     ev.select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(scd2Order))
       .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-      .select(
-        col("user_id"),
-        row_number().over(w).cast("long").as("version"),
-        col("event_type"),
-        col("ts").as("valid_from"),
-        lead(col("ts"), 1).over(w).as("valid_to"),
-        lead(col("ts"), 1).over(w).isNull.as("is_current"))
-  }
+
+  private[graft] def scd2(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    scd2RunStarts(ev).select(
+      col("user_id"),
+      row_number().over(scd2Order).cast("long").as("version"),
+      col("event_type"),
+      col("ts").as("valid_from"),
+      lead(col("ts"), 1).over(scd2Order).as("valid_to"),
+      lead(col("ts"), 1).over(scd2Order).isNull.as("is_current"))
+
+  /** The `changes` CTE: the run starts of [[scd2RunStarts]] in DuckDB. */
+  private[graft] val scd2ChangesSql = """changes AS (
+        SELECT user_id, event_id, ts, event_type
+        FROM (
+          SELECT user_id, event_id, ts, event_type,
+            LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+          FROM events)
+        WHERE prev_type IS NULL OR prev_type <> event_type
+      )"""
+
+  /** The version select over `changes`, as [[scd2]] numbers it. `user`
+    * and `regime` alias user_id and event_type (empty keeps the name);
+    * `more` appends select items after valid_to.
+    */
+  private[graft] def scd2VersionsSql(user: String, regime: String, more: String): String =
+    s"""SELECT user_id$user,
+          CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
+          event_type$regime,
+          ts AS valid_from,
+          LEAD(ts) OVER w AS valid_to$more
+        FROM changes
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
+
+  /** The whole-history oracle of `etl_scd2_intervals` and
+    * `etl_scd2_apply_merge`.
+    */
+  private val scd2HistorySql = s"""
+      WITH $scd2ChangesSql
+      ${scd2VersionsSql("", "", ", LEAD(ts) OVER w IS NULL AS is_current")}
+      ORDER BY user_id, version
+    """.trim
 
   /** SCD-1 incremental merge (upsert): the customer snapshot merged
     * with a delta of purchase totals per user. Keys only in the delta
@@ -116,25 +154,7 @@ object EtlOps extends QueryModule {
       import spark.implicits._
       scd2(Tables.events(spark, dir)).orderBy($"user_id", $"version")
     },
-    Some("""
-      WITH changes AS (
-        SELECT user_id, event_id, ts, event_type
-        FROM (
-          SELECT user_id, event_id, ts, event_type,
-            LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-          FROM events)
-        WHERE prev_type IS NULL OR prev_type <> event_type
-      )
-      SELECT user_id,
-        CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-        event_type,
-        ts AS valid_from,
-        LEAD(ts) OVER w AS valid_to,
-        LEAD(ts) OVER w IS NULL AS is_current
-      FROM changes
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      ORDER BY user_id, version
-    """.trim))
+    Some(scd2HistorySql))
 
   /** Data-quality audit gate: the metric set a daily load asserts
     * before publishing — row counts, key cardinalities, null counts,
@@ -1392,24 +1412,20 @@ object EtlOps extends QueryModule {
     val cur = hist.where(col("is_current"))
       .select(col("user_id"), col("version").as("cur_v"),
         col("event_type").as("cur_type"))
-    val wB = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     // within-batch run-length dedup, then the no-op guard on the head
-    val kept = ev.where(col("ts") >= cutoff)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(wB))
-      .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
+    val kept = scd2RunStarts(ev.where(col("ts") >= cutoff))
       .join(cur, Seq("user_id"), "left")
-      .withColumn("rn", row_number().over(wB))
+      .withColumn("rn", row_number().over(scd2Order))
       .where(!(col("rn") === 1 && col("cur_type").isNotNull &&
         col("event_type") === col("cur_type")))
     val newRows = kept
       .select(
         col("user_id"),
-        (row_number().over(wB) + coalesce(col("cur_v"), lit(0L))).as("version"),
+        (row_number().over(scd2Order) + coalesce(col("cur_v"), lit(0L))).as("version"),
         col("event_type"),
         col("ts").as("valid_from"),
-        lead(col("ts"), 1).over(wB).as("valid_to"),
-        lead(col("ts"), 1).over(wB).isNull.as("is_current"))
+        lead(col("ts"), 1).over(scd2Order).as("valid_to"),
+        lead(col("ts"), 1).over(scd2Order).isNull.as("is_current"))
     val firstKept = kept.groupBy(col("user_id")).agg(min(col("ts")).as("close_at"))
     val closedHist = hist
       .join(firstKept, Seq("user_id"), "left")
@@ -1430,25 +1446,7 @@ object EtlOps extends QueryModule {
     },
     // the oracle is the FROM-SCRATCH rebuild over all events — equality
     // proves the incremental apply reconstructs history exactly
-    Some("""
-      WITH changes AS (
-        SELECT user_id, event_id, ts, event_type
-        FROM (
-          SELECT user_id, event_id, ts, event_type,
-            LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-          FROM events)
-        WHERE prev_type IS NULL OR prev_type <> event_type
-      )
-      SELECT user_id,
-        CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-        event_type,
-        ts AS valid_from,
-        LEAD(ts) OVER w AS valid_to,
-        LEAD(ts) OVER w IS NULL AS is_current
-      FROM changes
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      ORDER BY user_id, version
-    """.trim))
+    Some(scd2HistorySql))
 
   def qs: Seq[Q] = Seq(etlScd2ApplyMerge,
     etlReconciliationTotals, etlLateArrivingDimension,

@@ -890,6 +890,20 @@ object Flagships extends QueryModule {
       .select($"a", $"b", $"w")
   }
 
+  /** The `symall` CTE over `e0`: [[topPartners]]' symmetrized pair
+    * weights before the top-3 rank, cast to `wType`. Each graph row
+    * ranks `symall` into its own `sym` inline (LPA's plain CTE keeps
+    * `w`; closeness and bottleneck MATERIALIZE it, closeness without `w`).
+    */
+  private def symmetricTradeSql(wType: String): String = s"""symall AS (
+        SELECT a, b, CAST(SUM(wgt) AS $wType) AS w
+        FROM (SELECT src AS a, dst AS b, wgt FROM e0
+              UNION ALL
+              SELECT dst AS a, src AS b, wgt FROM e0)
+        WHERE a <> b
+        GROUP BY a, b
+      )"""
+
   /** Link-prediction pairs `(pa, pb, …)` with both nations' names as
     * `a_name` and `b_name`.
     */
@@ -1103,13 +1117,13 @@ object Flagships extends QueryModule {
           .map { case ((a, l), ws) =>
             (a, l, ws.map(_._2).reduce(_.add(_))) }
         val newLab = votes.groupBy(_._1).map { case (a, vs) =>
-          // (vw desc, lab asc) — the row_number tiebreak, numerically
+          // (vw desc, lab asc) — the row_number tiebreak, labels in
+          // their natural order (numbers and strings alike)
           val winner = vs.reduce { (x, y) =>
             val c = x._3.compareTo(y._3)
             if (c > 0) x
             else if (c < 0) y
-            else if (x._2.asInstanceOf[Number].longValue <=
-                     y._2.asInstanceOf[Number].longValue) x else y
+            else if (x._2.asInstanceOf[Comparable[Any]].compareTo(y._2) <= 0) x else y
           }
           (a, winner._2)
         }
@@ -1145,14 +1159,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH ${tradeEdgesSql("e0")}, symall AS (
-        SELECT a, b, CAST(SUM(wgt) AS DECIMAL(28,2)) AS w
-        FROM (SELECT src AS a, dst AS b, wgt FROM e0
-              UNION ALL
-              SELECT dst AS a, src AS b, wgt FROM e0)
-        WHERE a <> b
-        GROUP BY a, b
-      ), sym AS (
+      WITH ${tradeEdgesSql("e0")}, ${symmetricTradeSql("DECIMAL(28,2)")}, sym AS (
         SELECT a, b, w FROM (
           SELECT a, b, w,
             ROW_NUMBER() OVER (PARTITION BY a ORDER BY w DESC, b) AS rn
@@ -1539,14 +1546,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH ${tradeEdgesSql("e0")}, symall AS (
-        SELECT a, b, CAST(SUM(wgt) AS DECIMAL(28,2)) AS w
-        FROM (SELECT src AS a, dst AS b, wgt FROM e0
-              UNION ALL
-              SELECT dst AS a, src AS b, wgt FROM e0)
-        WHERE a <> b
-        GROUP BY a, b
-      ), sym AS MATERIALIZED (
+      WITH ${tradeEdgesSql("e0")}, ${symmetricTradeSql("DECIMAL(28,2)")}, sym AS MATERIALIZED (
         SELECT a, b FROM (
           SELECT a, b,
             ROW_NUMBER() OVER (PARTITION BY a ORDER BY w DESC, b) AS rn
@@ -1655,14 +1655,7 @@ object Flagships extends QueryModule {
       )"""
       }.mkString(", ")
       s"""
-      WITH ${tradeEdgesSql("e0")}, symall AS (
-        SELECT a, b, CAST(SUM(wgt) AS DECIMAL(18,4)) AS w
-        FROM (SELECT src AS a, dst AS b, wgt FROM e0
-              UNION ALL
-              SELECT dst AS a, src AS b, wgt FROM e0)
-        WHERE a <> b
-        GROUP BY a, b
-      ), sym AS MATERIALIZED (
+      WITH ${tradeEdgesSql("e0")}, ${symmetricTradeSql("DECIMAL(18,4)")}, sym AS MATERIALIZED (
         SELECT a, b, w FROM (
           SELECT a, b, w,
             ROW_NUMBER() OVER (PARTITION BY a ORDER BY w DESC, b) AS rn

@@ -882,6 +882,41 @@ object Joins extends QueryModule {
       GROUP BY 1 ORDER BY 1
     """.trim))
 
+  /** The point-in-time tail both PIT rows share: each purchase joined
+    * to the version valid at its ts (valid_from ≤ ts < valid_to, open
+    * current version), with floor-seconds into that version. `fact` and
+    * `dim` are the two frames of [[Scd2Dim.frames]].
+    */
+  private def pitJoin(fact: org.apache.spark.sql.DataFrame,
+      dim: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    fact
+      .join(dim,
+        col("user_id") === col("v_user") &&
+          col("valid_from") <= col("ts") &&
+          (col("valid_to").isNull || col("ts") < col("valid_to")))
+      .select(col("event_id"), col("user_id"), col("ts"), col("version"), col("regime"),
+        col("valid_from"),
+        (unix_seconds(col("ts").cast("timestamp")) -
+          unix_seconds(col("valid_from").cast("timestamp"))).as("secs_into_version"))
+      .orderBy(col("event_id"))
+
+  /** The DuckDB oracle of both PIT rows. */
+  private val pitScd2Sql = s"""
+      WITH ${EtlOps.scd2ChangesSql}, versions AS (
+        ${EtlOps.scd2VersionsSql(" AS v_user", " AS regime", "")}
+      )
+      SELECT e.event_id, e.user_id, e.ts, v.version, v.regime, v.valid_from,
+        CAST(FLOOR(epoch(e.ts)) AS BIGINT)
+          - CAST(FLOOR(epoch(v.valid_from)) AS BIGINT) AS secs_into_version
+      FROM events e
+      JOIN versions v
+        ON e.user_id = v.v_user
+        AND v.valid_from <= e.ts
+        AND (v.valid_to IS NULL OR e.ts < v.valid_to)
+      WHERE e.event_type = 'purchase'
+      ORDER BY e.event_id
+    """.trim
+
   /** POINT-IN-TIME join against the SCD2 dimension (SURVEY §2 I-oct) —
     * the query the `etl_scd2_intervals` history exists FOR: each fact
     * (purchase event) joined to the dimension VERSION that was valid at
@@ -902,62 +937,10 @@ object Joins extends QueryModule {
   val joinPitScd2 = Q(
     "join_pit_scd2",
     (spark, dir) => {
-      import spark.implicits._
-      val ev = Tables.events(spark, dir)
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      val versions = ev
-        .select($"user_id", $"event_id", $"ts", $"event_type")
-        .withColumn("prev_type", lag($"event_type", 1).over(w))
-        .where($"prev_type".isNull || $"prev_type" =!= $"event_type")
-        .select(
-          $"user_id".as("v_user"),
-          row_number().over(w).cast("long").as("version"),
-          $"event_type".as("regime"),
-          $"ts".as("valid_from"),
-          lead($"ts", 1).over(w).as("valid_to"))
-      val purchases = ev
-        .where($"event_type" === "purchase")
-        .select($"event_id", $"user_id", $"ts")
-      purchases
-        .join(versions,
-          $"user_id" === $"v_user" &&
-            $"valid_from" <= $"ts" &&
-            ($"valid_to".isNull || $"ts" < $"valid_to"))
-        .select($"event_id", $"user_id", $"ts", $"version", $"regime",
-          $"valid_from",
-          (unix_seconds($"ts".cast("timestamp")) -
-            unix_seconds($"valid_from".cast("timestamp"))).as("secs_into_version"))
-        .orderBy($"event_id")
+      val (versions, purchases) = Scd2Dim.frames(Tables.events(spark, dir))
+      pitJoin(purchases, versions)
     },
-    Some("""
-      WITH changes AS (
-        SELECT user_id, event_id, ts, event_type
-        FROM (
-          SELECT user_id, event_id, ts, event_type,
-            LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              AS prev_type
-          FROM events)
-        WHERE prev_type IS NULL OR prev_type <> event_type
-      ), versions AS (
-        SELECT user_id AS v_user,
-          CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-          event_type AS regime,
-          ts AS valid_from,
-          LEAD(ts) OVER w AS valid_to
-        FROM changes
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      )
-      SELECT e.event_id, e.user_id, e.ts, v.version, v.regime, v.valid_from,
-        CAST(FLOOR(epoch(e.ts)) AS BIGINT)
-          - CAST(FLOOR(epoch(v.valid_from)) AS BIGINT) AS secs_into_version
-      FROM events e
-      JOIN versions v
-        ON e.user_id = v.v_user
-        AND v.valid_from <= e.ts
-        AND (v.valid_to IS NULL OR e.ts < v.valid_to)
-      WHERE e.event_type = 'purchase'
-      ORDER BY e.event_id
-    """.trim))
+    Some(pitScd2Sql))
 
   /** Point-in-time SCD2 join from the PERSISTED BUCKETED layout (SURVEY
     * §2 I-non) — the storage half of the SCD2 trio ([[Scd2Dim]]): same
@@ -973,48 +956,10 @@ object Joins extends QueryModule {
   lazy val joinPitScd2Bucketed = Q(
     "join_pit_scd2_bucketed",
     (spark, dir) => {
-      import spark.implicits._
       val (dim, fact) = Scd2Dim.ensure(spark, dir)
-      fact
-        .join(dim,
-          $"user_id" === $"v_user" &&
-            $"valid_from" <= $"ts" &&
-            ($"valid_to".isNull || $"ts" < $"valid_to"))
-        .select($"event_id", $"user_id", $"ts", $"version", $"regime",
-          $"valid_from",
-          (unix_seconds($"ts".cast("timestamp")) -
-            unix_seconds($"valid_from".cast("timestamp"))).as("secs_into_version"))
-        .orderBy($"event_id")
+      pitJoin(fact, dim)
     },
-    Some("""
-      WITH changes AS (
-        SELECT user_id, event_id, ts, event_type
-        FROM (
-          SELECT user_id, event_id, ts, event_type,
-            LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              AS prev_type
-          FROM events)
-        WHERE prev_type IS NULL OR prev_type <> event_type
-      ), versions AS (
-        SELECT user_id AS v_user,
-          CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-          event_type AS regime,
-          ts AS valid_from,
-          LEAD(ts) OVER w AS valid_to
-        FROM changes
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      )
-      SELECT e.event_id, e.user_id, e.ts, v.version, v.regime, v.valid_from,
-        CAST(FLOOR(epoch(e.ts)) AS BIGINT)
-          - CAST(FLOOR(epoch(v.valid_from)) AS BIGINT) AS secs_into_version
-      FROM events e
-      JOIN versions v
-        ON e.user_id = v.v_user
-        AND v.valid_from <= e.ts
-        AND (v.valid_to IS NULL OR e.ts < v.valid_to)
-      WHERE e.event_type = 'purchase'
-      ORDER BY e.event_id
-    """.trim))
+    Some(pitScd2Sql))
 
   def qs: Seq[Q] = Seq(joinPitScd2, joinPitScd2Bucketed,
     joinBroadcastDims, joinSortmergeFacts, joinLeftOuter, joinFullOuter,

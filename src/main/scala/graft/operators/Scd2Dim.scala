@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * `join_bucketed_colocated` discipline applied to the SCD2 family).
   *
   *  - `graft_scd2_dim_<corpus>`: (v_user, version, regime, valid_from,
-  *    valid_to) — the gaps-and-islands history, bucketed+sorted by
-  *    v_user;
+  *    valid_to) — the versions of the one SCD2 recipe
+  *    ([[EtlOps.scd2]], the same rows `join_pit_scd2` derives in-plan),
+  *    bucketed+sorted by v_user;
   *  - `graft_purchase_fact_<corpus>`: (event_id, user_id, ts) —
   *    the purchase slice, bucketed+sorted by user_id.
   *
@@ -40,6 +41,20 @@ object Scd2Dim {
   private val factDdl = bucketedDdl(
     "event_id BIGINT, user_id BIGINT, ts TIMESTAMP_NTZ", "user_id", "user_id", "event_id")
 
+  /** The dim and fact rows from an event frame: the versions of the one
+    * SCD2 recipe ([[EtlOps.scd2]]) keyed v_user with event_type as
+    * regime, and the purchase slice. `join_pit_scd2` joins these frames
+    * in-plan; [[ensure]] persists them.
+    */
+  def frames(ev: DataFrame): (DataFrame, DataFrame) = {
+    val versions = EtlOps.scd2(ev).select(col("user_id").as("v_user"), col("version"),
+      col("event_type").as("regime"), col("valid_from"), col("valid_to"))
+    val purchases = ev
+      .where(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    (versions, purchases)
+  }
+
   /** Find-or-build: returns (dim, fact) frames reading the PERSISTED
     * bucketed tables. Build runs only when the artifacts are absent or
     * stale vs the corpus fingerprint.
@@ -49,22 +64,7 @@ object Scd2Dim {
     val factT = factTable(dir)
     findOrBuild(spark, fileIdentity(new java.io.File(s"$dir/events.parquet")),
       Seq(dimT -> dimDdl, factT -> factDdl)) {
-      val ev = graft.Tables.events(spark, dir)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val versions = ev
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-        .select(
-          col("user_id").as("v_user"),
-          row_number().over(w).cast("long").as("version"),
-          col("event_type").as("regime"),
-          col("ts").as("valid_from"),
-          lead(col("ts"), 1).over(w).as("valid_to"))
-      val purchases = ev
-        .where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
+      val (versions, purchases) = frames(graft.Tables.events(spark, dir))
       writeBucketed(versions, dimT, tableLoc(spark, dimT), "v_user", "v_user", "version")
       writeBucketed(purchases, factT, tableLoc(spark, factT), "user_id", "user_id", "event_id")
     }

@@ -132,6 +132,9 @@ object Sources extends QueryModule {
     "sink_jdbc_roundtrip",
     (spark, dir) => {
       import spark.implicits._
+      // Derby reads its log location once, when the first connection
+      // boots it: keep derby.log beside the database, not in the cwd
+      System.setProperty("derby.stream.error.file", s"${Artifacts.scratchRoot}/derby.log")
       val url = s"jdbc:derby:${Artifacts.scratchRoot}/derby_db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")

@@ -518,13 +518,8 @@ object Streaming extends QueryModule {
       StreamTransforms.annServeGate(q, idx, ivfCb).orderBy($"q_id")
     },
     Some(s"""
-      WITH ${VectorOps.ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id < 50)
-        WHERE cr <= 2
-      ), cand AS (
+      WITH ${VectorOps.ivfAssignedSql("vec_id, emb, nrm, cell")},
+      ${VectorOps.cosineProbesSql("sims WHERE vec_id < 50", 2)}, cand AS (
         SELECT p.q_id, a.vec_id AS c_id,
           ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
         FROM assigned a JOIN probes p USING (cell)

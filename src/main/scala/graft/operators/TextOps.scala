@@ -1149,6 +1149,20 @@ object TextOps extends QueryModule {
     */
   private val labelsCache = new graft.PlanCache(4)
 
+  /** [[connectedComponents]] in DuckDB: the `verts`, `<edges>` and
+    * recursive `reach(a, b)` CTEs over a `pairs(d1, d2)` CTE; a
+    * component's label is MIN(b) per a. `edges` names the edge CTE.
+    */
+  private def componentReachSql(edges: String): String = s"""verts AS (
+        SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
+      ), $edges AS (
+        SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
+      ), reach(a, b) AS (
+        SELECT id, id FROM verts
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN $edges e ON r.b = e.a
+      )"""
+
   /** Min-label pointer-jumping connected components over an undirected
     * pair table with columns (d1, d2) — returns (id, comp). Shared by
     * the declared component row and the composed dedup pipeline.
@@ -1256,15 +1270,7 @@ object TextOps extends QueryModule {
         .orderBy($"doc_id")
     },
     Some(s"""
-      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, verts AS (
-        SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
-      ), edges AS (
-        SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
-      ), reach(a, b) AS (
-        SELECT id, id FROM verts
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-      )
+      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, ${componentReachSql("edges")}
       SELECT a AS doc_id, MIN(b) AS comp
       FROM reach GROUP BY a ORDER BY doc_id
     """.trim))
@@ -1359,15 +1365,7 @@ object TextOps extends QueryModule {
         .orderBy($"comp")
     },
     Some(s"""
-      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, verts AS (
-        SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
-      ), gedges AS (
-        SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
-      ), reach(a, b) AS (
-        SELECT id, id FROM verts
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN gedges e ON r.b = e.a
-      ), labels AS (
+      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, ${componentReachSql("gedges")}, labels AS (
         SELECT a AS id, MIN(b) AS comp FROM reach GROUP BY a
       ), csizes AS (
         SELECT comp, COUNT(*) AS n_docs FROM labels GROUP BY comp
@@ -1419,15 +1417,7 @@ object TextOps extends QueryModule {
         .orderBy($"doc_id")
     },
     Some(s"""
-      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, verts AS (
-        SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
-      ), gedges AS (
-        SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
-      ), reach(a, b) AS (
-        SELECT id, id FROM verts
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN gedges e ON r.b = e.a
-      ), labels AS (
+      WITH RECURSIVE ${OracleSql.shingles()}, $jaccardPairsSql, ${componentReachSql("gedges")}, labels AS (
         SELECT a AS id, MIN(b) AS comp FROM reach GROUP BY a
       ), ntok AS (
         SELECT doc_id, COUNT(*) AS n_tokens FROM tok GROUP BY doc_id
@@ -2812,15 +2802,7 @@ object TextOps extends QueryModule {
     Some(s"""
       WITH RECURSIVE endocs AS (
         SELECT doc_id, text FROM documents WHERE lang = 'en'
-      ), ${OracleSql.shingles("endocs")}, $jaccardPairsSql, verts AS (
-        SELECT d1 AS id FROM pairs UNION SELECT d2 FROM pairs
-      ), edges AS (
-        SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs
-      ), reach(a, b) AS (
-        SELECT id, id FROM verts
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-      ), comp AS (
+      ), ${OracleSql.shingles("endocs")}, $jaccardPairsSql, ${componentReachSql("edges")}, comp AS (
         SELECT a AS doc_id, MIN(b) AS comp FROM reach GROUP BY a
       )
       SELECT COUNT(*) AS n_docs,

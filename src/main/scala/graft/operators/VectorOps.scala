@@ -647,6 +647,15 @@ object VectorOps extends QueryModule {
       e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     e.filter(col("vec_id") % 10 === 7 && col("vec_id") < 500)
 
+  /** [[disjointQueries]] in DuckDB: its predicate, and the `qe(q_id,
+    * q_emb)` CTE of those queries over `e`.
+    */
+  private def disjointQueriesSql: String = "vec_id % 10 = 7 AND vec_id < 500"
+  private def disjointQueriesQeSql: String = s"""qe AS (
+        SELECT vec_id AS q_id, emb AS q_emb FROM e
+        WHERE $disjointQueriesSql
+      )"""
+
   /** Squared L2 by the ‖a‖² − 2a·b + ‖b‖² identity, rounded to 6 dp —
     * the one expression tree every exact rank, PQ lookup and k-center
     * distance uses, so the doubles stay bit-identical to the DuckDB
@@ -672,6 +681,18 @@ object VectorOps extends QueryModule {
     withNearestCells(q, cb, nprobe, rounded = true)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("nrm").as("q_nrm"), col("cell"))
+
+  /** The SQL twin of [[cosineProbes]]: `probes(q_id, q_emb, q_nrm,
+    * cell)`, the `nprobe` best cells of each row of `from` — a sims CTE
+    * (vec_id, emb, nrm, cell, csim) with its query-sample predicate.
+    */
+  private[graft] def cosineProbesSql(from: String, nprobe: Int): String = s"""probes AS (
+        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
+          SELECT vec_id, emb, nrm, cell,
+            ${OracleSql.cellRank}
+          FROM $from)
+        WHERE cr <= $nprobe
+      )"""
 
   /** Rounded cosine of a probed candidate (emb, nrm) to its query. */
   private[graft] def probeCosine: Column = round(cosine("emb", "q_emb", "nrm", "q_nrm"), 6)
@@ -719,6 +740,18 @@ object VectorOps extends QueryModule {
     withRankedCells(q, cb, keep, "cr")
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("cr"), col("cell"))
 
+  /** [[cosineProbes]] without the query vectors: `probes(q_id, cell)`,
+    * plus the probe rank `cr` of [[rankedProbes]] when `withRank`.
+    */
+  private def probeCellsSql(from: String, nprobe: Int, withRank: Boolean = false): String =
+    s"""probes AS (
+        SELECT vec_id AS q_id, cell${if (withRank) ", cr" else ""} FROM (
+          SELECT vec_id, cell,
+            ${OracleSql.cellRank}
+          FROM $from)
+        WHERE cr <= $nprobe
+      )"""
+
   /** The CELL-stage candidates: every full vector in the probed cells,
     * scored by exact rounded L2 — (q_id, vec_id, cr, adist), the recall
     * ceiling any code-based ranking can reach at that nprobe. `probes`
@@ -743,6 +776,55 @@ object VectorOps extends QueryModule {
       .join(broadcast(residualLut(probes, cb, rcb, m, w, k)), Seq("q_id", "cell"))
       .select(col("q_id"), col("vec_id"), col("cr"),
         adcRowLocal(m, k).cast(DoubleType).as("adist"))
+
+  /** `rese`, the residual-PQ codebook and `rcodes(vec_id, cell, sub,
+    * cid)`: the residual code rows of every `assigned` vector.
+    */
+  private def residualCodesSql: String = s"""rese AS (
+        SELECT a.vec_id,
+          list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] - c.cvec[i]) AS emb
+        FROM assigned a JOIN centn c USING (cell)
+      ), $pqResidualCodebookSql, rd AS (
+        SELECT s.vec_id, s.sub, c.cid,
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
+        FROM rs s JOIN rpqcb c ON s.sub = c.sub
+      ), rcodes AS (
+        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
+          SELECT vec_id, sub, cid,
+            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
+          FROM rd) d
+        JOIN assigned a USING (vec_id)
+        WHERE d.rn = 1
+      )"""
+
+  /** The SQL twin of [[residualAdc]] over `probes(q_id, cell, …)` and
+    * `qe(q_id, q_emb)`: `qres`/`qsl`/`qlut`, each probed cell's query
+    * residual against the `cents` centroids looked up in `rpqcb`, then
+    * `name(q_id, vec_id, <by>, adist)` summed over the `codes` rows of
+    * the probed cells that pass `where`.
+    */
+  private def residualAdcSql(cents: String, codes: String, by: String = "",
+      where: String = "", name: String = "adists"): String = s"""qres AS (
+        SELECT p.q_id, p.cell,
+          list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] - c.cvec[i]) AS qr
+        FROM probes p JOIN qe q ON p.q_id = q.q_id JOIN $cents c USING (cell)
+      ), qsl AS (
+        SELECT q_id, cell, sub, list_slice(qr, sub*$PqrW + 1, sub*$PqrW + $PqrW) AS v
+        FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
+      ), qlut AS (
+        SELECT s.q_id, s.cell, s.sub, c.cid,
+          ${roundedL2Sql("s.v", "c.cv")} AS qd2
+        FROM qsl s JOIN rpqcb c ON s.sub = c.sub
+      ), $name AS (
+        SELECT p.q_id, k.vec_id$by,
+          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
+        FROM $codes k
+        JOIN probes p USING (cell)
+        JOIN qlut l ON l.q_id = p.q_id AND l.cell = k.cell
+                   AND l.sub = k.sub AND l.cid = k.cid
+        WHERE k.vec_id <> p.q_id$where
+        GROUP BY p.q_id, k.vec_id$by
+      )"""
 
   /** Per-query raw-PQ lookup table over (vec_id, emb) queries: the
     * rounded squared distance of each query slice to every centroid of
@@ -784,6 +866,38 @@ object VectorOps extends QueryModule {
     rawAdc(codeRows, rawPqLut(q, pqCb), keys: _*)
   }
 
+  /** The PQ codebook CTEs and `d(vec_id, sub, cid, d2)`: each corpus
+    * slice's rounded L2 to every centroid of its subspace.
+    */
+  private def pqDistsSql: String = s"""$pqCodebookSql, d AS (
+        SELECT s.vec_id, s.sub, c.cid,
+          ${roundedL2Sql("s.v", "c.cv")} AS d2
+        FROM s JOIN pqcb c ON s.sub = c.sub
+      )"""
+
+  /** The SQL twin of [[rawPqAdc]] over `assigned` and `probes(q_id,
+    * cell)`: [[pqDistsSql]], the cell-tagged `codes`, the `lut` of the
+    * rows that pass `queries`, and `adists(q_id, vec_id, adist)`.
+    */
+  private def rawPqAdcSql(queries: String): String = s"""$pqDistsSql, codes AS (
+        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
+          SELECT vec_id, sub, cid,
+            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
+          FROM d) d
+        JOIN assigned a USING (vec_id)
+        WHERE d.rn = 1
+      ), lut AS (
+        SELECT vec_id AS q_id, sub, cid, d2 AS qd2 FROM d WHERE $queries
+      ), adists AS (
+        SELECT p.q_id, k.vec_id,
+          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
+        FROM codes k
+        JOIN probes p USING (cell)
+        JOIN lut l ON l.q_id = p.q_id AND l.sub = k.sub AND l.cid = k.cid
+        WHERE k.vec_id <> p.q_id
+        GROUP BY p.q_id, k.vec_id
+      )"""
+
   /** The first `n` rows of each `keys` group by ascending `dist` (vec_id
     * tiebreak), ranked 1..n in column `rank`.
     */
@@ -792,6 +906,16 @@ object VectorOps extends QueryModule {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(dist), col("vec_id"))
     df.withColumn(rank, row_number().over(w)).filter(col(rank) <= n)
   }
+
+  /** [[nearestFirst]] on `adists(q_id, vec_id, adist)` in DuckDB, as the
+    * final top-`k` SELECT of an ADC row.
+    */
+  private def adcTopKSql(k: Int): String = s"""SELECT q_id, vec_id, adist, rn FROM (
+        SELECT q_id, vec_id, adist,
+          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rn
+        FROM adists)
+      WHERE rn <= $k
+      ORDER BY q_id, rn"""
 
   /** Exact re-rank of a (keys…, q_id, vec_id) shortlist: ONLY the
     * shortlisted rows' full vectors leave `corpus` (a broadcast lookup
@@ -807,6 +931,31 @@ object VectorOps extends QueryModule {
       .join(broadcast(q.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))), Seq("q_id"))
       .withColumn("d2", roundedL2(col("emb"), col("q_emb"))), "d2", k, "rn", keys: _*)
 
+  /** The SQL twin of [[exactRefine]] at R = [[RefineR]], k = 3 over
+    * `adists(q_id, vec_id, adist)` and `qe(q_id, q_emb)`: `shortlist`,
+    * `refined` against the `corpus` source aliased `alias`, and the
+    * final top-3 SELECT.
+    */
+  private def exactRefineSql(corpus: String, alias: String): String = s"""shortlist AS (
+        SELECT q_id, vec_id FROM (
+          SELECT q_id, vec_id,
+            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS srn
+          FROM adists)
+        WHERE srn <= $RefineR
+      ), refined AS (
+        SELECT s.q_id, s.vec_id,
+          ${roundedL2Sql(s"$alias.emb", "q.q_emb")} AS d2
+        FROM shortlist s
+        JOIN $corpus ON $alias.vec_id = s.vec_id
+        JOIN qe q ON q.q_id = s.q_id
+      )
+      SELECT q_id, vec_id, d2, rn FROM (
+        SELECT q_id, vec_id, d2,
+          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS rn
+        FROM refined)
+      WHERE rn <= 3
+      ORDER BY q_id, rn"""
+
   /** Exact rounded-L2 top-k ground truth of each (vec_id, emb) query over
     * the whole corpus, self excluded: (q_id, vec_id, e_rn). One broadcast
     * pass of the query SAMPLE over the corpus — queries × corpus, never
@@ -819,6 +968,18 @@ object VectorOps extends QueryModule {
         col("vec_id") =!= col("q_id"))
       .withColumn("d2", roundedL2(col("emb"), col("q_emb"))), "d2", k, "e_rn", "q_id")
       .select(col("q_id"), col("vec_id"), col("e_rn"))
+
+  /** The SQL twin of [[exactTopK]] at k = 5 over `e` and `qe(q_id,
+    * q_emb)`: `exact(q_id, vec_id, e_rn)`.
+    */
+  private def exactTop5Sql: String = s"""exact AS (
+        SELECT q_id, vec_id, rn AS e_rn FROM (
+          SELECT q.q_id, e.vec_id,
+            ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
+              ${roundedL2Sql("e.emb", "q.q_emb")}, e.vec_id) AS rn
+          FROM e JOIN qe q ON e.vec_id <> q.q_id)
+        WHERE rn <= 5
+      )"""
 
   /** @3/@5 hits of an approximate top-5 (`a_rn`) against the exact top-5
     * (`e_rn`), counted per `by`: (by, h3, h5).
@@ -1349,13 +1510,9 @@ object VectorOps extends QueryModule {
     // codebook, assignment, probes, exact-cosine re-rank — is
     // deterministic double algebra DuckDB re-derives from scratch
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id < 50)
-        WHERE cr <= 3
-      ), ${probedTop3Sql("assigned")}
+      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")},
+      ${cosineProbesSql("sims WHERE vec_id < 50", 3)},
+      ${probedTop3Sql("assigned")}
     """.trim))
 
   /** Int8 scalar quantization of the embedding column — the standard
@@ -1865,11 +2022,7 @@ object VectorOps extends QueryModule {
     Some(s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-      ), $pqCodebookSql, d AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM s JOIN pqcb c ON s.sub = c.sub
-      ), a AS (
+      ), $pqDistsSql, a AS (
         SELECT vec_id, sub, cid, d2,
           ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
         FROM d
@@ -1927,11 +2080,7 @@ object VectorOps extends QueryModule {
     Some(s"""
       WITH e AS (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-      ), $pqCodebookSql, d AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM s JOIN pqcb c ON s.sub = c.sub
-      ), codes AS (
+      ), $pqDistsSql, codes AS (
         SELECT vec_id, sub, cid FROM (
           SELECT vec_id, sub, cid,
             ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
@@ -1946,12 +2095,7 @@ object VectorOps extends QueryModule {
         WHERE k.vec_id <> l.q_id
         GROUP BY l.q_id, k.vec_id
       )
-      SELECT q_id, vec_id, adist, rn FROM (
-        SELECT q_id, vec_id, adist,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rn
-        FROM adists)
-      WHERE rn <= 5
-      ORDER BY q_id, rn
+      ${adcTopKSql(5)}
     """.trim))
 
   /** SEMANTIC DEDUPLICATION (SemDeDup-shaped) — the embedding-space
@@ -2073,40 +2217,10 @@ object VectorOps extends QueryModule {
     // DuckDB from scratch — same chain as vec_ann_ivfpq_serve at the
     // in-plan row's (8 queries, k=5) configuration
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, cell")}, probes AS (
-        SELECT vec_id AS q_id, cell FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id < 8)
-        WHERE cr <= 3
-      ), $pqCodebookSql, d AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM s JOIN pqcb c ON s.sub = c.sub
-      ), codes AS (
-        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
-          SELECT vec_id, sub, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
-          FROM d) d
-        JOIN assigned a USING (vec_id)
-        WHERE d.rn = 1
-      ), lut AS (
-        SELECT vec_id AS q_id, sub, cid, d2 AS qd2 FROM d WHERE vec_id < 8
-      ), adists AS (
-        SELECT p.q_id, k.vec_id,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM codes k
-        JOIN probes p USING (cell)
-        JOIN lut l ON l.q_id = p.q_id AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id
-        GROUP BY p.q_id, k.vec_id
-      )
-      SELECT q_id, vec_id, adist, rn FROM (
-        SELECT q_id, vec_id, adist,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rn
-        FROM adists)
-      WHERE rn <= 5
-      ORDER BY q_id, rn
+      WITH ${ivfAssignedSql("vec_id, cell")},
+      ${probeCellsSql("sims WHERE vec_id < 8", 3)},
+      ${rawPqAdcSql("vec_id < 8")}
+      ${adcTopKSql(5)}
     """.trim))
 
   /** ANN RECALL@k AUDIT — the driver-visible quality number for the ANN
@@ -2160,34 +2274,9 @@ object VectorOps extends QueryModule {
     // the vec_ann_ivfpq chain at 50 queries, the exact side is the same
     // rounded L2 identity — both re-derived in full by DuckDB
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, cell")}, probes AS (
-        SELECT vec_id AS q_id, cell FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id < 50)
-        WHERE cr <= 3
-      ), $pqCodebookSql, d AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM s JOIN pqcb c ON s.sub = c.sub
-      ), codes AS (
-        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
-          SELECT vec_id, sub, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
-          FROM d) d
-        JOIN assigned a USING (vec_id)
-        WHERE d.rn = 1
-      ), lut AS (
-        SELECT vec_id AS q_id, sub, cid, d2 AS qd2 FROM d WHERE vec_id < 50
-      ), adists AS (
-        SELECT p.q_id, k.vec_id,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM codes k
-        JOIN probes p USING (cell)
-        JOIN lut l ON l.q_id = p.q_id AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id
-        GROUP BY p.q_id, k.vec_id
-      ), approx AS (
+      WITH ${ivfAssignedSql("vec_id, cell")},
+      ${probeCellsSql("sims WHERE vec_id < 50", 3)},
+      ${rawPqAdcSql("vec_id < 50")}, approx AS (
         SELECT q_id, vec_id, rn AS a_rn FROM (
           SELECT q_id, vec_id,
             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rn
@@ -2196,14 +2285,7 @@ object VectorOps extends QueryModule {
       ), qe AS (
         SELECT vec_id AS q_id, emb AS q_emb, label AS q_label
         FROM e WHERE vec_id < 50
-      ), exact AS (
-        SELECT q_id, vec_id, rn AS e_rn FROM (
-          SELECT q.q_id, e.vec_id,
-            ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-              ${roundedL2Sql("e.emb", "q.q_emb")}, e.vec_id) AS rn
-          FROM e JOIN qe q ON e.vec_id <> q.q_id)
-        WHERE rn <= 5
-      ), hits AS (
+      ), $exactTop5Sql, hits AS (
         SELECT a.q_id,
           SUM(CASE WHEN a.a_rn <= 3 AND x.e_rn <= 3 THEN 1 ELSE 0 END) AS h3,
           COUNT(*) AS h5
@@ -2382,15 +2464,7 @@ object VectorOps extends QueryModule {
       cosineTopK(idx, cosineProbes(withNorm(spark, dir).filter($"vec_id" < 50), cb, 3), 3)
         .orderBy($"q_id", $"rn")
     },
-    Some(s"""
-      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id < 50)
-        WHERE cr <= 3
-      ), ${probedTop3Sql("assigned")}
-    """.trim))
+    vecAnnIvf.oracle)
 
   /** ANN serve from the PERSISTED IVF-PQ index (SURVEY §2 I-oct) — the
     * full FAISS-style production path on disk: [[IvfIndex.ensurePq]]
@@ -2429,40 +2503,10 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, cell")}, probes AS (
-        SELECT vec_id AS q_id, cell FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id < 50)
-        WHERE cr <= 3
-      ), $pqCodebookSql, d AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM s JOIN pqcb c ON s.sub = c.sub
-      ), codes AS (
-        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
-          SELECT vec_id, sub, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
-          FROM d) d
-        JOIN assigned a USING (vec_id)
-        WHERE d.rn = 1
-      ), lut AS (
-        SELECT vec_id AS q_id, sub, cid, d2 AS qd2 FROM d WHERE vec_id < 50
-      ), adists AS (
-        SELECT p.q_id, k.vec_id,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM codes k
-        JOIN probes p USING (cell)
-        JOIN lut l ON l.q_id = p.q_id AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id
-        GROUP BY p.q_id, k.vec_id
-      )
-      SELECT q_id, vec_id, adist, rn FROM (
-        SELECT q_id, vec_id, adist,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rn
-        FROM adists)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
+      WITH ${ivfAssignedSql("vec_id, cell")},
+      ${probeCellsSql("sims WHERE vec_id < 50", 3)},
+      ${rawPqAdcSql("vec_id < 50")}
+      ${adcTopKSql(3)}
     """.trim))
 
   /** Maximal-marginal-relevance diversified top-k (SURVEY §2 I-non) —
@@ -2756,13 +2800,7 @@ object VectorOps extends QueryModule {
           ${OracleSql.cellCosine("b")}
         FROM e CROSS JOIN cb2 b
         WHERE e.vec_id % 10 = 7 AND e.vec_id < 500
-      ), probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM qsims)
-        WHERE cr <= 3
-      ), ${probedTop3Sql("idx2")}
+      ), ${cosineProbesSql("qsims", 3)}, ${probedTop3Sql("idx2")}
     """.trim))
 
   /** GENERATION BALANCE AUDIT — the observability row closing the
@@ -2914,51 +2952,11 @@ object VectorOps extends QueryModule {
     // residuals, residual-PQ codebook, codes, per-(q, cell) LUT, the
     // single widest-nprobe ADC pass and all three curve points
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, emb, cell")}, qe AS (
-        SELECT vec_id AS q_id, emb AS q_emb FROM e
-        WHERE vec_id % 10 = 7 AND vec_id < 500
-      ), probes AS (
-        SELECT vec_id AS q_id, cell, cr FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 8
-      ), rese AS (
-        SELECT a.vec_id,
-          list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] - c.cvec[i]) AS emb
-        FROM assigned a JOIN centn c USING (cell)
-      ), $pqResidualCodebookSql, rd AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM rs s JOIN rpqcb c ON s.sub = c.sub
-      ), rcodes AS (
-        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
-          SELECT vec_id, sub, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
-          FROM rd) d
-        JOIN assigned a USING (vec_id)
-        WHERE d.rn = 1
-      ), qres AS (
-        SELECT p.q_id, p.cell,
-          list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] - c.cvec[i]) AS qr
-        FROM probes p JOIN qe q ON p.q_id = q.q_id JOIN centn c USING (cell)
-      ), qsl AS (
-        SELECT q_id, cell, sub, list_slice(qr, sub*$PqrW + 1, sub*$PqrW + $PqrW) AS v
-        FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
-      ), qlut AS (
-        SELECT s.q_id, s.cell, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS qd2
-        FROM qsl s JOIN rpqcb c ON s.sub = c.sub
-      ), adists AS (
-        SELECT p.q_id, k.vec_id, p.cr,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM rcodes k
-        JOIN probes p USING (cell)
-        JOIN qlut l ON l.q_id = p.q_id AND l.cell = k.cell
-                   AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id
-        GROUP BY p.q_id, k.vec_id, p.cr
-      ), np AS (
+      WITH ${ivfAssignedSql("vec_id, emb, cell")},
+      $disjointQueriesQeSql,
+      ${probeCellsSql(s"sims WHERE $disjointQueriesSql", 8, withRank = true)},
+      $residualCodesSql,
+      ${residualAdcSql("centn", "rcodes", by = ", p.cr")}, np AS (
         SELECT CAST(UNNEST([1, 3, 8]) AS BIGINT) AS nprobe
       ), approx AS (
         SELECT nprobe, q_id, vec_id, a_rn FROM (
@@ -2967,14 +2965,7 @@ object VectorOps extends QueryModule {
                                ORDER BY a.adist, a.vec_id) AS a_rn
           FROM adists a JOIN np n ON a.cr <= n.nprobe)
         WHERE a_rn <= 5
-      ), exact AS (
-        SELECT q_id, vec_id, rn AS e_rn FROM (
-          SELECT q.q_id, e.vec_id,
-            ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-              ${roundedL2Sql("e.emb", "q.q_emb")}, e.vec_id) AS rn
-          FROM e JOIN qe q ON e.vec_id <> q.q_id)
-        WHERE rn <= 5
-      ), hits AS (
+      ), $exactTop5Sql, hits AS (
         SELECT a.nprobe,
           SUM(CASE WHEN a.a_rn <= 3 AND x.e_rn <= 3 THEN 1 ELSE 0 END) AS h3,
           COUNT(*) AS h5
@@ -3041,69 +3032,12 @@ object VectorOps extends QueryModule {
     // → per-(q, cell) LUT → ADC) extended by the top-R shortlist cut
     // and the exact re-rank against the corpus vectors
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, emb, cell")}, qe AS (
-        SELECT vec_id AS q_id, emb AS q_emb FROM e
-        WHERE vec_id % 10 = 7 AND vec_id < 500
-      ), probes AS (
-        SELECT vec_id AS q_id, cell, cr FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 8
-      ), rese AS (
-        SELECT a.vec_id,
-          list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] - c.cvec[i]) AS emb
-        FROM assigned a JOIN centn c USING (cell)
-      ), $pqResidualCodebookSql, rd AS (
-        SELECT s.vec_id, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS d2
-        FROM rs s JOIN rpqcb c ON s.sub = c.sub
-      ), rcodes AS (
-        SELECT d.vec_id, a.cell, d.sub, d.cid FROM (
-          SELECT vec_id, sub, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2, cid) AS rn
-          FROM rd) d
-        JOIN assigned a USING (vec_id)
-        WHERE d.rn = 1
-      ), qres AS (
-        SELECT p.q_id, p.cell,
-          list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] - c.cvec[i]) AS qr
-        FROM probes p JOIN qe q ON p.q_id = q.q_id JOIN centn c USING (cell)
-      ), qsl AS (
-        SELECT q_id, cell, sub, list_slice(qr, sub*$PqrW + 1, sub*$PqrW + $PqrW) AS v
-        FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
-      ), qlut AS (
-        SELECT s.q_id, s.cell, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS qd2
-        FROM qsl s JOIN rpqcb c ON s.sub = c.sub
-      ), adists AS (
-        SELECT p.q_id, k.vec_id,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM rcodes k
-        JOIN probes p USING (cell)
-        JOIN qlut l ON l.q_id = p.q_id AND l.cell = k.cell
-                   AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id
-        GROUP BY p.q_id, k.vec_id
-      ), shortlist AS (
-        SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id,
-            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS srn
-          FROM adists)
-        WHERE srn <= 20
-      ), refined AS (
-        SELECT s.q_id, s.vec_id,
-          ${roundedL2Sql("e.emb", "q.q_emb")} AS d2
-        FROM shortlist s
-        JOIN e ON e.vec_id = s.vec_id
-        JOIN qe q ON q.q_id = s.q_id
-      )
-      SELECT q_id, vec_id, d2, rn FROM (
-        SELECT q_id, vec_id, d2,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS rn
-        FROM refined)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
+      WITH ${ivfAssignedSql("vec_id, emb, cell")},
+      $disjointQueriesQeSql,
+      ${probeCellsSql(s"sims WHERE $disjointQueriesSql", 8, withRank = true)},
+      $residualCodesSql,
+      ${residualAdcSql("centn", "rcodes")},
+      ${exactRefineSql("e", "e")}
     """.trim))
 
   /** Shared DuckDB mirror of the incremental-ADD lifecycle
@@ -3237,13 +3171,10 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH ${OracleSql.embeddings()}, $baseAppendLifecycleSql, probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM bsims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 3
-      ), ${probedTop3Sql("ball")}
+      WITH ${OracleSql.embeddings()},
+      $baseAppendLifecycleSql,
+      ${cosineProbesSql(s"bsims WHERE $disjointQueriesSql", 3)},
+      ${probedTop3Sql("ball")}
     """.trim))
 
   /** INCREMENTAL residual-CODE append beside the index append (SURVEY
@@ -3409,13 +3340,8 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")}, probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM sims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 3
-      ), cand AS (
+      WITH ${ivfAssignedSql("vec_id, emb, nrm, cell")},
+      ${cosineProbesSql(s"sims WHERE $disjointQueriesSql", 3)}, cand AS (
         SELECT p.q_id, a.vec_id,
           ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
         FROM assigned a JOIN probes p USING (cell)
@@ -3539,13 +3465,9 @@ object VectorOps extends QueryModule {
         .orderBy($"q_id", $"rn")
     },
     Some(s"""
-      WITH ${OracleSql.embeddings()}, $spillLifecycleSql, probes AS (
-        SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm, cell FROM (
-          SELECT vec_id, emb, nrm, cell,
-            ${OracleSql.cellRank}
-          FROM ssims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 16
-      ), cand AS (
+      WITH ${OracleSql.embeddings()},
+      $spillLifecycleSql,
+      ${cosineProbesSql(s"ssims WHERE $disjointQueriesSql", 16)}, cand AS (
         SELECT DISTINCT p.q_id, a.vec_id,
           ROUND(list_inner_product(a.emb, p.q_emb) / (a.nrm * p.q_nrm), 6) AS cos
         FROM sassign a JOIN probes p USING (cell)
@@ -3621,54 +3543,13 @@ object VectorOps extends QueryModule {
     // + probes + per-(q,cell) LUT + tombstone-filtered ADC + shortlist
     // + exact refine
     Some(s"""
-      WITH ${OracleSql.embeddings()}, $baseAppendLifecycleSql, $basePqrCodesSql, qe AS (
-        SELECT vec_id AS q_id, emb AS q_emb FROM e
-        WHERE vec_id % 10 = 7 AND vec_id < 500
-      ), probes AS (
-        SELECT vec_id AS q_id, cell FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM bsims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 8
-      ), qres AS (
-        SELECT p.q_id, p.cell,
-          list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] - c.cvec[i]) AS qr
-        FROM probes p JOIN qe q ON p.q_id = q.q_id JOIN bcentn c USING (cell)
-      ), qsl AS (
-        SELECT q_id, cell, sub, list_slice(qr, sub*$PqrW + 1, sub*$PqrW + $PqrW) AS v
-        FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
-      ), qlut AS (
-        SELECT s.q_id, s.cell, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS qd2
-        FROM qsl s JOIN rpqcb c ON s.sub = c.sub
-      ), adists AS (
-        SELECT p.q_id, k.vec_id,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM racodes k
-        JOIN probes p USING (cell)
-        JOIN qlut l ON l.q_id = p.q_id AND l.cell = k.cell
-                   AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id AND k.vec_id % 10 <> 9
-        GROUP BY p.q_id, k.vec_id
-      ), shortlist AS (
-        SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id,
-            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS srn
-          FROM adists)
-        WHERE srn <= 20
-      ), refined AS (
-        SELECT s.q_id, s.vec_id,
-          ${roundedL2Sql("a.emb", "q.q_emb")} AS d2
-        FROM shortlist s
-        JOIN ball a ON a.vec_id = s.vec_id
-        JOIN qe q ON q.q_id = s.q_id
-      )
-      SELECT q_id, vec_id, d2, rn FROM (
-        SELECT q_id, vec_id, d2,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS rn
-        FROM refined)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
+      WITH ${OracleSql.embeddings()},
+      $baseAppendLifecycleSql,
+      $basePqrCodesSql,
+      $disjointQueriesQeSql,
+      ${probeCellsSql(s"bsims WHERE $disjointQueriesSql", 8)},
+      ${residualAdcSql("bcentn", "racodes", where = " AND k.vec_id % 10 <> 9")},
+      ${exactRefineSql("ball a", "a")}
     """.trim))
 
   /** END-TO-END SERVE ON THE SPILLED GEOMETRY (SURVEY §2 I-tredec) —
@@ -3738,57 +3619,12 @@ object VectorOps extends QueryModule {
             ROW_NUMBER() OVER (PARTITION BY vec_id, cell, sub ORDER BY d2, cid) AS rn
           FROM sprad)
         WHERE rn = 1
-      ), qe AS (
-        SELECT vec_id AS q_id, emb AS q_emb FROM e
-        WHERE vec_id % 10 = 7 AND vec_id < 500
-      ), probes AS (
-        SELECT vec_id AS q_id, cell FROM (
-          SELECT vec_id, cell,
-            ${OracleSql.cellRank}
-          FROM ssims WHERE vec_id % 10 = 7 AND vec_id < 500)
-        WHERE cr <= 16
-      ), qres AS (
-        SELECT p.q_id, p.cell,
-          list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] - c.cvec[i]) AS qr
-        FROM probes p JOIN qe q ON p.q_id = q.q_id JOIN spcentn c USING (cell)
-      ), qsl AS (
-        SELECT q_id, cell, sub, list_slice(qr, sub*$PqrW + 1, sub*$PqrW + $PqrW) AS v
-        FROM qres, (SELECT UNNEST(range($PqrM)) AS sub)
-      ), qlut AS (
-        SELECT s.q_id, s.cell, s.sub, c.cid,
-          ${roundedL2Sql("s.v", "c.cv")} AS qd2
-        FROM qsl s JOIN rpqcb c ON s.sub = c.sub
-      ), cop AS (
-        SELECT p.q_id, k.vec_id, k.cell,
-          CAST(SUM(CAST(l.qd2 AS DECIMAL(18,6))) AS DOUBLE) AS adist
-        FROM spracodes k
-        JOIN probes p USING (cell)
-        JOIN qlut l ON l.q_id = p.q_id AND l.cell = k.cell
-                   AND l.sub = k.sub AND l.cid = k.cid
-        WHERE k.vec_id <> p.q_id
-        GROUP BY p.q_id, k.vec_id, k.cell
-      ), adists AS (
+      ),
+      $disjointQueriesQeSql,
+      ${probeCellsSql(s"ssims WHERE $disjointQueriesSql", 16)},
+      ${residualAdcSql("spcentn", "spracodes", by = ", k.cell", name = "cop")}, adists AS (
         SELECT q_id, vec_id, MIN(adist) AS adist FROM cop GROUP BY q_id, vec_id
-      ), shortlist AS (
-        SELECT q_id, vec_id FROM (
-          SELECT q_id, vec_id,
-            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS srn
-          FROM adists)
-        WHERE srn <= 20
-      ), refined AS (
-        SELECT s.q_id, s.vec_id,
-          ${roundedL2Sql("a.emb", "q.q_emb")} AS d2
-        FROM shortlist s
-        JOIN (SELECT vec_id, emb FROM sassign WHERE crank = 1) a
-          ON a.vec_id = s.vec_id
-        JOIN qe q ON q.q_id = s.q_id
-      )
-      SELECT q_id, vec_id, d2, rn FROM (
-        SELECT q_id, vec_id, d2,
-          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS rn
-        FROM refined)
-      WHERE rn <= 3
-      ORDER BY q_id, rn
+      ), ${exactRefineSql("(SELECT vec_id, emb FROM sassign WHERE crank = 1) a", "a")}
     """.trim))
 
   def qs: Seq[Q] = Seq(

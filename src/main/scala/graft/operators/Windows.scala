@@ -44,6 +44,20 @@ object Windows extends QueryModule {
     monthlyCache.getOrCompute(fresh)(f => graft.Checkpoints.cut(f.coalesce(1)))
   }
 
+  /** The `monthly` CTE: [[nationMonthlyRevenue]] in DuckDB. `narrow`
+    * casts rev to that decimal type; empty keeps the raw sum.
+    */
+  private def nationMonthlySql(narrow: String): String = {
+    val rev = if (narrow.isEmpty) OracleSql.revenue else s"CAST(${OracleSql.revenue} AS $narrow)"
+    s"""monthly AS (
+        SELECT s_nationkey,
+          year(l_shipdate) * 12 + month(l_shipdate) AS mi,
+          $rev AS rev
+        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        GROUP BY 1, 2
+      )"""
+  }
+
   /** Bench hook: build (and clock) the shared monthly-revenue table
     * outside any individual window query's timer (the shared-stage
     * discipline the text/vector/graph families follow). */
@@ -331,14 +345,7 @@ object Windows extends QueryModule {
         .select($"p_partkey", $"p_size", $"band_revenue")
         .orderBy($"p_partkey")
     },
-    Some("""
-      SELECT p_partkey, p_size,
-        CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2)))
-          OVER (ORDER BY p_size
-                RANGE BETWEEN 5 PRECEDING AND 5 FOLLOWING) AS DOUBLE) AS band_revenue
-      FROM part
-      ORDER BY p_partkey
-    """.trim))
+    winRangeFrame.oracle)
 
   /** IGNORE NULLS navigation: previous / next / first non-null purchase
     * value per user — the sparse-event carry-forward pattern (sessionized
@@ -679,14 +686,7 @@ object Windows extends QueryModule {
             .cast(DecimalType(18, 6)).as("bal_prnk"))
         .orderBy($"c_custkey")
     },
-    Some("""
-      SELECT c_custkey, c_mktsegment, c_acctbal,
-        CAST(CAST(CUME_DIST() OVER w AS DECIMAL(18,6)) AS DOUBLE) AS bal_cume,
-        CAST(CAST(PERCENT_RANK() OVER w AS DECIMAL(18,6)) AS DOUBLE) AS bal_prnk
-      FROM customer
-      WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal)
-      ORDER BY c_custkey
-    """.trim))
+    winCumeDist.oracle)
 
   /** `nth_value` — the navigation-family member first/last/lag/lead
     * leave out: each customer's 3rd-cheapest order value, NULL where
@@ -817,19 +817,7 @@ object Windows extends QueryModule {
           max(dec($"c_acctbal")).cast(DoubleType).as("max_bal"))
         .orderBy($"c_mktsegment", $"tile")
     },
-    Some("""
-      SELECT c_mktsegment, tile, COUNT(*) AS n,
-        CAST(MIN(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS min_bal,
-        CAST(MAX(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS max_bal
-      FROM (
-        SELECT c_mktsegment, c_acctbal,
-          ntile(4) OVER (PARTITION BY c_mktsegment
-                         ORDER BY c_acctbal, c_custkey) AS tile
-        FROM customer
-      )
-      GROUP BY c_mktsegment, tile
-      ORDER BY c_mktsegment, tile
-    """.trim))
+    winNtileBuckets.oracle)
 
   /** Exponentially weighted moving average with DYADIC decay (alpha =
     * 1/2, one-event half-life) over each user's trailing 8 events —
@@ -1312,13 +1300,7 @@ object Windows extends QueryModule {
         .orderBy($"n_name", $"mi")
     },
     Some(s"""
-      WITH monthly AS (
-        SELECT s_nationkey,
-          year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          ${OracleSql.revenue} AS rev
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY 1, 2
-      ), d AS (
+      WITH ${nationMonthlySql("")}, d AS (
         SELECT s_nationkey, mi,
           CAST(rev - LAG(rev) OVER w AS DECIMAL(28,4)) AS delta
         FROM monthly
@@ -1463,13 +1445,7 @@ object Windows extends QueryModule {
         .orderBy($"n_name", $"mi")
     },
     Some(s"""
-      WITH monthly AS (
-        SELECT s_nationkey,
-          year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY 1, 2
-      ), a AS (
+      WITH ${nationMonthlySql("DECIMAL(18,4)")}, a AS (
         SELECT s_nationkey, mi, rev,
           COUNT(*) OVER wf AS nf,
           ROUND(CAST(CAST(SUM(rev) OVER wf AS DECIMAL(18,4)) AS DOUBLE) / 6, 6) AS m
@@ -1548,13 +1524,7 @@ object Windows extends QueryModule {
         .orderBy($"n_name", $"mi")
     },
     Some(s"""
-      WITH monthly AS (
-        SELECT s_nationkey,
-          year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY 1, 2
-      ), a AS (
+      WITH ${nationMonthlySql("DECIMAL(18,4)")}, a AS (
         SELECT s_nationkey, mi,
           COUNT(*) OVER w9 AS n9,
           ROUND(CAST(CAST(SUM(rev) OVER w3 AS DECIMAL(18,4)) AS DOUBLE) / 3, 6) AS fast,
@@ -1636,13 +1606,7 @@ object Windows extends QueryModule {
         .orderBy($"n_name", $"mi")
     },
     Some(s"""
-      WITH monthly AS (
-        SELECT s_nationkey,
-          year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          CAST(${OracleSql.revenue} AS DECIMAL(18,4)) AS rev
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY 1, 2
-      ), a AS (
+      WITH ${nationMonthlySql("DECIMAL(18,4)")}, a AS (
         SELECT s_nationkey, mi, rev,
           COUNT(*) OVER wf AS nf,
           MIN(rev) OVER wf AS lo,
@@ -2063,13 +2027,7 @@ object Windows extends QueryModule {
         .orderBy($"n_name")
     },
     Some(s"""
-      WITH monthly AS (
-        SELECT s_nationkey,
-          year(l_shipdate) * 12 + month(l_shipdate) AS mi,
-          ${OracleSql.revenue} AS rev
-        FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY 1, 2
-      ), pairs AS (
+      WITH ${nationMonthlySql("")}, pairs AS (
         SELECT a.s_nationkey,
           ROUND(CAST(b.rev - a.rev AS DOUBLE) / (b.mi - a.mi), 6) AS slope
         FROM monthly a JOIN monthly b

@@ -156,6 +156,61 @@ class GraphDriverLoopSpec extends SparkSpecBase {
     assert(math.abs(mass - 1.0) < 1e-4, s"rank mass $mass leaked")
   }
 
+  test("label propagation orders tied labels naturally on string node keys") {
+    import spark.implicits._
+    // a copy of the fixture whose nation keys are strings ("10" sorts
+    // before "2", and a numeric cast of a label throws) and whose line
+    // items all have unit net price, so every trade weight is a small
+    // line count and tied votes are common
+    val dirty = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(scratchPath("string_nation")))
+    val rewrite: Map[String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Map(
+      "nation" -> (_.withColumn("n_nationkey", $"n_nationkey".cast("string"))),
+      "supplier" -> (_.withColumn("s_nationkey", $"s_nationkey".cast("string"))),
+      "customer" -> (_.withColumn("c_nationkey", $"c_nationkey".cast("string"))),
+      "lineitem" -> (_.withColumn("l_extendedprice", lit(1.0)).withColumn("l_discount", lit(0.0))))
+    for (t <- Tables.names) rewrite.get(t) match {
+      case Some(f) =>
+        f(Tables.table(spark, sfDir, t)).write.parquet(dirty.resolve(s"$t.parquet").toString)
+      case None =>
+        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+          dirty.resolve(s"$t.parquet"))
+    }
+    val dir = dirty.toString
+    // independent re-derivation: three synchronous rounds over the top-3
+    // backbone, each node taking the label of row_number 1 over
+    // (vote weight desc, label asc); a node without votes keeps its label
+    val e0 = operators.Flagships.nationTradeEdges(spark, dir)
+    val sym = e0.select($"src".as("a"), $"dst".as("b"), $"wgt")
+      .unionAll(e0.select($"dst".as("a"), $"src".as("b"), $"wgt"))
+      .where($"a" =!= $"b")
+      .groupBy($"a", $"b")
+      .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("w"))
+      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy($"a").orderBy($"w".desc, $"b")))
+      .where($"rn" <= 3)
+    val byVote = org.apache.spark.sql.expressions.Window
+      .partitionBy($"node").orderBy($"vw".desc, $"lab")
+    val lab3 = (1 to 3).foldLeft(Tables.nation(spark, dir)
+        .select($"n_nationkey".as("node"), $"n_nationkey".as("lab"))) { (lab, _) =>
+      val won = sym.join(lab, $"b" === $"node")
+        .groupBy($"a".as("node"), $"lab").agg(sum($"w").as("vw"))
+        .withColumn("rn", row_number().over(byVote))
+        .where($"rn" === 1)
+        .select($"node", $"lab".as("won"))
+      lab.join(won, Seq("node"), "left")
+        .select($"node", coalesce($"won", $"lab").as("lab"))
+    }.as[(String, String)].collect().toMap
+    val sizes = lab3.values.groupBy(identity).map { case (l, g) => (l, g.size.toLong) }
+    val rows = SparkEntry.queries("graph_label_propagation")(spark, dir)
+      .select($"n_nationkey", $"community", $"community_size")
+      .as[(String, String, Long)].collect().toSeq
+    assert(rows.length == 25, s"expected 25 nations, got ${rows.length}")
+    assert(rows.map(r => r._1 -> r._2).toMap == lab3,
+      s"declared ${rows.map(r => r._1 -> r._2)} vs re-derived $lab3")
+    rows.foreach(r => assert(r._3 == sizes(r._2), s"community ${r._2} size ${r._3}"))
+  }
+
   test("DriverRound equals Spark round() on ordinary, tie and non-finite doubles") {
     import spark.implicits._
     val xs = Seq(0.0, -0.0, 1.0 / 3, -2.5e-10, 0.1234567895, -0.1234567895, 2.675,

@@ -27,4 +27,13 @@ class ScratchRootSpec extends SparkSpecBase {
         s"files outside $root: ${written.filterNot(_.startsWith(root)).take(3)}")
     }
   }
+
+  test("the JDBC roundtrip leaves no derby.log in the working directory") {
+    // whole seconds: a coarse file clock must not hide a fresh write
+    val start = System.currentTimeMillis() / 1000 * 1000
+    SparkEntry.queries("sink_jdbc_roundtrip")(spark, sfDir).collect()
+    val log = new java.io.File(System.getProperty("user.dir"), "derby.log")
+    assert(!log.exists || log.lastModified < start,
+      s"${log.getAbsolutePath} written during the run")
+  }
 }

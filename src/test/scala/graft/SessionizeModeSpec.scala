@@ -134,6 +134,15 @@ class SessionizeModeSpec extends SparkSpecBase {
     assert(m((4L, 2L)) == (("purchase", None, true)))
   }
 
+  test("join_pit_scd2_bucketed serves exactly the rows of the in-plan join_pit_scd2") {
+    // the persisted dim/fact must hold what the in-plan recipe derives
+    val inPlan = operators.Joins.joinPitScd2.fn(spark, sfDir).collect().toSeq
+    val served = operators.Joins.joinPitScd2Bucketed.fn(spark, sfDir).collect().toSeq
+    assert(inPlan.nonEmpty)
+    assert(served == inPlan, s"served ${served.length} rows vs in-plan ${inPlan.length}; " +
+      s"first difference: ${served.zipAll(inPlan, null, null).find(p => p._1 != p._2)}")
+  }
+
   test("agg_mode_freq matches a Scala recompute with lowest-value tiebreak") {
     import spark.implicits._
     val expected = rawEvents
