@@ -27,15 +27,16 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 object EtlOps extends QueryModule {
 
   /** The one SCD2 versioning recipe (gaps-and-islands), written once
-    * per engine: [[scd2RunStarts]] keeps the rows of an event frame that
+    * per engine. [[scd2RunStarts]] keeps the rows of an event frame that
     * start a run of equal event_type per user, (ts, event_id)-ordered;
     * [[scd2]] numbers those runs into versions with valid_from/valid_to
-    * chained and the open interval flagged. `etl_scd2_intervals`,
-    * `etl_scd2_apply_merge` (whose correctness statement is that the
-    * incremental apply EQUALS this from-scratch derivation; its batch
-    * dedup is [[scd2RunStarts]]), `join_pit_scd2` and the persisted
-    * [[Scd2Dim]] all derive their versions here. The oracle side is
-    * [[scd2ChangesSql]] plus [[scd2VersionsSql]].
+    * chained and the open interval flagged, naming user_id and
+    * event_type `user` and `regime` in the window's own projection.
+    * `etl_scd2_intervals`, `etl_scd2_apply_merge` (whose correctness
+    * statement is that the incremental apply EQUALS this from-scratch
+    * derivation; its batch dedup is [[scd2RunStarts]]), `join_pit_scd2`
+    * and the persisted [[Scd2Dim]] all derive their versions here. The
+    * oracle side is [[scd2ChangesSql]] plus [[scd2VersionsSql]].
     */
   private val scd2Order = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
 
@@ -44,11 +45,12 @@ object EtlOps extends QueryModule {
       .withColumn("prev_type", lag(col("event_type"), 1).over(scd2Order))
       .where(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
 
-  private[graft] def scd2(ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[graft] def scd2(ev: org.apache.spark.sql.DataFrame, user: String = "user_id",
+      regime: String = "event_type"): org.apache.spark.sql.DataFrame =
     scd2RunStarts(ev).select(
-      col("user_id"),
+      col("user_id").as(user),
       row_number().over(scd2Order).cast("long").as("version"),
-      col("event_type"),
+      col("event_type").as(regime),
       col("ts").as("valid_from"),
       lead(col("ts"), 1).over(scd2Order).as("valid_to"),
       lead(col("ts"), 1).over(scd2Order).isNull.as("is_current"))

@@ -47,8 +47,7 @@ object Scd2Dim {
     * in-plan; [[ensure]] persists them.
     */
   def frames(ev: DataFrame): (DataFrame, DataFrame) = {
-    val versions = EtlOps.scd2(ev).select(col("user_id").as("v_user"), col("version"),
-      col("event_type").as("regime"), col("valid_from"), col("valid_to"))
+    val versions = EtlOps.scd2(ev, "v_user", "regime").drop("is_current")
     val purchases = ev
       .where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
