@@ -66,8 +66,8 @@ object EtlOps extends QueryModule {
       )"""
 
   /** The version select over `changes`, as [[scd2]] numbers it. `user`
-    * and `regime` alias user_id and event_type (empty keeps the name);
-    * `more` appends select items after valid_to.
+    * and `regime` follow user_id and event_type (" AS v_user" renames,
+    * "" keeps the name); `more` appends select items after valid_to.
     */
   private[graft] def scd2VersionsSql(user: String, regime: String, more: String): String =
     s"""SELECT user_id$user,

@@ -800,8 +800,9 @@ object VectorOps extends QueryModule {
   /** The SQL twin of [[residualAdc]] over `probes(q_id, cell, …)` and
     * `qe(q_id, q_emb)`: `qres`/`qsl`/`qlut`, each probed cell's query
     * residual against the `cents` centroids looked up in `rpqcb`, then
-    * `name(q_id, vec_id, <by>, adist)` summed over the `codes` rows of
-    * the probed cells that pass `where`.
+    * `name(q_id, vec_id, …, adist)` summed over the `codes` rows of the
+    * probed cells. `by` (", p.cr") extends the select and group keys;
+    * `where` (" AND …") extends the filter.
     */
   private def residualAdcSql(cents: String, codes: String, by: String = "",
       where: String = "", name: String = "adists"): String = s"""qres AS (
