@@ -20,7 +20,7 @@ object Bench {
   /** Steal-defended measurement: on a shared host, co-tenant hypervisor
     * steal can dominate a bench sample (1596.6 of 1897.7 s in one
     * measured run). The bench defends itself: the per-query
-    * loop runs up to [[DefaultPasses]] passes and keeps the per-query MIN
+    * loop runs up to [[MaxPasses]] passes and keeps the per-query MIN
     * across passes — the contention signature is a flat band plus random
     * per-query bursts, so the min across independent passes converges on
     * the engine's own time. Provenance is emitted per pass (wall, steal,
@@ -28,11 +28,10 @@ object Bench {
     * alone is kept when its steal fraction is below [[QuietStealFrac]]
     * (the committed-quiet protocol — a single pass on a quiet host), and a
     * new pass never starts once it would push the bench past
-    * [[DefaultBudgetS]] wall seconds (the driver's patience is finite). Both
-    * knobs are env-overridable.
+    * [[BudgetS]] wall seconds (the driver's patience is finite).
     */
-  private val DefaultPasses = 3
-  private val DefaultBudgetS = 4200.0
+  private val MaxPasses = 3
+  private val BudgetS = 4200.0
   private val QuietStealFrac = 0.03
 
   /** Cumulative hypervisor steal seconds from /proc/stat (field 8, USER_HZ
@@ -63,10 +62,6 @@ object Bench {
                  catch { case _: Throwable => false }
         (name, (System.nanoTime() - t0) / 1e9, ok)
       }
-    val maxPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .flatMap(_.toIntOption).getOrElse(DefaultPasses).max(1)
-    val budgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
-      .flatMap(_.toDoubleOption).getOrElse(DefaultBudgetS)
     val benchT0 = System.nanoTime()
     var passes = List.empty[(Seq[(String, Double, Boolean)], Double, Double)]
     var done = false
@@ -82,9 +77,9 @@ object Bench {
       // quiet threshold still showed isolated multi-second bursts on
       // single queries — in-guest contention the steal counter cannot
       // see; one extra pass prices the min for every query)
-      done = passes.size >= maxPasses ||
+      done = passes.size >= MaxPasses ||
         (passes.size == 2 && pSteal / pWall.max(1e-9) < QuietStealFrac) ||
-        elapsed + pWall > budgetS
+        elapsed + pWall > BudgetS
     }
     // keep the per-query MIN across passes; ok only when every pass of
     // the query succeeded (a retried failure must never look clean)

@@ -2,8 +2,9 @@ package graft
 
 import java.math.{BigDecimal => JBD, RoundingMode}
 
-/** Spark's double rounding on the driver, for the loops that replicate
-  * a plan's arithmetic bit-for-bit (pagerank, markov, power iteration).
+/** Spark's double rounding outside a plan, for the code that replicates
+  * a plan's arithmetic bit-for-bit: the driver loops (pagerank, markov,
+  * power iteration, MMR) and the NearestCentroid kernels' round₆.
   * `JBD.valueOf` is Double.toString-based — the same entry point Spark's
   * `Round` takes on DoubleType.
   */

@@ -24,13 +24,15 @@ import org.apache.spark.sql.functions._
   * without spilling (constraint too loose — a probe bug, not a pass).
   */
 object SpillProbe {
+  private val fixtures = "/root/testdata"
+  private val sfDir = s"$fixtures/sf0.1"
+  // documents come from the smaller SF: identical ×8 copies square the
+  // shingle-join fanout (64×), so the small corpus already carries an
+  // aggregation state far past the memory cap
+  private val docsDir = s"$fixtures/sf0.01"
+  private val dup = 8
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    // documents come from the smaller SF: identical ×8 copies square the
-    // shingle-join fanout (64×), so the small corpus already carries an
-    // aggregation state far past the memory cap
-    val docsDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val dup = if (args.length > 2) args(2).toInt else 8
     val spark = Harness.session(Harness.builder(4)
       .config("spark.sql.shuffle.partitions", "16")
       // 64 MiB of execution+storage for a workload whose per-task

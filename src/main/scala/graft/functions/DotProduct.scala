@@ -67,13 +67,6 @@ case class DotProduct(left: Expression, right: Expression)
 /** Column-API and SQL registration for the engine's native functions. */
 object GraftFunctions {
 
-  /** Spark's `Round(_, 6)` on doubles, as a plain function — for
-    * driver-side replication of bounded per-row algebra (r13: the
-    * k-bounded greedy loops). HALF_UP via BigDecimal, NaN/∞ passthrough —
-    * bit-identical to the SQL `round(x, 6)` every mirror computes.
-    */
-  def round6(x: Double): Double = NearestCentroid.round6(x)
-
   /** `graft_dot(a, b)` as a Column — usable anywhere a built-in is. */
   def dot(a: Column, b: Column): Column =
     Bridge.column(DotProduct(

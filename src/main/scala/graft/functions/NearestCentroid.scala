@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   *  - L2: d2 = round₆(‖a‖² − 2a·c + ‖c‖²) with ‖a‖² evaluated once per
   *    row and ‖c‖² read from the codebook column, ranked by
   *    `Double.compare` then ascending id.
-  *  round₆ replicates Spark's `Round(_, 6)` on doubles exactly:
-  *  `BigDecimal.valueOf(x).setScale(6, HALF_UP)` with NaN/∞ passthrough.
+  *  round₆ is [[graft.DriverRound]]`(_, 6)`, Spark's `Round(_, 6)` on
+  *  doubles exactly (HALF_UP, NaN/∞ passthrough).
   *
   * The codebook child MUST be a broadcast-stable array (one physical
   * buffer per partition): decode of the struct array into primitive
@@ -38,11 +38,6 @@ import org.apache.spark.sql.types._
   * private to the engine ([[graft.operators.VectorOps]] call sites).
   */
 object NearestCentroid {
-  private[functions] def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   private[functions] def dot(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var s = 0.0
@@ -186,7 +181,7 @@ case class NearestCellsTopK(emb: Expression, nrm: Expression, cb: Expression,
     var i = 0
     while (i < m) {
       val sim = NearestCentroid.dot(x, vecs(i)) / (xn * aux(i))
-      val neg = -(if (rounded) NearestCentroid.round6(sim) else sim)
+      val neg = -(if (rounded) graft.DriverRound(sim, 6) else sim)
       // find insertion position among the filled prefix
       var pos = filled
       while (pos > 0 && {
@@ -246,8 +241,8 @@ case class NearestCentroidL2(emb: Expression, cb: Expression)
     var bestI = -1
     var i = 0
     while (i < m) {
-      val d2 = NearestCentroid.round6(
-        dee - 2.0 * NearestCentroid.dot(x, vecs(i)) + aux(i))
+      val d2 = graft.DriverRound(
+        dee - 2.0 * NearestCentroid.dot(x, vecs(i)) + aux(i), 6)
       if (bestI < 0 || {
         val cmp = java.lang.Double.compare(d2, bestD2)
         cmp < 0 || (cmp == 0 && idKeys(i) < idKeys(bestI))
@@ -333,7 +328,7 @@ case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
         var s = 0.0
         var j = 0
         while (j < n) { s += x(off + j) * cv(j); j += 1 }
-        val d2 = NearestCentroid.round6(dss - 2.0 * s + aux(i))
+        val d2 = graft.DriverRound(dss - 2.0 * s + aux(i), 6)
         if (bestI < 0 || {
           val cmp = java.lang.Double.compare(d2, bestD2)
           cmp < 0 || (cmp == 0 && idKeys(i) < idKeys(bestI))
@@ -408,7 +403,7 @@ case class PqLutAll(qr: Expression, cb: Expression, m: Int, w: Int, k: Int)
         while (j < nn) { s += x(off + j) * cv(j); j += 1 }
         val slot = sb * k + idKeys(i).toInt
         if (slot >= 0 && slot < out.length)
-          out(slot) = NearestCentroid.round6(dss(sb) - 2.0 * s + aux(i))
+          out(slot) = graft.DriverRound(dss(sb) - 2.0 * s + aux(i), 6)
       }
       i += 1
     }

@@ -1983,17 +1983,15 @@ object Aggregations extends QueryModule {
         .agg(count(lit(1)).as("c"))
         .repartition(1)
         .transform(graft.Checkpoints.cut)
-      // DRIVER-SIDE power rounds: the checkpointed cell table is k×(k+1)
-      // rows (k = event-type vocabulary — the bounded-table assumption
-      // the repartition(1) above already makes), while an unrolled join
-      // chain costs 12 Spark jobs and a 73 kB plan for a 5-row answer. The
-      // cells are collected once; each round replicates the Spark expressions
-      // operation-for-operation — row-normalized p = round(c/Σc, 9),
-      // contribution round(p·pr, 12) HALF_UP summed as exact scale-12
-      // decimals, π' = round(Σ, 9), absorbing states coalesce to 0.0 — and
-      // the iterate returns as a local relation; the empirical-share join
-      // below is unchanged.
-      val cellRows: Seq[(String, String, Long)] = cells.collect().toSeq
+      // Power rounds on the driver ([[graft.DriverLoop]]): the cell table
+      // is k×(k+1) rows (k = event-type vocabulary, the bound the
+      // repartition(1) above already assumes), where an unrolled join
+      // chain cost 12 Spark jobs and a 73 kB plan. Each round replicates
+      // the Spark expressions operation-for-operation — row-normalized
+      // p = round(c/Σc, 9), contribution round(p·pr, 12) HALF_UP summed
+      // as exact scale-12 decimals, π' = round(Σ, 9), absorbing states
+      // coalesce to 0.0.
+      val cellRows: Seq[(String, String, Long)] = graft.DriverLoop.collect(cells, "markov cells").toSeq
         .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getString(1), r.getLong(2)))
       val rowSums = cellRows.filter(_._2 != null).groupBy(_._1)
         .map { case (cur, rs) => (cur, rs.map(_._3).sum) }
@@ -2008,13 +2006,10 @@ object Aggregations extends QueryModule {
         piP = statesP.map(t =>
           (t, sums.get(t).map(s => graft.DriverRound(s.doubleValue, 9)).getOrElse(0.0))).toMap
       }
-      import scala.jdk.CollectionConverters._
-      val pi = spark.createDataFrame(
-        piP.toSeq.map { case (t, p) => org.apache.spark.sql.Row(t, p) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("t",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pr", DoubleType))))
+      val pi = graft.DriverLoop.frame(spark,
+        new org.apache.spark.sql.types.StructType()
+          .add("t", org.apache.spark.sql.types.StringType).add("pr", DoubleType),
+        piP.toSeq.map { case (t, p) => org.apache.spark.sql.Row(t, p) })
       val emp = cells.groupBy($"cur".as("t")).agg(sum($"c").as("n"))
       val tot = emp.agg(sum($"n").as("total"))
       pi

@@ -878,13 +878,13 @@ object EtlOps extends QueryModule {
       val freq = Tables.events(spark, dir)
         .groupBy($"user_id").agg(count(lit(1)).as("n"))
       // freq-of-freq: bounded by DISTINCT per-key counts — tiny at any
-      // scale. localCheckpoint so the seven metric branches below read
+      // scale. Checkpointed so the seven metric branches below read
       // this table, not seven re-executions of the corpus agg.
       val cum = freq.groupBy($"n").agg(count(lit(1)).as("nk"))
         .withColumn("cum",
           sum($"nk").over(Window.orderBy($"n")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .localCheckpoint()
+        .transform(graft.Checkpoints.cut)
       val stats = cum.agg(
         sum($"nk").as("n_keys"),
         sum($"n" * $"nk").as("n_rows"),

@@ -1,10 +1,11 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{DriverLoop, Q, QueryModule, Tables}
 import graft.Tables.dec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** SURVEY.md §2.1.L — composed analytical pipelines: TPC-H-shaped
   * multi-join queries adapted to this corpus's columns (the fixtures
@@ -808,7 +809,7 @@ object Flagships extends QueryModule {
   /** Directed nation-level trade edges (src nation → dst nation, exact
     * decimal revenue weight) — the ONE fact-scale stage every graph-family
     * query (PageRank, LPA, k-core, Adamic–Adar) starts from, memoized per
-    * corpus and localCheckpointed at its bounded ≤ n² size (the same
+    * corpus and cut ([[graft.Checkpoints]]) at its bounded ≤ n² size (the same
     * shared-stage discipline as the shingle/codebook/kNN caches; Bench
     * clocks the build on the shared-stage line, not whichever graph query
     * runs first).
@@ -827,7 +828,7 @@ object Flagships extends QueryModule {
         $"o_custkey" === $"c_custkey")
       .groupBy($"src", $"dst")
       .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("wgt"))
-    edgeCache.getOrCompute(fresh)(_.coalesce(1).localCheckpoint(true))
+    edgeCache.getOrCompute(fresh)(f => graft.Checkpoints.cut(f.coalesce(1)))
   }
 
   /** The DuckDB twin of [[nationTradeEdges]], as the CTE `name(src, dst,
@@ -978,7 +979,7 @@ object Flagships extends QueryModule {
       import spark.implicits._
       val w = org.apache.spark.sql.expressions.Window.partitionBy($"src")
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
-      val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
+      val nodeIds: Seq[Any] = DriverLoop.collect(nodes.select($"node"), "nation nodes").toSeq.map(_.get(0))
       // an edge with an endpoint missing from `nation` is dropped BEFORE
       // the out-weight shares and the dangling test, so no round sends
       // rank mass to a node that cannot hold it
@@ -986,21 +987,16 @@ object Flagships extends QueryModule {
         .where($"src".isin(nodeIds: _*) && $"dst".isin(nodeIds: _*))
         .select($"src", $"dst",
           ($"wgt".cast(DoubleType) / sum($"wgt").over(w).cast(DoubleType)).as("ratio"))
-      // DRIVER-SIDE power iteration: the ratio table is ≤ nation² rows
-      // and the iterate ≤ nations rows BY CONSTRUCTION, while an unrolled
-      // window-over-join lineage costs 29 Spark jobs (checkpoints,
-      // broadcast builds, the mid-point cut) for a 25-row answer. The
-      // out-weight ratios (exact-decimal division, computed in Spark)
-      // and node list are
-      // collected ONCE; each round replicates the Spark arithmetic
-      // bit-for-bit — contribution = round(pr·ratio, 9) HALF_UP (the
-      // round6 recipe at 9 dp), summed as exact scale-9 BigDecimals
+      // Power iteration on the driver ([[graft.DriverLoop]]): the ratio
+      // table is ≤ nation² rows, where an unrolled window-over-join
+      // lineage cost 29 Spark jobs for a 25-row answer. Each round
+      // replicates the Spark arithmetic bit-for-bit — contribution =
+      // round(pr·ratio, 9) HALF_UP summed as exact scale-9 BigDecimals
       // (the DECIMAL(28,9) sum), dangling mass cast the same way, and
       // pr' = round(0.15/n + 0.85·(s + dm/n), 9) in the identical
-      // expression order. The iterate returns as a LocalTableScan and
-      // the name join / 6 dp output below is unchanged Spark.
+      // expression order.
       val edgeP: Seq[(Any, Any, Double)] =
-        edges.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDouble(2)))
+        DriverLoop.collect(edges, "pagerank ratios").toSeq.map(r => (r.get(0), r.get(1), r.getDouble(2)))
       val nnD = nodeIds.size.toDouble
       val srcSet: Set[Any] = edgeP.map(_._1).toSet
       var prP: Map[Any, Double] = nodeIds.map(n => (n, 1.0 / nnD)).toMap
@@ -1017,12 +1013,9 @@ object Flagships extends QueryModule {
         prP = nodeIds.map(n =>
           (n, graft.DriverRound(0.15 / nnD + 0.85 * (s(n).doubleValue + dm / nnD), 9))).toMap
       }
-      import scala.jdk.CollectionConverters._
-      val pr = spark.createDataFrame(
-        prP.toSeq.map { case (n, p) => org.apache.spark.sql.Row(n, p) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodes.schema("node").dataType),
-          org.apache.spark.sql.types.StructField("pr", DoubleType))))
+      val pr = DriverLoop.frame(spark,
+        new StructType().add("node", nodes.schema("node").dataType).add("pr", DoubleType),
+        prP.toSeq.map { case (n, p) => Row(n, p) })
       pr.join(broadcast(nodes), "node")
         .select($"node".as("n_nationkey"), $"n_name", round($"pr", 6).as("pagerank"))
         .orderBy($"pagerank".desc, $"n_nationkey")
@@ -1096,19 +1089,16 @@ object Flagships extends QueryModule {
       // is where bloc structure lives
       val sym = topPartners(spark, dir, org.apache.spark.sql.types.DecimalType(28, 2))
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
-      // DRIVER-SIDE synchronous LPA rounds: the backbone is ≤ 3·nations
-      // edges and the label table ≤ nations rows BY CONSTRUCTION, while a
-      // per-round checkpoint loop costs 35 Spark jobs for a 25-row answer. The backbone
-      // (aggregated/thinned in Spark, decimal arithmetic unchanged) and
-      // the node list are collected ONCE; vote sums add the exact
+      // Synchronous LPA rounds on the driver ([[graft.DriverLoop]]): the
+      // backbone is ≤ 3·nations edges, where a per-round checkpoint loop
+      // cost 35 Spark jobs for a 25-row answer. Vote sums add the exact
       // scale-2 decimals (BigDecimal.add — order-independent), the
-      // argmax replicates the (vw desc, lab asc) row_number tiebreak
-      // via compareTo, isolated nodes keep their label (the left-join
-      // coalesce); labels return as a LocalTableScan and the
-      // size/name join below is unchanged Spark.
+      // argmax replicates the (vw desc, lab asc) row_number tiebreak via
+      // compareTo, and isolated nodes keep their label (the left-join
+      // coalesce).
       val symP: Seq[(Any, Any, java.math.BigDecimal)] =
-        sym.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDecimal(2)))
-      val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
+        DriverLoop.collect(sym, "lpa backbone").toSeq.map(r => (r.get(0), r.get(1), r.getDecimal(2)))
+      val nodeIds: Seq[Any] = DriverLoop.collect(nodes.select($"node"), "nation nodes").toSeq.map(_.get(0))
       var labP: Map[Any, Any] = nodeIds.map(n => (n, n)).toMap
       for (_ <- 1 to 3) {
         val votes = symP
@@ -1129,12 +1119,10 @@ object Flagships extends QueryModule {
         }
         labP = labP.map { case (n, old) => (n, newLab.getOrElse(n, old)) }
       }
-      import scala.jdk.CollectionConverters._
-      val lab = spark.createDataFrame(
-        labP.toSeq.map { case (n, l) => org.apache.spark.sql.Row(n, l) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodes.schema("node").dataType),
-          org.apache.spark.sql.types.StructField("lab", nodes.schema("node").dataType))))
+      val lab = DriverLoop.frame(spark,
+        new StructType().add("node", nodes.schema("node").dataType)
+          .add("lab", nodes.schema("node").dataType),
+        labP.toSeq.map { case (n, l) => Row(n, l) })
       val sizes = lab.groupBy($"lab").agg(count(lit(1)).as("community_size"))
       lab.join(broadcast(nodes), "node")
         .join(broadcast(sizes), "lab")
@@ -1214,28 +1202,22 @@ object Flagships extends QueryModule {
       val live0 = und.crossJoin(broadcast(thr))
         .where($"w".cast(DoubleType) >= $"t")
         .select($"u", $"v")
-      // DRIVER-SIDE peeling: live0 is ≤ nation² rows BY CONSTRUCTION
-      // (nation is the bounded 25-row dimension), while a per-round
-      // checkpoint loop costs 5 eager jobs + 4 broadcast builds for pure
-      // integer degree-counting — 25 Spark jobs for a 15-row answer. The
-      // strong-edge table (built and thresholded in Spark, all decimal
-      // arithmetic unchanged) is collected ONCE; peeling is exact integer set
-      // logic replicating the unionAll/groupBy/count ≥ k/semi-join rounds
-      // verbatim; the survivor pairs return as a LocalTableScan with the
-      // identical schema and the output aggregation below is unchanged Spark.
+      // Peeling on the driver ([[graft.DriverLoop]]): live0 is ≤ nation²
+      // rows, where a per-round checkpoint loop cost 25 Spark jobs of
+      // integer degree-counting for a 15-row answer. Peeling is exact
+      // integer set logic replicating the unionAll/groupBy/count ≥
+      // k/semi-join rounds; the survivors keep live0's schema.
       val liveSchema = live0.schema
       var liveP: Seq[(Any, Any)] =
-        live0.collect().toSeq.map(r => (r.get(0), r.get(1)))
+        DriverLoop.collect(live0, "k-core strong edges").toSeq.map(r => (r.get(0), r.get(1)))
       for (_ <- 1 to 4) {
         val deg = (liveP.map(_._1) ++ liveP.map(_._2))
           .groupBy(identity).map { case (n, g) => (n, g.size) }
         val keep = deg.collect { case (n, d) if d >= k => n }.toSet
         liveP = liveP.filter(p => keep(p._1) && keep(p._2))
       }
-      import scala.jdk.CollectionConverters._
-      val live = spark.createDataFrame(
-        liveP.map { case (u, v) => org.apache.spark.sql.Row(u, v) }.asJava,
-        liveSchema)
+      val live = DriverLoop.frame(spark, liveSchema,
+        liveP.map { case (u, v) => Row(u, v) })
       val coreDeg = live.select($"u".as("node")).unionAll(live.select($"v".as("node")))
         .groupBy($"node").agg(count(lit(1)).as("core_degree"))
       val nodes = Tables.nation(spark, dir).select($"n_nationkey", $"n_name")
@@ -1493,32 +1475,17 @@ object Flagships extends QueryModule {
       import spark.implicits._
       val sym = topPartners(spark, dir, org.apache.spark.sql.types.DecimalType(28, 2))
         .select($"a", $"b")
-      // DRIVER-SIDE min-plus rounds: the backbone is ≤ 3·nations
-      // directed edges BY CONSTRUCTION, while a per-round checkpoint loop
-      // costs 32 Spark jobs for a 25-row answer. The backbone (aggregated and
-      // thinned in Spark, decimal arithmetic unchanged) is collected ONCE;
-      // each round replicates the carry ∪ (extend, nxt ≠ u) → min-per-(u,v)
-      // relaxation with exact integer hop counts; the distance table returns
-      // as a LocalTableScan and the harmonic aggregation below is unchanged.
-      val symP: Seq[(Any, Any)] = sym.collect().toSeq.map(r => (r.get(0), r.get(1)))
-      val adj = symP.groupBy(_._1)
-      var distP: Map[(Any, Any), Long] =
-        symP.map { case (a, b) => ((a, b), 1L) }.toMap
-      for (_ <- 1 to 4) {
-        val ext = distP.toSeq.flatMap { case ((u, v), d) =>
-          adj.getOrElse(v, Nil).collect { case (_, nxt) if nxt != u => ((u, nxt), d + 1L) }
-        }
-        distP = (distP.toSeq ++ ext)
-          .groupBy(_._1).map { case (k2, ds) => (k2, ds.map(_._2).min) }
-      }
-      import scala.jdk.CollectionConverters._
-      val dist = spark.createDataFrame(
-        distP.toSeq.map { case ((u, v), d) => org.apache.spark.sql.Row(u, v, d) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("u", sym.schema("a").dataType),
-          org.apache.spark.sql.types.StructField("v", sym.schema("b").dataType),
-          org.apache.spark.sql.types.StructField("d",
-            org.apache.spark.sql.types.LongType))))
+      // (+, min) relaxation on the driver ([[graft.DriverLoop.relax]]) over
+      // the ≤ 3·nations backbone edges with unit weights — exact integer
+      // hop counts; a per-round checkpoint loop cost 32 Spark jobs for a
+      // 25-row answer.
+      val distP = DriverLoop.relax(
+        DriverLoop.collect(sym, "closeness backbone").toSeq.map(r => (r.get(0), r.get(1), 1L)), 4)(
+        _ + _, math.min)
+      val dist = DriverLoop.frame(spark,
+        new StructType().add("u", sym.schema("a").dataType).add("v", sym.schema("b").dataType)
+          .add("d", LongType),
+        distP.toSeq.map { case ((u, v), d) => Row(u, v, d) })
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("u"), $"n_name")
       dist
         .groupBy($"u")
@@ -1591,37 +1558,19 @@ object Flagships extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val sym = topPartners(spark, dir, org.apache.spark.sql.types.DecimalType(18, 4))
-      // DRIVER-SIDE (max, min) relaxation: the backbone is ≤ 3·nations
-      // edges BY CONSTRUCTION and the semiring only COMPARES the exact
-      // decimal weights (never adds), so a per-round checkpoint loop's 32
-      // Spark jobs would be pure scheduling. The backbone (aggregated/thinned in Spark, decimal
-      // arithmetic unchanged) is collected ONCE; each round replicates
-      // carry ∪ (extend with least) → max-per-(u,v) using
-      // BigDecimal.compareTo (Spark decimal ordering); the relax table
-      // returns as a LocalTableScan and the output block is unchanged.
-      val bdMin = (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-        if (x.compareTo(y) <= 0) x else y
-      val symP: Seq[(Any, Any, java.math.BigDecimal)] =
-        sym.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDecimal(2)))
-      val adj = symP.groupBy(_._1)
-      var bestP: Map[(Any, Any), java.math.BigDecimal] =
-        symP.map { case (a, b, w2) => ((a, b), w2) }.toMap
-      for (_ <- 1 to 4) {
-        val ext = bestP.toSeq.flatMap { case ((u, v), w2) =>
-          adj.getOrElse(v, Nil).collect {
-            case (_, nxt, w3) if nxt != u => ((u, nxt), bdMin(w2, w3)) }
-        }
-        bestP = (bestP.toSeq ++ ext)
-          .groupBy(_._1).map { case (k2, ws) => (k2, ws.map(_._2).reduce(
-            (x, y) => if (x.compareTo(y) >= 0) x else y)) }
-      }
-      import scala.jdk.CollectionConverters._
-      val best = spark.createDataFrame(
-        bestP.toSeq.map { case ((u, v), w2) => org.apache.spark.sql.Row(u, v, w2) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("u", sym.schema("a").dataType),
-          org.apache.spark.sql.types.StructField("v", sym.schema("b").dataType),
-          org.apache.spark.sql.types.StructField("w", sym.schema("w").dataType))))
+      // (min, max) relaxation on the driver ([[graft.DriverLoop.relax]])
+      // over the ≤ 3·nations backbone: the semiring only COMPARES the
+      // exact decimal weights, by BigDecimal.compareTo (Spark decimal
+      // ordering); a per-round checkpoint loop cost 32 Spark jobs.
+      val bestP = DriverLoop.relax(
+        DriverLoop.collect(sym, "bottleneck backbone").toSeq
+          .map(r => (r.get(0), r.get(1), r.getDecimal(2))), 4)(
+        (x, y) => if (x.compareTo(y) <= 0) x else y,
+        (x, y) => if (x.compareTo(y) >= 0) x else y)
+      val best = DriverLoop.frame(spark,
+        new StructType().add("u", sym.schema("a").dataType).add("v", sym.schema("b").dataType)
+          .add("w", sym.schema("w").dataType),
+        bestP.toSeq.map { case ((u, v), w2) => Row(u, v, w2) })
       val wPeer = org.apache.spark.sql.expressions.Window
         .partitionBy($"u").orderBy($"w".desc, $"v")
       val names = Tables.nation(spark, dir).select($"n_nationkey", $"n_name")

@@ -236,7 +236,8 @@ object IvfIndex {
     // unpartitioned window (Window.orderBy with no
     // partition spec funnels through a single partition and warns on
     // every apply)
-    lazy val splitCells = plan._1.select(col("cell")).collect().map(_.getLong(0)).sorted
+    lazy val splitCells = graft.DriverLoop.collect(plan._1.select(col("cell")), "ivf split cells")
+      .map(_.getLong(0)).sorted
     if (noop) {
       if (!spark.catalog.tableExists(idxT) || !spark.catalog.tableExists(cbT)) {
         ensureGen(spark, dir, gen - 1) // data + catalog current below us

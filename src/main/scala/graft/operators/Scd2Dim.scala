@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   *    the purchase slice, bucketed+sorted by user_id.
   *
   * Freshness follows the one [[Artifacts]] store contract, keyed on the
-  * events file's identity: a new JVM over current artifacts re-registers
-  * catalog metadata only — no window re-derivation, no data rewrite.
+  * events file's identity plus the recipe segment [[Recipe]]: a new JVM
+  * over current artifacts re-registers catalog metadata only — no window
+  * re-derivation, no data rewrite.
   *
   * Scale notes (100 TB): the build is ONE user-keyed window pass per
   * table side (the same shuffle the bucketed write needs anyway); after
@@ -40,6 +41,18 @@ object Scd2Dim {
     "v_user", "v_user", "version")
   private val factDdl = bucketedDdl(
     "event_id BIGINT, user_id BIGINT, ts TIMESTAMP_NTZ", "user_id", "user_id", "event_id")
+
+  /** Recipe revision in the fingerprint, as IvfIndex's `*Algo` segments:
+    * bump it whenever [[EtlOps.scd2]] or [[frames]] changes the rows it
+    * derives, so a warehouse built by the old recipe rebuilds instead of
+    * serving `join_pit_scd2_bucketed` a dim that `join_pit_scd2` no
+    * longer derives in-plan.
+    */
+  private[graft] val Recipe = "scd2-runstart-v1"
+
+  /** Events-file identity plus [[Recipe]]: the artifacts' marker. */
+  private[graft] def fingerprint(dir: String): String =
+    s"${fileIdentity(new java.io.File(s"$dir/events.parquet"))}|$Recipe"
 
   /** The dim and fact rows from an event frame: the versions of the one
     * SCD2 recipe ([[EtlOps.scd2]]) keyed v_user with event_type as
@@ -61,8 +74,7 @@ object Scd2Dim {
   def ensure(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val dimT = dimTable(dir)
     val factT = factTable(dir)
-    findOrBuild(spark, fileIdentity(new java.io.File(s"$dir/events.parquet")),
-      Seq(dimT -> dimDdl, factT -> factDdl)) {
+    findOrBuild(spark, fingerprint(dir), Seq(dimT -> dimDdl, factT -> factDdl)) {
       val (versions, purchases) = frames(graft.Tables.events(spark, dir))
       writeBucketed(versions, dimT, tableLoc(spark, dimT), "v_user", "v_user", "version")
       writeBucketed(purchases, factT, tableLoc(spark, factT), "user_id", "user_id", "event_id")

@@ -1286,7 +1286,7 @@ object TextOps extends QueryModule {
     * found exactly once.
     *
     * Scale notes (100 TB): the edge list is near-dup-pair-sized (orders
-    * below the corpus); it is localCheckpointed once so the three
+    * below the corpus); it is checkpointed once so the three
     * self-references never recompute the quadratic shingle pipeline.
     * The 2-path join keys on the middle vertex and the closing check is
     * a LEFT SEMI join keyed on the (a, c) pair — co-partitioned hash
@@ -1300,7 +1300,7 @@ object TextOps extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val e = corpusJaccardPairs(spark, dir)
-        .select($"d1", $"d2").localCheckpoint(true)
+        .select($"d1", $"d2").transform(graft.Checkpoints.cut)
       val tri = e.as("e1")
         .join(e.as("e2"), $"e1.d2" === $"e2.d1")
         .select($"e1.d1".as("a"), $"e1.d2".as("b"), $"e2.d2".as("c"))

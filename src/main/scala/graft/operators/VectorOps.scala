@@ -1816,7 +1816,7 @@ object VectorOps extends QueryModule {
 
   /** Global exact k=5 kNN graph (src, label, dst, cos, rn), memoized per
     * corpus: built once from the chunk-local candidate stage, globally
-    * re-ranked, and localCheckpointed — every consumer (`vec_knn_graph
+    * re-ranked, and checkpointed — every consumer (`vec_knn_graph
     * _stats`' reciprocity join reads it twice, `vec_twonn_intrinsic_dim`
     * takes rn ≤ 2) shares ONE quadratic pass per directory, the same
     * shared-stage discipline as the shingle/pair/codebook caches.
@@ -1832,7 +1832,7 @@ object VectorOps extends QueryModule {
         Window.partitionBy($"src").orderBy($"cos".desc, $"dst".asc)))
       .filter($"rn" <= k)
       .select($"src", $"label", $"dst", $"cos", $"rn")
-    knnCache.getOrCompute(fresh)(_.localCheckpoint(true))
+    knnCache.getOrCompute(fresh)(graft.Checkpoints.cut)
   }
 
   lazy val vecKnnGraphStats = Q(
@@ -2543,7 +2543,7 @@ object VectorOps extends QueryModule {
       // 4 rounds of scheduling overhead on ≤ 20 rows. Arithmetic is
       // bit-identical: the same ascending dot fold as graft_dot, the
       // same HALF_UP 6 dp round as SQL round(x, 6)
-      // (GraftFunctions.round6), max over the same doubles, the same
+      // (graft.DriverRound), max over the same doubles, the same
       // (mmr_score DESC, vec_id) order. The distributed part — the
       // corpus-wide relevance top-20 — is unchanged.
       val cands = e.crossJoin(broadcast(q0))
@@ -2559,7 +2559,7 @@ object VectorOps extends QueryModule {
         while (i < n) { s += a(i) * b(i); i += 1 }
         s
       }
-      val r6 = GraftFunctions.round6 _
+      val r6 = (x: Double) => graft.DriverRound(x, 6)
       val cs = cands.toVector
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2),
           r.getDouble(3), r.getDouble(4)))
@@ -4114,24 +4114,19 @@ object VectorOps extends QueryModule {
           else Iterator.range(0, d * d).map(k => (k / d, k % d, acc(k)))
         }
         .toDF("i", "j", "p")
-      // Driver-local d×d eigensolve (r8, the MLlib RowMatrix
-      // computePrincipalComponents split): the DATA-scale pass above
-      // reduces 100 TB of vectors to a d² = 4096-cell Gram — 32 KB —
-      // which is collected and power-iterated locally. The r7 in-plan
-      // 8-round unroll spent ~3 s of pure scheduler/codegen overhead
-      // driving 4096-row joins; the local solve is the same numbers
-      // (identical declared numerics: 12 dp HALF_UP term rounding, exact
-      // decimal sums, 9 dp normalization) at microsecond cost, and its
-      // driver footprint is d²-bounded — INDEPENDENT of corpus size.
-      // the local 12 dp HALF_UP terms equal what round(col, 12)
-      // produced in-plan (see [[graft.DriverRound]])
+      // Driver-local d×d eigensolve ([[graft.DriverLoop]], the MLlib
+      // RowMatrix computePrincipalComponents split): the data-scale pass
+      // above reduces the vectors to a d² = 4096-cell Gram, d²-bounded
+      // independent of corpus size, where an in-plan 8-round unroll spent
+      // ~3 s of scheduling on 4096-row joins. Same numerics: 12 dp HALF_UP
+      // terms ([[graft.DriverRound]]), exact decimal sums, 9 dp
+      // normalization.
       import java.math.{BigDecimal => JBD}
       import graft.DriverRound.{decimal => rnd}
-      val cells = partials
+      val cells = graft.DriverLoop.collect(partials
         .groupBy($"i", $"j")
         .agg(sum(round($"p", 12).cast(DecimalType(38, 12))).as("gs"))
-        .select($"i", $"j", $"gs".cast(DoubleType).as("g"))
-        .collect()
+        .select($"i", $"j", $"gs".cast(DoubleType).as("g")), "pca gram cells")
       val d = cells.iterator.map(_.getInt(1)).max + 1
       val g = Array.ofDim[Double](d, d)
       cells.foreach(r => g(r.getInt(0))(r.getInt(1)) = r.getDouble(2))

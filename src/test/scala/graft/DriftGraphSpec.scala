@@ -213,19 +213,23 @@ class DriftGraphSpec extends SparkSpecBase {
   // JVM-session-wide (SparkContext has no unset), so every earlier test
   // exercises the default executor-local mode first
   test("iterative ops: local and reliable checkpoint modes agree exactly") {
-    val ccLocal = SparkEntry.queries("dedup_connected_components")(spark, sfDir).collect().toSeq
-    val prLocal = SparkEntry.queries("graph_pagerank_trade")(spark, sfDir).collect().toSeq
+    // every query here cuts its lineage through Checkpoints.cut
+    val queries = Seq("dedup_connected_components", "graph_pagerank_trade",
+      "dedup_triangle_count", "etl_key_skew_stats", "vec_knn_graph_stats")
+    def run(q: String) = SparkEntry.queries(q)(spark, sfDir).collect().toSeq
+    val local = queries.map(run)
     val dir = scratchPath("ckpt")
     spark.sparkContext.setCheckpointDir(dir)
-    // drop every memo (the component labels, pagerank's edge table) so
-    // the reliable-mode run really re-executes instead of reading the
-    // local-mode cache
+    // drop every memo (the component labels, pagerank's edge table, the
+    // kNN graph) so the reliable-mode run really re-executes instead of
+    // reading the local-mode cache
     PlanCache.evictAll()
     try {
-      val ccRel = SparkEntry.queries("dedup_connected_components")(spark, sfDir).collect().toSeq
-      val prRel = SparkEntry.queries("graph_pagerank_trade")(spark, sfDir).collect().toSeq
-      assert(ccRel == ccLocal, "connected components diverged between checkpoint modes")
-      assert(prRel == prLocal, "pagerank diverged between checkpoint modes")
+      queries.zip(local).foreach { case (q, l) =>
+        val rel = run(q)
+        assert(l.nonEmpty, s"$q returned no rows")
+        assert(rel == l, s"$q diverged between checkpoint modes")
+      }
     } finally PlanCache.evictAll()
   }
 

@@ -211,6 +211,63 @@ class GraphDriverLoopSpec extends SparkSpecBase {
     rows.foreach(r => assert(r._3 == sizes(r._2), s"community ${r._2} size ${r._3}"))
   }
 
+  test("markov stationary on 10^5 events over 9·10^4 event types matches a sparse iterate") {
+    import spark.implicits._
+    val t0 = System.nanoTime()
+    // the sf0.1 events (10^5 rows, 1500 users of 45–99 events each) with
+    // event_type rewritten to one of 90 000 states: every state is some
+    // event's successor or has one, so the declared state set is all of them
+    val big = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(scratchPath("markov_vocab")))
+    Tables.events(spark, new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.1").toString)
+      .withColumn("event_type", concat(lit("t"), ($"event_id" % 90000).cast("string")))
+      .write.parquet(big.resolve("events.parquet").toString)
+    val dir = big.toString
+    val rows = SparkEntry.queries("agg_markov_stationary")(spark, dir)
+      .select($"event_type", $"stationary_prob", $"empirical_share")
+      .as[(String, Double, Double)].collect()
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"user_id").orderBy($"ts", $"event_id")
+    val pairs = Tables.events(spark, dir)
+      .withColumn("nxt", lead($"event_type", 1).over(w))
+      .where($"nxt".isNotNull)
+      .groupBy($"event_type", $"nxt").count()
+      .as[(String, String, Long)].collect()
+    val states = (pairs.map(_._1) ++ pairs.map(_._2)).distinct
+    assert(states.length == 90000, s"${states.length} states")
+    assert(rows.length == states.length && rows.map(_._1).toSet == states.toSet,
+      s"${rows.length} rows for ${states.length} states")
+    assert(rows.forall(_._2 >= 0.0))
+    val eSum = rows.map(_._3).sum
+    assert(math.abs(eSum - 1.0) < 1e-6, s"empirical shares sum to $eSum")
+    // independent SPARSE iterate: each round sums only a state's incoming
+    // transitions (the dense re-derivation is quadratic in the states)
+    val rowSums = pairs.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    val incoming = pairs.map { case (c, n, cnt) =>
+      (n, c, math.rint(cnt.toDouble / rowSums(c) * 1e9) / 1e9) }.groupBy(_._1)
+    var pi = states.map(_ -> 1.0 / states.length).toMap
+    for (_ <- 1 to 8) {
+      pi = states.map { t =>
+        val s = incoming.get(t).map(_.map { case (_, c, p) => p * pi(c) }.sum).getOrElse(0.0)
+        t -> math.rint(s * 1e9) / 1e9
+      }.toMap
+    }
+    // the declared value is the iterate rounded to 6 dp
+    rows.foreach { case (t, sp, _) =>
+      assert(math.abs(sp - pi(t)) < 1e-6, s"state $t: declared $sp vs sparse ${pi(t)}")
+    }
+    info(f"ran in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("DriverLoop.collect fails past its row ceiling, naming the relation") {
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException](
+      DriverLoop.collect(spark.range(DriverLoop.MaxRows + 1L).toDF(), "oversized range"))
+    assert(err.getMessage == s"driver relation oversized range: more than ${DriverLoop.MaxRows} rows")
+    assert(DriverLoop.collect(spark.range(3).toDF(), "small range").length == 3)
+    info(f"ran in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
   test("DriverRound equals Spark round() on ordinary, tie and non-finite doubles") {
     import spark.implicits._
     val xs = Seq(0.0, -0.0, 1.0 / 3, -2.5e-10, 0.1234567895, -0.1234567895, 2.675,

@@ -143,6 +143,26 @@ class SessionizeModeSpec extends SparkSpecBase {
       s"first difference: ${served.zipAll(inPlan, null, null).find(p => p._1 != p._2)}")
   }
 
+  test("a dim marked by the bare events identity rebuilds under the recipe fingerprint") {
+    import operators.{Artifacts, Scd2Dim}
+    val dimT = Scd2Dim.dimTable(sfDir)
+    def mtimes: Seq[Long] = Option(Artifacts.tableLoc(spark, dimT).listFiles).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).sorted
+    Scd2Dim.ensure(spark, sfDir)
+    // a marker written before the recipe segment existed: identity only
+    val bare = Artifacts.fileIdentity(new java.io.File(s"$sfDir/events.parquet"))
+    Artifacts.commitMarker(spark, dimT, bare)
+    val before = mtimes
+    assert(before.nonEmpty)
+    Thread.sleep(1100) // file mtimes resolve to the second on some filesystems
+    Scd2Dim.ensure(spark, sfDir)
+    val after = mtimes
+    val marker = Artifacts.readMarker(spark, dimT)
+    assert(marker != bare && marker.startsWith(s"$bare|"), s"marker $marker")
+    assert(after.nonEmpty && after.min > before.max,
+      s"dim files not rewritten: before $before, after $after")
+  }
+
   test("agg_mode_freq matches a Scala recompute with lowest-value tiebreak") {
     import spark.implicits._
     val expected = rawEvents
