@@ -33,6 +33,31 @@ class IvfIndexSpec extends SparkSpecBase {
     Seq(
       ("ivf", () => Ivf.ensure(spark, dir),
         Seq(Ivf.indexTable(dir), Ivf.codebookTable(dir)), Seq(Ivf.indexTable(dir))),
+      ("pq", () => Ivf.ensurePq(spark, dir),
+        Seq(Ivf.pqCodesTable(dir), Ivf.pqCodebookTable(dir)), Seq(Ivf.pqCodesTable(dir))),
+      ("pq residual", () => Ivf.ensurePqResidual(spark, dir),
+        Seq(Ivf.pqrCodesTable(dir), Ivf.pqrCodebookTable(dir)), Seq(Ivf.pqrCodesTable(dir))),
+      ("ivf base", () => Ivf.ensureBase(spark, dir),
+        Seq(Ivf.baseIndexTable(dir), Ivf.baseCodebookTable(dir)), Seq(Ivf.baseIndexTable(dir))),
+      ("ivf appended", () => Ivf.ensureAppended(spark, dir),
+        Seq(Ivf.appendedIndexTable(dir)), Seq(Ivf.appendedIndexTable(dir))),
+      ("pq residual base", () => Ivf.ensurePqrBase(spark, dir),
+        Seq(Ivf.pqrBaseCodesTable(dir), Ivf.pqrBaseCodebookTable(dir)),
+        Seq(Ivf.pqrBaseCodesTable(dir))),
+      ("pq residual appended", () => Ivf.ensurePqrAppended(spark, dir),
+        Seq(Ivf.pqrAppendedCodesTable(dir)), Seq(Ivf.pqrAppendedCodesTable(dir))),
+      ("ivf tombstones", () => Ivf.ensureTombstones(spark, dir),
+        Seq(Ivf.tombstoneTable(dir)), Nil),
+      ("ivf appended tombstones", () => Ivf.ensureTombstonesApp(spark, dir),
+        Seq(Ivf.appTombstoneTable(dir)), Nil),
+      ("ivf compacted", () => Ivf.ensureCompacted(spark, dir),
+        Seq(Ivf.compactedIndexTable(dir)), Seq(Ivf.compactedIndexTable(dir))),
+      ("ivf spilled", () => Ivf.ensureSpilled(spark, dir),
+        Seq(Ivf.spillIndexTable(dir), Ivf.spillCodebookTable(dir)),
+        Seq(Ivf.spillIndexTable(dir))),
+      ("pq residual spilled", () => Ivf.ensurePqrSpilled(spark, dir),
+        Seq(Ivf.pqrSpillCodesTable(dir), Ivf.pqrSpillCodebookTable(dir)),
+        Seq(Ivf.pqrSpillCodesTable(dir))),
       ("shingle registry", () => Reg.ensure(spark, dir),
         Seq(Reg.registryTable(dir)), Seq(Reg.registryTable(dir))),
       ("shingle bitmask", () => Reg.ensureBitmask(spark, dir),
