@@ -3,20 +3,32 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The persisted-artifact store shared by every warehouse artifact
   * family ([[IvfIndex]], [[ShingleRegistry]], [[Scd2Dim]]): where the
   * warehouse and scratch roots are, how a corpus path becomes a table-name
-  * tag, the freshness rule, the find-or-build commit protocol and the
-  * bucketed file layout. These decisions live here once, so a fix to the
-  * contract reaches every family.
+  * tag, the freshness rule, the find-or-build commit protocol, the alias
+  * protocol and the table layouts. These decisions live here once, so a
+  * fix to the contract reaches every family; a family keeps only its
+  * recipes and fingerprints.
+  *
+  * Layout: each table shape is declared once as a [[Layout]] — a schema
+  * plus either a bucket key with sort columns or one small file. The
+  * layout renders the re-registration DDL and does the write, the append
+  * and the seed, so the bucket spec a building JVM writes and the one a
+  * re-registering JVM declares come from the same value.
   *
   * Freshness: an artifact is current when the `<table>.fingerprint`
   * marker beside its first table holds the expected fingerprint (the
-  * [[fileIdentity]] of the input corpus file plus the family's recipe
+  * [[corpusIdentity]] of the input corpus plus the family's recipe
   * segments) and every table directory exists. A new JVM that finds
   * current data re-registers the catalog entries with metadata-only DDL:
-  * no data file is rewritten.
+  * no data file is rewritten. [[findOrBuild]] returns the tables' frames.
+  *
+  * Alias: a write-forward generation whose apply is empty is published as
+  * catalog metadata over the files of the generation below it, under an
+  * alias marker ([[findAliasOrBuild]], [[isAlias]]).
   */
 private[graft] object Artifacts {
 
@@ -52,11 +64,28 @@ private[graft] object Artifacts {
     s"${slug}_$h"
   }
 
-  /** (path, size, mtime) identity of an input file — the PlanCache
-    * freshness key, persisted in the marker so a new JVM can check it.
-    */
-  def fileIdentity(f: java.io.File): String =
+  /** (path, size, mtime) identity of one file. */
+  private def fileIdentity(f: java.io.File): String =
     s"${f.getAbsolutePath}|${f.length}|${f.lastModified}"
+
+  /** Identity of corpus table `table` under `dir` — the PlanCache
+    * freshness key, persisted in the marker so a new JVM can check it.
+    * `$dir/<table>.parquet` may be one file or a directory of files (see
+    * [[graft.Tables]]): a file gives its own (path, size, mtime); a
+    * directory gives the sorted identities of every regular file under
+    * it, because a file rewritten in place changes neither the
+    * directory's size nor its mtime.
+    */
+  def corpusIdentity(dir: String, table: String): String = {
+    val f = new java.io.File(s"$dir/$table.parquet")
+    if (!f.isDirectory) fileIdentity(f)
+    else {
+      val files = Files.walk(f.toPath)
+      try files.iterator.asScala.filter(Files.isRegularFile(_)).map(_.toFile)
+        .map(fileIdentity).toSeq.sorted.mkString(";")
+      finally files.close()
+    }
+  }
 
   /** The session warehouse as a local directory. */
   def warehouseDir(spark: SparkSession): java.io.File = {
@@ -73,19 +102,6 @@ private[graft] object Artifacts {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
     f.delete(): Unit
   }
-
-  /** Renders the CREATE TABLE statement of table `name` at `loc`. */
-  type Ddl = (String, java.io.File) => String
-
-  def plainDdl(schema: String): Ddl = (name, loc) =>
-    s"""CREATE TABLE $name ($schema)
-       |USING PARQUET LOCATION '${loc.toURI}'""".stripMargin
-
-  def bucketedDdl(schema: String, key: String, sortCols: String*): Ddl = (name, loc) =>
-    s"""CREATE TABLE $name ($schema)
-       |USING PARQUET
-       |CLUSTERED BY ($key) SORTED BY (${sortCols.mkString(", ")}) INTO $NBuckets BUCKETS
-       |LOCATION '${loc.toURI}'""".stripMargin
 
   private def markerFile(spark: SparkSession, table: String): java.io.File =
     new java.io.File(warehouseDir(spark), s"$table.fingerprint")
@@ -111,18 +127,18 @@ private[graft] object Artifacts {
     readMarker(spark, names.head) == fp &&
       names.forall(n => tableLoc(spark, n).isDirectory)
 
-  /** Metadata-only (re-)registration of each spec's table over the data
-    * at the matching location.
+  /** Metadata-only (re-)registration of each table over the data at
+    * the matching location.
     */
-  def register(spark: SparkSession, specs: Seq[(String, Ddl)],
+  private def register(spark: SparkSession, tables: Seq[(String, Layout)],
       locs: Seq[java.io.File]): Unit =
-    specs.zip(locs).foreach { case ((n, ddl), loc) =>
+    tables.zip(locs).foreach { case ((n, layout), loc) =>
       spark.sql(s"DROP TABLE IF EXISTS $n")
-      spark.sql(ddl(n, loc))
+      spark.sql(layout.ddl(n, loc))
     }
 
   /** Drops the catalog entries, the marker and the data of `names`. */
-  def discard(spark: SparkSession, names: Seq[String]): Unit = {
+  private def discard(spark: SparkSession, names: Seq[String]): Unit = {
     names.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     Files.deleteIfExists(markerFile(spark, names.head).toPath)
     names.foreach(n => rmTree(tableLoc(spark, n)))
@@ -131,48 +147,130 @@ private[graft] object Artifacts {
   /** Find-or-build skeleton shared by every persisted artifact family:
     * data current + catalog entries present → pure lookup; data current,
     * catalog missing (a new JVM) → metadata-only re-registration; stale or
-    * absent → discard everything, run `build` (which writes the data files
-    * under warehouse/<name>), then commit the marker LAST — the job-level
-    * replay idempotence every family relies on.
+    * absent → discard everything, run `build` (which writes each table
+    * with its layout under warehouse/<name>), then commit the marker
+    * LAST — the job-level replay idempotence every family relies on.
+    * Returns the tables' frames, in `tables` order.
     */
   def findOrBuild(spark: SparkSession, fp: String,
-      specs: Seq[(String, Ddl)])(build: => Unit): Unit = {
-    val names = specs.map(_._1)
+      tables: Seq[(String, Layout)])(build: => Unit): Seq[DataFrame] = {
+    val names = tables.map(_._1)
     if (artifactsFresh(spark, fp, names)) {
       if (!names.forall(spark.catalog.tableExists))
-        register(spark, specs, names.map(tableLoc(spark, _)))
+        register(spark, tables, names.map(tableLoc(spark, _)))
     } else {
       discard(spark, names)
       build
       commitMarker(spark, names.head, fp)
     }
+    names.map(spark.table)
   }
 
-  /** THE bucketed layout rule: repartition on the bucket key with the
+  /** The marker of an artifact published under `fp` as an alias of
+    * older files.
+    */
+  private def aliasMarker(fp: String): String = s"$fp|noop"
+
+  /** Does the marker beside `table` say it was published under `fp` as
+    * an alias of older files ([[findAliasOrBuild]])?
+    */
+  def isAlias(spark: SparkSession, table: String, fp: String): Boolean =
+    readMarker(spark, table) == aliasMarker(fp)
+
+  /** [[findOrBuild]] for a write-forward generation whose apply can be
+    * empty. An empty plan publishes the tables as catalog metadata over
+    * the `aliased` files of the generation below — no copy, no shuffle,
+    * nothing to roll back — and commits the alias marker. So a no-op
+    * nightly apply never copies the data. Three branches:
+    *
+    *  - the alias is current (`aliasCurrent`: the aliased data is still
+    *    on disk) → re-register over the aliased files when the catalog
+    *    entries are missing;
+    *  - the tables are not current and `planEmpty` → discard, register
+    *    over the aliased files, then commit the alias marker;
+    *  - otherwise → [[findOrBuild]].
+    *
+    * Evaluating `aliased` must leave the aliased generation's data and
+    * catalog entries current; an alias marker whose data is gone is not
+    * trusted, so the next call rebuilds instead of registering tables over
+    * missing files.
+    */
+  def findAliasOrBuild(spark: SparkSession, fp: String, tables: Seq[(String, Layout)],
+      aliasCurrent: => Boolean, planEmpty: => Boolean, aliased: => Seq[java.io.File])(
+      build: => Unit): Seq[DataFrame] = {
+    val names = tables.map(_._1)
+    if (isAlias(spark, names.head, fp) && aliasCurrent) {
+      if (!names.forall(spark.catalog.tableExists)) register(spark, tables, aliased)
+      names.map(spark.table)
+    } else if (!artifactsFresh(spark, fp, names) && planEmpty) {
+      val locs = aliased
+      discard(spark, names)
+      register(spark, tables, locs)
+      commitMarker(spark, names.head, aliasMarker(fp))
+      names.map(spark.table)
+    } else findOrBuild(spark, fp, tables)(build)
+  }
+
+  /** How one persisted table is laid out: its schema plus either a bucket
+    * key with sort columns or one small file. The layout renders the
+    * table's re-registration DDL and does its write, append and seed, so
+    * a JVM that builds the table and one that re-registers it read the
+    * same bucket spec.
+    *
+    * THE bucketed layout rule: repartition on the bucket key with the
     * bucket count, so each task holds exactly one bucket's rows and writes
-    * one file per bucket — no tasks×buckets small-file fan-out.
+    * one file per bucket — no tasks×buckets small-file fan-out. A small
+    * table (kilobytes, broadcast at query time) is one file.
     */
-  private def bucketed(df: DataFrame, key: String, sortCols: Seq[String]): DataFrameWriter[Row] =
-    df.repartition(NBuckets, col(key))
-      .write
-      .bucketBy(NBuckets, key)
-      .sortBy(sortCols.head, sortCols.tail: _*)
+  final class Layout private (schema: String, bucketing: Option[(String, Seq[String])]) {
 
-  /** Writes `df` as the new bucketed table `name` with its files at `loc`. */
-  def writeBucketed(df: DataFrame, name: String, loc: java.io.File,
-      key: String, sortCols: String*): Unit =
-    bucketed(df, key, sortCols).option("path", loc.getAbsolutePath).saveAsTable(name)
+    /** The CREATE TABLE statement of table `name` over the files at `loc`. */
+    def ddl(name: String, loc: java.io.File): String = bucketing match {
+      case None =>
+        s"""CREATE TABLE $name ($schema)
+           |USING PARQUET LOCATION '${loc.toURI}'""".stripMargin
+      case Some((key, sortCols)) =>
+        s"""CREATE TABLE $name ($schema)
+           |USING PARQUET
+           |CLUSTERED BY ($key) SORTED BY (${sortCols.mkString(", ")}) INTO $NBuckets BUCKETS
+           |LOCATION '${loc.toURI}'""".stripMargin
+    }
 
-  /** Writes a kilobyte side table `name` as one file at warehouse/<name>. */
-  def writeSmall(df: DataFrame, name: String): Unit =
-    df.coalesce(1)
-      .write
-      .option("path", tableLoc(df.sparkSession, name).getAbsolutePath)
-      .saveAsTable(name)
+    private def writer(df: DataFrame): DataFrameWriter[Row] = bucketing match {
+      case None => df.coalesce(1).write
+      case Some((key, sortCols)) =>
+        df.repartition(NBuckets, col(key))
+          .write
+          .bucketBy(NBuckets, key)
+          .sortBy(sortCols.head, sortCols.tail: _*)
+    }
 
-  /** Appends `df` to the existing bucketed table `name` as additional
-    * per-bucket files; existing files are never rewritten.
-    */
-  def appendBucketed(df: DataFrame, name: String, key: String, sortCols: String*): Unit =
-    bucketed(df, key, sortCols).mode("append").saveAsTable(name)
+    private def writeAt(df: DataFrame, name: String, loc: java.io.File): Unit =
+      writer(df).option("path", loc.getAbsolutePath).saveAsTable(name)
+
+    /** Writes `df` as the new table `name` at warehouse/<name>. */
+    def write(df: DataFrame, name: String): Unit =
+      writeAt(df, name, tableLoc(df.sparkSession, name))
+
+    /** Appends `df` to the existing table `name` as additional files (one
+      * per bucket); existing files are never rewritten.
+      */
+    def append(df: DataFrame, name: String): Unit =
+      writer(df).mode("append").saveAsTable(name)
+
+    /** Replaces table `name` and the files at `loc` with a copy of `df` —
+      * the seed of a new, separately maintained generation.
+      */
+    def seed(df: DataFrame, name: String, loc: java.io.File): Unit = {
+      df.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
+      rmTree(loc)
+      writeAt(df, name, loc)
+    }
+  }
+
+  object Layout {
+    def bucketed(schema: String, key: String, sortCols: String*): Layout =
+      new Layout(schema, Some((key, sortCols)))
+    def small(schema: String): Layout = new Layout(schema, None)
+  }
 }

@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   *  - `graft_ivf_codebook_<corpus>`: (cell, cvec, cnrm) — kilobytes,
   *    broadcast at query time.
   *
-  * Freshness, commit order and the new-JVM metadata-only
-  * re-registration follow the one [[Artifacts]] store contract; the
-  * fingerprint is the corpus file's identity plus the artifact family's
-  * algo revision, so a regenerated corpus invalidates and rebuilds.
+  * Layout, freshness and the empty-apply alias follow the [[Artifacts]]
+  * store contract; the fingerprint is the corpus identity plus the
+  * artifact family's algo revision, so a regenerated corpus rebuilds.
   *
   * Scale notes (100 TB): the build is the one fact-scale pass (codebook
   * broadcast against the corpus scan, one cell-hash shuffle into bucket
@@ -51,28 +50,48 @@ object IvfIndex {
   private val PqrAlgo =
     s"$IvfAlgo|pqr-k${VectorOps.PqrK}-m${VectorOps.PqrM}-lloyd${VectorOps.PqLloydIters}"
 
-  /** Corpus-file identity plus the artifact family's algo revision. */
+  /** Corpus identity plus the artifact family's algo revision. */
   private def fingerprint(dir: String, algo: String): String =
-    s"${fileIdentity(new java.io.File(s"$dir/embeddings.parquet"))}|$algo"
+    s"${corpusIdentity(dir, "embeddings")}|$algo"
 
-  /** DDL renderers for the physical table shapes every IVF artifact
-    * family is built from; bucketed shapes match [[writeCells]].
+  /** The table shapes every IVF artifact family is built from: index and
+    * codes tables are bucketed by cell and sorted by (cell, vec_id);
+    * codebooks and tombstones are one small file.
     */
-  private val bucketedIndexDdl =
-    bucketedDdl("vec_id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE, cell BIGINT", "cell", "cell", "vec_id")
-  private val cellCodebookDdl = plainDdl("cell BIGINT, cvec ARRAY<DOUBLE>, cnrm DOUBLE")
-  private val bucketedCodesDdl =
-    bucketedDdl("vec_id BIGINT, cell BIGINT, codes ARRAY<BIGINT>", "cell", "cell", "vec_id")
-  private val subCodebookDdl = plainDdl("sub BIGINT, cid BIGINT, cv ARRAY<DOUBLE>")
-  private val tombstoneDdl = plainDdl("vec_id BIGINT, cell BIGINT")
+  private def byCell(schema: String): Layout = Layout.bucketed(schema, "cell", "cell", "vec_id")
+  private[graft] val IndexLayout = byCell("vec_id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE, cell BIGINT")
+  private val SpilledLayout =
+    byCell("vec_id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE, cell BIGINT, crank BIGINT")
+  private val CodesLayout = byCell("vec_id BIGINT, cell BIGINT, codes ARRAY<BIGINT>")
+  private val CellCodebookLayout = Layout.small("cell BIGINT, cvec ARRAY<DOUBLE>, cnrm DOUBLE")
+  private val SubCodebookLayout = Layout.small("sub BIGINT, cid BIGINT, cv ARRAY<DOUBLE>")
+  private val TombstoneLayout = Layout.small("vec_id BIGINT, cell BIGINT")
 
-  /** Cell-bucketed write of an index or codes frame at warehouse/<name>,
-    * and its append twin.
+  /** Row-local nearest-cell assignment of (vec_id, emb, nrm) rows to the
+    * broadcast codebook `cents`: zero Exchange between the scan and the
+    * cell column.
     */
-  private def writeCells(df: DataFrame, name: String): Unit =
-    writeBucketed(df, name, tableLoc(df.sparkSession, name), "cell", "cell", "vec_id")
-  private def appendCells(df: DataFrame, name: String): Unit =
-    appendBucketed(df, name, "cell", "cell", "vec_id")
+  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+    VectorOps.withNearestCells(e, cents, keep = 1, rounded = true)
+      .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell"))
+
+  /** Find-or-build an (index, codebook) geometry over `corpus`: trains the
+    * codebook ([[VectorOps.ivfCodebook]] at `nlistFactor`), `assign`s every
+    * row to its cells and writes both tables. The only shuffle in the
+    * build is the cell-hash repartition the bucketed write needs.
+    */
+  private def ensureGeometry(spark: SparkSession, fp: String, idxT: String, cbT: String,
+      layout: Layout = IndexLayout, nlistFactor: Int = 1,
+      assign: (DataFrame, DataFrame) => DataFrame = assignCells)(
+      corpus: => DataFrame): (DataFrame, DataFrame) = {
+    val Seq(idx, cb) = findOrBuild(spark, fp, Seq(idxT -> layout, cbT -> CellCodebookLayout)) {
+      val e = corpus
+      val cents = VectorOps.ivfCodebook(e, nlistFactor = nlistFactor)
+      layout.write(assign(e, cents), idxT)
+      CellCodebookLayout.write(cents.select(col("cell"), col("cvec"), col("cnrm")), cbT)
+    }
+    (idx, cb)
+  }
 
   /** Find-or-build: returns (index, codebook) frames reading the
     * PERSISTED tables. Build runs only when the on-disk artifacts are
@@ -80,20 +99,8 @@ object IvfIndex {
     * current artifacts pays only catalog DDL.
     */
   def ensure(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val idx = indexTable(dir)
-    val cb = codebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, IvfAlgo),
-      Seq(idx -> bucketedIndexDdl, cb -> cellCodebookDdl)) {
-      val e = VectorOps.withNorm(spark, dir)
-      val cents = VectorOps.ivfCodebook(e)
-      // row-local nearest-cell assignment: zero Exchange
-      // between the corpus scan and the cell column; the only shuffle in
-      // the build is the cell-hash repartition the bucketed write needs
-      writeCells(VectorOps.withNearestCells(e, cents, keep = 1, rounded = true)
-        .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell")), idx)
-      writeSmall(cents.select(col("cell"), col("cvec"), col("cnrm")), cb)
-    }
-    (spark.table(idx), spark.table(cb))
+    ensureGeometry(spark, fingerprint(dir, IvfAlgo), indexTable(dir), codebookTable(dir))(
+      VectorOps.withNorm(spark, dir))
   }
 
   /** Generation-g table names. Generation 1 IS the base [[ensure]]
@@ -109,25 +116,6 @@ object IvfIndex {
   def indexG2Table(dir: String): String = indexGenTable(dir, 2)
   def codebookG2Table(dir: String): String = codebookGenTable(dir, 2)
 
-  /** Are the GENERATION-1 index artifacts current on disk? The
-    * `fp|noop` generation-2 markers ALIAS the generation-1 directories
-    * (metadata-only publish), so every freshness check that trusts a
-    * noop marker must also verify the aliased data still exists — if
-    * gen-1 was removed externally while the marker persisted, the check
-    * must fail back to a rebuild instead of registering catalog entries
-    * over missing files.
-    */
-  private def gen1IndexOnDisk(spark: SparkSession, dir: String): Boolean =
-    artifactsFresh(spark, fingerprint(dir, IvfAlgo),
-      Seq(indexTable(dir), codebookTable(dir)))
-
-  /** Gen-1 residual-codes twin of [[gen1IndexOnDisk]], for the codes
-    * noop marker in [[ensurePqrG2]].
-    */
-  private def gen1PqrOnDisk(spark: SparkSession, dir: String): Boolean =
-    artifactsFresh(spark, fingerprint(dir, PqrAlgo),
-      Seq(pqrCodesTable(dir), pqrCodebookTable(dir)))
-
   /** Generation-g freshness key: the PARENT generation's fingerprint
     * plus this link's split-recipe segment — recursive, so invalidation
     * propagates down the chain STRUCTURALLY (with only the gen-1
@@ -142,26 +130,27 @@ object IvfIndex {
     else s"${genFingerprint(dir, g - 1)}|gen$g-split2means"
 
   /** Is generation g current on disk? Generation 1 = the base
-    * artifacts; a gen-g noop marker counts only while the generation it
-    * aliases is itself current (resolved recursively — a noop chain
-    * bottoms out at generation 1).
+    * artifacts; a gen-g alias marker counts only while the generation it
+    * aliases is itself current (resolved recursively — an alias chain
+    * bottoms out at generation 1), so an alias whose data was removed
+    * rebuilds instead of registering catalog entries over missing files.
     */
   private def genOnDisk(spark: SparkSession, dir: String, g: Int): Boolean =
-    if (g <= 1) gen1IndexOnDisk(spark, dir)
+    if (g <= 1)
+      artifactsFresh(spark, fingerprint(dir, IvfAlgo), Seq(indexTable(dir), codebookTable(dir)))
     else {
       val fp = genFingerprint(dir, g)
-      (readMarker(spark, indexGenTable(dir, g)) == s"$fp|noop" &&
-        genOnDisk(spark, dir, g - 1)) ||
+      (isAlias(spark, indexGenTable(dir, g), fp) && genOnDisk(spark, dir, g - 1)) ||
         artifactsFresh(spark, fp,
           Seq(indexGenTable(dir, g), codebookGenTable(dir, g)))
     }
 
   /** Physical (index, codebook) directories generation g serves from:
     * its own when the apply wrote data, the aliased older generation's
-    * when its marker says noop — resolved recursively down the chain.
+    * when its marker is an alias — resolved recursively down the chain.
     */
   private def servingLocs(spark: SparkSession, dir: String, g: Int): Seq[java.io.File] =
-    if (g > 1 && readMarker(spark, indexGenTable(dir, g)) == s"${genFingerprint(dir, g)}|noop")
+    if (g > 1 && isAlias(spark, indexGenTable(dir, g), genFingerprint(dir, g)))
       servingLocs(spark, dir, g - 1)
     else
       Seq(tableLoc(spark, indexGenTable(dir, g)), tableLoc(spark, codebookGenTable(dir, g)))
@@ -189,13 +178,10 @@ object IvfIndex {
     *
     * Generation 1 is NEVER modified — maintenance writes forward, serve
     * picks the freshest generation ([[serveLatest]]), and a failed apply
-    * leaves the old index serving. Freshness follows the same
-    * (path, size, mtime, algo) fingerprint contract as [[ensure]] with
-    * the split recipe appended ([[genFingerprint]]); a new JVM over
-    * current artifacts re-registers catalog metadata only. An EMPTY
-    * split plan (no overloaded cells — the sf1 scale probe's case)
-    * publishes generation 2 as catalog metadata over the generation-1
-    * files: no data is copied for a no-op apply.
+    * leaves the old index serving. The fingerprint is [[ensure]]'s with
+    * the split recipe appended ([[genFingerprint]]). An EMPTY split plan
+    * (no overloaded cells — the sf1 scale probe's case) publishes
+    * generation 2 as an [[Artifacts]] alias of the generation-1 files.
     *
     * Scale notes (100 TB): the plan side is bounded by overloaded-cell
     * membership ([[VectorOps.splitPlan]]); the unsplit passthrough is a
@@ -214,20 +200,12 @@ object IvfIndex {
     * below it. All the [[ensureRebalanced]] contracts hold per link —
     * write-forward, older generations byte-untouched, empty plans
     * publish metadata over the SERVING files of the previous link
-    * ([[servingLocs]] resolves noop chains), fingerprints commit last.
+    * ([[servingLocs]] resolves alias chains), fingerprints commit last.
     */
   def ensureGen(spark: SparkSession, dir: String, gen: Int): (DataFrame, DataFrame) = synchronized {
     if (gen <= 1) return ensure(spark, dir)
     val idxT = indexGenTable(dir, gen)
     val cbT = codebookGenTable(dir, gen)
-    val fp = genFingerprint(dir, gen)
-    val specs = Seq(idxT -> bucketedIndexDdl, cbT -> cellCodebookDdl)
-    // "<fp>|noop" records an EMPTY split plan: generation g was published
-    // as metadata only, over the previous generation's serving files —
-    // at 100 TB a verbatim index copy for a no-op nightly apply would be
-    // the bug. A noop marker is only as fresh as the chain it aliases
-    // — aliased data gone → rebuild, don't register nothing.
-    val noop = readMarker(spark, idxT) == s"$fp|noop" && genOnDisk(spark, dir, gen - 1)
     lazy val prev = ensureGen(spark, dir, gen - 1)
     lazy val plan = VectorOps.splitPlan(spark, prev._1, prev._2)
     // the split-cell list is bounded by the overload predicate (a
@@ -238,19 +216,12 @@ object IvfIndex {
     // every apply)
     lazy val splitCells = graft.DriverLoop.collect(plan._1.select(col("cell")), "ivf split cells")
       .map(_.getLong(0)).sorted
-    if (noop) {
-      if (!spark.catalog.tableExists(idxT) || !spark.catalog.tableExists(cbT)) {
-        ensureGen(spark, dir, gen - 1) // data + catalog current below us
-        register(spark, specs, servingLocs(spark, dir, gen - 1))
-      }
-    } else if (!artifactsFresh(spark, fp, specs.map(_._1)) && splitCells.isEmpty) {
-      // EMPTY plan: publish generation g as catalog metadata over the
-      // previous generation's SERVING files (noop chains resolve
-      // recursively) — no copy, no shuffle, nothing to roll back
-      discard(spark, specs.map(_._1))
-      register(spark, specs, servingLocs(spark, dir, gen - 1))
-      commitMarker(spark, idxT, s"$fp|noop")
-    } else findOrBuild(spark, fp, specs) {
+    // an empty split plan publishes generation g over the previous
+    // generation's SERVING files (alias chains resolve recursively)
+    val Seq(genIdx, genCb) = findAliasOrBuild(spark, genFingerprint(dir, gen),
+      Seq(idxT -> IndexLayout, cbT -> CellCodebookLayout),
+      aliasCurrent = genOnDisk(spark, dir, gen - 1), planEmpty = splitCells.isEmpty,
+      aliased = { ensureGen(spark, dir, gen - 1); servingLocs(spark, dir, gen - 1) }) {
       val (idx, cb) = prev
       val asg = plan._2
       // deterministic new ids: rank split cells by cell id — side 0
@@ -289,10 +260,10 @@ object IvfIndex {
         .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
       val moved = asg.join(broadcast(idMap), Seq("cell", "side"))
         .select(col("vec_id"), col("emb"), col("nrm"), col("new_cell").as("cell"))
-      writeCells(keep.unionByName(moved), idxT)
-      writeSmall(cb2, cbT)
+      IndexLayout.write(keep.unionByName(moved), idxT)
+      CellCodebookLayout.write(cb2, cbT)
     }
-    (spark.table(idxT), spark.table(cbT))
+    (genIdx, genCb)
   }
 
   def pqrCodesG2Table(dir: String): String = s"graft_pqr_codes_g2_${tag(dir)}"
@@ -322,13 +293,6 @@ object IvfIndex {
     * residual codebook).
     */
   def ensurePqrG2(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val codesT = pqrCodesG2Table(dir)
-    val fp = pqrG2Fingerprint(dir)
-    val specs = Seq(codesT -> bucketedCodesDdl)
-    // same no-op contract as [[ensureRebalanced]]: an empty refresh set
-    // publishes the gen-2 codes as metadata over the gen-1 codes files —
-    // which must therefore still exist for the marker to count
-    val noop = readMarker(spark, codesT) == s"$fp|noop" && gen1PqrOnDisk(spark, dir)
     lazy val cb1 = ensure(spark, dir)._2
     lazy val gen2 = ensureRebalanced(spark, dir)
     // split-geometry cells from the two kilobyte codebooks alone:
@@ -338,18 +302,14 @@ object IvfIndex {
       .join(cb1.select(col("cell"), col("cvec").as("cvec1")), Seq("cell"), "left")
       .filter(col("cvec1").isNull || col("cvec1") =!= col("cvec"))
       .select(col("cell"))
-    val gen1Codes = Seq(tableLoc(spark, pqrCodesTable(dir)))
-    if (noop) {
-      if (!spark.catalog.tableExists(codesT)) {
-        ensurePqResidual(spark, dir) // gen-1 codes data + catalog current
-        register(spark, specs, gen1Codes)
-      }
-    } else if (!artifactsFresh(spark, fp, Seq(codesT)) && changed.isEmpty) {
-      ensurePqResidual(spark, dir) // the gen-1 codes the marker aliases
-      discard(spark, Seq(codesT))
-      register(spark, specs, gen1Codes)
-      commitMarker(spark, codesT, s"$fp|noop")
-    } else findOrBuild(spark, fp, specs) {
+    // an empty refresh set publishes the gen-2 codes over the gen-1
+    // codes files
+    val codesT = pqrCodesG2Table(dir)
+    val Seq(codes2) = findAliasOrBuild(spark, pqrG2Fingerprint(dir), Seq(codesT -> CodesLayout),
+      aliasCurrent = artifactsFresh(spark, fingerprint(dir, PqrAlgo),
+        Seq(pqrCodesTable(dir), pqrCodebookTable(dir))),
+      planEmpty = changed.isEmpty,
+      aliased = { ensurePqResidual(spark, dir); Seq(tableLoc(spark, pqrCodesTable(dir))) }) {
       val (idx2, cb2) = gen2
       val (codes1, rcb) = ensurePqResidual(spark, dir)
       val changedOld = changed.join(cb1.select(col("cell")), Seq("cell"), "left_semi")
@@ -358,15 +318,14 @@ object IvfIndex {
         rcb, VectorOps.PqrM, VectorOps.PqrW)
       val copied = codes1.join(broadcast(changedOld), Seq("cell"), "left_anti")
         .select(col("vec_id"), col("cell"), col("codes"))
-      writeCells(copied.unionByName(refreshed), codesT)
+      CodesLayout.write(copied.unionByName(refreshed), codesT)
     }
-    val (_, rcb) = ensurePqResidual(spark, dir)
-    (spark.table(codesT), rcb)
+    (codes2, ensurePqResidual(spark, dir)._2)
   }
 
   /** Read-side generation policy: serve the FRESHEST index generation
     * on disk — the highest ordinal whose fingerprint chain is current
-    * ([[genOnDisk]], which also validates what noop markers alias),
+    * ([[genOnDisk]], which also validates what alias markers point at),
     * generation 1 otherwise. Pure read: a serve path never builds a
     * generation inline (maintenance does, via [[ensureGen]]); it only
     * re-registers catalog metadata when a new JVM finds current
@@ -434,18 +393,8 @@ object IvfIndex {
     * mirror re-derives both from the same filter.
     */
   def ensureBase(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val idx = baseIndexTable(dir)
-    val cb = baseCodebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, BaseAlgo),
-      Seq(idx -> bucketedIndexDdl, cb -> cellCodebookDdl)) {
-      val e = VectorOps.withNorm(spark, dir).filter(!isAppendBatch(col("vec_id")))
-      val cents = VectorOps.ivfCodebook(e)
-      val assigned = VectorOps.withNearestCells(e, cents, keep = 1, rounded = true)
-        .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell"))
-      writeCells(assigned, idx)
-      writeSmall(cents.select(col("cell"), col("cvec"), col("cnrm")), cb)
-    }
-    (spark.table(idx), spark.table(cb))
+    ensureGeometry(spark, fingerprint(dir, BaseAlgo), baseIndexTable(dir), baseCodebookTable(dir))(
+      VectorOps.withNorm(spark, dir).filter(!isAppendBatch(col("vec_id"))))
   }
 
   /** The APPEND frame: today's batch assigned row-locally to the BASE
@@ -456,9 +405,7 @@ object IvfIndex {
     * exactly what gets appended.
     */
   def appendAssigned(spark: SparkSession, dir: String, baseCb: DataFrame): DataFrame = {
-    val batch = VectorOps.withNorm(spark, dir).filter(isAppendBatch(col("vec_id")))
-    VectorOps.withNearestCells(batch, baseCb, keep = 1, rounded = true)
-      .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell"))
+    assignCells(VectorOps.withNorm(spark, dir).filter(isAppendBatch(col("vec_id"))), baseCb)
   }
 
   /** Find-or-build the POST-APPEND index generation: clone the base
@@ -478,32 +425,18 @@ object IvfIndex {
   def ensureAppended(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val name = appendedIndexTable(dir)
     val (baseIdx, baseCb) = ensureBase(spark, dir)
-    findOrBuild(spark, appFingerprint(dir),
-      Seq(name -> bucketedIndexDdl)) {
-      writeCells(baseIdx, name)
+    val Seq(appIdx) = findOrBuild(spark, appFingerprint(dir), Seq(name -> IndexLayout)) {
+      IndexLayout.write(baseIdx, name)
       // THE append: batch only — assigned row-locally, appended as
       // correctly-bucketed files; the clone's files are not touched
-      appendCells(appendAssigned(spark, dir, baseCb), name)
+      IndexLayout.append(appendAssigned(spark, dir, baseCb), name)
     }
-    (spark.table(name), baseCb)
-  }
-
-  /** Clone the given (vec_id, emb, nrm, cell) index frame into catalog
-    * table `name` (bucketed identically) — the seed step for a
-    * STREAM-MAINTAINED index generation, shared by the StreamingSpec
-    * foreachBatch drive (the [[ShingleRegistry.seedGeneration]]
-    * discipline applied to vectors).
-    */
-  def seedIndexGeneration(spark: SparkSession, idx: DataFrame, name: String,
-      loc: java.io.File): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    rmTree(loc)
-    writeBucketed(idx, name, loc, "cell", "cell", "vec_id")
+    (appIdx, baseCb)
   }
 
   /** ONE idempotent append of a delivered embedding micro-batch into
-    * the index generation `name`: assign each arriving (vec_id, emb)
-    * row-locally to its nearest cell of the FROZEN codebook `cb`
+    * the index generation `name` (seeded with [[IndexLayout]]): assign
+    * each arriving (vec_id, emb) row-locally to its nearest cell of the FROZEN codebook `cb`
     * (broadcast, compiled argmin — never retrained mid-stream),
     * anti-join the LIVE table on (cell, vec_id) — the cell equi-key
     * keeps the bucketed side co-partitioned, so ONLY the arriving batch
@@ -523,8 +456,7 @@ object IvfIndex {
     val spark = batch.sparkSession
     val b = batch.withColumn("nrm",
       sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
-    appendCells(VectorOps.withNearestCells(b, cb, keep = 1, rounded = true)
-      .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell"))
+    IndexLayout.append(assignCells(b, cb)
       .join(spark.table(name).select(col("cell"), col("vec_id")).hint("merge"),
         Seq("cell", "vec_id"), "left_anti")
       .select(col("vec_id"), col("emb"), col("nrm"), col("cell")), name)
@@ -547,14 +479,8 @@ object IvfIndex {
     * path probes. Kilobytes, one file, index files byte-untouched.
     */
   def ensureTombstonesApp(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val name = appTombstoneTable(dir)
-    findOrBuild(spark, appTombstoneFingerprint(dir),
-      Seq(name -> tombstoneDdl)) {
-      val (appIdx, _) = ensureAppended(spark, dir)
-      writeSmall(appIdx.filter(isDeleted(col("vec_id")))
-        .select(col("vec_id"), col("cell")), name)
-    }
-    spark.table(name)
+    ensureTombstoneTable(spark, appTombstoneFingerprint(dir), appTombstoneTable(dir))(
+      ensureAppended(spark, dir)._1)
   }
 
   /** Read-side generation policy for the APPEND family — the
@@ -600,16 +526,16 @@ object IvfIndex {
   def ensurePqrAppended(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val name = pqrAppendedCodesTable(dir)
     val (baseCodes, rcb) = ensurePqrBase(spark, dir)
-    findOrBuild(spark, s"${fingerprint(dir, PqrBaseAlgo)}|append-mod3",
-      Seq(name -> bucketedCodesDdl)) {
+    val Seq(appCodes) = findOrBuild(spark, s"${fingerprint(dir, PqrBaseAlgo)}|append-mod3",
+      Seq(name -> CodesLayout)) {
       val (_, baseCb) = ensureBase(spark, dir)
-      writeCells(baseCodes, name)
+      CodesLayout.write(baseCodes, name)
       // batch codes: residual vs the assigned base cell, base codebook
-      appendCells(VectorOps.pqCodes(
+      CodesLayout.append(VectorOps.pqCodes(
         VectorOps.residualEmb(appendAssigned(spark, dir, baseCb), baseCb),
         rcb, VectorOps.PqrM, VectorOps.PqrW), name)
     }
-    (spark.table(name), rcb)
+    (appCodes, rcb)
   }
 
   // ------------------------------------------------------------------
@@ -650,15 +576,19 @@ object IvfIndex {
     * cells without consulting the index.
     */
   def ensureTombstones(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val name = tombstoneTable(dir)
-    findOrBuild(spark, tombstoneFingerprint(dir),
-      Seq(name -> tombstoneDdl)) {
-      val (idx, _) = ensure(spark, dir)
-      writeSmall(idx.filter(isDeleted(col("vec_id")))
-        .select(col("vec_id"), col("cell")), name)
-    }
-    spark.table(name)
+    ensureTombstoneTable(spark, tombstoneFingerprint(dir), tombstoneTable(dir))(
+      ensure(spark, dir)._1)
   }
+
+  /** Find-or-build tombstone table `name`: (vec_id, cell) of every
+    * [[isDeleted]] row of `index`, one small file.
+    */
+  private def ensureTombstoneTable(spark: SparkSession, fp: String, name: String)(
+      index: => DataFrame): DataFrame =
+    findOrBuild(spark, fp, Seq(name -> TombstoneLayout)) {
+      TombstoneLayout.write(index.filter(isDeleted(col("vec_id")))
+        .select(col("vec_id"), col("cell")), name)
+    }.head
 
   /** Find-or-build the COMPACTED generation: the live rows (gen-1 minus
     * tombstones, broadcast anti join) written forward as a cell-bucketed
@@ -673,13 +603,13 @@ object IvfIndex {
     // keyed off the TOMBSTONE fingerprint: the compacted
     // rows derive from the tombstone table, so any tombstone-recipe
     // bump invalidates the compacted generation structurally
-    findOrBuild(spark, s"${tombstoneFingerprint(dir)}|compact1",
-      Seq(name -> bucketedIndexDdl)) {
+    val Seq(compacted) = findOrBuild(spark, s"${tombstoneFingerprint(dir)}|compact1",
+      Seq(name -> IndexLayout)) {
       val ts = ensureTombstones(spark, dir)
-      writeCells(idx.join(broadcast(ts.select(col("vec_id"))), Seq("vec_id"), "left_anti")
+      IndexLayout.write(idx.join(broadcast(ts.select(col("vec_id"))), Seq("vec_id"), "left_anti")
         .select(col("vec_id"), col("emb"), col("nrm"), col("cell")), name)
     }
-    (spark.table(name), cb)
+    (compacted, cb)
   }
 
   // ------------------------------------------------------------------
@@ -708,9 +638,6 @@ object IvfIndex {
   private val SpillAlgo =
     s"ivf-lloyd${VectorOps.IvfLloydIters}-stride-f$SpillFactor|spill$SpillK"
 
-  private val spilledIndexDdl = bucketedDdl(
-    "vec_id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE, cell BIGINT, crank BIGINT", "cell", "cell", "vec_id")
-
   /** Find-or-build the SPILLED index: [[ensure]]'s contract (trained
     * codebook, row-local assignment, cell-bucketed files, fingerprint
     * freshness, metadata-only re-registration in a new JVM) at the
@@ -724,21 +651,13 @@ object IvfIndex {
     * stays kilobytes-to-megabytes (SpillFactor·√n rows) and broadcasts.
     */
   def ensureSpilled(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val idxT = spillIndexTable(dir)
-    val cbT = spillCodebookTable(dir)
-    findOrBuild(spark, fingerprint(dir, SpillAlgo),
-      Seq(idxT -> spilledIndexDdl, cbT -> cellCodebookDdl)) {
-      val e = VectorOps.withNorm(spark, dir)
-      val cents = VectorOps.ivfCodebook(e, nlistFactor = SpillFactor)
-      // row-local top-SpillK assignment with its probe rank (crank 1 =
-      // the cell [[ensure]] would have assigned)
-      val assigned = VectorOps.withRankedCells(e, cents, SpillK, "crank")
+    // row-local top-SpillK assignment with its probe rank (crank 1 =
+    // the cell [[ensure]] would have assigned)
+    ensureGeometry(spark, fingerprint(dir, SpillAlgo), spillIndexTable(dir),
+      spillCodebookTable(dir), SpilledLayout, SpillFactor,
+      (e, cents) => VectorOps.withRankedCells(e, cents, SpillK, "crank")
         .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"),
-          col("cell"), col("crank"))
-      writeCells(assigned, idxT)
-      writeSmall(cents.select(col("cell"), col("cvec"), col("cnrm")), cbT)
-    }
-    (spark.table(idxT), spark.table(cbT))
+          col("cell"), col("crank")))(VectorOps.withNorm(spark, dir))
   }
 
   def pqrSpillCodesTable(dir: String): String = s"graft_pqr_spill_codes_${tag(dir)}"
@@ -826,12 +745,14 @@ object IvfIndex {
     */
   private def ensurePqArtifacts(spark: SparkSession, fp: String, codesT: String, cbT: String,
       m: Int = 4, w: Int = 16)(train: => (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
-    findOrBuild(spark, fp, Seq(codesT -> bucketedCodesDdl, cbT -> subCodebookDdl)) {
+    val Seq(codes, cb) = findOrBuild(spark, fp,
+      Seq(codesT -> CodesLayout, cbT -> SubCodebookLayout)) {
       val (cents, input) = train
-      writeCells(VectorOps.pqCodes(input, cents, m, w), codesT)
-      writeSmall(cents.select(col("sub").cast("long").as("sub"), col("cid"), col("cv")), cbT)
+      CodesLayout.write(VectorOps.pqCodes(input, cents, m, w), codesT)
+      SubCodebookLayout.write(
+        cents.select(col("sub").cast("long").as("sub"), col("cid"), col("cv")), cbT)
     }
-    (spark.table(codesT), spark.table(cbT))
+    (codes, cb)
   }
 
   /** [[ensurePqArtifacts]] for residual PQ over `geometry`'s (index, cell

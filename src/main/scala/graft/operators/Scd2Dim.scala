@@ -20,10 +20,8 @@ import org.apache.spark.sql.functions._
   *  - `graft_purchase_fact_<corpus>`: (event_id, user_id, ts) —
   *    the purchase slice, bucketed+sorted by user_id.
   *
-  * Freshness follows the one [[Artifacts]] store contract, keyed on the
-  * events file's identity plus the recipe segment [[Recipe]]: a new JVM
-  * over current artifacts re-registers catalog metadata only — no window
-  * re-derivation, no data rewrite.
+  * Layout and freshness follow the [[Artifacts]] store contract, keyed on
+  * the events corpus identity plus the recipe segment [[Recipe]].
   *
   * Scale notes (100 TB): the build is ONE user-keyed window pass per
   * table side (the same shuffle the bucketed write needs anyway); after
@@ -36,10 +34,10 @@ object Scd2Dim {
   def dimTable(dir: String): String = s"graft_scd2_dim_${tag(dir)}"
   def factTable(dir: String): String = s"graft_purchase_fact_${tag(dir)}"
 
-  private val dimDdl = bucketedDdl(
+  private val DimLayout = Layout.bucketed(
     "v_user BIGINT, version BIGINT, regime STRING, valid_from TIMESTAMP_NTZ, valid_to TIMESTAMP_NTZ",
     "v_user", "v_user", "version")
-  private val factDdl = bucketedDdl(
+  private val FactLayout = Layout.bucketed(
     "event_id BIGINT, user_id BIGINT, ts TIMESTAMP_NTZ", "user_id", "user_id", "event_id")
 
   /** Recipe revision in the fingerprint, as IvfIndex's `*Algo` segments:
@@ -50,9 +48,9 @@ object Scd2Dim {
     */
   private[graft] val Recipe = "scd2-runstart-v1"
 
-  /** Events-file identity plus [[Recipe]]: the artifacts' marker. */
+  /** Events corpus identity plus [[Recipe]]: the artifacts' marker. */
   private[graft] def fingerprint(dir: String): String =
-    s"${fileIdentity(new java.io.File(s"$dir/events.parquet"))}|$Recipe"
+    s"${corpusIdentity(dir, "events")}|$Recipe"
 
   /** The dim and fact rows from an event frame: the versions of the one
     * SCD2 recipe ([[EtlOps.scd2]]) keyed v_user with event_type as
@@ -74,11 +72,12 @@ object Scd2Dim {
   def ensure(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val dimT = dimTable(dir)
     val factT = factTable(dir)
-    findOrBuild(spark, fingerprint(dir), Seq(dimT -> dimDdl, factT -> factDdl)) {
+    val Seq(dim, fact) = findOrBuild(spark, fingerprint(dir),
+      Seq(dimT -> DimLayout, factT -> FactLayout)) {
       val (versions, purchases) = frames(graft.Tables.events(spark, dir))
-      writeBucketed(versions, dimT, tableLoc(spark, dimT), "v_user", "v_user", "version")
-      writeBucketed(purchases, factT, tableLoc(spark, factT), "user_id", "user_id", "event_id")
+      DimLayout.write(versions, dimT)
+      FactLayout.write(purchases, factT)
     }
-    (spark.table(dimT), spark.table(factT))
+    (dim, fact)
   }
 }

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * bucketing it by shingle means the probe join shuffles only the new
   * batch — the registry side reads co-partitioned with ZERO Exchange
   * (PlanSpec asserts exactly one shingle-keyed Exchange in the probe
-  * plan). Freshness, commit order and the new-session metadata-only
-  * re-registration follow the one [[Artifacts]] store contract, keyed on
-  * the documents file's identity.
+  * plan). Layout and freshness follow the [[Artifacts]] store contract,
+  * keyed on the documents corpus identity plus [[Recipe]].
   */
 object ShingleRegistry {
 
@@ -33,48 +32,46 @@ object ShingleRegistry {
 
   def registryTable(dir: String): String = s"graft_shingle_registry_${tag(dir)}"
 
-  private def fingerprint(dir: String): String =
-    fileIdentity(new java.io.File(s"$dir/documents.parquet"))
+  /** Recipe revision in the fingerprint, as IvfIndex's `*Algo` segments:
+    * bump it whenever [[TextOps.shingles]] or [[batchOf]] changes the rows
+    * a registry generation derives, so a warehouse built by the old
+    * recipe rebuilds instead of serving shingles or batches the current
+    * recipe no longer derives. The bitmask, retraction and compaction
+    * fingerprints chain from it.
+    */
+  private[graft] val Recipe = "shingle3-md5batch8-v1"
 
-  /** Shingle-bucketed layout shared by every registry generation. */
-  private val registryDdl =
-    bucketedDdl("shingle STRING, first_batch BIGINT", "shingle", "shingle")
-  private val bitmaskDdl =
-    bucketedDdl("shingle STRING, batches BIGINT, first_batch BIGINT", "shingle", "shingle")
-  private def writeShingles(df: DataFrame, name: String, loc: java.io.File): Unit =
-    writeBucketed(df, name, loc, "shingle", "shingle")
+  /** Documents corpus identity plus [[Recipe]]: the registry's marker. */
+  private[graft] def fingerprint(dir: String): String =
+    s"${corpusIdentity(dir, "documents")}|$Recipe"
+
+  /** Table shapes: every registry generation is bucketed and sorted by
+    * shingle; the retraction side tables are one small file each.
+    */
+  private def byShingle(schema: String): Layout = Layout.bucketed(schema, "shingle", "shingle")
+  private[graft] val RegistryLayout = byShingle("shingle STRING, first_batch BIGINT")
+  private val BitmaskLayout = byShingle("shingle STRING, batches BIGINT, first_batch BIGINT")
+  private val RetractTombstoneLayout = Layout.small("shingle STRING")
+  private val RetractRemapLayout = Layout.small("shingle STRING, new_first_batch BIGINT")
 
   /** Find-or-build the persisted registry of batches 0..6: one row per
     * distinct historical shingle with the batch that first shipped it.
     */
   def ensure(spark: SparkSession, dir: String): DataFrame = synchronized {
     val name = registryTable(dir)
-    findOrBuild(spark, fingerprint(dir), Seq(name -> registryDdl)) {
+    findOrBuild(spark, fingerprint(dir), Seq(name -> RegistryLayout)) {
       val hist = Tables.documents(spark, dir).filter(batchOf(col("doc_id")) < 7)
-      writeShingles(TextOps.shingles(hist)
+      RegistryLayout.write(TextOps.shingles(hist)
         .withColumn("batch", batchOf(col("doc_id")))
         .groupBy(col("shingle"))
-        .agg(min(col("batch")).as("first_batch")), name, tableLoc(spark, name))
-    }
-    spark.table(name)
+        .agg(min(col("batch")).as("first_batch")), name)
+    }.head
   }
 
   def upsertedTable(dir: String): String = s"graft_shingle_reg2_${tag(dir)}"
 
-  /** Clone the given registry frame into catalog table `name` (bucketed
-    * identically) — the seed step for a new registry GENERATION, shared
-    * by [[ensureUpserted]] and the StreamingSpec stream-maintained
-    * registry drive.
-    */
-  def seedGeneration(spark: SparkSession, reg: DataFrame, name: String,
-      loc: java.io.File): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    rmTree(loc)
-    writeShingles(reg, name, loc)
-  }
-
   /** ONE idempotent upsert of a delivered document micro-batch into the
-    * registry generation `name`: shingle the batch, anti-join the LIVE
+    * registry generation `name` (seeded with [[RegistryLayout]]): shingle the batch, anti-join the LIVE
     * table (merge-hinted — the registry side reads co-partitioned from
     * its buckets, no Exchange), and APPEND the novel survivors as
     * correctly-bucketed files tagged `first_batch = ingestBatch`.
@@ -88,12 +85,11 @@ object ShingleRegistry {
     */
   def upsertBatch(docs: DataFrame, name: String, ingestBatch: Long): Unit = {
     val spark = docs.sparkSession
-    appendBucketed(TextOps.shingles(docs)
+    RegistryLayout.append(TextOps.shingles(docs)
       .select(col("shingle")).distinct()
       .join(spark.table(name).select(col("shingle")).hint("merge"),
         Seq("shingle"), "left_anti")
-      .select(col("shingle"), lit(ingestBatch).as("first_batch")),
-      name, "shingle", "shingle")
+      .select(col("shingle"), lit(ingestBatch).as("first_batch")), name)
   }
 
   // ------------------------------------------------------------------
@@ -118,6 +114,15 @@ object ShingleRegistry {
 
   /** The deterministically withdrawn source: md5-batch 5. */
   val RetractedBatch = 5L
+  private val RetractedBit = 1L << RetractedBatch
+
+  /** Bitmask rows with `m`, their mask with the withdrawn bit cleared,
+    * and the retraction remap: the lowest surviving bit of `m` as a first
+    * batch — log2(m & -m) is exact for powers of two.
+    */
+  private def withSurvivors(reg: DataFrame): DataFrame =
+    reg.withColumn("m", col("batches").bitwiseAND(lit(~RetractedBit)))
+  private def lowestSurvivor: org.apache.spark.sql.Column = expr("CAST(log2(m & -m) AS BIGINT)")
 
   def bitmaskTable(dir: String): String = s"graft_shingle_regb_${tag(dir)}"
   def retractTombstoneTable(dir: String): String = s"graft_shingle_rts_${tag(dir)}"
@@ -142,15 +147,14 @@ object ShingleRegistry {
     */
   def ensureBitmask(spark: SparkSession, dir: String): DataFrame = synchronized {
     val name = bitmaskTable(dir)
-    findOrBuild(spark, bitmaskFingerprint(dir), Seq(name -> bitmaskDdl)) {
-      writeShingles(TextOps.shingles(Tables.documents(spark, dir))
+    findOrBuild(spark, bitmaskFingerprint(dir), Seq(name -> BitmaskLayout)) {
+      BitmaskLayout.write(TextOps.shingles(Tables.documents(spark, dir))
         .withColumn("batch", batchOf(col("doc_id")))
         .groupBy(col("shingle"))
         .agg(
           expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(batch AS INT)))").as("batches"),
-          min(col("batch")).as("first_batch")), name, tableLoc(spark, name))
-    }
-    spark.table(name)
+          min(col("batch")).as("first_batch")), name)
+    }.head
   }
 
   /** Find-or-build the retraction side tables: (tombstones, remaps).
@@ -162,22 +166,19 @@ object ShingleRegistry {
   def ensureRetraction(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     val tsName = retractTombstoneTable(dir)
     val rmName = retractRemapTable(dir)
-    findOrBuild(spark, retractFingerprint(dir), Seq(
-        tsName -> plainDdl("shingle STRING"),
-        rmName -> plainDdl("shingle STRING, new_first_batch BIGINT"))) {
+    val Seq(ts, rm) = findOrBuild(spark, retractFingerprint(dir),
+      Seq(tsName -> RetractTombstoneLayout, rmName -> RetractRemapLayout)) {
       val reg = ensureBitmask(spark, dir)
-      val bit = 1L << RetractedBatch
       // no surviving contributor -> tombstone
-      writeSmall(reg.filter(col("batches") === bit).select(col("shingle")), tsName)
+      RetractTombstoneLayout.write(
+        reg.filter(col("batches") === RetractedBit).select(col("shingle")), tsName)
       // first shipped by the withdrawn batch but still alive -> the new
-      // first batch is the lowest SURVIVING bit: log2(m & -m) is exact
-      // for powers of two
-      writeSmall(reg.filter(col("first_batch") === RetractedBatch && col("batches") =!= bit)
-        .withColumn("m", col("batches").bitwiseAND(lit(~bit)))
-        .select(col("shingle"),
-          expr("CAST(log2(m & -m) AS BIGINT)").as("new_first_batch")), rmName)
+      // first batch is the lowest SURVIVING bit
+      RetractRemapLayout.write(withSurvivors(
+        reg.filter(col("first_batch") === RetractedBatch && col("batches") =!= RetractedBit))
+        .select(col("shingle"), lowestSurvivor.as("new_first_batch")), rmName)
     }
-    (spark.table(tsName), spark.table(rmName))
+    (ts, rm)
   }
 
   /** Find-or-build the retraction COMPACTION: a new shingle-bucketed
@@ -189,24 +190,20 @@ object ShingleRegistry {
     */
   def ensureRetractCompacted(spark: SparkSession, dir: String): DataFrame = synchronized {
     val name = retractCompactTable(dir)
-    findOrBuild(spark, s"${retractFingerprint(dir)}|compact1", Seq(name -> bitmaskDdl)) {
+    findOrBuild(spark, s"${retractFingerprint(dir)}|compact1", Seq(name -> BitmaskLayout)) {
       val reg = ensureBitmask(spark, dir)
       ensureRetraction(spark, dir)
-      val bit = 1L << RetractedBatch
       // live rows only; bit cleared; first remapped to the lowest
       // surviving bit where the withdrawn batch shipped first. Pure
       // row-local algebra on the bucketed scan — no join needed: the
       // mask holds everything the side tables were derived from (the
       // side tables exist for the SERVE path, which must not rescan the
       // registry; the compactor is already doing the full pass)
-      writeShingles(reg.filter(col("batches") =!= bit)
-        .withColumn("m", col("batches").bitwiseAND(lit(~bit)))
+      BitmaskLayout.write(withSurvivors(reg.filter(col("batches") =!= RetractedBit))
         .select(col("shingle"), col("m").as("batches"),
-          when(col("first_batch") === RetractedBatch,
-            expr("CAST(log2(m & -m) AS BIGINT)"))
-            .otherwise(col("first_batch")).as("first_batch")), name, tableLoc(spark, name))
-    }
-    spark.table(name)
+          when(col("first_batch") === RetractedBatch, lowestSurvivor)
+            .otherwise(col("first_batch")).as("first_batch")), name)
+    }.head
   }
 
   /** Find-or-build the POST-UPSERT registry generation: the daily-ingest
@@ -222,22 +219,20 @@ object ShingleRegistry {
     * files; history is never rewritten). The v1→v2 generation clone below
     * exists ONLY because the scoring row's oracle needs v1 frozen at
     * batches 0..6 — a production registry upserts in place and the clone
-    * disappears. Freshness follows the [[Artifacts]] contract with v1's
-    * fingerprint, which also makes the declared row deterministic under
-    * re-runs: the second execution finds the artifact built and serves
-    * it metadata-only.
+    * disappears. Its marker is v1's fingerprint, which also makes the
+    * declared row deterministic under re-runs: the second execution finds
+    * the artifact built and serves it metadata-only.
     */
   def ensureUpserted(spark: SparkSession, dir: String): DataFrame = synchronized {
     val name = upsertedTable(dir)
-    findOrBuild(spark, fingerprint(dir), Seq(name -> registryDdl)) {
-      seedGeneration(spark, ensure(spark, dir), name, tableLoc(spark, name))
+    findOrBuild(spark, fingerprint(dir), Seq(name -> RegistryLayout)) {
+      RegistryLayout.write(ensure(spark, dir), name)
       // THE upsert: new batch only, anti-joined against the (bucketed)
       // registry — shared verbatim with the StreamingSpec foreachBatch
       // drive ([[upsertBatch]]), delivered here as one whole batch
       upsertBatch(
         Tables.documents(spark, dir).filter(batchOf(col("doc_id")) === 7),
         name, ingestBatch = 7L)
-    }
-    spark.table(name)
+    }.head
   }
 }

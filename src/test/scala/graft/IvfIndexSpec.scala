@@ -577,37 +577,44 @@ class IvfIndexSpec extends SparkSpecBase {
     assert(srv.count() == 16, "serveLatest must serve after the rebuild")
   }
 
-  test("rewritten corpus at the same path invalidates and rebuilds") {
-    val dir = corpusDir("ivf_stale").toString
-    def copyCorpus(): Path = Files.copy(
-      Paths.get(s"$sfDir/embeddings.parquet"),
-      Paths.get(s"$dir/embeddings.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    copyCorpus()
-    val idxName = operators.IvfIndex.indexTable(dir)
-    val (idx1, _) = operators.IvfIndex.ensure(spark, dir)
-    val n1 = idx1.count()
-    val built = mtimes(idxName)
-    // the downstream generation rides the same corpus fingerprint
-    operators.IvfIndex.ensureRebalanced(spark, dir)
-    val g2Name = operators.IvfIndex.indexG2Table(dir)
-    val g2Built = mtimes(g2Name)
-    // regenerate the corpus in place: same path, fresh mtime
-    copyCorpus()
-    Paths.get(s"$dir/embeddings.parquet").toFile.setLastModified(System.currentTimeMillis() + 2000)
-    spark.catalog.refreshByPath(dir)
-    val (idx2, _) = operators.IvfIndex.ensure(spark, dir)
-    assert(idx2.count() == n1)
-    assert(mtimes(idxName) != built,
-      "stale fingerprint must trigger a rebuild (data files unchanged)")
-    // generation 2's fingerprint embeds generation 1's, so the applied
-    // rebalance must rebuild with it — serving a gen-2 built over the
-    // OLD corpus against the new gen-1 would be the silent-staleness bug
-    val (idx2g2, _) = operators.IvfIndex.ensureRebalanced(spark, dir)
-    assert(idx2g2.count() == n1)
-    assert(mtimes(g2Name) != g2Built,
-      "corpus rewrite must invalidate the applied rebalance too")
-  }
+  // the corpus as one file, and as a directory of files whose one file
+  // is rewritten in place (same inode: the directory's size and mtime
+  // stay as they were)
+  for ((layout, suffix) <- Seq("" -> "", " (directory corpus)" -> "/part-0.parquet"))
+    test(s"rewritten corpus at the same path invalidates and rebuilds$layout") {
+      val dir = corpusDir("ivf_stale").toString
+      val data = Paths.get(s"$dir/embeddings.parquet$suffix")
+      Files.createDirectories(data.getParent)
+      Files.write(data, Files.readAllBytes(Paths.get(s"$sfDir/embeddings.parquet")))
+      val idxName = operators.IvfIndex.indexTable(dir)
+      val (idx1, _) = operators.IvfIndex.ensure(spark, dir)
+      val n1 = idx1.count()
+      val built = mtimes(idxName)
+      // the downstream generation rides the same corpus fingerprint
+      operators.IvfIndex.ensureRebalanced(spark, dir)
+      val g2Name = operators.IvfIndex.indexG2Table(dir)
+      val g2Built = mtimes(g2Name)
+      // regenerate the corpus in place: same path, fresh mtime on the
+      // data file only
+      val dirMtime = Files.getLastModifiedTime(Paths.get(s"$dir/embeddings.parquet"))
+      Files.write(data, Files.readAllBytes(Paths.get(s"$sfDir/embeddings.parquet")))
+      data.toFile.setLastModified(System.currentTimeMillis() + 2000)
+      if (suffix.nonEmpty)
+        assert(Files.getLastModifiedTime(Paths.get(s"$dir/embeddings.parquet")) == dirMtime,
+          "an in-place rewrite must leave the corpus directory's mtime as it was")
+      spark.catalog.refreshByPath(dir)
+      val (idx2, _) = operators.IvfIndex.ensure(spark, dir)
+      assert(idx2.count() == n1)
+      assert(mtimes(idxName) != built,
+        "stale fingerprint must trigger a rebuild (data files unchanged)")
+      // generation 2's fingerprint embeds generation 1's, so the applied
+      // rebalance must rebuild with it — serving a gen-2 built over the
+      // OLD corpus against the new gen-1 would be the silent-staleness bug
+      val (idx2g2, _) = operators.IvfIndex.ensureRebalanced(spark, dir)
+      assert(idx2g2.count() == n1)
+      assert(mtimes(g2Name) != g2Built,
+        "corpus rewrite must invalidate the applied rebalance too")
+    }
 
   test("serveFreshestApp: appended generation when current, base fallback when its marker is retired") {
     import org.apache.spark.sql.functions._

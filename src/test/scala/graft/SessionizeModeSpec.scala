@@ -143,25 +143,29 @@ class SessionizeModeSpec extends SparkSpecBase {
       s"first difference: ${served.zipAll(inPlan, null, null).find(p => p._1 != p._2)}")
   }
 
-  test("a dim marked by the bare events identity rebuilds under the recipe fingerprint") {
-    import operators.{Artifacts, Scd2Dim}
-    val dimT = Scd2Dim.dimTable(sfDir)
-    def mtimes: Seq[Long] = Option(Artifacts.tableLoc(spark, dimT).listFiles).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).sorted
-    Scd2Dim.ensure(spark, sfDir)
-    // a marker written before the recipe segment existed: identity only
-    val bare = Artifacts.fileIdentity(new java.io.File(s"$sfDir/events.parquet"))
-    Artifacts.commitMarker(spark, dimT, bare)
-    val before = mtimes
-    assert(before.nonEmpty)
-    Thread.sleep(1100) // file mtimes resolve to the second on some filesystems
-    Scd2Dim.ensure(spark, sfDir)
-    val after = mtimes
-    val marker = Artifacts.readMarker(spark, dimT)
-    assert(marker != bare && marker.startsWith(s"$bare|"), s"marker $marker")
-    assert(after.nonEmpty && after.min > before.max,
-      s"dim files not rewritten: before $before, after $after")
-  }
+  for ((family, table, corpus, ensure) <- Seq[(String, String, String, () => Any)](
+      ("dim", operators.Scd2Dim.dimTable(sfDir), "events",
+        () => operators.Scd2Dim.ensure(spark, sfDir)),
+      ("registry", operators.ShingleRegistry.registryTable(sfDir), "documents",
+        () => operators.ShingleRegistry.ensure(spark, sfDir))))
+    test(s"a $family marked by the bare $corpus identity rebuilds under the recipe fingerprint") {
+      import operators.Artifacts
+      def mtimes: Seq[Long] = Option(Artifacts.tableLoc(spark, table).listFiles).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.lastModified).sorted
+      ensure()
+      // a marker written before the recipe segment existed: identity only
+      val bare = Artifacts.corpusIdentity(sfDir, corpus)
+      Artifacts.commitMarker(spark, table, bare)
+      val before = mtimes
+      assert(before.nonEmpty)
+      Thread.sleep(1100) // file mtimes resolve to the second on some filesystems
+      ensure()
+      val after = mtimes
+      val marker = Artifacts.readMarker(spark, table)
+      assert(marker != bare && marker.startsWith(s"$bare|"), s"marker $marker")
+      assert(after.nonEmpty && after.min > before.max,
+        s"$family files not rewritten: before $before, after $after")
+    }
 
   test("agg_mode_freq matches a Scala recompute with lowest-value tiebreak") {
     import spark.implicits._

@@ -431,7 +431,7 @@ class StreamingSpec extends SparkSpecBase {
     //    generation, with a forced DOUBLE DELIVERY of micro-batch 1
     val gen = s"graft_shingle_specgen_${System.nanoTime()}"
     val genLoc = new java.io.File(scratchPath(gen))
-    operators.ShingleRegistry.seedGeneration(spark, reg, gen, genLoc)
+    operators.ShingleRegistry.RegistryLayout.seed(reg, gen, genLoc)
     try {
       val msUp = MemoryStream[Doc]
       val qUp = msUp.toDF().writeStream
@@ -503,7 +503,7 @@ class StreamingSpec extends SparkSpecBase {
     //    generation, with a forced DOUBLE DELIVERY of micro-batch 1
     val gen = s"graft_ivf_specgen_${System.nanoTime()}"
     val genLoc = new java.io.File(scratchPath(gen))
-    operators.IvfIndex.seedIndexGeneration(spark, baseIdx, gen, genLoc)
+    operators.IvfIndex.IndexLayout.seed(baseIdx, gen, genLoc)
     def files(): Map[String, Long] =
       Option(genLoc.listFiles()).toSeq.flatten
         .filter(_.getName.endsWith(".parquet"))
