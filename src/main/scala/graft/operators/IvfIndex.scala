@@ -386,8 +386,7 @@ object IvfIndex {
     s"${fingerprint(dir, BaseAlgo)}|append-mod3"
 
   /** Find-or-build the BASE index generation: [[ensure]]'s exact recipe
-    * (trained ⌈√n⌉-cell codebook, row-local assignment, cell-bucketed
-    * files, fingerprint freshness, metadata-only re-registration) over
+    * (trained ⌈√n⌉-cell codebook, row-local assignment) over
     * the base slice (vec_id % 10 != 3). nlist/stride derive from the
     * BASE count, and stride seeds are the base slice's own ids — the
     * mirror re-derives both from the same filter.
@@ -638,10 +637,8 @@ object IvfIndex {
   private val SpillAlgo =
     s"ivf-lloyd${VectorOps.IvfLloydIters}-stride-f$SpillFactor|spill$SpillK"
 
-  /** Find-or-build the SPILLED index: [[ensure]]'s contract (trained
-    * codebook, row-local assignment, cell-bucketed files, fingerprint
-    * freshness, metadata-only re-registration in a new JVM) at the
-    * multi-assignment geometry — nlist = [[SpillFactor]]·⌈√n⌉ cells,
+  /** Find-or-build the SPILLED index: [[ensure]]'s recipe (trained
+    * codebook, row-local assignment) at the multi-assignment geometry — nlist = [[SpillFactor]]·⌈√n⌉ cells,
     * each vector stored under its [[SpillK]] nearest cells with its
     * probe rank (`crank` 1..SpillK). Returns (spilled index, codebook).
     *
@@ -673,8 +670,7 @@ object IvfIndex {
     * the geometry it actually sits in; the residual codebook trains on
     * the PRIMARY (crank = 1) residuals only — training on all copies
     * would double-count every vector. Codes table = SpillK·n rows,
-    * cell-bucketed, keyed (vec_id, cell); same fingerprint /
-    * re-registration contract as every artifact family.
+    * cell-bucketed, keyed (vec_id, cell).
     */
   def ensurePqrSpilled(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
     ensureResidualPq(spark, fingerprint(dir, PqrSpillAlgo),
@@ -697,10 +693,7 @@ object IvfIndex {
     *    stride-sampled seeds + fixed Lloyd rounds), kilobytes, broadcast
     *    at query time to build each query's LUT.
     *
-    * Same [[Artifacts]] freshness contract as the IVF tables: a new JVM
-    * over current artifacts re-registers catalog metadata only. The
-    * encode reads the PERSISTED
-    * index (vectors + cells already co-located per bucket) — the corpus
+    * The encode reads the PERSISTED index (vectors + cells already co-located per bucket) — the corpus
     * parquet is never re-touched.
     */
   def ensurePq(spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
@@ -719,8 +712,7 @@ object IvfIndex {
     * — the FAISS-standard IVF-PQ layout: codes quantize
     * emb − centroid(cell) ([[VectorOps.withResiduals]]), not the raw
     * vector, so the per-subspace budget encodes within-cell offsets.
-    * Table shapes, bucketing, freshness and the metadata-only new-JVM
-    * re-registration are identical to [[ensurePq]]:
+    * Table shapes are [[ensurePq]]'s:
     *
     *  - `graft_pqr_codes_<corpus>`: (vec_id, cell, codes ARRAY<BIGINT>),
     *    cell-bucketed;

@@ -39,10 +39,10 @@ object ShingleRegistry {
     * recipe no longer derives. The bitmask, retraction and compaction
     * fingerprints chain from it.
     */
-  private[graft] val Recipe = "shingle3-md5batch8-v1"
+  private val Recipe = "shingle3-md5batch8-v1"
 
   /** Documents corpus identity plus [[Recipe]]: the registry's marker. */
-  private[graft] def fingerprint(dir: String): String =
+  private def fingerprint(dir: String): String =
     s"${corpusIdentity(dir, "documents")}|$Recipe"
 
   /** Table shapes: every registry generation is bucketed and sorted by
@@ -71,8 +71,8 @@ object ShingleRegistry {
   def upsertedTable(dir: String): String = s"graft_shingle_reg2_${tag(dir)}"
 
   /** ONE idempotent upsert of a delivered document micro-batch into the
-    * registry generation `name` (seeded with [[RegistryLayout]]): shingle the batch, anti-join the LIVE
-    * table (merge-hinted — the registry side reads co-partitioned from
+    * registry generation `name` (seeded with [[RegistryLayout]]): shingle
+    * the batch, anti-join the LIVE table (merge-hinted — the registry side reads co-partitioned from
     * its buckets, no Exchange), and APPEND the novel survivors as
     * correctly-bucketed files tagged `first_batch = ingestBatch`.
     * Replays are no-ops BY CONSTRUCTION — a replayed delivery's novel
@@ -116,12 +116,13 @@ object ShingleRegistry {
   val RetractedBatch = 5L
   private val RetractedBit = 1L << RetractedBatch
 
-  /** Bitmask rows with `m`, their mask with the withdrawn bit cleared,
-    * and the retraction remap: the lowest surviving bit of `m` as a first
-    * batch — log2(m & -m) is exact for powers of two.
-    */
+  /** Bitmask rows plus `m`: their mask with the withdrawn bit cleared. */
   private def withSurvivors(reg: DataFrame): DataFrame =
     reg.withColumn("m", col("batches").bitwiseAND(lit(~RetractedBit)))
+
+  /** The retraction remap of a [[withSurvivors]] row: the lowest surviving
+    * bit of `m` as a first batch — log2(m & -m) is exact for powers of two.
+    */
   private def lowestSurvivor: org.apache.spark.sql.Column = expr("CAST(log2(m & -m) AS BIGINT)")
 
   def bitmaskTable(dir: String): String = s"graft_shingle_regb_${tag(dir)}"
