@@ -91,7 +91,7 @@ object RecallProbe {
       Curve(label, recallCurve(cand, truth, q, nps, refineR))
     lazy val rawCand = {
       val (codes, pqCb) = IvfIndex.ensurePq(spark, dir)
-      rawPqAdc(codes, probes.select(col("q_id"), col("cell"), col("cr")), q, pqCb)
+      pqAdc(codes, probes.select(col("q_id"), col("cell"), col("cr")), q, pqCb)
     }
     curve("cell-stage (exact L2 in probed cells)", exactInProbed(gen1._1, probes)) #::
       curve("end-to-end ADC, raw-vector PQ", rawCand) #::

@@ -19,30 +19,35 @@ import org.apache.spark.sql.types._
   *
   * Numerical contract: IDENTICAL values and ordering to the HOF
   * formulations they replace —
-  *  - cosine: negsim = −(round₆?(a·c / (‖a‖·‖c‖))), candidates ranked
+  *  - cosine: negsim = −round₆(a·c / (‖a‖·‖c‖)), candidates ranked
   *    by `Double.compare` on negsim then ascending cell (exactly the
   *    lexicographic struct order `array_min` / `array_sort` used,
   *    including −0.0 < 0.0) — except a NaN cosine, which ranks FIRST
   *    like the `csim DESC` row_number formulations and the SQL mirrors
   *    (see [[NearestCentroid.compareNegsim]]);
-  *  - L2: d2 = round₆(‖a‖² − 2a·c + ‖c‖²) with ‖a‖² evaluated once per
-  *    row and ‖c‖² read from the codebook column, ranked by
-  *    `Double.compare` then ascending id.
+  *  - squared L2 ([[PqEncodeAll]], [[PqLutAll]]): d2 = round₆(‖v‖² −
+  *    2v·c + ‖c‖²) per subspace slice v, ‖v‖² evaluated once per
+  *    (row, subspace) and ‖c‖² read from the codebook column; the
+  *    whole-vector argmin is the one-subspace encode.
   *  round₆ is [[graft.DriverRound]]`(_, 6)`, Spark's `Round(_, 6)` on
   *  doubles exactly (HALF_UP, NaN/∞ passthrough).
   *
   * The codebook child MUST be a broadcast-stable array (one physical
   * buffer per partition): decode of the struct array into primitive
   * arrays is cached keyed on the underlying buffer identity, so the
-  * per-row cost is the dot products alone. Both expressions are
+  * per-row cost is the dot products alone. All three expressions are
   * private to the engine ([[graft.operators.VectorOps]] call sites).
   */
 object NearestCentroid {
-  private[functions] def dot(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
+  /** Σ a[aOff + j]·b[bOff + j] over j < n, folded in ascending j — the
+    * one multiply-add loop under every kernel below, and the fold order
+    * of [[GraftFunctions.dot]].
+    */
+  private[functions] def dot(a: Array[Double], aOff: Int, b: Array[Double], bOff: Int,
+      n: Int): Double = {
     var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i) * b(i); i += 1 }
+    var j = 0
+    while (j < n) { s += a(aOff + j) * b(bOff + j); j += 1 }
     s
   }
 
@@ -143,7 +148,7 @@ private[functions] trait CodebookCache { self: Expression =>
   }
 }
 
-/** Top-`k` nearest cells by (optionally 6 dp-rounded) cosine — returns
+/** Top-`k` nearest cells by 6 dp-rounded cosine — returns
   * ARRAY<STRUCT<negsim DOUBLE, cell <idType>>> of the k lexicographic-
   * smallest (negsim, cell) pairs ascending, exactly
   * `slice(array_sort(scored), 1, k)` of the HOF it replaces for every
@@ -152,8 +157,7 @@ private[functions] trait CodebookCache { self: Expression =>
   * semantics of the replaced row_number formulations and of the DuckDB
   * oracle mirrors, which both sort NaN as the largest double.
   */
-case class NearestCellsTopK(emb: Expression, nrm: Expression, cb: Expression,
-    k: Int, rounded: Boolean)
+case class NearestCellsTopK(emb: Expression, nrm: Expression, cb: Expression, k: Int)
     extends Expression with CodegenFallback with CodebookCache {
 
   override def children: Seq[Expression] = Seq(emb, nrm, cb)
@@ -180,8 +184,9 @@ case class NearestCellsTopK(emb: Expression, nrm: Expression, cb: Expression,
     var filled = 0
     var i = 0
     while (i < m) {
-      val sim = NearestCentroid.dot(x, vecs(i)) / (xn * aux(i))
-      val neg = -(if (rounded) graft.DriverRound(sim, 6) else sim)
+      val cv = vecs(i)
+      val sim = NearestCentroid.dot(x, 0, cv, 0, math.min(x.length, cv.length)) / (xn * aux(i))
+      val neg = -graft.DriverRound(sim, 6)
       // find insertion position among the filled prefix
       var pos = filled
       while (pos > 0 && {
@@ -198,13 +203,8 @@ case class NearestCellsTopK(emb: Expression, nrm: Expression, cb: Expression,
       }
       i += 1
     }
-    val out = new Array[Any](filled)
-    var j = 0
-    while (j < filled) {
-      out(j) = new GenericInternalRow(Array[Any](bestNeg(j), ids(bestIdx(j))))
-      j += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(Array.tabulate[Any](filled)(j =>
+      new GenericInternalRow(Array[Any](bestNeg(j), ids(bestIdx(j))))))
   }
 
   override protected def withNewChildrenInternal(
@@ -212,88 +212,24 @@ case class NearestCellsTopK(emb: Expression, nrm: Expression, cb: Expression,
     copy(emb = newChildren(0), nrm = newChildren(1), cb = newChildren(2))
 }
 
-/** Nearest centroid by rounded squared L2 — returns
-  * STRUCT<d2 DOUBLE, id <idType>>, the lexicographic min of (d2, id),
-  * exactly `array_min` of the HOF it replaces. ‖a‖² is evaluated once
-  * per row; ‖c‖² is field 2 of the codebook structs.
+/** The subspace arithmetic both PQ kernels share, over a FLAT (sub, cid,
+  * cv, cnn2) codebook array sorted by (sub, cid): subspace `sub` of a
+  * row is v = slice(emb, sub·w+1, w) (truncated at the array end, empty
+  * past it), its entries are the codebook positions [subStart(sub),
+  * subStart(sub+1)), and entry i scores round₆(v·v − 2·v·cv + cnn2) with
+  * both dots folded ascending.
   */
-case class NearestCentroidL2(emb: Expression, cb: Expression)
-    extends Expression with CodegenFallback with CodebookCache {
+private[functions] trait SubspaceL2 extends CodebookCache { self: Expression =>
+  protected def emb: Expression
+  protected def m: Int
+  protected def w: Int
 
-  override def children: Seq[Expression] = Seq(emb, cb)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_nearest_centroid_l2"
+  @transient protected final var subStart: Array[Int] = _ // m+1 offsets into the flat arrays
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("d2", DoubleType, nullable = false),
-    StructField("id", idType, nullable = false)))
-
-  override def eval(input: InternalRow): Any = {
-    val e = emb.eval(input)
-    val c = cb.eval(input)
-    if (e == null || c == null) return null
-    load(c.asInstanceOf[ArrayData])
-    val x = e.asInstanceOf[ArrayData].toDoubleArray()
-    val dee = NearestCentroid.dot(x, x)
-    val m = vecs.length
-    if (m == 0) return null
-    var bestD2 = 0.0
-    var bestI = -1
-    var i = 0
-    while (i < m) {
-      val d2 = graft.DriverRound(
-        dee - 2.0 * NearestCentroid.dot(x, vecs(i)) + aux(i), 6)
-      if (bestI < 0 || {
-        val cmp = java.lang.Double.compare(d2, bestD2)
-        cmp < 0 || (cmp == 0 && idKeys(i) < idKeys(bestI))
-      }) { bestD2 = d2; bestI = i }
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](bestD2, ids(bestI)))
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): NearestCentroidL2 =
-    copy(emb = newChildren(0), cb = newChildren(1))
-}
-
-/** Compiled all-subspace PQ encode over a broadcast FLAT (sub, cid, cv,
-  * cnn2) codebook array sorted by (sub, cid) — the r13 escalation of the
-  * same SCALE.md lesson the two expressions above encode: the residual-PQ
-  * codebooks are k=128 centroids per subspace × m=16 subspaces, and the
-  * interpreted `array_min(transform(...))` argmin the encode paths used
-  * walked 128 candidates × 16 subspaces per vector in interpreted HOF
-  * code, dominating the persisted-artifact cold builds (three residual
-  * trainings ≈ 36 s of the sf0.1 shared stage). One eval call per vector
-  * runs every subspace's candidate loop in plain JVM code.
-  *
-  * Numerical contract, IDENTICAL to the HOF formulation in
-  * [[graft.operators.VectorOps.withPqCodes]]/`withPqStructs`:
-  * per subspace `sub`, v = slice(emb, sub·w+1, w), dss2 = v·v (ascending
-  * fold), d2 = round₆(dss2 − 2·v·cv + cnn2), winner = lexicographic min
-  * of (d2, cid) with `Double.compare` (NaN largest — `array_min`'s
-  * double ordering) and ascending-cid tiebreak. Returns
-  * ARRAY<STRUCT<cid, d2>> indexed by subspace (position s+1 = subspace
-  * s); a subspace with no codebook entries yields a null-fielded struct,
-  * exactly like `array_min` over an empty filter result.
-  *
-  * The codebook decodes through [[CodebookCache]]; the per-subspace
-  * offsets derive from its decoded `subs` column.
-  */
-case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
-    extends Expression with CodegenFallback with CodebookCache {
-
-  override def children: Seq[Expression] = Seq(emb, cb)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_pq_encode_all"
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cid", idType, nullable = true),
-    StructField("d2", DoubleType, nullable = true))), containsNull = false)
-
-  @transient private var subStart: Array[Int] = _ // m+1 offsets into the flat arrays
-
-  override def eval(input: InternalRow): Any = {
+  /** The row's vector as doubles with the codebook decoded, or null when
+    * either is null.
+    */
+  protected final def loadRow(input: InternalRow): Array[Double] = {
     val e = emb.eval(input)
     val c = cb.eval(input)
     if (e == null || c == null) return null
@@ -308,31 +244,65 @@ case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
       }
       subStart = starts
     }
-    val x = e.asInstanceOf[ArrayData].toDoubleArray()
+    e.asInstanceOf[ArrayData].toDoubleArray()
+  }
+
+  protected final def sliceLen(x: Array[Double], sub: Int): Int =
+    math.max(0, math.min(w, x.length - sub * w))
+
+  /** v·v of subspace `sub`'s slice. */
+  protected final def selfDot(x: Array[Double], sub: Int): Double =
+    NearestCentroid.dot(x, sub * w, x, sub * w, sliceLen(x, sub))
+
+  /** round₆(vv − 2·v·cv + cnn2) of subspace `sub`'s slice to entry `i`. */
+  protected final def d2(x: Array[Double], sub: Int, vv: Double, i: Int): Double = {
+    val cv = vecs(i)
+    val s = NearestCentroid.dot(x, sub * w, cv, 0, math.min(sliceLen(x, sub), cv.length))
+    graft.DriverRound(vv - 2.0 * s + aux(i), 6)
+  }
+}
+
+/** Compiled all-subspace PQ encode: one eval call per vector runs every
+  * subspace's candidate loop in plain JVM code (the residual-PQ codebooks
+  * are k=128 centroids × m=16 subspaces, too many candidates for an
+  * interpreted HOF argmin). With m = 1 and w ≥ the vector length it is
+  * the whole-vector squared-L2 argmin
+  * ([[graft.operators.VectorOps.withNearestCentroidD2]]).
+  *
+  * Per subspace the winner is the lexicographic min of (d2, cid)
+  * ([[SubspaceL2]]) with `Double.compare` (NaN largest — `array_min`'s
+  * double ordering) and ascending-cid tiebreak. Returns
+  * ARRAY<STRUCT<cid, d2>> indexed by subspace (position s+1 = subspace
+  * s); a subspace with no codebook entries yields a null-fielded struct,
+  * exactly like `array_min` over an empty filter result.
+  */
+case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
+    extends Expression with CodegenFallback with SubspaceL2 {
+
+  override def children: Seq[Expression] = Seq(emb, cb)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_pq_encode_all"
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("cid", idType, nullable = true),
+    StructField("d2", DoubleType, nullable = true))), containsNull = false)
+
+  override def eval(input: InternalRow): Any = {
+    val x = loadRow(input)
+    if (x == null) return null
     val out = new Array[Any](m)
     var sub = 0
     while (sub < m) {
-      val off = sub * w
-      // slice(emb, off+1, w) truncates at the array end; dot folds ascending
-      val vLen = math.max(0, math.min(w, x.length - off))
-      var dss = 0.0
-      var t = 0
-      while (t < vLen) { val xv = x(off + t); dss += xv * xv; t += 1 }
+      val vv = selfDot(x, sub)
       var bestD2 = 0.0
       var bestI = -1
       var i = subStart(sub)
-      val end = subStart(sub + 1)
-      while (i < end) {
-        val cv = vecs(i)
-        val n = math.min(vLen, cv.length)
-        var s = 0.0
-        var j = 0
-        while (j < n) { s += x(off + j) * cv(j); j += 1 }
-        val d2 = graft.DriverRound(dss - 2.0 * s + aux(i), 6)
+      while (i < subStart(sub + 1)) {
+        val d = d2(x, sub, vv, i)
         if (bestI < 0 || {
-          val cmp = java.lang.Double.compare(d2, bestD2)
+          val cmp = java.lang.Double.compare(d, bestD2)
           cmp < 0 || (cmp == 0 && idKeys(i) < idKeys(bestI))
-        }) { bestD2 = d2; bestI = i }
+        }) { bestD2 = d; bestI = i }
         i += 1
       }
       out(sub) =
@@ -348,92 +318,60 @@ case class PqEncodeAll(emb: Expression, cb: Expression, m: Int, w: Int)
     copy(emb = newChildren(0), cb = newChildren(1))
 }
 
-/** Compiled full ADC lookup table over the same flat (sub, cid, cv,
-  * cnn2) codebook layout as [[PqEncodeAll]] (r13): given a residual
-  * vector, emit ARRAY<DOUBLE> of length m·k where slot sub·k + cid holds
-  * round₆(v·v − 2·v·cv + cnn2) with v = slice(qr, sub·w+1, w) — the
-  * per-(query, cell) LUT the refine-serve rows previously materialized
-  * as m·k ROWS per (query, cell) via an explode + broadcast join +
-  * grouped re-pack (three exchanges and an interpreted sort, ~1.5 s of
-  * every serve clock). Values are bit-identical: same slices, same
-  * ascending dot folds (cnn2 equals the per-row dot(cv, cv) the row form
-  * computed), same 6 dp round. Slots with no codebook entry stay NaN —
-  * unreachable, since encode cids come from the same codebook.
+/** Compiled full ADC lookup table over the same flat codebook layout as
+  * [[PqEncodeAll]]: given a query vector, emit ARRAY<DOUBLE> of
+  * length m·k where slot sub·k + cid holds the [[SubspaceL2]] distance of
+  * the query's subspace slice to that entry — the table every ADC row
+  * scores its codes against, one per query (raw PQ) or per (query,
+  * probed cell) residual (residual PQ). Slots with no codebook entry
+  * stay NaN — unreachable, since encode cids come from the same codebook.
   */
-case class PqLutAll(qr: Expression, cb: Expression, m: Int, w: Int, k: Int)
-    extends Expression with CodegenFallback with CodebookCache {
+case class PqLutAll(emb: Expression, cb: Expression, m: Int, w: Int, k: Int)
+    extends Expression with CodegenFallback with SubspaceL2 {
 
-  override def children: Seq[Expression] = Seq(qr, cb)
+  override def children: Seq[Expression] = Seq(emb, cb)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_lut_all"
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def eval(input: InternalRow): Any = {
-    val e = qr.eval(input)
-    val c = cb.eval(input)
-    if (e == null || c == null) return null
-    load(c.asInstanceOf[ArrayData])
-    val x = e.asInstanceOf[ArrayData].toDoubleArray()
+    val x = loadRow(input)
+    if (x == null) return null
     val out = new Array[Double](m * k)
     java.util.Arrays.fill(out, Double.NaN)
-    // per-subspace self-dots of the query slices, once each
-    val dss = new Array[Double](m)
     var sub = 0
     while (sub < m) {
-      val off = sub * w
-      val vLen = math.max(0, math.min(w, x.length - off))
-      var s = 0.0
-      var t = 0
-      while (t < vLen) { val xv = x(off + t); s += xv * xv; t += 1 }
-      dss(sub) = s
-      sub += 1
-    }
-    val n = vecs.length
-    var i = 0
-    while (i < n) {
-      val sb = subs(i)
-      if (sb < m) {
-        val off = sb * w
-        val vLen = math.max(0, math.min(w, x.length - off))
-        val cv = vecs(i)
-        val nn = math.min(vLen, cv.length)
-        var s = 0.0
-        var j = 0
-        while (j < nn) { s += x(off + j) * cv(j); j += 1 }
-        val slot = sb * k + idKeys(i).toInt
-        if (slot >= 0 && slot < out.length)
-          out(slot) = graft.DriverRound(dss(sb) - 2.0 * s + aux(i), 6)
+      val vv = selfDot(x, sub)
+      var i = subStart(sub)
+      while (i < subStart(sub + 1)) {
+        val slot = sub * k + idKeys(i).toInt
+        if (slot >= 0 && slot < out.length) out(slot) = d2(x, sub, vv, i)
+        i += 1
       }
-      i += 1
+      sub += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): PqLutAll =
-    copy(qr = newChildren(0), cb = newChildren(1))
+    copy(emb = newChildren(0), cb = newChildren(1))
 }
 
 /** Column-API surface (engine-internal; not SQL-registered — the SQL
   * mirrors re-derive the same math from first principles).
   */
 object NearestCentroidFunctions {
-  def nearestCells(emb: Column, nrm: Column, cb: Column, k: Int,
-      rounded: Boolean): Column =
+  def nearestCells(emb: Column, nrm: Column, cb: Column, k: Int): Column =
     Bridge.column(NearestCellsTopK(
-      Bridge.expression(emb), Bridge.expression(nrm), Bridge.expression(cb),
-      k, rounded))
-
-  def nearestCentroidL2(emb: Column, cb: Column): Column =
-    Bridge.column(NearestCentroidL2(
-      Bridge.expression(emb), Bridge.expression(cb)))
+      Bridge.expression(emb), Bridge.expression(nrm), Bridge.expression(cb), k))
 
   def pqEncodeAll(emb: Column, cb: Column, m: Int, w: Int): Column =
     Bridge.column(PqEncodeAll(
       Bridge.expression(emb), Bridge.expression(cb), m, w))
 
-  def pqLutAll(qr: Column, cb: Column, m: Int, w: Int, k: Int): Column =
+  def pqLutAll(emb: Column, cb: Column, m: Int, w: Int, k: Int): Column =
     Bridge.column(PqLutAll(
-      Bridge.expression(qr), Bridge.expression(cb), m, w, k))
+      Bridge.expression(emb), Bridge.expression(cb), m, w, k))
 }

@@ -72,7 +72,7 @@ object IvfIndex {
     * cell column.
     */
   private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
-    VectorOps.withNearestCells(e, cents, keep = 1, rounded = true)
+    VectorOps.withNearestCells(e, cents, keep = 1)
       .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell"))
 
   /** Find-or-build an (index, codebook) geometry over `corpus`: trains the

@@ -91,31 +91,10 @@ object VectorOps extends QueryModule {
     timed("cachedKnn5")(cachedKnn5(spark, dir).count())
     // persisted IVF index + PQ codes/codebook: first bench run on a
     // corpus pays the builds here (their own shared-stage line item, not
-    // the serve rows' clocks); subsequent sessions re-register metadata
-    // cold-build JIT warmup: the FIRST PqEncodeAll consumer
-    // (ensurePqResidual, k=128 m=16) pays ~4 s of interpreter time before
-    // HotSpot compiles the encode loop — later structurally identical
-    // builds run ~3 s vs 7.3. A few thousand tiny synthetic
-    // encodes push eval past the C2 threshold BEFORE the real build;
-    // gated on the artifact being absent so a warm warehouse never pays
-    // the (~0.3 s) warmup.
-    if (!spark.catalog.tableExists(IvfIndex.pqrCodesTable(dir)))
-      timed("jitWarmup") {
-        val cents = spark.range(8).select(
-          (col("id") / lit(4)).cast("long").as("sub"),
-          (col("id") % lit(4)).cast("long").as("cid"),
-          expr("transform(sequence(1, 4), x -> CAST(x * (id + 1) AS DOUBLE))").as("cv"))
-        val cbm = oneRowArray(
-          cents.withColumn("cnn2", GraftFunctions.dot(col("cv"), col("cv"))),
-          "pqarr", col("sub"), col("cid"), col("cv"), col("cnn2"))
-        spark.range(5000)
-          .select(expr("transform(sequence(1, 8), x -> CAST(x + id AS DOUBLE))").as("emb"))
-          .crossJoin(broadcast(cbm))
-          .select(graft.functions.NearestCentroidFunctions
-            .pqEncodeAll(col("emb"), col("pqarr"), 2, 4).as("enc"))
-          .agg(sum(expr("size(enc)"))) // agg forces eval; count() would prune it
-          .collect()
-      }
+    // the serve rows' clocks); subsequent sessions re-register metadata.
+    // The codebook trainings above already run the PqEncodeAll kernel
+    // (the L2 argmin is its one-subspace case), so the residual build
+    // below finds it JIT-compiled
     timed("ensure")(IvfIndex.ensure(spark, dir))
     timed("ensurePq")(IvfIndex.ensurePq(spark, dir))
     timed("ensurePqResidual")(IvfIndex.ensurePqResidual(spark, dir))
@@ -414,44 +393,6 @@ object VectorOps extends QueryModule {
         WHERE cr = 1
       ), """ + rebalanceStepSqlGen("", "assigned", "centn")
 
-  /** Row-local PQ encode at (row, subspace) granularity — the fast path
-    * every exploding consumer uses (`vec_pq_encode`, `vec_pq_adc_topk`,
-    * [[annIvfpqTopK]], [[pqLloydRound]]): the input fans out ×4 with a
-    * codegen'd slice + self-dot PROJECTION (HOF lambdas are interpreted,
-    * so hot arithmetic must live in projections — measured 23 s → ~2 s
-    * on the 20k-vector scale fixture), and only the 16-centroid argmin
-    * stays a lambda, scoring against the per-subspace slot of the
-    * broadcast codebook (no per-row filter of the flat 64-entry array).
-    * Appends (sub, v, cid, d2) to the passthrough columns; values are
-    * bit-identical to [[withPqStructs]] (same dots, same 6 dp round,
-    * same cid tiebreak), which remains for the one consumer that needs
-    * the PACKED per-vector array without a repack shuffle (the
-    * [[IvfIndex]] codes table build).
-    */
-  private[graft] def withPqCodes(df: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame,
-      m: Int = 4, w: Int = 16): org.apache.spark.sql.DataFrame = {
-    // compiled all-subspace encode (r13, SCALE.md escalation): ONE eval
-    // call per vector runs every subspace's candidate loop in JVM code —
-    // the interpreted array_min(transform(...)) walked k candidates per
-    // (row, sub) in HOF code, which dominated the residual-PQ (k=128,
-    // m=16) trainings. Values bit-identical (same slices, same ascending
-    // dot folds, same 6 dp round, same (d2, cid) lexicographic min), so
-    // every SQL mirror is untouched.
-    val cbm = oneRowArray(
-      cents.withColumn("cnn2", GraftFunctions.dot(col("cv"), col("cv"))),
-      "pqarr", col("sub"), col("cid"), col("cv"), col("cnn2"))
-    df.crossJoin(broadcast(cbm))
-      .withColumn("enc", graft.functions.NearestCentroidFunctions
-        .pqEncodeAll(col("emb"), col("pqarr"), m, w))
-      .withColumn("sub", explode(array((0 until m).map(i => lit(i.toLong)): _*)))
-      .withColumn("v", expr(s"slice(emb, sub*$w+1, $w)"))
-      .withColumn("tc", element_at(col("enc"), (col("sub") + 1).cast("int")))
-      .withColumn("cid", col("tc")("cid"))
-      .withColumn("d2", col("tc")("d2"))
-      .drop("pqarr", "enc", "tc")
-  }
-
   /** Fixed Lloyd passes for the [[PqK]]-centroid-per-subspace PQ
     * codebook — shared constant with [[pqCodebookSql]].
     */
@@ -467,7 +408,13 @@ object VectorOps extends QueryModule {
   private[graft] def pqLloydRound(idx: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame,
       m: Int = 4, w: Int = 16): org.apache.spark.sql.DataFrame = {
-    val asg = withPqCodes(idx, cents, m, w).select(col("sub"), col("cid"), col("v"))
+    // one row per (vector, subspace): BIGINT sub, because the means
+    // below become the next round's codebook, whose sub PqEncodeAll reads
+    // as a long
+    val asg = withPqStructs(idx, cents, m, w)
+      .select(explode(col("pq")).as("tc"), col("emb"))
+      .select(col("tc.sub").cast("long").as("sub"), col("tc.cid").as("cid"),
+        expr(s"slice(emb, tc.sub*$w+1, $w)").as("v"))
     val means = asg
       .select(col("sub"), col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("sub"), col("cid"), col("pos"))
@@ -593,32 +540,22 @@ object VectorOps extends QueryModule {
   private[graft] val PqrM = 16
   private[graft] val PqrW = 4
 
-  /** Per-(query, probed cell) residual ADC lookup table as ONE flat
-    * array row — slot = sub·k + cid — computed by the compiled
-    * [[graft.functions.PqLutAll]] expression so the ADC scan can look
-    * distances up ROW-LOCALLY. Replaces (r13) the row-form LUT the serve
-    * rows materialized (×PqrM explode, broadcast codebook join, qd2
-    * projection) and then broadcast-hash-joined as a
-    * Q×nprobe×PqrM×PqrK-row relation against the ×PqrM-exploded codes:
-    * three exchanges, a 1.6M-entry broadcast build and a re-aggregation,
-    * ~1.5 s of every refine-serve clock at sf0.1. Values bit-identical —
-    * same qr slices, same ascending dot folds (cnn2 = dot(cv, cv) as the
-    * row form computed per row), same 6 dp round.
+  /** ADC lookup tables: for every row of `q`, the compiled
+    * [[graft.functions.PqLutAll]] table of its query vector `qv` against
+    * the (sub, cid, cv) codebook `cb` — one flat array `lutarr` whose slot
+    * sub·k + cid holds round₆(v·v − 2·v·cv + ‖cv‖²) for the query's
+    * subspace slice v — next to the `keys` columns. Raw PQ passes each
+    * query's `q_emb` (one table per query); residual PQ passes
+    * `q_emb − cvec` (one table per probed cell). Values are bit-identical
+    * to the row-form tables the DuckDB mirrors build (same slices, same
+    * ascending dot folds, same 6 dp round).
     */
-  private def residualLut(probes: org.apache.spark.sql.DataFrame,
-      cb: org.apache.spark.sql.DataFrame, rcb: org.apache.spark.sql.DataFrame,
-      m: Int, w: Int, k: Int): org.apache.spark.sql.DataFrame = {
-    val rcbArr = oneRowArray(
-      rcb.withColumn("cnn2", GraftFunctions.dot(col("cv"), col("cv"))),
-      "pqarr", col("sub"), col("cid"), col("cv"), col("cnn2"))
-    probes
-      .join(broadcast(cb.select(col("cell"), col("cvec"))), Seq("cell"))
-      .withColumn("qr", zip_with(col("q_emb"), col("cvec"), (a, b) => a - b))
-      .crossJoin(broadcast(rcbArr))
-      .select(col("q_id"), col("cell"),
-        graft.functions.NearestCentroidFunctions
-          .pqLutAll(col("qr"), col("pqarr"), m, w, k).as("lutarr"))
-  }
+  private[graft] def pqLut(q: org.apache.spark.sql.DataFrame, qv: Column,
+      cb: org.apache.spark.sql.DataFrame, m: Int, w: Int, k: Int,
+      keys: Column*): org.apache.spark.sql.DataFrame =
+    q.crossJoin(broadcast(pqCodebookArray(cb)))
+      .select(keys :+ graft.functions.NearestCentroidFunctions
+        .pqLutAll(qv, col("pqarr"), m, w, k).as("lutarr"): _*)
 
   /** Row-local ADC distance over `codes` against the (q, cell) row's
     * `lutarr`: Σ_sub lutarr[sub·k + codes[sub]] with the EXACT decimal
@@ -633,6 +570,18 @@ object VectorOps extends QueryModule {
        |  CAST(0 AS DECIMAL(28,6)),
        |  (acc, slot) -> CAST(acc + CAST(element_at(lutarr, CAST(slot + 1 AS INT))
        |                 AS DECIMAL(18,6)) AS DECIMAL(28,6)))""".stripMargin)
+
+  /** The one ADC scan: every `cand` row's packed `codes` scored
+    * row-locally ([[adcRowLocal]]) against the [[pqLut]] row it joins on
+    * `on` — `cand` with `adist` in place of `codes`, the lut broadcast.
+    * (m, k) is the codebook geometry.
+    */
+  private[graft] def adc(cand: org.apache.spark.sql.DataFrame,
+      lut: org.apache.spark.sql.DataFrame, m: Int, k: Int,
+      on: String*): org.apache.spark.sql.DataFrame =
+    cand.join(broadcast(lut), on)
+      .withColumn("adist", adcRowLocal(m, k).cast(DoubleType))
+      .drop("lutarr", "codes")
 
   // ---- The ANN pipeline: probe → ADC → refine → recall. Every IVF/PQ
   // row, the spilled-index build, the streaming serve gate and
@@ -678,7 +627,7 @@ object VectorOps extends QueryModule {
     */
   private[graft] def cosineProbes(q: org.apache.spark.sql.DataFrame,
       cb: org.apache.spark.sql.DataFrame, nprobe: Int): org.apache.spark.sql.DataFrame =
-    withNearestCells(q, cb, nprobe, rounded = true)
+    withNearestCells(q, cb, nprobe)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("nrm").as("q_nrm"), col("cell"))
 
@@ -725,7 +674,7 @@ object VectorOps extends QueryModule {
     val cb = oneRowArray(cents, "cbarr", col("cell"), col("cvec"), col("cnrm"))
     df.crossJoin(broadcast(cb))
       .select(col("*"), posexplode(graft.functions.NearestCentroidFunctions.nearestCells(
-        col("emb"), col("nrm"), col("cbarr"), keep, rounded = true)).as(Seq("pos", "tc")))
+        col("emb"), col("nrm"), col("cbarr"), keep)).as(Seq("pos", "tc")))
       .withColumn("cell", col("tc")("cell"))
       .withColumn(rank, (col("pos") + 1).cast("long"))
       .drop("cbarr", "pos", "tc")
@@ -762,20 +711,34 @@ object VectorOps extends QueryModule {
     probed(idx, probes).select(col("q_id"), col("vec_id"), col("cr"),
       roundedL2(col("emb"), col("q_emb")).as("adist"))
 
-  /** Residual-ADC candidates: the probed cells' codes scored row-locally
-    * against the compiled per-(query, probed cell) residual LUT (see
-    * [[residualLut]]) — (q_id, vec_id, cr, adist), one row per stored
-    * code row (a spilled vector appears once per probed copy). `probes`
-    * are [[rankedProbes]]; (m, w, k) is the residual-PQ geometry.
+  /** Residual-ADC candidates: the probed cells' codes scored against
+    * each (query, probed cell)'s residual [[pqLut]] — (q_id, vec_id, cr,
+    * adist), one row per stored code row (a spilled vector appears once
+    * per probed copy). `probes` are [[rankedProbes]]; (m, w, k) is the
+    * residual-PQ geometry.
     */
   private[graft] def residualAdc(codes: org.apache.spark.sql.DataFrame,
       probes: org.apache.spark.sql.DataFrame, cb: org.apache.spark.sql.DataFrame,
       rcb: org.apache.spark.sql.DataFrame, m: Int = PqrM, w: Int = PqrW,
-      k: Int = PqrK): org.apache.spark.sql.DataFrame =
-    probed(codes, probes.select(col("q_id"), col("cell"), col("cr")))
-      .join(broadcast(residualLut(probes, cb, rcb, m, w, k)), Seq("q_id", "cell"))
-      .select(col("q_id"), col("vec_id"), col("cr"),
-        adcRowLocal(m, k).cast(DoubleType).as("adist"))
+      k: Int = PqrK): org.apache.spark.sql.DataFrame = {
+    val lut = pqLut(probes.join(broadcast(cb.select(col("cell"), col("cvec"))), Seq("cell")),
+      zip_with(col("q_emb"), col("cvec"), (a, b) => a - b), rcb, m, w, k,
+      col("q_id"), col("cell"))
+    adc(probed(codes, probes.select(col("q_id"), col("cell"), col("cr"))), lut, m, k,
+      "q_id", "cell")
+      .select(col("q_id"), col("vec_id"), col("cr"), col("adist"))
+  }
+
+  /** Raw-PQ ADC candidates: the probed cells' codes scored against each
+    * query's own [[pqLut]] over the [[PqK]]-centroid raw codebook `pqCb`
+    * — `probes` (q_id, cell, …) plus (vec_id, adist); `q` carries the
+    * queries' (vec_id, emb).
+    */
+  private[graft] def pqAdc(codes: org.apache.spark.sql.DataFrame,
+      probes: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame,
+      pqCb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    adc(probed(codes, probes),
+      pqLut(q, col("emb"), pqCb, 4, 16, PqK, col("vec_id").as("q_id")), 4, PqK, "q_id")
 
   /** `rese`, the residual-PQ codebook and `rcodes(vec_id, cell, sub,
     * cid)`: the residual code rows of every `assigned` vector.
@@ -827,46 +790,6 @@ object VectorOps extends QueryModule {
         GROUP BY p.q_id, k.vec_id$by
       )"""
 
-  /** Per-query raw-PQ lookup table over (vec_id, emb) queries: the
-    * rounded squared distance of each query slice to every centroid of
-    * its subspace — (q_id, sub, cid, qd2), queries × m·k rows.
-    */
-  private[graft] def rawPqLut(q: org.apache.spark.sql.DataFrame,
-      pqCb: org.apache.spark.sql.DataFrame, m: Int = 4,
-      w: Int = 16): org.apache.spark.sql.DataFrame =
-    q.select(col("vec_id"), explode(array((0 until m).map(lit): _*)).as("sub"), col("emb"))
-      .select(col("vec_id"), col("sub").cast("long").as("sub"),
-        expr(s"slice(emb, sub*$w+1, $w)").as("v"))
-      .join(broadcast(pqCb), Seq("sub"))
-      .select(col("vec_id").as("q_id"), col("sub"), col("cid"),
-        roundedL2(col("v"), col("cv")).as("qd2"))
-
-  /** Raw-PQ ADC: (q_id, sub, cid) code rows looked up in the broadcast
-    * [[rawPqLut]] and summed as DECIMAL(18,6) per `by` group — (by…,
-    * adist). The decimal sum makes the distance engine-exact.
-    */
-  private[graft] def rawAdc(codeRows: org.apache.spark.sql.DataFrame,
-      lut: org.apache.spark.sql.DataFrame, by: String*): org.apache.spark.sql.DataFrame =
-    codeRows.join(broadcast(lut), Seq("q_id", "sub", "cid"))
-      .groupBy(by.map(col): _*)
-      .agg(sum(col("qd2").cast(DecimalType(18, 6))).as("ad"))
-      .select(by.map(col) :+ col("ad").cast(DoubleType).as("adist"): _*)
-
-  /** Raw-PQ ADC over the probed cells' packed `codes` for (vec_id, emb)
-    * queries `q`: (keys…, vec_id, adist), the keys being the `probes`
-    * columns other than `cell`.
-    */
-  private[graft] def rawPqAdc(codes: org.apache.spark.sql.DataFrame,
-      probes: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame,
-      pqCb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val keys = probes.columns.toSeq.filter(_ != "cell") :+ "vec_id"
-    // the packed codes array exploded to one (sub, cid) row per subspace
-    val codeRows = probed(codes, probes)
-      .select(keys.map(col) :+ posexplode(col("codes")).as(Seq("sub", "cid")): _*)
-      .select(keys.map(col) ++ Seq(col("sub").cast("long").as("sub"), col("cid")): _*)
-    rawAdc(codeRows, rawPqLut(q, pqCb), keys: _*)
-  }
-
   /** The PQ codebook CTEs and `d(vec_id, sub, cid, d2)`: each corpus
     * slice's rounded L2 to every centroid of its subspace.
     */
@@ -876,7 +799,7 @@ object VectorOps extends QueryModule {
         FROM s JOIN pqcb c ON s.sub = c.sub
       )"""
 
-  /** The SQL twin of [[rawPqAdc]] over `assigned` and `probes(q_id,
+  /** The SQL twin of [[pqAdc]] over `assigned` and `probes(q_id,
     * cell)`: [[pqDistsSql]], the cell-tagged `codes`, the `lut` of the
     * rows that pass `queries`, and `adists(q_id, vec_id, adist)`.
     */
@@ -1097,23 +1020,18 @@ object VectorOps extends QueryModule {
     * ±0.0, and ties still fall to the lowest cell id) — with zero
     * Exchange between the corpus scan and the assignment. `keep > 1`
     * explodes the `keep` nearest cells instead (multi-probe).
-    * `rounded` applies the 6 dp §2.0 round before ranking — since r9
-    * every ANN row is oracled and every call site passes rounded = true
-    * (the DuckDB mirrors rank on the same 6 dp cosine); rounded = false
-    * remains only for a caller that wants raw-double ranking and
-    * accepts that no SQL mirror reproduces it. Input must carry `emb`
-    * and `nrm`.
+    * The cosine is rounded to 6 dp before ranking, as the DuckDB mirrors
+    * rank (§2.0). Input must carry `emb` and `nrm`.
     */
   private[graft] def withNearestCells(df: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame, keep: Int,
-      rounded: Boolean): org.apache.spark.sql.DataFrame = {
+      cents: org.apache.spark.sql.DataFrame, keep: Int): org.apache.spark.sql.DataFrame = {
     val cb = oneRowArray(cents, "cbarr", col("cell"), col("cvec"), col("cnrm"))
     // compiled top-k scorer (r9, SCALE.md): one eval call per row runs
     // the whole candidate loop in JVM code — value- and order-identical
     // to the interpreted `slice(array_sort(transform(...)), 1, keep)`
     // it replaces (negsim/cell lexicographic order, Double.compare ties)
     val scoredTop = graft.functions.NearestCentroidFunctions.nearestCells(
-      col("emb"), col("nrm"), col("cbarr"), keep, rounded)
+      col("emb"), col("nrm"), col("cbarr"), keep)
     val top = df.crossJoin(broadcast(cb))
     val sel =
       if (keep == 1) top.withColumn("tc", element_at(scoredTop, 1))
@@ -1123,73 +1041,69 @@ object VectorOps extends QueryModule {
       .drop("cbarr", "tc")
   }
 
+  /** The flat (sub, cid, cv, cnn2 = cv·cv) codebook the compiled PQ
+    * kernels read, packed as the one-row array `pqarr` (sorted by sub,
+    * then cid) for a broadcast cross join.
+    */
+  private[graft] def pqCodebookArray(cents: org.apache.spark.sql.DataFrame,
+      sub: Column = col("sub"), cid: Column = col("cid"),
+      cv: Column = col("cv")): org.apache.spark.sql.DataFrame =
+    oneRowArray(cents, "pqarr", sub, cid, cv, GraftFunctions.dot(cv, cv))
+
+  /** Appends `enc`, the compiled [[graft.functions.PqEncodeAll]] encode
+    * of every row's `emb` against the packed codebook `cb` (a
+    * [[pqCodebookArray]]): per subspace the (cid, d2) of the nearest
+    * entry by rounded squared L2, cid tiebreak.
+    */
+  private def withPqEncoded(df: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame, m: Int, w: Int): org.apache.spark.sql.DataFrame =
+    df.crossJoin(broadcast(cb))
+      .withColumn("enc", graft.functions.NearestCentroidFunctions
+        .pqEncodeAll(col("emb"), col("pqarr"), m, w))
+      .drop("pqarr")
+
   /** Row-local nearest-centroid argmin under the rounded ‖a‖²−2a·c+‖c‖²
     * identity (6 dp, centroid-id tiebreak) over a broadcast
     * (idCol, vecCol) centroid frame — appends the winning centroid id as
-    * `outId` and its squared distance as `outD2`. The squared-L2 sibling
-    * of [[withNearestCells]] for the codebook-training / k-means /
-    * label-confusion sites. Input must carry `emb`.
+    * `outId` and its squared distance as `outD2` (both null for an empty
+    * codebook). The squared-L2 sibling of [[withNearestCells]] for the
+    * codebook-training / k-means / label-confusion sites: the one-subspace
+    * PQ encode, every centroid in subspace 0 and the slice spanning the
+    * whole vector. Input must carry `emb`.
     */
   private[graft] def withNearestCentroidD2(df: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
-      outId: String, outD2: String): org.apache.spark.sql.DataFrame = {
-    // hoist the terms that are constant per row (‖a‖²) and per centroid
-    // (‖c‖², folded into the broadcast array) out of the scoring lambda:
-    // HOF lambdas are interpreted, so the naive form re-evaluates both
-    // dots nlist× per row — 3× the flops of the identity's one true
-    // per-pair term a·c. Values are bit-identical (same dots, same
-    // 6 dp round), so every oracle mirror is untouched.
-    val cb = oneRowArray(
-      cents.withColumn("cnn2", GraftFunctions.dot(col(vecCol), col(vecCol))),
-      "cbarr", col(idCol), col(vecCol), col("cnn2"))
-    // compiled argmin (r9, SCALE.md): ‖a‖² once per row inside the one
-    // eval call, ‖c‖² from the broadcast column — value- and
-    // order-identical to the interpreted array_min(transform(...))
-    df.crossJoin(broadcast(cb))
-      .withColumn("tc", graft.functions.NearestCentroidFunctions
-        .nearestCentroidL2(col("emb"), col("cbarr")))
-      .withColumn(outId, col("tc")("id"))
-      .withColumn(outD2, col("tc")("d2"))
-      .drop("cbarr", "tc")
-  }
+      outId: String, outD2: String): org.apache.spark.sql.DataFrame =
+    withPqEncoded(df, pqCodebookArray(cents, lit(0L), col(idCol), col(vecCol)), 1, Int.MaxValue)
+      .withColumn(outId, col("enc")(0)("cid"))
+      .withColumn(outD2, col("enc")(0)("d2"))
+      .drop("enc")
 
   /** Row-local PQ encode against a broadcast (sub, cid, cv) subspace
-    * codebook: appends `pq` — ARRAY<STRUCT<sub, cid, d2>>, one
+    * codebook: appends `pq` — ARRAY<STRUCT<sub INT, cid, d2>>, one
     * nearest-centroid entry per subspace in subspace order (rounded d2,
-    * cid tiebreak) — in ONE map pass over the vectors. The
-    * per-(vector, subspace) encode window and its Exchange are gone:
-    * slicing, distances, and the per-subspace argmin all run inside
-    * nested higher-order functions on the row. Input must carry `emb`.
+    * cid tiebreak) — in ONE map pass over the vectors. Input must carry
+    * `emb`.
     */
   private[graft] def withPqStructs(df: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame,
       m: Int = 4, w: Int = 16): org.apache.spark.sql.DataFrame = {
-    // compiled all-subspace encode (r13 — see [[withPqCodes]]); the
-    // projection below repacks ARRAY<STRUCT<cid, d2>> (position = sub)
-    // into the original ARRAY<STRUCT<sub, cid, d2>> shape so every
-    // consumer and mirror sees byte-identical values and schema.
-    val cb = oneRowArray(
-      cents.withColumn("cnn2", GraftFunctions.dot(col("cv"), col("cv"))),
-      "pqarr", col("sub"), col("cid"), col("cv"), col("cnn2"))
-    val pq = transform(sequence(lit(0), lit(m - 1)), sub => {
-      val best = element_at(col("enc"), sub + lit(1))
-      struct(sub.as("sub"), best("cid").as("cid"), best("d2").as("d2"))
-    })
-    df.crossJoin(broadcast(cb))
-      .withColumn("enc", graft.functions.NearestCentroidFunctions
-        .pqEncodeAll(col("emb"), col("pqarr"), m, w))
-      .withColumn("pq", pq)
-      .drop("pqarr", "enc")
+    val pq = array((0 until m).map { sub =>
+      val best = col("enc")(sub)
+      struct(lit(sub).as("sub"), best("cid").as("cid"), best("d2").as("d2"))
+    }: _*)
+    withPqEncoded(df, pqCodebookArray(cents), m, w).withColumn("pq", pq).drop("enc")
   }
 
   /** The persisted PQ code layout: (vec_id, cell, codes ARRAY<BIGINT>),
-    * one [[withPqStructs]] cid per subspace. Input must carry (vec_id,
-    * cell, emb).
+    * one [[withPqStructs]] cid per subspace. Input must carry `keys` and
+    * `emb`.
     */
   private[graft] def pqCodes(df: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame, m: Int, w: Int): org.apache.spark.sql.DataFrame =
-    withPqStructs(df, cents, m, w).select(col("vec_id"), col("cell"),
-      expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes"))
+      cents: org.apache.spark.sql.DataFrame, m: Int, w: Int,
+      keys: Seq[String] = Seq("vec_id", "cell")): org.apache.spark.sql.DataFrame =
+    withPqStructs(df, cents, m, w).select(keys.map(col) :+
+      expr("transform(pq, x -> CAST(x.cid AS BIGINT))").as("codes"): _*)
 
   val vecNormsStats = Q(
     "vec_norms_stats",
@@ -1495,7 +1409,7 @@ object VectorOps extends QueryModule {
     */
   def annIvfTopK(emb: org.apache.spark.sql.DataFrame, nQueries: Int, k: Int, nprobe: Int): org.apache.spark.sql.DataFrame = {
     val cellCentroids = ivfCodebook(emb)
-    val assigned = withNearestCells(emb, cellCentroids, 1, rounded = true)
+    val assigned = withNearestCells(emb, cellCentroids, 1)
       .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
     cosineTopK(assigned,
       cosineProbes(emb.filter(col("vec_id") < nQueries), cellCentroids, nprobe), k)
@@ -2011,8 +1925,9 @@ object VectorOps extends QueryModule {
       // row-local encode at (row, sub) granularity: the per-(vector,
       // subspace) window Exchange is gone; the only shuffle left is the
       // bounded (sub, cid) audit agg
-      withPqCodes(e, cents)
-        .select($"sub", $"cid", $"d2")
+      withPqStructs(e, cents)
+        .select(explode($"pq").as("tc"))
+        .select($"tc.sub".as("sub"), $"tc.cid".as("cid"), $"tc.d2".as("d2"))
         .groupBy($"sub", $"cid")
         .agg(count(lit(1)).as("n"),
           sum($"d2".cast(DecimalType(18, 6))).as("sum_err_d"))
@@ -2044,11 +1959,10 @@ object VectorOps extends QueryModule {
     * full-vector arithmetic ever touches the scan. Queries = the 8
     * lowest vec_ids (self excluded); k = 5 by approximate distance.
     *
-    * Scale notes (100 TB): the LUT (queries × 64 rows) broadcasts; the
-    * code table is 4 ints per corpus vector (~64× smaller than the
-    * float vectors), and the scan is one equi-join of codes to the
-    * broadcast LUT plus a (q, vec)-keyed partial-agg sum — the corpus
-    * never shuffles its embeddings, only 4-byte codes. In a full
+    * Scale notes (100 TB): the LUT (one 64-slot array per query)
+    * broadcasts; the code table is 4 longs per corpus vector (~16×
+    * smaller than the float vectors), paired with every query and
+    * scored by 4 row-local lookups — the corpus never shuffles. In a full
     * IVF-PQ deployment the IVF cell filter (vec_ann_ivf) bounds this
     * scan to ~nprobe/nlist of the corpus; composing the two is a
     * filter pushed below this join. Distances are rounded to 6 dp with
@@ -2066,15 +1980,13 @@ object VectorOps extends QueryModule {
       // corpus → 4 codes per vector (the PQ index; stored, not
       // recomputed), encoded row-locally — no per-(vector, subspace)
       // window Exchange between the scan and the codes
-      val codes = withPqCodes(e, cents).select($"vec_id", $"sub", $"cid")
-      // query-side LUT: squared distance of each query slice to every centroid
-      val lut = rawPqLut(e.filter($"vec_id" < 8), cents)
-      val adists = codes.join(broadcast(lut), Seq("sub", "cid"))
+      val q = e.filter($"vec_id" < 8)
+      val cand = pqCodes(e, cents, 4, 16, Seq("vec_id"))
+        .crossJoin(broadcast(q.select($"vec_id".as("q_id"))))
         .filter($"vec_id" =!= $"q_id")
-        .groupBy($"q_id", $"vec_id")
-        .agg(sum($"qd2".cast(DecimalType(18, 6))).as("ad"))
-        .withColumn("adist", $"ad".cast(DoubleType))
-      nearestFirst(adists, "adist", 5, "rn", "q_id")
+      // query-side LUT: squared distance of each query slice to every centroid
+      val lut = pqLut(q, $"emb", cents, 4, 16, PqK, $"vec_id".as("q_id"))
+      nearestFirst(adc(cand, lut, 4, PqK, "q_id"), "adist", 5, "rn", "q_id")
         .select($"q_id", $"vec_id", $"adist", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -2126,7 +2038,7 @@ object VectorOps extends QueryModule {
       import spark.implicits._
       val e = withNorm(spark, dir)
       val cents = ivfCodebook(e)
-      val assigned = withNearestCells(e, cents, keep = 1, rounded = true)
+      val assigned = withNearestCells(e, cents, keep = 1)
         .select($"vec_id", $"emb", $"nrm", $"cell", $"csim")
       val b = assigned.select($"cell".as("b_cell"), $"vec_id".as("b_id"), $"emb".as("b_emb"),
         $"nrm".as("b_nrm"), $"csim".as("b_csim"))
@@ -2189,20 +2101,16 @@ object VectorOps extends QueryModule {
     // IVF half: √n-cell Lloyd codebook, nearest-cell assignment, query probes
     val cents = ivfCodebook(e)
     val q = e.filter(col("vec_id") < nQueries)
-    val probes = withNearestCells(q, cents, nprobe, rounded = true)
+    val probes = withNearestCells(q, cents, nprobe)
       .select(col("vec_id").as("q_id"), col("cell"))
     // PQ half: TRAINED subspace codebook (stride seeds + Lloyd rounds),
     // row-local per-vector codes, query LUT
     val cb = trainPqCodebook(e)
     // one map pass: each corpus vector gets its IVF cell AND its 4 PQ
     // codes row-locally — no encode window, no assignment Exchange
-    val codes = withPqCodes(
-        withNearestCells(e, cents, 1, rounded = true)
-          .select(col("vec_id"), col("cell"), col("emb")), cb)
-      .select(col("vec_id"), col("cell"), col("sub"), col("cid"))
+    val codes = pqCodes(withNearestCells(e, cents, 1), cb, 4, 16)
     // probed-cell filter BELOW the LUT join, then ADC rank
-    nearestFirst(rawAdc(probed(codes, probes), rawPqLut(q, cb), "q_id", "vec_id"),
-        "adist", k, "rn", "q_id")
+    nearestFirst(pqAdc(codes, probes, q, cb), "adist", k, "rn", "q_id")
       .select(col("q_id"), col("vec_id"), col("adist"), col("rn").cast("long").as("rn"))
   }
 
@@ -2327,7 +2235,7 @@ object VectorOps extends QueryModule {
   def annNearDupPairs(e: org.apache.spark.sql.DataFrame,
                       cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // multi-probe: nearest 3 cells per vector, assigned row-locally
-    val assigned = withNearestCells(e, cents, keep = 3, rounded = true)
+    val assigned = withNearestCells(e, cents, keep = 3)
       .select(col("vec_id"), col("emb"), col("nrm"), col("cell"))
     val b = assigned.select(col("cell").as("b_cell"), col("vec_id").as("d2"),
       col("emb").as("e2"), col("nrm").as("n2"))
@@ -2483,9 +2391,8 @@ object VectorOps extends QueryModule {
     *
     * Scale notes (100 TB): probes and LUT broadcast; the codes side is
     * a bucketed scan with NO Exchange and no full-width vector column;
-    * per-query work is ~nprobe/nlist of an already-64×-smaller table.
-    * The candidate aggregation is (q, vec)-keyed over ≤ queries ×
-    * probed-cell rows.
+    * per-query work is ~nprobe/nlist of an already-64×-smaller table,
+    * scored row-locally against the query's broadcast LUT.
     */
   val vecAnnIvfpqServe = Q(
     "vec_ann_ivfpq_serve",
@@ -2495,11 +2402,11 @@ object VectorOps extends QueryModule {
       val (codes, pqCb) = IvfIndex.ensurePq(spark, dir)
       val q = withNorm(spark, dir).filter($"vec_id" < 50)
       // nprobe=3 nearest cells per query via the persisted IVF codebook
-      val probes = withNearestCells(q, ivfCb, keep = 3, rounded = true)
+      val probes = withNearestCells(q, ivfCb, keep = 3)
         .select($"vec_id".as("q_id"), $"cell")
-      // per-query LUT (queries × 64 rows, broadcast) against the
-      // persisted PQ codebook; ADC over the probed cells' code rows
-      nearestFirst(rawPqAdc(codes, probes, q, pqCb), "adist", 3, "rn", "q_id")
+      // per-query LUT (one 64-slot array per query, broadcast) against
+      // the persisted PQ codebook; ADC over the probed cells' codes
+      nearestFirst(pqAdc(codes, probes, q, pqCb), "adist", 3, "rn", "q_id")
         .select($"q_id", $"vec_id", $"adist", $"rn".cast("long").as("rn"))
         .orderBy($"q_id", $"rn")
     },
@@ -3879,11 +3786,11 @@ object VectorOps extends QueryModule {
       val e = withNorm(spark, dir)
       val cents = ivfCodebook(e)
       // index side: every corpus vector lives in its single nearest cell
-      val indexed = withNearestCells(e, cents, keep = 1, rounded = true)
+      val indexed = withNearestCells(e, cents, keep = 1)
         .select($"cell", $"vec_id", $"label", $"emb", $"nrm")
       // query side: the probe list is the 3 nearest cells per query
       val probes = withNearestCells(e.filter($"vec_id" < 20), cents,
-          keep = 3, rounded = true)
+          keep = 3)
         .select($"cell", $"vec_id".as("q_id"), $"label".as("q_label"),
           $"emb".as("q_emb"), $"nrm".as("q_nrm"))
       indexed.join(probes, "cell")

@@ -261,7 +261,7 @@ object StreamTransforms {
     val b = batch
       .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
     val assigned = graft.operators.VectorOps
-      .withNearestCells(b, baseCb, keep = 1, rounded = true)
+      .withNearestCells(b, baseCb, keep = 1)
       .select(col("vec_id").cast("long").as("in_id"), col("emb").as("in_emb"),
         col("nrm").as("in_nrm"), col("cell"))
     assigned

@@ -696,7 +696,7 @@ class IvfIndexSpec extends SparkSpecBase {
     // codebook (the spilled primary equals what keep=1 would assign)
     val primary = sidx.filter(col("crank") === 1).select(col("vec_id"), col("cell"))
     val single = operators.VectorOps.withNearestCells(
-        operators.VectorOps.withNorm(spark, sfDir), scb, keep = 1, rounded = true)
+        operators.VectorOps.withNorm(spark, sfDir), scb, keep = 1)
       .select(col("vec_id").cast("long").as("vec_id"), col("cell"))
     assert(primary.exceptAll(single).isEmpty && single.exceptAll(primary).isEmpty,
       "crank-1 rows must equal the keep=1 assignment")

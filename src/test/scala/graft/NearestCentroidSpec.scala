@@ -17,14 +17,12 @@ class NearestCentroidSpec extends SparkSpecBase {
   private def e: DataFrame = operators.VectorOps.withNorm(spark, sfDir)
 
   /** The pre-r9 interpreted formulation of withNearestCells, verbatim. */
-  private def hofNearestCells(df: DataFrame, cents: DataFrame, keep: Int,
-      rounded: Boolean): DataFrame = {
+  private def hofNearestCells(df: DataFrame, cents: DataFrame, keep: Int): DataFrame = {
     val cb = operators.VectorOps.oneRowArray(
       cents, "cbarr", col("cell"), col("cvec"), col("cnrm"))
     val scored = transform(col("cbarr"), c => {
       val sim = GraftFunctions.dot(col("emb"), c("cvec")) / (col("nrm") * c("cnrm"))
-      struct((-(if (rounded) round(sim, 6) else sim)).as("negsim"),
-        c("cell").as("cell"))
+      struct((-round(sim, 6)).as("negsim"), c("cell").as("cell"))
     })
     val top = df.crossJoin(broadcast(cb))
     val sel =
@@ -57,26 +55,21 @@ class NearestCentroidSpec extends SparkSpecBase {
   private def sortedRows(df: DataFrame, cols: String*): Seq[String] =
     df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
 
-  test("cosine keep=1: compiled argmax equals the interpreted HOF, rounded and raw") {
+  test("cosine keep=1: compiled argmax equals the interpreted HOF") {
     val cents = operators.VectorOps.ivfCodebook(e)
-    for (rounded <- Seq(true, false)) {
-      val fast = sortedRows(
-        operators.VectorOps.withNearestCells(e, cents, keep = 1, rounded = rounded),
-        "vec_id", "cell", "csim")
-      val slow = sortedRows(
-        hofNearestCells(e, cents, keep = 1, rounded = rounded),
-        "vec_id", "cell", "csim")
-      assert(fast == slow, s"keep=1 rounded=$rounded diverged")
-    }
+    val fast = sortedRows(
+      operators.VectorOps.withNearestCells(e, cents, keep = 1), "vec_id", "cell", "csim")
+    val slow = sortedRows(hofNearestCells(e, cents, keep = 1), "vec_id", "cell", "csim")
+    assert(fast == slow, "keep=1 diverged")
   }
 
   test("cosine keep=3 multi-probe: compiled top-k equals the interpreted sort+slice") {
     val cents = operators.VectorOps.ivfCodebook(e)
     val fast = sortedRows(
-      operators.VectorOps.withNearestCells(e, cents, keep = 3, rounded = true),
+      operators.VectorOps.withNearestCells(e, cents, keep = 3),
       "vec_id", "cell", "csim")
     val slow = sortedRows(
-      hofNearestCells(e, cents, keep = 3, rounded = true),
+      hofNearestCells(e, cents, keep = 3),
       "vec_id", "cell", "csim")
     assert(fast == slow, "multi-probe top-3 diverged")
     // 3 rows per vector (nlist ≥ 3 at every SF)
@@ -123,7 +116,7 @@ class NearestCentroidSpec extends SparkSpecBase {
         lit(99L).as("cell"),
         typedLit(zero).as("cvec"), lit(0.0).as("cnrm")))
     val out = operators.VectorOps
-      .withNearestCells(e.limit(5), cents, keep = 2, rounded = true)
+      .withNearestCells(e.limit(5), cents, keep = 2)
       .select($"vec_id", $"cell", $"csim")
     // SQL reference: the row_number-over-csim-DESC formulation
     e.limit(5).select($"vec_id", $"emb", $"nrm").createOrReplaceTempView("nan_q")
@@ -148,7 +141,7 @@ class NearestCentroidSpec extends SparkSpecBase {
     assert(fast == slow, "NaN ranking diverged from the csim-DESC formulation")
     // and the NaN centroid is indeed the rank-1 probe everywhere
     val first = operators.VectorOps
-      .withNearestCells(e.limit(5), cents, keep = 1, rounded = true)
+      .withNearestCells(e.limit(5), cents, keep = 1)
       .select($"cell").distinct().as[Long].collect().toSet
     assert(first == Set(99L), "zero-norm centroid must rank first under csim DESC")
   }

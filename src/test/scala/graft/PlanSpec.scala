@@ -711,7 +711,7 @@ class PlanSpec extends SparkSpecBase {
     val e = operators.VectorOps.withNorm(spark, sfDir)
     val cents = operators.VectorOps.ivfCodebook(e).cache()
     cents.count() // materialize so the fragment plan below is assignment-only
-    val frag = operators.VectorOps.withNearestCells(e, cents, keep = 1, rounded = true)
+    val frag = operators.VectorOps.withNearestCells(e, cents, keep = 1)
     val fp = planString(frag)
     val corpusEx = "Exchange hashpartitioning".r.findAllIn(fp).size
     assert(corpusEx == 0,
@@ -927,7 +927,7 @@ class PlanSpec extends SparkSpecBase {
       .select(col("vec_id"), col("emb"))
       .withColumn("nrm",
         sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
-    val frame = operators.VectorOps.withNearestCells(batch, baseCb, keep = 1, rounded = true)
+    val frame = operators.VectorOps.withNearestCells(batch, baseCb, keep = 1)
       .select(col("vec_id").cast("long").as("vec_id"), col("emb"), col("nrm"), col("cell"))
       .join(spark.table(name).select(col("cell"), col("vec_id")).hint("merge"),
         Seq("cell", "vec_id"), "left_anti")
