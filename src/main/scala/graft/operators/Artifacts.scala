@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -220,7 +221,11 @@ private[graft] object Artifacts {
     * THE bucketed layout rule: repartition on the bucket key with the
     * bucket count, so each task holds exactly one bucket's rows and writes
     * one file per bucket — no tasks×buckets small-file fan-out. A small
-    * table (kilobytes, broadcast at query time) is one file.
+    * table (kilobytes, broadcast at query time) is one file, its rows
+    * sorted by every column in schema order: the coalesced input arrives
+    * in file-split order, which ties between equal-size files break by
+    * random file name, so without the sort two builds of one table could
+    * write the same rows in different orders.
     */
   final class Layout private (schema: String, bucketing: Option[(String, Seq[String])]) {
 
@@ -237,7 +242,10 @@ private[graft] object Artifacts {
     }
 
     private def writer(df: DataFrame): DataFrameWriter[Row] = bucketing match {
-      case None => df.coalesce(1).write
+      case None =>
+        df.coalesce(1)
+          .sortWithinPartitions(StructType.fromDDL(schema).fieldNames.map(col).toIndexedSeq: _*)
+          .write
       case Some((key, sortCols)) =>
         df.repartition(NBuckets, col(key))
           .write

@@ -519,13 +519,14 @@ class TextOpsSpec extends SparkSpecBase {
     assert(reg.filter(expr("CAST(log2(batches & -batches) AS BIGINT)") =!= $"first_batch")
       .count() == 0, "first_batch must equal the lowest set mask bit")
 
-    def files(table: String): Map[String, Long] = {
+    def dataFiles(table: String): Seq[java.io.File] = {
       val w = spark.conf.get("spark.sql.warehouse.dir")
       val base = if (w.startsWith("file:")) new java.net.URI(w).getPath else w
       Option(new java.io.File(base, table).listFiles()).toSeq.flatten
         .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified).toMap
     }
+    def files(table: String): Map[String, Long] =
+      dataFiles(table).map(f => f.getName -> f.lastModified).toMap
     val regBuilt = files(operators.ShingleRegistry.bitmaskTable(sfDir))
     val (ts, remap) = operators.ShingleRegistry.ensureRetraction(spark, sfDir)
     assert(files(operators.ShingleRegistry.bitmaskTable(sfDir)) == regBuilt,
@@ -539,6 +540,18 @@ class TextOpsSpec extends SparkSpecBase {
       "retraction fixture vacuous: need both exclusive and shared batch-5 shingles")
     assert(tsSet.intersect(remapRows.keySet).isEmpty,
       "a shingle cannot be both tombstoned and remapped")
+    // each side table is one file whose rows are stored sorted by its
+    // columns in schema order, so two builds write the same bytes
+    for ((table, cols) <- Seq(
+        operators.ShingleRegistry.retractTombstoneTable(sfDir) -> Seq("shingle"),
+        operators.ShingleRegistry.retractRemapTable(sfDir) -> Seq("shingle", "new_first_batch"))) {
+      val one = dataFiles(table)
+      assert(one.size == 1, s"$table must be one data file, got ${one.map(_.getName)}")
+      val file = one.head
+      val stored = spark.read.parquet(file.getPath).collect().toSeq
+      val sorted = spark.read.parquet(file.getPath).orderBy(cols.map(col): _*).collect().toSeq
+      assert(stored == sorted, s"$table rows are not stored in (${cols.mkString(", ")}) order")
+    }
     val exclusive = reg.filter($"batches" === bit).select($"shingle").as[String].collect().toSet
     assert(tsSet == exclusive, "tombstones must be exactly the exclusive bit-5 rows")
     // every remap points to a SURVIVING contributor strictly above none
