@@ -125,36 +125,30 @@ object GraftFunctions {
         children.head, children(1), children(2)).toAggregateExpression()
   }
 
+  /** The engine's SQL functions, one (name, info, builder) entry each —
+    * the table [[register]] and [[GraftExtensions]] both install.
+    */
+  private[functions] val entries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(
+      (FunctionIdentifier("graft_dot"), info, builder),
+      (FunctionIdentifier("graft_cms_estimate"), cmsInfo, CmsFunctions.builder),
+      (FunctionIdentifier("graft_might_contain"), mightContainInfo, mightContainBuilder),
+      (FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder))
+
   /** Runtime registration into an existing session (the harness builds
     * the SparkSession itself, so `spark.sql.extensions` is not an
     * option there). Idempotent.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("graft_dot"), info, builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(
-        FunctionIdentifier("graft_cms_estimate"), cmsInfo, CmsFunctions.builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(
-        FunctionIdentifier("graft_might_contain"), mightContainInfo, mightContainBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(
-        FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder)
-  }
+  def register(spark: SparkSession): Unit =
+    entries.foreach { case (id, fnInfo, fnBuilder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, fnInfo, fnBuilder)
+    }
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` for
   * deployments that control session construction.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"), GraftFunctions.info, GraftFunctions.builder))
-    ext.injectFunction((FunctionIdentifier("graft_cms_estimate"),
-      GraftFunctions.cmsInfo, CmsFunctions.builder))
-    ext.injectFunction((FunctionIdentifier("graft_might_contain"),
-      GraftFunctions.mightContainInfo, GraftFunctions.mightContainBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_agg"),
-      GraftFunctions.bloomAggInfo, GraftFunctions.bloomAggBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.entries.foreach(ext.injectFunction)
 }

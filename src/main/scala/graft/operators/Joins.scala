@@ -208,12 +208,7 @@ object Joins extends QueryModule {
           dec($"s_acctbal" - $"c_acctbal").as("bal_diff"))
         .orderBy($"s_suppkey", $"c_custkey")
     },
-    Some("""
-      SELECT s_suppkey, c_custkey,
-        CAST(CAST(s_acctbal - c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal_diff
-      FROM supplier JOIN customer ON ABS(s_acctbal - c_acctbal) < 10
-      ORDER BY s_suppkey, c_custkey
-    """.trim))
+    joinThetaBand.oracle)
 
   val joinRangeInterval = Q(
     "join_range_interval",
