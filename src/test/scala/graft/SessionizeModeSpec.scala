@@ -212,4 +212,23 @@ class SessionizeModeSpec extends SparkSpecBase {
         s"user $u day $day: got ($v,$obs) expected ($ev,$eobs)")
     }
   }
+
+  test("events: an INT64-nanosecond ts with a sub-µs remainder loads to the fixture's µs rows") {
+    import org.apache.spark.sql.functions.expr
+    import org.apache.spark.sql.types.LongType
+    import spark.implicits._
+    // every fixture stores µs timestamps; rewrite ts as nanoseconds since
+    // the epoch plus 999 ns, the layout Tables.events truncates back to µs
+    val dir = scratchPath("events_ns")
+    val nanos = expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)") *
+      1000L + 999L
+    Tables.events(spark, sfDir).withColumn("ts", nanos).write.parquet(s"$dir/events.parquet")
+    assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType == LongType,
+      "the copy must store ts as a plain INT64")
+    def rows(d: String): Seq[String] =
+      Tables.events(spark, d).select($"event_id", $"ts").collect().map(_.toString).sorted.toSeq
+    val fixture = rows(sfDir)
+    assert(fixture.nonEmpty)
+    assert(rows(dir) == fixture, "the nanosecond copy must load to the same (event_id, ts) rows")
+  }
 }
