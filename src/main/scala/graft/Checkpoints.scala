@@ -17,7 +17,8 @@ import org.apache.spark.sql.DataFrame
   * directory configured (`SparkContext.setCheckpointDir`) — the standard
   * cluster deployment step — so the SAME operator code serves both
   * environments, and DriftGraphSpec asserts the two modes produce
-  * identical results.
+  * identical results. [[PlanCache]] cuts every memo here before caching
+  * its rows, which also decides how a lost memo block recovers.
   */
 object Checkpoints {
   def cut(df: DataFrame): DataFrame =

@@ -2,12 +2,34 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{CachedData, LogicalRDD}
+import org.apache.spark.storage.StorageLevel
 
-/** Plan-keyed memo for expensive shared stages (the near-dup pair table,
-  * the connected-component labels, the decontamination shingle frame).
+/** Plan-keyed memo for expensive shared stages (the text memos, the
+  * near-dup pair table, the connected-component labels, the codebooks,
+  * the kNN graph, the trade edges and the monthly revenue).
   *
   * Lifecycle contract:
   *
+  *  - **One materialization path: a memo keeps its rows, not its build
+  *    plan.** `getOrCompute(fresh)(shape)` applies the caller's shaping
+  *    (a `coalesce`, a `repartition`, a fixpoint, or `identity`), cuts
+  *    the lineage with [[Checkpoints.cut]], persists ONE columnar
+  *    `MEMORY_AND_DISK` cache over the cut, materializes it, and then
+  *    releases the cut's row blocks. The cached plan behind the memo is
+  *    a scan of the cut's RDD: it holds no file scan, shuffle or
+  *    broadcast of the build, so once the build's frames are garbage
+  *    the context cleaner frees the broadcast hash relations a
+  *    build-time join made (a `.cache()` over the build plan would pin
+  *    them for the memo's whole life). The columnar cache stores the
+  *    rows compressed; the cut alone would keep them as deserialized
+  *    row objects, several times larger.
+  *  - **Recovery.** In local mode the cut is a `localCheckpoint` whose
+  *    blocks are released once the cache holds the rows, so a lost
+  *    cache block cannot be recomputed (`MEMORY_AND_DISK` spills rather
+  *    than drops, and a local executor does not die alone). With a
+  *    reliable checkpoint directory set, the cut is a checkpoint to that
+  *    filesystem and a lost cache block is recomputed from its files.
   *  - **Atomic find-or-compute.** The monitor is held across the compute,
   *    so two concurrent callers can never both miss and duplicate the
   *    expensive stage: the second blocks, then reads the first's entry.
@@ -20,19 +42,22 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    key — so regenerating a fixture at the SAME path invalidates the
   *    memo instead of serving stale blocks — and skips
   *    entries whose owning SparkContext has stopped, so a session
-  *    restart can never resurface dead checkpoint RDDs.
+  *    restart can never resurface dead blocks. A memo built over
+  *    another memo (the intersection counts over the shingles) has that
+  *    memo's cut RDD in its key instead of a file relation: a rebuilt
+  *    upstream memo is a new RDD, so the downstream key misses too.
   *  - **Bounded + explicitly released.** At most `capacity` live entries;
-  *    eviction (capacity overflow, `evictAll`) actively frees the blocks:
-  *    cached frames via `unpersist`, localCheckpoint frames by
-  *    unpersisting the underlying `LogicalRDD`'s RDD (a plain
-  *    `DataFrame.unpersist` is a no-op for those — they live in the
-  *    block manager, not the CacheManager). Every instance registers
+  *    an overflow evicts the least recently used one, so a stage that
+  *    builds several one-off memos (the PQ artifact builds train one
+  *    codebook each) does not push out the memo every query reads.
+  *    Eviction (capacity overflow, `evictAll`) frees the memo's cache and
+  *    its cut's RDD ([[PlanCache.release]]). Every instance registers
   *    with the companion, so `PlanCache.evictAll()` is the one hook a
   *    long-lived session calls between corpora; Bench/Verify sessions are
   *    one-shot so session end releases everything regardless.
   */
 private[graft] final class PlanCache(capacity: Int) {
-  import PlanCache.{Entry, release}
+  import PlanCache.{Entry, materialize, release}
 
   PlanCache.register(this)
 
@@ -55,16 +80,15 @@ private[graft] final class PlanCache(capacity: Int) {
         }
     }.flatten.sortBy(_._1)
 
-  /** Return the memoized frame equivalent to `fresh`'s plan over the
-    * same input files, or run `compute` (which must materialize —
-    * cache/localCheckpoint — its result) and remember it. Key is
-    * `fresh`'s analyzed plan + the (path, size, mtime) set of its file
-    * sources; the stored value may be a different frame (e.g. labels
-    * computed FROM the pair plan). A plan-equal entry with a different
-    * file identity is actively evicted (its blocks describe data that no
-    * longer exists).
+  /** Return the memo equivalent to `fresh`'s plan over the same input
+    * files, or materialize `shape(fresh)` (see the class contract) and
+    * remember it. Key is `fresh`'s analyzed plan + the (path, size,
+    * mtime) set of its file sources; the stored rows may be a different
+    * frame (e.g. labels computed FROM the pair plan). A plan-equal entry
+    * with a different file identity is actively evicted (its blocks
+    * describe data that no longer exists).
     */
-  def getOrCompute(fresh: DataFrame)(compute: DataFrame => DataFrame): DataFrame =
+  def getOrCompute(fresh: DataFrame)(shape: DataFrame => DataFrame): DataFrame =
     synchronized {
       val key = fresh.queryExecution.analyzed
       val files = inputFileIdentity(fresh)
@@ -72,10 +96,12 @@ private[graft] final class PlanCache(capacity: Int) {
       // context, and returning one would be a dead-RDD error downstream
       entries.filterInPlace(e => !e.df.sparkSession.sparkContext.isStopped)
       entries.find(_.plan.sameResult(key)) match {
-        case Some(e) if e.files == files => e.df
+        case Some(e) if e.files == files =>
+          entries -= e; entries += e // least recently used is evicted first
+          e.df
         case stale =>
           stale.foreach { e => release(e.df); entries -= e }
-          val built = compute(fresh)
+          val built = materialize(shape(fresh))
           if (entries.sizeIs >= capacity) release(entries.remove(0).df)
           entries += Entry(key, files, built)
           built
@@ -106,16 +132,34 @@ private[graft] object PlanCache {
     */
   def evictAll(): Unit = synchronized(instances.toList).foreach(_.evictAll())
 
-  /** Free a memoized frame's storage. */
+  /** Cut `shaped`, cache the cut columnar, fill the cache, and release
+    * the cut's row blocks: the memo's rows then live in the cache alone.
+    */
+  private def materialize(shaped: DataFrame): DataFrame = {
+    val cut = Checkpoints.cut(shaped)
+    cut.persist(StorageLevel.MEMORY_AND_DISK)
+    // one job over the cache's own batch RDD fills it; `count()` would
+    // plan an aggregate whose adaptive stages run two more jobs
+    cachedData(cut).foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
+    cutRdds(cut).foreach(_.unpersist(blocking = false))
+    cut
+  }
+
+  /** The CacheManager entry that serves `df`'s plan, if any. */
+  def cachedData(df: DataFrame): Option[CachedData] =
+    df.sparkSession.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+
+  private def cutRdds(df: DataFrame) =
+    df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd }
+
+  /** Free a frame's storage: its CacheManager entry (a memo's columnar
+    * cache) and the blocks of the checkpoint RDDs under it (a cut, or a
+    * fixpoint round). Either half is a no-op where there is nothing to
+    * free.
+    */
   def release(df: DataFrame): Unit = {
-    // a localCheckpoint-derived frame is (a projection over) a LogicalRDD
-    // backed by block-manager storage; unpersist the leaf RDDs themselves
-    // to actually free the blocks — DataFrame.unpersist only talks to the
-    // CacheManager and is a no-op for checkpoint frames
-    val checkpointLeaves = df.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    if (checkpointLeaves.nonEmpty) checkpointLeaves.foreach(_.unpersist(blocking = false))
-    else df.unpersist(blocking = false)
+    df.unpersist(blocking = false)
+    cutRdds(df).foreach(_.unpersist(blocking = false))
   }
 }

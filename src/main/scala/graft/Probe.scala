@@ -11,7 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its DataFrame is being built — is the lever on the total.
   *
   * Usage: runMain graft.Probe <sfDir> <query> [query ...]
-  * Prints `SCALE shared_stage_s <s>`, then per distinct query
+  * Prints `SCALE shared_stage_s <s>`, then `SCALE resident memos=<n>
+  * cached_mb=<mb>`: what the warm-up leaves resident — the CacheManager's
+  * entries (every one a [[PlanCache]] memo) and the memory plus disk
+  * bytes of every persisted RDD (`getRDDStorageInfo`), so a reader sees
+  * what the shared stages keep without a heap histogram. Then per distinct query
   * `SCALE <name> <cold_s> warm=<s> rows=<n> jobs=<cold>/<warm> construct_jobs=<n>`.
   * Cold is the first run in the session; a name given N times is run warm
   * N times and the min is kept. Seconds cover construction plus `count()`;
@@ -29,6 +33,18 @@ object Probe {
     def line: String =
       f"SCALE $name ${cold.seconds}%.3f warm=${warm.seconds}%.3f rows=${cold.rows} " +
         s"jobs=${cold.jobs}/${warm.jobs} construct_jobs=${cold.constructJobs}"
+  }
+
+  /** The CacheManager's entry count (`numCachedEntries` is `private[sql]`
+    * in Scala, public in bytecode). */
+  def cacheEntries(spark: SparkSession): Int = {
+    val cm = spark.sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  def residentLine(spark: SparkSession): String = {
+    val bytes = spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+    f"SCALE resident memos=${cacheEntries(spark)} cached_mb=${bytes / 1048576.0}%.2f"
   }
 
   /** Fails fast, naming every name that is not a declared query. */
@@ -79,6 +95,7 @@ object Probe {
     val spark = Harness.session()
     val (text, vec, graph, win) = Harness.warm(spark, sfDir)
     println(f"SCALE shared_stage_s ${text + vec + graph + win}%.3f")
+    println(residentLine(spark))
     run(spark, sfDir, names).foreach(r => println(r.line))
     spark.stop()
   }

@@ -809,7 +809,7 @@ object Flagships extends QueryModule {
   /** Directed nation-level trade edges (src nation → dst nation, exact
     * decimal revenue weight) — the ONE fact-scale stage every graph-family
     * query (PageRank, LPA, k-core, Adamic–Adar) starts from, memoized per
-    * corpus and cut ([[graft.Checkpoints]]) at its bounded ≤ n² size (the same
+    * corpus by [[graft.PlanCache]] at its bounded ≤ n² size (the same
     * shared-stage discipline as the shingle/codebook/kNN caches; Bench
     * clocks the build on the shared-stage line, not whichever graph query
     * runs first).
@@ -828,7 +828,7 @@ object Flagships extends QueryModule {
         $"o_custkey" === $"c_custkey")
       .groupBy($"src", $"dst")
       .agg(sum(dec($"l_extendedprice") * dec(lit(1) - $"l_discount")).as("wgt"))
-    edgeCache.getOrCompute(fresh)(f => graft.Checkpoints.cut(f.coalesce(1)))
+    edgeCache.getOrCompute(fresh)(_.coalesce(1))
   }
 
   /** The DuckDB twin of [[nationTradeEdges]], as the CTE `name(src, dst,
@@ -942,7 +942,7 @@ object Flagships extends QueryModule {
     * individual graph query's timer. */
   def prepareSharedStages(spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
-    nationTradeEdges(spark, dir).count()
+    nationTradeEdges(spark, dir) // built by its PlanCache lookup
     (System.nanoTime() - t0) / 1e9
   }
 

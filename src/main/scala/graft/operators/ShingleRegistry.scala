@@ -149,7 +149,7 @@ object ShingleRegistry {
   def ensureBitmask(spark: SparkSession, dir: String): DataFrame = synchronized {
     val name = bitmaskTable(dir)
     findOrBuild(spark, bitmaskFingerprint(dir), Seq(name -> BitmaskLayout)) {
-      BitmaskLayout.write(TextOps.shingles(Tables.documents(spark, dir))
+      BitmaskLayout.write(TextOps.cachedShingles(Tables.documents(spark, dir))
         .withColumn("batch", batchOf(col("doc_id")))
         .groupBy(col("shingle"))
         .agg(

@@ -5,7 +5,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import org.apache.spark.storage.StorageLevel
 
 /** SURVEY.md §2.1.I (text half) — training-data text pipeline operators:
   * normalization stats, tokenization, n-grams, exact/near dedup
@@ -27,7 +26,10 @@ object TextOps extends QueryModule {
 
   /** Shared-stage memos (atomic, liveness-checked, explicitly released —
     * see [[graft.PlanCache]], whose `evictAll()` is the long-lived-session
-    * lifecycle hook).
+    * lifecycle hook). Each memo holds its rows in one columnar
+    * `MEMORY_AND_DISK` cache over a lineage cut, not the plan that built
+    * them, so no build-time broadcast (the source-tag join below, the
+    * shingle self-join) stays pinned behind it.
     */
   private val decontamCache = new graft.PlanCache(1)
 
@@ -44,7 +46,7 @@ object TextOps extends QueryModule {
     val docs = Tables.documents(spark, dir)
     val sh = cachedShingles(docs)
       .join(broadcast(docs.select(col("doc_id"), col("source"))), "doc_id")
-    decontamCache.getOrCompute(sh) { fresh => fresh.cache(); fresh }
+    decontamCache.getOrCompute(sh)(identity)
   }
 
   /** Lowercased whitespace tokens with 0-based position. */
@@ -59,19 +61,21 @@ object TextOps extends QueryModule {
     * read the same tokenize explode of the corpus. Same shared-stage tier as
     * [[cachedShingles]]: corpus-scale, built once per corpus on the
     * Bench shared-text clock, released by [[graft.PlanCache.evictAll]].
-    * The three corpus-scale memos (tokens, token sets, shingles) persist
-    * at an explicit MEMORY_AND_DISK — `.cache()`'s default — because the
-    * positional-token explode is larger than the corpus (SCALE.md).
+    * Like every PlanCache memo, the three corpus-scale ones (tokens, token
+    * sets, shingles) hold their rows in a columnar cache at an explicit
+    * MEMORY_AND_DISK, because the positional-token explode is larger than
+    * the corpus (SCALE.md); the tokenize plan is cut away once they are
+    * built.
     */
   private val tokensCache = new graft.PlanCache(1)
 
   def cachedTokens(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    tokensCache.getOrCompute(tokens(docs)) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
+    tokensCache.getOrCompute(tokens(docs))(identity)
 
   /** Memoized per-doc DISTINCT token arrays — the row-local set relation
     * the PMI row's vocab/df/pair passes all consume (no (doc, tok)
     * exchange anywhere: `array_distinct` is per row). Shared-stage tier
-    * as above.
+    * and storage as above.
     */
   private val tokenSetsCache = new graft.PlanCache(1)
 
@@ -79,7 +83,7 @@ object TextOps extends QueryModule {
     tokenSetsCache.getOrCompute(
       docs.select(
         expr("array_distinct(filter(split(lower(text), ' '), t -> t != ''))")
-          .as("toks"))) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
+          .as("toks")))(identity)
 
   /** Distinct 3-gram word shingles per doc — ROW-LOCAL formulation:
     * empty tokens filtered with order kept, a 3-window slid over the
@@ -240,21 +244,26 @@ object TextOps extends QueryModule {
 
   /** The ONE memoized shingle relation every consumer shares — the
     * Jaccard pair table, the minhash banding, the decontamination tag
-    * join. Capacity 2 covers the full-corpus and
-    * en-filtered (pipeline_near_dedup) variants.
+    * join, the bitmask registry build. Capacity 2 covers the full-corpus
+    * and en-filtered (pipeline_near_dedup) variants. The memo's plan is a
+    * scan of its own cached rows, so a consumer that rebuilds
+    * [[shingles]] over the same documents does NOT hit it implicitly:
+    * call this.
     */
   def cachedShingles(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    shinglesCache.getOrCompute(shingles(docs)) { f => f.persist(StorageLevel.MEMORY_AND_DISK); f }
+    shinglesCache.getOrCompute(shingles(docs))(identity)
 
   /** Memoized (d1, d2, i) shingle-intersection counts over ALL document
     * pairs sharing ≥1 shingle — the quadratic stage itself, shared by
     * the Jaccard pair table (j ≥ 0.5 filter) and the containment row
     * (i/min-size ≥ 0.5 filter, a different survivor set), so the
-    * self-join runs once per corpus (r7).
+    * self-join runs once per corpus (r7). The memo keeps the counts, not
+    * the join: the broadcast hash relation AQE may build for the shingle
+    * self-join is freed once the build ends.
     */
   private val interCache = new graft.PlanCache(2)
 
-  private def interPairs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def interPairs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sh = cachedShingles(docs)
     // NOTE (r13): a market-basket-style rewrite (group per shingle,
     // explode ordered pairs row-locally) measured SLOWER here (3.1 s →
@@ -266,7 +275,7 @@ object TextOps extends QueryModule {
       .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("i"))
-    interCache.getOrCompute(fresh) { f => f.cache(); f }
+    interCache.getOrCompute(fresh)(identity)
   }
 
   def jaccardPairs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -316,11 +325,11 @@ object TextOps extends QueryModule {
     * pipeline. (The en-filtered variant in `pipeline_near_dedup` is a
     * different plan and intentionally not cached here.)
     */
-  private def corpusJaccardPairs(
+  private[graft] def corpusJaccardPairs(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val fresh = jaccardPairs(Tables.documents(spark, dir))
-    pairsCache.getOrCompute(fresh) { f => f.cache(); f }
+    pairsCache.getOrCompute(fresh)(identity)
   }
 
   val textJaccardSimpairs = Q(
@@ -343,6 +352,11 @@ object TextOps extends QueryModule {
       WHERE CAST(CAST(i AS DOUBLE) / (za.n + zb.n - i) AS DECIMAL(18,6)) >= 0.5
       ORDER BY d1, d2
     """.trim))
+
+  /** The (doc_id, band, bucket) rows of [[minhashCandidates]]: n_docs ×
+    * n_bands small rows.
+    */
+  private val bandsCache = new graft.PlanCache(1)
 
   /** MinHash + LSH banding candidate pairs — the scalable near-dup path.
     * 48 hash fns from ONE md5 per shingle (the universal-hash family
@@ -383,10 +397,12 @@ object TextOps extends QueryModule {
       val cs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}").cast("string"))
       struct(lit(b).as("band"), md5(concat_ws(":", cs: _*)).as("bucket"))
     }
-    val bands = sigs
+    // both sides of the self-join read the bands memo: AQE plans each
+    // side's signature aggregate as its own shuffle stage (no exchange
+    // reuse), so recomputing would run the md5 pass twice
+    val bands = bandsCache.getOrCompute(sigs
       .select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .cache() // both sides of the self-join; n_docs × n_bands tiny rows
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket")))(identity)
     bands.as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
@@ -1143,7 +1159,9 @@ object TextOps extends QueryModule {
     * derive from the same deterministic label propagation, so only the
     * first caller per distinct pair plan pays the iterative loop
     * (PlanCache makes the find-or-compute atomic, skips dead-context
-    * entries, and releases evicted label RDD blocks). Call sites pass
+    * entries, keeps the final labels in its columnar cache and frees an
+    * evicted entry; the loop releases its own last round once the memo
+    * holds the labels). Call sites pass
     * the SAME pair frame (not per-caller projections of it) so the
     * family shares one entry per input directory.
     */
@@ -1167,8 +1185,9 @@ object TextOps extends QueryModule {
     * pair table with columns (d1, d2) — returns (id, comp). Shared by
     * the declared component row and the composed dedup pipeline.
     */
-  def connectedComponents(pairsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    labelsCache.getOrCompute(pairsIn) { p =>
+  def connectedComponents(pairsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    var lastRound: Option[org.apache.spark.sql.DataFrame] = None
+    val memo = labelsCache.getOrCompute(pairsIn) { p =>
       // Materialize the pair table exactly once; every round below joins
       // this checkpointed table, never the upstream candidate pipeline.
       val pairs = graft.Checkpoints.cut(p.select(col("d1"), col("d2")))
@@ -1211,8 +1230,13 @@ object TextOps extends QueryModule {
         labels = next.select(col("id"), col("comp"))
       }
       graft.PlanCache.release(edges)
+      lastRound = Some(labels)
       labels
     }
+    // the memo holds the labels now: the last round's blocks are dead weight
+    lastRound.foreach(graft.PlanCache.release)
+    memo
+  }
 
   /** Force the graph family's shared stages — the corpus near-dup pair
     * table and the connected-component labels — and report the elapsed
@@ -1234,21 +1258,15 @@ object TextOps extends QueryModule {
   def prepareSharedStages(
       spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
-    timed("shingles")(
-      cachedShingles(Tables.documents(spark, dir)).count())
+    // every memo is built (materialized) by its PlanCache lookup
+    timed("shingles")(cachedShingles(Tables.documents(spark, dir)))
     // the positional-token and distinct-token-set memos (r14): built on
     // this clock, honestly attributed, so the ~14 token-family consumers
     // measure their OWN aggregation instead of a repeated tokenize
-    timed("tokens")(
-      cachedTokens(Tables.documents(spark, dir)).count())
-    timed("tokenSets")(
-      cachedTokenSets(Tables.documents(spark, dir)).count())
-    val pairs = timed("pairs") {
-      val p = corpusJaccardPairs(spark, dir)
-      p.count() // materializes the cached pair frame (and its shingles)
-      p
-    }
-    timed("cc")(connectedComponents(pairs)) // eager checkpointed fixpoint
+    timed("tokens")(cachedTokens(Tables.documents(spark, dir)))
+    timed("tokenSets")(cachedTokenSets(Tables.documents(spark, dir)))
+    val pairs = timed("pairs")(corpusJaccardPairs(spark, dir))
+    timed("cc")(connectedComponents(pairs))
     // persisted shingle registry: the first run on a corpus pays the
     // build here (its own shared-stage line, not the incremental-dedup
     // query's clock); later sessions re-register metadata only

@@ -50,10 +50,10 @@ object VectorOps extends QueryModule {
     * seed filter) so the codebook adapts to the corpus it indexes; a
     * production deployment would read n from table statistics instead of
     * the extra count pass. `nlistOverride` pins the cell count for
-    * recall-parity tests. Returns (cell, cvec, cnrm), checkpointed —
+    * recall-parity tests. Returns (cell, cvec, cnrm) as a memo —
     * nlist×dim rows — so multi-reference plans (index + probe sides)
-    * never re-run the two corpus passes. The checkpointed frame is
-    * PlanCache-memoized per (corpus plan, nlist): every ANN/semantic
+    * never re-run the two corpus passes. The memo is
+    * PlanCache-held per (corpus plan, nlist): every ANN/semantic
     * query over the same directory shares ONE codebook build, the same
     * shared-stage discipline as TextOps' shingle/pair tables.
     */
@@ -81,14 +81,15 @@ object VectorOps extends QueryModule {
   def prepareSharedStages(
       spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
-    timed("ivfCodebook")(ivfCodebook(withNorm(spark, dir)).count())
+    // each memo below is built by its PlanCache lookup
+    timed("ivfCodebook")(ivfCodebook(withNorm(spark, dir)))
     // the in-plan trained PQ codebook (vec_ann_ivfpq + recall report)
     // shares the same once-per-corpus discipline
-    timed("trainPqCodebook")(trainPqCodebook(withNorm(spark, dir)).count())
+    timed("trainPqCodebook")(trainPqCodebook(withNorm(spark, dir)))
     // the memoized exact-kNN graph is shared by vec_knn_graph_stats and
     // vec_twonn_intrinsic_dim — clock its build here (shared stages get
     // their own line, not whichever query runs first)
-    timed("cachedKnn5")(cachedKnn5(spark, dir).count())
+    timed("cachedKnn5")(cachedKnn5(spark, dir))
     // persisted IVF index + PQ codes/codebook: first bench run on a
     // corpus pays the builds here (their own shared-stage line item, not
     // the serve rows' clocks); subsequent sessions re-register metadata.
@@ -159,10 +160,8 @@ object VectorOps extends QueryModule {
     * ids — k-means++-style spatial spread without k sequential corpus
     * passes, which would not scale with nlist = √n), refined by
     * [[IvfLloydIters]] fixed Lloyd rounds with exact decimal means so
-    * the DuckDB mirror reproduces every double bit-for-bit. Each
-    * intermediate centroid frame is nlist rows and cached, so round i
-    * never re-derives rounds 1..i−1; the final codebook is memoized and
-    * lineage-cut per corpus ([[codebookCache]]).
+    * the DuckDB mirror reproduces every double bit-for-bit. Trained by
+    * [[lloydMemo]] under [[codebookCache]], once per corpus.
     */
   def ivfCodebook(e: org.apache.spark.sql.DataFrame,
                   nlistOverride: Option[Int] = None,
@@ -184,14 +183,27 @@ object VectorOps extends QueryModule {
           .select(expr("CAST(vec_id DIV stride AS LONG)").as("cid"),
             col("emb").as("cemb"))
     }
-    val trained = (1 to IvfLloydIters).foldLeft(seeds) { (c, _) =>
-      lloydRound(e, c.cache())
-    }
-    trained
+    lloydMemo(codebookCache, seeds, IvfLloydIters)(lloydRound(e, _))
       .select(col("cid").cast("long").as("cell"), col("cemb").as("cvec"))
       .withColumn("cnrm", sqrt(GraftFunctions.dot(col("cvec"), col("cvec"))))
-      .transform(plan =>
-        codebookCache.getOrCompute(plan)(p => graft.Checkpoints.cut(p.repartition(1))))
+  }
+
+  /** `iters` Lloyd rounds from `seeds`, memoized by `memo` in one
+    * partition and keyed on the seeds plan, which carries the corpus and
+    * the cell count. Each round's centroid frame (a few rows) is cached
+    * so round i reads round i−1 once instead of re-deriving rounds
+    * 1..i−1; the rounds are unpersisted once the memo holds the trained
+    * centroids, and a hit builds none of them.
+    */
+  private def lloydMemo(memo: graft.PlanCache, seeds: org.apache.spark.sql.DataFrame, iters: Int)(
+      round: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val trained = memo.getOrCompute(seeds) { s =>
+      (1 to iters).foldLeft(s) { (c, _) => rounds += c.cache(); round(c) }.repartition(1)
+    }
+    rounds.foreach(_.unpersist(blocking = false))
+    trained
   }
 
   /** The SQL twin of [[roundedL2]]: `‖a‖² − 2a·b + ‖b‖²` rounded to 6 dp,
@@ -455,11 +467,9 @@ object VectorOps extends QueryModule {
         explode(array((0 until m).map(lit): _*)).as("sub"), col("emb"))
       .select(col("sub").cast("long").as("sub"), col("cid"),
         expr(s"slice(emb, sub*$w+1, $w)").as("cv"))
-    (1 to PqLloydIters).foldLeft(seeds)((c, _) => pqLloydRound(idx, c.cache(), m, w))
-      // memoized + lineage-cut per corpus like the IVF codebook: training
-      // is 2 corpus passes — every ivfpq-family row must pay it ONCE
-      .transform(plan =>
-        pqCodebookCache.getOrCompute(plan)(p => graft.Checkpoints.cut(p.repartition(1))))
+    // memoized per corpus like the IVF codebook: training is 2 corpus
+    // passes — every ivfpq-family row must pay it ONCE
+    lloydMemo(pqCodebookCache, seeds, PqLloydIters)(pqLloydRound(idx, _, m, w))
   }
 
   /** Generator for the DuckDB PQ-codebook-training mirror: CTEs ending
@@ -1337,7 +1347,9 @@ object VectorOps extends QueryModule {
         explode(array(tableStructs: _*)).as("tb"))
       .select(col("vec_id"), col("emb"), col("nrm"),
         col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-      .cache() // reused as both corpus and query side
+    // no cache: the query side's `vec_id` filter reaches the embeddings
+    // scan, so it buckets only its nQueries vectors, and the corpus side
+    // buckets each vector once
     val queries = tables.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("nrm").as("q_nrm"), col("tbl").as("q_tbl"), col("bucket").as("q_bucket"))
@@ -1730,7 +1742,7 @@ object VectorOps extends QueryModule {
 
   /** Global exact k=5 kNN graph (src, label, dst, cos, rn), memoized per
     * corpus: built once from the chunk-local candidate stage, globally
-    * re-ranked, and checkpointed — every consumer (`vec_knn_graph
+    * re-ranked, and held by [[graft.PlanCache]] — every consumer (`vec_knn_graph
     * _stats`' reciprocity join reads it twice, `vec_twonn_intrinsic_dim`
     * takes rn ≤ 2) shares ONE quadratic pass per directory, the same
     * shared-stage discipline as the shingle/pair/codebook caches.
@@ -1746,7 +1758,7 @@ object VectorOps extends QueryModule {
         Window.partitionBy($"src").orderBy($"cos".desc, $"dst".asc)))
       .filter($"rn" <= k)
       .select($"src", $"label", $"dst", $"cos", $"rn")
-    knnCache.getOrCompute(fresh)(graft.Checkpoints.cut)
+    knnCache.getOrCompute(fresh)(identity)
   }
 
   lazy val vecKnnGraphStats = Q(

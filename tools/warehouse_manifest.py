@@ -2,7 +2,7 @@
 """Print one line per table directory of a Spark warehouse, so two
 warehouses built from the same corpus can be compared with `diff`.
 
-    python3 tools/warehouse_manifest.py <warehouse dir>
+    python3 tools/warehouse_manifest.py [--rows] <warehouse dir>
 
 Each line holds the table directory's name, its data-file count, per
 bucket the file count and bytes (from the `_NNNNN` bucket suffix Spark
@@ -11,6 +11,12 @@ the total bytes, and the text of the `<table>.fingerprint` marker beside
 it (`-` when there is none). File names themselves carry a random id and
 are left out. Data files are the files whose names start with neither `_`
 nor `.`; files in partition subdirectories count as well.
+
+With `--rows`, each line holds the table directory's name, its row count
+and an order-free digest of its rows instead, read with DuckDB: the md5
+of the sorted md5s of every row's text. Two builds that store the same
+rows in different files, orders or Parquet footers (the writer lists a
+column chunk's encodings in a per-JVM order) give the same line.
 """
 import os
 import re
@@ -48,13 +54,31 @@ def manifest_line(warehouse, name):
             f"marker={marker_text}")
 
 
+def rows_line(con, warehouse, name):
+    table_dir = os.path.join(warehouse, name)
+    paths = [os.path.join(table_dir, rel) for rel, _ in data_files(table_dir)]
+    if not paths:
+        return f"{name} rows=0 digest=-"
+    n, digest = con.execute(
+        "SELECT count(*), md5(string_agg(d, '' ORDER BY d)) FROM ("
+        " SELECT md5(CAST(t AS VARCHAR)) AS d"
+        " FROM read_parquet(?, hive_partitioning = true, union_by_name = true) t)",
+        [paths]).fetchone()
+    return f"{name} rows={n} digest={digest}"
+
+
 def main(argv):
-    if len(argv) != 2 or not os.path.isdir(argv[1]):
+    rows = "--rows" in argv[1:]
+    args = [a for a in argv[1:] if a != "--rows"]
+    if len(args) != 1 or not os.path.isdir(args[0]):
         sys.exit(__doc__.strip())
-    warehouse = argv[1]
+    warehouse = args[0]
+    if rows:
+        import duckdb
+        con = duckdb.connect()
     for name in sorted(os.listdir(warehouse)):
         if os.path.isdir(os.path.join(warehouse, name)):
-            print(manifest_line(warehouse, name))
+            print(rows_line(con, warehouse, name) if rows else manifest_line(warehouse, name))
 
 
 if __name__ == "__main__":
