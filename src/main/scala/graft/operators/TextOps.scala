@@ -269,8 +269,9 @@ object TextOps extends QueryModule {
     // explode ordered pairs row-locally) measured SLOWER here (3.1 s →
     // 4.7 s at sf0.1): the pair fan-out is the quadratic auditor's whole
     // point, and the join emits it in compiled code while the nested
-    // transform explode is interpreted; the self-join's two sides also
-    // share one exchange via ReusedExchange already.
+    // transform explode is interpreted. At sf0.001 and sf0.1 the self-join
+    // plans as a broadcast hash join over the memo's cached rows (sized
+    // from the cache's statistics), so no side repeats a shuffle.
     val fresh = sh.as("a")
       .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
