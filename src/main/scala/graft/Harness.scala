@@ -35,6 +35,20 @@ object Harness {
     spark
   }
 
+  /** The per-step clock of a shared-stage build: `clock(step)(body)` runs
+    * `body` and logs its wall clock to stderr as `[<stage>] <step> <s> s`
+    * (two decimals), so a cold build's cost is attributed step by step
+    * while stdout stays clean for the bench JSON.
+    */
+  private[graft] final class StepClock(stage: String) {
+    def apply[T](step: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      val r = body
+      System.err.println(f"[$stage] $step ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      r
+    }
+  }
+
   /** Pays every one-time cost before the first query's clock starts and
     * returns the four shared-stage clocks (text, vector, graph, window).
     *

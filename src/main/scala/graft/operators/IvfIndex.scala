@@ -223,7 +223,7 @@ object IvfIndex {
       aliasCurrent = genOnDisk(spark, dir, gen - 1), planEmpty = splitCells.isEmpty,
       aliased = { ensureGen(spark, dir, gen - 1); servingLocs(spark, dir, gen - 1) }) {
       val (idx, cb) = prev
-      val asg = plan._2
+      val (_, asg, subCents) = plan
       // deterministic new ids: rank split cells by cell id — side 0
       // keeps the id, side 1 gets max(input-generation cell) + 1-based
       // rank. Built
@@ -234,17 +234,8 @@ object IvfIndex {
         splitCells.zipWithIndex.flatMap { case (c, i) =>
           Seq((c, 0L, c), (c, 1L, maxc + i + 1L))
         }.toSeq).toDF("cell", "side", "new_cell")
-      // split sub-centroids: exact per-dimension decimal means (the
-      // vec_kmeans_lloyd update rule), re-keyed to the new cell ids
-      val splitCents = asg
-        .select(col("cell"), col("side"), posexplode(col("emb")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("side"), col("pos"))
-        .agg(sum(col("v").cast(org.apache.spark.sql.types.DecimalType(28, 12))).as("s"),
-          count(lit(1)).as("cn"))
-        .withColumn("c", col("s").cast(org.apache.spark.sql.types.DoubleType) / col("cn"))
-        .groupBy(col("cell"), col("side"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-        .select(col("cell"), col("side"), expr("transform(pc, x -> x.c)").as("cvec"))
+      // split sub-centroids re-keyed to the new cell ids
+      val splitCents = subCents
         .join(broadcast(idMap), Seq("cell", "side"))
         .select(col("new_cell").as("cell"), col("cvec"),
           sqrt(GraftFunctions.dot(col("cvec"), col("cvec"))).as("cnrm"))

@@ -1239,26 +1239,20 @@ object TextOps extends QueryModule {
     memo
   }
 
-  /** Force the graph family's shared stages — the corpus near-dup pair
-    * table and the connected-component labels — and report the elapsed
-    * seconds. Bench calls this OUTSIDE the per-query clocks and logs the
-    * figure as `shared_stage_s`, so the shared cost is an explicit line
-    * item instead of being silently absorbed by whichever family query
-    * happens to run first (honest per-query attribution).
+  /** Force the text family's shared stages — the token, shingle and
+    * near-dup pair memos, the connected-component labels and the
+    * persisted shingle registry — and report the elapsed seconds. Bench
+    * calls this OUTSIDE the per-query clocks and logs the figure as
+    * `shared_stage_s`, so the shared cost is an explicit line item
+    * instead of being silently absorbed by whichever family query happens
+    * to run first (honest per-query attribution). Each step's wall clock
+    * goes to stderr as `[shared-text] <step> <s> s`
+    * ([[graft.Harness.StepClock]]); stdout stays clean for the bench JSON.
     */
-  /** Per-step wall clock to stderr (r13) — same attribution discipline
-    * as the vec shared stage; stdout stays clean for the bench JSON.
-    */
-  private def timed[T](step: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    System.err.println(f"[shared-text] $step ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   def prepareSharedStages(
       spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
+    val timed = new graft.Harness.StepClock("shared-text")
     // every memo is built (materialized) by its PlanCache lookup
     timed("shingles")(cachedShingles(Tables.documents(spark, dir)))
     // the positional-token and distinct-token-set memos (r14): built on

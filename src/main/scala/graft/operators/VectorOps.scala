@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * Scale notes (100 TB):
   *  - Norms/centroids: posexplode + decimal partial aggregation — the
   *    shuffle carries one row per (group, dim), independent of row count.
+  *    Every centroid (both codebooks' Lloyd rounds, the split
+  *    sub-centroids, the label centroids) is one [[meanVec]].
   *  - Cosine top-k broadcasts the (small) probe side; the big side
   *    streams through one pass — no shuffle of the corpus. Per-probe
   *    top-k via window on the probe partition.
@@ -38,49 +40,28 @@ object VectorOps extends QueryModule {
   private val cosine = (a: String, b: String, na: String, nb: String) =>
     GraftFunctions.dot(col(a), col(b)) / (col(na) * col(nb))
 
-  /** DATA-DRIVEN IVF codebook: `nlist = ⌈√n⌉` cells —
-    * the SemDeDup √n rule as code, not a constant — trained with ONE
-    * deterministic Lloyd step (`vec_kmeans_lloyd`'s exact recipe: seeds
-    * = the nlist lowest vec_ids, nearest-seed assignment via the
-    * rounded ‖a‖²−2a·c+‖c‖² identity with cid tiebreak, update = exact
-    * per-dimension decimal means). Every seed is its own nearest member,
-    * so no cell is ever empty and the cell count IS nlist.
-    *
-    * nlist is derived IN-PLAN (a 1-row count frame cross-joined into the
-    * seed filter) so the codebook adapts to the corpus it indexes; a
-    * production deployment would read n from table statistics instead of
-    * the extra count pass. `nlistOverride` pins the cell count for
-    * recall-parity tests. Returns (cell, cvec, cnrm) as a memo —
-    * nlist×dim rows — so multi-reference plans (index + probe sides)
-    * never re-run the two corpus passes. The memo is
-    * PlanCache-held per (corpus plan, nlist): every ANN/semantic
-    * query over the same directory shares ONE codebook build, the same
-    * shared-stage discipline as TextOps' shingle/pair tables.
+  /** Both codebook memos, PlanCache-held per constructed seeds plan
+    * (corpus and cell count): every ANN/semantic query over the same
+    * directory shares ONE build of each, the same shared-stage discipline
+    * as TextOps' shingle/pair tables.
     */
   private val codebookCache = new graft.PlanCache(4)
   private val pqCodebookCache = new graft.PlanCache(4)
 
-  /** Force the shared ⌈√n⌉-cell IVF codebook for this corpus and report
-    * the elapsed seconds. Bench clocks it OUTSIDE the per-query timers
-    * (the shared-stage discipline): the ANN/semantic rows
-    * then measure their own plans, not whichever family member happened
-    * to build the codebook first.
+  /** Builds this corpus's shared vector stages — the ⌈√n⌉-cell IVF
+    * codebook, the PQ codebook, the exact-kNN graph and every persisted
+    * IVF/PQ artifact — and reports the elapsed seconds. Bench clocks it
+    * OUTSIDE the per-query timers, so the ANN/semantic rows measure their
+    * own plans, not whichever family member happened to build a stage
+    * first. Each step's wall clock goes to stderr as `[shared-vec] <step>
+    * <s> s` ([[graft.Harness.StepClock]]): a cold-warehouse build is a
+    * shared-stage line item of ~80 s at sf0.1, and optimizing it needs
+    * attribution; stdout stays clean for the bench JSON.
     */
-  /** Per-step wall clock for the shared-stage builds, logged to stderr
-    * (r13): the cold-warehouse build is a full shared-stage line item of
-    * ~80 s at sf0.1, and optimizing it needs attribution — stdout stays
-    * clean for the bench JSON contract.
-    */
-  private def timed[T](step: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    System.err.println(f"[shared-vec] $step ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
   def prepareSharedStages(
       spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
     val t0 = System.nanoTime()
+    val timed = new graft.Harness.StepClock("shared-vec")
     // each memo below is built by its PlanCache lookup
     timed("ivfCodebook")(ivfCodebook(withNorm(spark, dir)))
     // the in-plan trained PQ codebook (vec_ann_ivfpq + recall report)
@@ -132,78 +113,124 @@ object VectorOps extends QueryModule {
     */
   private[graft] val IvfLloydIters = 3
 
-  /** One deterministic Lloyd round: assign every corpus vector to its
-    * nearest centroid row-locally (rounded ‖a‖²−2a·c+‖c‖², cid tiebreak)
-    * and replace each centroid with the exact decimal mean of its
-    * members; a centroid that captured nothing KEEPS its previous
-    * position (the textbook empty-cluster carry), so the cell count is
-    * invariant across rounds. `cents` is bounded (nlist rows) and cached
-    * by the caller, so referencing it twice (assignment broadcast +
-    * carry fallback) does not re-derive its lineage.
+  /** The slice width of a one-subspace codebook: the slice spans the
+    * whole vector, so the PQ kernels and trainer serve the cell codebook
+    * unchanged.
     */
-  private def lloydRound(e: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val means = withNearestCentroidD2(e, cents, "cid", "cemb", "cid", "d2")
-      .select(col("cid"), posexplode(col("emb")).as(Seq("pos", "v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(sum(col("v").cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", col("s").cast(DoubleType) / col("n"))
-      .groupBy(col("cid"))
+  private val WholeVector = Int.MaxValue
+
+  /** The exact per-dimension decimal mean of each group's vectors:
+    * `df(keys…, emb)` → `(keys…, out ARRAY<DOUBLE>)`, each dimension's
+    * DECIMAL(28,12) sum divided once in double — rounded to `dp`
+    * decimals through DECIMAL(18, dp) when given. The update step of the
+    * Lloyd round, the split sub-centroids and the label centroids; its
+    * DuckDB twin is [[meanVecSql]].
+    */
+  private[graft] def meanVec(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+      out: String, dp: Option[Int] = None): org.apache.spark.sql.DataFrame = {
+    val ks = keys.map(col)
+    val mean = col("s").cast(DoubleType) / col("cn")
+    df.select(ks :+ posexplode(col("emb")).as(Seq("pos", "v")): _*)
+      .groupBy(ks :+ col("pos"): _*)
+      .agg(sum(col("v").cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("cn"))
+      .withColumn("c", dp.fold(mean)(d => mean.cast(DecimalType(18, d)).cast(DoubleType)))
+      .groupBy(ks: _*)
       .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-      .select(col("cid"), expr("transform(pc, x -> x.c)").as("m"))
-    cents.join(means, Seq("cid"), "left")
-      .select(col("cid"), coalesce(col("m"), col("cemb")).as("cemb"))
+      .select(ks :+ expr("transform(pc, x -> x.c)").as(out): _*)
   }
 
-  /** Trained ⌈√n⌉-cell IVF codebook: seeds are an
-    * id-ordered STRIDE sample of the corpus (one seed every ⌊n/nlist⌋
-    * ids — k-means++-style spatial spread without k sequential corpus
-    * passes, which would not scale with nlist = √n), refined by
-    * [[IvfLloydIters]] fixed Lloyd rounds with exact decimal means so
-    * the DuckDB mirror reproduces every double bit-for-bit. Trained by
-    * [[lloydMemo]] under [[codebookCache]], once per corpus.
+  /** The one seed rule of every codebook: over the one-row count frame
+    * `n`, `k` centroids per subspace, taken as an id-ordered STRIDE
+    * sample — `vec_id % stride = 0 AND vec_id DIV stride < k`, cid =
+    * `vec_id DIV stride`, with `stride = max(n DIV k, 1)` unless given
+    * (k-means++-style spatial spread without k sequential corpus
+    * passes). Returns each seed's `m` slices of width `w` as (sub LONG,
+    * cid LONG, cv ARRAY<DOUBLE>).
+    */
+  private def strideSeeds(e: org.apache.spark.sql.DataFrame, k: Column, m: Int, w: Int,
+      stride: Option[Column]): org.apache.spark.sql.DataFrame = {
+    val nk = e.agg(count(lit(1)).as("n")).select(col("n"), k.as("k"))
+      .select(col("k"), stride.getOrElse(greatest(expr("n DIV k"), lit(1L))).as("stride"))
+    e.crossJoin(broadcast(nk))
+      .filter(col("vec_id") % col("stride") === 0 && expr("vec_id DIV stride") < col("k"))
+      .select(expr("CAST(vec_id DIV stride AS LONG)").as("cid"),
+        explode(array((0 until m).map(lit): _*)).as("sub"), col("emb"))
+      .select(col("sub").cast("long").as("sub"), col("cid"),
+        expr(s"slice(emb, sub*$w+1, $w)").as("cv"))
+  }
+
+  /** One deterministic Lloyd round over all `m` subspaces at once:
+    * [[withPqStructs]] gives every vector its per-subspace nearest
+    * centroid row-locally (rounded ‖v‖²−2v·c+‖c‖², cid tiebreak), then
+    * each (sub, cid) centroid moves to the [[meanVec]] of its member
+    * slices; a centroid that captured nothing KEEPS its previous position
+    * (the textbook empty-cluster carry), so the centroid count is
+    * invariant across rounds. `cents` is bounded (m·k rows) and cached
+    * by the caller, so referencing it twice (assignment broadcast + carry
+    * fallback) does not re-derive its lineage.
+    */
+  private def codebookRound(e: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame, m: Int, w: Int): org.apache.spark.sql.DataFrame = {
+    // one row per (vector, subspace): BIGINT sub, because the means
+    // become the next round's codebook, whose sub PqEncodeAll reads as a
+    // long
+    val slices = withPqStructs(e, cents, m, w)
+      .select(explode(col("pq")).as("tc"), col("emb"))
+      .select(col("tc.sub").cast("long").as("sub"), col("tc.cid").as("cid"),
+        expr(s"slice(emb, tc.sub*$w+1, $w)").as("emb"))
+    cents.join(meanVec(slices, Seq("sub", "cid"), "m"), Seq("sub", "cid"), "left")
+      .select(col("sub"), col("cid"), coalesce(col("m"), col("cv")).as("cv"))
+  }
+
+  /** The one codebook trainer: [[strideSeeds]] (`k`, `stride`) refined
+    * by `iters` [[codebookRound]]s over `e(vec_id, emb)`, memoized by `memo`
+    * in one partition and keyed on the seeds plan, which carries the
+    * corpus and the centroid count. Each round's centroid frame (a few
+    * rows) is cached so round i reads round i−1 once instead of
+    * re-deriving rounds 1..i−1; the rounds are unpersisted once the memo
+    * holds the trained centroids, and a hit builds none of them. Returns
+    * (sub LONG, cid LONG, cv ARRAY<DOUBLE>); its DuckDB twin is
+    * [[codebookSqlGen]].
+    */
+  private def trainCodebook(memo: graft.PlanCache, e: org.apache.spark.sql.DataFrame,
+      k: Column, m: Int, w: Int, iters: Int,
+      stride: Option[Column] = None): org.apache.spark.sql.DataFrame = {
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val trained = memo.getOrCompute(strideSeeds(e, k, m, w, stride)) { s =>
+      (1 to iters).foldLeft(s) { (c, _) => rounds += c.cache(); codebookRound(e, c, m, w) }
+        .repartition(1)
+    }
+    rounds.foreach(_.unpersist(blocking = false))
+    trained
+  }
+
+  /** DATA-DRIVEN IVF codebook: `nlist = ⌈√n⌉·nlistFactor` cells (the
+    * SemDeDup √n rule as code, not a constant), trained as the
+    * ONE-SUBSPACE case of the PQ trainer ([[trainCodebook]] with m = 1
+    * and the slice spanning the whole vector): [[strideSeeds]] with k =
+    * nlist, then [[IvfLloydIters]] Lloyd rounds with exact decimal means,
+    * so the DuckDB mirror ([[ivfCodebookSqlGen]]) reproduces every double
+    * bit-for-bit. nlist is derived IN-PLAN from the corpus count, so the
+    * codebook adapts to the corpus it indexes; a production deployment
+    * would read n from table statistics instead of the extra count pass.
+    * `nlistFactor` > 1 trains a FINER geometry (the spilled family's
+    * knob); `nlistOverride` pins the cell count for recall-parity tests
+    * (stride 1: the nlist lowest vec_ids seed). Returns (cell, cvec,
+    * cnrm), memoized under [[codebookCache]] — nlist×dim values — so
+    * multi-reference plans (index + probe sides) never re-run the
+    * corpus passes.
     */
   def ivfCodebook(e: org.apache.spark.sql.DataFrame,
                   nlistOverride: Option[Int] = None,
                   nlistFactor: Int = 1): org.apache.spark.sql.DataFrame = {
-    val seeds = nlistOverride match {
-      case Some(m) => e.filter(col("vec_id") < m)
-        .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-      case None =>
-        // nlistFactor > 1 trains a FINER geometry (factor·⌈√n⌉ cells) —
-        // the r12 spilled family's knob; factor = 1 is the r8 default
-        // every existing artifact and mirror pins
-        val nl = e.agg(count(lit(1)).as("n"))
-          .select(col("n"),
-            (ceil(sqrt(col("n"))).cast("long") * nlistFactor).as("nlist"))
-          .select(col("nlist"), greatest(expr("n DIV nlist"), lit(1L)).as("stride"))
-        e.crossJoin(broadcast(nl))
-          .filter(col("vec_id") % col("stride") === 0 &&
-            expr("vec_id DIV stride") < col("nlist"))
-          .select(expr("CAST(vec_id DIV stride AS LONG)").as("cid"),
-            col("emb").as("cemb"))
+    val trained = nlistOverride match {
+      case Some(nl) => trainCodebook(codebookCache, e, lit(nl.toLong), 1, WholeVector,
+        IvfLloydIters, Some(lit(1L)))
+      case None => trainCodebook(codebookCache, e,
+        ceil(sqrt(col("n"))).cast("long") * nlistFactor, 1, WholeVector, IvfLloydIters)
     }
-    lloydMemo(codebookCache, seeds, IvfLloydIters)(lloydRound(e, _))
-      .select(col("cid").cast("long").as("cell"), col("cemb").as("cvec"))
+    trained.select(col("cid").as("cell"), col("cv").as("cvec"))
       .withColumn("cnrm", sqrt(GraftFunctions.dot(col("cvec"), col("cvec"))))
-  }
-
-  /** `iters` Lloyd rounds from `seeds`, memoized by `memo` in one
-    * partition and keyed on the seeds plan, which carries the corpus and
-    * the cell count. Each round's centroid frame (a few rows) is cached
-    * so round i reads round i−1 once instead of re-deriving rounds
-    * 1..i−1; the rounds are unpersisted once the memo holds the trained
-    * centroids, and a hit builds none of them.
-    */
-  private def lloydMemo(memo: graft.PlanCache, seeds: org.apache.spark.sql.DataFrame, iters: Int)(
-      round: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val trained = memo.getOrCompute(seeds) { s =>
-      (1 to iters).foldLeft(s) { (c, _) => rounds += c.cache(); round(c) }.repartition(1)
-    }
-    rounds.foreach(_.unpersist(blocking = false))
-    trained
   }
 
   /** The SQL twin of [[roundedL2]]: `‖a‖² − 2a·b + ‖b‖²` rounded to 6 dp,
@@ -237,58 +264,78 @@ object VectorOps extends QueryModule {
       )
       $cosineTop3Sql"""
 
-  /** The DuckDB mirror of [[ivfCodebook]]: CTEs ending in `centn(cell,
-    * cvec, cnrm)`. Callers append their own query-specific CTEs/SELECT.
-    * Expects an `e(vec_id, label, emb, nrm)` CTE to be in scope. The
-    * [[IvfLloydIters]] Lloyd rounds are UNROLLED programmatically so the
-    * mirror can never drift from the Spark build by one iteration.
+  /** The DuckDB twin of [[meanVec]]: a SELECT of `(keys…, out)` over
+    * `src(keys…, vec)`, each dimension's DECIMAL(28,12) sum divided once
+    * in double (through DECIMAL(18, dp) when `dp` is given), listed in
+    * dimension order.
     */
-  private[graft] def ivfCodebookSqlGen(src: String = "e", p: String = "",
-      countSrc: String = "embeddings", nlistFactor: Int = 1): String = {
-    // alias non-default sources as `e` so the round bodies read uniformly
-    val srcE = if (src == "e") "e" else s"$src e"
-    // factor emitted only when ≠ 1 so every factor-1 oracle's SQL text is
-    // byte-identical to the pre-r12 form
-    val nlistExpr =
-      if (nlistFactor == 1) "CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)"
-      else s"CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) * $nlistFactor"
+  private def meanVecSql(src: String, keys: String, out: String,
+      vec: String = "emb", dp: Option[Int] = None): String = {
+    val mean = "CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*)"
+    s"""SELECT $keys, LIST(c ORDER BY pos) AS $out FROM (
+          SELECT $keys, pos,
+            ${dp.fold(mean)(d => s"CAST(CAST($mean AS DECIMAL(18,$d)) AS DOUBLE)")} AS c
+          FROM (SELECT $keys, UNNEST($vec) AS x, UNNEST(range(len($vec))) AS pos
+                FROM $src)
+          GROUP BY $keys, pos)
+        GROUP BY $keys"""
+  }
+
+  /** The DuckDB twin of [[trainCodebook]]: the seed and round CTEs of a
+    * codebook trained over `$src(vec_id, …, emb, …)` — `${q}pn(k,
+    * stride)` over the `$countSrc` count and the `k` expression,
+    * `${q}s(vec_id, sub, v)` (the source's `m` slices of width `w`),
+    * `${q}pc0` (the stride seeds) and, per round i of `iters`, the
+    * assignment `${q}pasg<i>` and the centroids `${q}pc<i>(sub, cid,
+    * cv)`. The rounds are UNROLLED programmatically, so the mirror can
+    * never drift from the Spark build by one iteration; the prefix keeps
+    * several codebooks instantiable in ONE query.
+    */
+  private def codebookSqlGen(src: String, q: String, k: String, m: Int, w: Int,
+      iters: Int, countSrc: String): String = {
     val seed = s"""
-      ${p}nl AS (
-        SELECT nlist, GREATEST(n // nlist, 1) AS stride FROM (
-          SELECT COUNT(*) AS n, $nlistExpr AS nlist
-          FROM $countSrc)
-      ), ${p}cent0 AS (
-        SELECT vec_id // stride AS cid, emb AS cemb FROM $src, ${p}nl
-        WHERE vec_id % stride = 0 AND vec_id // stride < nlist
+      ${q}pn AS (
+        SELECT k, GREATEST(n // k, 1) AS stride FROM (
+          SELECT COUNT(*) AS n, $k AS k FROM $countSrc)
+      ), ${q}s AS (
+        SELECT vec_id, sub, list_slice(emb, sub*$w + 1, sub*$w + $w) AS v
+        FROM $src, (SELECT UNNEST(range($m)) AS sub)
+      ), ${q}pc0 AS (
+        SELECT vec_id // stride AS cid, sub, v AS cv FROM ${q}s, ${q}pn
+        WHERE vec_id % stride = 0 AND vec_id // stride < k
       )"""
-    val rounds = (1 to IvfLloydIters).map { i =>
-      s""", ${p}asg$i AS (
-        SELECT vec_id, cid, emb FROM (
-          SELECT e.vec_id, c.cid, e.emb,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${roundedL2Sql("e.emb", "c.cemb")}, c.cid) AS rn
-          FROM $srcE CROSS JOIN ${p}cent${i - 1} c)
+    val rounds = (1 to iters).map { i =>
+      s""", ${q}pasg$i AS (
+        SELECT sub, cid, v FROM (
+          SELECT s.sub, c.cid, s.v,
+            ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub ORDER BY
+              ${roundedL2Sql("s.v", "c.cv")}, c.cid) AS rn
+          FROM ${q}s s JOIN ${q}pc${i - 1} c ON s.sub = c.sub)
         WHERE rn = 1
-      ), ${p}cd$i AS (
-        SELECT cid, pos,
-          CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-        FROM (SELECT cid, UNNEST(emb) AS v, UNNEST(range(len(emb))) AS pos
-              FROM ${p}asg$i)
-        GROUP BY cid, pos
-      ), ${p}cent$i AS (
-        SELECT p.cid, COALESCE(m.cemb, p.cemb) AS cemb
-        FROM ${p}cent${i - 1} p LEFT JOIN
-          (SELECT cid, LIST(c ORDER BY pos) AS cemb FROM ${p}cd$i GROUP BY cid) m
-          ON p.cid = m.cid
+      ), ${q}pc$i AS (
+        SELECT p.sub, p.cid, COALESCE(m.cv, p.cv) AS cv
+        FROM ${q}pc${i - 1} p LEFT JOIN (
+          ${meanVecSql(s"${q}pasg$i", "sub, cid", "cv", "v")}) m
+          ON p.sub = m.sub AND p.cid = m.cid
       )"""
     }.mkString
-    val fin = s""", ${p}centn AS (
-        SELECT CAST(cid AS BIGINT) AS cell, cemb AS cvec,
-          SQRT(list_inner_product(cemb, cemb)) AS cnrm
-        FROM ${p}cent$IvfLloydIters
-      )"""
-    seed + rounds + fin
+    seed + rounds
   }
+
+  /** The DuckDB mirror of [[ivfCodebook]]: [[codebookSqlGen]]'s one-subspace
+    * case (its CTEs `${p}ivf`-prefixed) ending in `${p}centn(cell, cvec,
+    * cnrm)`, training over `$src(vec_id, …, emb, …)` with nlist =
+    * ⌈√COUNT($countSrc)⌉·nlistFactor. Callers append their own
+    * query-specific CTEs/SELECT.
+    */
+  private[graft] def ivfCodebookSqlGen(src: String = "e", p: String = "",
+      countSrc: String = "embeddings", nlistFactor: Int = 1): String =
+    codebookSqlGen(src, s"${p}ivf", s"CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) * $nlistFactor",
+      1, WholeVector, IvfLloydIters, countSrc) + s""", ${p}centn AS (
+        SELECT CAST(cid AS BIGINT) AS cell, cv AS cvec,
+          SQRT(list_inner_product(cv, cv)) AS cnrm
+        FROM ${p}ivfpc$IvfLloydIters
+      )"""
 
   val ivfCodebookSql: String = ivfCodebookSqlGen()
 
@@ -300,40 +347,25 @@ object VectorOps extends QueryModule {
     s"${OracleSql.embeddings()}, $ivfCodebookSql, " +
       s"${OracleSql.cellSims()}, ${OracleSql.assignedCells(cols)}"
 
-  /** The DuckDB mirror of the ENTIRE rebalance lifecycle — one shared
-    * fragment (the [[ivfCodebookSql]] discipline applied to the gen-2
-    * family: five declared rows previously each carried a near-verbatim
-    * copy of this chain, and a one-token drift in any copy would break
-    * that row's parity silently). Expects `e(vec_id, label, emb, nrm)`
-    * and `centn(cell, cvec, cnrm)` (from [[ivfCodebookSql]]) in scope;
-    * ends with every intermediate a consumer needs:
+  /** ONE rebalance step of the generation chain (the chain is a
+    * parameter) — [[splitPlan]]'s mirror: consumes generation g−1 as
+    * `$inIdx(vec_id, emb, nrm, cell)` + `$inCb(cell, cvec, cnrm)` and
+    * emits generation g, every CTE p-prefixed so two steps instantiate in
+    * one query:
     *
-    *  - `assigned(vec_id, emb, nrm, cell)` — gen-1 nearest-cell rows;
-    *  - `pops` / `over_cells(cell, n_cell)` — the overload gate;
-    *  - `asg(cell, n_cell, vec_id, emb, nrm, side)` — the 2-means split
-    *    ([[splitPlan]]'s mirror);
+    *  - `pops` / `over_cells(cell, n_cell)` — the overload gate, reading
+    *    nlist as COUNT(*) of the INPUT codebook, exactly [[splitPlan]]'s
+    *    `cbTab.count()` (which makes the step generation-agnostic);
+    *  - `asg(cell, n_cell, vec_id, emb, nrm, side)` — the 2-means split;
     *  - `idmap(cell, side, new_cell)` — side 0 keeps the id, side 1 =
     *    max(cell)+rank;
     *  - `newcv(cell, side, cvec)` / `splitc(cell, cvec, cnrm)` — the
-    *    exact-decimal-mean sub-centroids (derived from `asg`, so an
-    *    EMPTY side contributes no row — the same invariant the Spark
-    *    build has, which a closed-form `nlist + |over|` count would
-    *    miss when a split's members all tie to side 0);
+    *    sub-centroids, the [[meanVecSql]] of `asg` (so an EMPTY side
+    *    contributes no row — the same invariant the Spark build has,
+    *    which a closed-form `nlist + |over|` count would miss when a
+    *    split's members all tie to side 0);
     *  - `cb2(cell, cvec, cnrm)` / `idx2(vec_id, emb, nrm, cell)` — the
-    *    generation-2 codebook and index.
-    *
-    * Columns are the UNION of what the five consumers project; carrying
-    * the superset changes no row contents.
-    */
-  /** ONE rebalance step of the generation chain (the chain is a
-    * parameter): consumes generation g−1 as `$inIdx(vec_id,
-    * emb, nrm, cell)` + `$inCb(cell, cvec, cnrm)` and emits generation
-    * g as `${p}cb2` / `${p}idx2` (plus every intermediate, all
-    * p-prefixed so two steps instantiate in one query). The overload
-    * gate reads nlist as COUNT(*) of the INPUT codebook — exactly
-    * [[splitPlan]]'s `cbTab.count()`, which is what makes the step
-    * generation-agnostic (for generation 1 it equals the trained
-    * ⌈√n⌉ the old `nl.nlist` form read).
+    *    generation-g codebook and index.
     */
   private[graft] def rebalanceStepSqlGen(p: String, inIdx: String,
       inCb: String): String = s"""
@@ -366,15 +398,8 @@ object VectorOps extends QueryModule {
         UNION ALL
         SELECT r.cell, CAST(1 AS BIGINT) AS side,
           (SELECT MAX(cell) FROM $inCb) + r.rk AS new_cell FROM ${p}ranked r
-      ), ${p}cdim AS (
-        SELECT cell, side, pos,
-          CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-        FROM (SELECT cell, side, UNNEST(emb) AS v,
-                UNNEST(range(len(emb))) AS pos FROM ${p}asg)
-        GROUP BY cell, side, pos
       ), ${p}newcv AS (
-        SELECT cell, side, LIST(c ORDER BY pos) AS cvec
-        FROM ${p}cdim GROUP BY cell, side
+        ${meanVecSql(s"${p}asg", "cell, side", "cvec")}
       ), ${p}splitc AS MATERIALIZED (
         SELECT i.new_cell AS cell, n.cvec,
           SQRT(list_inner_product(n.cvec, n.cvec)) AS cnrm
@@ -392,6 +417,15 @@ object VectorOps extends QueryModule {
         FROM ${p}asg g JOIN ${p}idmap i USING (cell, side)
       )"""
 
+  /** The DuckDB mirror of the ENTIRE generation-2 lifecycle — one
+    * shared fragment, so the five declared gen-2 rows cannot drift apart
+    * by a token. Expects `e(vec_id, label, emb, nrm)` and `centn(cell,
+    * cvec, cnrm)` (from [[ivfCodebookSql]]) in scope; adds
+    * `assigned(vec_id, emb, nrm, cell)`, the gen-1 nearest-cell rows,
+    * and one [[rebalanceStepSqlGen]] over it. Columns are the UNION of
+    * what the five consumers project; carrying the superset changes no
+    * row contents.
+    */
   private[graft] val gen2LifecycleSql: String = s"""
       sims AS MATERIALIZED (
         SELECT e.vec_id, e.emb, e.nrm, c.cell,
@@ -410,35 +444,6 @@ object VectorOps extends QueryModule {
     */
   private[graft] val PqLloydIters = 2
 
-  /** One deterministic PQ Lloyd round over ALL 4 subspaces at once:
-    * [[withPqStructs]] gives every vector its per-subspace nearest
-    * centroid row-locally, then each (sub, cid) centroid moves to the
-    * exact decimal mean of its member slices; empty cells carry their
-    * previous position. `cents` is bounded (4·[[PqK]] rows) and cached
-    * by the caller.
-    */
-  private[graft] def pqLloydRound(idx: org.apache.spark.sql.DataFrame,
-      cents: org.apache.spark.sql.DataFrame,
-      m: Int = 4, w: Int = 16): org.apache.spark.sql.DataFrame = {
-    // one row per (vector, subspace): BIGINT sub, because the means
-    // below become the next round's codebook, whose sub PqEncodeAll reads
-    // as a long
-    val asg = withPqStructs(idx, cents, m, w)
-      .select(explode(col("pq")).as("tc"), col("emb"))
-      .select(col("tc.sub").cast("long").as("sub"), col("tc.cid").as("cid"),
-        expr(s"slice(emb, tc.sub*$w+1, $w)").as("v"))
-    val means = asg
-      .select(col("sub"), col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("sub"), col("cid"), col("pos"))
-      .agg(sum(col("x").cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("n"))
-      .withColumn("c", col("s").cast(DoubleType) / col("n"))
-      .groupBy(col("sub"), col("cid"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-      .select(col("sub"), col("cid"), expr("transform(pc, x -> x.c)").as("m"))
-    cents.join(means, Seq("sub", "cid"), "left")
-      .select(col("sub"), col("cid"), coalesce(col("m"), col("cv")).as("cv"))
-  }
-
   /** Centroids per PQ subspace. 16 (4-bit codes) instead of the r8
     * first-4 rule: with k=4 a 60k-vector corpus shares 4⁴ = 256 code
     * combinations, so approximate distances are tie-dominated and rank
@@ -449,77 +454,31 @@ object VectorOps extends QueryModule {
   private[graft] val PqK = 16
 
   /** Trained per-subspace PQ codebook over a corpus with `emb`:
-    * [[PqK]] centroids per 16-dim subspace, seeded from an id-ordered
-    * stride sample (one seed every ⌊n/PqK⌋ ids) and refined by
-    * [[PqLloydIters]] Lloyd rounds — replacing the first-4-vector
-    * slices the r8 build used. Returns (sub LONG, cid LONG, cv
-    * ARRAY<DOUBLE>).
+    * [[trainCodebook]] with `k` centroids per `w`-dim subspace, stride
+    * seeds (one every ⌊n/k⌋ ids) and [[PqLloydIters]] Lloyd rounds,
+    * memoized under [[pqCodebookCache]] (training is corpus passes that
+    * every ivfpq-family row must pay ONCE). Returns (sub LONG, cid LONG,
+    * cv ARRAY<DOUBLE>).
     */
   private[graft] def trainPqCodebook(
       idx: org.apache.spark.sql.DataFrame,
-      k: Int = PqK, m: Int = 4, w: Int = 16): org.apache.spark.sql.DataFrame = {
-    val pn = idx.agg(count(lit(1)).as("n"))
-      .select(greatest(expr(s"n DIV $k"), lit(1L)).as("pstride"))
-    val seeds = idx.crossJoin(broadcast(pn))
-      .filter(col("vec_id") % col("pstride") === 0 &&
-        expr("vec_id DIV pstride") < k)
-      .select(expr("CAST(vec_id DIV pstride AS LONG)").as("cid"),
-        explode(array((0 until m).map(lit): _*)).as("sub"), col("emb"))
-      .select(col("sub").cast("long").as("sub"), col("cid"),
-        expr(s"slice(emb, sub*$w+1, $w)").as("cv"))
-    // memoized per corpus like the IVF codebook: training is 2 corpus
-    // passes — every ivfpq-family row must pay it ONCE
-    lloydMemo(pqCodebookCache, seeds, PqLloydIters)(pqLloydRound(idx, _, m, w))
-  }
+      k: Int = PqK, m: Int = 4, w: Int = 16): org.apache.spark.sql.DataFrame =
+    trainCodebook(pqCodebookCache, idx, lit(k), m, w, PqLloydIters)
 
-  /** Generator for the DuckDB PQ-codebook-training mirror: CTEs ending
-    * in `${p}s(vec_id, sub, v)` (the source slices) and `${p}pqcb(sub,
-    * cid, cv)` (the trained codebook), training over `$src(vec_id, …,
-    * emb, …)` — `src` is `e` for the raw-vector codebook and the
-    * caller-defined residual CTE for the residual one; the prefix keeps
-    * both instantiable in ONE query. Lloyd rounds unrolled
-    * programmatically in lockstep with [[PqLloydIters]]. The stride
-    * count reads `embeddings` directly (source rows are 1:1 with the
-    * corpus in both instantiations).
+  /** Generator for the DuckDB PQ-codebook-training mirror:
+    * [[codebookSqlGen]] ending in `${p}s(vec_id, sub, v)` (the source
+    * slices) and `${p}pqcb(sub, cid, cv)` (the trained codebook),
+    * training over `$src(vec_id, …, emb, …)` — `src` is `e` for the
+    * raw-vector codebook and the caller-defined residual CTE for the
+    * residual one; the prefix keeps both instantiable in ONE query. The
+    * stride count reads `embeddings` directly (source rows are 1:1 with
+    * the corpus in both instantiations).
     */
   private[graft] def pqCodebookSqlGen(src: String, p: String, k: Int = PqK,
-      m: Int = 4, w: Int = 16, countSrc: String = "embeddings"): String = {
-    val seed = s"""
-      ${p}pn AS (
-        SELECT GREATEST(COUNT(*) // $k, 1) AS pstride FROM $countSrc
-      ), ${p}s AS (
-        SELECT vec_id, sub, list_slice(emb, sub*$w + 1, sub*$w + $w) AS v
-        FROM $src, (SELECT UNNEST(range($m)) AS sub)
-      ), ${p}pc0 AS (
-        SELECT vec_id // pstride AS cid, sub, v AS cv FROM ${p}s, ${p}pn
-        WHERE vec_id % pstride = 0 AND vec_id // pstride < $k
-      )"""
-    val rounds = (1 to PqLloydIters).map { i =>
-      s""", ${p}pasg$i AS (
-        SELECT sub, cid, v FROM (
-          SELECT s.sub, c.cid, s.v,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub ORDER BY
-              ${roundedL2Sql("s.v", "c.cv")}, c.cid) AS rn
-          FROM ${p}s s JOIN ${p}pc${i - 1} c ON s.sub = c.sub)
-        WHERE rn = 1
-      ), ${p}pcd$i AS (
-        SELECT sub, cid, pos,
-          CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS cx
-        FROM (SELECT sub, cid, UNNEST(v) AS x, UNNEST(range(len(v))) AS pos
-              FROM ${p}pasg$i)
-        GROUP BY sub, cid, pos
-      ), ${p}pc$i AS (
-        SELECT p.sub, p.cid, COALESCE(m.cv, p.cv) AS cv
-        FROM ${p}pc${i - 1} p LEFT JOIN
-          (SELECT sub, cid, LIST(cx ORDER BY pos) AS cv FROM ${p}pcd$i GROUP BY sub, cid) m
-          ON p.sub = m.sub AND p.cid = m.cid
-      )"""
-    }.mkString
-    val fin = s""", ${p}pqcb AS (
+      m: Int = 4, w: Int = 16, countSrc: String = "embeddings"): String =
+    codebookSqlGen(src, p, k.toString, m, w, PqLloydIters, countSrc) + s""", ${p}pqcb AS (
         SELECT sub, cid, cv FROM ${p}pc$PqLloydIters
       )"""
-    seed + rounds + fin
-  }
 
   /** DuckDB mirror of [[trainPqCodebook]]: CTEs ending in `s(vec_id,
     * sub, v)` (the corpus slices) and `pqcb(sub, cid, cv)` (the trained
@@ -1084,7 +1043,7 @@ object VectorOps extends QueryModule {
   private[graft] def withNearestCentroidD2(df: org.apache.spark.sql.DataFrame,
       cents: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String,
       outId: String, outD2: String): org.apache.spark.sql.DataFrame =
-    withPqEncoded(df, pqCodebookArray(cents, lit(0L), col(idCol), col(vecCol)), 1, Int.MaxValue)
+    withPqEncoded(df, pqCodebookArray(cents, lit(0L), col(idCol), col(vecCol)), 1, WholeVector)
       .withColumn(outId, col("enc")(0)("cid"))
       .withColumn(outD2, col("enc")(0)("d2"))
       .drop("enc")
@@ -2533,25 +2492,6 @@ object VectorOps extends QueryModule {
       """.trim
     })
 
-  /** IVF INDEX MAINTENANCE — cell rebalance audit (round-9 second
-    * wave): the operational row a production vector store runs nightly
-    * on the PERSISTED index. Cells whose population exceeds 1.25× the
-    * mean (exact integer predicate `4·n_cell·nlist > 5·N` — no float
-    * gate) are SPLIT by one deterministic 2-means step: seeds = the
-    * cell's two lowest vec_ids, members assigned to the nearer seed
-    * (rounded ‖a‖²−2a·s+‖s‖², side tiebreak), split centroids = exact
-    * decimal means. Declared output is the rebalance plan an operator
-    * reviews before applying: per (cell, side) the populations and the
-    * new sub-centroid's norm.
-    *
-    * Scale notes (100 TB): the population scan and the per-cell
-    * member windows both ride the CELL-BUCKETED index — the groupBy
-    * and the rank window read co-partitioned with zero Exchange; the
-    * overloaded-cell list and the 2-row-per-cell seed arrays broadcast;
-    * side assignment is ROW-LOCAL (2-element argmin per member); only
-    * the bounded (cell, side, dim) mean aggregation shuffles. Work is
-    * proportional to the members of OVERLOADED cells, not the corpus.
-    */
   /** Shared 2-means split plan over the PERSISTED index — the single
     * source of truth for BOTH halves of the rebalance lifecycle: the
     * audit row ([[vecIvfCellRebalance]]) renders it for operator review,
@@ -2559,23 +2499,27 @@ object VectorOps extends QueryModule {
     * One implementation means the applied split can never drift from the
     * reviewed plan.
     *
-    * Returns (over, asg): `over(cell, n_cell)` = the overloaded cells
-    * (exact integer predicate 4·n_cell·nlist > 5·N), and
+    * Returns (over, asg, subCents): `over(cell, n_cell)` = the
+    * overloaded cells (exact integer predicate 4·n_cell·nlist > 5·N);
     * `asg(cell, n_cell, vec_id, emb, nrm, side)` = each overloaded
     * cell's members with their deterministic 2-means side (seeds = the
     * cell's two lowest vec_ids; nearer-seed assignment on the rounded
-    * ‖a‖²−2a·s+‖s‖² identity, side tiebreak).
+    * ‖a‖²−2a·s+‖s‖² identity, side tiebreak); `subCents(cell, side,
+    * cvec)` = each non-empty side's sub-centroid, the [[meanVec]] of its
+    * members.
     *
     * Scale notes (100 TB): the population scan and the per-cell seed
     * windows ride the CELL-BUCKETED index (zero Exchange); `over` and
     * the 2-row-per-cell seed arrays broadcast; side assignment is
-    * ROW-LOCAL. Work ∝ members of OVERLOADED cells, not the corpus.
+    * ROW-LOCAL; only the bounded (cell, side, dim) mean aggregation
+    * shuffles. Work ∝ members of OVERLOADED cells, not the corpus.
     */
   private[graft] def splitPlan(
       spark: org.apache.spark.sql.SparkSession,
       idx: org.apache.spark.sql.DataFrame,
       cbTab: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+         org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     val stats = idx.groupBy($"cell").agg(count(lit(1)).as("n_cell"))
       .crossJoin(broadcast(
@@ -2600,28 +2544,38 @@ object VectorOps extends QueryModule {
           + s("cnn"), 6).as("d2"), s("side").as("side")))))
       .select($"cell", $"n_cell", $"vec_id", $"emb", $"nrm",
         $"tc"("side").as("side"))
-    (over, asg)
+    (over, asg, meanVec(asg, Seq("cell", "side"), "cvec"))
   }
 
+  /** IVF INDEX MAINTENANCE — cell rebalance audit (round-9 second
+    * wave): the operational row a production vector store runs nightly
+    * on the PERSISTED index. Cells whose population exceeds 1.25× the
+    * mean (exact integer predicate `4·n_cell·nlist > 5·N` — no float
+    * gate) are SPLIT by one deterministic 2-means step: seeds = the
+    * cell's two lowest vec_ids, members assigned to the nearer seed
+    * (rounded ‖a‖²−2a·s+‖s‖², side tiebreak), split centroids = exact
+    * decimal means. Declared output is the rebalance plan an operator
+    * reviews before applying: per (cell, side) the populations and the
+    * new sub-centroid's norm.
+    *
+    * Scale notes (100 TB): the population scan and the per-cell
+    * member windows both ride the CELL-BUCKETED index — the groupBy
+    * and the rank window read co-partitioned with zero Exchange; the
+    * overloaded-cell list and the 2-row-per-cell seed arrays broadcast;
+    * side assignment is ROW-LOCAL (2-element argmin per member); only
+    * the bounded (cell, side, dim) mean aggregation shuffles. Work is
+    * proportional to the members of OVERLOADED cells, not the corpus.
+    */
   val vecIvfCellRebalance = Q(
     "vec_ivf_cell_rebalance",
     (spark, dir) => {
       import spark.implicits._
       val (idx, cbTab) = IvfIndex.ensure(spark, dir)
-      val (_, asg) = splitPlan(spark, idx, cbTab)
+      val (_, asg, subCents) = splitPlan(spark, idx, cbTab)
       val sides = asg.groupBy($"cell", $"n_cell", $"side")
         .agg(count(lit(1)).as("n_side"))
-      val newCents = asg
-        .select($"cell", $"side", posexplode($"emb").as(Seq("pos", "v")))
-        .groupBy($"cell", $"side", $"pos")
-        .agg(sum($"v".cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("cn"))
-        .withColumn("c", $"s".cast(DoubleType) / $"cn")
-        .groupBy($"cell", $"side")
-        .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-        .select($"cell", $"side",
-          round(sqrt(GraftFunctions.dot(
-            expr("transform(pc, x -> x.c)"), expr("transform(pc, x -> x.c)"))), 6)
-            .as("cnrm_new"))
+      val newCents = subCents.select($"cell", $"side",
+        round(sqrt(GraftFunctions.dot($"cvec", $"cvec")), 6).as("cnrm_new"))
       sides.join(newCents, Seq("cell", "side"))
         .select($"cell", $"n_cell", $"side", $"n_side", $"cnrm_new")
         .orderBy($"cell", $"side")
@@ -3847,34 +3801,20 @@ object VectorOps extends QueryModule {
       ORDER BY q_id, rank
     """.trim))
 
-  /** Per-label centroids `(clabel, cvec)` of `e(label, emb)`: each dim's
-    * exact DECIMAL(28,12) sum, one double divide, 8 dp. Its DuckDB twin
-    * is [[labelCentroidsSql]].
+  /** Per-label centroids `(clabel, cvec)` of `e(label, emb)`: the
+    * [[meanVec]] of each label's vectors at 8 dp. Its DuckDB twin is
+    * [[labelCentroidsSql]].
     */
   private def labelCentroids(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    e.select(col("label"), posexplode(col("emb")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(col("v").cast(DecimalType(28, 12))).as("s"), count(lit(1)).as("cn"))
-      .withColumn("c",
-        (col("s").cast(DoubleType) / col("cn")).cast(DecimalType(18, 8)).cast(DoubleType))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-      .select(col("label").as("clabel"), expr("transform(pc, x -> x.c)").as("cvec"))
+    meanVec(e, Seq("label"), "cvec", Some(8)).withColumnRenamed("label", "clabel")
 
-  /** The `cdims`/`cents` CTEs over `e(label, emb)`: the DuckDB twin of
-    * [[labelCentroids]], shared by the label-confusion and silhouette
+  /** The `cents(clabel, cvec)` CTE over `e(label, emb)`: the DuckDB twin
+    * of [[labelCentroids]], shared by the label-confusion and silhouette
     * oracles.
     */
-  private def labelCentroidsSql: String = """cdims AS (
-        SELECT label, pos,
-          CAST(CAST(CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE)
-               / COUNT(*) AS DECIMAL(18,8)) AS DOUBLE) AS c
-        FROM (SELECT label, UNNEST(emb) AS v, UNNEST(range(len(emb))) AS pos
-              FROM e)
-        GROUP BY label, pos
-      ), cents AS (
-        SELECT label AS clabel, LIST(c ORDER BY pos) AS cvec
-        FROM cdims GROUP BY label
+  private def labelCentroidsSql: String = s"""cents AS (
+        SELECT label AS clabel, cvec FROM (
+          ${meanVecSql("e", "label", "cvec", dp = Some(8))})
       )"""
 
   /** Embedding class-separability confusion (SURVEY §2 I-sext): per

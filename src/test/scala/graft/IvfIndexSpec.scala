@@ -228,7 +228,7 @@ class IvfIndexSpec extends SparkSpecBase {
     val g1IdxName = operators.IvfIndex.indexTable(sfDir)
     val (idx1, cb1) = operators.IvfIndex.ensure(spark, sfDir)
     val g1Built = mtimes(g1IdxName)
-    val (over, asg) = operators.VectorOps.splitPlan(spark, idx1, cb1)
+    val (over, asg, _) = operators.VectorOps.splitPlan(spark, idx1, cb1)
     val splitCells = over.select("cell").collect().map(_.getLong(0)).toSet
     assert(splitCells.nonEmpty, "fixture must have at least one overloaded cell")
 
@@ -385,7 +385,7 @@ class IvfIndexSpec extends SparkSpecBase {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     val (idx1, cb1) = operators.IvfIndex.ensure(spark, dir)
-    val (over, _) = operators.VectorOps.splitPlan(spark, idx1, cb1)
+    val (over, _, _) = operators.VectorOps.splitPlan(spark, idx1, cb1)
     assert(over.isEmpty, "fixture must produce a balanced index (empty split plan)")
     val g1Built = mtimes(operators.IvfIndex.indexTable(dir))
 

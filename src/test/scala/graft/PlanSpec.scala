@@ -1063,7 +1063,7 @@ class PlanSpec extends SparkSpecBase {
 
   test("splitPlan: overload scan and side assignment never shuffle the corpus on cell") {
     val (idx, cb) = operators.IvfIndex.ensure(spark, sfDir)
-    val (_, asg) = operators.VectorOps.splitPlan(spark, idx, cb)
+    val (_, asg, _) = operators.VectorOps.splitPlan(spark, idx, cb)
     val p = planString(asg)
     // the population groupBy, the per-cell seed window, and the member
     // join all ride the cell bucketing; over/seed frames broadcast — the

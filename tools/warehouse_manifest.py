@@ -54,16 +54,22 @@ def manifest_line(warehouse, name):
             f"marker={marker_text}")
 
 
+def row_digest(con, relation, params=()):
+    """(row count, md5 of the sorted md5s of every row's text) of the SQL
+    relation `relation` (a table function or a parenthesized query)."""
+    return con.execute(
+        "SELECT count(*), md5(string_agg(d, '' ORDER BY d)) FROM ("
+        f" SELECT md5(CAST(t AS VARCHAR)) AS d FROM {relation} t)",
+        list(params)).fetchone()
+
+
 def rows_line(con, warehouse, name):
     table_dir = os.path.join(warehouse, name)
     paths = [os.path.join(table_dir, rel) for rel, _ in data_files(table_dir)]
     if not paths:
         return f"{name} rows=0 digest=-"
-    n, digest = con.execute(
-        "SELECT count(*), md5(string_agg(d, '' ORDER BY d)) FROM ("
-        " SELECT md5(CAST(t AS VARCHAR)) AS d"
-        " FROM read_parquet(?, hive_partitioning = true, union_by_name = true) t)",
-        [paths]).fetchone()
+    n, digest = row_digest(
+        con, "read_parquet(?, hive_partitioning = true, union_by_name = true)", [paths])
     return f"{name} rows={n} digest={digest}"
 
 
