@@ -486,12 +486,6 @@ object VectorOps extends QueryModule {
     */
   val pqCodebookSql: String = pqCodebookSqlGen("e", "")
 
-  /** DuckDB mirror of [[trainPqResidualCodebook]]: same recipe over the
-    * RESIDUAL vectors — expects a `rese(vec_id, emb)` CTE in scope
-    * (emb = corpus vector − assigned-cell centroid); CTEs end in
-    * `rs(vec_id, sub, v)` and `rpqcb(sub, cid, cv)`, r-prefixed so a
-    * mirror can train both codebooks in one query.
-    */
   /** RESIDUAL-PQ geometry — the r10 stack's budget, separate from the
     * r9 raw stack's [[PqK]]=16 over 4×16-dim subspaces (whose declared
     * rows pin that shape). RecallProbe's `k:m` geometry sweep (RECALL.md,
@@ -928,6 +922,12 @@ object VectorOps extends QueryModule {
           .as("recall_at_5"))
   }
 
+  /** DuckDB mirror of [[trainPqResidualCodebook]]: same recipe over the
+    * RESIDUAL vectors — expects a `rese(vec_id, emb)` CTE in scope
+    * (emb = corpus vector − assigned-cell centroid); CTEs end in
+    * `rs(vec_id, sub, v)` and `rpqcb(sub, cid, cv)`, r-prefixed so a
+    * mirror can train both codebooks in one query.
+    */
   private[graft] val pqResidualCodebookSql: String =
     pqCodebookSqlGen("rese", "r", PqrK, PqrM, PqrW)
 
